@@ -2325,8 +2325,7 @@ def q_benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for the UNREGISTERED q_bloom_prefilter_join below (round-14
-# registration queue): the bloom filter is INVISIBLE to the result —
+# Oracle for q_bloom_prefilter_join below: the bloom filter is INVISIBLE to the result —
 # a probabilistic prefilter may only discard rows the exact join
 # would discard anyway, so the oracle is the plain semi-join.
 _BLOOM_ORACLE = f"""
@@ -2517,516 +2516,4 @@ def q_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return dist.join(counts, "event_type").select(
         "event_type", "n_users", "n_events"
-    )
-
-
-# Oracle for the UNREGISTERED q_hll_sketch_rollup below (round-16
-# registration queue): sketch bytes are engine-specific, so the
-# verifiable claims are the exact reference counts plus the literal
-# bound booleans (the q_approx_sketches pattern).
-_HLL_ROLLUP_ORACLE = """
-SELECT CAST(n.n_regionkey AS INTEGER) AS region_key,
-       CAST(COUNT(DISTINCT c.c_custkey) AS BIGINT) AS exact_customers,
-       TRUE AS est_within_3rsd
-FROM customer c JOIN nation n ON n.n_nationkey = c.c_nationkey
-GROUP BY 1
-"""
-
-# DataSketches HLL with lgConfigK=14: rsd = 1.04 / sqrt(2^14)
-_HLL_LGK = 14
-_HLL_RSD = 1.04 / (2 ** (_HLL_LGK / 2))
-
-
-def q_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGEABLE-sketch rollup — the pattern behind every layered
-    OLAP cube at 100 TB: per-nation DataSketches HLL sketches of the
-    customer set (``hll_sketch_agg``), UNIONED up to region level
-    (``hll_union_agg``) without touching raw rows again, then
-    estimated. This is what ``approx_count_distinct`` cannot do (its
-    sketch is an opaque internal; q_approx_sketches covers it) —
-    materialized per-shard sketches re-aggregate losslessly across
-    days/shards/datacenters, so the daily rollup never rescans
-    history.
-
-    Sketch bytes are engine-specific, so the driver-verifiable
-    claims are the exact reference counts plus the 3-sigma error
-    bound of the estimate (rsd = 1.04/sqrt(2^14) ~= 0.81%), emitted
-    as a boolean the oracle asserts literally TRUE — unverified !=
-    unverifiable. The dimension join broadcasts (nation is 25
-    rows)."""
-    cust = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_regionkey"
-    )
-    per_nation = cust.groupBy("c_nationkey").agg(
-        F.hll_sketch_agg("c_custkey", F.lit(_HLL_LGK)).alias("sk"),
-        F.count_distinct("c_custkey").alias("exact_n"),
-    )
-    # customers belong to exactly one nation, so region-exact is the
-    # sum of nation-exacts — no second scan of the fact table
-    per_region = (
-        per_nation.join(
-            F.broadcast(nat),
-            per_nation["c_nationkey"] == nat["n_nationkey"],
-        )
-        .groupBy("n_regionkey")
-        .agg(
-            F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est"),
-            F.sum("exact_n").alias("exact_customers"),
-        )
-    )
-    return per_region.select(
-        F.col("n_regionkey").cast("int").alias("region_key"),
-        F.col("exact_customers"),
-        (
-            F.abs(F.col("est") - F.col("exact_customers"))
-            <= 3 * _HLL_RSD * F.col("exact_customers")
-        ).alias("est_within_3rsd"),
-    )
-
-
-# Oracle for the UNREGISTERED q_merge_intervals below (round-17
-# registration queue). The sweep is the standard
-# running-max-of-prior-ends island cut; the window ORDER BY ends in
-# the unique event_id, so prefix state is engine-independent even
-# under duplicate timestamps, and every duration is integer
-# microseconds (exact on both engines).
-_MERGE_IV_ORACLE = """
-WITH iv AS (
-  SELECT user_id, event_id, ts AS s,
-         ts + INTERVAL 5 MINUTE AS e
-  FROM events WHERE ts IS NOT NULL),
-m AS (
-  SELECT user_id, event_id, s, e,
-         MAX(e) OVER (PARTITION BY user_id ORDER BY s, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING
-                      AND 1 PRECEDING) AS prev_max
-  FROM iv),
-fl AS (
-  SELECT user_id, event_id, s, e,
-         CASE WHEN prev_max IS NULL OR s > prev_max
-              THEN 1 ELSE 0 END AS new_i
-  FROM m),
-isl AS (
-  SELECT user_id, s, e,
-         SUM(new_i) OVER (PARTITION BY user_id ORDER BY s, event_id
-                          ROWS UNBOUNDED PRECEDING) AS island
-  FROM fl),
-runs AS (
-  SELECT user_id, island, MIN(s) AS i_start, MAX(e) AS i_end
-  FROM isl GROUP BY user_id, island)
-SELECT user_id,
-       COUNT(*) AS n_intervals,
-       CAST(SUM((epoch_us(i_end) - epoch_us(i_start)) // 1000000)
-            AS BIGINT) AS covered_sec,
-       CAST(MAX((epoch_us(i_end) - epoch_us(i_start)) // 1000000)
-            AS BIGINT) AS max_interval_sec
-FROM runs GROUP BY user_id
-"""
-
-
-def q_merge_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval coalescing: each event opens a 5-minute activity
-    interval; overlapping or touching intervals per user merge into
-    maximal covered spans (the union-of-intervals primitive behind
-    uptime/coverage accounting, ad-frequency capping, and
-    speech-segment merging). Reports per user the merged-span count,
-    total covered seconds, and the longest span.
-
-    Scale shape: ONE shuffle — both windows and the final rollup key
-    on ``user_id``, so Catalyst reuses a single hash partitioning for
-    the whole plan (sort within partitions, no second exchange). The
-    sweep is O(events per user) sequential state per partition — the
-    same running-max discipline as q_session_concurrency — and the
-    island cut compares each start only against the max PRIOR end,
-    which handles contained intervals (an interval fully inside its
-    predecessor must not reopen a span; a naive lag(e) comparison
-    would). Durations are integer microsecond arithmetic end to end.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    iv = ev.filter(F.col("ts").isNotNull()).select(
-        "user_id",
-        "event_id",
-        F.col("ts").alias("s"),
-        F.expr("ts + INTERVAL 5 MINUTES").alias("e"),
-    )
-    order = Window.partitionBy("user_id").orderBy("s", "event_id")
-    prev_max = (
-        order.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # NULL prev_max (first row) must open an island: the <= against
-    # NULL is NULL, so when() falls through to otherwise(1) — the
-    # null-safe rendering of the oracle's IS NULL OR > branch
-    fl = iv.select(
-        "user_id",
-        "event_id",
-        "s",
-        "e",
-        F.when(
-            F.col("s") <= F.max("e").over(prev_max), 0
-        )
-        .otherwise(1)
-        .alias("new_i"),
-    )
-    isl = fl.select(
-        "user_id",
-        "s",
-        "e",
-        F.sum("new_i")
-        .over(order.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("island"),
-    )
-    runs = isl.groupBy("user_id", "island").agg(
-        F.min("s").alias("i_start"), F.max("e").alias("i_end")
-    )
-    dur = F.expr("(unix_micros(i_end) - unix_micros(i_start)) div 1000000")
-    return runs.groupBy("user_id").agg(
-        F.count("*").alias("n_intervals"),
-        F.sum(dur).alias("covered_sec"),
-        F.max(dur).alias("max_interval_sec"),
-    )
-
-
-# Oracle for the UNREGISTERED q_cumulative_distinct_users below
-# (round-18 registration queue). Days are epoch-day integers (the
-# q_gap_islands recipe — no calendar/timezone surface at all), and
-# the cumulative series derives from FIRST OCCURRENCES, never from
-# a running COUNT(DISTINCT) over an expanding frame.
-_CUMDIST_ORACLE = """
-WITH e AS (
-  SELECT user_id, epoch_us(ts) // 86400000000 AS d
-  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-fu AS (SELECT user_id, MIN(d) AS fd FROM e GROUP BY 1),
-daily AS (
-  SELECT d, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_active
-  FROM e GROUP BY 1),
-news AS (SELECT fd AS d, COUNT(*) AS n_new FROM fu GROUP BY 1)
-SELECT daily.d AS day_num, n_active,
-       COALESCE(n_new, 0) AS n_new,
-       CAST(SUM(COALESCE(n_new, 0))
-            OVER (ORDER BY daily.d ROWS UNBOUNDED PRECEDING)
-            AS BIGINT) AS cum_users
-FROM daily LEFT JOIN news ON daily.d = news.d
-"""
-
-
-def q_cumulative_distinct_users(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Cumulative distinct users per day — the growth-curve query
-    every DAU/MAU dashboard runs. The naive formulation is a running
-    COUNT(DISTINCT) over an expanding frame, which re-counts the
-    whole user history per day (O(days x users) state and no
-    map-side combine); the scale formulation counts each user ONCE
-    at their first-occurrence day and takes a running SUM of those
-    arrivals — cumulative distinct is exactly the prefix sum of
-    first occurrences.
-
-    Scale shape: first occurrences are one map-combined
-    groupBy(user) MIN; daily actives one groupBy(day)
-    COUNT(DISTINCT); the running sum then orders only the O(days)
-    rollup rows (a single tiny partition by construction — the
-    per-day table is days-cardinality regardless of corpus size).
-    Days are epoch-day integers end to end, so no timezone
-    arithmetic exists to diverge.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    e = ev.filter(
-        F.col("ts").isNotNull() & F.col("user_id").isNotNull()
-    ).select(
-        "user_id",
-        F.expr("unix_micros(ts) div 86400000000").alias("d"),
-    )
-    fu = e.groupBy("user_id").agg(F.min("d").alias("fd"))
-    daily = e.groupBy("d").agg(
-        F.countDistinct("user_id").alias("n_active")
-    )
-    news = fu.groupBy(F.col("fd").alias("d")).agg(
-        F.count("*").alias("n_new")
-    )
-    w = Window.orderBy("day_num").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    joined = daily.join(news, "d", "left").select(
-        F.col("d").alias("day_num"),
-        "n_active",
-        F.coalesce("n_new", F.lit(0)).alias("n_new"),
-    )
-    return joined.withColumn(
-        "cum_users", F.sum("n_new").over(w).cast("long")
-    )
-
-
-_MV_CUTOFF = "1997-01-01"
-
-# Oracle for the UNREGISTERED q_incremental_mv_merge below
-# (round-18 registration queue): the merged partials must equal a
-# PLAIN FULL RECOMPUTE — incremental maintenance is result-invisible
-# by definition, so the oracle never sees the cutoff.
-_MV_MERGE_ORACLE = """
-SELECT o_custkey AS custkey,
-       COUNT(*) AS n_orders,
-       round(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,2)))
-                  AS DOUBLE), 2) AS total_rev,
-       CAST(MAX(o_orderdate) AS TIMESTAMP) AS last_order
-FROM orders GROUP BY 1
-"""
-
-
-def q_incremental_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental materialized-view maintenance: a per-customer
-    revenue rollup maintained as BASE partials (orders before
-    ``_MV_CUTOFF`` — the published MV) merged with DELTA partials
-    (the new batch) — the pattern that turns an O(history) nightly
-    recompute into an O(delta) refresh at 100 TB. Works because
-    every aggregate here is MERGEABLE state: counts add, exact
-    decimal sums add, maxes combine via greatest — the same
-    algebraic property behind q_hll_sketch_rollup's sketches and
-    q_bitmap_distinct's words, exercised on plain scalar partials.
-
-    The merge must be NULL-correct on both sides of the FULL OUTER
-    key space: a customer in only one slice carries NULL partials
-    from the other, so counts/sums coalesce to zero and the max
-    merge uses ``greatest``'s NULL-SKIPPING semantics (exactly the
-    merge behavior — the engine-portability pin that bans greatest
-    as a NULL-safe clamp is about SQL comparison semantics, not
-    partial-state merges, and the oracle never evaluates greatest at
-    all: it is a plain full recompute, which is what makes the
-    refresh result-invisible).
-
-    Scale shape: the base slice is the stored MV at scale (scanned
-    here for the harness); the delta aggregation scans ONLY the new
-    batch (predicate-pushed date filter); the merge is one join on
-    the MV key. Refresh cost is O(delta + changed keys), never
-    O(history).
-    """
-    orders = load_table(spark, sf_dir, "orders")
-    cutoff = F.lit(_MV_CUTOFF).cast("timestamp")
-
-    def partial(df: DataFrame, tag: str) -> DataFrame:
-        return df.groupBy(F.col("o_custkey").alias("custkey")).agg(
-            F.count("*").alias(f"n_{tag}"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,2)")).alias(
-                f"rev_{tag}"
-            ),
-            F.max(F.col("o_orderdate").cast("timestamp")).alias(
-                f"last_{tag}"
-            ),
-        )
-
-    base = partial(orders.filter(F.col("o_orderdate") < cutoff), "b")
-    delta = partial(orders.filter(F.col("o_orderdate") >= cutoff), "d")
-    merged = base.join(delta, "custkey", "full_outer")
-    return merged.select(
-        "custkey",
-        (
-            F.coalesce("n_b", F.lit(0)) + F.coalesce("n_d", F.lit(0))
-        ).alias("n_orders"),
-        F.round(
-            (
-                F.coalesce(F.col("rev_b"), F.lit(0).cast("decimal(30,2)"))
-                + F.coalesce(F.col("rev_d"), F.lit(0).cast("decimal(30,2)"))
-            ).cast("double"),
-            2,
-        ).alias("total_rev"),
-        F.greatest("last_b", "last_d").alias("last_order"),
-    )
-
-
-# The 5-type alphabet for sequential-pattern mining; chars are the
-# funnel's encoding extended to all five types.
-_SEQ_TYPES = [
-    ("signup", "s"),
-    ("click", "c"),
-    ("view", "v"),
-    ("purchase", "p"),
-    ("error", "e"),
-]
-
-# Oracle for the UNREGISTERED q_sequence_mining below (round-18
-# registration queue). Same path-string compaction as q_funnel
-# (list ORDER BY ts, event_id — unique tie-break), candidate
-# triples from a VALUES cross product, containment via the portable
-# `a.*b.*c` subsequence regex (matching is in the portable envelope;
-# only replacement semantics diverge across engines).
-_SEQ_MINING_ORACLE = """
-WITH ch AS (
-  SELECT user_id, ts, event_id,
-         CASE event_type WHEN 'signup' THEN 's' WHEN 'click' THEN 'c'
-              WHEN 'view' THEN 'v' WHEN 'purchase' THEN 'p'
-              ELSE 'e' END AS c
-  FROM events
-  WHERE ts IS NOT NULL AND user_id IS NOT NULL
-    AND event_type IN ('signup','click','view','purchase','error')),
-paths AS (
-  SELECT user_id,
-         array_to_string(list(c ORDER BY ts, event_id), '') AS path
-  FROM ch GROUP BY user_id),
-alpha(t) AS (VALUES ('s'), ('c'), ('v'), ('p'), ('e')),
-cand AS (SELECT a.t AS t1, b.t AS t2, c.t AS t3
-         FROM alpha a, alpha b, alpha c)
-SELECT t1, t2, t3, CAST(COUNT(*) AS BIGINT) AS n_users
-FROM cand JOIN paths
-  ON regexp_matches(path, t1 || '.*' || t2 || '.*' || t3)
-GROUP BY t1, t2, t3
-"""
-
-
-def q_sequence_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential-pattern mining, order-3: for every ordered triple
-    of event types, how many users exhibit it as a TIME-ORDERED
-    subsequence (arbitrary events interleaving)? The generalization
-    of q_funnel from one hand-picked chain to the full candidate
-    lattice — the GSP/PrefixSpan support-counting kernel at a fixed
-    pattern length, and the "what do users actually do in order"
-    question behind journey mining.
-
-    Scale shape: ONE shuffle compacts each user's history to a
-    bounded path string (the q_funnel recipe: sorted collect_list
-    with the unique event_id tie-break); the 125-row candidate
-    lattice then BROADCASTS against the O(users) path table and
-    each containment test is a subsequence regex running JVM-side
-    inside codegen. Cost is O(users x |alphabet|^k) regex probes on
-    an already-reduced table — never a re-scan of raw events per
-    pattern, which is what a per-candidate self-join formulation
-    would do. Longer patterns extend the same lattice; support
-    pruning between levels (Apriori) would cut candidates before
-    the probe at k >= 4.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    mapping = F.create_map(
-        *[F.lit(x) for pair in _SEQ_TYPES for x in pair]
-    )
-    types = [t for t, _ in _SEQ_TYPES]
-    ch = ev.filter(
-        F.col("ts").isNotNull()
-        & F.col("user_id").isNotNull()
-        & F.col("event_type").isin(types)
-    ).select(
-        "user_id",
-        "ts",
-        "event_id",
-        mapping[F.col("event_type")].alias("c"),
-    )
-    paths = ch.groupBy("user_id").agg(
-        F.concat_ws(
-            "",
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "c"))
-            ).getField("c"),
-        ).alias("path")
-    )
-    chars = [c for _, c in _SEQ_TYPES]
-    alpha = spark.createDataFrame([(c,) for c in chars], ["t"])
-    cand = (
-        alpha.select(F.col("t").alias("t1"))
-        .crossJoin(F.broadcast(alpha.select(F.col("t").alias("t2"))))
-        .crossJoin(F.broadcast(alpha.select(F.col("t").alias("t3"))))
-    )
-    # rlike's Python binding takes a literal pattern; a COLUMN-valued
-    # pattern goes through the SQL function surface
-    probe = paths.join(
-        F.broadcast(cand),
-        F.expr("rlike(path, concat(t1, '.*', t2, '.*', t3))"),
-    )
-    return probe.groupBy("t1", "t2", "t3").agg(
-        F.count("*").alias("n_users")
-    )
-
-
-_RZ_W = 7  # trailing window length (days), current day included
-
-# Oracle for the UNREGISTERED q_rolling_zscore below (round-18
-# registration queue). Day totals are exact decimal sums; their
-# squares are double-multiplied (identical IEEE op) then
-# decimal-cast BEFORE the window sum, so both frame sums are exact
-# and order-independent; mean/variance/z are then arithmetic on
-# identical doubles, with the shared 6-digit round absorbing
-# nothing but display width.
-_ROLLING_Z_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type, epoch_us(ts) // 86400000000 AS day_num,
-         CAST(SUM(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS dt
-  FROM events WHERE ts IS NOT NULL
-  GROUP BY 1, 2),
-win AS (
-  SELECT event_type, day_num, dt,
-         CAST(SUM(CAST(dt AS DECIMAL(30,2))) OVER w AS DOUBLE) AS s,
-         CAST(SUM(CAST(dt * dt AS DECIMAL(38,6))) OVER w AS DOUBLE)
-           AS s2,
-         COUNT(*) OVER w AS n
-  FROM daily
-  WINDOW w AS (PARTITION BY event_type ORDER BY day_num
-               ROWS BETWEEN {_RZ_W - 1} PRECEDING AND CURRENT ROW))
-SELECT event_type, day_num,
-       round(dt, 2) AS day_total,
-       round((dt - s / {_RZ_W}) /
-             sqrt(s2 / {_RZ_W} - (s / {_RZ_W}) * (s / {_RZ_W})), 6)
-         AS z
-FROM win
-WHERE n = {_RZ_W}
-  AND s2 / {_RZ_W} - (s / {_RZ_W}) * (s / {_RZ_W}) > 0
-"""
-
-
-def q_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling z-score anomaly detection: each day's revenue per
-    event type scored against the trailing 7-day (_RZ_W) window's mean
-    and standard deviation — the online anomaly monitor behind every
-    metrics pipeline, complementing q_anomaly_mad (global robust
-    cutoffs) with a LOCAL, trend-following baseline.
-
-    Scale shape: the heavy reduction is the map-combined
-    groupBy(type, day) that collapses the event scan to
-    O(types x days) rows; the windows then run over that tiny rollup
-    only. Exactness discipline: frame sums are sums of DECIMALS
-    (day totals exactly, squares decimal-cast after an identical
-    IEEE multiply), so the rolling sufficient statistics are
-    partitioning- and order-invariant; mean/variance/z then
-    evaluate the identical double expression on both engines.
-    Partial leading windows are excluded (n = _RZ_W), as is the
-    zero-variance degenerate frame.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.filter(F.col("ts").isNotNull())
-        .groupBy(
-            "event_type",
-            F.expr("unix_micros(ts) div 86400000000").alias("day_num"),
-        )
-        .agg(
-            F.sum(F.col("value").cast("decimal(30,2)"))
-            .cast("double")
-            .alias("dt")
-        )
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("day_num")
-        .rowsBetween(-(_RZ_W - 1), Window.currentRow)
-    )
-    win = daily.select(
-        "event_type",
-        "day_num",
-        "dt",
-        F.sum(F.col("dt").cast("decimal(30,2)"))
-        .over(w)
-        .cast("double")
-        .alias("s"),
-        F.sum((F.col("dt") * F.col("dt")).cast("decimal(38,6)"))
-        .over(w)
-        .cast("double")
-        .alias("s2"),
-        F.count("*").over(w).alias("n"),
-    )
-    m = F.col("s") / _RZ_W
-    var = F.col("s2") / _RZ_W - m * m
-    return (
-        win.filter((F.col("n") == _RZ_W) & (var > 0))
-        .select(
-            "event_type",
-            "day_num",
-            F.round("dt", 2).alias("day_total"),
-            F.round((F.col("dt") - m) / F.sqrt(var), 6).alias("z"),
-        )
     )

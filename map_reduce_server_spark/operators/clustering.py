@@ -938,341 +938,3 @@ def graph_connected_components(
         e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
     )
     return labels.select(F.col("node").alias("part_id"), "component")
-
-
-_JACC_MIN_COMMON = 1  # emit pairs sharing at least one neighbor
-
-# Oracle for the UNREGISTERED graph_jaccard_neighbors below
-# (round-16 registration queue): same wedge enumeration + degree
-# marginals in SQL; round(…, 9) under the repo's libm/division
-# portability contract.
-_JACC_NEIGHBORS_ORACLE = f"""
-WITH e AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING COUNT(DISTINCT a.l_orderkey) >= {_TRI_MINSUP}),
-ed AS (SELECT u AS src, v AS dst FROM e
-       UNION ALL SELECT v AS src, u AS dst FROM e),
-deg AS (SELECT src AS node, COUNT(*) AS d FROM ed GROUP BY src),
-common AS (
-  SELECT e1.src AS a, e2.src AS b, COUNT(*) AS n_common
-  FROM ed e1 JOIN ed e2 ON e1.dst = e2.dst AND e1.src < e2.src
-  GROUP BY 1, 2 HAVING COUNT(*) >= {_JACC_MIN_COMMON})
-SELECT c.a AS part_a, c.b AS part_b,
-       CAST(c.n_common AS BIGINT) AS n_common,
-       round(CAST(c.n_common AS DOUBLE)
-             / (da.d + db.d - c.n_common), 9) AS jaccard
-FROM common c JOIN deg da ON da.node = c.a JOIN deg db ON db.node = c.b
-"""
-
-
-def graph_jaccard_neighbors(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Neighborhood-similarity link prediction: for every part pair
-    sharing at least one co-purchase neighbor, the Jaccard overlap
-    of their neighbor sets ``|N(a) ∩ N(b)| / |N(a) ∪ N(b)|`` — the
-    classic common-neighbors recommender signal ("parts bought
-    alongside the same parts"), computed purely relationally.
-
-    Scale shape is the triangle count's: common neighbors enumerate
-    as WEDGES through an equi-join of the adjacency list with itself
-    on the shared endpoint (e1.dst = e2.dst, src < src — never an
-    all-pairs product), so work is O(Σ deg²) over the
-    support-thresholded graph, and the union size derives from the
-    two degree marginals (deg(a) + deg(b) − common) — no second pass
-    over edges. Adjacency is stage-cut once and reused by both the
-    wedge join and the degree aggregate."""
-    e = _copurchase_edges(spark, sf_dir)
-    ed = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(
-            e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-        .transform(stage_cut)
-    )
-    deg = ed.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    e1 = ed.select(F.col("src").alias("a"), F.col("dst").alias("w"))
-    e2 = ed.select(F.col("src").alias("b"), F.col("dst").alias("w"))
-    common = (
-        e1.join(e2, "w")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .filter(F.col("n_common") >= _JACC_MIN_COMMON)
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("node").alias("b"), F.col("d").alias("db"))
-    return (
-        common.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.col("a").alias("part_a"),
-            F.col("b").alias("part_b"),
-            F.col("n_common"),
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("da") + F.col("db") - F.col("n_common")),
-                9,
-            ).alias("jaccard"),
-        )
-    )
-
-
-# Oracle for the UNREGISTERED graph_shortest_paths below (round-17
-# registration queue). Phase 1 is the exact hops recursion of
-# graph_bfs_hops; phase 2 derives each node's UNIQUE min-parent (the
-# smallest BFS predecessor one hop closer to the seed) and walks the
-# parent chain per node — a LINEAR recursion of total size
-# O(V x diameter), never a path enumeration (enumerating all
-# shortest paths is exponential on dense graphs; the min-parent tree
-# makes the reported path deterministic and both engines derive it
-# from the same hops table).
-_SP_ORACLE = f"""
-WITH RECURSIVE e AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING COUNT(DISTINCT a.l_orderkey) >= {_TRI_MINSUP}),
-ed AS (SELECT u AS src, v AS dst FROM e
-       UNION ALL SELECT v AS src, u AS dst FROM e),
-seed AS (SELECT MIN(src) AS s FROM ed),
-walk(node, hops) AS (
-  SELECT s, 0 FROM seed
-  UNION
-  SELECT ed.dst, w.hops + 1 FROM walk w JOIN ed ON ed.src = w.node
-  WHERE w.hops < {_BFS_MAX_HOPS}
-),
-dist AS (SELECT node, MIN(hops) AS hops FROM walk GROUP BY node),
-par AS (
-  SELECT d.node, MIN(p.node) AS parent
-  FROM dist d
-  JOIN ed ON ed.dst = d.node
-  JOIN dist p ON p.node = ed.src AND p.hops = d.hops - 1
-  GROUP BY d.node),
-chain(node, cur, path) AS (
-  SELECT node, node, CAST(node AS VARCHAR) FROM dist
-  UNION ALL
-  SELECT c.node, par.parent,
-         CAST(par.parent AS VARCHAR) || ',' || c.path
-  FROM chain c JOIN par ON par.node = c.cur
-)
-SELECT c.node AS part_id,
-       CAST(d.hops AS INTEGER) AS hops,
-       c.path AS path
-FROM chain c
-JOIN dist d ON d.node = c.node
-JOIN seed ON c.cur = seed.s
-"""
-
-
-def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-source shortest paths WITH path reconstruction: every
-    part reachable within ``_BFS_MAX_HOPS`` of the seed, labeled with
-    its hop count and the actual seed→node path — the provenance
-    question ("HOW is this node connected?") that hop counts alone
-    (graph_bfs_hops) cannot answer: recommendation explanations,
-    fraud-ring tracing, dependency chains.
-
-    Determinism without enumeration: all shortest paths to a node
-    can be exponentially many on dense graphs, so the reported path
-    is defined by the MIN-PARENT TREE — each node's predecessor is
-    the smallest neighbor one hop closer to the seed. That makes the
-    path unique, derivable from the hops table alone, and identical
-    on any engine (the oracle replays the same tree from its own
-    recursive hops CTE).
-
-    Scale shape: phase 1 is the bounded BFS (frontier⋈edges +
-    anti-join visited, size-gated broadcast — see
-    :func:`bfs_hops`); phase 2 adds ONE edges⋈dist⋈dist join to
-    derive parents (shuffles O(E) once), then ``_BFS_MAX_HOPS``
-    iterations of a walk⋈parents equi-join, each moving O(V) rows —
-    total O(V x diameter), the linear-chain cost every distributed
-    lineage/provenance reconstruction pays. The parent table is a
-    slim (node, parent) pair; no step carries paths through a
-    shuffle wider than the string being built.
-    """
-    e = _copurchase_edges(spark, sf_dir)
-    return shortest_paths(e, _BFS_MAX_HOPS).select(
-        F.col("node").alias("part_id"), "hops", "path"
-    )
-
-
-def shortest_paths(edges: DataFrame, max_hops: int) -> DataFrame:
-    """Reusable core of :func:`graph_shortest_paths`: min-parent-tree
-    shortest paths from min(u) over an UNDIRECTED (u, v) edge list.
-    Returns (node, hops int, path string — comma-joined ids from the
-    seed to the node). See there for the scale analysis."""
-    e = edges
-    ed = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(
-            e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-        .transform(stage_cut)
-    )
-    dist = stage_cut(
-        bfs_hops(e, max_hops).select(
-            "node", F.col("hops").cast("int").alias("hops")
-        )
-    )
-    d_dst = dist.select(
-        F.col("node").alias("c_node"), F.col("hops").alias("c_hops")
-    )
-    d_src = dist.select(
-        F.col("node").alias("p_node"), F.col("hops").alias("p_hops")
-    )
-    par = stage_cut(
-        d_dst.join(ed, ed["dst"] == d_dst["c_node"])
-        .join(
-            d_src,
-            (d_src["p_node"] == ed["src"])
-            & (d_src["p_hops"] == d_dst["c_hops"] - 1),
-        )
-        .groupBy(F.col("c_node").alias("node"))
-        .agg(F.min("p_node").alias("parent"))
-    )
-    walk = dist.select(
-        "node",
-        F.col("node").alias("cur"),
-        F.col("node").cast("string").alias("path"),
-    )
-    for _ in range(max_hops):
-        p = par.select(
-            F.col("node").alias("w_cur"), F.col("parent").alias("w_par")
-        )
-        walk = walk.join(p, walk["cur"] == p["w_cur"], "left").select(
-            "node",
-            F.coalesce(F.col("w_par"), F.col("cur")).alias("cur"),
-            F.when(
-                F.col("w_par").isNotNull(),
-                F.concat_ws(
-                    ",", F.col("w_par").cast("string"), F.col("path")
-                ),
-            )
-            .otherwise(F.col("path"))
-            .alias("path"),
-        )
-    seed = ed.agg(F.min("src").alias("s"))
-    return (
-        walk.join(F.broadcast(seed), walk["cur"] == F.col("s"))
-        .join(dist.select(F.col("node").alias("d_node"), "hops"),
-              F.col("node") == F.col("d_node"))
-        .select("node", "hops", "path")
-    )
-
-
-_KCORE_K = 2
-_KCORE_UNROLL = 8  # oracle peel depth; Spark raises past it
-
-
-def _k_core_oracle_sql(k: int, depth: int) -> str:
-    """Unrolled-peeling oracle for graph_k_core — the same
-    fixed-unroll technique as pagerank's recurrence oracle: peeling
-    is MONOTONE (once converged, further peels are no-ops), so an
-    unroll of depth >= the actual iteration count IS the fixpoint,
-    and the Spark side raises loudly if convergence would need more
-    than ``depth`` rounds (measured: <= 5 at every shipped SF for
-    k = 2). Recursive CTEs cannot express peeling at all — the
-    recursive term would need a per-round aggregate."""
-    # AS MATERIALIZED on every level: each ed{{i}} is referenced
-    # TWICE by level i+1, so plain (inlined) CTEs would re-expand the
-    # whole chain 2^depth times — measured as an fd explosion on the
-    # base parquet scan before it was a perf problem.
-    parts = [
-        "ed0 AS MATERIALIZED (SELECT u AS src, v AS dst FROM e "
-        "UNION ALL SELECT v, u FROM e)"
-    ]
-    prev = "ed0"
-    for i in range(1, depth + 1):
-        parts.append(
-            f"n{i} AS MATERIALIZED (SELECT src FROM {prev} "
-            f"GROUP BY src HAVING COUNT(*) >= {k})"
-        )
-        parts.append(
-            f"ed{i} AS MATERIALIZED (SELECT p.src, p.dst FROM {prev} p "
-            f"JOIN n{i} a ON p.src = a.src "
-            f"JOIN n{i} b ON p.dst = b.src)"
-        )
-        prev = f"ed{i}"
-    return f"""
-WITH e AS MATERIALIZED (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING COUNT(DISTINCT a.l_orderkey) >= {_TRI_MINSUP}),
-{', '.join(parts)}
-SELECT src AS part_id, CAST(COUNT(*) AS BIGINT) AS core_degree
-FROM {prev} GROUP BY src
-"""
-
-
-_KCORE_ORACLE = _k_core_oracle_sql(_KCORE_K, _KCORE_UNROLL)
-
-
-def k_core(edges: DataFrame, k: int, max_iter: int) -> DataFrame:
-    """Iterative k-core peeling over an UNDIRECTED (u, v) edge list:
-    repeatedly remove nodes of degree < k until none remain; returns
-    the surviving (node, core_degree). Raises if the fixpoint needs
-    more than ``max_iter`` peels — silent truncation would return a
-    superset of the core."""
-    ed = (
-        edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(
-            edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-        .transform(stage_cut)
-    )
-    for _ in range(max_iter):
-        deg = ed.groupBy("src").agg(F.count("*").alias("d"))
-        keep = deg.filter(F.col("d") >= k).select("src")
-        n_before = ed.select("src").distinct().count()
-        n_keep = keep.count()
-        if n_keep == n_before:
-            return ed.groupBy(F.col("src").alias("node")).agg(
-                F.count("*").alias("core_degree")
-            )
-        keep_dst = keep.select(F.col("src").alias("dst"))
-        ed = stage_cut(
-            ed.join(keep, "src", "left_semi").join(
-                keep_dst, "dst", "left_semi"
-            )
-        )
-        if n_keep == 0:
-            return ed.groupBy(F.col("src").alias("node")).agg(
-                F.count("*").alias("core_degree")
-            )
-    raise RuntimeError(
-        f"k_core did not converge in {max_iter} peels; raise max_iter "
-        "(and the oracle unroll) together"
-    )
-
-
-def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-core decomposition (fixed k = 2) of the thresholded
-    co-purchase graph: the maximal subgraph where every surviving
-    part still has >= k co-purchase partners — the standard
-    dense-region extractor (community cores, spam/fraud rings,
-    robust-seed selection for embeddings) and the FOURTH iterative
-    graph algorithm here after components, pagerank and BFS, with a
-    different convergence structure: the iterate is a shrinking
-    SUBGRAPH, not a label assignment.
-
-    Scale shape: each peel is one map-combined degree aggregate +
-    two semi-joins against the (shrinking) survivor set — O(E)
-    shuffle per round, with every intermediate stage-cut so plan
-    depth stays O(1). Peel count is small on heavy-tailed graphs
-    (measured <= 5 at every shipped SF); non-convergence within the
-    bound RAISES rather than returning a superset, and the oracle
-    unrolls the same peel exactly (monotonicity makes depth-8 the
-    fixpoint). Output is each core member with its degree INSIDE
-    the core, so downstream consumers can rank members without
-    re-deriving the subgraph.
-    """
-    e = _copurchase_edges(spark, sf_dir)
-    return k_core(e, _KCORE_K, _KCORE_UNROLL).select(
-        F.col("node").alias("part_id"), "core_degree"
-    )

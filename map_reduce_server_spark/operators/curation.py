@@ -48,7 +48,6 @@ from map_reduce_server_spark.functions.tokens import (
     sql_distinct_ratio,
     word_tokens_col,
 )
-from map_reduce_server_spark.functions.exact import dsum
 from map_reduce_server_spark.registry import register
 from map_reduce_server_spark.tables import load_table
 
@@ -676,7 +675,7 @@ def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # p_a/p_b RAW: rational + epsilon on identical doubles is
     # bit-identical across engines, while round(x, 6) breaks on
-    # 7-decimal-midpoint shares (the _CHANGED_R7 class). psi_term
+    # 7-decimal-midpoint shares. psi_term
     # KEEPS its round — it absorbs genuine 1-ulp ln() differences
     # between the engines' libm, which raw output would expose.
     return shares.select(
@@ -837,153 +836,4 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
                 2,
             ).alias("delta"),
         )
-    )
-
-
-# Oracle for the UNREGISTERED q_winsorize_extremes below (round-16
-# registration queue). Rank-based cutoffs, NOT interpolated
-# quantiles: percentile()/quantile_cont() use different
-# interpolation formulas (pinned in
-# tests/test_engine_portability_pins.py), while "the k-th smallest
-# value" is a single data value both engines agree on bit-exactly.
-_WINSORIZE_ORACLE = """
-WITH r AS (
-  SELECT o_custkey, o_totalprice,
-         row_number() OVER (ORDER BY o_totalprice, o_orderkey) AS rn,
-         COUNT(*) OVER () AS n
-  FROM orders),
-cuts AS (
-  SELECT MIN(CASE WHEN rn = greatest(CAST(ceil(0.01 * n) AS BIGINT), 1)
-                  THEN o_totalprice END) AS lo,
-         MIN(CASE WHEN rn = CAST(ceil(0.99 * n) AS BIGINT)
-                  THEN o_totalprice END) AS hi
-  FROM r)
-SELECT COUNT(*) AS n_rows,
-       CAST(SUM(CASE WHEN o_totalprice < lo THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_clipped_low,
-       CAST(SUM(CASE WHEN o_totalprice > hi THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_clipped_high,
-       MIN(lo) AS cut_low, MIN(hi) AS cut_high,
-       CAST(SUM(CAST(least(greatest(o_totalprice, lo), hi)
-                     AS DECIMAL(30,2))) AS DOUBLE) AS winsorized_sum
-FROM orders CROSS JOIN cuts
-"""
-
-
-def q_winsorize_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winsorization audit — the outlier-clipping pass a training
-    pipeline runs on heavy-tailed numeric features: clamp
-    o_totalprice to its [p1, p99] band and report the cutoffs,
-    clipped-row counts, and the exact clipped sum.
-
-    Cutoffs are RANK-BASED (the ceil(p*n)-th smallest value under a
-    unique-key tie-break), not interpolated quantiles —
-    percentile()/quantile_cont() interpolate with different formulas
-    across engines (an executable pin documents it), whereas "a
-    value that exists in the data" is bit-exact everywhere. Scale
-    shape: one global sort for the two rank cutoffs (rank-exact
-    percentiles are not sketchable by definition; q_approx_sketches
-    holds the constant-memory alternative), then a broadcast of the
-    1-row cutoff table and one scan for the clipped aggregate —
-    never a per-row correlated subquery."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.orderBy("o_totalprice", "o_orderkey")
-    r = orders.select(
-        "o_totalprice",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(
-            Window.partitionBy(F.lit(1))
-        ).alias("n"),
-    )
-    cuts = r.agg(
-        F.min(
-            F.when(
-                F.col("rn")
-                == F.greatest(
-                    F.ceil(0.01 * F.col("n")).cast("bigint"), F.lit(1)
-                ),
-                F.col("o_totalprice"),
-            )
-        ).alias("lo"),
-        F.min(
-            F.when(
-                F.col("rn") == F.ceil(0.99 * F.col("n")).cast("bigint"),
-                F.col("o_totalprice"),
-            )
-        ).alias("hi"),
-    )
-    clipped = orders.crossJoin(F.broadcast(cuts))
-    val = F.least(
-        F.greatest(F.col("o_totalprice"), F.col("lo")), F.col("hi")
-    )
-    return clipped.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(
-            F.when(F.col("o_totalprice") < F.col("lo"), 1).otherwise(0)
-        ).alias("n_clipped_low"),
-        F.sum(
-            F.when(F.col("o_totalprice") > F.col("hi"), 1).otherwise(0)
-        ).alias("n_clipped_high"),
-        F.min("lo").alias("cut_low"),
-        F.min("hi").alias("cut_high"),
-        dsum(val, scale=2).alias("winsorized_sum"),
-    )
-
-
-# --- uniform reservoir sampling ---------------------------------------------
-
-_RSV_K = 8
-
-
-# Oracle for the UNREGISTERED q_reservoir_sample below (round-17
-# registration queue). u is the house deterministic md5-uniform
-# (one of 10^6 fixed rationals — bit-identical across engines), so
-# the bottom-k cut needs no rounding guard; ties are impossible
-# within a source unless two docs share a hash value, which the
-# unique doc_id tie-break absorbs.
-_RESERVOIR_ORACLE = f"""
-WITH keyed AS (
-  SELECT source, doc_id,
-         {sql_uniform01("rsv", "CAST(doc_id AS VARCHAR)")} AS u
-  FROM documents),
-r AS (
-  SELECT source, doc_id, u,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY u, doc_id) AS rnk
-  FROM keyed)
-SELECT source, doc_id, u, CAST(rnk AS INTEGER) AS rnk
-FROM r WHERE rnk <= {_RSV_K}
-"""
-
-
-def q_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uniform reservoir sample of ``_RSV_K`` docs per source: rank
-    by a deterministic md5-uniform key and keep the k smallest — the
-    distributed equivalence that makes reservoir sampling mergeable:
-    a bottom-k-by-uniform-hash set over any partition union equals
-    the union's bottom-k (merge two reservoirs by re-taking the k
-    smallest keys), so every executor keeps a local reservoir and
-    the combine is associative. The same bottom-k sketch doubles as
-    a mergeable DISTINCT estimator (k-th smallest u ≈ k/|D|).
-    Against :func:`q_weighted_sample` this is the UNWEIGHTED
-    variant: A-ES keys degenerate to plain uniforms when every
-    weight is 1, and the deterministic hash replaces the stream
-    position — reproducible on any partitioning or arrival order.
-
-    Scale shape: one narrow scan computes keys, one shuffle on
-    ``source`` ranks them, and WindowGroupLimit prunes every
-    partition to k before the exchange — identical physics to the
-    map-side reservoir merge it simulates.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    keyed = docs.select(
-        "source",
-        "doc_id",
-        uniform01("rsv", F.col("doc_id")).alias("u"),
-    )
-    w = Window.partitionBy("source").orderBy("u", "doc_id")
-    return (
-        keyed.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _RSV_K)
-        .select("source", "doc_id", "u", "rnk")
     )

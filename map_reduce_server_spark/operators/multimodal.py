@@ -60,10 +60,7 @@ from map_reduce_server_spark.functions import (
     flac,
     g711,
     gif,
-    ico,
     jpeg,
-    pcx,
-    pgm,
     png,
     tga,
     tiff,
@@ -1873,8 +1870,7 @@ def tiff_stats(df: DataFrame) -> DataFrame:
     return _px_stats_stage(df, tiff.decode_gray8)
 
 
-# Oracle for the UNREGISTERED multimodal_decode_tiff below (round-14
-# registration queue): identical pixel statistics recomputed from
+# Oracle for multimodal_decode_tiff below: identical pixel statistics recomputed from
 # the md5 hex — 48 bytes, so the divisor joins the tie-free-by-
 # enumeration set in test_mean_px_round_tie_free_domains.
 _TIFF_ORACLE = f"""
@@ -1954,8 +1950,7 @@ def bmp_stats(df: DataFrame) -> DataFrame:
     return _px_stats_stage(df, bmp.decode_gray8)
 
 
-# Oracle for the UNREGISTERED multimodal_decode_bmp below (round-14
-# registration queue): identical pixel statistics recomputed from
+# Oracle for multimodal_decode_bmp below: identical pixel statistics recomputed from
 # the md5 hex (same 48-byte pixel source as TIFF, so divisor 48 is
 # already in the tie-free-by-enumeration proof).
 _BMP_ORACLE = f"""
@@ -2184,288 +2179,3 @@ def multimodal_decode_aiff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("mean_abs", 6).alias("mean_abs"),
         "max_abs",
     )
-
-
-# ---------------------------------------------------------------
-# ICO — multi-image directory container (round-16 queue).
-
-_ICO_W, _ICO_H = 8, 6  # entry 0: 48 gray bytes (tie-free divisor)
-_ICO_N_IMAGES = 2  # entry 1: a 4x4 thumbnail from one more digest
-
-
-def with_ico_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL two-entry ICO per document: entry 0 is the
-    shared 8x6 md5-derived raster (same pixel source as the
-    TIFF/BMP/TGA legs), entry 1 a 4x4 thumbnail from a fourth
-    digest — a genuine multi-image directory, so the decode stage
-    must walk ICONDIRENTRY offsets rather than assume one payload
-    per file."""
-    flat = docs.select(
-        "doc_id",
-        F.concat(
-            F.md5(F.col("text")),
-            F.md5(F.concat(F.lit("x"), F.col("text"))),
-            F.md5(F.concat(F.lit("y"), F.col("text"))),
-        ).alias("pix_hex"),
-        F.md5(F.concat(F.lit("i1"), F.col("text"))).alias("thumb_hex"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = [
-                None
-                if h is None
-                else ico.encode_gray8(
-                    [
-                        (_ICO_W, _ICO_H, bytes.fromhex(h)),
-                        (4, 4, bytes.fromhex(t)),
-                    ]
-                )
-                for h, t in zip(pdf["pix_hex"], pdf["thumb_hex"])
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payload})
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def ico_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real ICO payloads: directory walk, doubled-
-    height DIB parse, palette map, AND-mask accounting — stats over
-    ENTRY 0 plus the directory count (the multi-image property)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dec = pdf["payload"].map(_nn(lambda b: ico.decode_gray8(bytes(b))))
-            first = dec.map(_nn(lambda imgs: imgs[0]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_images": dec.map(_nn(len)),
-                    "width": first.map(_nn(lambda t: t[0])),
-                    "height": first.map(_nn(lambda t: t[1])),
-                    "mean_px": first.map(
-                        _nn(lambda t: sum(t[2]) / len(t[2]))
-                    ),
-                    "max_px": first.map(_nn(lambda t: max(t[2]))),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        run,
-        schema="doc_id bigint, n_images int, width int, height int, "
-        "mean_px double, max_px int",
-    )
-
-
-# Oracle for the UNREGISTERED multimodal_decode_ico below (round-16
-# registration queue): entry-0 pixel statistics recomputed from the
-# md5 hex (48-byte source, divisor already tie-free by enumeration)
-# plus the constant directory count.
-_ICO_ORACLE = f"""
-WITH px AS (
-  SELECT doc_id, list_transform(range(1, 49),
-           i -> CAST(('0x' || substr({_SQL_PIX_HEX}, i*2-1, 2))
-                AS BIGINT)) AS bs
-  FROM documents WHERE text IS NOT NULL),
-st AS (
-  SELECT doc_id, CAST({_ICO_N_IMAGES} AS INTEGER) AS n_images,
-         CAST({_ICO_W} AS INTEGER) AS width,
-         CAST({_ICO_H} AS INTEGER) AS height,
-         round(CAST(list_sum(bs) AS DOUBLE) / 48, 6) AS mean_px,
-         CAST(list_max(bs) AS INTEGER) AS max_px
-  FROM px)
-SELECT d.doc_id, st.n_images, st.width, st.height, st.mean_px,
-       st.max_px
-FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
-"""
-
-
-def multimodal_decode_ico(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round-trip for the MULTI-IMAGE DIRECTORY container
-    family: encode each document's md5-derived rasters as an actual
-    two-entry Windows ICO and decode every entry back with the
-    pure-stdlib parser. PNG/GIF/TIFF/BMP/TGA are one image per file;
-    ICO is a directory of independently-offset image resources whose
-    DIB entries carry the height-DOUBLED XOR+AND mask layout and no
-    file header — the offsets-and-masks walk a naive BMP reader
-    cannot do (and PNG-compressed entries are refused, not
-    mis-parsed). Same zero-shuffle Arrow-batched mapInPandas scale
-    shape as every image leg."""
-    docs = load_table(spark, sf_dir, "documents")
-    stats = ico_stats(with_ico_payload(docs))
-    return stats.select(
-        "doc_id",
-        "n_images",
-        "width",
-        "height",
-        F.round("mean_px", 6).alias("mean_px"),
-        "max_px",
-    )
-
-
-# ---------------------------------------------------------------
-# PCX — two-bit-tagged RLE, even line padding, trailing VGA palette.
-
-_PCX_W, _PCX_H = 8, 6  # 48 gray bytes, same tie-free divisor domain
-_PCX_BPL = 10  # > width and even: every line carries 2 pad bytes
-
-
-def with_pcx_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL 8x6 grayscale RLE PCX per document (pure-stdlib
-    encoder; pixels = the full 48 bytes of the three chained md5
-    digests). ``bytes_per_line`` = 10 pads every scan line by two
-    zero bytes, so the decode stage must walk the padded line grid
-    and truncate — the PCX-specific failure mode no other codec leg
-    exercises."""
-    flat = docs.select(
-        "doc_id",
-        F.concat(
-            F.md5(F.col("text")),
-            F.md5(F.concat(F.lit("x"), F.col("text"))),
-            F.md5(F.concat(F.lit("y"), F.col("text"))),
-        ).alias("pix_hex"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = pdf["pix_hex"].map(
-                _nn(
-                    lambda h: pcx.encode_gray8(
-                        _PCX_W,
-                        _PCX_H,
-                        bytes.fromhex(h),
-                        bytes_per_line=_PCX_BPL,
-                    )
-                )
-            )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payload})
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def pcx_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real PCX payloads: header walk, two-bit-tag
-    RLE expansion over the padded line grid, pad truncation, palette
-    verification, then per-image pixel statistics."""
-    return _px_stats_stage(df, pcx.decode_gray8)
-
-
-# Oracle for the UNREGISTERED multimodal_decode_pcx below (round-17
-# registration queue): identical pixel statistics recomputed from
-# the md5 hex (48-byte pixel source, divisor already in the
-# tie-free-by-enumeration proof of _px_stats_select; the pad bytes
-# are decode-invisible by the truncation contract).
-_PCX_ORACLE = f"""
-WITH px AS (
-  SELECT doc_id, list_transform(range(1, 49),
-           i -> CAST(('0x' || substr({_SQL_PIX_HEX}, i*2-1, 2))
-                AS BIGINT)) AS bs
-  FROM documents WHERE text IS NOT NULL),
-st AS (
-  SELECT doc_id, CAST({_PCX_W} AS INTEGER) AS width,
-         CAST({_PCX_H} AS INTEGER) AS height,
-         round(CAST(list_sum(bs) AS DOUBLE) / 48, 6) AS mean_px,
-         CAST(list_max(bs) AS INTEGER) AS max_px
-  FROM px)
-SELECT d.doc_id, st.width, st.height, st.mean_px, st.max_px
-FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
-"""
-
-
-def multimodal_decode_pcx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round-trip for the TWO-BIT-TAGGED RLE family:
-    encode each document's md5-derived pixels as an actual ZSoft PCX
-    (run headers >= 0xC0 with 6-bit counts, bright literals escaped
-    as runs of one, even-padded scan lines decoded-then-truncated,
-    trailing identity-gray VGA palette) and decode it back with the
-    pure-stdlib parser. TGA covers one-bit-tagged byte RLE; PCX adds
-    the tag-collision escape (a bare literal >= 0xC0 would parse as
-    a run header — the classic silent-corruption bug in hand-rolled
-    writers) and the padded-line-grid walk. Same zero-shuffle
-    Arrow-batched mapInPandas scale shape as every image leg."""
-    docs = load_table(spark, sf_dir, "documents")
-    return _px_stats_select(pcx_stats(with_pcx_payload(docs)))
-
-
-# ---------------------------------------------------------------
-# PGM — ASCII token header with comments, P5 binary / P2 ASCII.
-
-_PGM_W, _PGM_H = 8, 6  # 48 gray bytes, same tie-free divisor domain
-
-
-def with_pgm_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL 8x6 grayscale PGM per document (pure-stdlib
-    encoder; pixels = the full 48 bytes of the three chained md5
-    digests). Format alternates by doc parity — even docs binary P5,
-    odd docs ASCII P2 — so the decode stage exercises BOTH rasters
-    while the oracle stays format-invariant (pixel bytes are
-    identical)."""
-    flat = docs.select(
-        "doc_id",
-        F.concat(
-            F.md5(F.col("text")),
-            F.md5(F.concat(F.lit("x"), F.col("text"))),
-            F.md5(F.concat(F.lit("y"), F.col("text"))),
-        ).alias("pix_hex"),
-        (F.col("doc_id") % 2 == 1).alias("am"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = [
-                None
-                if h is None
-                else pgm.encode_gray8(
-                    _PGM_W, _PGM_H, bytes.fromhex(h), ascii_mode=bool(am)
-                )
-                for h, am in zip(pdf["pix_hex"], pdf["am"])
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payload})
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def pgm_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real PGM payloads: comment-skipping token
-    header walk, single-separator binary raster or terminator-checked
-    ASCII raster, then per-image pixel statistics."""
-    return _px_stats_stage(df, pgm.decode_gray8)
-
-
-# Oracle for the UNREGISTERED multimodal_decode_pgm below (round-18
-# registration queue): identical pixel statistics recomputed from
-# the md5 hex (48-byte pixel source, divisor already in the
-# tie-free-by-enumeration proof of _px_stats_select; P5 vs P2 is
-# decode-invisible by construction).
-_PGM_ORACLE = f"""
-WITH px AS (
-  SELECT doc_id, list_transform(range(1, 49),
-           i -> CAST(('0x' || substr({_SQL_PIX_HEX}, i*2-1, 2))
-                AS BIGINT)) AS bs
-  FROM documents WHERE text IS NOT NULL),
-st AS (
-  SELECT doc_id, CAST({_PGM_W} AS INTEGER) AS width,
-         CAST({_PGM_H} AS INTEGER) AS height,
-         round(CAST(list_sum(bs) AS DOUBLE) / 48, 6) AS mean_px,
-         CAST(list_max(bs) AS INTEGER) AS max_px
-  FROM px)
-SELECT d.doc_id, st.width, st.height, st.mean_px, st.max_px
-FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
-"""
-
-
-def multimodal_decode_pgm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round-trip for the ASCII-HEADER container family:
-    encode each document's md5-derived pixels as an actual netpbm
-    PGM (comment-bearing token header; binary P5 for even docs,
-    ASCII-decimal P2 for odd) and decode with the pure-stdlib
-    parser. Every other image leg is fixed-offset binary — PGM adds
-    tokenized headers with interleaved comments, the
-    exactly-one-whitespace rule before a binary raster (a
-    whitespace-eating parser corrupts rasters starting 0x09/0x0A/
-    0x20 — exercised by construction in the md5 pixel stream), and
-    the ASCII raster's truncation ambiguity closed by the
-    terminator rule. Same zero-shuffle Arrow-batched mapInPandas
-    scale shape as every image leg."""
-    docs = load_table(spark, sf_dir, "documents")
-    return _px_stats_select(pgm_stats(with_pgm_payload(docs)))

@@ -1216,8 +1216,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for the UNREGISTERED q_window_time_range below (round-14
-# registration queue): calendar-INTERVAL range frame, value-based so
+# Oracle for q_window_time_range below: calendar-INTERVAL range frame, value-based so
 # equal timestamps land in each other's frames regardless of order —
 # deterministic without a unique tie-break, unlike ROWS frames.
 _TIME_RANGE_ORACLE = """

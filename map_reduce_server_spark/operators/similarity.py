@@ -966,56 +966,3 @@ def q_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("correct"),
     )
-
-
-
-_RANGE_THETA = 0.25  # cosine threshold for range search
-
-# Oracle for the UNREGISTERED ann_range_search below (round-16
-# registration queue): identical cosine twin, threshold filter
-# instead of a rank cut (no k to tie-break — the predicate itself is
-# deterministic; round(…, 6) only on the EMITTED value, never in
-# the filter, so both engines filter the same raw double).
-_RANGE_SEARCH_ORACLE = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-q AS (SELECT vec_id AS query_id, vec AS qvec FROM e
-      WHERE vec_id < {_N_QUERIES})
-SELECT query_id, vec_id AS neighbor_id,
-       round({_SQL_COS.format(a='qvec', b='vec')}, 6) AS cos_sim
-FROM q CROSS JOIN e
-WHERE vec_id <> query_id
-  AND {_SQL_COS.format(a='qvec', b='vec')} >= {_RANGE_THETA}
-"""
-
-
-def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Threshold (range) similarity search: ALL corpus vectors with
-    cosine >= theta per query — the complement of top-k retrieval
-    (dedup candidate pull, recall-oriented retrieval, radius
-    neighborhoods), where the result size is data-dependent rather
-    than fixed at k.
-
-    Scale shape matches ann_topk_bruteforce's exact baseline: the
-    query set broadcasts, the corpus scans ONCE and never shuffles
-    its vectors, and the threshold filter runs inside the scan
-    projection — only (query_id, neighbor_id, cos) survive, and
-    unlike top-k there is no global rank stage at all (the filter is
-    embarrassingly parallel). The filter compares the RAW double and
-    rounds only the emitted value, so the result set is identical on
-    any partitioning. The LSH/IVF variants remain the scale path
-    when theta is high enough for bucket pruning."""
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
-    cos = cosine(F.col("qvec"), F.col("vec"))
-    return (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .filter(cos >= _RANGE_THETA)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cos, 6).alias("cos_sim"),
-        )
-    )

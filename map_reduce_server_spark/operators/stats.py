@@ -958,78 +958,3 @@ def q_ts_similarity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("zdist2", "event_type", "start_day")
         .limit(_TSS_TOPK)
     )
-
-
-# Oracle for the UNREGISTERED q_weighted_median below (round-17
-# registration queue). The lower weighted median is a DATA VALUE
-# (the first price whose cumulative weight reaches half the total),
-# not an interpolated quantile — percentile()/quantile_cont()
-# interpolate differently across engines (pinned in
-# tests/test_engine_portability_pins.py) while "first value where
-# 2*cum >= tot" is bit-exact on both. Weights aggregate per
-# (group, value) first, so the running sum's ORDER BY price is
-# unique within each group and the cumulative prefix is
-# engine-independent; all weight arithmetic is exact decimal.
-_WMEDIAN_ORACLE = """
-WITH g AS (
-  SELECT l_returnflag AS flag, l_extendedprice AS price,
-         SUM(CAST(l_quantity AS DECIMAL(30,2))) AS w
-  FROM lineitem GROUP BY 1, 2),
-c AS (
-  SELECT flag, price, w,
-         SUM(w) OVER (PARTITION BY flag ORDER BY price
-                      ROWS UNBOUNDED PRECEDING) AS cum,
-         SUM(w) OVER (PARTITION BY flag) AS tot
-  FROM g)
-SELECT flag AS l_returnflag,
-       MIN(CASE WHEN cum * 2 >= tot THEN price END) AS weighted_median,
-       CAST(MIN(tot) AS DOUBLE) AS total_weight
-FROM c GROUP BY flag
-"""
-
-
-def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact weighted median per group: the smallest
-    ``l_extendedprice`` whose cumulative ``l_quantity`` weight
-    reaches half the group total — the robust center a quality- or
-    token-weighted corpus report needs where a plain median
-    over-counts cheap rows (weighted percentiles are the
-    data-mixture primitive: "the median training token comes from a
-    document scoring X").
-
-    Scale shape: the heavy reduction is the FIRST aggregation —
-    partial-combined ``groupBy(flag, price)`` collapses the fact
-    scan to O(distinct prices per group) rows before any window
-    runs; the running sum then orders only the aggregated rows
-    inside each group partition (unique ORDER BY key by
-    construction, so the prefix is partitioning-invariant). No
-    global sort, no interpolation: the median is selected by a
-    filtered MIN, and every weight is an exact decimal sum. At 100
-    TB the distinct-value table per group is what it is — if values
-    are near-unique, swap in the rank-based k-th-element selection
-    of q_winsorize_extremes (same discipline, no interpolation
-    either).
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    g = li.groupBy(
-        F.col("l_returnflag").alias("flag"),
-        F.col("l_extendedprice").alias("price"),
-    ).agg(F.sum(F.col("l_quantity").cast("decimal(30,2)")).alias("w"))
-    cum_w = (
-        Window.partitionBy("flag")
-        .orderBy("price")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    tot_w = Window.partitionBy("flag")
-    c = g.select(
-        "flag",
-        "price",
-        F.sum("w").over(cum_w).alias("cum"),
-        F.sum("w").over(tot_w).alias("tot"),
-    )
-    return c.groupBy(F.col("flag").alias("l_returnflag")).agg(
-        F.min(
-            F.when(F.col("cum") * 2 >= F.col("tot"), F.col("price"))
-        ).alias("weighted_median"),
-        F.min("tot").cast("double").alias("total_weight"),
-    )

@@ -1338,8 +1338,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COLLOC_MIN_COUNT = 5
 
-# Oracle for the UNREGISTERED text_collocations below (round-14
-# registration queue). All marginals derive from the ONE bigram
+# Oracle for text_collocations below. All marginals derive from the ONE bigram
 # count table, so the oracle replays the same single-heavy-shuffle
 # factorization the engine plans.
 _COLLOC_ORACLE = f"""
@@ -1491,76 +1490,4 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("postings"),
         )
         .filter(F.col("df") >= 2)
-    )
-
-
-_CHUNK_W = 32  # tokens per chunk
-_CHUNK_S = 24  # stride (8-token overlap between neighbors)
-
-# Oracle for the UNREGISTERED text_chunk_windows below (round-16
-# registration queue): identical window arithmetic over the shared
-# tokenizer; list_slice is 1-based INCLUSIVE on both bounds, Spark's
-# slice(arr, start, length) is 1-based with a length — both render
-# the same [i*S, i*S + W) token window.
-_CHUNK_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, {_SQL_NE_TOKENS} AS toks,
-         len({_SQL_NE_TOKENS}) AS n FROM documents),
-ch AS (
-  SELECT doc_id, n, unnest(range(0,
-           CASE WHEN n <= {_CHUNK_W} THEN 1
-                ELSE CAST(ceil(CAST(n - {_CHUNK_W} AS DOUBLE)
-                          / {_CHUNK_S}) AS BIGINT) + 1 END)) AS chunk_idx,
-         toks
-  FROM t WHERE n > 0)
-SELECT doc_id, CAST(chunk_idx AS INTEGER) AS chunk_idx,
-       CAST(least({_CHUNK_W}, n - chunk_idx * {_CHUNK_S}) AS INTEGER)
-         AS n_tokens,
-       array_to_string(list_slice(toks, chunk_idx * {_CHUNK_S} + 1,
-           least(chunk_idx * {_CHUNK_S} + {_CHUNK_W}, n)), ' ')
-         AS chunk_text
-FROM ch
-"""
-
-
-def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAG-prep chunking: split every document into overlapping
-    fixed-size token windows (W=32, stride 24) with doc provenance
-    and per-chunk token counts — the retrieval-corpus construction
-    pass between cleaning and embedding, where chunk boundaries and
-    overlap determine recall downstream.
-
-    Window arithmetic: chunk i covers tokens [i*S, i*S + W); the
-    chunk count is ceil((n - W) / S) + 1 clamped to >= 1, so the
-    final (possibly short) tail window always lands and every token
-    belongs to at least one chunk. Scale shape: tokenize once, one
-    narrow explode of per-doc chunk indices (never a token-level
-    explode), slice from the already-materialized token array —
-    zero shuffles, fully codegen, embarrassingly parallel like every
-    per-document scorer in this module."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = tokens_col(F.col("text"), keep_empty=False)
-    t = docs.select(
-        "doc_id", toks.alias("toks"), F.size(toks).alias("n")
-    ).filter(F.col("n") > 0)
-    n_chunks = F.when(F.col("n") <= _CHUNK_W, F.lit(1)).otherwise(
-        F.ceil(
-            (F.col("n") - F.lit(_CHUNK_W)).cast("double") / _CHUNK_S
-        ).cast("long")
-        + 1
-    )
-    ch = t.withColumn(
-        "chunk_idx",
-        F.explode(F.sequence(F.lit(0).cast("long"), n_chunks - 1)),
-    )
-    start = F.col("chunk_idx") * _CHUNK_S
-    return ch.select(
-        "doc_id",
-        F.col("chunk_idx").cast("int").alias("chunk_idx"),
-        F.least(F.lit(_CHUNK_W), F.col("n") - start)
-        .cast("int")
-        .alias("n_tokens"),
-        F.array_join(
-            F.slice(F.col("toks"), start + 1, F.lit(_CHUNK_W)), " "
-        ).alias("chunk_text"),
     )

@@ -10,16 +10,12 @@ UDFs exist for completeness but are deliberately not used anywhere.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from map_reduce_server_spark.functions.exact import dsum, sql_dsum
-from map_reduce_server_spark.io.tempdirs import cleanup_at_exit
 from map_reduce_server_spark.registry import register
 from map_reduce_server_spark.tables import load_table
 
@@ -223,80 +219,3 @@ from map_reduce_server_spark.functions import (  # noqa: E402
 
 _rbv(__name__)
 del _rbv  # a lingering ref would pickle the functions pkg by reference
-
-
-# Oracle for the UNREGISTERED q_skew_join_hint below (round-17
-# registration queue): the crafted hot key routes ~2/3 of lineitem
-# onto k = 1, and the result is the PLAIN join aggregate — skew
-# handling must be result-invisible by construction.
-_SKEW_ORACLE = f"""
-WITH f AS (
-  SELECT CASE WHEN l_orderkey % 3 = 0 THEN l_partkey % 50 + 1
-              ELSE 1 END AS k,
-         l_extendedprice
-  FROM lineitem)
-SELECT p_brand,
-       COUNT(*) AS n_items,
-       {sql_dsum('l_extendedprice')} AS revenue
-FROM f JOIN part ON k = p_partkey
-GROUP BY p_brand
-"""
-
-
-def q_skew_join_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AQE-skew-eligible join under extreme key skew: a skewed fact
-    table (crafted key routing ~2/3 of lineitem to one hot value) is
-    staged to parquet as a multi-file table — the stored-fact shape a
-    100 TB run reads — and the MERGE hint pins a sort-merge join so
-    Adaptive Query Execution's skew-join rule, not a lucky
-    broadcast, is what has to absorb the hot partition. The third
-    member of the skew family: q_salted_join salts by hand (extreme
-    single-key skew), AQE splits hot partitions automatically (this
-    query's path at scale), and broadcast sidesteps skew entirely
-    while the dim fits (q_bucketed_join territory).
-
-    Why pin MERGE: at test SFs the part dim would broadcast and the
-    skew would silently vanish — the plan exercised must be the one
-    a 100 TB run executes, where the dim outgrows the broadcast
-    threshold and the shuffle partition carrying the hot key is 100x
-    its siblings. Under AQE's skew-join rule (on by default) that
-    partition is split into advisory-sized slices by MAPPER
-    boundaries, each slice joined independently against a re-read of
-    the dim side — which is also why the fact is staged as MULTIPLE
-    files (8-way write): a single-mapper shuffle stage is
-    unsplittable, exactly as a single giant unsplittable input file
-    would be at scale (measured here: the split never fires with one
-    map task, fires reliably with 8). The staging write is one
-    round-robin shuffle paid by the harness to materialize the fact
-    table the scenario starts from. Results are hash-verified
-    against the plain-join oracle (skew handling must be
-    result-invisible); tests/test_plans.py pins the SMJ shape and
-    tests/test_skew_join.py drives the skew=true split in the
-    executed adaptive plan under lowered thresholds.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    tmp = tempfile.mkdtemp(prefix="mrss_skewfact_")
-    cleanup_at_exit(tmp)
-    path = os.path.join(tmp, "fact")
-    (
-        li.select(
-            F.when(
-                F.col("l_orderkey") % 3 == 0, F.col("l_partkey") % 50 + 1
-            )
-            .otherwise(1)
-            .alias("k"),
-            "l_extendedprice",
-        )
-        .repartition(8)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    fact = spark.read.parquet(path)
-    joined = fact.join(
-        part.hint("merge"), fact["k"] == part["p_partkey"]
-    )
-    return joined.groupBy("p_brand").agg(
-        F.count("*").alias("n_items"),
-        dsum("l_extendedprice").alias("revenue"),
-    )

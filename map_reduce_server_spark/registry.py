@@ -10,7 +10,9 @@ executable oracle, per SURVEY.md §5.
 from __future__ import annotations
 
 import functools
+import json
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -152,567 +154,66 @@ def load_all() -> None:
     _LOADED = True
 
 
-# Driver verification history (CORRECTNESS_r01..r09.json): the
-# driver samples a ~50-query registry prefix each round, so
-# ``all_queries``/``all_oracles`` order the registry stalest-first —
-# queries with NO green row certifying current code first (new
-# registrations + _CHANGED_R10 reworks), then by the round of their
-# freshest green row (round-5 greens before round-6 before … before
-# round-9). Local oracle-parity tests always cover all queries
-# regardless of this ordering.
+# The driver verifies a ~50-query window from the head of
+# ``all_queries()`` each round and commits the rows as
+# CORRECTNESS_rNN.json next to this package. ``all_queries`` and
+# ``all_oracles`` order the registry stalest-first from those files:
+# names with no green row first, then by the round of their freshest
+# green row, registration order breaking ties. Committing a
+# CORRECTNESS file advances the rotation; without the files the
+# order is registration order. Local oracle-parity tests cover every
+# query regardless of this order.
+_CORRECTNESS_DIR = Path(__file__).resolve().parent.parent
 
-# The 50 queries hash-verified green by CORRECTNESS_r03.json.
-_DRIVER_GREEN_R3 = frozenset({
-    "q_bucketed_join", "q_share_of_total", "q_corr", "q_histogram",
-    "q_csv_roundtrip", "q_json_roundtrip", "q_orc_roundtrip",
-    "dedup_exact", "dedup_fingerprint", "dedup_ngram_jaccard",
-    "dedup_minhash_lsh", "dedup_keep_one", "dedup_minhash_estimate",
-    "dedup_simhash", "dedup_simhash_pairs", "dedup_cluster",
-    "multimodal_features", "multimodal_meta", "multimodal_decode",
-    "q1_pricing_summary", "q1_sql_entry", "q_not_in_nulls",
-    "q_group_having", "q_distinct_agg", "q_rollup", "q_cube",
-    "q_pivot_events", "q3_shipping_priority",
-    "q5_local_supplier_volume", "q_join_left_outer", "q_join_semi",
-    "q_join_anti", "q_window_funcs", "q_window_running",
-    "q_window_range_frame", "q_window_distribution", "q_window_values",
-    "q_array_set_ops", "q_topk_per_group", "q_topk_global",
-    "q_math_funcs", "ann_topk_ivf", "ann_topk_lsh_multiprobe",
-    "dedup_embedding_cosine", "text_unigram_logprob", "text_pii_scrub",
-    "text_repetition", "text_decontaminate", "q_stratified_sample",
-    "stream_dedup_events",
-})
-
-# Queries last verified in round 2 (CORRECTNESS_r02.json) — stale
-# relative to r3 but with at least one green driver row. Ordered in
-# the middle: they fill whatever window slots remain after the
-# never-verified head.
-_DRIVER_GREEN_R2 = frozenset({
-    "q_approx_sketches", "q_set_ops", "q_set_ops_all", "q_bitwise_agg",
-    "q_try_funcs", "q_map_funcs", "q_string_funcs", "q_date_funcs",
-    "q_json_funcs", "q_array_funcs", "q_like_regexp", "q_string_funcs2",
-    "q_union_by_name", "q_null_funcs", "q_sessionize",
-    "ann_topk_bruteforce", "ann_topk_lsh",
-    "q_scalar_subquery", "q_correlated_exists", "q_unpivot",
-    "q_range_join", "wordcount", "grep", "text_token_stats",
-    "text_quality", "text_lang_id", "text_tfidf", "text_bpe_tokens",
-    "text_train_test_split", "text_fingerprint", "q_pandas_udf_score",
-    "q_salted_join", "q_session_window", "mr_wordcount", "mr_grep",
-    "q_sliding_window", "stream_window_counts",
-    "stream_window_counts_incremental", "q_asof_join",
-    "q_grouping_sets", "q_stats_moments", "q_percentiles",
-    "q_minmax_by", "q_collect_sorted", "q_conditional_agg", "q_upsert",
-    "q_posexplode", "q_date_spine",
-})
-
-
-# The 49 queries hash-verified green by CORRECTNESS_r04.json — the
-# freshest driver rows, ordered LAST. (embedding_quantize_int8 had a
-# round-4 row but it was an err, so it stays in the never-green head.)
-_DRIVER_GREEN_R4 = frozenset({
-    "ann_topk_quantized", "dedup_jaccard_prefix", "dedup_minhash_keep_one",
-    "dedup_semantic_cluster", "graph_pagerank", "kmeans_embeddings",
-    "q10_returned_items", "q11_important_stock", "q12_priority_lines",
-    "q13_customer_distribution", "q14_promo_revenue", "q15_top_supplier",
-    "q16_parts_supplier", "q17_small_qty_revenue", "q18_large_orders",
-    "q19_disjunctive_revenue", "q20_part_promotion",
-    "q22_dormant_customers", "q2_min_cost_supplier", "q4_order_priority",
-    "q6_forecast_revenue", "q7_volume_shipping", "q8_market_share",
-    "q9_product_profit", "q_cdc_apply", "q_copurchase_triangles",
-    "q_data_expectations", "q_debounce_events", "q_domain_mixture",
-    "q_drift_psi", "q_equidepth_histogram", "q_event_transitions",
-    "q_funnel", "q_gap_islands", "q_locf_gapfill", "q_mixture_temperature",
-    "q_pack_sequences", "q_partitioned_layout", "q_point_in_time_join",
-    "q_profile_columns", "q_quality_gate", "q_retention_cohorts",
-    "q_rolling_active_users", "q_scd2_customer_orders",
-    "q_session_concurrency", "q_time_rollup", "q_training_shards",
-    "text_novelty", "text_oov_rate",
-})
-
-# The 50 queries hash-verified green by CORRECTNESS_r05.json — the
-# freshest driver rows, ordered LAST. Includes the 5 formerly
-# never-verified stragglers, round 4's one err row
-# (embedding_quantize_int8, fixed and green in r5), and the 3
-# _CHANGED_R5 reworks (q_equidepth_histogram, q_profile_columns,
-# graph_pagerank) — all re-certified on round-5 code.
-_DRIVER_GREEN_R5 = frozenset({
-    "ann_topk_matryoshka", "dedup_containment", "embedding_quantize_int8",
-    "graph_degree_stats", "graph_pagerank", "multimodal_decode_png",
-    "multimodal_decode_wav", "multimodal_resize_png",
-    "q21_waiting_suppliers", "q_ab_test_welch", "q_ann_recall",
-    "q_anomaly_mad", "q_attribution_last_touch", "q_benford_check",
-    "q_bootstrap_ci", "q_corr_matrix", "q_coverage_report",
-    "q_crosstab_chisq", "q_dp_count_release", "q_embedding_drift",
-    "q_equidepth_histogram", "q_equidepth_histogram_exact",
-    "q_feature_hashing", "q_forecast_seasonal_naive",
-    "q_fuzzy_name_match", "q_gini_concentration", "q_hybrid_retrieval_rrf",
-    "q_interval_overlap_join", "q_knn_classifier", "q_label_balance",
-    "q_market_basket", "q_profile_columns", "q_rfm_segments",
-    "q_skyline_parts", "q_snapshot_diff", "q_time_weighted_avg",
-    "q_ts_similarity_search", "q_user_ltv_decay", "q_weighted_sample",
-    "stream_static_enrich", "stream_stream_interval_join",
-    "stream_trending_topk", "text_bigram_logprob", "text_bm25",
-    "text_bpe_train", "text_dup_spans", "text_entropy", "text_keywords",
-    "text_readability", "text_zipf_fit",
-})
-
-# The 50 queries hash-verified green by CORRECTNESS_r06.json — the
-# freshest driver rows, ordered LAST. Includes the 3 round-6 codec
-# additions (jpeg/mulaw/video), both _CHANGED_R6 reworks
-# (q_equidepth_histogram, q2_min_cost_supplier — re-certified on the
-# round-6 code), and 45 round-2-stale re-certifications.
-_DRIVER_GREEN_R6 = frozenset({
-    "ann_topk_bruteforce", "ann_topk_lsh", "grep", "mr_grep",
-    "mr_wordcount", "multimodal_decode_jpeg", "multimodal_decode_mulaw",
-    "multimodal_decode_video", "q2_min_cost_supplier",
-    "q_approx_sketches", "q_array_funcs", "q_asof_join", "q_bitwise_agg",
-    "q_collect_sorted", "q_conditional_agg", "q_correlated_exists",
-    "q_date_funcs", "q_date_spine", "q_equidepth_histogram",
-    "q_grouping_sets", "q_json_funcs", "q_like_regexp", "q_map_funcs",
-    "q_minmax_by", "q_null_funcs", "q_pandas_udf_score", "q_percentiles",
-    "q_posexplode", "q_range_join", "q_salted_join", "q_scalar_subquery",
-    "q_session_window", "q_sessionize", "q_set_ops", "q_set_ops_all",
-    "q_stats_moments", "q_string_funcs", "q_string_funcs2", "q_try_funcs",
-    "q_union_by_name", "q_unpivot", "q_upsert", "text_bpe_tokens",
-    "text_fingerprint", "text_lang_id", "text_quality", "text_tfidf",
-    "text_token_stats", "text_train_test_split", "wordcount",
-})
-
-# The 50 queries hash-verified green by CORRECTNESS_r07.json — the
-# freshest driver rows, ordered LAST. Includes the 3 round-7 codec
-# additions (alaw / jpeg_color / jpeg_progressive), all 10
-# _CHANGED_R7 raw-double/qsum40 reworks (re-certified on round-7
-# code), the 3 round-2-stale streaming windows (certifying the r6
-# streaming hardening), and the bulk of the round-3-stale group.
-_DRIVER_GREEN_R7 = frozenset({
-    "dedup_cluster", "dedup_containment", "dedup_exact",
-    "dedup_fingerprint", "dedup_jaccard_prefix", "dedup_keep_one",
-    "dedup_minhash_estimate", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_simhash_pairs", "graph_pagerank",
-    "multimodal_decode", "multimodal_decode_alaw",
-    "multimodal_decode_jpeg_color", "multimodal_decode_jpeg_progressive",
-    "multimodal_features", "multimodal_meta", "q1_pricing_summary",
-    "q1_sql_entry", "q3_shipping_priority", "q5_local_supplier_volume",
-    "q_bucketed_join", "q_corr", "q_csv_roundtrip", "q_cube",
-    "q_distinct_agg", "q_drift_psi", "q_embedding_drift", "q_group_having",
-    "q_histogram", "q_join_anti", "q_join_left_outer", "q_join_semi",
-    "q_json_roundtrip", "q_math_funcs", "q_not_in_nulls", "q_orc_roundtrip",
-    "q_pivot_events", "q_quality_gate", "q_rollup", "q_scalar_subquery",
-    "q_share_of_total", "q_sliding_window", "q_window_funcs",
-    "q_window_range_frame", "q_window_running", "stream_window_counts",
-    "stream_window_counts_incremental", "text_quality",
-})
-
-# Queries whose RESULT changed after their last green driver row
-# (round-8 rework): their stale green row no longer certifies the
-# current code, so they rejoin the never-verified head.
-_CHANGED_R8: frozenset[str] = frozenset()
-
-# The 50 queries hash-verified green by CORRECTNESS_r08.json — the
-# freshest driver rows, ordered LAST. Clears the 14 remaining
-# round-3-stale rows and 36 of the 42 round-4-stale ones (all 50
-# rows green: rows/schema/hash matched at sf0.01).
-_DRIVER_GREEN_R8 = frozenset({
-    "ann_topk_ivf", "ann_topk_lsh_multiprobe", "ann_topk_quantized",
-    "dedup_embedding_cosine", "dedup_minhash_keep_one",
-    "dedup_semantic_cluster", "kmeans_embeddings",
-    "q10_returned_items", "q12_priority_lines",
-    "q13_customer_distribution", "q14_promo_revenue",
-    "q17_small_qty_revenue", "q18_large_orders",
-    "q19_disjunctive_revenue", "q4_order_priority",
-    "q6_forecast_revenue", "q7_volume_shipping", "q8_market_share",
-    "q_array_set_ops", "q_cdc_apply", "q_copurchase_triangles",
-    "q_data_expectations", "q_debounce_events", "q_domain_mixture",
-    "q_event_transitions", "q_funnel", "q_gap_islands",
-    "q_locf_gapfill", "q_mixture_temperature", "q_pack_sequences",
-    "q_partitioned_layout", "q_point_in_time_join",
-    "q_retention_cohorts", "q_rolling_active_users",
-    "q_scd2_customer_orders", "q_session_concurrency",
-    "q_stratified_sample", "q_time_rollup", "q_topk_global",
-    "q_topk_per_group", "q_training_shards",
-    "q_window_distribution", "q_window_values",
-    "stream_dedup_events", "text_decontaminate", "text_novelty",
-    "text_oov_rate", "text_pii_scrub", "text_repetition",
-    "text_unigram_logprob",
-})
-
-# Queries whose RESULT changed after their last green driver row
-# (round-9 rework): their stale green row no longer certifies the
-# current code, so they rejoin the never-verified head.
-_CHANGED_R9: frozenset[str] = frozenset()
-
-# The 50 queries hash-verified green by CORRECTNESS_r09.json — the
-# freshest driver rows, ordered LAST. Re-certified the 6
-# round-4-stale TPC-H rows (q9/q11/q15/q16/q20/q22), 42 of the 46
-# round-5-stale ones, and the 2 round-9 codec additions (gif/flac).
-_DRIVER_GREEN_R9 = frozenset({
-    "ann_topk_matryoshka", "embedding_quantize_int8",
-    "graph_degree_stats", "multimodal_decode_flac",
-    "multimodal_decode_gif", "multimodal_decode_png",
-    "multimodal_decode_wav", "multimodal_resize_png",
-    "q11_important_stock", "q15_top_supplier", "q16_parts_supplier",
-    "q20_part_promotion", "q22_dormant_customers", "q9_product_profit",
-    "q_ab_test_welch", "q_ann_recall", "q_anomaly_mad",
-    "q_attribution_last_touch", "q_benford_check", "q_bootstrap_ci",
-    "q_corr_matrix", "q_coverage_report", "q_crosstab_chisq",
-    "q_dp_count_release", "q_equidepth_histogram_exact",
-    "q_feature_hashing", "q_forecast_seasonal_naive",
-    "q_fuzzy_name_match", "q_gini_concentration",
-    "q_hybrid_retrieval_rrf", "q_interval_overlap_join",
-    "q_knn_classifier", "q_label_balance", "q_market_basket",
-    "q_profile_columns", "q_rfm_segments", "q_skyline_parts",
-    "q_snapshot_diff", "q_time_weighted_avg", "q_ts_similarity_search",
-    "q_user_ltv_decay", "q_weighted_sample", "text_bigram_logprob",
-    "text_bm25", "text_bpe_train", "text_dup_spans", "text_entropy",
-    "text_keywords", "text_readability", "text_zipf_fit",
-})
-
-# Queries whose RESULT changed after their last green driver row
-# (round-10 rework): their stale green row no longer certifies the
-# current code, so they rejoin the never-verified head.
-_CHANGED_R10: frozenset[str] = frozenset()
-
-# The 50 queries hash-verified green by CORRECTNESS_r10.json — the
-# freshest driver rows, ordered LAST. Re-certified the 4 r5-stale
-# rows (q21 + the 3 streaming queries), 45 r6-stale ones, and the
-# round-10 ADPCM codec addition (all 50 rows green: rows/schema/hash
-# matched at sf0.01).
-_DRIVER_GREEN_R10 = frozenset({
-    "ann_topk_bruteforce", "ann_topk_lsh", "grep",
-    "multimodal_decode_adpcm", "multimodal_decode_jpeg",
-    "multimodal_decode_mulaw", "multimodal_decode_video",
-    "q21_waiting_suppliers", "q2_min_cost_supplier",
-    "q_approx_sketches", "q_array_funcs", "q_asof_join",
-    "q_bitwise_agg", "q_collect_sorted", "q_conditional_agg",
-    "q_correlated_exists", "q_date_funcs", "q_date_spine",
-    "q_equidepth_histogram", "q_grouping_sets", "q_json_funcs",
-    "q_like_regexp", "q_map_funcs", "q_minmax_by", "q_null_funcs",
-    "q_pandas_udf_score", "q_percentiles", "q_posexplode",
-    "q_range_join", "q_salted_join", "q_sessionize", "q_set_ops",
-    "q_set_ops_all", "q_stats_moments", "q_string_funcs",
-    "q_string_funcs2", "q_try_funcs", "q_union_by_name",
-    "q_unpivot", "q_upsert", "stream_static_enrich",
-    "stream_stream_interval_join", "stream_trending_topk",
-    "text_bpe_tokens", "text_fingerprint", "text_lang_id",
-    "text_tfidf", "text_token_stats", "text_train_test_split",
-    "wordcount",
-})
-
-# Queries whose RESULT changed after their last green driver row
-# (round-11 rework): their stale green row no longer certifies the
-# current code, so they rejoin the never-verified head.
-_CHANGED_R11: frozenset[str] = frozenset()
-
-# The 50 queries hash-verified green by CORRECTNESS_r11.json — the
-# freshest driver rows, ordered LAST. Re-certified the 3 r6-stale
-# rows (mr_grep/mr_wordcount/q_session_window) and 47 of the 50
-# r7-stale ones (all 50 rows green: rows/schema/hash matched at
-# sf0.01). The 3 r7-stale stragglers (q_sliding_window,
-# stream_window_counts, stream_window_counts_incremental) head the
-# round-12 window.
-_DRIVER_GREEN_R11 = frozenset({
-    "dedup_cluster", "dedup_containment", "dedup_exact",
-    "dedup_fingerprint", "dedup_jaccard_prefix", "dedup_keep_one",
-    "dedup_minhash_estimate", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "dedup_simhash", "dedup_simhash_pairs",
-    "graph_pagerank", "mr_grep", "mr_wordcount", "multimodal_decode",
-    "multimodal_decode_alaw", "multimodal_decode_jpeg_color",
-    "multimodal_decode_jpeg_progressive", "multimodal_features",
-    "multimodal_meta", "q1_pricing_summary", "q1_sql_entry",
-    "q3_shipping_priority", "q5_local_supplier_volume",
-    "q_bucketed_join", "q_corr", "q_csv_roundtrip", "q_cube",
-    "q_distinct_agg", "q_drift_psi", "q_embedding_drift",
-    "q_group_having", "q_histogram", "q_join_anti",
-    "q_join_left_outer", "q_join_semi", "q_json_roundtrip",
-    "q_math_funcs", "q_not_in_nulls", "q_orc_roundtrip",
-    "q_pivot_events", "q_quality_gate", "q_rollup",
-    "q_scalar_subquery", "q_session_window", "q_share_of_total",
-    "q_window_funcs", "q_window_range_frame", "q_window_running",
-    "text_quality",
-})
-
-# Queries whose RESULT changed after their last green driver row
-# (round-12 rework): their stale green row no longer certifies the
-# current code, so they rejoin the never-verified head.
-_CHANGED_R12: frozenset[str] = frozenset()
-
-# The 50 queries hash-verified green by CORRECTNESS_r12.json — the
-# freshest driver rows, ordered LAST. Re-certified the 3 r7-stale
-# stragglers (q_sliding_window, stream_window_counts,
-# stream_window_counts_incremental) plus 47 of the 50 r8-stale rows
-# (all 50 green: rows/schema/hash matched at sf0.01, zero errs). The
-# 3 r8-stale stragglers (q18_large_orders, q19_disjunctive_revenue,
-# stream_dedup_events) follow the round-13 registrations at the
-# stale-first head.
-_DRIVER_GREEN_R12 = frozenset({
-    "ann_topk_ivf", "ann_topk_lsh_multiprobe", "ann_topk_quantized",
-    "dedup_embedding_cosine", "dedup_minhash_keep_one",
-    "dedup_semantic_cluster", "kmeans_embeddings",
-    "q10_returned_items", "q12_priority_lines",
-    "q13_customer_distribution", "q14_promo_revenue",
-    "q17_small_qty_revenue", "q4_order_priority",
-    "q6_forecast_revenue", "q7_volume_shipping", "q8_market_share",
-    "q_array_set_ops", "q_cdc_apply", "q_copurchase_triangles",
-    "q_data_expectations", "q_debounce_events", "q_domain_mixture",
-    "q_event_transitions", "q_funnel", "q_gap_islands",
-    "q_locf_gapfill", "q_mixture_temperature", "q_pack_sequences",
-    "q_partitioned_layout", "q_point_in_time_join",
-    "q_retention_cohorts", "q_rolling_active_users",
-    "q_scd2_customer_orders", "q_session_concurrency",
-    "q_sliding_window", "q_stratified_sample", "q_time_rollup",
-    "q_topk_global", "q_topk_per_group", "q_training_shards",
-    "q_window_distribution", "q_window_values",
-    "stream_window_counts", "stream_window_counts_incremental",
-    "text_decontaminate", "text_novelty", "text_oov_rate",
-    "text_pii_scrub", "text_repetition", "text_unigram_logprob",
-})
-
-# Queries whose RESULT changed after their last green driver row
-# (round-13 rework): their stale green row no longer certifies the
-# current code, so they rejoin the never-verified head.
-_CHANGED_R13: frozenset[str] = frozenset()
-
-# The 50 queries hash-verified green by CORRECTNESS_r13.json — the
-# freshest driver rows, ordered LAST. Re-certified the 4 round-13
-# registrations (q_asof_join_forward, q_rollup_multi_distinct,
-# q_zorder_layout, multimodal_decode_adpcm_multiblock), the 3
-# r8-stale heads (q18_large_orders, q19_disjunctive_revenue,
-# stream_dedup_events) and 43 r9-stale rows (all 50 green:
-# rows/schema/hash matched at sf0.01, zero errs). 7 r9-stale rows
-# remain and head the round-14 stale queue.
-_DRIVER_GREEN_R13 = frozenset({
-    "ann_topk_matryoshka", "embedding_quantize_int8",
-    "graph_degree_stats", "multimodal_decode_adpcm_multiblock",
-    "multimodal_decode_flac", "multimodal_decode_gif",
-    "multimodal_decode_png", "multimodal_decode_wav",
-    "multimodal_resize_png", "q18_large_orders",
-    "q19_disjunctive_revenue", "q_ab_test_welch", "q_ann_recall",
-    "q_anomaly_mad", "q_asof_join_forward",
-    "q_attribution_last_touch", "q_benford_check", "q_bootstrap_ci",
-    "q_corr_matrix", "q_coverage_report", "q_crosstab_chisq",
-    "q_dp_count_release", "q_equidepth_histogram_exact",
-    "q_feature_hashing", "q_forecast_seasonal_naive",
-    "q_fuzzy_name_match", "q_gini_concentration",
-    "q_hybrid_retrieval_rrf", "q_interval_overlap_join",
-    "q_knn_classifier", "q_label_balance", "q_market_basket",
-    "q_profile_columns", "q_rfm_segments",
-    "q_rollup_multi_distinct", "q_skyline_parts", "q_snapshot_diff",
-    "q_time_weighted_avg", "q_ts_similarity_search",
-    "q_user_ltv_decay", "q_weighted_sample", "q_zorder_layout",
-    "stream_dedup_events", "text_bigram_logprob", "text_bm25",
-    "text_dup_spans", "text_entropy", "text_keywords",
-    "text_readability", "text_zipf_fit",
-})
-
-# Queries whose RESULT changed after their last green driver row
-# (round-14 rework): their stale green row no longer certifies the
-# current code, so they rejoin the never-verified head.
-_CHANGED_R14: frozenset[str] = frozenset()
-
-# The 50 queries hash-verified green by CORRECTNESS_r14.json — the
-# freshest driver rows, ordered LAST. Certified the 7 round-14
-# registrations (graph_bfs_hops, q_bloom_prefilter_join,
-# text_collocations, q_window_time_range, multimodal_decode_tiff,
-# multimodal_decode_bmp, stream_sessionize), the 7 r9-stale heads
-# and 36 r10-stale rows (all 50 green: rows/schema/hash matched at
-# sf0.01, zero errs). 14 r10-stale rows remain and head the
-# round-15 stale queue.
-_DRIVER_GREEN_R14 = frozenset({
-    "ann_topk_bruteforce", "ann_topk_lsh", "graph_bfs_hops",
-    "multimodal_decode_adpcm", "multimodal_decode_bmp",
-    "multimodal_decode_jpeg", "multimodal_decode_mulaw",
-    "multimodal_decode_tiff", "multimodal_decode_video",
-    "q11_important_stock", "q15_top_supplier", "q16_parts_supplier",
-    "q20_part_promotion", "q22_dormant_customers",
-    "q9_product_profit", "q_approx_sketches", "q_array_funcs",
-    "q_asof_join", "q_bitwise_agg", "q_bloom_prefilter_join",
-    "q_collect_sorted", "q_conditional_agg", "q_correlated_exists",
-    "q_date_funcs", "q_date_spine", "q_equidepth_histogram",
-    "q_grouping_sets", "q_json_funcs", "q_like_regexp",
-    "q_map_funcs", "q_minmax_by", "q_null_funcs", "q_percentiles",
-    "q_posexplode", "q_range_join", "q_sessionize", "q_set_ops",
-    "q_set_ops_all", "q_stats_moments", "q_string_funcs",
-    "q_string_funcs2", "q_try_funcs", "q_union_by_name",
-    "q_unpivot", "q_upsert", "q_window_time_range",
-    "stream_sessionize", "text_bpe_train", "text_collocations",
-    "wordcount",
-})
-
-# Queries whose RESULT changed after their last green driver row
-# (round-15 rework): their stale green row no longer certifies the
-# current code, so they rejoin the never-verified head.
-_CHANGED_R15: frozenset[str] = frozenset()
-
-# The 50 queries hash-verified green by CORRECTNESS_r15.json — the
-# freshest driver rows, ordered LAST. Certified the 7 round-15
-# registrations (q_lateral_topk, q_bitmap_distinct,
-# text_inverted_index, graph_connected_components,
-# multimodal_decode_tga, multimodal_decode_aiff,
-# stream_stateful_counts), the 14 r10-stale heads and 29 r11-stale
-# rows (all 50 green: rows/schema/hash matched at sf0.01, zero
-# errs). 21 r11-stale rows remain and head the round-16 stale queue.
-_DRIVER_GREEN_R15 = frozenset({
-    "dedup_cluster", "dedup_containment", "dedup_exact",
-    "dedup_fingerprint", "dedup_jaccard_prefix", "dedup_keep_one",
-    "dedup_minhash_estimate", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "dedup_simhash", "dedup_simhash_pairs",
-    "graph_connected_components", "graph_pagerank", "grep",
-    "multimodal_decode", "multimodal_decode_aiff",
-    "multimodal_decode_alaw", "multimodal_decode_jpeg_color",
-    "multimodal_decode_jpeg_progressive", "multimodal_decode_tga",
-    "multimodal_features", "multimodal_meta", "q1_pricing_summary",
-    "q1_sql_entry", "q21_waiting_suppliers", "q2_min_cost_supplier",
-    "q_bitmap_distinct", "q_bucketed_join", "q_corr",
-    "q_csv_roundtrip", "q_drift_psi", "q_histogram",
-    "q_json_roundtrip", "q_lateral_topk", "q_orc_roundtrip",
-    "q_pandas_udf_score", "q_quality_gate", "q_salted_join",
-    "q_share_of_total", "stream_stateful_counts",
-    "stream_static_enrich", "stream_stream_interval_join",
-    "stream_trending_topk", "text_bpe_tokens", "text_fingerprint",
-    "text_inverted_index", "text_lang_id", "text_tfidf",
-    "text_token_stats", "text_train_test_split",
-})
-
-# Queries whose RESULT changed after their last green driver row
-# (round-16 rework): their stale green row no longer certifies the
-# current code, so they rejoin the never-verified head.
-_CHANGED_R16: frozenset[str] = frozenset()
-
-# Round-15 registered the former registration queue (q_lateral_topk,
-# q_bitmap_distinct, text_inverted_index,
-# graph_connected_components, multimodal_decode_tga,
-# multimodal_decode_aiff, stream_stateful_counts) → 221 registered.
-# Round-16 registration queue — gate-ready (oracle constant +
-# driver-grade parity test in tree, sim-registration gate green);
-# registering each is one @register decorator:
-#   text_chunk_windows        (operators/text.py, _CHUNK_ORACLE)
-#   graph_jaccard_neighbors   (operators/clustering.py,
-#                              _JACC_NEIGHBORS_ORACLE)
-#   multimodal_decode_ico     (operators/multimodal.py, _ICO_ORACLE)
-#   q_hll_sketch_rollup       (operators/advanced.py,
-#                              _HLL_ROLLUP_ORACLE)
-#   q_winsorize_extremes      (operators/curation.py,
-#                              _WINSORIZE_ORACLE)
-#   ann_range_search          (operators/similarity.py,
-#                              _RANGE_SEARCH_ORACLE)
-#   stream_cdc_latest         (streaming/events.py,
-#                              _STREAM_CDC_ORACLE)
-# Round-17 registration queue, staged early (same gate status —
-# oracle + driver-grade parity test + sim-registration green at
-# sf0.001/0.01/0.1 and TZ-shifted):
-#   q_weighted_median         (operators/stats.py, _WMEDIAN_ORACLE)
-#   q_merge_intervals         (operators/advanced.py,
-#                              _MERGE_IV_ORACLE)
-#   q_reservoir_sample        (operators/curation.py,
-#                              _RESERVOIR_ORACLE)
-#   q_skew_join_hint          (operators/udf.py, _SKEW_ORACLE)
-#   graph_shortest_paths      (operators/clustering.py, _SP_ORACLE)
-#   multimodal_decode_pcx     (operators/multimodal.py, _PCX_ORACLE)
-#   stream_stream_left_outer  (streaming/joins.py,
-#                              _STREAM_LEFT_OUTER_ORACLE)
-# Round-18 registration queue, staged early (same gate status):
-#   q_cumulative_distinct_users (operators/advanced.py,
-#                              _CUMDIST_ORACLE)
-#   q_incremental_mv_merge    (operators/advanced.py,
-#                              _MV_MERGE_ORACLE)
-#   q_sequence_mining         (operators/advanced.py,
-#                              _SEQ_MINING_ORACLE)
-#   q_rolling_zscore          (operators/advanced.py,
-#                              _ROLLING_Z_ORACLE)
-#   multimodal_decode_pgm     (operators/multimodal.py, _PGM_ORACLE)
-#   stream_stream_full_outer  (streaming/joins.py,
-#                              _STREAM_FULL_OUTER_ORACLE)
-#   graph_k_core              (operators/clustering.py,
-#                              _KCORE_ORACLE)
-
-# Rounds FRESHEST-FIRST with their green sets — the single place a
-# new round is added. _EVER_GREEN and _stale_first both derive from
-# this list, so advancing a round means adding one entry here plus
-# the next _CHANGED constant below (the rotation lint in
-# tests/test_registry_rotation.py enforces both).
-_GREEN_BY_ROUND: list[tuple[int, frozenset]] = [
-    (15, _DRIVER_GREEN_R15),
-    (14, _DRIVER_GREEN_R14),
-    (13, _DRIVER_GREEN_R13),
-    (12, _DRIVER_GREEN_R12),
-    (11, _DRIVER_GREEN_R11),
-    (10, _DRIVER_GREEN_R10),
-    (9, _DRIVER_GREEN_R9),
-    (8, _DRIVER_GREEN_R8),
-    (7, _DRIVER_GREEN_R7),
-    (6, _DRIVER_GREEN_R6),
-    (5, _DRIVER_GREEN_R5),
-    (4, _DRIVER_GREEN_R4),
-    (3, _DRIVER_GREEN_R3),
-    (2, _DRIVER_GREEN_R2),
-]
-
-# Result-changing reworks keyed by the round whose BUILD introduced
-# them (a round-N rework lands before round N's driver run, so a
-# green row from round >= N certifies the new result; an older green
-# row does not).
-_CHANGED_BY_ROUND: dict[int, frozenset] = {
-    8: _CHANGED_R8,
-    9: _CHANGED_R9,
-    10: _CHANGED_R10,
-    11: _CHANGED_R11,
-    12: _CHANGED_R12,
-    13: _CHANGED_R13,
-    14: _CHANGED_R14,
-    15: _CHANGED_R15,
-    16: _CHANGED_R16,
+# Round -> names whose code changed in that round's build. A green
+# row from an earlier round no longer certifies them, so they head
+# the window until a row from that round or later does.
+_RECHECK: dict[int, frozenset[str]] = {
+    16: frozenset({
+        "graph_pagerank", "q_hybrid_retrieval_rrf",
+        "multimodal_decode_jpeg", "multimodal_decode_jpeg_progressive",
+        "multimodal_decode_jpeg_color", "multimodal_decode_video",
+        "multimodal_decode_flac", "multimodal_decode_gif",
+    }),
 }
 
 
-def _ever_green() -> frozenset:
-    """Names whose CURRENT result has at least one green driver row:
-    the union of all green sets, minus each changed set's names that
-    no round at-or-after the change re-certified. Subtracting a raw
-    changed set would let a PRE-change green row count again; the
-    old ``- (_CHANGED_RN - _DRIVER_GREEN_RN)`` form credited only
-    round N itself, permanently pinning a name round N's window
-    missed to the head even after a LATER round certified it."""
-    ever = frozenset().union(*(g for _, g in _GREEN_BY_ROUND))
-    for n, changed in _CHANGED_BY_ROUND.items():
-        recertified = frozenset().union(
-            *(g for m, g in _GREEN_BY_ROUND if m >= n), frozenset()
-        )
-        ever -= changed - recertified
-    return ever
+def _green_rounds(
+    directory: Path, recheck: dict[int, frozenset[str]]
+) -> dict[str, int]:
+    """Name -> round of its freshest CORRECTNESS row whose rows,
+    schema and hash all match. A name ``recheck`` lists for a round
+    after that row has no green round."""
+    fresh: dict[str, int] = {}
+    for path in directory.glob("CORRECTNESS_r[0-9][0-9].json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name, row in json.loads(path.read_text()).items():
+            if row["rows_match"] and row["schema_match"] and row["hash_match"]:
+                fresh[name] = max(rnd, fresh.get(name, 0))
+    for rnd, names in recheck.items():
+        for name in names:
+            if fresh.get(name, 0) < rnd:
+                fresh.pop(name, None)
+    return fresh
 
 
-_EVER_GREEN = _ever_green()
+@functools.cache
+def _rotation() -> dict[str, int]:
+    return _green_rounds(_CORRECTNESS_DIR, _RECHECK)
 
 
-def _stale_first(d: dict) -> dict:
-    # Head: no green driver row certifying current code (new
-    # registrations plus unrecertified _CHANGED names). Then green
-    # groups stalest-first; a query green in multiple rounds sorts
-    # by its FRESHEST row. Dict insertion keeps the FIRST position
-    # for a key, so a head name that also sits in an old green set
-    # stays at the head.
-    current_changed = _CHANGED_BY_ROUND[max(_CHANGED_BY_ROUND)]
-    taken = set(current_changed)
-    groups = []
-    for _, greens in _GREEN_BY_ROUND:  # freshest first
-        grp = greens - taken
-        taken |= grp
-        groups.append(grp)
-    out = {k: v for k, v in d.items() if k not in _EVER_GREEN}
-    for grp in reversed(groups):  # stalest group first
-        for k, v in d.items():
-            if k in grp and k not in out:
-                out[k] = v
-    return out
+def _stale_first(d: dict, rounds: dict[str, int]) -> dict:
+    return dict(sorted(d.items(), key=lambda kv: rounds.get(kv[0], 0)))
 
 
 def all_queries() -> dict[str, QueryFn]:
     load_all()
-    return _stale_first(QUERIES)
+    return _stale_first(QUERIES, _rotation())
 
 
 def all_oracles() -> dict[str, str]:
     load_all()
-    return _stale_first(ORACLE)
+    return _stale_first(ORACLE, _rotation())
 
 
 def bench_query_names() -> list[str]:

@@ -435,8 +435,6 @@ def _events_stream_timeordered(
     sf_dir: str,
     n_files: int = 4,
     sentinel: bool = True,
-    n_sentinels: int = 1,
-    sentinel_types: tuple[str, ...] | None = None,
 ) -> tuple[DataFrame, str]:
     """Streaming DataFrame over the bounded events table staged as
     ``n_files`` TIME-RANGE files replayed one per micro-batch, plus a
@@ -483,62 +481,34 @@ def _events_stream_timeordered(
     for i, f in enumerate(parts):
         os.utime(os.path.join(data_dir, f), (base + 10 * i, base + 10 * i))
     if sentinel:
-        # the flush sentinel(s): far-future rows, schema-identical
+        # the flush sentinel: a far-future row, schema-identical
         # (built FROM the normalized frame so ts carries the same
-        # type), each written as its own file so each forms its own
-        # final micro-batch. Operators whose emission happens one
-        # batch AFTER the watermark advances (stream-stream OUTER
-        # joins: the null-extension of expired state is produced by
-        # the batch that RUNS under the advanced watermark, which the
-        # single batch that carried the advancing row never is) pass
-        # ``n_sentinels=2`` — the first sentinel advances the
-        # watermark, the second triggers the batch that drains the
-        # expired state.
-        # ``sentinel_types``: operators that split the stream into
-        # event_type-filtered branches (stream-stream joins) need one
-        # sentinel row PER branch type — the filters are PUSHED TO
-        # THE SCAN, and a parquet row group whose event_type min/max
-        # is all-NULL is pruned wholesale, so an untyped sentinel
-        # never reaches either branch's watermark node and the global
-        # (min-of-branches) watermark sticks forever (measured: the
-        # sentinel batches report numInputRows = 0).
-        for si in range(n_sentinels):
-            sent_dir = os.path.join(stage, f"sentinel{si}")
-            one = ev.limit(1)
-            sent_rows = None
-            for stype in sentinel_types or (None,):
-                row = one.select(
-                    *[
-                        (
-                            F.lit(_SESSIONIZE_FLUSH_TS).cast("timestamp")
-                            + F.expr(f"INTERVAL {si} SECONDS")
-                        ).alias("ts")
-                        if f.name == "ts"
-                        else F.lit(stype)
-                        .cast(f.dataType)
-                        .alias(f.name)
-                        if f.name == "event_type"
-                        else F.lit(None).cast(f.dataType).alias(f.name)
-                        for f in ev.schema.fields
-                    ]
-                )
-                sent_rows = row if sent_rows is None else sent_rows.unionAll(row)
-            (
-                sent_rows.coalesce(1)
-                .write.mode("overwrite")
-                .parquet(sent_dir)
+        # type), written as its own file so it forms the final
+        # micro-batch.
+        sent_dir = os.path.join(stage, "sentinel")
+        (
+            ev.limit(1)
+            .select(
+                *[
+                    F.lit(_SESSIONIZE_FLUSH_TS).cast("timestamp").alias("ts")
+                    if f.name == "ts"
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in ev.schema.fields
+                ]
             )
-            sent = next(
-                f
-                for f in os.listdir(sent_dir)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            final_path = os.path.join(
-                data_dir, f"part-zz{si}-sentinel.parquet"
-            )
-            shutil.copyfile(os.path.join(sent_dir, sent), final_path)
-            t = base + 10 * (len(parts) + 1 + si)
-            os.utime(final_path, (t, t))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(sent_dir)
+        )
+        sent = next(
+            f
+            for f in os.listdir(sent_dir)
+            if f.startswith("part-") and f.endswith(".parquet")
+        )
+        final_path = os.path.join(data_dir, "part-zz-sentinel.parquet")
+        shutil.copyfile(os.path.join(sent_dir, sent), final_path)
+        t = base + 10 * (len(parts) + 1)
+        os.utime(final_path, (t, t))
     schema = spark.read.parquet(data_dir).schema
     stream = (
         spark.readStream.schema(schema)
@@ -661,96 +631,4 @@ def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = running_counts_stream(stream)
     return _run_update_to_deltas(
         spark, agg, ["event_type"], stage, "mrss_stream_state_"
-    )
-
-
-# Oracle for the UNREGISTERED stream_cdc_latest below (round-16
-# registration queue): identical to q_cdc_apply's batch replay — the
-# streaming state converges to the same latest-op-wins snapshot.
-_STREAM_CDC_ORACLE = """
-WITH changelog AS (
-  SELECT o_custkey AS key, o_orderdate AS ts, o_orderkey AS seq,
-         CASE WHEN o_orderkey % 19 = 0 THEN 'D' ELSE 'U' END AS op,
-         o_totalprice AS payload
-  FROM orders),
-latest AS (
-  SELECT key, op, payload, n_ops FROM (
-    SELECT key, op, payload,
-           ROW_NUMBER() OVER (PARTITION BY key
-                              ORDER BY ts DESC, seq DESC) AS rn,
-           COUNT(*) OVER (PARTITION BY key) AS n_ops
-    FROM changelog) t
-  WHERE rn = 1)
-SELECT c.c_custkey, l.payload AS last_price,
-       CAST(l.n_ops AS BIGINT) AS n_ops
-FROM customer c JOIN latest l ON c.c_custkey = l.key
-WHERE l.op <> 'D'
-"""
-
-
-def stream_cdc_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING CDC apply: the orders changelog replayed as
-    commit-ordered micro-batches with per-key latest-op-wins state —
-    the streaming face of ``q_cdc_apply`` (lakehouse continuous
-    MERGE ingestion), and the first streaming operator over a table
-    other than events.
-
-    State per key is one ``MAX(struct(ts, seq, payload))`` — struct
-    comparison is lexicographic, so the winner is exactly the batch
-    ``ORDER BY ts DESC, seq DESC`` row and arrives associatively
-    (any batch slicing converges to the same struct). Deletes are
-    resolved AT READ (the latest op's key mod) rather than by
-    removing state: a later re-insert for the key must revive it,
-    which dropped state could not. Replay staging mirrors the CDC
-    contract — a changelog arrives in commit order, so files are
-    date-range partitions with pinned mtimes, one per micro-batch.
-    At scale: state is one struct per live key, each batch emits
-    only updated keys through the idempotent delta sink, and the
-    customer join happens once on the final compact snapshot."""
-    from map_reduce_server_spark.tables import load_table
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    pin_utc_session(spark)
-    orders = load_table(spark, sf_dir, "orders")
-    stage = tempfile.mkdtemp(prefix="mrss_stream_cdc_")
-    cleanup_at_exit(stage)
-    data_dir = os.path.join(stage, "in")
-    (
-        orders.repartitionByRange(4, "o_orderdate", "o_orderkey")
-        .write.mode("overwrite")
-        .parquet(data_dir)
-    )
-    parts = sorted(
-        f
-        for f in os.listdir(data_dir)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base = 1_600_000_000
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(data_dir, f), (base + 10 * i,) * 2)
-    schema = spark.read.parquet(data_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(data_dir)
-    )
-    agg = stream.groupBy("o_custkey").agg(
-        F.max(
-            F.struct("o_orderdate", "o_orderkey", "o_totalprice")
-        ).alias("latest"),
-        F.count(F.lit(1)).alias("n_ops"),
-    )
-    snap = _run_update_to_deltas(
-        spark, agg, ["o_custkey"], stage, "mrss_stream_cdc_out_"
-    )
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    return (
-        snap.filter(F.col("latest.o_orderkey") % 19 != 0)
-        .join(cust, snap["o_custkey"] == cust["c_custkey"])
-        .select(
-            "c_custkey",
-            F.col("latest.o_totalprice").alias("last_price"),
-            "n_ops",
-        )
     )

@@ -174,210 +174,3 @@ def stream_stream_interval_join(
     )
     out = _run_to_parquet(joined, "mrss_ssjoin_")
     return _collect_result(spark, out, stage, joined.schema)
-
-
-# Oracle for the UNREGISTERED stream_stream_left_outer below
-# (round-17 registration queue): the final append output of a
-# watermark-flushed streaming LEFT OUTER join on bounded input IS
-# the batch left join — matched rows stream out like the inner
-# join; unmatched clicks null-extend once the watermark proves no
-# purchase can arrive anymore.
-_STREAM_LEFT_OUTER_ORACLE = """
-SELECT a.event_id AS click_id, b.event_id AS purchase_id,
-       a.user_id,
-       CASE WHEN b.event_id IS NULL THEN NULL
-            ELSE (epoch_us(b.ts) - epoch_us(a.ts)) // 1000000
-       END AS delay_sec
-FROM (SELECT * FROM events
-      WHERE event_type = 'click' AND ts IS NOT NULL) a
-LEFT JOIN (SELECT * FROM events
-           WHERE event_type = 'purchase' AND ts IS NOT NULL) b
-  ON a.user_id = b.user_id
- AND b.ts >= a.ts
- AND b.ts <= a.ts + INTERVAL 30 MINUTE
-"""
-
-
-def stream_stream_left_outer(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Watermarked stream-stream LEFT OUTER join: every click,
-    matched to same-user purchases within 30 minutes OR null-extended
-    once it provably cannot convert — the attribution/abandonment
-    pattern (conversion funnels must count the non-converters, which
-    an inner join silently drops).
-
-    State eviction is the whole point: an outer join without
-    two-sided watermarks + a two-sided time bound is rejected by
-    Spark outright, because an unmatched left row can only be emitted
-    when the watermark passes click_ts + 30 min — before that a
-    matching purchase might still arrive, and without the bound that
-    moment never comes (state grows forever). With the bound, a
-    click's state is dropped AND its null-extended row emitted as
-    soon as the watermark proves the window empty — bounded memory
-    at any stream length.
-
-    Bounded-replay physics (the reason for TWO sentinel batches,
-    staged by ``_events_stream_timeordered(n_sentinels=2)``): the
-    null-extension of expired state is produced by a batch RUNNING
-    under the advanced watermark, and the watermark only advances
-    BETWEEN batches — the batch that carried the watermark-advancing
-    row has already run by then. Sentinel 1 advances the watermark
-    past every click's eviction bound; sentinel 2 triggers the batch
-    that drains the expired state. A real deployment needs neither:
-    its stream keeps flowing, and every batch drains whatever the
-    previous batch's data expired. Sentinel clicks are sliced off by
-    the flush-ceiling filter, exactly as stream_sessionize does.
-    """
-    from map_reduce_server_spark.streaming.events import (
-        _SESSIONIZE_FLUSH_TS,
-        _events_stream_timeordered,
-    )
-
-    # TYPED sentinels, one per branch: the event_type filters below
-    # are pushed to the parquet scan, and a scan prunes a sentinel
-    # row group that matches neither type — each branch's watermark
-    # node must see its own far-future row or the global
-    # (min-of-branches) watermark never advances (see the staging's
-    # sentinel_types comment; measured, not hypothetical). Sentinel
-    # rows carry NULL user_id/event_id and are sliced off by the
-    # flush-ceiling filter after the replay.
-    stream, stage = _events_stream_timeordered(
-        spark,
-        sf_dir,
-        n_sentinels=2,
-        sentinel_types=("click", "purchase"),
-    )
-    marked = stream.filter(F.col("ts").isNotNull()).withWatermark(
-        "ts", "1 minute"
-    )
-    clicks = marked.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("click_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = marked.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("click_user") == F.col("user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")
-        ),
-        "left_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("click_user").alias("user_id"),
-        F.expr(
-            "CASE WHEN purchase_id IS NULL THEN NULL "
-            "ELSE (unix_micros(purchase_ts) - unix_micros(click_ts))"
-            " div 1000000 END"
-        ).alias("delay_sec"),
-        "click_ts",
-    )
-    out = _run_to_parquet(joined, "mrss_ssleft_")
-    res = _collect_result(spark, out, stage, joined.schema)
-    # slice off the sentinel clicks (far-future flush rows)
-    return res.filter(
-        F.col("click_ts") < F.lit(_SESSIONIZE_FLUSH_TS).cast("timestamp")
-    ).drop("click_ts")
-
-
-# Oracle for the UNREGISTERED stream_stream_full_outer below
-# (round-18 registration queue): the final append output of a
-# watermark-flushed streaming FULL OUTER join on bounded input IS
-# the batch full join — matched pairs stream out; unmatched rows on
-# EITHER side null-extend once their state expires.
-_STREAM_FULL_OUTER_ORACLE = """
-SELECT a.event_id AS click_id, b.event_id AS purchase_id,
-       COALESCE(a.user_id, b.user_id) AS user_id,
-       CASE WHEN a.event_id IS NULL OR b.event_id IS NULL THEN NULL
-            ELSE (epoch_us(b.ts) - epoch_us(a.ts)) // 1000000
-       END AS delay_sec
-FROM (SELECT * FROM events
-      WHERE event_type = 'click' AND ts IS NOT NULL) a
-FULL JOIN (SELECT * FROM events
-           WHERE event_type = 'purchase' AND ts IS NOT NULL) b
-  ON a.user_id = b.user_id
- AND b.ts >= a.ts
- AND b.ts <= a.ts + INTERVAL 30 MINUTE
-"""
-
-
-def stream_stream_full_outer(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Watermarked stream-stream FULL OUTER join: conversions,
-    abandoned clicks AND orphan purchases (attribution's third
-    population — purchases with no qualifying click are organic /
-    mis-tracked traffic, and dropping them under-reports revenue) in
-    one maintained result.
-
-    Eviction symmetry is the new physics over
-    :func:`stream_stream_left_outer`: BOTH sides' state now carries
-    an emission obligation — a click null-extends when the watermark
-    passes click_ts + 30 min, a purchase when it passes purchase_ts
-    (no earlier click can arrive once the watermark is past it,
-    because the bound looks backward from the purchase). Same
-    bounded-replay staging: typed sentinels (one per branch, or the
-    scan prunes them) and two flush batches (advance, then drain);
-    the sentinel rows themselves null-extend in a full join, so the
-    ceiling slice filters on COALESCE of BOTH event times.
-    """
-    from map_reduce_server_spark.streaming.events import (
-        _SESSIONIZE_FLUSH_TS,
-        _events_stream_timeordered,
-    )
-
-    stream, stage = _events_stream_timeordered(
-        spark,
-        sf_dir,
-        n_sentinels=2,
-        sentinel_types=("click", "purchase"),
-    )
-    marked = stream.filter(F.col("ts").isNotNull()).withWatermark(
-        "ts", "1 minute"
-    )
-    clicks = marked.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("click_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = marked.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("purchase_user"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("click_user") == F.col("purchase_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")
-        ),
-        "full_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.coalesce("click_user", "purchase_user").alias("user_id"),
-        F.expr(
-            "CASE WHEN click_id IS NULL OR purchase_id IS NULL THEN NULL "
-            "ELSE (unix_micros(purchase_ts) - unix_micros(click_ts))"
-            " div 1000000 END"
-        ).alias("delay_sec"),
-        "click_ts",
-        "purchase_ts",
-    )
-    out = _run_to_parquet(joined, "mrss_ssfull_")
-    res = _collect_result(spark, out, stage, joined.schema)
-    flush = F.lit(_SESSIONIZE_FLUSH_TS).cast("timestamp")
-    return res.filter(
-        F.coalesce("click_ts", "purchase_ts") < flush
-    ).drop("click_ts", "purchase_ts")

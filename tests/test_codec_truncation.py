@@ -80,33 +80,3 @@ def test_aiff_truncation():
     f = aiff.encode_pcm16(samples, 44100)
     _sweep(f, aiff.decode_pcm16)
     assert aiff.decode_pcm16(f) == (44100, samples)
-
-
-def test_ico_truncation():
-    from map_reduce_server_spark.functions import ico
-
-    pix = bytes((x * 11 + 5) % 256 for x in range(48))
-    small = bytes(range(16))
-    f = ico.encode_gray8([(8, 6, pix), (4, 4, small)])
-    _sweep(f, ico.decode_gray8)
-    assert ico.decode_gray8(f) == [(8, 6, pix), (4, 4, small)]
-
-
-def test_pcx_truncation():
-    from map_reduce_server_spark.functions import pcx
-
-    pix = bytes((7 * i) % 256 for i in range(48))
-    for bpl in (8, 10):
-        f = pcx.encode_gray8(8, 6, pix, bytes_per_line=bpl)
-        _sweep(f, pcx.decode_gray8)
-        assert pcx.decode_gray8(f) == (8, 6, pix)
-
-
-def test_pgm_truncation():
-    from map_reduce_server_spark.functions import pgm
-
-    pix = bytes((3 * i) % 256 for i in range(48))
-    for am in (False, True):
-        f = pgm.encode_gray8(8, 6, pix, ascii_mode=am)
-        _sweep(f, pgm.decode_gray8)
-        assert pgm.decode_gray8(f) == (8, 6, pix)

@@ -1807,7 +1807,7 @@ def test_fuzz_bitmap_distinct(spark, duck, rows):
 # DuckDB's mandatory ON TRUE) across join type (INNER drops
 # childless outers, LEFT null-extends them), sort direction, k, and
 # independent outer/inner predicates — the decorrelation plane the
-# staged q_lateral_topk pins at one configuration. The inner ORDER BY
+# registered q_lateral_topk pins at one configuration. The inner ORDER BY
 # always ends in the unique o_orderkey, so the k-cut is
 # engine-independent.
 
@@ -2914,7 +2914,7 @@ def test_fuzz_bloom_prefilter_invisible(spark, opred, bits):
 # threshold (graph density: minsup 4 thins the co-purchase graph to
 # near-empty at this SF — including the EMPTY-graph case, where both
 # sides agree on the degenerate (NULL, 0) seed row) and the hop bound
-# (recursion depth). The staged graph_bfs_hops pins one configuration;
+# (recursion depth). The registered graph_bfs_hops pins one configuration;
 # this family certifies the core across the parameter plane.
 
 
@@ -2949,7 +2949,7 @@ def _bfs_oracle_sql(minsup: int, hops: int) -> str:
     minsup=st.integers(2, 4),
     hops=st.integers(1, 5),
 )
-@example(minsup=2, hops=4)  # the staged query's exact configuration
+@example(minsup=2, hops=4)  # the registered query's exact configuration
 @example(minsup=4, hops=3)  # near-empty graph
 def test_fuzz_bfs_vs_recursive_cte(spark, duck, minsup, hops):
     from map_reduce_server_spark.operators.clustering import (

@@ -1154,9 +1154,7 @@ def test_adpcm_multiblock_spark_path(spark, sf_small):
     header-only padded final block at n=37, exercising cross-block
     index carry and the fact-trimmed tail) inside mapInPandas, run
     the shared adpcm_stats decode stage, and check every row against
-    a driver-side replay of the closed-loop reconstruction. Kept
-    UNREGISTERED (round-10 verdict task 2: no new driver queries
-    while the rotation tail re-certifies)."""
+    a driver-side replay of the closed-loop reconstruction."""
     from map_reduce_server_spark.functions import adpcm
     from map_reduce_server_spark.operators.multimodal import adpcm_stats
 
@@ -1448,62 +1446,6 @@ def test_aiff_decode_matches_oracle(spark, sf_small):
     assert df.count() == 500
 
 
-def test_ico_codec_roundtrip_and_strictness():
-    """Unit round-trip: a two-entry grayscale ICO survives
-    encode/decode in directory order; PNG-compressed entries,
-    cursor-type directories, and dimension mismatches refuse."""
-    import hashlib
-    import struct
-
-    import pytest as _pytest
-
-    from map_reduce_server_spark.functions import ico
-
-    pix = b"".join(hashlib.md5(t).digest() for t in (b"a", b"b", b"c"))
-    small = hashlib.md5(b"z").digest()
-    f = ico.encode_gray8([(8, 6, pix), (4, 4, small)])
-    assert ico.decode_gray8(f) == [(8, 6, pix), (4, 4, small)]
-    # single-entry file too
-    f1 = ico.encode_gray8([(4, 4, small)])
-    assert ico.decode_gray8(f1) == [(4, 4, small)]
-    # PNG-compressed entry refuses
-    png_body = b"\x89PNG\r\n\x1a\n" + b"\x00" * 20
-    hdr = struct.pack("<HHH", 0, 1, 1) + struct.pack(
-        "<BBBBHHII", 4, 4, 0, 0, 1, 8, len(png_body), 6 + 16
-    )
-    with _pytest.raises(NotImplementedError):
-        ico.decode_gray8(hdr + png_body)
-    # cursor directories (type 2) refuse
-    with _pytest.raises(ValueError):
-        ico.decode_gray8(struct.pack("<HHH", 0, 2, 1) + b"\x00" * 16)
-    # directory/DIB dimension mismatch refuses: patch entry width
-    patched = bytearray(f1)
-    patched[6] = 5  # ICONDIRENTRY width byte
-    with _pytest.raises(ValueError):
-        ico.decode_gray8(bytes(patched))
-    # odd (non-doubled) DIB height refuses
-    patched = bytearray(f1)
-    struct.pack_into("<i", patched, 6 + 16 + 8, 7)  # biHeight
-    with _pytest.raises(ValueError):
-        ico.decode_gray8(bytes(patched))
-
-
-def test_ico_decode_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED multimodal_decode_ico
-    (round-16 registration queue): directory walk + doubled-height
-    DIB decode to the md5-derived entry-0 pixel statistics."""
-    from map_reduce_server_spark.operators.multimodal import (
-        _ICO_ORACLE,
-        multimodal_decode_ico,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = multimodal_decode_ico(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _ICO_ORACLE, sf_small)
-    assert ok, msg
-    assert df.count() == 500
-
-
 def test_tga_rle_roundtrip_hypothesis():
     """Property: any byte raster round-trips through the RLE encoder
     in both origins — exercises packet edges (128-runs, runs
@@ -1530,193 +1472,3 @@ def test_tga_rle_roundtrip_hypothesis():
         assert tga.decode_gray8(f) == (width, height, raw)
 
     check()
-
-
-def test_pcx_codec_roundtrip_and_strictness():
-    """Unit round-trip: two-bit-tagged RLE grayscale survives
-    encode/decode, bright literals (>= 0xC0) are escaped as runs of
-    one, padded lines truncate back to width, the trailing VGA
-    identity palette is verified, and the strict envelope refuses
-    multi-plane/non-RLE files."""
-    import hashlib
-    import struct
-
-    import pytest as _pytest
-
-    from map_reduce_server_spark.functions import pcx
-
-    pix = b"".join(hashlib.md5(t).digest() for t in (b"a", b"b", b"c"))
-    for bpl in (8, 10, 12):
-        f = pcx.encode_gray8(8, 6, pix, bytes_per_line=bpl)
-        assert pcx.decode_gray8(f) == (8, 6, pix)
-    # the tag-collision domain: every literal >= 0xC0 must survive
-    bright = bytes(range(0xC0, 0x100)) + bytes(range(0xB0, 0xC0))
-    f = pcx.encode_gray8(8, 10, bright)
-    assert pcx.decode_gray8(f) == (8, 10, bright)
-    # runs longer than the 6-bit count must split into legal packets
-    wide = bytes([5] * 100 + [1] * 28)
-    f = pcx.encode_gray8(8, 16, wide)
-    assert pcx.decode_gray8(f) == (8, 16, wide)
-    # hand-packed wire golden: 2x1 raster [0xAA, 0xAA] at bpl=2 is
-    # exactly one run packet (0xC2, 0xAA) + palette
-    hdr = struct.pack(
-        "<BBBBHHHHHH48sBBHHHH54s",
-        0x0A, 5, 1, 8, 0, 0, 1, 0, 72, 72, b"\x00" * 48,
-        0, 1, 2, 1, 0, 0, b"\x00" * 54,
-    )
-    pal = bytes([0x0C]) + bytes(
-        v for g in range(256) for v in (g, g, g)
-    )
-    golden = hdr + bytes([0xC2, 0xAA]) + pal
-    assert pcx.encode_gray8(2, 1, b"\xaa\xaa", bytes_per_line=2) == golden
-    assert pcx.decode_gray8(golden) == (2, 1, b"\xaa\xaa")
-    # strictness: multi-plane and non-RLE refuse
-    bad_planes = bytearray(golden); bad_planes[65] = 3
-    with _pytest.raises(NotImplementedError):
-        pcx.decode_gray8(bytes(bad_planes))
-    bad_enc = bytearray(golden); bad_enc[2] = 0
-    with _pytest.raises(NotImplementedError):
-        pcx.decode_gray8(bytes(bad_enc))
-    # a run crossing the scan-line grid refuses: 2x2 at bpl=2 with
-    # one 4-byte run
-    hdr2 = struct.pack(
-        "<BBBBHHHHHH48sBBHHHH54s",
-        0x0A, 5, 1, 8, 0, 0, 1, 1, 72, 72, b"\x00" * 48,
-        0, 1, 2, 1, 0, 0, b"\x00" * 54,
-    )
-    with _pytest.raises(ValueError):
-        pcx.decode_gray8(hdr2 + bytes([0xC4, 0xFF]) + pal)
-    # a non-identity palette refuses
-    bad_pal = bytearray(golden); bad_pal[-1] ^= 1
-    with _pytest.raises(NotImplementedError):
-        pcx.decode_gray8(bytes(bad_pal))
-
-
-def test_pcx_rle_roundtrip_hypothesis():
-    """Property: any byte raster round-trips through the two-bit-tag
-    RLE encoder at any legal padding — exercises 63-count packet
-    edges, bright-literal escapes, and pad interaction the fixed
-    goldens miss."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from map_reduce_server_spark.functions import pcx
-
-    run = st.tuples(st.integers(0, 255), st.integers(1, 70))
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        runs=st.lists(run, min_size=1, max_size=6),
-        width=st.integers(1, 40),
-        pad=st.integers(0, 2),
-    )
-    def check(runs, width, pad):
-        raw = b"".join(bytes([v]) * n for v, n in runs)
-        height = max(1, len(raw) // width)
-        raw = raw[: width * height].ljust(width * height, b"\x00")
-        bpl = width + (width & 1) + 2 * pad
-        f = pcx.encode_gray8(width, height, raw, bytes_per_line=bpl)
-        assert pcx.decode_gray8(f) == (width, height, raw)
-
-    check()
-
-
-def test_pcx_decode_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED multimodal_decode_pcx
-    (round-17 registration queue): padded-line RLE decode lands on
-    the identical md5-derived pixel statistics."""
-    from map_reduce_server_spark.operators.multimodal import (
-        _PCX_ORACLE,
-        multimodal_decode_pcx,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = multimodal_decode_pcx(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _PCX_ORACLE, sf_small)
-    assert ok, msg
-
-
-def test_pgm_codec_roundtrip_and_strictness():
-    """Unit round-trip: both P5 and P2 survive encode/decode, header
-    comments are honored, exactly one whitespace byte separates
-    maxval from a binary raster (rasters STARTING with
-    whitespace-valued pixels survive), the ASCII raster requires its
-    terminator, and the strict envelope refuses non-255 maxval only
-    for structurally complete files."""
-    import hashlib
-
-    import pytest as _pytest
-
-    from map_reduce_server_spark.functions import pgm
-
-    pix = b"".join(hashlib.md5(t).digest() for t in (b"a", b"b", b"c"))
-    for am in (False, True):
-        f = pgm.encode_gray8(8, 6, pix, ascii_mode=am)
-        assert pgm.decode_gray8(f) == (8, 6, pix)
-        assert b"#" in f  # our own files carry a comment line
-    # raster whose first pixels are whitespace byte values: a
-    # whitespace-eating separator parser would shear the raster
-    tricky = bytes([0x0A, 0x20, 0x09, 0x0D] + [7] * 44)
-    f = pgm.encode_gray8(8, 6, tricky)
-    assert pgm.decode_gray8(f)[2] == tricky
-    # hand-packed wire golden with comments in awkward places
-    golden = b"P5\n# c1\n4 # c2\n2\n255\n" + bytes(range(8))
-    assert pgm.decode_gray8(golden) == (4, 2, bytes(range(8)))
-    # P2 golden with multi-space separators
-    g2 = b"P2\n2 2\n255\n0  255\n12 34\n"
-    assert pgm.decode_gray8(g2) == (2, 2, bytes([0, 255, 12, 34]))
-    # truncating the final ASCII sample's digits must NOT decode
-    f2 = pgm.encode_gray8(2, 1, b"\x05\xff", ascii_mode=True)
-    assert f2.endswith(b"5 255\n")
-    with _pytest.raises(ValueError):
-        pgm.decode_gray8(f2[:-1])  # drop the terminator
-    with _pytest.raises(ValueError):
-        pgm.decode_gray8(f2[:-2])  # "255" -> "25", unterminated
-    # complete non-255 maxval: legal but unsupported
-    with _pytest.raises(NotImplementedError):
-        pgm.decode_gray8(b"P5\n2 1\n100\n\x01\x02")
-    # trailing junk refuses
-    with _pytest.raises(ValueError):
-        pgm.decode_gray8(b"P5\n2 1\n255\n\x01\x02junk")
-    # P2 sample above maxval... above one byte refuses
-    with _pytest.raises(ValueError):
-        pgm.decode_gray8(b"P2\n2 1\n255\n1 300\n")
-
-
-def test_pgm_roundtrip_hypothesis():
-    """Property: any raster round-trips through both P5 and P2 —
-    exercises whitespace-valued pixels, multi-digit ASCII samples,
-    and dimension edges the fixed goldens miss."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from map_reduce_server_spark.functions import pgm
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        width=st.integers(1, 24),
-        height=st.integers(1, 12),
-        data=st.binary(min_size=0, max_size=288),
-        am=st.booleans(),
-    )
-    def check(width, height, data, am):
-        raw = data[: width * height].ljust(width * height, b"\x00")
-        f = pgm.encode_gray8(width, height, raw, ascii_mode=am)
-        assert pgm.decode_gray8(f) == (width, height, raw)
-
-    check()
-
-
-def test_pgm_decode_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED multimodal_decode_pgm
-    (round-18 registration queue): P5/P2 alternating decode lands on
-    the identical md5-derived pixel statistics."""
-    from map_reduce_server_spark.operators.multimodal import (
-        _PGM_ORACLE,
-        multimodal_decode_pgm,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = multimodal_decode_pgm(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _PGM_ORACLE, sf_small)
-    assert ok, msg

@@ -24,11 +24,46 @@ def test_query_matches_oracle(spark, sf_small, name):
     assert ok, f"{name}: {msg}"
 
 
-def test_every_query_runs(spark, sf_small):
-    """Queries without oracles still must run and return a schema."""
-    for name, fn in registry.all_queries().items():
-        df = fn(spark, sf_small)
-        assert df.columns, f"{name} returned no columns"
+def test_every_query_has_oracle():
+    """Every registered query runs under ``test_query_matches_oracle``
+    only if every one has an oracle."""
+    assert set(registry.QUERIES) == set(registry.ORACLE)
+
+
+# Public (spark, sf_dir) functions that are shared stages, not
+# queries: several registered dedup queries build on each.
+_QUERY_SHAPED_HELPERS = {
+    "map_reduce_server_spark.operators.dedup.minhash_wide",
+    "map_reduce_server_spark.operators.dedup.simhash_halves",
+}
+
+
+def test_no_unregistered_query_functions():
+    """A query lands registered or not at all: every public
+    ``(spark, sf_dir)`` function in ``operators/`` and ``streaming/``
+    is a registered query or a listed shared stage."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    from map_reduce_server_spark import operators, streaming
+
+    registered = set(registry.QUERIES.values())
+    unregistered = set()
+    for pkg in (operators, streaming):
+        for info in pkgutil.iter_modules(pkg.__path__):
+            mod = importlib.import_module(f"{pkg.__name__}.{info.name}")
+            for name, obj in vars(mod).items():
+                if (
+                    not name.startswith("_")
+                    and inspect.isfunction(obj)
+                    and obj.__module__ == mod.__name__
+                    and list(inspect.signature(obj).parameters)
+                    == ["spark", "sf_dir"]
+                    and obj not in registered
+                ):
+                    unregistered.add(f"{mod.__name__}.{name}")
+    assert unregistered == _QUERY_SHAPED_HELPERS
 
 
 def test_entry_smoke(spark):

@@ -298,11 +298,6 @@ _GLOBAL_WINDOW_ALLOWLIST = {
     # row_number over the character-pair vocabulary, bounded by
     # |alphabet|^2 regardless of corpus size
     "text_bpe_train",
-    # running sum over the per-day rollup — days-cardinality input
-    # regardless of corpus size (documented in the docstring); entry
-    # added at staging time so the round-18 registration cannot trip
-    # the lint by surprise
-    "q_cumulative_distinct_users",
 }
 
 
@@ -468,7 +463,7 @@ def test_knn_classifier_no_python_eval(spark, sf_small):
 
 
 def test_lateral_topk_decorrelates_to_window_group_limit(spark, sf_small):
-    """The staged q_lateral_topk must decorrelate: WindowGroupLimit
+    """q_lateral_topk must decorrelate: WindowGroupLimit
     (per-key limit pushed below the exchange) + broadcast of the
     25-row nation dimension, never a nested-loop / cartesian
     re-execution per outer row."""
@@ -482,7 +477,7 @@ def test_lateral_topk_decorrelates_to_window_group_limit(spark, sf_small):
 
 
 def test_bitmap_distinct_partial_aggregates(spark, sf_small):
-    """The staged q_bitmap_distinct's level-1 bit_or must plan as a
+    """q_bitmap_distinct's level-1 bit_or must plan as a
     partial+final hash aggregate — the map side collapses each
     partition's ids into local words BEFORE the shuffle, which is
     the whole point of the bitmap formulation — with no Expand node
@@ -495,35 +490,11 @@ def test_bitmap_distinct_partial_aggregates(spark, sf_small):
 
 
 def test_inverted_index_no_raw_token_shuffle(spark, sf_small):
-    """The staged text_inverted_index must aggregate partially before
+    """text_inverted_index must aggregate partially before
     each exchange (raw exploded token occurrences never shuffle) and
     stay out of Python row UDFs."""
     from map_reduce_server_spark.operators.text import text_inverted_index
 
     plan = explain_str(text_inverted_index(spark, sf_small))
     assert "partial_count" in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_jaccard_neighbors_wedge_is_equi_join(spark, sf_small):
-    """The staged graph_jaccard_neighbors must enumerate wedges via
-    an equi-join on the shared endpoint — never a cartesian / nested
-    loop over node pairs."""
-    from map_reduce_server_spark.operators.clustering import (
-        graph_jaccard_neighbors,
-    )
-
-    plan = explain_str(graph_jaccard_neighbors(spark, sf_small))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_chunk_windows_has_no_exchange(spark, sf_small):
-    """The staged text_chunk_windows is per-document: its plan must
-    contain no shuffle exchange at all (the chunk-index explode is
-    narrow) and no Python row evaluation."""
-    from map_reduce_server_spark.operators.text import text_chunk_windows
-
-    plan = explain_str(text_chunk_windows(spark, sf_small))
-    assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan

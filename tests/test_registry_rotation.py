@@ -1,136 +1,88 @@
-"""Rotation-bookkeeping lint: the registry must always carry a
-``_DRIVER_GREEN_R{N}`` frozenset for the LATEST driver correctness
-round, equal to that round's green rows.
+"""The verification rotation: ``all_queries()`` orders the registry
+stalest-first from the committed ``CORRECTNESS_rNN.json`` files, so
+the driver's next window covers the queries that have gone longest
+without a green row.
 
-Why this test exists: the stale-first ordering in
-``registry._stale_first`` only advances if each round's green set is
-recorded as a constant. Forgetting it cost a verdict item in rounds
-6, 7, 8, and 9 — the next driver window would silently re-check ~46
-just-certified queries instead of the stalest ones. This test makes
-the omission a local pytest failure instead of a judge finding.
-
-No Spark session needed — pure JSON + module attributes.
+No Spark session needed — pure JSON and module attributes.
 """
 
 from __future__ import annotations
 
-import glob
 import json
-import os
-import re
 
 from map_reduce_server_spark import registry
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+NAMES = ["a", "b", "c", "d", "e"]
 
 
-def _green_names(path: str) -> frozenset[str]:
-    """Names whose driver row fully certifies the query: rows and
-    schema matched, no error, and the value hash matched (or the
-    query is a documented rows-only check, recorded as null)."""
-    with open(path) as f:
-        rows = json.load(f)
-    return frozenset(
-        name
-        for name, r in rows.items()
-        if r.get("rows_match")
-        and r.get("schema_match")
-        and not r.get("err")
-        and r.get("hash_match") in (True, None)
-    )
+def _write(directory, rnd, rows):
+    """One driver round: ``rows`` maps name -> (rows, schema, hash)
+    match flags."""
+    (directory / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps({
+        name: {
+            "rows_match": r, "schema_match": s, "hash_match": h,
+            "spark_rows": 1, "oracle_rows": 1, "err": None,
+        }
+        for name, (r, s, h) in rows.items()
+    }))
 
 
-def _latest_round() -> tuple[int, frozenset[str]]:
-    best_n, best_greens = -1, frozenset()
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        n = int(m.group(1))
-        greens = _green_names(path)
-        if greens and n > best_n:
-            best_n, best_greens = n, greens
-    return best_n, best_greens
+GREEN = (True, True, True)
 
 
-def test_latest_round_has_green_constant():
-    n, greens = _latest_round()
-    assert n >= 2, "no CORRECTNESS_r*.json with green rows found"
-    const = getattr(registry, f"_DRIVER_GREEN_R{n}", None)
-    assert const is not None, (
-        f"CORRECTNESS_r{n:02d}.json exists with {len(greens)} green rows "
-        f"but registry.py has no _DRIVER_GREEN_R{n} frozenset — without "
-        "it the next driver window re-checks just-certified queries "
-        "instead of the stalest ones. Add the constant and thread it "
-        "through _EVER_GREEN and _stale_first."
-    )
-    assert const == greens, (
-        f"_DRIVER_GREEN_R{n} does not match CORRECTNESS_r{n:02d}.json's "
-        f"green rows: missing={sorted(greens - const)}, "
-        f"extra={sorted(const - greens)}"
-    )
+def _order(directory, names=NAMES, recheck=None):
+    rounds = registry._green_rounds(directory, recheck or {})
+    return list(registry._stale_first(dict.fromkeys(names), rounds))
 
 
-def test_latest_green_constant_is_threaded_through_rotation():
-    """The constant must actually participate in the ordering: every
-    name in it must sort AFTER any name whose freshest green row is
-    older (unless re-marked changed), i.e. the latest greens occupy
-    the registry tail, not the driver window."""
-    n, greens = _latest_round()
-    changed = getattr(registry, f"_CHANGED_R{n + 1}", frozenset())
-    effective = greens - changed
+def test_stalest_first(tmp_path):
+    """Never-green names lead, then by the round of the freshest row
+    that matches on rows, schema AND hash."""
+    _write(tmp_path, 1, dict.fromkeys("abcd", GREEN))
+    _write(tmp_path, 2, {"d": GREEN, "a": (True, True, False)})
+    _write(tmp_path, 3, {"b": GREEN, "c": (True, False, True)})
+    _write(tmp_path, 4, {"d": (False, True, True)})
+    # e never green; a and c freshest green in r1; d in r2; b in r3
+    assert _order(tmp_path) == ["e", "a", "c", "d", "b"]
+
+
+def test_ties_keep_registration_order(tmp_path):
+    _write(tmp_path, 4, dict.fromkeys(NAMES, GREEN))
+    assert _order(tmp_path) == NAMES
+    assert _order(tmp_path, NAMES[::-1]) == NAMES[::-1]
+
+
+def test_recheck_name_heads_until_later_green_row(tmp_path):
+    _write(tmp_path, 1, dict.fromkeys(NAMES, GREEN))
+    _write(tmp_path, 2, {"c": GREEN, "d": GREEN})
+    # a green row from the recheck round itself certifies the change
+    assert _order(tmp_path, recheck={2: {"c"}}) == ["a", "b", "e", "c", "d"]
+    # an older one does not: c goes back to the head
+    assert _order(tmp_path, recheck={3: {"c"}}) == ["c", "a", "b", "e", "d"]
+    # until a later round certifies it, which moves it to the tail
+    _write(tmp_path, 3, {"c": GREEN})
+    assert _order(tmp_path, recheck={3: {"c"}}) == ["a", "b", "e", "d", "c"]
+
+
+def test_no_files_gives_registration_order(tmp_path):
+    assert _order(tmp_path) == NAMES
+    assert _order(tmp_path, recheck={16: {"c"}}) == NAMES
+
+
+def test_committed_files():
+    """The committed rounds: the names re-checked for round 16 lead in
+    registration order, and round 16's greens form the tail."""
     order = list(registry.all_queries())
-    positions = {name: i for i, name in enumerate(order)}
-    tail = sorted(positions[name] for name in effective if name in positions)
-    # The freshest greens must be a contiguous tail of the ordering.
-    expected_tail = list(range(len(order) - len(tail), len(order)))
-    assert tail == expected_tail, (
-        f"_DRIVER_GREEN_R{n} names are not ordered last by "
-        "_stale_first — the constant exists but is not threaded "
-        "through _EVER_GREEN/_stale_first"
+    assert order == list(registry.all_oracles())
+    assert sorted(order) == sorted(registry.QUERIES)
+    recheck = registry._RECHECK[16]
+    assert order[: len(recheck)] == [n for n in registry.QUERIES if n in recheck]
+    rows = json.loads(
+        (registry._CORRECTNESS_DIR / "CORRECTNESS_r16.json").read_text()
     )
-
-
-def test_changed_constant_exists_for_current_round():
-    """Reworks in the round under construction must have a
-    _CHANGED_R{N+1} home so a result-changing edit can be recorded
-    the moment it lands."""
-    n, _ = _latest_round()
-    assert hasattr(registry, f"_CHANGED_R{n + 1}"), (
-        f"registry.py must define _CHANGED_R{n + 1} (frozenset, may be "
-        "empty) so round-{0} reworks rejoin the never-verified head".format(
-            n + 1
-        )
-    )
-
-
-def test_changed_name_recertified_by_later_round_counts_green(monkeypatch):
-    """Review r10: the old `- (_CHANGED_RN - _DRIVER_GREEN_RN)` form
-    credited only round N's own re-certification — a name changed in
-    round N but certified by a LATER round stayed pinned to the
-    never-verified head forever. _ever_green must credit any green
-    round at-or-after the change."""
-    # 'text_bm25' is green in r5 and r9. Changed in r8, not in r8's
-    # greens, but r9 re-certified it → must be ever-green.
-    monkeypatch.setitem(registry._CHANGED_BY_ROUND, 8, frozenset({"text_bm25"}))
-    assert "text_bm25" in registry._ever_green()
-
-
-def test_changed_name_never_recertified_stays_head(monkeypatch):
-    """A changed name no later round certified must NOT count green
-    (its only green rows predate the change)."""
-    # 'mr_wordcount' is green through r11 only (not r12..r15); mark
-    # it changed in r12. (Fixture rotates when the driver re-certifies
-    # it: r13 swapped q_sliding_window → q18_large_orders, r14 swapped
-    # q18_large_orders → dedup_cluster, r16 swapped dedup_cluster →
-    # mr_wordcount after r15 re-certified dedup_cluster.)
-    monkeypatch.setitem(
-        registry._CHANGED_BY_ROUND, 12, frozenset({"mr_wordcount"})
-    )
-    eg = registry._ever_green()
-    assert "mr_wordcount" not in eg
-    # _stale_first reads the module-level cache — refresh it for the
-    # simulated scenario, restored by monkeypatch afterwards
-    monkeypatch.setattr(registry, "_EVER_GREEN", eg)
-    order = list(registry._stale_first(dict.fromkeys(eg | {"mr_wordcount"})))
-    assert order[0] == "mr_wordcount"
+    greens = {n for n, r in rows.items() if all(r[k] for k in (
+        "rows_match", "schema_match", "hash_match"))}
+    assert len(greens) == 50
+    assert set(order[-len(greens):]) == greens
+    # the files are read once per process
+    assert registry._rotation() is registry._rotation()

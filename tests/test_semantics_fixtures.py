@@ -844,9 +844,8 @@ def test_rollup_multi_distinct_matches_oracle(spark, sf_small):
 
 
 def test_asof_join_forward_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered forward as-of query
-    (round-13 registration queue, same holdback as
-    q_rollup_multi_distinct): the MIN-over-following-range rendering
+    """Gate-grade parity for the registered forward as-of query:
+    the MIN-over-following-range rendering
     must match DuckDB's native forward ASOF JOIN."""
     from map_reduce_server_spark.operators.advanced import (
         _ASOF_FWD_ORACLE,
@@ -1103,656 +1102,3 @@ def test_bitmap_distinct_words_merge_losslessly(spark, sf_small):
     )
     got = {(r.event_type, r.n_distinct) for r in merged.collect()}
     assert got == whole
-
-
-def test_chunk_windows_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED text_chunk_windows
-    (round-16 registration queue): overlapping token windows with
-    identical boundary arithmetic on both engines."""
-    from map_reduce_server_spark.operators.text import (
-        _CHUNK_ORACLE,
-        _CHUNK_S,
-        _CHUNK_W,
-        text_chunk_windows,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = text_chunk_windows(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _CHUNK_ORACLE, sf_small)
-    assert ok, msg
-    rows = df.collect()
-    assert rows
-    by_doc: dict[int, list] = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    for doc, ch in by_doc.items():
-        ch.sort(key=lambda r: r.chunk_idx)
-        # contiguous indices from 0; only the tail chunk may be short
-        assert [r.chunk_idx for r in ch] == list(range(len(ch))), doc
-        assert all(r.n_tokens == _CHUNK_W for r in ch[:-1]), doc
-        assert 1 <= ch[-1].n_tokens <= _CHUNK_W, doc
-        # stride coverage: every token index falls in some window
-        last = ch[-1]
-        total = last.chunk_idx * _CHUNK_S + last.n_tokens
-        assert all(
-            len(r.chunk_text.split(" ")) == r.n_tokens for r in ch
-        ), doc
-        assert total >= len(ch[0].chunk_text.split(" ")), doc
-
-
-def test_graph_jaccard_neighbors_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED graph_jaccard_neighbors
-    (round-16 registration queue): wedge-enumerated common-neighbor
-    Jaccard with degree-derived union sizes."""
-    from map_reduce_server_spark.operators.clustering import (
-        _JACC_NEIGHBORS_ORACLE,
-        graph_jaccard_neighbors,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = graph_jaccard_neighbors(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _JACC_NEIGHBORS_ORACLE, sf_small)
-    assert ok, msg
-    rows = df.collect()
-    assert rows
-    for r in rows:
-        assert r.part_a < r.part_b
-        assert 0.0 < r.jaccard <= 1.0
-
-
-def test_hll_sketch_rollup_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_hll_sketch_rollup
-    (round-16 registration queue): per-nation DataSketches HLL
-    sketches unioned to region level must estimate within 3 sigma of
-    the exact counts (the boolean the oracle asserts literally)."""
-    from map_reduce_server_spark.operators.advanced import (
-        _HLL_ROLLUP_ORACLE,
-        q_hll_sketch_rollup,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_hll_sketch_rollup(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _HLL_ROLLUP_ORACLE, sf_small)
-    assert ok, msg
-    rows = df.collect()
-    assert len(rows) == 5  # one row per region
-    assert all(r.est_within_3rsd for r in rows)
-
-
-def test_hll_sketch_union_equals_direct_sketch(spark, sf_small):
-    """Mergeability of the sketch itself: unioning per-nation
-    sketches must estimate the same value as one direct region-level
-    sketch over raw rows — the property that lets per-shard sketches
-    replace rescans."""
-    import pyspark.sql.functions as F
-
-    from map_reduce_server_spark.tables import load_table
-
-    cust = load_table(spark, sf_small, "customer")
-    nat = load_table(spark, sf_small, "nation").select(
-        "n_nationkey", "n_regionkey"
-    )
-    joined = cust.join(
-        F.broadcast(nat), cust["c_nationkey"] == nat["n_nationkey"]
-    )
-    direct = {
-        r.n_regionkey: r.est
-        for r in joined.groupBy("n_regionkey")
-        .agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg("c_custkey", F.lit(14))
-            ).alias("est")
-        )
-        .collect()
-    }
-    merged = {
-        r.n_regionkey: r.est
-        for r in joined.groupBy("c_nationkey", "n_regionkey")
-        .agg(F.hll_sketch_agg("c_custkey", F.lit(14)).alias("sk"))
-        .groupBy("n_regionkey")
-        .agg(
-            F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est")
-        )
-        .collect()
-    }
-    assert direct == merged
-
-
-def test_winsorize_extremes_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_winsorize_extremes
-    (round-16 registration queue): rank-based [p1, p99] cutoffs and
-    the exact clipped sum."""
-    from map_reduce_server_spark.operators.curation import (
-        _WINSORIZE_ORACLE,
-        q_winsorize_extremes,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_winsorize_extremes(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _WINSORIZE_ORACLE, sf_small)
-    assert ok, msg
-    r = df.collect()[0]
-    assert r.cut_low < r.cut_high
-    # ~1% clipped each side, and the winsorized sum is bounded by
-    # the cutoffs times the row count
-    assert 0 < r.n_clipped_low <= r.n_rows * 0.011
-    assert 0 < r.n_clipped_high <= r.n_rows * 0.011
-    assert r.cut_low * r.n_rows <= r.winsorized_sum <= r.cut_high * r.n_rows
-
-
-def test_ann_range_search_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED ann_range_search
-    (round-16 registration queue): the threshold filter must compare
-    the raw double and agree exactly with DuckDB's."""
-    from map_reduce_server_spark.operators.similarity import (
-        _RANGE_SEARCH_ORACLE,
-        _RANGE_THETA,
-        ann_range_search,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = ann_range_search(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _RANGE_SEARCH_ORACLE, sf_small)
-    assert ok, msg
-    rows = df.collect()
-    assert rows
-    assert all(r.cos_sim >= _RANGE_THETA - 1e-6 for r in rows)
-    assert all(r.query_id != r.neighbor_id for r in rows)
-
-
-def test_weighted_median_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_weighted_median
-    (round-17 registration queue): the filtered-MIN selection must
-    land on DuckDB's first-crossing value exactly."""
-    from map_reduce_server_spark.operators.stats import (
-        _WMEDIAN_ORACLE,
-        q_weighted_median,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_weighted_median(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _WMEDIAN_ORACLE, sf_small)
-    assert ok, msg
-    rows = {r.l_returnflag: r for r in df.collect()}
-    assert set(rows) == {"A", "N", "R"}
-    # the median is a data value inside the group's range, and at
-    # least half the group's weight sits at or below it
-    for r in rows.values():
-        assert r.weighted_median is not None and r.total_weight > 0
-
-
-def test_weighted_median_is_weight_midpoint(spark, sf_small):
-    """First-principles check: cumulative weight at the reported
-    median crosses half the total, and strictly-below stays under
-    half (the defining property of the lower weighted median)."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_server_spark.operators.stats import q_weighted_median
-    from map_reduce_server_spark.tables import load_table
-
-    med = {
-        r.l_returnflag: r.weighted_median
-        for r in q_weighted_median(spark, sf_small).collect()
-    }
-    li = load_table(spark, sf_small, "lineitem")
-    for flag, m in med.items():
-        g = li.filter(F.col("l_returnflag") == flag)
-        tot = g.agg(F.sum("l_quantity")).first()[0]
-        at_or_below = (
-            g.filter(F.col("l_extendedprice") <= m)
-            .agg(F.sum("l_quantity"))
-            .first()[0]
-        )
-        below = (
-            g.filter(F.col("l_extendedprice") < m)
-            .agg(F.sum("l_quantity"))
-            .first()[0]
-        ) or 0.0
-        assert at_or_below * 2 >= tot
-        assert below * 2 < tot
-
-
-def test_merge_intervals_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_merge_intervals
-    (round-17 registration queue): the running-max island cut must
-    agree with DuckDB under duplicate timestamps and contained
-    intervals."""
-    from map_reduce_server_spark.operators.advanced import (
-        _MERGE_IV_ORACLE,
-        q_merge_intervals,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_merge_intervals(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _MERGE_IV_ORACLE, sf_small)
-    assert ok, msg
-    rows = df.collect()
-    assert rows
-    # every merged span is at least one interval long (300 s) and
-    # coverage is bounded by span count x longest span
-    for r in rows:
-        assert r.max_interval_sec >= 300
-        assert r.covered_sec >= r.n_intervals * 300
-        assert r.covered_sec <= r.n_intervals * r.max_interval_sec
-
-
-def test_merge_intervals_contained_interval_fixture(spark):
-    """A span fully inside its predecessor must NOT reopen an island
-    (the lag(e)-vs-running-max trap), and touching endpoints merge."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [
-        # island 1: long interval, then one CONTAINED inside it,
-        # then one TOUCHING its end exactly (s == prev_max merges)
-        ("u1", 1, base),
-        ("u1", 2, base + dt.timedelta(seconds=30)),
-        ("u1", 3, base + dt.timedelta(minutes=5, seconds=30)),
-        # island 2: strictly past the merged end
-        ("u1", 4, base + dt.timedelta(minutes=20)),
-        # other user: independent single island
-        ("u2", 5, base),
-    ]
-    spark_df = spark.createDataFrame(
-        rows, "user_id string, event_id long, ts timestamp"
-    )
-    iv = spark_df.select(
-        "user_id",
-        "event_id",
-        F.col("ts").alias("s"),
-        F.expr("ts + INTERVAL 5 MINUTES").alias("e"),
-    )
-    # replay the operator's sweep on the fixture (same expressions
-    # as q_merge_intervals' island cut)
-    from pyspark.sql import Window
-
-    order = Window.partitionBy("user_id").orderBy("s", "event_id")
-    prev_max = order.rowsBetween(Window.unboundedPreceding, -1)
-    fl = iv.select(
-        "user_id",
-        "event_id",
-        "s",
-        "e",
-        F.when(F.col("s") <= F.max("e").over(prev_max), 0)
-        .otherwise(1)
-        .alias("new_i"),
-    )
-    isl = fl.select(
-        "user_id",
-        F.sum("new_i")
-        .over(order.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("island"),
-    )
-    per_user = {
-        r.user_id: r.n
-        for r in isl.groupBy("user_id")
-        .agg(F.countDistinct("island").alias("n"))
-        .collect()
-    }
-    assert per_user == {"u1": 2, "u2": 1}
-
-
-def test_reservoir_sample_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_reservoir_sample
-    (round-17 registration queue): bottom-k md5-uniform keys per
-    source, bit-identical ranks on both engines."""
-    from map_reduce_server_spark.operators.curation import (
-        _RSV_K,
-        _RESERVOIR_ORACLE,
-        q_reservoir_sample,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_reservoir_sample(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _RESERVOIR_ORACLE, sf_small)
-    assert ok, msg
-    rows = df.collect()
-    assert rows
-    per_src = {}
-    for r in rows:
-        per_src.setdefault(r.source, []).append(r)
-    for src, rs in per_src.items():
-        assert len(rs) <= _RSV_K
-        assert len({r.doc_id for r in rs}) == len(rs)
-
-
-def test_reservoir_sample_is_mergeable(spark, sf_small):
-    """The mergeability claim in the docstring, executed: the
-    bottom-k of a partition union equals re-taking the bottom-k of
-    the per-partition bottom-k sets."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_server_spark.functions.hashing import uniform01
-    from map_reduce_server_spark.operators.curation import _RSV_K
-    from map_reduce_server_spark.tables import load_table
-
-    docs = load_table(spark, sf_small, "documents")
-    keyed = docs.select(
-        "source", "doc_id", uniform01("rsv", F.col("doc_id")).alias("u")
-    )
-    direct = {
-        (r.source, r.doc_id)
-        for r in keyed.sort("u", "doc_id").limit(_RSV_K).collect()
-    }
-    # split by doc parity, reservoir each half, merge, re-take k
-    half_a = keyed.filter(F.col("doc_id") % 2 == 0).sort("u", "doc_id").limit(_RSV_K)
-    half_b = keyed.filter(F.col("doc_id") % 2 == 1).sort("u", "doc_id").limit(_RSV_K)
-    merged = {
-        (r.source, r.doc_id)
-        for r in half_a.unionAll(half_b).sort("u", "doc_id").limit(_RSV_K).collect()
-    }
-    assert direct == merged
-
-
-def test_skew_join_hint_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_skew_join_hint
-    (round-17 registration queue): the staged skewed fact joined
-    under the MERGE hint must equal the plain-join aggregate —
-    skew handling is result-invisible by construction."""
-    from map_reduce_server_spark.operators.udf import (
-        _SKEW_ORACLE,
-        q_skew_join_hint,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_skew_join_hint(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _SKEW_ORACLE, sf_small)
-    assert ok, msg
-
-
-def test_shortest_paths_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED graph_shortest_paths
-    (round-17 registration queue): the min-parent-tree paths must
-    equal the oracle's replay of the same tree from its recursive
-    hops CTE."""
-    from map_reduce_server_spark.operators.clustering import (
-        _SP_ORACLE,
-        graph_shortest_paths,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = graph_shortest_paths(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _SP_ORACLE, sf_small)
-    assert ok, msg
-    rows = df.collect()
-    assert rows
-    for r in rows:
-        ids = r.path.split(",")
-        # path length = hops + 1, ends at the node, starts at seed
-        assert len(ids) == r.hops + 1
-        assert ids[-1] == str(r.part_id)
-
-
-def test_shortest_paths_min_parent_replay(spark):
-    """Random small graph: paths must equal a Python BFS + min-parent
-    replay — hop-minimal AND choosing the smallest predecessor at
-    every step, not just any shortest path."""
-    import random
-
-    from map_reduce_server_spark.operators.clustering import shortest_paths
-
-    rng = random.Random(23)
-    n = 14
-    und = {
-        tuple(sorted((rng.randrange(n), rng.randrange(n))))
-        for _ in range(22)
-    }
-    und = sorted((a, b) for a, b in und if a != b)
-    seed = min(min(e) for e in und)
-    # Python replay
-    adj: dict[int, set] = {}
-    for a, b in und:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    hops = {seed: 0}
-    frontier = [seed]
-    max_hops = 4
-    for h in range(1, max_hops + 1):
-        nxt = sorted(
-            {v for u in frontier for v in adj[u] if v not in hops}
-        )
-        for v in nxt:
-            hops[v] = h
-        frontier = nxt
-    parent = {
-        v: min(p for p in adj[v] if hops.get(p, 99) == h - 1)
-        for v, h in hops.items()
-        if h > 0
-    }
-    def path(v):
-        chain = [v]
-        while chain[0] != seed:
-            chain.insert(0, parent[chain[0]])
-        return ",".join(str(x) for x in chain)
-    expected = {(v, h, path(v)) for v, h in hops.items()}
-    edges = spark.createDataFrame(und, ["u", "v"])
-    got = {
-        (r.node, r.hops, r.path)
-        for r in shortest_paths(edges, max_hops).collect()
-    }
-    assert got == expected
-
-
-def test_cumulative_distinct_users_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED
-    q_cumulative_distinct_users (round-18 registration queue): the
-    first-occurrence prefix sum must equal the expanding-frame
-    distinct count the oracle derives the same way."""
-    from map_reduce_server_spark.operators.advanced import (
-        _CUMDIST_ORACLE,
-        q_cumulative_distinct_users,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_cumulative_distinct_users(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _CUMDIST_ORACLE, sf_small)
-    assert ok, msg
-    rows = sorted(df.collect(), key=lambda r: r.day_num)
-    # the defining identities: cumulative is non-decreasing, equals
-    # the running sum of arrivals, and ends at the total user count
-    running = 0
-    for r in rows:
-        running += r.n_new
-        assert r.cum_users == running
-        assert r.n_new <= r.n_active
-    from pyspark.sql import functions as F
-
-    from map_reduce_server_spark.tables import load_table
-
-    total = (
-        load_table(spark, sf_small, "events")
-        .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        .select("user_id")
-        .distinct()
-        .count()
-    )
-    assert rows[-1].cum_users == total
-
-
-def test_incremental_mv_merge_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_incremental_mv_merge
-    (round-18 registration queue): merged base+delta partials must
-    equal the full recompute — the defining property of incremental
-    view maintenance."""
-    from map_reduce_server_spark.operators.advanced import (
-        _MV_MERGE_ORACLE,
-        q_incremental_mv_merge,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_incremental_mv_merge(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _MV_MERGE_ORACLE, sf_small)
-    assert ok, msg
-
-
-def test_sequence_mining_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_sequence_mining
-    (round-18 registration queue): triple support from the path-regex
-    probe must match DuckDB's identical lattice."""
-    from map_reduce_server_spark.operators.advanced import (
-        _SEQ_MINING_ORACLE,
-        q_sequence_mining,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_sequence_mining(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _SEQ_MINING_ORACLE, sf_small)
-    assert ok, msg
-    rows = {(r.t1, r.t2, r.t3): r.n_users for r in df.collect()}
-    assert rows
-    # support monotonicity (Apriori property, order-3 -> order-2
-    # prefix): a triple's support cannot exceed its prefix pair's.
-    # Derive pair support directly from the same path table logic.
-    from pyspark.sql import functions as F
-
-    from map_reduce_server_spark.operators.advanced import _SEQ_TYPES
-    from map_reduce_server_spark.tables import load_table
-
-    ev = load_table(spark, sf_small, "events")
-    mapping = F.create_map(
-        *[F.lit(x) for pair in _SEQ_TYPES for x in pair]
-    )
-    paths = (
-        ev.filter(
-            F.col("ts").isNotNull()
-            & F.col("user_id").isNotNull()
-            & F.col("event_type").isin([t for t, _ in _SEQ_TYPES])
-        )
-        .select(
-            "user_id", "ts", "event_id",
-            mapping[F.col("event_type")].alias("c"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.concat_ws(
-                "",
-                F.array_sort(
-                    F.collect_list(F.struct("ts", "event_id", "c"))
-                ).getField("c"),
-            ).alias("path")
-        )
-    )
-    import re
-
-    path_list = [r.path for r in paths.collect()]
-    for (t1, t2, t3), n in rows.items():
-        pair = sum(
-            1 for p in path_list if re.search(f"{t1}.*{t2}", p)
-        )
-        assert n <= pair, (t1, t2, t3)
-
-
-def test_sequence_mining_subsequence_fixture(spark):
-    """Hand-built check: interleaving noise must not break
-    containment, and REVERSED order must not count (the regex is a
-    subsequence test, not a bag test)."""
-    import datetime as dt
-    import tempfile
-
-    from map_reduce_server_spark.operators.advanced import (
-        q_sequence_mining,
-    )
-
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [
-        # user 1: s ... e ... c ... p  (s->c->p holds with noise)
-        (1, base, 1, "signup"),
-        (2, base + dt.timedelta(minutes=1), 1, "error"),
-        (3, base + dt.timedelta(minutes=2), 1, "click"),
-        (4, base + dt.timedelta(minutes=3), 1, "purchase"),
-        # user 2: p ... c ... s (REVERSE order only)
-        (5, base, 2, "purchase"),
-        (6, base + dt.timedelta(minutes=1), 2, "click"),
-        (7, base + dt.timedelta(minutes=2), 2, "signup"),
-    ]
-    d = tempfile.mkdtemp()
-    _write_events(spark, d, rows)
-    got = {
-        (r.t1, r.t2, r.t3): r.n_users
-        for r in q_sequence_mining(spark, d).collect()
-    }
-    assert got.get(("s", "c", "p")) == 1  # user 1 only
-    assert ("p", "c", "s") in got  # user 2's reverse chain
-    assert got[("p", "c", "s")] == 1
-    assert got.get(("s", "e", "c")) == 1  # noise chain is itself a seq
-
-
-def test_rolling_zscore_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_rolling_zscore
-    (round-18 registration queue): decimal-exact rolling sufficient
-    statistics must land on identical z-scores."""
-    from map_reduce_server_spark.operators.advanced import (
-        _ROLLING_Z_ORACLE,
-        _RZ_W,
-        q_rolling_zscore,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_rolling_zscore(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _ROLLING_Z_ORACLE, sf_small)
-    assert ok, msg
-    rows = df.collect()
-    assert rows
-    # a population-σ z-score of the window's own member is bounded
-    # by sqrt(n-1) (single-outlier extremal configuration)
-    bound = (_RZ_W - 1) ** 0.5 + 1e-9
-    assert all(abs(r.z) <= bound for r in rows)
-
-
-def test_k_core_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED graph_k_core (round-18
-    registration queue): iterative peeling must land on the unrolled
-    oracle's fixpoint (monotonicity makes any unroll >= the peel
-    count exact)."""
-    from map_reduce_server_spark.operators.clustering import (
-        _KCORE_K,
-        _KCORE_ORACLE,
-        graph_k_core,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = graph_k_core(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _KCORE_ORACLE, sf_small)
-    assert ok, msg
-    # the defining invariant: every survivor keeps >= k neighbors
-    # INSIDE the core
-    assert all(r.core_degree >= _KCORE_K for r in df.collect())
-
-
-def test_k_core_matches_python_replay(spark):
-    """Random graphs: the distributed peel must equal a plain Python
-    peeling replay — survivors AND their in-core degrees."""
-    import random
-
-    from map_reduce_server_spark.operators.clustering import k_core
-
-    rng = random.Random(31)
-    for trial in range(3):
-        n = 16
-        und = {
-            tuple(sorted((rng.randrange(n), rng.randrange(n))))
-            for _ in range(24 + 6 * trial)
-        }
-        und = sorted((a, b) for a, b in und if a != b)
-        k = 2 + trial % 2
-        adj = {}
-        for a, b in und:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-        while True:
-            drop = [v for v, s in adj.items() if len(s) < k]
-            if not drop:
-                break
-            for v in drop:
-                for m in adj[v]:
-                    adj[m].discard(v)
-                del adj[v]
-        expected = {(v, len(s)) for v, s in adj.items()}
-        edges = spark.createDataFrame(und, ["u", "v"])
-        got = {
-            (r.node, r.core_degree)
-            for r in k_core(edges, k, 20).collect()
-        }
-        assert got == expected, (trial, k)

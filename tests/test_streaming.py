@@ -65,150 +65,3 @@ def test_stream_stateful_counts_matches_oracle(spark, sf_small):
     ok, msg = compare_to_oracle(df, _STREAM_STATEFUL_ORACLE, sf_small)
     assert ok, msg
     assert df.count() >= 1
-
-
-def test_stream_cdc_latest_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED stream_cdc_latest
-    (round-16 registration queue): per-key MAX(struct) streaming
-    state over the commit-ordered replay must converge to the batch
-    latest-op-wins snapshot, deletes resolved at read."""
-    from map_reduce_server_spark.streaming.events import (
-        _STREAM_CDC_ORACLE,
-        stream_cdc_latest,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = stream_cdc_latest(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _STREAM_CDC_ORACLE, sf_small)
-    assert ok, msg
-    assert df.count() >= 1
-
-
-def test_stream_stream_left_outer_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED stream_stream_left_outer
-    (round-17 registration queue): the watermark-flushed streaming
-    LEFT OUTER join's final append output must equal the batch left
-    join — null-extended non-converters included."""
-    from map_reduce_server_spark.streaming.joins import (
-        _STREAM_LEFT_OUTER_ORACLE,
-        stream_stream_left_outer,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = stream_stream_left_outer(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _STREAM_LEFT_OUTER_ORACLE, sf_small)
-    assert ok, msg
-    rows = df.collect()
-    # the LEFT semantics actually exercised: some clicks convert,
-    # some null-extend
-    assert any(r.purchase_id is None for r in rows)
-    assert any(r.purchase_id is not None for r in rows)
-    assert all(
-        r.delay_sec is None or 0 <= r.delay_sec <= 1800 for r in rows
-    )
-
-
-def test_stream_stream_left_outer_evicts_state(spark, sf_small):
-    """The bounded-memory claim, asserted from the runtime: join
-    state must actually be REMOVED as the watermark advances (not
-    accumulated until the end), and the typed flush sentinels must
-    advance the watermark past every real event — the two physics
-    the operator's docstring stakes out."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from map_reduce_server_spark.streaming.events import (
-        _events_stream_timeordered,
-    )
-
-    stream, stage = _events_stream_timeordered(
-        spark, sf_small, n_sentinels=2, sentinel_types=("click", "purchase")
-    )
-    marked = stream.filter(F.col("ts").isNotNull()).withWatermark(
-        "ts", "1 minute"
-    )
-    clicks = marked.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("click_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = marked.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("click_user") == F.col("user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")
-        ),
-        "left_outer",
-    )
-    out = tempfile.mkdtemp()
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out, "data"))
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        progress = q.recentProgress
-    finally:
-        q.stop()
-    removed = sum(
-        so["numRowsRemoved"]
-        for p in progress
-        for so in p["stateOperators"]
-    )
-    assert removed > 0, "watermark never evicted any join state"
-    # the typed sentinels advanced the watermark into the far future,
-    # draining (almost) all state: only the 2x2 sentinel rows
-    # themselves may remain
-    final_state = sum(
-        so["numRowsTotal"] for so in progress[-1]["stateOperators"]
-    )
-    assert final_state <= 4, final_state
-    # mid-replay batches evict too — state is bounded DURING the
-    # stream, not only at the flush
-    mid_removed = sum(
-        so["numRowsRemoved"]
-        for p in progress[1:-2]
-        for so in p["stateOperators"]
-    )
-    assert mid_removed > 0, "no eviction before the flush sentinels"
-
-
-def test_stream_stream_full_outer_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED stream_stream_full_outer
-    (round-18 registration queue): symmetric watermark eviction must
-    null-extend BOTH unmatched populations to exactly the batch full
-    join."""
-    from map_reduce_server_spark.streaming.joins import (
-        _STREAM_FULL_OUTER_ORACLE,
-        stream_stream_full_outer,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = stream_stream_full_outer(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _STREAM_FULL_OUTER_ORACLE, sf_small)
-    assert ok, msg
-    rows = df.collect()
-    # all three populations exist: conversions, abandoned clicks,
-    # orphan purchases
-    assert any(r.click_id is not None and r.purchase_id is not None for r in rows)
-    assert any(r.purchase_id is None for r in rows)
-    assert any(r.click_id is None for r in rows)
-    # no row is null on both sides, and delays only on matches
-    assert all(r.click_id is not None or r.purchase_id is not None for r in rows)
-    assert all(
-        (r.delay_sec is not None)
-        == (r.click_id is not None and r.purchase_id is not None)
-        for r in rows
-    )
