@@ -52,16 +52,24 @@ def test_ties_keep_registration_order(tmp_path):
     assert _order(tmp_path, NAMES[::-1]) == NAMES[::-1]
 
 
-def test_recheck_name_heads_until_later_green_row(tmp_path):
+def test_changed_name_recertified_by_later_round_counts_green(tmp_path):
+    """A re-check name counts green again once a row from its re-check
+    round or any later round certifies it."""
     _write(tmp_path, 1, dict.fromkeys(NAMES, GREEN))
     _write(tmp_path, 2, {"c": GREEN, "d": GREEN})
     # a green row from the recheck round itself certifies the change
     assert _order(tmp_path, recheck={2: {"c"}}) == ["a", "b", "e", "c", "d"]
-    # an older one does not: c goes back to the head
-    assert _order(tmp_path, recheck={3: {"c"}}) == ["c", "a", "b", "e", "d"]
-    # until a later round certifies it, which moves it to the tail
+    # a green row from a later round does too, moving c to the tail
     _write(tmp_path, 3, {"c": GREEN})
     assert _order(tmp_path, recheck={3: {"c"}}) == ["a", "b", "e", "d", "c"]
+
+
+def test_changed_name_never_recertified_stays_head(tmp_path):
+    """A re-check name whose only green rows predate its change heads
+    the order, ahead of names that were never green."""
+    _write(tmp_path, 1, dict.fromkeys("abcd", GREEN))
+    _write(tmp_path, 2, {"c": GREEN, "d": GREEN})
+    assert _order(tmp_path, recheck={3: {"c"}}) == ["c", "e", "a", "b", "d"]
 
 
 def test_no_files_gives_registration_order(tmp_path):
