@@ -24,8 +24,7 @@ first with implicit (0, 0) initial state, so the tests translate
 nibble order and seed its state from the block header.
 
 Scope is honest: mono 16-bit IMA ADPCM only; stereo interleave and
-perceptual codecs (mp3/ogg) stay env-gated in
-:mod:`..operators.multimodal`.
+perceptual codecs (mp3/ogg) are out of scope.
 """
 
 from __future__ import annotations

@@ -10,8 +10,8 @@ fccHandler ``MJPG``), built from struct alone.
 Scope is honest: single video stream, grayscale baseline-JPEG
 frames, no audio track, no ``idx1`` index (readers stream ``movi``
 sequentially without one), no OpenDML extensions. Anything else
-raises. Perceptual/inter-frame codecs (H.264, VP9, ...) stay
-env-gated in :mod:`..operators.multimodal`.
+raises. Perceptual/inter-frame codecs (H.264, VP9, ...) are out of
+scope.
 """
 
 from __future__ import annotations

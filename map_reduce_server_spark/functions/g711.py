@@ -24,8 +24,7 @@ European telephony sibling) is implemented alongside with the same
 closed-form discipline — and without mu-law's negative-zero quirk,
 its codebook is invertible on all 256 codes. Scope is honest: mono
 G.711 only; IMA ADPCM lives in its own module (:mod:`.adpcm`) and
-perceptual codecs (mp3/ogg) stay env-gated in
-:mod:`..operators.multimodal`.
+perceptual codecs (mp3/ogg) are out of scope.
 """
 
 from __future__ import annotations

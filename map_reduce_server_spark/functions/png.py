@@ -7,10 +7,9 @@ DEFLATE decompression and scanline unfiltering, not a byte-derived
 fake. Scope is honest: 8-bit truecolor RGB (color type 2), ALL five
 scanline filter types 0–4 on decode (the encoder emits 0, but
 externally produced PNGs routinely use Average/Paeth), no
-interlacing. Anything else raises. WAV audio (``wavcodec.py``) and
-baseline grayscale JPEG (``jpeg.py``) have their own real codecs;
-the remaining modalities (compressed audio, video) keep their
-documented env-gated stubs in :mod:`..operators.multimodal`.
+interlacing. Anything else raises. Every other format the
+multimodal queries decode has its own real codec module alongside
+this one.
 """
 
 from __future__ import annotations

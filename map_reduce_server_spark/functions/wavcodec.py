@@ -5,8 +5,8 @@ stdlib ``wave`` module plus ``struct`` — so the audio half of the
 multimodal pipeline can exercise a REAL codec path too: real RIFF
 header, fmt/data chunks, frame accounting, 16-bit little-endian PCM
 unpacking. Scope is honest: mono 16-bit PCM (what the synthetic
-corpus produces); anything else raises. Compressed audio (mp3/ogg)
-keeps its documented env-gated stub in ``..operators.multimodal``.
+corpus produces); anything else raises. Perceptual audio (mp3/ogg)
+is out of scope.
 """
 
 from __future__ import annotations

@@ -27,7 +27,7 @@ def _glob_in(directory: str, pattern: str) -> list[str]:
 
 
 def write_numbered_text(
-    df: DataFrame, output_dir: str, pre_finalize=None, n_parts=None
+    df: DataFrame, output_dir: str, n_parts=None
 ) -> list[str]:
     """Write a single-string-column DataFrame as text files named
     ``outputfile{NN}`` — exactly ONE per partition, numbered by
@@ -51,23 +51,9 @@ def write_numbered_text(
     would run its stages once for the count and again for the write,
     and the two independently-planned runs can even disagree on the
     partition count — fabricating surplus empty files.
-
-    ``pre_finalize`` (optional callable) runs AFTER the distributed
-    write action completes but BEFORE the destination is touched —
-    the hook for any post-action validation a caller wants between
-    the write and the visible rename. If it raises, the staging
-    directory is removed and any previous output files are left
-    intact, so a failed job never leaves complete-looking but
-    data-missing output behind.
     """
     staging = os.path.join(output_dir, "_staging")
     df.write.mode("overwrite").text(staging)
-    if pre_finalize is not None:
-        try:
-            pre_finalize()
-        except BaseException:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
     os.makedirs(output_dir, exist_ok=True)
     # a previous wider run's outputfileNN must not survive a narrower
     # re-run — a glob consumer would silently mix stale and new data

@@ -73,7 +73,7 @@ def doc_shingle_arrays(
     The documents scan is widened first: tokenize + shingling is the
     dedup family's dominant narrow work, and a one-row-group parquet
     file would otherwise run it on a single core (see
-    ``tables.widen_small_scan``).
+    ``tables.load_table``).
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
     with_toks = docs.select("doc_id", word_tokens_col().alias("ts"))
@@ -141,7 +141,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NOT widened (round 15, measured): the scan feeds straight into a
     groupBy whose exchange already redistributes every row, and the
-    only narrow work is hashing — widen_small_scan here just moves
+    only narrow work is hashing — widening here just moves
     the full text payload through a second exchange (0.36 s -> 0.77 s
     at sf0.1). Same verdict for dedup_fingerprint / dedup_keep_one."""
     docs = load_table(spark, sf_dir, "documents")

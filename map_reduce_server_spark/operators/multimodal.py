@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque binary payloads + typed
-metadata + Pandas-UDF decode stages.
+metadata + Python decode stages over Arrow.
 
-Eight wire formats are REAL end to end — pure numpy/stdlib codecs run
+Twelve wire formats are REAL end to end — pure numpy/stdlib codecs run
 inside Arrow-batched ``mapInPandas`` stages and are value-checked by
 oracles that recompute pixel/sample statistics from the md5 hex the
 files are built from:
@@ -27,25 +27,38 @@ files are built from:
   polynomial predictors, Rice-coded residuals, CRC-8/CRC-16 and
   audio-MD5 integrity, all verified on decode;
 - Motion-JPEG AVI video (:mod:`..functions.avi`): RIFF 'AVI '
-  framing over per-frame JPEGs, stride frame sampling.
+  framing over per-frame JPEGs, stride frame sampling;
+- TIFF, BMP and TGA (:mod:`..functions.tiff`, ``.bmp``, ``.tga``):
+  tag-directory offsets, bottom-up padded rows, run-length packets;
+- AIFF (:mod:`..functions.aiff`): big-endian IFF chunks, 80-bit
+  extended sample rate.
 
-What still needs codec libraries the container lacks — perceptual
-audio (mp3/ogg), inter-frame video (H.264) — stays a deterministic
-stub (documented NotImplementedError for real decode, a
-byte-derived fake for tests). The Spark-side plumbing is
-real throughout: BinaryType columns, metadata structs, declared
-output schemas.
+Every codec leg is the same two-stage plan built from one row-wise
+Arrow stage (:func:`_rowwise`): its SQL hex recipe feeds a plain
+``hex -> bytes`` encoder that yields a BinaryType ``payload``, a plain
+``bytes -> tuple`` stats function decodes it, and a Spark projection
+does the rounding. Formats that need codec libraries this project
+does not ship — perceptual audio (mp3/ogg), inter-frame video
+(H.264) — have no query. ``multimodal_decode``/``_features``/``_meta``
+run the same plumbing over a synthetic 32-byte payload.
 
 NULL policy shared by every stage and oracle twin: a NULL text has
 no payload (md5(NULL) is NULL in both engines), so every
-payload-derived field is NULL — the worker must propagate None, not
-crash, and the oracles derive their per-row constants (byte_len,
-width, framerate, ...) from the payload expression so they go NULL
-on the same rows.
+payload-derived field is NULL — :func:`_rowwise` emits NULL outputs
+for a NULL input instead of crashing, and the oracles derive their
+per-row constants (byte_len, width, framerate, ...) from the payload
+expression so they go NULL on the same rows.
+
+Scan width: six heavy legs (jpeg, jpeg_progressive, jpeg_color, video,
+gif, flac) load ``documents`` with ``widen=True``. Their Python decode
+otherwise runs in the single task a one-row-group scan yields
+(jpeg_color 8.4 -> 1.5 s, video 10.5 -> 1.7 s at sf0.1 on local[32]);
+the light legs measured a wash or a loss and stay unwidened.
 """
 
 from __future__ import annotations
 
+import struct
 from collections.abc import Iterator
 
 import pandas as pd
@@ -70,11 +83,112 @@ from map_reduce_server_spark.registry import register
 from map_reduce_server_spark.tables import load_table
 
 
-def _nn(fn):
-    """None-propagating wrapper for batch ``map`` lambdas: the oracle
-    twins emit NULL statistics for a NULL payload, so the worker must
-    too instead of crashing the whole query on ``len(None)``."""
-    return lambda v: None if v is None else fn(v)
+def _rowwise(df: DataFrame, cols: list[str], fn, schema: str) -> DataFrame:
+    """The one row-wise Arrow stage every codec leg runs through.
+
+    ``cols`` are SQL expressions over ``df``; each row's values go to
+    the plain function ``fn(*values) -> tuple``, whose fields fill the
+    DDL ``schema`` after the ``doc_id`` this stage passes through. A
+    NULL input yields NULL in every output field (the oracle twins'
+    md5(NULL) behavior), so no ``fn`` ever sees None."""
+    names = ["doc_id"] + [field.split()[0] for field in schema.split(",")]
+    nulls = (None,) * (len(names) - 1)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame.from_records(
+                [
+                    (row[0], *(nulls if None in row[1:] else fn(*row[1:])))
+                    for row in pdf.itertuples(index=False, name=None)
+                ],
+                columns=names,
+            )
+
+    return df.selectExpr("doc_id", *cols).mapInPandas(
+        run, schema=f"doc_id bigint, {schema}"
+    )
+
+
+def _payload(df: DataFrame, encode, *cols: str) -> DataFrame:
+    """Encode stage: ``encode(*values) -> bytes`` per row, as a
+    BinaryType ``payload`` column."""
+    return _rowwise(df, list(cols), lambda *v: (encode(*v),), "payload binary")
+
+
+_PX_SCHEMA = "width int, height int, mean_px double, max_px int"
+_AUDIO_SCHEMA = "framerate int, n_samples int, mean_abs double, max_abs int"
+
+
+def _px_stats(decode):
+    """Stats function for any ``bytes -> (width, height, pixel_bytes)``
+    image decoder: per-image pixel statistics (``_PX_SCHEMA``)."""
+
+    def stats(b: bytes) -> tuple:
+        w, h, px = decode(bytes(b))
+        return w, h, sum(px) / len(px), max(px)
+
+    return stats
+
+
+def _sample_stats(rate: int, s: list) -> tuple:
+    """Per-clip sample statistics (``_AUDIO_SCHEMA``) — the cheap
+    audio-quality screen a speech-data pipeline runs first."""
+    return (
+        rate,
+        len(s),
+        sum(abs(x) for x in s) / len(s),
+        max(abs(x) for x in s),
+    )
+
+
+def _audio_stats(decode):
+    """Stats function for any ``bytes -> (rate, samples)`` decoder."""
+    return lambda b: _sample_stats(*decode(bytes(b)))
+
+
+def _decode(payloads: DataFrame, stats, schema: str) -> DataFrame:
+    """Decode stage: ``stats(payload) -> tuple`` filling ``schema``."""
+    return _rowwise(payloads, ["payload"], stats, schema)
+
+
+def _px_stats_select(stats: DataFrame) -> DataFrame:
+    """Shared output projection for the single-image pixel-stats
+    queries: ONE definition of the 6-digit mean rounding the oracles
+    replay.
+
+    Why round(…, 6) survives here when the sql_davg policy removed
+    it from pure-arithmetic queries: mean_px is ``integer_sum / d``
+    for a FIXED small divisor (d ∈ {12, 24, 36, 48}), so the reachable
+    input set is finite — k/d for k in [0, 255·d]. The Spark-vs-
+    DuckDB round divergence class needs a value whose double sits on
+    a 7-decimal midpoint boundary; an EXHAUSTIVE cross-engine sweep
+    of these domains (real Spark vs real DuckDB) found zero
+    disagreements, so the rounding is tie-free by enumeration, not
+    by luck — pinned in
+    tests/test_multimodal.py::test_mean_px_round_tie_free_domains.
+    (The color leg needs no such proof: its means are dyadic
+    sums/1024 and /4, exact in both engines.)"""
+    return stats.select(
+        "doc_id",
+        "width",
+        "height",
+        F.round("mean_px", 6).alias("mean_px"),
+        "max_px",
+    )
+
+
+def _audio_stats_select(stats: DataFrame) -> DataFrame:
+    """Shared output projection for the audio legs: every column in
+    stage order, ``mean_abs`` rounded to the 6 digits the oracles
+    replay (the divisors are dyadic or a fixed sample count, so the
+    mean is exact before rounding)."""
+    return stats.select(
+        *(
+            F.round(c, 6).alias(c) if c == "mean_abs" else c
+            for c in stats.columns
+        )
+    )
+
 
 DECODE_SCHEMA = (
     "doc_id bigint, fmt string, byte_len int, width int, height int"
@@ -113,77 +227,41 @@ def with_synthetic_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_batch(pdf: pd.DataFrame, fake: bool) -> pd.DataFrame:
-    """Decode one Arrow batch of payloads into features.
-
-    Real codecs (PIL/librosa/av) are not in this container; with
-    ``fake=False`` this raises. The fake path derives width/height
-    from the first payload bytes — deterministic, so it can be
-    oracle-checked end to end.
-    """
-    if not fake:
-        raise NotImplementedError(
-            "generic decode of arbitrary formats needs PIL/librosa/av "
-            "(not in container); real codecs exist for RGB PNG "
-            "(functions/png.py), gray/color/progressive JPEG "
-            "(functions/jpeg.py), PCM WAV (functions/wavcodec.py), "
-            "G.711 mu-law/A-law (functions/g711.py) and MJPEG AVI "
-            "(functions/avi.py) — use fake=True here for the "
-            "deterministic byte-derived decode"
-        )
+def decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Decode one Arrow batch of synthetic payloads: byte length, and
+    width/height read from the first two payload bytes —
+    deterministic, so it can be oracle-checked end to end. ``fmt``
+    passes through even for a NULL payload (its oracle derives it
+    from doc_id), which is why this stage is not :func:`_rowwise`."""
     payloads = pdf["payload"]
     return pd.DataFrame(
         {
             "doc_id": pdf["doc_id"],
             "fmt": pdf["fmt"],
-            "byte_len": payloads.map(_nn(len)),
-            "width": payloads.map(_nn(lambda b: b[0])),
-            "height": payloads.map(_nn(lambda b: b[1])),
+            "byte_len": payloads.map(len, na_action="ignore"),
+            "width": payloads.map(lambda b: b[0], na_action="ignore"),
+            "height": payloads.map(lambda b: b[1], na_action="ignore"),
         }
     )
 
 
-def decode_payloads(df: DataFrame, fake: bool = True) -> DataFrame:
+def decode_payloads(df: DataFrame) -> DataFrame:
     """mapInPandas decode stage over (doc_id, payload, meta) rows."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield decode_batch(pdf, fake)
+            yield decode_batch(pdf)
 
     flat = df.select("doc_id", "payload", F.col("meta.fmt").alias("fmt"))
     return flat.mapInPandas(run, schema=DECODE_SCHEMA)
 
 
-FEATURE_SCHEMA = "doc_id bigint, mean_byte double, max_byte int, n_blocks int"
-
-
-def feature_extract_batch(pdf: pd.DataFrame, fake: bool) -> pd.DataFrame:
-    """Feature extraction over payload bytes (fake = byte statistics;
-    a real build plugs an image/audio model here)."""
-    if not fake:
-        raise NotImplementedError(
-            "real feature extraction needs a vision/audio model runtime; "
-            "use fake=True for byte-statistics features"
-        )
-    payloads = pdf["payload"]
-    return pd.DataFrame(
-        {
-            "doc_id": pdf["doc_id"],
-            "mean_byte": payloads.map(_nn(lambda b: sum(b) / len(b))),
-            "max_byte": payloads.map(_nn(max)),
-            "n_blocks": payloads.map(_nn(lambda b: len(b) // 4)),
-        }
-    )
-
-
-def extract_features(df: DataFrame, fake: bool = True) -> DataFrame:
-    """mapInPandas feature-extract stage over (doc_id, payload)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield feature_extract_batch(pdf, fake)
-
-    return df.select("doc_id", "payload").mapInPandas(
-        run, schema=FEATURE_SCHEMA
+def extract_features(df: DataFrame) -> DataFrame:
+    """Feature extraction over (doc_id, payload): byte statistics (a
+    real build plugs an image/audio model in here)."""
+    return _decode(
+        df,
+        lambda b: (sum(b) / len(b), max(b), len(b) // 4),
+        "mean_byte double, max_byte int, n_blocks int",
     )
 
 
@@ -195,50 +273,13 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
     Non-PNG payloads raise inside the codec (this stage is
     PNG-typed; the other modalities have their own decode stages)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def resize(b: bytes) -> bytes:
+        w, h, px = png.decode_rgb8(bytes(b))
+        return png.encode_rgb8(
+            width, height, png.resize_nearest_rgb8(px, w, h, width, height)
+        )
 
-            def rs(b: bytes) -> bytes:
-                w, h, px = png.decode_rgb8(bytes(b))
-                return png.encode_rgb8(
-                    width,
-                    height,
-                    png.resize_nearest_rgb8(px, w, h, width, height),
-                )
-
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["payload"].map(_nn(rs)),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        run, schema="doc_id bigint, payload binary"
-    )
-
-
-def frame_sample(df: DataFrame, every_n: int = 2) -> DataFrame:
-    """Frame sampling over a synthetic 'video': treat each 4-byte
-    block of the payload as a frame, keep every n-th (deterministic
-    fake for the real video-decode + stride sampler)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = pdf["payload"].map(
-                _nn(
-                    lambda b: bytes(
-                        byte
-                        for i in range(0, len(b) // 4, every_n)
-                        for byte in b[i * 4 : (i + 1) * 4]
-                    )
-                )
-            )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "frames": frames})
-
-    return df.select("doc_id", "payload").mapInPandas(
-        run, schema="doc_id bigint, frames binary"
-    )
+    return _payload(df, resize, "payload")
 
 
 # --- real PNG codec path ----------------------------------------------------
@@ -253,87 +294,11 @@ def with_png_payload(docs: DataFrame) -> DataFrame:
     """Encode a REAL 4x3 RGB PNG per document (pure-stdlib encoder;
     pixels = first 36 bytes of three chained md5 digests, so the
     oracle can recompute every pixel from SQL)."""
-    pix_hex = F.substring(
-        F.concat(
-            F.md5(F.col("text")),
-            F.md5(F.concat(F.lit("x"), F.col("text"))),
-            F.md5(F.concat(F.lit("y"), F.col("text"))),
-        ),
-        1,
-        _PNG_W * _PNG_H * 3 * 2,
+    return _payload(
+        docs,
+        lambda h: png.encode_rgb8(_PNG_W, _PNG_H, bytes.fromhex(h)),
+        f"substr({_SQL_PIX_HEX}, 1, {_PNG_W * _PNG_H * 3 * 2})",
     )
-    flat = docs.select("doc_id", pix_hex.alias("pix_hex"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = pdf["pix_hex"].map(
-                _nn(
-                    lambda h: png.encode_rgb8(
-                        _PNG_W, _PNG_H, bytes.fromhex(h)
-                    )
-                )
-            )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payload})
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def _px_stats_select(stats: DataFrame) -> DataFrame:
-    """Shared output projection for the single-image pixel-stats
-    queries (png, resize, jpeg baseline/progressive): ONE definition
-    of the 6-digit mean rounding the four oracles replay.
-
-    Why round(…, 6) survives here when the sql_davg policy removed
-    it from pure-arithmetic queries: mean_px is ``integer_sum / d``
-    for a FIXED small divisor (d ∈ {36, 12, 24}), so the reachable
-    input set is finite — k/d for k in [0, 255·d]. The Spark-vs-
-    DuckDB round divergence class needs a value whose double sits on
-    a 7-decimal midpoint boundary; an EXHAUSTIVE cross-engine sweep
-    of all three domains (18,363 values, real Spark vs real DuckDB)
-    found zero disagreements, so the rounding is tie-free by
-    enumeration, not by luck — pinned in
-    tests/test_multimodal.py::test_mean_px_round_tie_free_domains.
-    (The color leg needs no such proof: its means are dyadic
-    sums/1024 and /4, exact in both engines.)"""
-    return stats.select(
-        "doc_id",
-        "width",
-        "height",
-        F.round("mean_px", 6).alias("mean_px"),
-        "max_px",
-    )
-
-
-def _px_stats_stage(df: DataFrame, decode_fn) -> DataFrame:
-    """Shared image-decode stats stage: ``decode_fn(bytes) ->
-    (width, height, pixel_bytes)``, output = per-image pixel
-    statistics. One definition keeps the PNG and JPEG twins' stats
-    arithmetic identical to both SQL oracles."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dec = pdf["payload"].map(_nn(lambda b: decode_fn(bytes(b))))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": dec.map(_nn(lambda t: t[0])),
-                    "height": dec.map(_nn(lambda t: t[1])),
-                    "mean_px": dec.map(_nn(lambda t: sum(t[2]) / len(t[2]))),
-                    "max_px": dec.map(_nn(lambda t: max(t[2]))),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        run,
-        schema="doc_id bigint, width int, height int, "
-        "mean_px double, max_px int",
-    )
-
-
-def png_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real PNG payloads: CRC-checked parse +
-    inflate + unfilter, then per-image pixel statistics."""
-    return _px_stats_stage(df, png.decode_rgb8)
 
 
 @register(
@@ -357,19 +322,16 @@ def png_stats(df: DataFrame) -> DataFrame:
 def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec round-trip: encode each document's md5-derived
     pixels as an actual PNG file (signature, chunks, CRC-32, DEFLATE)
-    and decode it back with the pure-stdlib parser. The oracle
-    recomputes the identical pixel statistics straight from the md5
-    hex, so a bug anywhere in encode, chunk framing, compression, or
-    unfiltering breaks the hash match. WAV gets the same stdlib-real
-    treatment in multimodal_decode_wav, baseline JPEG in
-    multimodal_decode_jpeg (+ _jpeg_color), G.711 compressed audio in
-    multimodal_decode_mulaw/_alaw, MJPEG video in
-    multimodal_decode_video, LZW dictionary coding in
-    multimodal_decode_gif, and predictive coding in
-    multimodal_decode_flac; only perceptual audio (mp3/ogg) and
-    inter-frame video stay env-gated (see :func:`decode_batch`)."""
+    and decode it back with the pure-stdlib parser (CRC-checked
+    parse, inflate, unfilter). The oracle recomputes the identical
+    pixel statistics straight from the md5 hex, so a bug anywhere in
+    encode, chunk framing, compression, or unfiltering breaks the
+    hash match. Every other wire format in the module docstring gets
+    the same treatment in its own ``multimodal_decode_*`` query."""
     docs = load_table(spark, sf_dir, "documents")
-    return _px_stats_select(png_stats(with_png_payload(docs)))
+    return _px_stats_select(
+        _decode(with_png_payload(docs), _px_stats(png.decode_rgb8), _PX_SCHEMA)
+    )
 
 
 @register(
@@ -398,7 +360,9 @@ def multimodal_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     the resampling arithmetic is value-checked too."""
     docs = load_table(spark, sf_dir, "documents")
     resized = resize_images(with_png_payload(docs), _RS_W, _RS_H)
-    return _px_stats_select(png_stats(resized))
+    return _px_stats_select(
+        _decode(resized, _px_stats(png.decode_rgb8), _PX_SCHEMA)
+    )
 
 
 @register(
@@ -426,7 +390,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked by recomputing the byte statistics from the md5
     hex the payload was built from."""
     docs = load_table(spark, sf_dir, "documents")
-    return extract_features(with_synthetic_payload(docs), fake=True)
+    return extract_features(with_synthetic_payload(docs))
 
 
 @register(
@@ -467,13 +431,13 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched Pandas-UDF decode over binary payloads.
 
-    The fake decoder reads the first two payload bytes as
-    width/height; since the payload is unhex(md5(text)), the oracle
-    recomputes the identical values from the md5 hex — validating
-    the whole binary → mapInPandas → typed-features pipeline.
+    The decoder reads the first two payload bytes as width/height;
+    since the payload is unhex(md5(text)), the oracle recomputes the
+    identical values from the md5 hex — validating the whole binary
+    → mapInPandas → typed-features pipeline.
     """
     docs = load_table(spark, sf_dir, "documents")
-    return decode_payloads(with_synthetic_payload(docs), fake=True)
+    return decode_payloads(with_synthetic_payload(docs))
 
 
 # The mapInPandas stage functions above close over module-level batch
@@ -484,6 +448,13 @@ from map_reduce_server_spark.functions import (  # noqa: E402
 
 _rbv(__name__)
 del _rbv  # a lingering ref would pickle the functions pkg by reference
+
+
+def _int16s(h: str) -> list[int]:
+    """Hex -> little-endian signed int16 samples: ONE definition of
+    the byte layout the WAV/FLAC/AIFF ``_SQL_*_SAMPLES`` oracles
+    replay."""
+    return list(struct.unpack(f"<{len(h) // 4}h", bytes.fromhex(h)))
 
 
 # --- real WAV codec path ----------------------------------------------------
@@ -506,79 +477,14 @@ _SQL_WAV_SAMPLES = f"""
 """
 
 
-def with_wav_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL mono 16-bit PCM WAV per document (stdlib
-    ``wave`` writer; samples = 64 bytes of four chained md5 digests
-    as little-endian int16, so the oracle can recompute every sample
-    from SQL)."""
-    hex_col = F.concat(
-        F.md5(F.col("text")),
-        F.md5(F.concat(F.lit("a"), F.col("text"))),
-        F.md5(F.concat(F.lit("b"), F.col("text"))),
-        F.md5(F.concat(F.lit("c"), F.col("text"))),
+def _wav_stats(b: bytes) -> tuple:
+    """RIFF parse + PCM unpack, then the per-clip sample statistics
+    plus the zero-crossing count."""
+    rate, s = wavcodec.decode_pcm16(bytes(b))
+    crossings = sum(
+        1 for i in range(len(s) - 1) if (s[i] < 0) != (s[i + 1] < 0)
     )
-    flat = docs.select("doc_id", hex_col.alias("sample_hex"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        for pdf in batches:
-            payload = pdf["sample_hex"].map(
-                _nn(
-                    lambda h: wavcodec.encode_pcm16(
-                        list(
-                            _struct.unpack(
-                                f"<{_WAV_N}h", bytes.fromhex(h)
-                            )
-                        ),
-                        _WAV_RATE,
-                    )
-                )
-            )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payload})
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def wav_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real WAV payloads: RIFF parse + PCM unpack,
-    then per-clip sample statistics (the audio-quality screen a
-    speech-data pipeline runs before transcription)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dec = pdf["payload"].map(
-                _nn(lambda b: wavcodec.decode_pcm16(bytes(b)))
-            )
-            samples = dec.map(_nn(lambda t: t[1]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "framerate": dec.map(_nn(lambda t: t[0])),
-                    "n_samples": samples.map(_nn(len)),
-                    "mean_abs": samples.map(
-                        _nn(lambda s: sum(abs(x) for x in s) / len(s))
-                    ),
-                    "max_abs": samples.map(
-                        _nn(lambda s: max(abs(x) for x in s))
-                    ),
-                    "zero_crossings": samples.map(
-                        _nn(
-                            lambda s: sum(
-                                1
-                                for i in range(len(s) - 1)
-                                if (s[i] < 0) != (s[i + 1] < 0)
-                            )
-                        )
-                    ),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        run,
-        schema="doc_id bigint, framerate int, n_samples int, "
-        "mean_abs double, max_abs int, zero_crossings int",
-    )
+    return _sample_stats(rate, s) + (crossings,)
 
 
 @register(
@@ -605,16 +511,15 @@ def wav_stats(df: DataFrame) -> DataFrame:
 )
 def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio codec round-trip: encode each document's
-    md5-derived samples as an actual RIFF/WAVE file (stdlib ``wave``
+    md5-derived samples (64 bytes of four chained md5 digests as
+    little-endian int16) as an actual RIFF/WAVE file (stdlib ``wave``
     writer) and decode it back through the stdlib reader — the audio
-    analogue of multimodal_decode_png, closing the second modality
-    with a genuine codec instead of an env-gated stub. The oracle
-    recomputes the identical int16 samples straight from the md5
-    hex, so a bug anywhere in header framing, frame accounting, or
-    LE-PCM packing breaks the hash match. Compressed audio is real
-    too (G.711 both laws: multimodal_decode_mulaw/_alaw); perceptual
-    codecs (mp3/ogg) remain honestly env-gated (see
-    :func:`decode_batch`).
+    analogue of multimodal_decode_png. The oracle recomputes the
+    identical int16 samples straight from the md5 hex, so a bug
+    anywhere in header framing, frame accounting, or LE-PCM packing
+    breaks the hash match. Compressed audio is real too (G.711 both
+    laws: multimodal_decode_mulaw/_alaw); perceptual codecs (mp3/ogg)
+    are out of scope.
 
     Scale: embarrassingly parallel Arrow-batched mapInPandas, no
     shuffle; payloads live only inside a task. The stats schema
@@ -622,14 +527,13 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap audio-quality screen before any model-based scoring.
     """
     docs = load_table(spark, sf_dir, "documents")
-    stats = wav_stats(with_wav_payload(docs))
-    return stats.select(
-        "doc_id",
-        "framerate",
-        "n_samples",
-        F.round("mean_abs", 6).alias("mean_abs"),
-        "max_abs",
-        "zero_crossings",
+    payload = _payload(
+        docs,
+        lambda h: wavcodec.encode_pcm16(_int16s(h), _WAV_RATE),
+        _SQL_WAV_HEX,
+    )
+    return _audio_stats_select(
+        _decode(payload, _wav_stats, f"{_AUDIO_SCHEMA}, zero_crossings int")
     )
 
 
@@ -656,38 +560,20 @@ def _flat_block_gray(hex24: str) -> bytes:
     return img.tobytes()
 
 
-def _gray_jpeg_payload(docs: DataFrame, salt: str, encoder) -> DataFrame:
-    """One scaffold for the gray-JPEG payload builders (baseline +
-    progressive): the legs differ ONLY in hex salt and encoder, so
-    the select + mapInPandas + NULL-propagation shape is defined
-    once. ``encoder(width, height, pixels) -> bytes``."""
-    hex_col = (
-        F.md5(F.concat(F.lit(salt), F.col("text")))
-        if salt
-        else F.md5(F.col("text"))
+def _gray_jpeg_leg(docs: DataFrame, hex_sql: str, encoder) -> DataFrame:
+    """One body for the gray-JPEG legs (baseline + progressive): they
+    differ ONLY in hex recipe and ``encoder(width, height, pixels)``."""
+    payload = _payload(
+        docs, lambda h: encoder(_JPG_W, _JPG_H, _flat_block_gray(h)), hex_sql
     )
-    flat = docs.select(
-        "doc_id", F.substring(hex_col, 1, 24).alias("pix_hex")
+    return _px_stats_select(
+        _decode(payload, _px_stats(jpeg.decode_gray8), _PX_SCHEMA)
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def enc(h: str) -> bytes:
-            return encoder(_JPG_W, _JPG_H, _flat_block_gray(h))
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["pix_hex"].map(_nn(enc)),
-                }
-            )
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
 
 
 def _gray_jpeg_oracle(hex_expr: str) -> str:
     """Shared oracle body for the gray-JPEG legs: the pixel-stats
-    arithmetic must stay in lockstep with ``jpeg_stats`` for BOTH
+    arithmetic must stay in lockstep with ``_px_stats`` for BOTH
     legs, so the SQL exists once with only the hex recipe varying."""
     return f"""
     WITH px AS (
@@ -706,19 +592,6 @@ def _gray_jpeg_oracle(hex_expr: str) -> str:
     """
 
 
-def with_jpeg_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL baseline grayscale JFIF JPEG per document
-    (pure numpy/stdlib encoder: DCT, quantization, Annex K Huffman
-    coding, byte stuffing)."""
-    return _gray_jpeg_payload(docs, "", jpeg.encode_gray8)
-
-
-def jpeg_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real JPEG payloads: marker parse, Huffman
-    entropy decode, dequantize, IDCT — then per-image pixel stats."""
-    return _px_stats_stage(df, jpeg.decode_gray8)
-
-
 @register(
     "multimodal_decode_jpeg",
     oracle=_gray_jpeg_oracle(_SQL_JPG_HEX),
@@ -726,29 +599,23 @@ def jpeg_stats(df: DataFrame) -> DataFrame:
 def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossy-codec round-trip: encode each document's
     md5-derived flat-block image as an actual baseline JFIF JPEG
-    (8x8 DCT, unit quantization, Annex K Huffman entropy coding)
-    and decode it back with the pure numpy/stdlib parser — closing
-    the third modality with a genuine codec. Flat 8x8 blocks make
-    the lossy pipeline exact (DC-only spectra survive unit
-    quantization bit-for-bit), so the oracle recomputes the pixel
-    statistics straight from the md5 hex and a bug anywhere in
+    (8x8 DCT, unit quantization, Annex K Huffman entropy coding,
+    byte stuffing) and decode it back with the pure numpy/stdlib
+    parser (marker parse, Huffman decode, dequantize, IDCT). Flat
+    8x8 blocks make the lossy pipeline exact (DC-only spectra survive
+    unit quantization bit-for-bit), so the oracle recomputes the
+    pixel statistics straight from the md5 hex and a bug anywhere in
     marker framing, Huffman tables, entropy coding, zigzag,
     quantization, or the DCT pair breaks the hash match. General
     (non-flat) content round-trips within +/-1 (pinned by the codec
     unit tests). The color leg is multimodal_decode_jpeg_color and
-    the progressive (SOF2) leg multimodal_decode_jpeg_progressive;
-    only perceptual audio (mp3/ogg) stays env-gated.
+    the progressive (SOF2) leg multimodal_decode_jpeg_progressive.
 
     Scale: embarrassingly parallel Arrow-batched mapInPandas, no
     shuffle; payloads live only inside a task.
     """
-    # widened (round 16, measured per leg): the heavy Python
-    # decode below otherwise runs in the single task a one-row-
-    # group scan yields (jpeg_color 8.4 -> 1.5 s, video 10.5 ->
-    # 1.7 s at sf0.1/local[32]); light legs (wav/png/bmp/adpcm/
-    # law) measured a wash or loss and stay unwidened
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    return _px_stats_select(jpeg_stats(with_jpeg_payload(docs)))
+    return _gray_jpeg_leg(docs, _SQL_JPG_HEX, jpeg.encode_gray8)
 
 
 # --- real PROGRESSIVE JPEG codec path (SOF2) ---------------------------------
@@ -756,15 +623,6 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Own 'p'-salted payload recipe — independent of the baseline gray
 # and color legs.
 _SQL_JPGP_HEX = "substr(md5('p' || text), 1, 24)"
-
-
-def with_jpeg_progressive_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL progressive (SOF2) JFIF JPEG per document: the
-    same md5-derived flat-block image as the baseline leg, entropy-
-    coded across six spectral-selection + successive-approximation
-    scans (interleaved DC first/refine, split-band AC first, AC
-    refine) with EOBn run coding on the sparse high band."""
-    return _gray_jpeg_payload(docs, "p", jpeg.encode_gray8_progressive)
 
 
 @register(
@@ -778,28 +636,24 @@ def multimodal_decode_jpeg_progressive(
     md5-derived flat-block image as an actual SOF2 progressive JFIF
     file — six scans exercising interleaved DC first + refinement,
     spectral-selection AC bands, successive-approximation AC
-    refinement, and EOBn run coding — and decode it back with the
-    pure numpy/stdlib multi-scan parser. Progressive coding is a
-    lossless re-arrangement of the same quantized coefficients, so
-    the flat-block exactness contract carries over unchanged and the
-    oracle recomputes every pixel from the md5 hex: a bug anywhere in
-    scan sequencing, spectral-band bookkeeping, bit-plane
-    composition, EOB-run accounting, or refinement windows breaks
-    the hash match. (Decoder conformance beyond this encoder is
-    pinned at the coefficient level by the refinement pairing test;
-    no external JPEG library exists in this container to
-    cross-validate, same epistemic status as the baseline leg.)
+    refinement, and EOBn run coding on the sparse high band — and
+    decode it back with the pure numpy/stdlib multi-scan parser.
+    Progressive coding is a lossless re-arrangement of the same
+    quantized coefficients, so the flat-block exactness contract
+    carries over unchanged and the oracle recomputes every pixel from
+    the md5 hex: a bug anywhere in scan sequencing, spectral-band
+    bookkeeping, bit-plane composition, EOB-run accounting, or
+    refinement windows breaks the hash match. (Decoder conformance
+    beyond this encoder is pinned at the coefficient level by the
+    refinement pairing test; no external JPEG library exists in this
+    container to cross-validate, same epistemic status as the
+    baseline leg.)
 
     Scale: embarrassingly parallel Arrow-batched mapInPandas, no
     shuffle; payloads live only inside a task.
     """
-    # widened (round 16, measured per leg): the heavy Python
-    # decode below otherwise runs in the single task a one-row-
-    # group scan yields (jpeg_color 8.4 -> 1.5 s, video 10.5 ->
-    # 1.7 s at sf0.1/local[32]); light legs (wav/png/bmp/adpcm/
-    # law) measured a wash or loss and stay unwidened
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    return _px_stats_select(jpeg_stats(with_jpeg_progressive_payload(docs)))
+    return _gray_jpeg_leg(docs, _SQL_JPGP_HEX, jpeg.encode_gray8_progressive)
 
 
 # --- real COLOR JPEG codec path (YCbCr 4:2:0) -------------------------------
@@ -827,69 +681,19 @@ def _flat_mcu_rgb(hex24: str) -> bytes:
     return np.repeat(np.repeat(vals, 16, axis=0), 16, axis=1).tobytes()
 
 
-def with_jpeg_color_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL baseline COLOR JFIF JPEG per document — YCbCr
-    4:2:0 (2x2 box-mean chroma downsampling, 16x16 MCUs interleaving
-    4 Y + 1 Cb + 1 Cr blocks), BT.601 forward transform, Annex K
-    Huffman coding."""
-    flat = docs.select(
-        "doc_id",
-        F.substring(
-            F.md5(F.concat(F.lit("c"), F.col("text"))), 1, 24
-        ).alias("pix_hex"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def enc(h: str) -> bytes:
-            return jpeg.encode_rgb8(
-                _JPGC_W, _JPGC_H, _flat_mcu_rgb(h), subsample=True
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["pix_hex"].map(_nn(enc)),
-                }
-            )
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def jpeg_color_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real color JPEG payloads: marker parse,
-    Huffman decode, dequantize, IDCT per component, chroma
-    replication upsample, BT.601 inverse — then per-channel means
-    over the interleaved RGB bytes (exact: integer sums over a
-    power-of-two pixel count) and the global max sample."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dec = pdf["payload"].map(
-                _nn(lambda b: jpeg.decode_rgb8(bytes(b)))
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": dec.map(_nn(lambda t: t[0])),
-                    "height": dec.map(_nn(lambda t: t[1])),
-                    "mean_r": dec.map(
-                        _nn(lambda t: sum(t[2][0::3]) * 3 / len(t[2]))
-                    ),
-                    "mean_g": dec.map(
-                        _nn(lambda t: sum(t[2][1::3]) * 3 / len(t[2]))
-                    ),
-                    "mean_b": dec.map(
-                        _nn(lambda t: sum(t[2][2::3]) * 3 / len(t[2]))
-                    ),
-                    "max_px": dec.map(_nn(lambda t: max(t[2]))),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        run,
-        schema="doc_id bigint, width int, height int, mean_r double, "
-        "mean_g double, mean_b double, max_px int",
+def _jpeg_color_stats(b: bytes) -> tuple:
+    """Color decode (marker parse, Huffman decode, dequantize, IDCT
+    per component, chroma replication upsample, BT.601 inverse), then
+    per-channel means over the interleaved RGB bytes (exact: integer
+    sums over a power-of-two pixel count) and the global max sample."""
+    w, h, px = jpeg.decode_rgb8(bytes(b))
+    return (
+        w,
+        h,
+        sum(px[0::3]) * 3 / len(px),
+        sum(px[1::3]) * 3 / len(px),
+        sum(px[2::3]) * 3 / len(px),
+        max(px),
     )
 
 
@@ -965,13 +769,20 @@ def multimodal_decode_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: embarrassingly parallel Arrow-batched mapInPandas, no
     shuffle; payloads live only inside a task.
     """
-    # widened (round 16, measured per leg): the heavy Python
-    # decode below otherwise runs in the single task a one-row-
-    # group scan yields (jpeg_color 8.4 -> 1.5 s, video 10.5 ->
-    # 1.7 s at sf0.1/local[32]); light legs (wav/png/bmp/adpcm/
-    # law) measured a wash or loss and stay unwidened
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    stats = jpeg_color_stats(with_jpeg_color_payload(docs))
+    payload = _payload(
+        docs,
+        lambda h: jpeg.encode_rgb8(
+            _JPGC_W, _JPGC_H, _flat_mcu_rgb(h), subsample=True
+        ),
+        _SQL_JPGC_HEX,
+    )
+    stats = _decode(
+        payload,
+        _jpeg_color_stats,
+        "width int, height int, mean_r double, mean_g double, "
+        "mean_b double, max_px int",
+    )
     return stats.select(
         "doc_id",
         "width",
@@ -1004,68 +815,17 @@ _SQL_MULAW_SAMPLES = f"""
 """
 
 
-def with_mulaw_payload(docs: DataFrame) -> DataFrame:
-    """Frame 32 md5-derived mu-law code bytes per document as a REAL
-    WAVE_FORMAT_MULAW (tag 7) RIFF file."""
-    code_hex = F.concat(
-        F.md5(F.concat(F.lit("u"), F.col("text"))),
-        F.md5(F.concat(F.lit("v"), F.col("text"))),
+def _g711_leg(docs: DataFrame, hex_sql: str, encode, decode) -> DataFrame:
+    """One body for the two G.711 legs: frame the 32 md5-derived code
+    bytes as a REAL WAVE_FORMAT_MULAW/ALAW RIFF file, then container
+    parse (format-tag validation, chunk walk) + logarithmic
+    expansion and the per-clip sample statistics."""
+    payload = _payload(
+        docs, lambda h: encode(_MULAW_RATE, bytes.fromhex(h)), hex_sql
     )
-    flat = docs.select("doc_id", code_hex.alias("code_hex"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = pdf["code_hex"].map(
-                _nn(
-                    lambda h: g711.encode_wav_mulaw(
-                        _MULAW_RATE, bytes.fromhex(h)
-                    )
-                )
-            )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payload})
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def _g711_stats(df: DataFrame, decode_wav) -> DataFrame:
-    """Decode stage over real G.711 RIFF payloads (either companding
-    law): container parse (format-tag validation, chunk walk) +
-    logarithmic expansion, then the same per-clip sample statistics
-    the PCM path computes."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dec = pdf["payload"].map(_nn(lambda b: decode_wav(bytes(b))))
-            samples = dec.map(_nn(lambda t: t[1]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "framerate": dec.map(_nn(lambda t: t[0])),
-                    "n_samples": samples.map(_nn(len)),
-                    "mean_abs": samples.map(
-                        _nn(lambda s: sum(abs(x) for x in s) / len(s))
-                    ),
-                    "max_abs": samples.map(
-                        _nn(lambda s: max(abs(x) for x in s))
-                    ),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        run,
-        schema="doc_id bigint, framerate int, n_samples int, "
-        "mean_abs double, max_abs int",
+    return _audio_stats_select(
+        _decode(payload, _audio_stats(decode), _AUDIO_SCHEMA)
     )
-
-
-def mulaw_stats(df: DataFrame) -> DataFrame:
-    """Mu-law (format tag 7) decode-stats stage."""
-    return _g711_stats(df, g711.decode_wav_mulaw)
-
-
-def alaw_stats(df: DataFrame) -> DataFrame:
-    """A-law (format tag 6) decode-stats stage."""
-    return _g711_stats(df, g711.decode_wav_alaw)
 
 
 @register(
@@ -1089,27 +849,21 @@ def alaw_stats(df: DataFrame) -> DataFrame:
 def multimodal_decode_mulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL compressed-audio round-trip: frame each document's
     md5-derived G.711 mu-law codes as an actual WAVE_FORMAT_MULAW
-    RIFF file and decode it back — container parse, format-tag
-    validation, logarithmic expansion — with the pure-stdlib codec
-    (``functions/g711.py``, verified code-for-code against CPython's
-    ``audioop`` reference on all 256 codes). The oracle replays the
-    closed-form integer expansion straight from the md5 hex, so a
-    bug in companding arithmetic, sign handling, chunk framing, or
-    word alignment breaks the hash match. The A-law sibling is
-    multimodal_decode_alaw; perceptual codecs (mp3/ogg) stay
-    env-gated.
+    (tag 7) RIFF file and decode it back — container parse,
+    format-tag validation, logarithmic expansion — with the
+    pure-stdlib codec (``functions/g711.py``, verified code-for-code
+    against CPython's ``audioop`` reference on all 256 codes). The
+    oracle replays the closed-form integer expansion straight from
+    the md5 hex, so a bug in companding arithmetic, sign handling,
+    chunk framing, or word alignment breaks the hash match. The
+    A-law sibling is multimodal_decode_alaw.
 
     Scale: embarrassingly parallel Arrow-batched mapInPandas, no
     shuffle; payloads live only inside a task.
     """
     docs = load_table(spark, sf_dir, "documents")
-    stats = mulaw_stats(with_mulaw_payload(docs))
-    return stats.select(
-        "doc_id",
-        "framerate",
-        "n_samples",
-        F.round("mean_abs", 6).alias("mean_abs"),
-        "max_abs",
+    return _g711_leg(
+        docs, _SQL_MULAW_HEX, g711.encode_wav_mulaw, g711.decode_wav_mulaw
     )
 
 
@@ -1131,29 +885,6 @@ _SQL_ALAW_SAMPLES = f"""
     cc -> CASE WHEN cc >= 128 THEN {_SQL_ALAW_MAG}
           ELSE -({_SQL_ALAW_MAG}) END)
 """
-
-
-def with_alaw_payload(docs: DataFrame) -> DataFrame:
-    """Frame 32 md5-derived A-law code bytes per document as a REAL
-    WAVE_FORMAT_ALAW (tag 6) RIFF file."""
-    code_hex = F.concat(
-        F.md5(F.concat(F.lit("a"), F.col("text"))),
-        F.md5(F.concat(F.lit("b"), F.col("text"))),
-    )
-    flat = docs.select("doc_id", code_hex.alias("code_hex"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = pdf["code_hex"].map(
-                _nn(
-                    lambda h: g711.encode_wav_alaw(
-                        _MULAW_RATE, bytes.fromhex(h)
-                    )
-                )
-            )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payload})
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
 
 
 @register(
@@ -1191,13 +922,8 @@ def multimodal_decode_alaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; payloads live only inside a task.
     """
     docs = load_table(spark, sf_dir, "documents")
-    stats = alaw_stats(with_alaw_payload(docs))
-    return stats.select(
-        "doc_id",
-        "framerate",
-        "n_samples",
-        F.round("mean_abs", 6).alias("mean_abs"),
-        "max_abs",
+    return _g711_leg(
+        docs, _SQL_ALAW_HEX, g711.encode_wav_alaw, g711.decode_wav_alaw
     )
 
 
@@ -1216,81 +942,29 @@ def _sql_vid_hex(f: int) -> str:
     return f"substr(md5('f{f}' || text), 1, 24)"
 
 
-def with_video_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL MJPEG AVI per document: four baseline-JPEG
-    frames framed in a RIFF 'AVI ' container (hdrl/strl/movi)."""
-    frame_hex = F.concat(
-        *[
-            F.substring(
-                F.md5(F.concat(F.lit(f"f{f}"), F.col("text"))), 1, 24
-            )
-            for f in range(_VID_FRAMES)
-        ]
-    )
-    flat = docs.select("doc_id", frame_hex.alias("frames_hex"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def enc(h: str) -> bytes:
-            frames = [
-                jpeg.encode_gray8(
-                    _JPG_W,
-                    _JPG_H,
-                    _flat_block_gray(h[f * 24 : (f + 1) * 24]),
-                )
-                for f in range(_VID_FRAMES)
-            ]
-            return avi.encode_avi_mjpeg(_JPG_W, _JPG_H, _VID_FPS, frames)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["frames_hex"].map(_nn(enc)),
-                }
-            )
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
+def _encode_video(h: str) -> bytes:
+    """Four baseline-JPEG frames framed in a RIFF 'AVI ' container
+    (hdrl/strl/movi)."""
+    frames = [
+        jpeg.encode_gray8(
+            _JPG_W, _JPG_H, _flat_block_gray(h[f * 24 : (f + 1) * 24])
+        )
+        for f in range(_VID_FRAMES)
+    ]
+    return avi.encode_avi_mjpeg(_JPG_W, _JPG_H, _VID_FPS, frames)
 
 
-def video_stats(df: DataFrame, every_n: int = _VID_STRIDE) -> DataFrame:
-    """Decode stage over real MJPEG AVI payloads: RIFF/AVI container
-    parse, stride frame sampling on the RAW encoded chunks, then
-    baseline-JPEG decode of ONLY the kept frames and pixel
-    statistics over them — the thumbnail/quality screen a video-data
-    pipeline runs before any model. Sampling before decode matters:
-    at stride n the expensive Huffman+IDCT work drops by (n-1)/n,
-    which is the whole point of thinning a 100 TB corpus."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def stats(b: bytes):
-            w, h, fps, raw = avi.parse_avi_mjpeg(bytes(b))
-            kept = [
-                jpeg.decode_gray8(f) for f in avi.sample_frames(raw, every_n)
-            ]
-            px = b"".join(f[2] for f in kept)
-            return (w, h, fps, len(raw), len(kept),
-                    sum(px) / len(px), max(px))
-
-        for pdf in batches:
-            dec = pdf["payload"].map(_nn(stats))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": dec.map(_nn(lambda t: t[0])),
-                    "height": dec.map(_nn(lambda t: t[1])),
-                    "fps": dec.map(_nn(lambda t: t[2])),
-                    "n_frames": dec.map(_nn(lambda t: t[3])),
-                    "n_sampled": dec.map(_nn(lambda t: t[4])),
-                    "mean_px": dec.map(_nn(lambda t: t[5])),
-                    "max_px": dec.map(_nn(lambda t: t[6])),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        run,
-        schema="doc_id bigint, width int, height int, fps int, "
-        "n_frames int, n_sampled int, mean_px double, max_px int",
-    )
+def _video_stats(b: bytes) -> tuple:
+    """RIFF/AVI container parse, stride frame sampling on the RAW
+    encoded chunks, then baseline-JPEG decode of ONLY the kept frames
+    and pixel statistics over them — the thumbnail/quality screen a
+    video-data pipeline runs before any model. Sampling before decode
+    matters: at stride n the expensive Huffman+IDCT work drops by
+    (n-1)/n, which is the whole point of thinning a 100 TB corpus."""
+    w, h, fps, raw = avi.parse_avi_mjpeg(bytes(b))
+    kept = [jpeg.decode_gray8(f) for f in avi.sample_frames(raw, _VID_STRIDE)]
+    px = b"".join(f[2] for f in kept)
+    return (w, h, fps, len(raw), len(kept), sum(px) / len(px), max(px))
 
 
 @register(
@@ -1322,31 +996,34 @@ def video_stats(df: DataFrame, every_n: int = _VID_STRIDE) -> DataFrame:
 def multimodal_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video round-trip: encode four md5-derived frames as
     baseline JPEGs, frame them in an actual RIFF MJPEG AVI
-    (``functions/avi.py``), then decode the container, decode every
-    frame through the real JPEG parser, stride-sample every 2nd
-    frame, and compute pixel statistics over the sampled frames —
-    the video analogue of multimodal_decode_png/jpeg/wav/mulaw,
-    closing the last modality with a genuine container + codec
-    instead of the byte-derived fake (which remains as the generic
-    demo in :func:`frame_sample`). The oracle recomputes the sampled
-    frames' pixels straight from their md5 digests, so a bug in AVI
-    framing, stream-header validation, frame chunking, JPEG
-    decoding, or the stride arithmetic breaks the hash match.
-    Inter-frame/perceptual codecs (H.264, VP9) remain honestly
-    env-gated.
+    (``functions/avi.py``), then decode the container, stride-sample
+    every 2nd frame, decode the kept frames through the real JPEG
+    parser, and compute pixel statistics over them — the video
+    analogue of multimodal_decode_png/jpeg/wav/mulaw, closing the
+    last modality with a genuine container + codec. The oracle
+    recomputes the sampled frames' pixels straight from their md5
+    digests, so a bug in AVI framing, stream-header validation, frame
+    chunking, JPEG decoding, or the stride arithmetic breaks the hash
+    match. Inter-frame/perceptual codecs (H.264, VP9) are out of
+    scope.
 
     Scale: embarrassingly parallel Arrow-batched mapInPandas, no
     shuffle; payloads live only inside a task — exactly how a real
     100 TB video corpus is screened (per-file decode, no data
     movement beyond the scan).
     """
-    # widened (round 16, measured per leg): the heavy Python
-    # decode below otherwise runs in the single task a one-row-
-    # group scan yields (jpeg_color 8.4 -> 1.5 s, video 10.5 ->
-    # 1.7 s at sf0.1/local[32]); light legs (wav/png/bmp/adpcm/
-    # law) measured a wash or loss and stay unwidened
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    stats = video_stats(with_video_payload(docs))
+    payload = _payload(
+        docs,
+        _encode_video,
+        " || ".join(_sql_vid_hex(f) for f in range(_VID_FRAMES)),
+    )
+    stats = _decode(
+        payload,
+        _video_stats,
+        "width int, height int, fps int, n_frames int, n_sampled int, "
+        "mean_px double, max_px int",
+    )
     return stats.select(
         "doc_id",
         "width",
@@ -1362,49 +1039,12 @@ def multimodal_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- real GIF codec path (LZW) -----------------------------------------------
 
 # 8x3 grayscale = 24 pixels from two chained md5 digests; 24 is one
-# of the three divisors whose round(mean, 6) is proved tie-free by
+# of the divisors whose round(mean, 6) is proved tie-free by
 # enumeration (see _px_stats_select). GIF's identity gray palette
 # makes pixel value == palette index, so the LZW pipeline is
 # bit-exact lossless and the oracle recomputes every pixel from SQL.
 _GIF_W, _GIF_H = 8, 3
 _SQL_GIF_HEX = "substr(md5(text) || md5('g' || text), 1, 48)"
-
-
-def with_gif_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL 8x3 grayscale GIF89a per document (pure-stdlib
-    encoder: logical screen descriptor, 256-entry gray color table,
-    variable-width LZW, sub-block framing)."""
-    pix_hex = F.substring(
-        F.concat(
-            F.md5(F.col("text")),
-            F.md5(F.concat(F.lit("g"), F.col("text"))),
-        ),
-        1,
-        _GIF_W * _GIF_H * 2,
-    )
-    flat = docs.select("doc_id", pix_hex.alias("pix_hex"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = pdf["pix_hex"].map(
-                _nn(
-                    lambda h: gif.encode_gray8(
-                        _GIF_W, _GIF_H, bytes.fromhex(h)
-                    )
-                )
-            )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payload}
-            )
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def gif_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real GIF payloads: signature/descriptor
-    parse, gray-ramp palette validation, variable-width LZW
-    decompression — then per-image pixel statistics."""
-    return _px_stats_stage(df, gif.decode_gray8)
 
 
 @register(
@@ -1428,26 +1068,28 @@ def gif_stats(df: DataFrame) -> DataFrame:
 def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec round-trip for a THIRD compression family —
     dictionary coding: encode each document's md5-derived pixels as
-    an actual GIF89a file (screen descriptor, gray color table,
-    variable-width LZW with the spec's asymmetric encoder/decoder
-    width growth, sub-block framing) and decode it back with the
-    pure-stdlib parser (``functions/gif.py``). The identity gray
-    palette makes the pipeline bit-exact lossless, so the oracle
-    recomputes the pixel statistics straight from the md5 hex — a
-    bug anywhere in LZW packing, width growth, palette handling, or
-    sub-block framing breaks the hash match. Joins PNG (DEFLATE),
-    JPEG (DCT+Huffman), G.711 (companding), and MJPEG/AVI
+    an actual GIF89a file (screen descriptor, 256-entry gray color
+    table, variable-width LZW with the spec's asymmetric
+    encoder/decoder width growth, sub-block framing) and decode it
+    back with the pure-stdlib parser (``functions/gif.py``). The
+    identity gray palette makes the pipeline bit-exact lossless, so
+    the oracle recomputes the pixel statistics straight from the md5
+    hex — a bug anywhere in LZW packing, width growth, palette
+    handling, or sub-block framing breaks the hash match. Joins PNG
+    (DEFLATE), JPEG (DCT+Huffman), G.711 (companding), and MJPEG/AVI
     (container) as the fifth real image/video wire format.
 
     Scale: embarrassingly parallel Arrow-batched mapInPandas, no
     shuffle; payloads never leave the task."""
-    # widened (round 16, measured per leg): the heavy Python
-    # decode below otherwise runs in the single task a one-row-
-    # group scan yields (jpeg_color 8.4 -> 1.5 s, video 10.5 ->
-    # 1.7 s at sf0.1/local[32]); light legs (wav/png/bmp/adpcm/
-    # law) measured a wash or loss and stay unwidened
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    return _px_stats_select(gif_stats(with_gif_payload(docs)))
+    payload = _payload(
+        docs,
+        lambda h: gif.encode_gray8(_GIF_W, _GIF_H, bytes.fromhex(h)),
+        _SQL_GIF_HEX,
+    )
+    return _px_stats_select(
+        _decode(payload, _px_stats(gif.decode_gray8), _PX_SCHEMA)
+    )
 
 
 # --- real FLAC codec path (fixed prediction + Rice coding) -------------------
@@ -1470,51 +1112,6 @@ _SQL_FLAC_SAMPLES = f"""
     - CASE WHEN CAST(('0x' || substr({_SQL_FLAC_HEX}, i*4-1, 2)) AS BIGINT)
                 >= 128 THEN 65536 ELSE 0 END)
 """
-
-
-def with_flac_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL mono 16-bit FLAC per document (pure-stdlib
-    encoder: STREAMINFO with the audio MD5, CRC-8 frame header,
-    best-of-5 fixed predictor, optimal Rice parameter, CRC-16)."""
-    hex_col = F.concat(
-        F.md5(F.concat(F.lit("p"), F.col("text"))),
-        F.md5(F.concat(F.lit("q"), F.col("text"))),
-        F.md5(F.concat(F.lit("r"), F.col("text"))),
-        F.md5(F.concat(F.lit("s"), F.col("text"))),
-    )
-    flat = docs.select("doc_id", hex_col.alias("sample_hex"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        for pdf in batches:
-            payload = pdf["sample_hex"].map(
-                _nn(
-                    lambda h: flac.encode_s16(
-                        list(
-                            _struct.unpack(
-                                f"<{_FLAC_N}h", bytes.fromhex(h)
-                            )
-                        ),
-                        _FLAC_RATE,
-                    )
-                )
-            )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payload}
-            )
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def flac_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real FLAC payloads: metadata walk, frame
-    sync + CRC-8/CRC-16 validation, fixed-predictor reconstruction
-    from Rice-coded residuals, audio-MD5 verification — then the
-    same per-clip sample statistics the other audio legs compute
-    (the stats stage is shared with the G.711 legs; any
-    ``bytes -> (rate, samples)`` decoder fits it)."""
-    return _g711_stats(df, flac.decode_s16)
 
 
 @register(
@@ -1548,24 +1145,17 @@ def multimodal_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     prediction, Rice/zigzag coding, or CRC arithmetic breaks the
     hash match. Completes the compression-family taxonomy: DEFLATE
     (PNG), LZW (GIF), DCT+Huffman (JPEG), companding (G.711),
-    prediction+Rice (FLAC); perceptual codecs (mp3/ogg) stay
-    honestly env-gated.
+    prediction+Rice (FLAC); perceptual codecs (mp3/ogg) are out of
+    scope.
 
     Scale: embarrassingly parallel Arrow-batched mapInPandas, no
     shuffle; payloads live only inside a task."""
-    # widened (round 16, measured per leg): the heavy Python
-    # decode below otherwise runs in the single task a one-row-
-    # group scan yields (jpeg_color 8.4 -> 1.5 s, video 10.5 ->
-    # 1.7 s at sf0.1/local[32]); light legs (wav/png/bmp/adpcm/
-    # law) measured a wash or loss and stay unwidened
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    stats = flac_stats(with_flac_payload(docs))
-    return stats.select(
-        "doc_id",
-        "framerate",
-        "n_samples",
-        F.round("mean_abs", 6).alias("mean_abs"),
-        "max_abs",
+    payload = _payload(
+        docs, lambda h: flac.encode_s16(_int16s(h), _FLAC_RATE), _SQL_FLAC_HEX
+    )
+    return _audio_stats_select(
+        _decode(payload, _audio_stats(flac.decode_s16), _AUDIO_SCHEMA)
     )
 
 
@@ -1581,44 +1171,20 @@ _SQL_ADPCM_STEPS = "[7,8,9,10,11,12,13,14,16,17,19,21,23,25,28,31,34,37,41,45,50
 _SQL_ADPCM_IDXT = "[-1,-1,-1,-1,2,4,6,8]"
 
 
-def with_adpcm_payload(docs: DataFrame) -> DataFrame:
-    """Frame md5-derived header state + 32 nibble bytes per document
-    as a REAL WAVE_FORMAT_IMA_ADPCM (0x11) single-block RIFF file:
-    predictor from the first 4 hex chars of md5('p'||text) (as a
-    signed int16), step index from the next byte % 89, nibbles from
-    md5('q'||text)||md5('r'||text)."""
-    # one 70-char hex column: 4 chars predictor + 2 chars index +
-    # 64 chars nibbles (concat is NULL if ANY part is — a NULL text
-    # flows through _nn like every sibling payload builder)
-    hex_col = F.concat(
-        F.substring(F.md5(F.concat(F.lit("p"), F.col("text"))), 1, 6),
-        F.md5(F.concat(F.lit("q"), F.col("text"))),
-        F.md5(F.concat(F.lit("r"), F.col("text"))),
-    )
-    flat = docs.select("doc_id", hex_col.alias("hx"))
-
-    def build(h: str) -> bytes:
-        v = int(h[0:4], 16)
-        pred0 = v - 65536 if v >= 32768 else v
-        idx0 = int(h[4:6], 16) % 89
-        return adpcm.frame_wav_ima(
-            _ADPCM_RATE, pred0, idx0, bytes.fromhex(h[6:])
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = pdf["hx"].map(_nn(build))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payload})
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
+def _ima_block(h: str) -> tuple[int, int, bytes]:
+    """One block's hex -> (predictor, step index, nibble bytes): the
+    predictor from the first 4 hex chars as a signed int16, the index
+    from the next byte % 89, the nibbles from the rest."""
+    v = int(h[0:4], 16)
+    return (v - 65536 if v >= 32768 else v, int(h[4:6], 16) % 89,
+            bytes.fromhex(h[6:]))
 
 
-def adpcm_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real 0x11 payloads: container parse (format
-    tag, block-align/samples-per-block consistency, fact count) +
-    the sequential predictor state machine, then the shared per-clip
-    sample statistics."""
-    return _g711_stats(df, adpcm.decode_wav_ima)
+# Predictor/index from md5('p'||text), 32 nibble bytes from
+# md5('q'||text)||md5('r'||text) — one 70-char hex per clip.
+_SQL_ADPCM_HEX = (
+    "substr(md5('p' || text), 1, 6) || md5('q' || text) || md5('r' || text)"
+)
 
 
 @register(
@@ -1687,67 +1253,32 @@ def multimodal_decode_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, or the diff reconstruction breaks the hash on every row.
     Completes the taxonomy: DEFLATE (PNG), LZW (GIF), DCT+Huffman
     (JPEG), companding (G.711), prediction+Rice (FLAC), adaptive
-    DPCM (this leg); perceptual codecs (mp3/ogg) stay env-gated.
+    DPCM (this leg); perceptual codecs (mp3/ogg) are out of scope.
 
     Scale: embarrassingly parallel Arrow-batched mapInPandas, no
     shuffle; payloads live only inside a task."""
     docs = load_table(spark, sf_dir, "documents")
-    stats = adpcm_stats(with_adpcm_payload(docs))
-    return stats.select(
-        "doc_id",
-        "framerate",
-        "n_samples",
-        F.round("mean_abs", 6).alias("mean_abs"),
-        "max_abs",
+    payload = _payload(
+        docs,
+        lambda h: adpcm.frame_wav_ima(_ADPCM_RATE, *_ima_block(h)),
+        _SQL_ADPCM_HEX,
+    )
+    return _audio_stats_select(
+        _decode(payload, _audio_stats(adpcm.decode_wav_ima), _AUDIO_SCHEMA)
     )
 
 
 # ---------------------------------------------------------------
-# Multi-block ADPCM — staged rounds 10-12, registered round 13 (the
-# local parity test tests/test_multimodal.py runs the oracle below
-# against DuckDB at gate grade).
+# Multi-block ADPCM: two blocks per file, each with its own header
+# state (md5('p'/'s'||text)) and 16 nibble bytes (md5('q'/'t'||text)),
+# so the oracle recursion stays per-(doc, block) independent.
 
 _ADPCM_MB_NIB = 32  # nibbles per block (one md5 per block)
 _ADPCM_MB_SAMPLES = 2 * (_ADPCM_MB_NIB + 1)  # two blocks
-
-
-def with_adpcm_multiblock_payload(docs: DataFrame) -> DataFrame:
-    """Frame TWO md5-derived blocks per document as one 0x11 file:
-    each block carries its own header state (pred from 4 hex chars as
-    signed int16, index from the next byte % 89) and 16 nibble bytes
-    from its own md5 — exercising the decoder's multi-block container
-    walk (block boundaries, per-block header re-seed) through the
-    registered-query plumbing, while keeping the oracle recursion
-    per-(doc, block) independent."""
-    hex_col = F.concat(
-        F.substring(F.md5(F.concat(F.lit("p"), F.col("text"))), 1, 6),
-        F.md5(F.concat(F.lit("q"), F.col("text"))),
-        F.substring(F.md5(F.concat(F.lit("s"), F.col("text"))), 1, 6),
-        F.md5(F.concat(F.lit("t"), F.col("text"))),
-    )
-    flat = docs.select("doc_id", hex_col.alias("hx"))
-
-    def build(h: str) -> bytes:
-        def hdr(hh: str) -> tuple[int, int]:
-            v = int(hh[0:4], 16)
-            return (v - 65536 if v >= 32768 else v, int(hh[4:6], 16) % 89)
-
-        p0, i0 = hdr(h[0:6])
-        p1, i1 = hdr(h[38:44])
-        return adpcm.frame_wav_ima_multi(
-            _ADPCM_RATE,
-            [
-                (p0, i0, bytes.fromhex(h[6:38])),
-                (p1, i1, bytes.fromhex(h[44:76])),
-            ],
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = pdf["hx"].map(_nn(build))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payload})
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
+_SQL_ADPCM_MB_HEX = (
+    "substr(md5('p' || text), 1, 6) || md5('q' || text) || "
+    "substr(md5('s' || text), 1, 6) || md5('t' || text)"
+)
 
 
 _ADPCM_MB_ORACLE = f"""
@@ -1815,13 +1346,15 @@ def multimodal_decode_adpcm_multiblock(
     (doc_id, blk) — then aggregates per document. Same zero-shuffle
     Arrow-batched mapInPandas scale shape as every audio leg."""
     docs = load_table(spark, sf_dir, "documents")
-    stats = adpcm_stats(with_adpcm_multiblock_payload(docs))
-    return stats.select(
-        "doc_id",
-        "framerate",
-        "n_samples",
-        F.round("mean_abs", 6).alias("mean_abs"),
-        "max_abs",
+    payload = _payload(
+        docs,
+        lambda h: adpcm.frame_wav_ima_multi(
+            _ADPCM_RATE, [_ima_block(h[0:38]), _ima_block(h[38:76])]
+        ),
+        _SQL_ADPCM_MB_HEX,
+    )
+    return _audio_stats_select(
+        _decode(payload, _audio_stats(adpcm.decode_wav_ima), _AUDIO_SCHEMA)
     )
 
 
@@ -1829,45 +1362,6 @@ def multimodal_decode_adpcm_multiblock(
 # TIFF — the tag-directory container family (round-14 queue).
 
 _TIFF_W, _TIFF_H = 8, 6  # 48 gray bytes = all three md5 digests
-
-
-def with_tiff_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL 8x6 grayscale multi-strip TIFF per document
-    (pure-stdlib encoder; pixels = the full 48 bytes of the three
-    chained md5 digests). Byte order alternates by doc parity —
-    even docs little-endian (II), odd docs big-endian (MM) — so the
-    decode stage exercises BOTH real TIFF byte orders while the
-    oracle stays endianness-invariant (pixel bytes are identical)."""
-    flat = docs.select(
-        "doc_id",
-        F.concat(
-            F.md5(F.col("text")),
-            F.md5(F.concat(F.lit("x"), F.col("text"))),
-            F.md5(F.concat(F.lit("y"), F.col("text"))),
-        ).alias("pix_hex"),
-        (F.col("doc_id") % 2 == 1).alias("be"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = [
-                None
-                if h is None
-                else tiff.encode_gray8(
-                    _TIFF_W, _TIFF_H, bytes.fromhex(h), big_endian=bool(be)
-                )
-                for h, be in zip(pdf["pix_hex"], pdf["be"])
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payload})
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def tiff_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real TIFF payloads: byte-order dispatch,
-    sorted-tag IFD walk, offset indirection, multi-strip assembly,
-    then per-image pixel statistics."""
-    return _px_stats_stage(df, tiff.decode_gray8)
 
 
 # Oracle for multimodal_decode_tiff below: identical pixel statistics recomputed from
@@ -1893,61 +1387,36 @@ FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
 @register("multimodal_decode_tiff", oracle=_TIFF_ORACLE)
 def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec round-trip for the TAG-DIRECTORY container family:
-    encode each document's md5-derived pixels as an actual
-    multi-strip TIFF (byte-order header, sorted IFD, inline vs
-    out-of-line values, StripOffsets/StripByteCounts indirection —
-    half the corpus II, half MM) and decode it back with the
-    pure-stdlib parser. PNG covers linear chunk framing + DEFLATE,
-    GIF covers LZW sub-blocks, JPEG covers entropy coding; TIFF adds
-    random-access offset indirection, the container shape most
-    scientific/scan corpora arrive in. Same zero-shuffle Arrow-
-    batched mapInPandas scale shape as every image leg."""
+    encode each document's md5-derived pixels (the full 48 bytes of
+    the three chained digests) as an actual 8x6 multi-strip TIFF
+    (byte-order header, sorted IFD, inline vs out-of-line values,
+    StripOffsets/StripByteCounts indirection) and decode it back with
+    the pure-stdlib parser. Byte order alternates by doc parity —
+    even docs II, odd docs MM — so the decode stage exercises BOTH
+    orders while the oracle stays endianness-invariant. PNG covers
+    linear chunk framing + DEFLATE, GIF covers LZW sub-blocks, JPEG
+    covers entropy coding; TIFF adds random-access offset
+    indirection, the container shape most scientific/scan corpora
+    arrive in. Same zero-shuffle Arrow-batched mapInPandas scale
+    shape as every image leg."""
     docs = load_table(spark, sf_dir, "documents")
-    return _px_stats_select(tiff_stats(with_tiff_payload(docs)))
+    payload = _payload(
+        docs,
+        lambda h, be: tiff.encode_gray8(
+            _TIFF_W, _TIFF_H, bytes.fromhex(h), big_endian=be
+        ),
+        _SQL_PIX_HEX,
+        "doc_id % 2 = 1",
+    )
+    return _px_stats_select(
+        _decode(payload, _px_stats(tiff.decode_gray8), _PX_SCHEMA)
+    )
 
 
 # ---------------------------------------------------------------
 # BMP — bottom-up rows, stride padding, palette (round-14 queue).
 
 _BMP_W, _BMP_H = 6, 8  # 48 gray bytes; stride 8 pads 2 per row
-
-
-def with_bmp_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL 6x8 palettized BMP per document (pure-stdlib
-    encoder; pixels = the full 48 bytes of the three chained md5
-    digests). Width 6 forces non-trivial 4-byte stride padding and
-    the bottom-up row order means a naive top-down read would
-    scramble every image — the stats happen to be order-invariant,
-    so the JVM conformance tests (pixel-exact) carry that property,
-    while the oracle here pins the palette/stride walk."""
-    flat = docs.select(
-        "doc_id",
-        F.concat(
-            F.md5(F.col("text")),
-            F.md5(F.concat(F.lit("x"), F.col("text"))),
-            F.md5(F.concat(F.lit("y"), F.col("text"))),
-        ).alias("pix_hex"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = pdf["pix_hex"].map(
-                _nn(
-                    lambda h: bmp.encode_gray8(
-                        _BMP_W, _BMP_H, bytes.fromhex(h)
-                    )
-                )
-            )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payload})
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def bmp_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real BMP payloads: signature + header walk,
-    palette mapping, stride-padded bottom-up row assembly, then
-    per-image pixel statistics."""
-    return _px_stats_stage(df, bmp.decode_gray8)
 
 
 # Oracle for multimodal_decode_bmp below: identical pixel statistics recomputed from
@@ -1978,55 +1447,25 @@ def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTTOM-UP row storage, 4-byte stride padding (width 6 pads 2
     bytes per row), and 256-entry identity-gray palette indirection,
     the three layout properties PNG/GIF/JPEG/TIFF never exercise.
-    Same zero-shuffle Arrow-batched mapInPandas scale shape as every
-    image leg."""
+    The stats are row-order-invariant, so the JVM conformance tests
+    (pixel-exact) carry the bottom-up property while the oracle here
+    pins the palette/stride walk. Same zero-shuffle Arrow-batched
+    mapInPandas scale shape as every image leg."""
     docs = load_table(spark, sf_dir, "documents")
-    return _px_stats_select(bmp_stats(with_bmp_payload(docs)))
+    payload = _payload(
+        docs,
+        lambda h: bmp.encode_gray8(_BMP_W, _BMP_H, bytes.fromhex(h)),
+        _SQL_PIX_HEX,
+    )
+    return _px_stats_select(
+        _decode(payload, _px_stats(bmp.decode_gray8), _PX_SCHEMA)
+    )
 
 
 # ---------------------------------------------------------------
 # TGA — run-length packets, origin bit, v2 footer.
 
 _TGA_W, _TGA_H = 8, 6  # 48 gray bytes, same tie-free divisor domain
-
-
-def with_tga_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL 8x6 grayscale RLE TGA per document (pure-stdlib
-    encoder; pixels = the full 48 bytes of the three chained md5
-    digests). Row origin alternates by doc parity — even docs
-    bottom-up (the TGA default), odd docs top-down (descriptor bit
-    0x20) — so the decode stage exercises BOTH origins while the
-    oracle stays origin-invariant (pixel multiset is identical)."""
-    flat = docs.select(
-        "doc_id",
-        F.concat(
-            F.md5(F.col("text")),
-            F.md5(F.concat(F.lit("x"), F.col("text"))),
-            F.md5(F.concat(F.lit("y"), F.col("text"))),
-        ).alias("pix_hex"),
-        (F.col("doc_id") % 2 == 1).alias("td"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payload = [
-                None
-                if h is None
-                else tga.encode_gray8(
-                    _TGA_W, _TGA_H, bytes.fromhex(h), top_down=bool(td)
-                )
-                for h, td in zip(pdf["pix_hex"], pdf["td"])
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payload})
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def tga_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real TGA payloads: header walk, RLE
-    run/literal packet expansion with the no-line-crossing rule,
-    origin-bit row assembly, then per-image pixel statistics."""
-    return _px_stats_stage(df, tga.decode_gray8)
 
 
 # Oracle for multimodal_decode_tga: identical pixel statistics
@@ -2054,15 +1493,26 @@ def multimodal_decode_tga(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec round-trip for the RUN-LENGTH compression family:
     encode each document's md5-derived pixels as an actual RLE TGA
     (run/literal packets, per-scan-line framing, origin-bit row
-    order alternating by doc parity, trailing v2 footer) and decode
-    it back with the pure-stdlib parser. PNG covers DEFLATE, GIF
-    covers LZW, JPEG covers entropy coding — TGA adds byte-oriented
-    RLE, the simplest compression scheme still shipped in
-    scan/game-asset corpora, plus a trailing footer that breaks any
-    pixels-run-to-EOF assumption. Same zero-shuffle Arrow-batched
-    mapInPandas scale shape as every image leg."""
+    order alternating by doc parity — even docs bottom-up, odd docs
+    top-down — trailing v2 footer) and decode it back with the
+    pure-stdlib parser. PNG covers DEFLATE, GIF covers LZW, JPEG
+    covers entropy coding — TGA adds byte-oriented RLE, the simplest
+    compression scheme still shipped in scan/game-asset corpora,
+    plus a trailing footer that breaks any pixels-run-to-EOF
+    assumption. Same zero-shuffle Arrow-batched mapInPandas scale
+    shape as every image leg."""
     docs = load_table(spark, sf_dir, "documents")
-    return _px_stats_select(tga_stats(with_tga_payload(docs)))
+    payload = _payload(
+        docs,
+        lambda h, td: tga.encode_gray8(
+            _TGA_W, _TGA_H, bytes.fromhex(h), top_down=td
+        ),
+        _SQL_PIX_HEX,
+        "doc_id % 2 = 1",
+    )
+    return _px_stats_select(
+        _decode(payload, _px_stats(tga.decode_gray8), _PX_SCHEMA)
+    )
 
 
 # ---------------------------------------------------------------
@@ -2091,50 +1541,6 @@ _SQL_AIFF_SAMPLES = f"""
 """
 
 
-def with_aiff_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL mono 16-bit AIFF per document (pure-stdlib
-    encoder: big-endian FORM/AIFF chunk framing, 80-bit extended
-    sample rate, big-endian PCM body)."""
-    hex_col = F.concat(
-        F.md5(F.concat(F.lit("af1"), F.col("text"))),
-        F.md5(F.concat(F.lit("af2"), F.col("text"))),
-        F.md5(F.concat(F.lit("af3"), F.col("text"))),
-        F.md5(F.concat(F.lit("af4"), F.col("text"))),
-    )
-    flat = docs.select("doc_id", hex_col.alias("sample_hex"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        for pdf in batches:
-            payload = pdf["sample_hex"].map(
-                _nn(
-                    lambda h: aiff.encode_pcm16(
-                        list(
-                            _struct.unpack(
-                                f"<{_AIFF_N}h", bytes.fromhex(h)
-                            )
-                        ),
-                        _AIFF_RATE,
-                    )
-                )
-            )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payload}
-            )
-
-    return flat.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def aiff_stats(df: DataFrame) -> DataFrame:
-    """Decode stage over real AIFF payloads: IFF chunk walk (unknown
-    chunks skipped by size, odd-length pad bytes honored), 80-bit
-    extended rate decode, big-endian PCM unpack — then the shared
-    per-clip sample statistics (any ``bytes -> (rate, samples)``
-    decoder fits the stage)."""
-    return _g711_stats(df, aiff.decode_pcm16)
-
-
 # Oracle for multimodal_decode_aiff: identical int16 samples
 # recomputed from the md5 hex; divisor 32 is dyadic, so mean_abs is
 # exact on both engines before the shared 6-digit round.
@@ -2159,7 +1565,8 @@ FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
 def multimodal_decode_aiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec round-trip for the BIG-ENDIAN IFF container family:
     encode each document's md5-derived int16 samples as an actual
-    FORM/AIFF file and decode it back with the pure-stdlib parser.
+    FORM/AIFF file and decode it back with the pure-stdlib parser
+    (unknown chunks skipped by size, odd-length pad bytes honored).
     WAV covers RIFF (little-endian); AIFF is its EA-IFF 85 ancestor
     with the opposite byte order throughout AND the 80-bit IEEE
     extended sample-rate field — the one place a pipeline still
@@ -2171,11 +1578,11 @@ def multimodal_decode_aiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     big-endian PCM swap breaks the hash match. Same zero-shuffle
     Arrow-batched mapInPandas scale shape as every audio leg."""
     docs = load_table(spark, sf_dir, "documents")
-    stats = aiff_stats(with_aiff_payload(docs))
-    return stats.select(
-        "doc_id",
-        "framerate",
-        "n_samples",
-        F.round("mean_abs", 6).alias("mean_abs"),
-        "max_abs",
+    payload = _payload(
+        docs,
+        lambda h: aiff.encode_pcm16(_int16s(h), _AIFF_RATE),
+        _SQL_AIFF_HEX,
+    )
+    return _audio_stats_select(
+        _decode(payload, _audio_stats(aiff.decode_pcm16), _AUDIO_SCHEMA)
     )

@@ -336,11 +336,16 @@ def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interleaved A/B, identical output). inheritable_thread_target
     # keeps job-group/description/tag thread-locals correct per the
     # PySpark threading contract; .result() re-raises any leg failure.
+    # With pinned-thread mode off, PySpark hands the session back
+    # instead of a wrapper; the legs then run in sequence.
     _inherit = inheritable_thread_target(spark)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        bm_f = pool.submit(_inherit(_build_bm_top))
-        cos_f = pool.submit(_inherit(_build_cos_top))
-        bm_top, cos_top = bm_f.result(), cos_f.result()
+    if callable(_inherit):
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            bm_f = pool.submit(_inherit(_build_bm_top))
+            cos_f = pool.submit(_inherit(_build_cos_top))
+            bm_top, cos_top = bm_f.result(), cos_f.result()
+    else:
+        bm_top, cos_top = _build_bm_top(), _build_cos_top()
     bm_rank = _join_rank(bm_top, "score", "doc_id")
     cos_rank = _join_rank(cos_top, "cos", "doc_id")
     bm = bm_rank.select("doc_id", F.col("rnk").alias("bm_rnk"))

@@ -43,7 +43,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-vector cosine/dot fold, pure narrow work that a
     # one-row-group parquet file would otherwise run on one core;
     # at scale the scan arrives wide and this is a no-op (see
-    # tables.widen_small_scan)
+    # tables.load_table)
     return load_table(spark, sf_dir, "embeddings", widen=True).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )

@@ -568,7 +568,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     two integer sizes are each projected ONCE in their own step;
     CollapseProject keeps the boundaries because each intermediate
     is non-cheap and multiply referenced. The scan is widened so the
-    remaining narrow work parallelizes (tables.widen_small_scan)."""
+    remaining narrow work parallelizes (tables.load_table)."""
     docs = load_table(spark, sf_dir, "documents", widen=True)
     toked = docs.select(
         "doc_id", tokens_col(F.col("text"), keep_empty=False).alias("ts")

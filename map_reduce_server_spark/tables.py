@@ -79,118 +79,6 @@ def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
         return default
 
 
-# Logical-plan node names that keep a DataFrame's partitioning equal
-# to its underlying file scan's: narrow per-row ops only. Anything
-# else (Repartition, Join, Aggregate, Window, ...) changes or hides
-# the partitioning, so the file-size estimate below would be wrong —
-# those fall back to the RDD probe.
-_SCAN_ONLY_NODES = frozenset(
-    {"Project", "Filter", "Relation", "SubqueryAlias", "LogicalRDD"}
-)
-
-
-def _is_bare_scan(df: DataFrame) -> bool:
-    """True iff the logical plan is narrow ops over one relation —
-    the only shape whose partition count the file listing determines.
-    A ``repartition`` (or any exchange-introducing op) must defeat
-    the estimate: ``inputFiles()`` sees through transformations, so
-    an already-widened frame would otherwise look narrow again."""
-    try:
-        # analyzed (not logical): the parsed tree of a fresh read is
-        # a single opaque UnresolvedDataSource node. Analysis is the
-        # cheap front half of what ``df.rdd`` forces anyway (it skips
-        # optimization + physical planning + RDD conversion).
-        tree = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return False
-    for line in tree.splitlines():
-        head = line.lstrip(" +-:")
-        node = head.split(" ", 1)[0].split("[", 1)[0]
-        if node and node not in _SCAN_ONLY_NODES:
-            return False
-    return True
-
-
-def _estimate_scan_partitions(df: DataFrame) -> int | None:
-    """Estimate how many tasks a file scan produces WITHOUT the
-    physical-planning pass ``df.rdd`` forces (round 16, ADVICE item):
-    Spark packs files into splits of ``maxPartitionBytes``, charging
-    ``openCostInBytes`` per file, so the split count is
-    ``ceil(sum(size + openCost) / maxPartitionBytes)`` — exact for
-    the single-file tables here and a sound estimate in general
-    (large files split at maxPartitionBytes, which the byte total
-    captures). Returns None when the plan is not a bare scan or any
-    input is not a stat-able local file — the caller then falls back
-    to the RDD probe."""
-    spark = df.sparkSession
-    if not _is_bare_scan(df):
-        return None
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    mpb = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
-    open_cost = _bytes_conf(spark, "spark.sql.files.openCostInBytes", 4 * 1024**2)
-    total = 0
-    for f in files:
-        path = f[len("file:"):] if f.startswith("file:") else f
-        if not os.path.isfile(path):
-            return None
-        total += os.path.getsize(path) + open_cost
-    return max(1, -(-total // mpb))
-
-
-def widen_small_scan(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a scan UP to the session's default
-    parallelism when it arrives with fewer partitions — and only
-    then (round 15, guide §2.5 "input skew").
-
-    Why: a small parquet table is one file with one row group, so
-    Spark scans it as ONE task no matter how many cores exist, and
-    every expensive narrow operation downstream (tokenize + shingle
-    explode, per-shingle md5 banks, per-vector cosine folds) runs
-    single-threaded before the first exchange. Measured at sf0.1 on
-    local[32]: minhash_wide 2.57 s -> 1.39 s median just from this.
-
-    Scale-adaptivity: the trigger is the SCAN's own parallelism, not
-    a constant — a 100 TB table scans as thousands of splits, so the
-    estimate >= defaultParallelism and this is a no-op (no added
-    exchange). It only fires when the input layout under-fills the
-    cluster, where a repartition of a provably tiny input is the
-    right call on any topology. Callers opt in per operator:
-    payload-carrying scans (multimodal blobs) and plans whose first
-    op is already an exchange must NOT pay an extra shuffle, so this
-    is never applied blanket in load_table.
-
-    The partition count comes from the scan's file listing + the
-    split-packing arithmetic (round 16): the former
-    ``df.rdd.getNumPartitions()`` probe forced a full physical-
-    planning pass per operator call (~25-40 ms of driver latency
-    each) just to read a number the file sizes already determine.
-    Non-local/non-stat-able inputs fall back to the RDD probe.
-    Caveat (ADVICE r15): under dynamic allocation
-    ``defaultParallelism`` at plan-build time may lag the executor
-    count at run time, so the widen target can under- or over-shoot
-    on elastic clusters — acceptable for a heuristic whose miss cost
-    is one undersized round-robin exchange, and the gate never fires
-    at all once the scan itself fills the cluster.
-
-    Predicate pushdown / column pruning survive: Catalyst pushes
-    filters and projections through round-robin Repartition nodes,
-    so PushedFilters still reach the parquet scan below the added
-    exchange (checked in plans/r15/*_after.txt).
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    est = _estimate_scan_partitions(df)
-    if est is None:
-        est = df.rdd.getNumPartitions()
-    if est < target:
-        return df.repartition(target)
-    return df
-
-
 def _path_scan_estimate(spark: SparkSession, path: str) -> int | None:
     """Split-count estimate for a known parquet path from the
     filesystem alone — zero Spark calls, so the widen decision in
@@ -221,14 +109,29 @@ def load_table(
 ) -> DataFrame:
     """Load one star-schema table from ``{sf_dir}/{name}.parquet``.
 
-    ``widen=True`` applies the :func:`widen_small_scan` policy (round
-    16): because the parquet path is known HERE, the partition-count
-    estimate comes straight from ``os.path.getsize`` — the former
-    per-call ``df.rdd.getNumPartitions()`` probe forced a full
-    physical-planning pass (~25-40 ms driver latency per operator
-    call, the ADVICE r15 item) to read a number the file layout
-    already determines. Falls back to :func:`widen_small_scan`'s
-    plan-aware probe for non-local storage.
+    ``widen=True`` round-robin repartitions the scan UP to the
+    session's default parallelism when it arrives with fewer
+    partitions — and only then. A small parquet table is one file
+    with one row group, so Spark scans it as ONE task however many
+    cores exist, and every expensive narrow operation downstream
+    (shingle explodes, md5 banks, cosine folds, Python codec decodes)
+    runs single-threaded before the first exchange (minhash_wide
+    2.57 -> 1.39 s at sf0.1 on local[32]). A large table scans as
+    many splits, so the gate never fires there. Callers opt in per
+    operator: a scan that feeds straight into a groupBy/window
+    exchange measured 2x SLOWER widened, so this is never blanket.
+    Predicate pushdown and column pruning survive: Catalyst pushes
+    both through the round-robin Repartition to the parquet scan.
+
+    The partition count comes from ``os.path.getsize`` and Spark's
+    split-packing arithmetic (:func:`_path_scan_estimate`), not from
+    a ``df.rdd.getNumPartitions()`` probe, which forces a full
+    physical-planning pass (~25-40 ms of driver latency per call).
+    Non-local storage, where files cannot be stat-ed, falls back to
+    that probe; the frame is a bare read at that point, so the probe
+    sees the scan's own partitioning. Under dynamic allocation
+    ``defaultParallelism`` at build time may lag the executor count
+    at run time; a miss costs one undersized round-robin exchange.
 
     ``events.ts`` has shipped in two physical encodings across
     driver-generated datasets, both normalized here to a zoned
@@ -256,7 +159,7 @@ def load_table(
     if widen:
         est = _path_scan_estimate(spark, f"{sf_dir}/{name}.parquet")
         if est is None:
-            return widen_small_scan(df)
+            est = df.rdd.getNumPartitions()
         target = spark.sparkContext.defaultParallelism
         if est < target:
             df = df.repartition(target)

@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 
 from map_reduce_server_spark.functions.tokens import word_tokens_col
 from map_reduce_server_spark.operators.dedup import shingles_df
-from map_reduce_server_spark.tables import load_table, widen_small_scan
+from map_reduce_server_spark.plans.inspect import explain_str
+from map_reduce_server_spark.tables import load_table
 
 
 def _legacy_distinct_shingles(spark, sf_dir):
@@ -70,9 +71,9 @@ def test_non_distinct_keeps_multiplicity(spark, sf_small):
     assert raw.count() > dedup.count()
 
 
-def test_widen_small_scan_widens_and_preserves_rows(spark, sf_small):
+def test_load_table_widen_widens_and_preserves_rows(spark, sf_small):
     docs = load_table(spark, sf_small, "documents")
-    widened = widen_small_scan(docs)
+    widened = load_table(spark, sf_small, "documents", widen=True)
     target = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < target:
         assert widened.rdd.getNumPartitions() == target
@@ -81,13 +82,27 @@ def test_widen_small_scan_widens_and_preserves_rows(spark, sf_small):
     assert docs.exceptAll(widened).isEmpty()
 
 
-def test_widen_small_scan_noop_when_already_wide(spark, sf_small):
-    docs = load_table(spark, sf_small, "documents")
-    target = spark.sparkContext.defaultParallelism
-    already_wide = docs.repartition(target + 3)
+def test_load_table_widen_noop_when_scan_fills_parallelism(
+    spark, sf_small, monkeypatch
+):
     # a scan at/above the session parallelism must NOT pay a new
-    # exchange — the 100 TB case where inputs arrive as many splits
-    assert widen_small_scan(already_wide) is already_wide
+    # exchange — the 100 TB case where inputs arrive as many splits;
+    # 256-byte splits make the one-file fixture scan that way. Checked
+    # on the file-size estimate and on the RDD-probe fallback.
+    from map_reduce_server_spark import tables
+
+    session = spark.newSession()
+    session.conf.set("spark.sql.files.maxPartitionBytes", "256")
+    target = session.sparkContext.defaultParallelism
+
+    def assert_not_widened():
+        wide = load_table(session, sf_small, "documents", widen=True)
+        assert wide.rdd.getNumPartitions() >= target
+        assert "Exchange" not in explain_str(wide)
+
+    assert_not_widened()
+    monkeypatch.setattr(tables, "_path_scan_estimate", lambda *_a: None)
+    assert_not_widened()
 
 
 def test_array_verified_common_counts_exact_intersection(spark):
@@ -172,40 +187,22 @@ def test_positional_filter_is_lossless(spark, sf_medium):
     assert unfiltered.exceptAll(filtered).isEmpty()
 
 
-def test_load_table_widen_matches_plan_probe(spark, sf_small):
+def test_load_table_widen_matches_plan_probe(spark, sf_small, monkeypatch):
     """round 16: load_table(widen=True)'s file-size split estimate
-    must reach the same widen decision as the plan-level probe —
-    same partition count, row-identical result."""
-    from map_reduce_server_spark.tables import (
-        _path_scan_estimate,
-        load_table,
-        widen_small_scan,
-    )
+    must equal the RDD probe, and the probe fallback (taken on
+    non-local storage, forced here) must reach the same widen
+    decision — same partition count, row-identical result."""
+    from map_reduce_server_spark import tables
 
-    for name in ("documents", "embeddings"):
-        plain = load_table(spark, sf_small, name)
-        est = _path_scan_estimate(spark, f"{sf_small}/{name}.parquet")
-        assert est == plain.rdd.getNumPartitions()
-        fast = load_table(spark, sf_small, name, widen=True)
-        slow = widen_small_scan(plain)
-        assert fast.rdd.getNumPartitions() == slow.rdd.getNumPartitions()
-        assert fast.exceptAll(plain).isEmpty()
-        assert plain.exceptAll(fast).isEmpty()
-
-
-def test_widen_small_scan_rdd_fallback_on_non_scan_plans(spark, sf_small):
-    """round 16: the bare-scan gate must route non-scan plans (whose
-    partitioning the file listing cannot see) to the RDD probe — a
-    joined frame narrower than the session parallelism still widens,
-    an already-repartitioned frame still no-ops (covered above)."""
-    from map_reduce_server_spark.tables import (
-        _estimate_scan_partitions,
-        load_table,
-    )
-
-    docs = load_table(spark, sf_small, "documents")
-    joined = docs.join(
-        docs.select("doc_id"), "doc_id"
-    )
-    assert _estimate_scan_partitions(joined) is None
-    assert _estimate_scan_partitions(docs.select("doc_id", "text")) == 1
+    names = ("documents", "embeddings")
+    plain = {n: load_table(spark, sf_small, n) for n in names}
+    fast = {n: load_table(spark, sf_small, n, widen=True) for n in names}
+    for n in names:
+        est = tables._path_scan_estimate(spark, f"{sf_small}/{n}.parquet")
+        assert est == plain[n].rdd.getNumPartitions()
+    monkeypatch.setattr(tables, "_path_scan_estimate", lambda *_a: None)
+    for n in names:
+        slow = load_table(spark, sf_small, n, widen=True)
+        assert fast[n].rdd.getNumPartitions() == slow.rdd.getNumPartitions()
+        assert fast[n].exceptAll(plain[n]).isEmpty()
+        assert plain[n].exceptAll(fast[n]).isEmpty()

@@ -38,35 +38,6 @@ def test_write_numbered_text(spark, tmp_path):
     assert not os.path.exists(os.path.join(out, "_staging"))
 
 
-def test_write_numbered_text_pre_finalize_failure_leaves_dest_intact(
-    spark, tmp_path
-):
-    """pre_finalize runs after the distributed write action but
-    before the destination is touched: if it raises (post-action
-    input validation failing), previous output files survive
-    unchanged and no staging residue is left — a failed job must
-    never leave complete-looking but data-missing output."""
-    import pytest
-
-    out = str(tmp_path / "out")
-    first = spark.createDataFrame([("old1",), ("old2",)], ["value"]).repartition(2)
-    write_numbered_text(first, out)
-    before = {
-        p: open(os.path.join(out, p)).read() for p in sorted(os.listdir(out))
-    }
-
-    def boom():
-        raise RuntimeError("input file silently skipped")
-
-    second = spark.createDataFrame([("new",)], ["value"]).coalesce(1)
-    with pytest.raises(RuntimeError, match="silently skipped"):
-        write_numbered_text(second, out, pre_finalize=boom)
-    after = {
-        p: open(os.path.join(out, p)).read() for p in sorted(os.listdir(out))
-    }
-    assert after == before  # old outputs intact, no staging dir left
-
-
 def test_write_numbered_text_metachar_output_dir(spark, tmp_path):
     """An output dir containing glob metacharacters must finalize
     correctly: an unescaped glob over the staging dir matches

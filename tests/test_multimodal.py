@@ -6,7 +6,6 @@ import pandas as pd
 import pytest
 
 from map_reduce_server_spark.operators.multimodal import (
-    decode_batch,
     decode_payloads,
     with_synthetic_payload,
 )
@@ -24,16 +23,9 @@ def test_payload_is_binary_with_metadata(spark, sf_small):
     assert row.meta.byte_len == 32
 
 
-def test_decode_real_codecs_are_stubbed():
-    pdf = pd.DataFrame({"doc_id": [1], "payload": [b"\x01\x02"], "fmt": ["png"]})
-    with pytest.raises(NotImplementedError):
-        decode_batch(pdf, fake=False)
-
-
 def test_resize_rejects_non_png_payload(spark, sf_small):
     """resize_images is now a real PNG stage; the synthetic md5-byte
-    payloads are not PNGs, so the codec must reject them (the real
-    guard for the still-env-gated jpeg/wav modalities)."""
+    payloads are not PNGs, so the codec must reject them."""
     from pyspark.errors import PythonException
 
     from map_reduce_server_spark.operators.multimodal import resize_images
@@ -43,19 +35,9 @@ def test_resize_rejects_non_png_payload(spark, sf_small):
         resize_images(with_synthetic_payload(docs), 64, 64).collect()
 
 
-def test_frame_sample_strides_blocks(spark, sf_small):
-    from map_reduce_server_spark.operators.multimodal import frame_sample
-
-    docs = load_table(spark, sf_small, "documents").limit(5)
-    out = frame_sample(with_synthetic_payload(docs), every_n=2).collect()
-    for r in out:
-        # 8 blocks of 4 bytes, stride 2 → 4 blocks = 16 bytes
-        assert len(r.frames) == 16
-
-
 def test_decode_fake_path_runs_distributed(spark, sf_small):
     docs = load_table(spark, sf_small, "documents").limit(10)
-    decoded = decode_payloads(with_synthetic_payload(docs), fake=True)
+    decoded = decode_payloads(with_synthetic_payload(docs))
     rows = decoded.collect()
     assert len(rows) == 10
     for r in rows:
@@ -276,20 +258,9 @@ def test_null_text_yields_null_stats_not_crash(spark):
         df.coalesce(1).write.mode("overwrite").parquet(
             f"{d}/documents.parquet"
         )
-        for name in [
-            "multimodal_decode_png",
-            "multimodal_resize_png",
-            "multimodal_decode_wav",
-            "multimodal_decode_jpeg",
-            "multimodal_decode_jpeg_color",
-            "multimodal_decode_jpeg_progressive",
-            "multimodal_decode_alaw",
-            "multimodal_decode_mulaw",
-            "multimodal_decode_video",
-            "multimodal_features",
-            "multimodal_meta",
-            "multimodal_decode",
-        ]:
+        names = sorted(n for n in registry.QUERIES if n.startswith("multimodal_"))
+        assert len(names) >= 20
+        for name in names:
             sdf = registry.QUERIES[name](spark, d).toPandas()
             con = duckdb.connect()
             con.execute(
@@ -1153,10 +1124,15 @@ def test_adpcm_multiblock_spark_path(spark, sf_small):
     encode_wav_ima files (samples_per_block=9 -> 4 full blocks + a
     header-only padded final block at n=37, exercising cross-block
     index carry and the fact-trimmed tail) inside mapInPandas, run
-    the shared adpcm_stats decode stage, and check every row against
-    a driver-side replay of the closed-loop reconstruction."""
+    the shared audio decode stage the ADPCM queries use, and check
+    every row against a driver-side replay of the closed-loop
+    reconstruction."""
     from map_reduce_server_spark.functions import adpcm
-    from map_reduce_server_spark.operators.multimodal import adpcm_stats
+    from map_reduce_server_spark.operators.multimodal import (
+        _AUDIO_SCHEMA,
+        _audio_stats,
+        _decode,
+    )
 
     docs = load_table(spark, sf_small, "documents").select("doc_id").limit(40)
 
@@ -1179,7 +1155,9 @@ def test_adpcm_multiblock_spark_path(spark, sf_small):
             r["mean_abs"],
             r["max_abs"],
         )
-        for r in adpcm_stats(framed).collect()
+        for r in _decode(
+            framed, _audio_stats(adpcm.decode_wav_ima), _AUDIO_SCHEMA
+        ).collect()
     }
     assert len(got) == 40
     for doc_id, row in got.items():

@@ -54,6 +54,16 @@ def test_threaded_rrf_equals_sequential(spark, sf_medium, monkeypatch):
     assert len(threaded) == 10
 
 
+def test_rrf_sequential_when_pinned_threads_off(spark, sf_medium, monkeypatch):
+    """With PySpark's pinned-thread mode off, inheritable_thread_target
+    returns the session itself (not a wrapper); the legs must then
+    run in sequence and give the threaded result."""
+    threaded = _rows(retrieval.q_hybrid_retrieval_rrf(spark, sf_medium))
+    monkeypatch.setattr(retrieval, "inheritable_thread_target", lambda s: s)
+    unpinned = _rows(retrieval.q_hybrid_retrieval_rrf(spark, sf_medium))
+    assert unpinned == threaded
+
+
 def test_rrf_leg_failure_propagates(spark, sf_medium, monkeypatch):
     def _boom(*_a, **_k):
         raise RuntimeError("leg build failed")
