@@ -105,6 +105,27 @@ def test_load_table_widen_noop_when_scan_fills_parallelism(
     assert_not_widened()
 
 
+def test_widen_small_scan_rdd_fallback_on_non_scan_plans(
+    spark, sf_small, monkeypatch
+):
+    """When the file listing cannot see the scan (non-local storage,
+    forced here), load_table(widen=True) decides from the RDD probe
+    of the bare read alone: a scan narrower than the session
+    parallelism still widens to exactly that parallelism through one
+    round-robin exchange, rows unchanged."""
+    from map_reduce_server_spark import tables
+
+    docs = load_table(spark, sf_small, "documents")
+    target = spark.sparkContext.defaultParallelism
+    assert docs.rdd.getNumPartitions() < target
+    monkeypatch.setattr(tables, "_path_scan_estimate", lambda *_a: None)
+    wide = load_table(spark, sf_small, "documents", widen=True)
+    assert wide.rdd.getNumPartitions() == target
+    assert "Exchange" in explain_str(wide)
+    assert wide.exceptAll(docs).isEmpty()
+    assert docs.exceptAll(wide).isEmpty()
+
+
 def test_array_verified_common_counts_exact_intersection(spark):
     # round-15: _verified_common counts |A∩B| via array_intersect on
     # the distinct per-doc arrays — pin against hand-computed counts
