@@ -7,8 +7,8 @@ Spark, designed Spark-first:
 - the reference's whole query surface (``pipe(mapper) -> sort ->
   group-partition -> pipe(reducer)``, see reference
   ``mapreduce/master/__main__.py:220-467``) is provided by
-  :mod:`map_reduce_server_spark.mapreduce` on ``RDD.pipe`` +
-  ``repartitionAndSortWithinPartitions``;
+  :mod:`map_reduce_server_spark.mapreduce` on mapper/reducer
+  subprocess pipes + ``repartitionAndSortWithinPartitions``;
 - the relational operator library (scan/filter/project/join/agg/
   window/set-ops/...) lives in :mod:`map_reduce_server_spark.operators`
   as declarative DataFrame plans that Catalyst optimizes;

@@ -1,6 +1,2 @@
-"""Text-directory sources and numbered-file sinks (reference parity)."""
-
-from map_reduce_server_spark.io.sources import read_text_dir
-from map_reduce_server_spark.io.sinks import write_numbered_text
-
-__all__ = ["read_text_dir", "write_numbered_text"]
+"""File-layout helpers: the façade's numbered-file sink, compaction,
+Z-order layout and temp-dir cleanup."""

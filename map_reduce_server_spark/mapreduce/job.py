@@ -26,7 +26,9 @@ reference's master/worker split makes). (3)+(4) are one
 ``repartitionAndSortWithinPartitions`` with a partitioner keyed by
 the dense rank of the line — computed distributedly via
 ``sortBy().zipWithIndex()`` over the distinct lines (two narrow
-passes; no driver-side data). Spark's scheduler/shuffle/retries
+passes; no driver-side data). (5) is one task per reducer partition
+that points the reducer's stdout at its own ``outputfile{NN}``
+(``io.sinks.write_numbered_text``). Spark's scheduler/shuffle/retries
 subsume the reference's entire control plane (SURVEY.md §2.C).
 
 Scale note: shipping paths instead of contents means the job's input
@@ -146,7 +148,7 @@ def _mapped_lines(
     IS the reference's whole-line byte sort, so an identity mapper
     over non-UTF-8 input (``cat`` on a binary file) flows through
     map/sort/group/reduce exactly as the reference's byte-oriented
-    pipeline does; text decoding happens only at the final sink.
+    pipeline does, all the way into the reducer's output file.
 
     A listed file that cannot be opened fails the task loudly — the
     scan-skips-a-file failure mode of input-format-based ingestion
@@ -175,67 +177,43 @@ def _mapped_lines(
 
 
 def _pipe_partition(cmd: list[str]):
-    """Stream a partition through one subprocess — ``RDD.pipe``
-    semantics (feeder thread, line-per-element, non-zero exit fails
-    the task) but with the executor's environment inherited, matching
-    the reference's workers (``RDD.pipe`` passes ``env={}``).
-    Elements in and out are raw ``bytes`` lines (str input is
-    accepted and UTF-8 encoded), so a binary-emitting consumer is
-    processed, not crashed on.
+    """Pipe a partition through one subprocess into a file — the
+    reference worker's reduce step (stdin from the sorted partition,
+    stdout straight into the output file). Unlike ``RDD.pipe``, the
+    subprocess inherits the executor's environment (``RDD.pipe``
+    passes ``env={}``), and its stdout never passes through Python,
+    so the file holds exactly the bytes the reducer wrote: no UTF-8
+    decoding, no added final newline.
 
-    A consumer that exits before draining stdin (``head`` as reducer)
-    closes the pipe early; the feeder swallows the resulting
-    ``BrokenPipeError`` exactly as ``RDD.pipe``'s feeder thread does,
-    and the exit-code check still governs success.
+    Returns ``write_part(lines, out)`` for ``io.sinks.write_numbered_text``:
+    it writes each ``bytes`` line plus ``\n`` to the subprocess's
+    stdin, closes stdin on every exit path (an upstream error must
+    not leave the reducer waiting for EOF), and fails on a non-zero
+    exit. A reducer that exits before draining stdin (``head``)
+    closes the pipe early; the resulting ``BrokenPipeError`` is
+    swallowed exactly as ``RDD.pipe``'s feeder does, and the exit
+    status still decides success.
     """
 
-    def run(it):
+    def write_part(lines, out):
         import subprocess
-        import threading
 
-        with subprocess.Popen(
-            cmd, stdin=subprocess.PIPE, stdout=subprocess.PIPE
-        ) as proc:
-            assert proc.stdin is not None and proc.stdout is not None
-            feed_error: list[BaseException] = []
-
-            def feed():
-                # stdin must close on EVERY exit path: a feeder that
-                # dies without closing leaves the consumer waiting
-                # for EOF and the task hangs instead of failing.
-                # Non-pipe errors (the upstream iterator raising, an
-                # unexpected OSError) are rethrown after join, as
-                # RDD.pipe's feeder does.
+        with subprocess.Popen(cmd, stdin=subprocess.PIPE, stdout=out) as proc:
+            assert proc.stdin is not None
+            try:
+                for line in lines:
+                    proc.stdin.write(line)
+                    proc.stdin.write(b"\n")
+            except BrokenPipeError:
+                pass
+            finally:
                 try:
-                    for x in it:
-                        # bytes from the map/group pipeline pass
-                        # through raw; str (direct callers, tests)
-                        # is encoded — byte-identical for UTF-8.
-                        proc.stdin.write(
-                            x if isinstance(x, bytes) else x.encode("utf-8")
-                        )
-                        proc.stdin.write(b"\n")
-                except (BrokenPipeError, ValueError):
-                    # consumer exited early / closed its end
+                    proc.stdin.close()
+                except BrokenPipeError:
                     pass
-                except BaseException as exc:  # noqa: BLE001
-                    feed_error.append(exc)
-                finally:
-                    try:
-                        proc.stdin.close()
-                    except (BrokenPipeError, ValueError):
-                        pass
-
-            t = threading.Thread(target=feed, daemon=True)
-            t.start()
-            for line in proc.stdout:
-                yield line.rstrip(b"\n")
-            t.join()
-            if feed_error:
-                raise feed_error[0]
         _check_exit(cmd, proc.returncode)
 
-    return run
+    return write_part
 
 
 def group_partition(mapped, num_reducers: int):
@@ -310,39 +288,11 @@ def run_job(spark: SparkSession, job: MapReduceJob) -> list[str]:
     )
     grouped = group_partition(mapped, job.num_reducers)
 
-    # --- reduce stage: pipe each sorted partition through the reducer.
-    reduced = grouped.mapPartitions(
-        _pipe_partition(shlex.split(job.reducer_executable))
-    )
-
-    # --- finalize: outputfileNN naming (master/__main__.py:456-463).
-    # Explicit schema: toDF would need to infer from data and raises
-    # on a job whose total output is empty — the reference writes
-    # (empty) outputfileNN files instead.
-    #
-    # The pipeline above is byte-faithful end-to-end; the TEXT SINK
-    # is the one UTF-8 boundary (Spark's text writer stores strings).
-    # A reducer that emits non-UTF-8 bytes fails HERE with a named
-    # error instead of a bare UnicodeDecodeError inside a task — the
-    # reference copies raw reducer files so it has no such boundary;
-    # a binary-output job needs a binary sink, not silent mangling.
-    def _to_text_row(line: bytes):
-        try:
-            return (line.decode("utf-8"),)
-        except UnicodeDecodeError as exc:
-            raise ValueError(
-                f"reducer `{job.reducer_executable}' emitted a "
-                f"non-UTF-8 output line ({line[:40]!r}...); the text "
-                f"sink stores UTF-8 text — route binary output to a "
-                f"binary sink instead"
-            ) from exc
-
-    out_df = spark.createDataFrame(
-        reduced.map(_to_text_row), "value string"
-    )
-    # reducer count passed explicitly: trailing EMPTY reducers must
-    # still emit their outputfileNN (reference copies every reducer's
-    # file), and the sink must not re-execute the plan to count them
+    # --- reduce stage: each sorted partition's task pipes it through
+    # the reducer straight into its outputfileNN
+    # (master/__main__.py:448-467).
     return write_numbered_text(
-        out_df, job.output_directory, n_parts=job.num_reducers
+        grouped,
+        job.output_directory,
+        _pipe_partition(shlex.split(job.reducer_executable)),
     )

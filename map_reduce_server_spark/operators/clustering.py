@@ -18,15 +18,10 @@ hand-built graphs pin exactness besides (tests/test_clustering.py).
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map_reduce_server_spark.functions.exact import qsum40, sql_qsum40
-from map_reduce_server_spark.io.tempdirs import cleanup_at_exit
 from map_reduce_server_spark.registry import register
 from map_reduce_server_spark.stagecut import stage_cut
 from map_reduce_server_spark.tables import load_table
@@ -38,8 +33,7 @@ from map_reduce_server_spark.tables import load_table
 # derivatives). Below this node count the node-sized side is
 # broadcast-hinted, so the edge-sized side — the dominant bytes —
 # never shuffles inside the loop; above it the hint is withheld and
-# the planner/AQE falls back to shuffle joins (clusters additionally
-# have pagerank's bucketed_adjacency mode). 2M rows of (long, double)
+# the planner/AQE falls back to shuffle joins. 2M rows of (long, double)
 # ≈ 32 MB payload per broadcast — comfortably under the 8 GB/512M-row
 # broadcast cap and the sort of size §3.1 calls "usually fine", while
 # a 100 TB graph (billions of nodes) stays on the shuffle path. Same
@@ -54,9 +48,8 @@ _ITER_BROADCAST_MAX_NODES = 2_000_000
 # near the shared 2M gate that is ~150 broadcasts of ~32 MB hashed
 # relations whose release waits on ContextCleaner GC. Two-thirds of
 # the shared gate keeps the same per-iteration broadcast byte budget
-# as pagerank; larger graphs take the shuffle path (and long-iteration
-# deployments the bucketed-adjacency pattern) instead of betting on
-# timely broadcast cleanup.
+# as pagerank; larger graphs take the shuffle path instead of betting
+# on timely broadcast cleanup.
 _CC_BROADCAST_MAX_NODES = (_ITER_BROADCAST_MAX_NODES * 2) // 3
 
 
@@ -99,8 +92,7 @@ def connected_components(
     )
     # stage_cut each iteration: truncates the lineage so the
     # logical plan stays O(1) deep instead of O(iterations) — without
-    # it Catalyst re-analyzes an exponentially growing tree. (See
-    # stagecut.py for the local-vs-reliable checkpoint policy.)
+    # it Catalyst re-analyzes an exponentially growing tree.
     adj = adj.transform(stage_cut)
     # Seed labels with one propagation for free: min over neighbors
     # (self-loop included) IS iteration 1's pre-jump candidate, and
@@ -245,7 +237,6 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PR_ITERS = 3
 _PR_DAMPING = 0.85
-_PR_BUCKETS = 32  # bucket count for bucketed_adjacency mode
 # Parity node encoding: customer k -> 2k, supplier k -> 2k+1. The two
 # key spaces are disjoint at ANY scale factor — a fixed additive
 # offset (the previous scheme) silently collides once custkeys grow
@@ -285,7 +276,6 @@ def pagerank(
     edges: DataFrame,
     iters: int = _PR_ITERS,
     damping: float = _PR_DAMPING,
-    bucketed_adjacency: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an edge list (src, dst).
 
@@ -312,21 +302,7 @@ def pagerank(
     ``adj``-derived ranks, and Spark silently misresolves that
     self-join — but a checkpointed scan advertises
     ``UnknownPartitioning``, so the checkpointed sides are
-    re-shuffled every iteration (measured; see SCALING.md). A/B at
-    sf0.1 (warm session, alternating runs): the default wins
-    DECISIVELY at every measured iteration count — 4.2 s vs 9.1 s at
-    iters=3 and 11.9 s vs ~30 s at iters=12 — because on a single
-    node the bucketed table is re-READ from disk each iteration
-    while the checkpoint re-shuffles from memory. The
-    ``bucketed_adjacency=True`` path (adjacency written ONCE
-    bucketed by src; every iteration's join derives its partitioning
-    from the bucketed scan — zero exchange over the dominant side,
-    verified by
-    ``tests/test_plans.py::test_pagerank_bucketed_adjacency_no_shuffle``)
-    is therefore NOT the local default; it is the multi-executor
-    cluster pattern, where "re-shuffle" means moving the dominant
-    side across the network every iteration and a co-located
-    bucketed scan reads node-local files instead.
+    re-shuffled every iteration (measured; see SCALING.md).
     The last iteration is returned un-checkpointed: callers aggregate
     or collect it anyway, and the final plan stays inspectable.
     """
@@ -365,29 +341,9 @@ def pagerank(
         "node",
         (F.lit(1.0) / F.col("n_nodes").cast("double")).alias("rank"),
     )
-    adj = edges.join(_hint(deg.withColumnRenamed("node", "src")), "src")
-    if bucketed_adjacency:
-        # Write-once bucketed adjacency: the iteration join's
-        # partitioning comes from the bucketed scan, so the dominant
-        # side never re-shuffles. Worth it when iters is large; the
-        # default checkpointed path wins at iters=3 (the one-time
-        # write costs more than three shuffles of the same bytes).
-        spark = edges.sparkSession
-        tmp = tempfile.mkdtemp(prefix="mrss_pr_adj_")
-        tname = f"pr_adj_{uuid.uuid4().hex[:8]}"
-        (
-            adj.write.bucketBy(_PR_BUCKETS, "src")
-            .sortBy("src")
-            .option("path", os.path.join(tmp, "t"))
-            .mode("overwrite")
-            .saveAsTable(tname)
-        )
-        # The table entry lives for the session (the returned plan
-        # still reads it); backing files are removed at exit.
-        cleanup_at_exit(tmp)
-        adj = spark.table(tname)
-    else:
-        adj = adj.transform(stage_cut)
+    adj = edges.join(
+        _hint(deg.withColumnRenamed("node", "src")), "src"
+    ).transform(stage_cut)
     for i in range(iters):
         rk = _hint(ranks)
         contrib = (

@@ -7,48 +7,18 @@ pointer-jumping connected components) and multi-consumer plans
 exponentially deep lineage or re-execute an expensive subtree per
 consumer. A cut bounds both.
 
-Why a *policy* and not bare ``localCheckpoint`` calls:
-``localCheckpoint`` stores the cut blocks on executor-local storage
-with NO replication and severed lineage — if an executor is lost,
-the blocks are unrecoverable and the query fails. On the local[32]
-gate (one JVM, no executor loss) that is free and optimal; on a
-1000-executor cluster where node loss is routine, a long pipeline
-should pay the extra write for a RELIABLE checkpoint instead. The
-switch is a session conf so cluster deployments flip it in
-spark-submit without code changes:
-
-    spark.mapReduceServerSpark.reliableStageCut=true
-    (and set ``spark.sparkContext.setCheckpointDir`` to a
-    DFS path — reliable checkpoints require one; ``stage_cut``
-    fails loudly otherwise, which is the correct behavior on a
-    cluster rather than silently keeping non-replicated blocks)
-
-Both modes keep the other load-bearing property the operators rely
-on: the returned DataFrame's logical plan is a fresh leaf (an
-``LogicalRDD``/checkpoint scan), so Catalyst cannot re-expand the
-upstream subtree, per-iteration plans stay O(1) deep, and eager
-cuts run exactly one job at construction time.
+A cut is ``localCheckpoint``: executor-local blocks, no replication,
+no DFS round-trip. The returned DataFrame's logical plan is a fresh
+leaf (a ``LogicalRDD``), so Catalyst cannot re-expand the upstream
+subtree, per-iteration plans stay O(1) deep, and eager cuts run
+exactly one job at construction time.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-RELIABLE_CONF = "spark.mapReduceServerSpark.reliableStageCut"
-
 
 def stage_cut(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` and sever its lineage.
-
-    Default (gate / single-node): ``localCheckpoint`` — executor-local
-    blocks, zero replication, no DFS round-trip. With
-    ``spark.mapReduceServerSpark.reliableStageCut=true``: a reliable
-    ``checkpoint`` to the session's checkpoint dir, surviving executor
-    loss at cluster scale.
-    """
-    reliable = (
-        df.sparkSession.conf.get(RELIABLE_CONF, "false") or "false"
-    ).lower() == "true"
-    if reliable:
-        return df.checkpoint(eager=eager)
+    """Materialize ``df`` and sever its lineage (``localCheckpoint``)."""
     return df.localCheckpoint(eager=eager)

@@ -4,7 +4,7 @@ The reference's only source is a directory of line-oriented text
 files (reference ``mapreduce/master/__main__.py:288-289``); the new
 engine's primary source is columnar parquet so Catalyst gets
 predicate pushdown + column pruning for free. Text-dir reading for
-the MapReduce façade lives in :mod:`map_reduce_server_spark.io`.
+the MapReduce façade lives in :mod:`map_reduce_server_spark.mapreduce`.
 """
 
 from __future__ import annotations

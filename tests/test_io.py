@@ -6,27 +6,19 @@ import os
 
 import pytest
 
-from map_reduce_server_spark.io import read_text_dir, write_numbered_text
+from map_reduce_server_spark.io.sinks import write_numbered_text
 
 
-def test_read_text_dir_tracks_file(spark, tmp_path):
-    d = tmp_path / "in"
-    d.mkdir()
-    (d / "alpha.txt").write_text("one\ntwo\n")
-    (d / "beta.txt").write_text("three\n")
-    df = read_text_dir(spark, str(d))
-    rows = {(r.file, r.value) for r in df.collect()}
-    assert rows == {
-        ("alpha.txt", "one"),
-        ("alpha.txt", "two"),
-        ("beta.txt", "three"),
-    }
+def write_lines(lines, out):
+    """The simplest ``write_part``: each element plus a newline."""
+    for line in lines:
+        out.write(line + b"\n")
 
 
 def test_write_numbered_text(spark, tmp_path):
-    df = spark.createDataFrame([("x",), ("y",), ("z",)], ["value"]).repartition(2)
+    rdd = spark.sparkContext.parallelize([b"x", b"y", b"z"], 2)
     out = str(tmp_path / "out")
-    paths = write_numbered_text(df, out)
+    paths = write_numbered_text(rdd, out, write_lines)
     assert [os.path.basename(p) for p in paths] == [
         "outputfile01",
         "outputfile02",
@@ -35,23 +27,23 @@ def test_write_numbered_text(spark, tmp_path):
     for p in paths:
         lines.extend(open(p).read().splitlines())
     assert sorted(lines) == ["x", "y", "z"]
-    assert not os.path.exists(os.path.join(out, "_staging"))
+    # no temp file survives a successful write
+    assert sorted(os.listdir(out)) == ["outputfile01", "outputfile02"]
 
 
 def test_write_numbered_text_metachar_output_dir(spark, tmp_path):
-    """An output dir containing glob metacharacters must finalize
-    correctly: an unescaped glob over the staging dir matches
-    nothing, which silently fabricated EMPTY outputfileNN files and
-    deleted the staged data (total output loss with a success
-    return)."""
-    df = spark.createDataFrame([("x",), ("y",)], ["value"]).repartition(2)
+    """An output dir containing glob metacharacters must be treated
+    as a literal path: a glob over it matches nothing, which once
+    fabricated EMPTY outputfileNN files and deleted the real data
+    (total output loss with a success return)."""
+    rdd = spark.sparkContext.parallelize([b"x", b"y"], 2)
     out = str(tmp_path / "run[1]" / "out,dir")
-    paths = write_numbered_text(df, out)
+    paths = write_numbered_text(rdd, out, write_lines)
     lines = []
     for p in paths:
         lines.extend(open(p).read().splitlines())
     assert sorted(lines) == ["x", "y"]
-    assert not os.path.exists(os.path.join(out, "_staging"))
+    assert sorted(os.listdir(out)) == ["outputfile01", "outputfile02"]
 
 
 def test_events_ntz_normalization_is_tz_proof(spark, tmp_path):
@@ -189,28 +181,20 @@ def test_xml_roundtrip(spark, sf_small, tmp_path):
     )
 
 
-def test_write_numbered_text_trailing_empty_needs_n_parts(spark, tmp_path):
-    """Trailing empty partitions: derivable only from the caller's
-    n_parts (the text writer emits no file for them, and the sink
-    must not re-execute the plan to count partitions). With n_parts
-    they materialize as empty files; without, the written files
-    alone bound the output."""
-    from pyspark.sql import Row
-
+def test_write_numbered_text_trailing_empty_partitions(spark, tmp_path):
+    """Trailing empty partitions materialize as empty files: every
+    partition runs a task that writes its own file, so no partition
+    count has to be passed in or recovered from the written files."""
     rdd = (
-        spark.sparkContext.parallelize([(0, "alpha")])
+        spark.sparkContext.parallelize([(0, b"alpha")])
         .partitionBy(3, lambda k: k)  # partitions 1 and 2 stay empty
-        .map(lambda kv: Row(value=kv[1]))
+        .map(lambda kv: kv[1])
     )
-    df = spark.createDataFrame(rdd, "value string")
-    out = str(tmp_path / "with_n")
-    paths = write_numbered_text(df, out, n_parts=3)
+    out = str(tmp_path / "out")
+    paths = write_numbered_text(rdd, out, write_lines)
     assert [os.path.basename(p) for p in paths] == [
         "outputfile01", "outputfile02", "outputfile03",
     ]
+    assert open(paths[0], "rb").read() == b"alpha\n"
     assert os.path.getsize(paths[1]) == 0
     assert os.path.getsize(paths[2]) == 0
-
-    out2 = str(tmp_path / "without_n")
-    paths2 = write_numbered_text(df, out2)
-    assert [os.path.basename(p) for p in paths2] == ["outputfile01"]

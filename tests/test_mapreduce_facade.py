@@ -494,27 +494,86 @@ def test_binary_lines_traverse_pipeline(spark, tmp_path):
     assert [ln.strip() for ln in _read_outputs(out)] == ["3"]
 
 
-def test_binary_reducer_output_fails_at_sink(spark, tmp_path):
-    """The one UTF-8 boundary is the TEXT SINK: a reducer that emits
-    non-UTF-8 output fails with a named error (not a bare
-    UnicodeDecodeError inside a task) — the reference copies raw
-    reducer files, so a binary-output job needs a binary sink."""
+def test_binary_reducer_output_is_byte_exact(spark, tmp_path):
+    """``outputfileNN`` holds exactly the bytes the reducer wrote, as
+    the reference's byte-for-byte copy does: non-UTF-8 output is kept
+    and a missing final newline is not added."""
     d = tmp_path / "in"
     d.mkdir()
-    (d / "f_bin").write_bytes(b"\xff\xfe\n")
+    (d / "f1").write_text("x\n")
     out = str(tmp_path / "out")
-    with pytest.raises(Exception, match="non-UTF-8 output line"):
+    reducer = tmp_path / "binary_reduce.py"
+    reducer.write_text(
+        "import sys\n"
+        "sys.stdin.buffer.read()\n"
+        "sys.stdout.buffer.write(b'\\xff\\xfe')\n"
+    )
+    run_job(
+        spark,
+        MapReduceJob(
+            input_directory=str(d),
+            output_directory=out,
+            mapper_executable="cat",
+            reducer_executable=f"python3 {reducer}",
+            num_mappers=1,
+            num_reducers=1,
+        ),
+    )
+    with open(os.path.join(out, "outputfile01"), "rb") as fh:
+        assert fh.read() == b"\xff\xfe"
+
+
+def test_failing_reducer_publishes_nothing(spark, tmp_path, input_dir):
+    """A reducer that exits non-zero fails the job with the pipe's
+    exit-status error and leaves neither its ``outputfileNN`` nor
+    the temp file it was writing."""
+    out = str(tmp_path / "out")
+    with pytest.raises(Exception, match="Pipe function `.*' exited with status 3"):
         run_job(
             spark,
             MapReduceJob(
-                input_directory=str(d),
+                input_directory=input_dir,
                 output_directory=out,
                 mapper_executable="cat",
-                reducer_executable="cat",
-                num_mappers=1,
+                reducer_executable="sh -c 'cat; exit 3'",
+                num_mappers=2,
                 num_reducers=1,
             ),
         )
+    assert os.listdir(out) == []
+
+
+def test_rerun_with_fewer_reducers_leaves_only_new_files(
+    spark, tmp_path, input_dir
+):
+    """A narrower re-run into the same directory removes the wider
+    run's ``outputfileNN`` (and any leftover temp file), so a glob
+    consumer never mixes stale and new output."""
+    out = str(tmp_path / "out")
+
+    def job(num_reducers):
+        return MapReduceJob(
+            input_directory=input_dir,
+            output_directory=out,
+            mapper_executable=f"python3 {os.path.join(_EXAMPLES, 'wc_map.py')}",
+            reducer_executable=(
+                f"python3 {os.path.join(_EXAMPLES, 'wc_reduce.py')}"
+            ),
+            num_mappers=2,
+            num_reducers=num_reducers,
+        )
+
+    run_job(spark, job(3))
+    assert len(os.listdir(out)) == 3
+    open(os.path.join(out, ".outputfile02.99"), "w").close()
+    paths = run_job(spark, job(1))
+    assert os.listdir(out) == ["outputfile01"]
+    assert paths == [os.path.join(out, "outputfile01")]
+    got = Counter()
+    for line in _read_outputs(out):
+        word, n = line.rsplit("\t", 1)
+        got[word] += int(n)
+    assert got == _expected_wordcount()
 
 
 def test_subprocess_env_inherited(spark, tmp_path):
@@ -597,18 +656,19 @@ def test_sink_numbering_is_partition_id_true(spark, tmp_path):
     (``master/__main__.py:456-463``). The load-bearing case is an
     EARLIER partition being empty: partition 1's data must land in
     outputfile02, never slide into outputfile01."""
-    from pyspark.sql import Row
-
     from map_reduce_server_spark.io.sinks import write_numbered_text
 
+    def write_lines(lines, out):
+        for line in lines:
+            out.write(line + b"\n")
+
     rdd = (
-        spark.sparkContext.parallelize([(1, "beta"), (2, "gamma")])
+        spark.sparkContext.parallelize([(1, b"beta"), (2, b"gamma")])
         .partitionBy(3, lambda k: k)  # partition 0 stays empty
-        .map(lambda kv: Row(value=kv[1]))
+        .map(lambda kv: kv[1])
     )
-    df = spark.createDataFrame(rdd, "value string")
     out = str(tmp_path / "out_pid")
-    paths = write_numbered_text(df, out)
+    paths = write_numbered_text(rdd, out, write_lines)
     names = sorted(os.listdir(out))
     assert names == ["outputfile01", "outputfile02", "outputfile03"]
     assert [os.path.basename(p) for p in paths] == names
@@ -695,27 +755,29 @@ def test_zero_reducers_rejected_at_driver(spark, tmp_path, input_dir):
             )
 
 
-def test_pipe_partition_feeder_error_propagates():
+def test_pipe_partition_feeder_error_propagates(tmp_path):
     """An upstream iterator failing mid-feed must fail the task, not
-    hang it: the feeder closes the consumer's stdin on EVERY exit
-    path (a dead feeder leaves `cat` waiting for EOF forever) and
-    rethrows non-pipe errors after join, like RDD.pipe's feeder."""
+    hang it: the task closes the consumer's stdin on EVERY exit path
+    (an unclosed stdin leaves `cat` waiting for EOF forever) and the
+    upstream error is the one raised."""
     from map_reduce_server_spark.mapreduce.job import _pipe_partition
 
     def bad_iter():
-        yield "a"
+        yield b"a"
         raise OSError("upstream shuffle read failed")
 
-    run = _pipe_partition(["cat"])
-    with pytest.raises(OSError, match="upstream shuffle read failed"):
-        list(run(bad_iter()))
+    write_part = _pipe_partition(["cat"])
+    with open(tmp_path / "out", "wb") as out:
+        with pytest.raises(OSError, match="upstream shuffle read failed"):
+            write_part(bad_iter(), out)
 
 
-def test_pipe_partition_early_exit_consumer():
+def test_pipe_partition_early_exit_consumer(tmp_path):
     """A consumer that exits before draining stdin (`head`) must
     succeed with its partial output, not raise BrokenPipeError."""
     from map_reduce_server_spark.mapreduce.job import _pipe_partition
 
-    run = _pipe_partition(["head", "-2"])
-    got = list(run(iter([f"line{i}" for i in range(100000)])))
-    assert got == [b"line0", b"line1"]
+    write_part = _pipe_partition(["head", "-2"])
+    with open(tmp_path / "out", "wb") as out:
+        write_part((b"line%d" % i for i in range(100000)), out)
+    assert (tmp_path / "out").read_bytes() == b"line0\nline1\n"

@@ -358,28 +358,6 @@ def test_pagerank_iteration_shuffle_inventory(spark, sf_small):
     assert set(hashex) <= {"src", "dst", "node"}, hashex
 
 
-def test_pagerank_bucketed_adjacency_no_shuffle(spark, sf_small):
-    """bucketed_adjacency=True writes the adjacency once bucketed by
-    src; every iteration's join must then take its partitioning from
-    the bucketed scan — NO exchange over the adjacency side — and the
-    ranks must be bit-identical to the default path."""
-    from map_reduce_server_spark.operators.clustering import (
-        _trade_edges,
-        pagerank,
-    )
-
-    default = pagerank(_trade_edges(spark, sf_small))
-    bucketed = pagerank(_trade_edges(spark, sf_small), bucketed_adjacency=True)
-    plan = explain_str(bucketed, mode="simple")
-    # the adjacency arrives via the bucketed table scan...
-    assert "pr_adj_" in plan
-    # ...and is never re-shuffled (the default path DOES shuffle src)
-    assert "Exchange hashpartitioning(src" not in plan
-    a = {r["node"]: r["rank"] for r in default.collect()}
-    b = {r["node"]: r["rank"] for r in bucketed.collect()}
-    assert a == b
-
-
 def test_single_partition_exchanges_are_aggregate_combines(spark, sf_small):
     """Registry-wide lint #2: an Exchange SinglePartition is only
     acceptable as the final combine of a GLOBAL AGGREGATE (its child

@@ -1,15 +1,9 @@
-"""The stage-cut policy: localCheckpoint by default, reliable
-checkpoint when the cluster conf asks for it (ADVICE round 7:
-executor-local cut blocks are unrecoverable on executor loss, so
-long pipelines on real clusters need the switch)."""
+"""The stage-cut policy: a cut is a localCheckpoint that severs
+lineage."""
 
 from __future__ import annotations
 
-import tempfile
-
-import pytest
-
-from map_reduce_server_spark.stagecut import RELIABLE_CONF, stage_cut
+from map_reduce_server_spark.stagecut import stage_cut
 
 
 def _plan(df) -> str:
@@ -21,73 +15,3 @@ def test_default_is_local_checkpoint(spark):
     assert df.count() == 100
     # lineage severed: the plan is a checkpoint scan, not a Range
     assert "Range" not in _plan(df)
-
-
-def test_reliable_mode_uses_reliable_checkpoint(spark):
-    with tempfile.TemporaryDirectory() as d:
-        spark.sparkContext.setCheckpointDir(d)
-        spark.conf.set(RELIABLE_CONF, "true")
-        try:
-            df = spark.range(50).transform(stage_cut)
-            assert df.count() == 50
-            assert "Range" not in _plan(df)
-            # a reliable checkpoint writes RDD blocks under the dir
-            import os
-
-            files = [
-                os.path.join(r, f)
-                for r, _, fs in os.walk(d)
-                for f in fs
-            ]
-            assert files, "reliable checkpoint wrote nothing"
-        finally:
-            spark.conf.set(RELIABLE_CONF, "false")
-
-
-def test_reliable_mode_without_dir_fails_loudly(spark):
-    # a fresh context normally has no checkpoint dir; simulate the
-    # misconfiguration contract: conf on + no dir => loud error, not
-    # a silent fallback to non-replicated local blocks. (The session
-    # is shared across tests, so only assert when no dir is set.)
-    if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-        spark.conf.set(RELIABLE_CONF, "true")
-        try:
-            with pytest.raises(Exception):
-                spark.range(10).transform(stage_cut).count()
-        finally:
-            spark.conf.set(RELIABLE_CONF, "false")
-
-
-@pytest.mark.parametrize("name", ["graph_pagerank", "dedup_cluster"])
-def test_reliable_mode_carries_iterative_operators(spark, sf_small, name):
-    """The policy composed with the plans it was built for (VERDICT
-    r8): run the iterative operators whose per-iteration cuts are
-    load-bearing END TO END in reliable mode — conf on + checkpoint
-    dir — and assert full oracle parity, not just that the mode
-    switch flips. Catches anything a reliable checkpoint scan does
-    differently from a localCheckpoint scan mid-plan (partitioning
-    advertisement, attribute-id reuse across iterations)."""
-    from map_reduce_server_spark import registry
-    from tests.oracle_utils import compare_to_oracle
-
-    registry.load_all()
-    with tempfile.TemporaryDirectory() as d:
-        old_dir = spark.sparkContext._jsc.sc().getCheckpointDir()
-        spark.sparkContext.setCheckpointDir(d)
-        spark.conf.set(RELIABLE_CONF, "true")
-        try:
-            df = registry.QUERIES[name](spark, sf_small)
-            ok, msg = compare_to_oracle(
-                df, registry.ORACLE[name], sf_small
-            )
-            assert ok, f"{name} (reliable stage cuts): {msg}"
-            # and the reliable cuts actually wrote checkpoint blocks
-            import os
-
-            assert any(
-                fs for _, _, fs in os.walk(d)
-            ), "no reliable checkpoint data written"
-        finally:
-            spark.conf.set(RELIABLE_CONF, "false")
-            if not old_dir.isEmpty():
-                spark.sparkContext.setCheckpointDir(old_dir.get())
