@@ -32,11 +32,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def md5_hex(col: Column) -> Column:
-    """md5 hex digest (32 chars) of a string column."""
-    return F.md5(col.cast("string"))
-
-
 def md5_long(col: Column) -> Column:
     """First 60 bits of md5 as a non-negative bigint."""
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("bigint")

@@ -1,2 +1,2 @@
-"""File-layout helpers: the façade's numbered-file sink, compaction,
-Z-order layout and temp-dir cleanup."""
+"""File-layout helpers: the façade's numbered-file sink, Z-order
+layout and temp-dir cleanup."""

@@ -313,34 +313,27 @@ def pagerank(
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("deg")
     ).transform(stage_cut)
-    # Node count materializes ONCE as a checkpointed 1-row table:
-    # the rank init and every iteration's broadcast teleport base
-    # derive from it, and without this each of the iters broadcasts
-    # would lazily re-run the COUNT over the node-sized deg table.
-    n1 = deg.agg(F.count("*").alias("n_nodes")).transform(stage_cut)
-    # One scalar read off the materialized 1-row count picks the
-    # loop's join strategy: under the gate the node-sized sides
-    # (ranks, per-iteration in-mass) are broadcast-hinted so the
-    # edge-sized adjacency never shuffles inside the loop — see
-    # _ITER_BROADCAST_MAX_NODES.
-    small = n1.first()["n_nodes"] <= _ITER_BROADCAST_MAX_NODES
+    # Node count read ONCE as a driver scalar off the materialized
+    # deg (one job): the rank init, the teleport base and the loop's
+    # join strategy all derive from it. 1.0 / n and (1.0 - d) / n in
+    # Python doubles are the oracle's own double expressions, so the
+    # output stays bit-identical to it.
+    n = deg.count()
+    if n == 0:
+        return deg.select("node", F.lit(0.0).alias("rank"))
+    # Under the gate the node-sized sides (ranks, per-iteration
+    # in-mass) are broadcast-hinted so the edge-sized adjacency never
+    # shuffles inside the loop — see _ITER_BROADCAST_MAX_NODES.
+    small = n <= _ITER_BROADCAST_MAX_NODES
 
     def _hint(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
 
-    basedf = n1.select(
-        (
-            (F.lit(1.0) - F.lit(damping)) / F.col("n_nodes").cast("double")
-        ).alias("base")
-    )
     # NOT stage-cut (round 16): the init ranks derive from the
     # already-cut deg by one narrow projection and are consumed once
     # (iteration 0's broadcast build side) — the former cut spent a
     # whole materialization job to save recomputing a projection.
-    ranks = deg.crossJoin(F.broadcast(n1)).select(
-        "node",
-        (F.lit(1.0) / F.col("n_nodes").cast("double")).alias("rank"),
-    )
+    ranks = deg.select("node", F.lit(1.0 / n).alias("rank"))
     adj = edges.join(
         _hint(deg.withColumnRenamed("node", "src")), "src"
     ).transform(stage_cut)
@@ -373,10 +366,10 @@ def pagerank(
         # aggregate already has (round 16; −17% wall at sf0.1,
         # identical output, and one fewer node-sized join per
         # iteration at any scale).
-        nxt = contrib.crossJoin(F.broadcast(basedf)).select(
+        nxt = contrib.select(
             "node",
             (
-                F.col("base")
+                F.lit((1.0 - damping) / n)
                 + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
             ).alias("rank"),
         )

@@ -511,21 +511,6 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ngram_col(n: int) -> Column:
-    """Word n-grams (non-distinct) from the shared tokenizer."""
-    toks = tokens_col(F.col("text"), keep_empty=False)
-    cnt = F.size(toks)
-    return F.when(
-        cnt >= n,
-        F.transform(
-            F.sequence(F.lit(1), cnt - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def _sql_ngrams(n: int) -> str:
     parts = " || ' ' || ".join(
         f"{_SQL_NE_TOKENS}[i + {j}]" if j else f"{_SQL_NE_TOKENS}[i]"

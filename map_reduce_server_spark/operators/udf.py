@@ -75,45 +75,6 @@ def q_pandas_udf_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def grouped_zscore(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-    """applyInPandas (grouped-map UDF): per-group z-score.
-
-    Demonstrates the per-group pandas contract; at 100 TB each group
-    must fit one worker's memory — callers should pre-aggregate or
-    bucket groups that can exceed it.
-    """
-    # derive the group/value types from the input schema — hardcoding
-    # "string" crashes the Arrow serializer for any non-string group
-    # column (e.g. a bigint user_id)
-    in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = (
-        f"{group_col} {in_fields[group_col]}, "
-        f"{value_col} {in_fields[value_col]}, zscore double"
-    )
-
-    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        std = pdf[value_col].std(ddof=1)
-        mean = pdf[value_col].mean()
-        if std and std > 0:
-            z = (pdf[value_col] - mean) / std
-        else:
-            # degenerate group (single row / zero variance): measured
-            # rows score 0.0, but a NULL value stays NULL — a bare
-            # scalar 0.0 would broadcast over NULL rows too, giving
-            # the same NULL input different zscores depending on its
-            # group's variance
-            z = pdf[value_col].where(pdf[value_col].isna(), 0.0)
-        return pd.DataFrame(
-            {
-                group_col: pdf[group_col],
-                value_col: pdf[value_col],
-                "zscore": z,
-            }
-        )
-
-    return df.groupBy(group_col).applyInPandas(per_group, schema=out_schema)
-
-
 @register(
     "q_salted_join",
     oracle=f"""

@@ -16,7 +16,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from map_reduce_server_spark import tables
+from map_reduce_server_spark.session import pin_semantics
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -48,18 +48,7 @@ def register(
             # including the grading driver's vanilla one, which would
             # otherwise render timestamps under the JVM default TZ
             # until the first events load flips the conf mid-session.
-            tables.pin_utc_session(spark)
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            # Spark 4 defaults ANSI ON (x/0 throws); the oracle
-            # contract is NULL-on-zero — a degenerate group must
-            # yield a NULL cell like DuckDB, not crash the query.
-            spark.conf.set("spark.sql.ansi.enabled", "false")
-            # ...but non-ANSI silently re-enables the LEGACY
-            # size(NULL) = -1 behavior, which no oracle can mirror
-            # (DuckDB len(NULL) is NULL): a NULL document would give
-            # n_tokens=-1, ratio=-1.0, even a wrong lang_guess.
-            # Pin the modern NULL-in-NULL-out semantics explicitly.
-            spark.conf.set("spark.sql.legacy.sizeOfNull", "false")
+            pin_semantics(spark)
             return fn(spark, sf_dir)
 
         if oracle is not None:

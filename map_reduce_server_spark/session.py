@@ -6,16 +6,61 @@ runtime already exists, so the only thing to configure is the SQL
 engine: AQE on (runtime re-planning, skew-join handling), shuffle
 partitions pinned to a fixed 32-partition upper bound that AQE
 coalesces down locally (they'd be sized to the cluster at 100 TB),
-Arrow for any Python-side exchange, and a pinned
-UTC session timezone so results compare exactly against external
-oracles.
+Arrow for any Python-side exchange, and the pinned session
+semantics (:data:`SEMANTICS`) so results compare exactly against
+external oracles.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
+
+# The session semantics every query's result depends on, in any
+# session — including the grading driver's vanilla one. Applied by
+# the get_spark builder and re-pinned at runtime by pin_semantics.
+SEMANTICS = {
+    # results compare exactly against external oracles only under a
+    # fixed zone; NTZ events casts resolve it lazily, so the pin is
+    # sticky for the whole session
+    "spark.sql.session.timeZone": "UTC",
+    # Spark 4 defaults ANSI mode ON, where x/0 THROWS; every DuckDB
+    # oracle (and the SQL the engine's users write against it)
+    # expects the NULL-on-zero convention, so a degenerate group
+    # (n=1 variance, all-zero revenue) would crash Spark while the
+    # oracle returns a NULL row
+    "spark.sql.ansi.enabled": "false",
+    # ...but non-ANSI re-enables the LEGACY size(NULL) = -1, which no
+    # oracle can mirror (DuckDB len(NULL) is NULL); pin the modern
+    # NULL-in-NULL-out semantics
+    "spark.sql.legacy.sizeOfNull": "false",
+    # events.parquet carries TIMESTAMP(NANOS); Spark has no nanos
+    # type, so read as long and convert (see tables.load_table)
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+def pin_semantics(spark: SparkSession) -> None:
+    """Set :data:`SEMANTICS` on a live session — the one runtime
+    writer of those confs (all are runtime-settable, and a session
+    the engine did not build may have none of them). The timezone pin
+    is sticky and NOT restored: a session that arrives with a
+    DIFFERENT explicit zone gets a loud warning, because its other
+    queries will see UTC too and silence would make that look like
+    engine nondeterminism instead of this contract."""
+    prev_tz = spark.conf.get("spark.sql.session.timeZone", None)
+    if prev_tz not in (None, "UTC"):
+        warnings.warn(
+            f"map_reduce_server_spark: pinning "
+            f"spark.sql.session.timeZone to UTC (was {prev_tz!r}) "
+            f"for the whole session — the engine's timestamp "
+            f"semantics require it, and it is NOT restored",
+            stacklevel=3,
+        )
+    for key, val in SEMANTICS.items():
+        spark.conf.set(key, val)
 
 
 def get_spark(
@@ -43,25 +88,11 @@ def get_spark(
         # AQE coalesces down when data is small, so oversizing is
         # harmless while matching the 32-thread bench box.
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        # Spark 4 defaults ANSI mode ON, where x/0 THROWS; every
-        # DuckDB oracle (and the SQL the engine's users write against
-        # it) expects the NULL-on-zero convention, so a degenerate
-        # group (n=1 variance, all-zero revenue) would crash Spark
-        # while the oracle returns a NULL row. Pinned off here AND in
-        # registry.pinned (the driver's vanilla session).
-        .config("spark.sql.ansi.enabled", "false")
-        # non-ANSI re-enables legacy size(NULL) = -1; oracles need
-        # NULL-in-NULL-out (mirrors registry.pinned)
-        .config("spark.sql.legacy.sizeOfNull", "false")
-        # events.parquet carries TIMESTAMP(NANOS); Spark has no nanos
-        # type, so read as long and convert (see tables.load_table).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for key, val in (extra_conf or {}).items():
+    for key, val in {**SEMANTICS, **(extra_conf or {})}.items():
         builder = builder.config(key, val)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

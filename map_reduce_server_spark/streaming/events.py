@@ -7,29 +7,30 @@ as a genuine streaming query (parquet file source → event-time
 window → sink); in tests/oracle runs it's driven to completion with
 ``processAllAvailable`` on the bounded input.
 
-Scale note: at 100 TB/day the same plan runs against a Kafka source
-with watermark-bounded state; the window key (window × event_type)
-is low-cardinality so state stays tiny. ``stream_window_counts``
-uses complete-mode to a memory sink only because the input is
-bounded and the result must come back as a DataFrame.
+Every ``stream_*`` query returns through :func:`run_bounded`, the one
+sink: each micro-batch goes through ``foreachBatch`` to per-batch
+parquet, and the runner reads the batches back as the result.
+
+Scale note: at 100 TB/day the same plans run against a Kafka source
+with watermark-bounded state; the window key (window x event_type)
+is low-cardinality so state stays tiny.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from map_reduce_server_spark.io.tempdirs import cleanup_at_exit
 from map_reduce_server_spark.registry import register
-from map_reduce_server_spark.tables import (
-    normalize_events_ts,
-    pin_utc_session,
-)
+from map_reduce_server_spark.session import pin_semantics
+from map_reduce_server_spark.tables import normalize_events_ts
 
 _WINDOW = "5 minutes"
 
@@ -103,19 +104,14 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _events_stream(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, str]:
-    """Streaming DataFrame over the bounded events table + the staged
-    landing-zone dir (caller removes it when the query is done)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    pin_utc_session(spark)
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming DataFrame over the bounded events table. The staged
+    landing-zone dir is removed at interpreter exit."""
+    pin_semantics(spark)
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # The file-stream source wants a directory; stage a symlink dir so
     # the (read-only) single-file table looks like a stream landing zone.
     stage = tempfile.mkdtemp(prefix="mrss_stream_")
-    # register up front: if anything between here and the caller's
-    # cleanup raises, the dir must still go at interpreter exit
     cleanup_at_exit(stage)
     # abspath: the symlink target resolves relative to the SYMLINK's
     # directory (in /tmp), so a relative sf_dir would stage a
@@ -127,79 +123,55 @@ def _events_stream(
     )
     stream = spark.readStream.schema(batch_schema).format("parquet").load(stage)
     # shared batch/stream ts normalization — see tables.normalize_events_ts
-    return normalize_events_ts(stream), stage
+    return normalize_events_ts(stream)
 
 
-def _read_deltas(spark: SparkSession, out: str, agg_schema) -> DataFrame:
-    """Read the foreachBatch delta files (``b*``), tolerating the
-    zero-batch case: a stream whose aggregation never emits leaves no
-    delta dirs, and a bare glob read would fail path resolution where
-    the oracle simply returns 0 rows."""
-    import glob as _glob
-
-    from pyspark.sql import types as T
-
-    delta_schema = T.StructType(
-        list(agg_schema.fields) + [T.StructField("batch_id", T.LongType())]
-    )
-    if not _glob.glob(os.path.join(out, "b*")):
-        return spark.createDataFrame([], delta_schema)
-    return spark.read.schema(delta_schema).parquet(os.path.join(out, "b*"))
-
-
-def _run_update_to_deltas(
-    spark: SparkSession,
-    agg: DataFrame,
-    key_cols: list[str],
-    stage: str,
-    prefix: str,
+def run_bounded(
+    stream: DataFrame, mode: str, keys: list[str] | None = None
 ) -> DataFrame:
-    """The idempotent update-mode delta sink, shared by every
-    streaming query that maintains keyed state: run ``agg`` to
-    completion writing per-batch parquet delta files, then reconcile
-    to the latest-batch row per key.
+    """Drive a streaming query over bounded input to completion and
+    return its result — the one sink every ``stream_*`` query uses.
 
-    Each micro-batch emits only the keys it updated — O(updated
-    keys) per batch, not O(all keys ever) as in complete mode — and
-    the writer keys files by batch id so re-runs of a batch
-    overwrite idempotently (exactly-once sink semantics on top of
-    at-least-once delivery). The delta dir registers for cleanup
-    BEFORE the query runs: a failed micro-batch must not leak it.
-    batch_id is written as an explicit bigint — a bare ``lit(int)``
-    is INT32 in parquet, readable only through Spark 4.x widening.
+    Each micro-batch goes through ``foreachBatch`` to ``b{batch_id}``
+    parquet; files keyed by batch id make a re-run of a batch
+    overwrite idempotently (exactly-once output on at-least-once
+    delivery), and nothing collects to the driver. With ``keys``
+    (update and complete mode) the result is the latest-batch row per
+    key; without (append mode) it is every emitted row. The output
+    dir registers for cleanup BEFORE the query starts, so a failed
+    micro-batch cannot leak it. batch_id is written as an explicit
+    bigint — a bare ``lit(int)`` is INT32 in parquet.
     """
-    out = tempfile.mkdtemp(prefix=prefix)
-    cleanup_at_exit(out)  # keep the delta files until interpreter exit
+    out = tempfile.mkdtemp(prefix="mrss_sink_")
+    cleanup_at_exit(out)
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
-            batch_df.withColumn(
-                "batch_id", F.lit(batch_id).cast("bigint")
-            )
+            batch_df.withColumn("batch_id", F.lit(batch_id).cast("bigint"))
             .write.mode("overwrite")
             .parquet(os.path.join(out, f"b{batch_id}"))
         )
 
-    query = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(_write_batch)
-        .start()
-    )
+    query = stream.writeStream.outputMode(mode).foreachBatch(_write_batch).start()
     try:
         query.processAllAvailable()
     finally:
         query.stop()
-        shutil.rmtree(stage, ignore_errors=True)
 
-    from pyspark.sql import Window
-
-    deltas = _read_deltas(spark, out, agg.schema)
-    w = Window.partitionBy(*key_cols).orderBy(F.desc("batch_id"))
-    return (
-        deltas.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(*agg.columns)
+    # Listed paths, not a ``b*`` glob: a stream that never emits
+    # leaves no batch dirs, where a glob read fails path resolution
+    # but zero listed paths read as an empty frame of the explicit
+    # schema (the oracle returns 0 rows).
+    schema = T.StructType(
+        stream.schema.fields + [T.StructField("batch_id", T.LongType())]
     )
+    rows = stream.sparkSession.read.schema(schema).parquet(
+        *glob.glob(os.path.join(out, "b*"))
+    )
+    if keys:
+        w = Window.partitionBy(*keys).orderBy(F.desc("batch_id"))
+        rows = rows.withColumn("rn", F.row_number().over(w)).filter("rn = 1")
+    return rows.select(*stream.columns)
 
 
 _STREAM_ORACLE = """
@@ -234,15 +206,14 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliver first (arrival-order-dependent, so no value oracle can
     pin it); the MIN-aggregate formulation is order-independent and
     therefore exactly replayable by the batch oracle, while still
-    running as true keyed streaming state in update mode through the
-    same idempotent foreachBatch delta sink as
-    ``stream_window_counts_incremental``. At scale, state is one row
-    per distinct key (the dedup table itself), and the sink writes
-    only updated keys per batch.
+    running as true keyed streaming state in update mode through
+    :func:`run_bounded`. At scale, state is one row per distinct key
+    (the dedup table itself), and the sink writes only updated keys
+    per batch.
     """
-    stream, stage = _events_stream(spark, sf_dir)
     deduped = (
-        stream.groupBy(
+        _events_stream(spark, sf_dir)
+        .groupBy(
             "event_type",
             (F.floor("value").cast("bigint") % 50).alias("value_bucket"),
         )
@@ -252,13 +223,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ts").alias("first_ts"),
         )
     )
-    return _run_update_to_deltas(
-        spark,
-        deduped,
-        ["event_type", "value_bucket"],
-        stage,
-        "mrss_stream_dedup_",
-    )
+    return run_bounded(deduped, "update", ["event_type", "value_bucket"])
 
 
 @register("stream_window_counts", oracle=_STREAM_ORACLE)
@@ -266,71 +231,31 @@ def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the windowed aggregation as a real streaming query over the
     bounded parquet input and return the final result.
 
-    Complete-mode + memory sink: the BOUNDED-INPUT oracle check only —
-    it re-emits the whole result per batch and collects it to the
-    driver, which does not survive unbounded input. The registered
-    scale pattern is ``stream_window_counts_incremental``.
+    Complete mode: every micro-batch re-emits the whole result, so
+    the latest batch per (window, event_type) is the answer. It is
+    kept as the output-mode variant of
+    ``stream_window_counts_incremental`` (the update-mode scale
+    pattern); sink I/O per batch is O(all windows ever).
     """
-    stream, stage = _events_stream(spark, sf_dir)
-    agg = windowed_event_counts(stream)
-    sink = f"stream_out_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-        shutil.rmtree(stage, ignore_errors=True)
-    # Materialize through a parquet round-trip and DROP the
-    # memory-sink view: spark.table(sink) is lazy and would pin one
-    # complete-mode result set per invocation for the session's
-    # life, while a collect()/createDataFrame round-trip converts
-    # timestamps through Python datetimes in OS-local time — a
-    # w_start in a DST fold hour would come back 3600 s off.
-    out = tempfile.mkdtemp(prefix="mrss_stream_complete_")
-    cleanup_at_exit(out)
-    dest = os.path.join(out, "r")
-    result = spark.table(sink)
-    schema = result.schema
-    try:
-        result.write.parquet(dest)
-    finally:
-        # even a failed write must not leak the memory-sink view —
-        # retries would pin one complete-mode result set per attempt
-        spark.catalog.dropTempView(sink)
-    # explicit schema: an empty result writes no part files, and a
-    # bare read would fail schema inference where the oracle simply
-    # returns 0 rows (same defense as _read_deltas)
-    return spark.read.schema(schema).parquet(dest)
+    agg = windowed_event_counts(_events_stream(spark, sf_dir))
+    return run_bounded(agg, "complete", ["w_start", "event_type"])
 
 
 @register("stream_window_counts_incremental", oracle=_STREAM_ORACLE)
 def stream_window_counts_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The scale-correct streaming sink: UPDATE-mode windowed
-    aggregation written incrementally through ``foreachBatch`` to
-    per-batch parquet delta files.
+    """The scale-correct streaming aggregation: UPDATE-mode windowed
+    counts through :func:`run_bounded`.
 
     Each micro-batch emits only the windows it updated — O(updated
-    windows) per batch, not O(all windows ever) as in complete mode —
-    and the writer keys files by batch id so re-runs of a batch
-    overwrite idempotently (exactly-once sink semantics on top of
-    at-least-once delivery). The final table is the latest-batch row
-    per (window, event_type), a window over the compact delta set.
+    windows) per batch, not O(all windows ever) as in complete mode.
+    The final table is the latest-batch row per (window, event_type).
     This is the pattern that survives unbounded input: state size is
-    bounded by the watermark, sink I/O by the update rate, and
-    nothing ever collects to the driver.
+    bounded by the watermark, sink I/O by the update rate.
     """
-    stream, stage = _events_stream(spark, sf_dir)
-    agg = windowed_event_counts(stream)
-    return _run_update_to_deltas(
-        spark, agg, ["w_start", "event_type"], stage, "mrss_stream_sink_"
-    )
+    agg = windowed_event_counts(_events_stream(spark, sf_dir))
+    return run_bounded(agg, "update", ["w_start", "event_type"])
 
 
 _STREAM_TRENDING_ORACLE = """
@@ -355,13 +280,12 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained streaming-side. Ranking is not incrementally
     maintainable (one count update can reorder a whole window), so the
     scale pattern splits: the STREAM maintains per-(window, type)
-    counts in update mode through the idempotent foreachBatch delta
-    sink — tiny keyed state, only touched keys written per batch —
+    counts in update mode through :func:`run_bounded` — tiny keyed
+    state, only touched keys written per batch —
     and the rank is the cheap serving-side query over the maintained
     table (windows × types rows, not events). The tie rule
     (count DESC, event_type) is total, so top-3 is engine-exact.
     """
-    stream, stage = _events_stream(spark, sf_dir)
     # watermark bounds the update-mode window state on an unbounded
     # source (without it every window's count row lives forever);
     # no-op for the bounded gate input, same setting as
@@ -370,19 +294,15 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the watermark silently never binds (verified: append mode
     # rejects that shape as "aggregation without watermark").
     counts = (
-        stream.withWatermark("ts", "10 minutes")
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("w.start").alias("w_start"), "event_type", "n_events"
         )
     )
-    table = _run_update_to_deltas(
-        spark, counts, ["w_start", "event_type"], stage, "mrss_stream_trend_"
-    )
-
-    from pyspark.sql import Window
-
+    table = run_bounded(counts, "update", ["w_start", "event_type"])
     rank_w = Window.partitionBy("w_start").orderBy(
         F.desc("n_events"), "event_type"
     )
@@ -435,13 +355,14 @@ def _events_stream_timeordered(
     sf_dir: str,
     n_files: int = 4,
     sentinel: bool = True,
-) -> tuple[DataFrame, str]:
+) -> DataFrame:
     """Streaming DataFrame over the bounded events table staged as
     ``n_files`` TIME-RANGE files replayed one per micro-batch, plus a
     final one-row watermark-flush sentinel file — the multi-batch
     sibling of :func:`_events_stream` for operators whose cross-batch
     state transitions (session growth, append-mode finalization,
     watermark eviction) a single-batch replay would never exercise.
+    The staged dir is removed at interpreter exit.
 
     Time-ordered arrival is the contract a watermarked source
     provides at scale (Kafka with bounded disorder): each batch's
@@ -459,10 +380,9 @@ def _events_stream_timeordered(
     all-NULL sentinel row would instead surface as a spurious NULL
     group key in the operator's own output.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    pin_utc_session(spark)
     from map_reduce_server_spark.tables import load_table
 
+    # load_table pins the session semantics before the events read
     ev = load_table(spark, sf_dir, "events")
     stage = tempfile.mkdtemp(prefix="mrss_stream_sess_")
     cleanup_at_exit(stage)
@@ -516,7 +436,7 @@ def _events_stream_timeordered(
         .option("maxFilesPerTrigger", 1)
         .load(data_dir)
     )
-    return normalize_events_ts(stream), stage
+    return normalize_events_ts(stream)
 
 
 @register("stream_sessionize", oracle=_STREAM_SESSIONIZE_ORACLE)
@@ -537,13 +457,14 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay the last sessions would otherwise wait forever for a
     watermark that no longer moves, so the staging appends a one-row
     far-future sentinel file as the final micro-batch; its own
-    session is sliced off by the ``s_start`` ceiling filter. State is
-    bounded by the watermark, sink I/O is O(finalized sessions per
-    batch), and nothing ever collects to the driver.
+    session is sliced off by the ``s_start`` ceiling filter. The
+    append-mode stream runs through :func:`run_bounded`. State is
+    bounded by the watermark and sink I/O is O(finalized sessions per
+    batch).
     """
-    stream, stage = _events_stream_timeordered(spark, sf_dir)
     agg = (
-        stream.withWatermark("ts", "10 minutes")
+        _events_stream_timeordered(spark, sf_dir)
+        .withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
@@ -560,31 +481,9 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    out = tempfile.mkdtemp(prefix="mrss_stream_sessionize_")
-    cleanup_at_exit(out)
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id).cast("bigint"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out, f"b{batch_id}"))
-        )
-
-    query = (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(_write_batch)
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-        shutil.rmtree(stage, ignore_errors=True)
-
-    deltas = _read_deltas(spark, out, agg.schema)
-    return deltas.filter(
+    return run_bounded(agg, "append").filter(
         F.col("s_start") < F.lit(_SESSIONIZE_FLUSH_TS).cast("timestamp")
-    ).select("user_id", "s_start", "s_end", "n_events", "total_value")
+    )
 
 
 # Oracle for stream_stateful_counts: the cents-exact running totals
@@ -617,18 +516,15 @@ def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation rule, which is precisely what makes a batch SQL twin
     possible for a stateful operator. Replay is 4 time-range files,
     one per micro-batch with NO flush sentinel (NoTimeout state
-    never needs a watermark), through the idempotent per-batch delta
-    sink; the result is the latest snapshot per key. At scale: state
-    is one integer pair per key, each batch emits only updated keys,
-    and nothing collects to the driver."""
+    never needs a watermark), through :func:`run_bounded` in update
+    mode; the result is the latest snapshot per key. At scale: state
+    is one integer pair per key and each batch emits only updated
+    keys."""
     from map_reduce_server_spark.streaming.stateful import (
         running_counts_stream,
     )
 
-    stream, stage = _events_stream_timeordered(
-        spark, sf_dir, sentinel=False
+    agg = running_counts_stream(
+        _events_stream_timeordered(spark, sf_dir, sentinel=False)
     )
-    agg = running_counts_stream(stream)
-    return _run_update_to_deltas(
-        spark, agg, ["event_type"], stage, "mrss_stream_state_"
-    )
+    return run_bounded(agg, "update", ["event_type"])

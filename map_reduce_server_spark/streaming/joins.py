@@ -13,54 +13,19 @@ a FIFO job queue, reference ``master/__main__.py:209-218``):
   condition bounds time in BOTH directions, so Spark can expire
   state — the difference between bounded memory forever and OOM.
 
-Both run as genuine streaming queries (file source → append-mode
-sink) driven to completion on the bounded input, so the batch oracle
-must match exactly: on append-only data, a streaming inner join's
-final output IS the batch join.
+Both run as genuine streaming queries (file source → append mode
+through ``events.run_bounded``) driven to completion on the bounded
+input, so the batch oracle must match exactly: on append-only data,
+a streaming inner join's final output IS the batch join.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from map_reduce_server_spark.io.tempdirs import cleanup_at_exit
 from map_reduce_server_spark.registry import register
-
-
-def _run_to_parquet(stream_df: DataFrame, prefix: str) -> str:
-    """Drive an append-mode streaming query to completion; return the
-    output dir (caller reads + cleans)."""
-    out = tempfile.mkdtemp(prefix=prefix)
-    # register up front: a failed micro-batch must not leak the dir
-    cleanup_at_exit(out)
-    query = (
-        stream_df.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out, "data"))
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return out
-
-
-def _collect_result(
-    spark: SparkSession, out: str, stage: str, schema
-) -> DataFrame:
-    # explicit schema: a zero-match stream writes no data files, and
-    # a schemaless read would fail inference where the oracle simply
-    # returns 0 rows
-    df = spark.read.schema(schema).parquet(os.path.join(out, "data"))
-    shutil.rmtree(stage, ignore_errors=True)
-    return df
+from map_reduce_server_spark.streaming.events import _events_stream, run_bounded
 
 
 @register(
@@ -82,23 +47,20 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the constant-size region/nation dims; Spark still broadcasts here
     whenever the side actually fits (statistics-driven), which is
     the 100 TB/day pattern — dims broadcast while they fit, facts
-    flow through. Append mode to a parquet sink with a checkpoint
-    dir = exactly-once file output.
+    flow through.
     """
-    from map_reduce_server_spark.streaming.events import _events_stream
     from map_reduce_server_spark.tables import load_table
 
-    stream, stage = _events_stream(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
     enriched = (
-        stream.filter(F.col("event_type") == "purchase")
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
         .join(cust, F.col("user_id") == F.col("c_custkey"))
         .select("event_id", "ts", "value", "c_mktsegment", "c_acctbal")
     )
-    out = _run_to_parquet(enriched, "mrss_enrich_")
-    return _collect_result(spark, out, stage, enriched.schema)
+    return run_bounded(enriched, "append")
 
 
 @register(
@@ -128,9 +90,7 @@ def stream_stream_interval_join(
     mistake. On bounded input the final append output equals the
     batch join, which is exactly what the oracle replays.
     """
-    from map_reduce_server_spark.streaming.events import _events_stream
-
-    stream, stage = _events_stream(spark, sf_dir)
+    stream = _events_stream(spark, sf_dir)
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .withWatermark("ts", "1 hour")
@@ -172,5 +132,4 @@ def stream_stream_interval_join(
             ).alias("delay_sec"),
         )
     )
-    out = _run_to_parquet(joined, "mrss_ssjoin_")
-    return _collect_result(spark, out, stage, joined.schema)
+    return run_bounded(joined, "append")

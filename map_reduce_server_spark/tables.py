@@ -10,11 +10,12 @@ the MapReduce façade lives in :mod:`map_reduce_server_spark.mapreduce`.
 from __future__ import annotations
 
 import os
-import warnings
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from map_reduce_server_spark.session import pin_semantics
 
 TABLES = (
     "region",
@@ -36,27 +37,6 @@ TABLES = (
 # else — including supplier (10k x SF) — is SF-linear and carries NO
 # hard broadcast hint; AQE broadcasts those sides only while they
 # actually fit.
-
-
-def pin_utc_session(spark: SparkSession) -> None:
-    """Pin ``spark.sql.session.timeZone`` to UTC for the WHOLE
-    session — the engine's timestamp semantics contract (NTZ events
-    casts resolve the zone lazily, so the pin must be sticky; a
-    restore would re-shift plans at execution time). This is the ONE
-    place the conf is written: a session that arrives with a
-    DIFFERENT explicit zone gets a loud warning, because its other
-    queries will see the new zone too and silence would make that
-    look like engine nondeterminism instead of this contract."""
-    prev_tz = spark.conf.get("spark.sql.session.timeZone", None)
-    if prev_tz not in (None, "UTC"):
-        warnings.warn(
-            f"map_reduce_server_spark: pinning "
-            f"spark.sql.session.timeZone to UTC (was {prev_tz!r}) "
-            f"for the whole session — the engine's timestamp "
-            f"semantics require it, and it is NOT restored",
-            stacklevel=3,
-        )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
@@ -149,10 +129,9 @@ def load_table(
       driver's vanilla session inherits the JVM default.
     """
     if name == "events":
-        # Defensive: both configs are runtime-settable; the driver's
-        # own session may have neither.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        pin_utc_session(spark)
+        # nanosAsLong must be set BEFORE the read; the driver's own
+        # session may have none of the engine's confs.
+        pin_semantics(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_events_ts(df)
@@ -172,18 +151,19 @@ def normalize_events_ts(df):
     source (``streaming/events.py``), so a ts-encoding change cannot
     silently diverge the streams' event-time semantics from the
     batch oracles' input. ``nanosAsLong`` must be set by the caller
-    BEFORE the read; the UTC session TZ the NTZ cast depends on is
-    pinned HERE (not trusted to callers — a third call site from a
-    local-TZ session would otherwise shift every instant by the JVM
-    offset with no error). withColumn replaces ts IN PLACE, so no
-    re-select: a hardcoded column list would make the normalized
-    schema differ from the native-timestamp branch for any events
-    variant with extra/missing columns."""
+    BEFORE the read (:func:`session.pin_semantics`); the UTC session
+    TZ the NTZ cast depends on is pinned again HERE (not trusted to
+    callers — a third call site from a local-TZ session would
+    otherwise shift every instant by the JVM offset with no error).
+    withColumn replaces ts IN PLACE, so no re-select: a hardcoded
+    column list would make the normalized schema differ from the
+    native-timestamp branch for any events variant with extra/missing
+    columns."""
     # The cast in the NTZ branch resolves the zone at analysis time;
     # sticky-pinning UTC is deliberate (restoring the previous TZ
     # after this call would re-shift the cast when the lazy plan
     # actually executes).
-    pin_utc_session(df.sparkSession)
+    pin_semantics(df.sparkSession)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         # TIMESTAMP(NANOS) arrives as a nanos long under nanosAsLong;

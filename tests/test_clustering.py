@@ -70,6 +70,15 @@ def test_nonconvergence_raises(spark):
         connected_components(df, max_iter=1)
 
 
+def test_pagerank_empty_graph(spark):
+    """An empty edge list has no nodes: PageRank returns 0 rows
+    (the node count is 0, so no teleport base can be formed)."""
+    from map_reduce_server_spark.operators.clustering import pagerank
+
+    edges = spark.createDataFrame([], "src bigint, dst bigint")
+    assert pagerank(edges).count() == 0
+
+
 def test_pagerank_hand_computed_star(spark):
     """3-node path graph a-b-c (symmetrized): after any number of
     iterations the center holds more mass than the leaves, ranks sum

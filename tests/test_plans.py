@@ -6,6 +6,8 @@ results stay correct.
 
 from __future__ import annotations
 
+import pytest
+
 from map_reduce_server_spark import registry
 from map_reduce_server_spark.plans import explain_str
 
@@ -301,25 +303,32 @@ _GLOBAL_WINDOW_ALLOWLIST = {
 }
 
 
-def test_no_unintentional_global_windows_or_cartesians(spark, sf_small):
+@pytest.fixture(scope="module")
+def simple_plans(spark, sf_small):
+    """The simple plan of every registered query, built once and
+    shared by the registry-wide lints below. stream_*/mr_* are
+    excluded: calling them executes side effects; their windows are
+    post-hoc reconciliation over tiny state."""
+    return {
+        name: explain_str(fn(spark, sf_small), mode="simple")
+        for name, fn in registry.QUERIES.items()
+        if not name.startswith(("stream_", "mr_"))
+    }
+
+
+def test_no_unintentional_global_windows_or_cartesians(simple_plans):
     """Registry-wide lint, one plan sweep, two hazards: (a) a window
     without PARTITION BY serializes the whole input through one task;
     (b) a CartesianProduct (non-broadcast cross join) is quadratic.
     Global windows must be on the explicit allowlist; cartesians are
     never allowed (broadcast crossJoins against scalar/tiny sides
     compile to BroadcastNestedLoopJoin, which is fine and not
-    flagged). (stream_*/mr_* excluded: calling them executes side
-    effects; their windows are post-hoc reconciliation over tiny
-    state.)"""
+    flagged)."""
     import re
 
     window_offenders = set()
     cartesian_offenders = set()
-    for name in registry.QUERIES:
-        if name.startswith("stream_") or name.startswith("mr_"):
-            continue
-        plan = explain_str(registry.QUERIES[name](spark, sf_small),
-                           mode="simple")
+    for name, plan in simple_plans.items():
         if "CartesianProduct" in plan:
             cartesian_offenders.add(name)
         for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
@@ -358,7 +367,7 @@ def test_pagerank_iteration_shuffle_inventory(spark, sf_small):
     assert set(hashex) <= {"src", "dst", "node"}, hashex
 
 
-def test_single_partition_exchanges_are_aggregate_combines(spark, sf_small):
+def test_single_partition_exchanges_are_aggregate_combines(simple_plans):
     """Registry-wide lint #2: an Exchange SinglePartition is only
     acceptable as the final combine of a GLOBAL AGGREGATE (its child
     is a partial HashAggregate over map-side-combined rows — a few
@@ -366,15 +375,9 @@ def test_single_partition_exchanges_are_aggregate_combines(spark, sf_small):
     anything else funnels RAW data through one task; the only
     sanctioned cases are the allowlisted global windows."""
     offenders = []
-    for name in registry.QUERIES:
-        if (
-            name.startswith("stream_")
-            or name.startswith("mr_")
-            or name in _GLOBAL_WINDOW_ALLOWLIST
-        ):
+    for name, plan in simple_plans.items():
+        if name in _GLOBAL_WINDOW_ALLOWLIST:
             continue
-        plan = explain_str(registry.QUERIES[name](spark, sf_small),
-                           mode="simple")
         lines = plan.splitlines()
         for i, line in enumerate(lines):
             if "Exchange SinglePartition" not in line:

@@ -569,40 +569,6 @@ def test_repetition_short_doc_null_fraction(spark):
     assert got[2] == (4, 0.75, 1)  # 'a a a' x4, 1 distinct
 
 
-def test_ngram_col_matches_shingles_df(spark):
-    """text._ngram_col(3) and dedup.shingles_df implement the SAME
-    3-gram contract; this pins the two hand-rolled copies together
-    so a tokenization change cannot desynchronize the text scorers
-    from the dedup family."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_server_spark.operators.dedup import shingles_df
-    from map_reduce_server_spark.operators.text import _ngram_col
-
-    df = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps"),
-            (2, "a  b   c"),          # multi-space
-            (3, "one two"),           # below n
-            (4, "x"),
-        ],
-        ["doc_id", "text"],
-    )
-    with tempfile.TemporaryDirectory() as d:
-        _write(df, d, "documents")
-        via_text = {
-            (r.doc_id, r.g)
-            for r in df.select(
-                "doc_id", F.explode(_ngram_col(3)).alias("g")
-            ).collect()
-        }
-        via_dedup = {
-            (r.doc_id, r.shingle)
-            for r in shingles_df(spark, d).collect()
-        }
-    assert via_text == via_dedup
-
-
 def test_dup_spans_short_doc_has_no_windows(spark):
     """A document below the 5-token window width contributes NO
     windows (it must not fabricate a truncated pseudo-window), and

@@ -3,7 +3,11 @@ on bounded input (the core Structured Streaming guarantee)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
+
 from map_reduce_server_spark.streaming.events import (
+    run_bounded,
     stream_window_counts,
     windowed_event_counts,
 )
@@ -65,3 +69,20 @@ def test_stream_stateful_counts_matches_oracle(spark, sf_small):
     ok, msg = compare_to_oracle(df, _STREAM_STATEFUL_ORACLE, sf_small)
     assert ok, msg
     assert df.count() >= 1
+
+
+@pytest.mark.parametrize("mode", ["append", "update", "complete"])
+def test_run_bounded_empty_source(spark, tmp_path, mode):
+    """A source with no files runs no micro-batch and leaves no batch
+    dirs: the runner still returns 0 rows with the stream's schema,
+    where the oracle simply returns an empty result."""
+    src = tmp_path / "src"
+    src.mkdir()
+    stream = spark.readStream.schema("k string, v bigint").parquet(str(src))
+    keys = None
+    if mode != "append":
+        stream = stream.groupBy("k").agg(F.sum("v").alias("v"))
+        keys = ["k"]
+    out = run_bounded(stream, mode, keys)
+    assert out.dtypes == stream.dtypes
+    assert out.count() == 0
