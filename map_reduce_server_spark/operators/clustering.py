@@ -455,23 +455,11 @@ def _copurchase_edges(
     minsup: int = _TRI_MINSUP,
     keep_support: bool = False,
     li: DataFrame | None = None,
-    max_cart_size: int | None = None,
 ) -> DataFrame:
     """Thresholded ordered co-purchase edge list (u < v, support ≥
     ``minsup`` orders); pass ``keep_support`` for consumers that need
     the pair count (q_market_basket), and ``li`` to share an
     already-deduped (l_orderkey, l_partkey) projection.
-
-    ``max_cart_size`` (round 16, ADVICE r15): orders whose DISTINCT
-    part set exceeds the cap are dropped BEFORE the k²/2 pair
-    expansion — the same enforceable-policy pattern as the LSH
-    ``_LSH_BUCKET_CAP``. TPC-H carts hold ≤ 7 line items so the
-    registered queries pass ``None`` (no behavior change and the
-    oracles need no HAVING twin), but a reuse on a corpus with
-    unbounded carts has a real single-task OOM hazard (the collect_set
-    buffer grows O(cart) and the expanded pair array O(cart²)) and
-    MUST set a cap — previously the policy was documented but not
-    implementable without editing the operator.
 
     Pair generation (round 15) collects each order's DISTINCT part
     set into a sorted array and expands the ordered (u < v) pairs
@@ -483,7 +471,8 @@ def _copurchase_edges(
     l_orderkey puts the whole order in one task either way, so the
     k²/2 quadratic hazard is unchanged and still bounded by the cart
     size — TPC-H orders cap at 7 line items; a corpus with unbounded
-    carts needs a per-order cap, same policy as the LSH bucket cap).
+    carts would need a per-order cap, same policy as the LSH bucket
+    cap).
     collect_set absorbs duplicate (order, part) rows, so each order
     contributes a pair at most once and support stays a plain
     COUNT(*). Equivalence vs the join form is exceptAll-pinned in
@@ -497,8 +486,6 @@ def _copurchase_edges(
         )
     ps = F.sort_array(F.collect_set("l_partkey"))
     per_order = li.groupBy("l_orderkey").agg(ps.alias("ps"))
-    if max_cart_size is not None:
-        per_order = per_order.filter(F.size("ps") <= max_cart_size)
     pair_arr = F.flatten(
         F.transform(
             F.col("ps"),

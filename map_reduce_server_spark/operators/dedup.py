@@ -382,7 +382,7 @@ def minhash_band_keys(wide: DataFrame) -> DataFrame:
 
 
 def minhash_candidate_pairs(
-    wide: DataFrame, max_bucket_size: int | None = _LSH_BUCKET_CAP
+    wide: DataFrame, max_bucket_size: int = _LSH_BUCKET_CAP
 ) -> DataFrame:
     """Distinct candidate (doc_a < doc_b) pairs from band collisions.
 
@@ -394,12 +394,9 @@ def minhash_candidate_pairs(
     bounding any single bucket's output; dropped buckets are
     exact-duplicate-heavy and are caught by ``dedup_fingerprint``
     upstream. The registered query runs WITH the cap and the DuckDB
-    oracle replays the identical HAVING rule; pass ``None`` for the
-    uncapped exact-recall variant.
+    oracle replays the identical HAVING rule.
     """
-    bands = minhash_band_keys(wide)
-    if max_bucket_size is not None:
-        bands = _cap_hot_buckets(bands, max_bucket_size)
+    bands = _cap_hot_buckets(minhash_band_keys(wide), max_bucket_size)
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -679,16 +676,14 @@ _SIMHASH_MAX_HAMMING = 6
 
 
 def simhash_pairs(
-    halves: DataFrame,
-    max_hamming: int = _SIMHASH_MAX_HAMMING,
-    max_bucket_size: int | None = _LSH_BUCKET_CAP,
+    halves: DataFrame, max_bucket_size: int = _LSH_BUCKET_CAP
 ) -> DataFrame:
     """Near-dup pairs from (doc_id, lo, hi) fingerprint halves:
     4 bands × 16-bit keys, equi-join per band, verify hamming.
 
     ``max_bucket_size`` (default ``_LSH_BUCKET_CAP``) caps hot band
     buckets before pair expansion (same rationale as
-    ``minhash_candidate_pairs``); ``None`` disables."""
+    ``minhash_candidate_pairs``)."""
     bands_idx = (
         halves.sparkSession.range(4)
         .select(F.col("id").cast("int").alias("band"))
@@ -704,8 +699,7 @@ def simhash_pairs(
             "& CAST(65535 AS BIGINT)"
         ).alias("bkey"),
     )
-    if max_bucket_size is not None:
-        bands = _cap_hot_buckets(bands, max_bucket_size)
+    bands = _cap_hot_buckets(bands, max_bucket_size)
     a = bands.alias("a")
     b = bands.alias("b")
     cand = (
@@ -730,7 +724,7 @@ def simhash_pairs(
     )
     return cand.select(
         "doc_a", "doc_b", hamming.cast("int").alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
+    ).filter(F.col("hamming") <= _SIMHASH_MAX_HAMMING)
 
 
 @register(

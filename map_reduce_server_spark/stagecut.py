@@ -10,8 +10,8 @@ consumer. A cut bounds both.
 A cut is ``localCheckpoint``: executor-local blocks, no replication,
 no DFS round-trip. The returned DataFrame's logical plan is a fresh
 leaf (a ``LogicalRDD``), so Catalyst cannot re-expand the upstream
-subtree, per-iteration plans stay O(1) deep, and eager cuts run
-exactly one job at construction time.
+subtree, per-iteration plans stay O(1) deep, and every cut is eager:
+it runs exactly one job at construction time.
 """
 
 from __future__ import annotations
@@ -19,6 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def stage_cut(df: DataFrame, eager: bool = True) -> DataFrame:
+def stage_cut(df: DataFrame) -> DataFrame:
     """Materialize ``df`` and sever its lineage (``localCheckpoint``)."""
-    return df.localCheckpoint(eager=eager)
+    return df.localCheckpoint(eager=True)

@@ -2,31 +2,17 @@
 
 The reference has no streaming at all (SURVEY.md §2.D); this is the
 north-star "custom stateful operator" path: user-defined per-key
-state evolved batch by batch, with watermark-driven state expiry —
-the building block for streaming dedup, running aggregates with
-custom merge logic, or online feature extraction at 100 TB/day
-(state is partitioned by key across executors; only the key's state,
-never the stream, lives in memory).
+state evolved batch by batch — the building block for running
+aggregates with custom merge logic (state is partitioned by key
+across executors; only the key's state, never the stream, lives in
+memory).
 
-Two state-lifetime modes, chosen per call:
-
-- ``idle_ttl_ms=None`` (default): state lives forever —
-  correct for LOW-cardinality keys (event types here) where the
-  running total is the product.
-- ``idle_ttl_ms=N``: EVENT-TIME timeout. Each update re-arms a
-  per-key timer at the key's OWN latest event time (floored by the
-  watermark) ``+ N``; when the watermark (driven by the caller's
-  ``withWatermark`` on the stream) passes it with no new events for
-  the key, the operator is invoked once more with ``hasTimedOut``
-  set, emits the key's final snapshot, and REMOVES the state. This
-  is the mode a high-cardinality key (session id, user id) must
-  use, or state grows without bound until executors OOM.
+State lives forever: correct for LOW-cardinality keys (event types
+here) where the running total is the product.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-import re
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
@@ -34,77 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-
-def _normalize_session_tz(session_tz: str) -> _dt.tzinfo:
-    """Turn ``spark.sql.session.timeZone`` into a tzinfo pandas can
-    localize with, AT QUERY BUILD TIME.
-
-    Spark accepts any Java ``ZoneId`` string — region IDs
-    ('America/New_York'), which the Python side parses too, but ALSO
-    offset spellings ('GMT+8', 'UT+01:00', '-0830', '+8', 'Z') that
-    the Arrow serializer under ``applyInPandasWithState`` CANNOT
-    parse (probed: pyarrow accepts region IDs and strict '±HH:MM'
-    only — anything else raises ``UnknownTimeZoneError`` inside the
-    worker on EVERY micro-batch, before the state function even
-    runs). So this validates the envelope up front on the driver:
-
-    - region IDs (zoneinfo) → shipped as ZoneInfo,
-    - strict '±HH:MM' → shipped as a fixed-offset tzinfo (the exact
-      inverse of the serializer's own rendering),
-    - any OTHER Java-legal spelling → loud ValueError naming the
-      equivalent safe spelling, instead of a baffling deferred
-      per-batch crash inside Spark's serializer.
-    """
-    s = session_tz.strip()
-    try:
-        from zoneinfo import ZoneInfo
-
-        return ZoneInfo(s)
-    except Exception:
-        pass
-    m = re.fullmatch(r"([+-])(\d{2}):(\d{2})", s)
-    if m:
-        sign = 1 if m.group(1) == "+" else -1
-        h, mi = int(m.group(2)), int(m.group(3))
-        # Java's ZoneOffset envelope is exactly ±18:00 — reject
-        # '+18:30' here too, so the guard matches the documented
-        # envelope instead of being one notch wider (Spark rejects
-        # such values upstream anyway; this keeps the normalizer
-        # honest standalone).
-        if mi < 60 and (h < 18 or (h == 18 and mi == 0)):
-            return _dt.timezone(sign * _dt.timedelta(hours=h, minutes=mi))
-    # Java-legal offset spellings OUTSIDE the serializer envelope:
-    # translate to the canonical ±HH:MM and tell the user to respell
-    m = re.fullmatch(
-        r"(?:UTC|GMT|UT)?([+-])(\d{1,2})(?::?(\d{2}))?(?::?\d{2})?",
-        s,
-        flags=re.IGNORECASE,
-    )
-    if s.upper() in ("Z", "UT") or (
-        m
-        and int(m.group(3) or 0) < 60
-        and (
-            int(m.group(2)) < 18
-            or (int(m.group(2)) == 18 and int(m.group(3) or 0) == 0)
-        )
-    ):
-        if m:
-            canon = f"{m.group(1)}{int(m.group(2)):02d}:{int(m.group(3) or 0):02d}"
-        else:
-            canon = "UTC"
-        raise ValueError(
-            f"running_counts_stream: session timezone {session_tz!r} "
-            "(spark.sql.session.timeZone) is legal for Spark's JVM but "
-            "crashes the Arrow serializer under applyInPandasWithState "
-            "on every micro-batch (pyarrow parses only IANA region IDs "
-            f"and strict '±HH:MM' offsets) — respell it as {canon!r}"
-        )
-    raise ValueError(
-        f"running_counts_stream: cannot interpret session timezone "
-        f"{session_tz!r} (spark.sql.session.timeZone) — use an IANA "
-        "region ID (e.g. 'America/New_York', 'UTC') or a strict "
-        "'±HH:MM' zone offset (e.g. '+08:00')"
-    )
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -178,126 +93,14 @@ def _update_counts(
     yield _snapshot(key, n, total_cents)
 
 
-def running_counts_stream(
-    events_stream: DataFrame, idle_ttl_ms: int | None = None
-) -> DataFrame:
-    """Per-event-type running (count, total) with custom state.
-
-    With ``idle_ttl_ms`` set, the input stream MUST carry a
-    watermark on its ``ts`` event-time column
-    (``events_stream.withWatermark("ts", ...)``) — Spark requires
-    one for EventTimeTimeout and the timer anchors at the key's own
-    latest ``ts`` — and a key idle for that long in EVENT time emits
-    one final snapshot and drops its state; a later event for the
-    same key starts from zero. Without it, state is permanent (the
-    low-cardinality default).
-    """
-    if idle_ttl_ms is None:
-        return events_stream.groupBy("event_type").applyInPandasWithState(
-            _update_counts,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    if idle_ttl_ms <= 0:
-        raise ValueError("idle_ttl_ms must be positive")
-    # applyInPandasWithState hands TIMESTAMP (LTZ) columns to the
-    # Python worker as tz-NAIVE pandas values rendered in the
-    # SESSION timezone (the Arrow serializer localizes, then drops
-    # the tz), while getCurrentWatermarkMs()/setTimeoutTimestamp()
-    # speak true UTC epoch millis. Capture the session tz HERE
-    # (driver side, at query build) so the worker can localize the
-    # naive values back before comparing — a naive-as-UTC read is
-    # off by the session offset: premature expiry west of UTC,
-    # state growth east of it. (The repo's own get_spark pins UTC,
-    # which would mask the bug; this template must not depend on
-    # that.) The session-tz localization is ALWAYS the right inverse
-    # here: EventTimeTimeout requires a watermark, and Spark only
-    # permits watermarks on TIMESTAMP (LTZ) — an NTZ event-time
-    # column fails analysis with EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE
-    # before this function ever runs (pinned in
-    # tests/test_stateful_streaming.py), so callers with raw-parquet
-    # NTZ timestamps must cast to TIMESTAMP upstream and the worker
-    # can never legally receive an un-rendered NTZ wall time.
-    session_tz = _normalize_session_tz(
-        events_stream.sparkSession.conf.get("spark.sql.session.timeZone")
-    )
-
-    def update_with_ttl(
-        key: tuple,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.hasTimedOut:
-            # watermark passed the armed timer with no new events:
-            # emit the final snapshot once and free the state
-            n, total_cents = state.get
-            state.remove()
-            yield _snapshot(key, n, total_cents)
-            return
-        n, total_cents = state.get if state.exists else (0, 0)
-        # track the key's own max event time while folding: the timer
-        # must anchor at EVENT time, not the global watermark — the
-        # watermark is 0 in the first batch (a watermark-relative
-        # timer would land in 1970 and expire the key spuriously on
-        # the next batch) and lags keys whose events run ahead of it
-        max_ts_ms = -1
-
-        def tap(bs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            nonlocal max_ts_ms
-            for pdf in bs:
-                ts = pdf["ts"].dropna()
-                if len(ts):
-                    # localize the session-tz-naive value back to an
-                    # aware instant before taking epoch millis (DST
-                    # folds/gaps resolved arbitrarily-but-totally —
-                    # a one-hour anchor skew only shifts an idle
-                    # timeout, never corrupts data)
-                    m = (
-                        pd.Timestamp(ts.max())
-                        .tz_localize(
-                            session_tz,
-                            ambiguous=True,
-                            nonexistent="shift_forward",
-                        )
-                        .value
-                        // 1_000_000
-                    )
-                    max_ts_ms = max(max_ts_ms, m)
-                yield pdf
-
-        n, total_cents = _fold_cents(tap(batches), n, total_cents)
-        state.update((n, total_cents))
-        # re-arm at (key's latest event, floored by the watermark so
-        # the timestamp is always > watermark as EventTimeTimeout
-        # requires) + TTL: the key expires only once the watermark
-        # advances idle_ttl_ms past its OWN last activity
-        anchor = max(state.getCurrentWatermarkMs(), max_ts_ms)
-        if anchor > 0:
-            state.setTimeoutTimestamp(anchor + idle_ttl_ms)
-        # else: every row so far lacked an event time AND the
-        # watermark hasn't moved (first micro-batch) — arming now
-        # would plant a 1970+TTL timer that expires the key
-        # spuriously as soon as the watermark first advances, so no
-        # timer is set. KNOWN COST, chosen deliberately: Spark only
-        # re-invokes a key on NEW DATA or a FIRED timer (watermark
-        # movement alone does not), so a key that never receives
-        # another row keeps its state forever. The alternative —
-        # expiring data we were never able to time — silently drops
-        # a live count; a leak is observable and attributable to the
-        # upstream data-quality bug (event rows with no event time),
-        # a spurious expiry is not. Bound the blast radius upstream
-        # by filtering or defaulting null event times before the
-        # watermark.
-        yield _snapshot(key, n, total_cents)
-
+def running_counts_stream(events_stream: DataFrame) -> DataFrame:
+    """Per-event-type running (count, total) with custom state."""
     return events_stream.groupBy("event_type").applyInPandasWithState(
-        update_with_ttl,
+        _update_counts,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

@@ -243,36 +243,3 @@ def test_copurchase_expansion_dedups_order_part_repeats(spark):
         ).collect()
     }
     assert got == {(10, 20, 2)}
-
-
-def test_copurchase_max_cart_size_drops_oversized_orders(spark):
-    # round-16 (ADVICE r15): the documented per-order cap is now
-    # enforceable — orders whose DISTINCT part set exceeds the cap
-    # are dropped BEFORE the k²/2 pair expansion; None (the
-    # registered queries' setting) keeps every order.
-    from map_reduce_server_spark.operators.clustering import (
-        _copurchase_edges,
-    )
-
-    li = spark.createDataFrame(
-        # order 1: 4-part cart; order 2: 2-part cart; both carts
-        # contain the (10, 20) pair so support survives the cap
-        [(1, 10), (1, 20), (1, 30), (1, 40), (2, 10), (2, 20)],
-        ["l_orderkey", "l_partkey"],
-    )
-    uncapped = {
-        (r.u, r.v, r.sup)
-        for r in _copurchase_edges(
-            spark, "", minsup=1, keep_support=True, li=li
-        ).collect()
-    }
-    assert (10, 20, 2) in uncapped and (30, 40, 1) in uncapped
-    capped = {
-        (r.u, r.v, r.sup)
-        for r in _copurchase_edges(
-            spark, "", minsup=1, keep_support=True, li=li,
-            max_cart_size=3,
-        ).collect()
-    }
-    # order 1 (4 distinct parts) dropped wholesale; order 2 intact
-    assert capped == {(10, 20, 1)}

@@ -804,6 +804,11 @@ def _date_out_pair(out) -> tuple[Column, str]:
     )
 
 
+# Days per unit of every interval-producing _DATE_OUT kind, as
+# DuckDB's CSE normalizes them (a month is 30 days).
+_INTERVAL_DAYS = {"adddays": 1, "addmonths": 30}
+
+
 def _no_normalized_equal_intervals(outs) -> bool:
     # DuckDB 1.0's CSE compares interval constants by 30-day-month
     # normalized value, so `+ INTERVAL n DAY` and `+ INTERVAL m MONTH`
@@ -813,10 +818,10 @@ def _no_normalized_equal_intervals(outs) -> bool:
     # test_duckdb_interval_cse_folds_normalized_equal_intervals).
     # Oracle-side bug, not a Spark divergence — keep the draw space
     # outside it, as q_date_funcs' 91-day workaround does.
-    days = {o[1] for o in outs if o[0] == "adddays"}
-    return not any(
-        30 * o[1] in days for o in outs if o[0] == "addmonths"
-    )
+    days = [
+        _INTERVAL_DAYS[o[0]] * o[1] for o in set(outs) if o[0] in _INTERVAL_DAYS
+    ]
+    return len(days) == len(set(days))
 
 
 @settings(
@@ -848,6 +853,10 @@ def _no_normalized_equal_intervals(outs) -> bool:
 def test_fuzz_date_exprs(spark, duck, outs):
     df = load_table(spark, SF, "orders")
     pairs = [_date_out_pair(o) for o in outs]
+    for o, (_, s) in zip(outs, pairs):
+        # a new interval kind must join _INTERVAL_DAYS, or the CSE
+        # filter above cannot see its collisions
+        assert ("INTERVAL" in s) == (o[0] in _INTERVAL_DAYS), o
     out = df.select(
         "o_orderkey", *[c.alias(f"d{i}") for i, (c, _) in enumerate(pairs)]
     )

@@ -9,8 +9,20 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from map_reduce_server_spark.streaming.events import run_bounded
 from map_reduce_server_spark.streaming.stateful import running_counts_stream
 from map_reduce_server_spark.tables import load_table
+
+
+def _final_counts(stream) -> dict:
+    """event_type -> (n_events, total_value) of the latest emitted row
+    per key, i.e. the final state."""
+    return {
+        r.event_type: (r.n_events, r.total_value)
+        for r in run_bounded(
+            running_counts_stream(stream), "update", ["event_type"]
+        ).collect()
+    }
 
 
 def test_stateful_running_counts_match_batch(spark, sf_small):
@@ -28,25 +40,10 @@ def test_stateful_running_counts_match_batch(spark, sf_small):
             stream = stream.withColumn(
                 "ts", F.expr("timestamp_micros(ts div 1000)")
             )
-        out = running_counts_stream(stream)
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("state_out")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        got = _final_counts(stream)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
-    # last emitted row per event_type == final state
-    got = {
-        r.event_type: (r.n_events, r.total_value)
-        for r in spark.table("state_out").collect()
-    }
     expected = {
         r.event_type: (r.n, round(r.total, 2))
         for r in load_table(spark, sf_small, "events")
@@ -62,403 +59,6 @@ def test_stateful_running_counts_match_batch(spark, sf_small):
     assert got == expected
 
 
-def test_stateful_ttl_expires_and_restarts(spark, tmp_path):
-    """EventTimeTimeout path: a key idle past the TTL (in event time)
-    emits a final snapshot, its state is removed, and a LATER event
-    for the same key restarts the count from zero — the property that
-    bounds state for high-cardinality keys."""
-    import json
-    import time
-
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = "event_type string, value double, ts timestamp"
-
-    def drop(name, rows):
-        p = src / f"{name}.json"
-        p.write_text(
-            "\n".join(
-                json.dumps({"event_type": e, "value": v, "ts": t})
-                for e, v, t in rows
-            )
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .json(str(src))
-        .withWatermark("ts", "1 second")
-    )
-    out = running_counts_stream(stream, idle_ttl_ms=5_000)
-    name = f"ttl_out_{int(time.time() * 1000) % 100000}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        # batch 1: key A at t0
-        drop("b1", [("A", 1.0, "2024-01-01 00:00:00")])
-        q.processAllAvailable()
-        # batch 2: key B far in the future -> watermark jumps past
-        # A's (watermark + 5s) timer; A times out in the next batch
-        drop("b2", [("B", 2.0, "2024-01-01 01:00:00")])
-        q.processAllAvailable()
-        # batch 3: another B event advances the batch clock so the
-        # timed-out A invocation fires (if it hasn't already via a
-        # no-data batch), then batch 4 restarts A from zero
-        drop("b3", [("B", 3.0, "2024-01-01 02:00:00")])
-        q.processAllAvailable()
-        drop("b4", [("A", 10.0, "2024-01-01 03:00:00")])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = [
-        (r.event_type, r.n_events, r.total_value)
-        for r in spark.table(name).collect()
-    ]
-    a_rows = [r for r in rows if r[0] == "A"]
-    # A: initial (1, 1.0), the timeout's final snapshot (1, 1.0)
-    # again — exactly once, the state is removed after it — then the
-    # restarted (1, 10.0), possibly followed by ITS own timeout
-    # snapshot in a later no-data batch (trigger-timing dependent).
-    # Never (2, 11.0): the restart must start from zero.
-    assert a_rows[0] == ("A", 1, 1.0)
-    assert a_rows[-1] == ("A", 1, 10.0), a_rows
-    assert a_rows.count(("A", 1, 1.0)) == 2, a_rows
-    assert ("A", 2, 11.0) not in a_rows, a_rows
-    # B's second event (02:00) arrives in the SAME batch whose close
-    # advances the watermark past B's 01:00:05 timer — and Spark
-    # gives a key's new data priority over its pending timeout — so B
-    # ACCUMULATES to (2, 5.0) and re-arms; its timeout snapshot fires
-    # later once A's 03:00 event pushes the watermark past 02:00:05.
-    # (Expiry is watermark-driven: a key cannot expire "between"
-    # events if nothing advanced the watermark meanwhile.)
-    b_rows = [r for r in rows if r[0] == "B"]
-    assert b_rows[0] == ("B", 1, 2.0)
-    assert ("B", 2, 5.0) in b_rows, b_rows
-    assert b_rows[-1] == ("B", 2, 5.0), b_rows
-
-
-def test_stateful_ttl_no_premature_expiry(spark, tmp_path):
-    """A key active WITHIN its TTL (event time) must keep
-    accumulating — the regression class here is a watermark-relative
-    timer: with the watermark at 0 in batch 1, such a timer lands in
-    1970 and the next batch expires the key spuriously. TTL = 1 h,
-    events 10-20 min apart: every snapshot must accumulate, never
-    restart."""
-    import json
-    import time
-
-    src = tmp_path / "src2"
-    src.mkdir()
-    schema = "event_type string, value double, ts timestamp"
-
-    def drop(name, rows):
-        (src / f"{name}.json").write_text(
-            "\n".join(
-                json.dumps({"event_type": e, "value": v, "ts": t})
-                for e, v, t in rows
-            )
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .json(str(src))
-        .withWatermark("ts", "1 second")
-    )
-    out = running_counts_stream(stream, idle_ttl_ms=3_600_000)
-    name = f"ttl_np_{int(time.time() * 1000) % 100000}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        # batch 1: A at t0 (watermark still 0 when its timer is set)
-        drop("b1", [("A", 1.0, "2024-01-01 00:00:00")])
-        q.processAllAvailable()
-        # batch 2: only B, 10 min later — advances the watermark past
-        # any 1970-anchored timer without giving A data
-        drop("b2", [("B", 2.0, "2024-01-01 00:10:00")])
-        q.processAllAvailable()
-        # batch 3: A again 20 min after its first event — inside TTL
-        drop("b3", [("A", 5.0, "2024-01-01 00:20:00")])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    a_rows = [
-        (r.n_events, r.total_value)
-        for r in spark.table(name).collect()
-        if r.event_type == "A"
-    ]
-    # accumulation, never a restart and never a timeout snapshot
-    assert a_rows == [(1, 1.0), (2, 6.0)], a_rows
-
-
-def test_stateful_ttl_non_utc_session_tz(spark, tmp_path):
-    """The TTL anchor must survive a non-UTC session timezone.
-    applyInPandasWithState hands ``ts`` to the worker as a tz-naive
-    value rendered in the SESSION tz while the timer APIs speak UTC
-    epoch millis — reading the naive value as UTC shifts the anchor
-    by the session offset. West of UTC (America/New_York, -5h in
-    January) the mis-read anchor lands hours in the past, so a key
-    active well within its TTL is spuriously expired as soon as any
-    other key advances the watermark."""
-    import json
-    import time
-
-    src = tmp_path / "src_tz"
-    src.mkdir()
-    schema = "event_type string, value double, ts timestamp"
-
-    def drop(name, rows):
-        (src / f"{name}.json").write_text(
-            "\n".join(
-                json.dumps({"event_type": e, "value": v, "ts": t})
-                for e, v, t in rows
-            )
-        )
-
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .json(str(src))
-            .withWatermark("ts", "1 second")
-        )
-        out = running_counts_stream(stream, idle_ttl_ms=3_600_000)
-        name = f"ttl_tz_{int(time.time() * 1000) % 100000}"
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            # A at t0; TTL 1 h
-            drop("b1", [("A", 1.0, "2024-01-01 00:00:00")])
-            q.processAllAvailable()
-            # B 30 min later: watermark -> t0+30min-1s. A naive-as-UTC
-            # anchor (t0 - 5 h) would have armed A's timer at t0 - 4 h,
-            # already behind this watermark -> spurious expiry.
-            drop("b2", [("B", 2.0, "2024-01-01 00:30:00")])
-            q.processAllAvailable()
-            # A again 40 min after its first event — inside TTL
-            drop("b3", [("A", 5.0, "2024-01-01 00:40:00")])
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        a_rows = [
-            (r.n_events, r.total_value)
-            for r in spark.table(name).collect()
-            if r.event_type == "A"
-        ]
-        assert a_rows == [(1, 1.0), (2, 6.0)], a_rows
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
-
-
-def test_watermark_rejects_ntz_event_time(spark, tmp_path):
-    """Why the TTL anchor's session-tz localization is ALWAYS the
-    right inverse: Spark refuses a watermark on TIMESTAMP_NTZ at
-    analysis time, so the EventTimeTimeout worker can never receive
-    an un-rendered NTZ wall time — raw-parquet NTZ timestamps must
-    be cast to TIMESTAMP upstream (this pin is the contract the
-    anchor code's comment relies on; if a future Spark starts
-    ACCEPTING NTZ watermarks, the anchor needs a column-type branch
-    localizing NTZ as UTC instead of session tz)."""
-    import pytest as _pytest
-
-    src = tmp_path / "src_ntz"
-    src.mkdir()
-    stream = (
-        spark.readStream.schema(
-            "event_type string, value double, ts timestamp_ntz"
-        )
-        .json(str(src))
-    )
-    with _pytest.raises(
-        Exception, match="EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE"
-    ):
-        stream.withWatermark("ts", "1 second")
-
-
-def test_stateful_ttl_null_ts_only_first_batch(spark, tmp_path):
-    """A key whose FIRST batch carries only null event times must not
-    be expired when the watermark first advances: with no event ts
-    and the watermark at 0 there is nothing to anchor a timer to, so
-    none is armed (the regression is anchoring at watermark 0 — a
-    1970+TTL timer that fires as soon as any key moves the
-    watermark). The key keeps accumulating when its real events
-    arrive."""
-    import json
-    import time
-
-    src = tmp_path / "src_null"
-    src.mkdir()
-    schema = "event_type string, value double, ts timestamp"
-
-    def drop(name, rows):
-        (src / f"{name}.json").write_text(
-            "\n".join(
-                json.dumps(
-                    {"event_type": e, "value": v}
-                    if t is None
-                    else {"event_type": e, "value": v, "ts": t}
-                )
-                for e, v, t in rows
-            )
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .json(str(src))
-        .withWatermark("ts", "1 second")
-    )
-    out = running_counts_stream(stream, idle_ttl_ms=3_600_000)
-    name = f"ttl_null_{int(time.time() * 1000) % 100000}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        # batch 1: A with NO event time (watermark stays 0)
-        drop("b1", [("A", 1.0, None)])
-        q.processAllAvailable()
-        # batch 2: B advances the watermark; a 1970-anchored A timer
-        # would now fire and discard A's count
-        drop("b2", [("B", 2.0, "2024-01-01 00:10:00")])
-        q.processAllAvailable()
-        # batch 3: A's real event — must ACCUMULATE onto the null-ts
-        # row's count, proving the state survived
-        drop("b3", [("A", 5.0, "2024-01-01 00:20:00")])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    a_rows = [
-        (r.n_events, r.total_value)
-        for r in spark.table(name).collect()
-        if r.event_type == "A"
-    ]
-    assert a_rows == [(1, 1.0), (2, 6.0)], a_rows
-
-
-def test_normalize_session_tz_forms():
-    """Spark accepts Java ZoneId spellings that the Arrow serializer
-    under applyInPandasWithState cannot parse ('GMT+8', '-0830',
-    'Z'): the build-time normalizer must accept exactly the
-    serializer's envelope (region IDs + strict ±HH:MM), and fail
-    FAST (driver side, actionable message naming the safe
-    respelling) on everything else — not per-micro-batch inside the
-    worker."""
-    import datetime as dt
-
-    import pytest as _pytest
-
-    from map_reduce_server_spark.streaming.stateful import (
-        _normalize_session_tz,
-    )
-
-    probe = dt.datetime(2024, 1, 1)
-
-    def off(tz):
-        return probe.replace(tzinfo=tz).utcoffset()
-
-    assert off(_normalize_session_tz("UTC")) == dt.timedelta(0)
-    assert off(_normalize_session_tz("GMT")) == dt.timedelta(0)
-    assert off(_normalize_session_tz("+05:30")) == dt.timedelta(
-        hours=5, minutes=30
-    )
-    assert off(_normalize_session_tz("-08:30")) == -dt.timedelta(
-        hours=8, minutes=30
-    )
-    # region IDs go through zoneinfo (DST-aware, Jan = EST = -5)
-    assert off(_normalize_session_tz("America/New_York")) == dt.timedelta(
-        hours=-5
-    )
-    # Java-legal spellings OUTSIDE the serializer envelope: loud
-    # build-time error naming the equivalent safe spelling
-    with _pytest.raises(ValueError, match=r"respell it as '\+08:00'"):
-        _normalize_session_tz("GMT+8")
-    with _pytest.raises(ValueError, match=r"respell it as '\+01:00'"):
-        _normalize_session_tz("UT+01:00")
-    with _pytest.raises(ValueError, match=r"respell it as '-08:30'"):
-        _normalize_session_tz("-0830")
-    with _pytest.raises(ValueError, match=r"respell it as 'UTC'"):
-        _normalize_session_tz("Z")
-    with _pytest.raises(ValueError, match="cannot interpret session timezone"):
-        _normalize_session_tz("Mars/Olympus_Mons")
-    with _pytest.raises(ValueError, match="cannot interpret session timezone"):
-        _normalize_session_tz("+99:00")
-
-
-def test_stateful_ttl_offset_session_tz(spark, tmp_path):
-    """End-to-end TTL query under an OFFSET-form session timezone
-    ('+08:00') — inside the serializer envelope but unparseable by
-    pandas' tz_localize as a plain string. The normalizer ships it as
-    a fixed-offset tzinfo, so the anchor localizes correctly and the
-    running counts evolve normally (east of UTC a naive-as-UTC
-    mis-read would arm timers 8 h in the future = silent state
-    growth)."""
-    import json
-    import time
-
-    src = tmp_path / "src_offtz"
-    src.mkdir()
-    schema = "event_type string, value double, ts timestamp"
-
-    def drop(name, rows):
-        (src / f"{name}.json").write_text(
-            "\n".join(
-                json.dumps({"event_type": e, "value": v, "ts": t})
-                for e, v, t in rows
-            )
-        )
-
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "+08:00")
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .json(str(src))
-            .withWatermark("ts", "1 second")
-        )
-        out = running_counts_stream(stream, idle_ttl_ms=3_600_000)
-        name = f"ttl_offtz_{int(time.time() * 1000) % 100000}"
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            drop("b1", [("A", 1.0, "2024-01-01 00:00:00")])
-            q.processAllAvailable()
-            # 30 min later on another key; A stays inside its TTL
-            drop("b2", [("B", 2.0, "2024-01-01 00:30:00")])
-            q.processAllAvailable()
-            drop("b3", [("A", 5.0, "2024-01-01 00:40:00")])
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        a_rows = [
-            (r.n_events, r.total_value)
-            for r in spark.table(name).collect()
-            if r.event_type == "A"
-        ]
-        assert a_rows == [(1, 1.0), (2, 6.0)], a_rows
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
-
-
 def test_stateful_counts_batch_split_invariant(spark, tmp_path):
     """The associativity claim behind stream_stateful_counts'
     batch-SQL oracle, executed: the same rows replayed as ONE
@@ -468,7 +68,6 @@ def test_stateful_counts_batch_split_invariant(spark, tmp_path):
     including the 0.145-style values whose *100 double sits a ulp
     below the half boundary."""
     import json
-    import time
 
     rows = [
         ("a", 1.005, "2024-01-01T00:00:00"),
@@ -497,22 +96,7 @@ def test_stateful_counts_batch_split_invariant(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .json(str(src))
         )
-        out = running_counts_stream(stream)
-        name = f"split_{tag}_{int(time.time() * 1000) % 100000}"
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return {
-            r.event_type: (r.n_events, r.total_value)
-            for r in spark.table(name).collect()
-        }
+        return _final_counts(stream)
 
     whole = run([rows], "one")
     split = run([rows[:2], rows[2:4], rows[4:]], "three")

@@ -1,10 +1,11 @@
 """Streaming restart recovery: the checkpoint contract that makes
 the streaming operators production-real at cluster scale.
 
-Every registered streaming query here drives a bounded input to
-completion in ONE query lifetime; these tests cover the part that
-only shows up in production — a query STOPPING and a new instance
-resuming from the checkpoint. Two guarantees must compose:
+Every registered streaming query drives its bounded input to
+completion in ONE query lifetime (``streaming.events.run_bounded``);
+these tests cover the part that only shows up in production — a
+dropDuplicates query STOPPING and a new instance resuming from the
+checkpoint. Two guarantees must compose:
 
 - sink exactly-once: batches committed before the stop are not
   re-emitted by the restarted query (the parquet sink's commit log
@@ -92,93 +93,3 @@ def test_restart_is_noop_when_no_new_data(spark, tmp_path):
     )
     assert sorted(r["event_id"] for r in got.collect()) == [1, 2, 3]
 
-
-def test_ttl_state_and_timers_survive_restart(spark, tmp_path):
-    """The EventTimeTimeout template (streaming/stateful.py): per-key
-    state AND its armed timer live in the checkpoint. Across a stop/
-    restart a key must (a) keep accumulating from its recovered state
-    when its next event is inside the TTL, and (b) still expire once
-    the watermark passes its recovered timer — a restart must neither
-    reset counts nor immortalize state."""
-    import json
-
-    from map_reduce_server_spark.streaming.stateful import (
-        running_counts_stream,
-    )
-
-    landing = str(tmp_path / "ttl_landing")
-    out = str(tmp_path / "ttl_out")
-    os.makedirs(landing)
-    os.makedirs(out)
-
-    def drop(name, rows):
-        with open(os.path.join(landing, name), "w") as fh:
-            fh.write(
-                "\n".join(
-                    json.dumps({"event_type": e, "value": v, "ts": t})
-                    for e, v, t in rows
-                )
-            )
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(
-                "event_type string, value double, ts timestamp"
-            )
-            # one file per micro-batch: the watermark only advances
-            # BETWEEN batches, so the expiry sequencing below needs
-            # the three post-restart files in three batches
-            .option("maxFilesPerTrigger", 1)
-            .json(landing)
-            .withWatermark("ts", "1 second")
-        )
-        res = running_counts_stream(stream, idle_ttl_ms=3_600_000)
-
-        def sink(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(os.path.join(out, "data"))
-
-        q = (
-            res.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(out, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    # lifetime 1: A's first event; timer armed at 00:00 + 1 h
-    drop("b1.json", [("A", 1.0, "2024-01-01 00:00:00")])
-    run_once()
-
-    # lifetime 2, same checkpoint: A again 30 min later (inside TTL)
-    # -> recovered state must ACCUMULATE, not restart at 1
-    drop("b2.json", [("A", 5.0, "2024-01-01 00:30:00")])
-    run_once()
-
-    # lifetime 3: B far ahead pushes the watermark past A's re-armed
-    # 01:30:00 timer (recovered from lifetime 2's checkpoint); the
-    # trailing no-data batch expires A -> final snapshot + removal
-    drop("b3.json", [("B", 2.0, "2024-01-01 02:30:00")])
-    run_once()
-
-    # lifetime 4: a fresh A event must restart from zero
-    drop("b4.json", [("A", 10.0, "2024-01-01 03:00:00")])
-    run_once()
-
-    rows = (
-        spark.read.schema(
-            "event_type string, n_events bigint, total_value double"
-        )
-        .parquet(os.path.join(out, "data"))
-        .collect()
-    )
-    a = [(r.n_events, r.total_value) for r in rows if r.event_type == "A"]
-    # (a) accumulation across the restart happened
-    assert (2, 6.0) in a, a
-    # (b) expiry after the restart happened: the last A emission (by
-    # count trajectory) restarted from zero with the 03:00 event
-    assert (1, 10.0) in a, a
-    # and the restart never produced an over-accumulated (3, 16.0)
-    assert (3, 16.0) not in a, a
