@@ -231,21 +231,20 @@ def sql_dsum(expr: str, scale: int = 2) -> str:
     return f"CAST(SUM(CAST(({expr}) AS DECIMAL(30,{scale}))) AS DOUBLE)"
 
 
-def spark_sql_dsum(expr: str, scale: int = 2, precision: int = 30) -> str:
+def spark_sql_dsum(expr: str) -> str:
     """Spark-SQL-dialect :func:`dsum` for queries whose ENGINE side
     is a SQL string (scalar subqueries, where the DataFrame API
     cannot express the form under test): the same checked envelope
     as :func:`checked_decimal`, inlined — under the pinned non-ANSI
     session a bare ``CAST(x AS DECIMAL)`` NULLs NaN/Inf/overflow and
     ``SUM`` silently skips the row, returning a finite wrong answer
-    where the DuckDB twin raises."""
-    dec = f"DECIMAL({precision},{scale})"
+    where the DuckDB twin raises. Sums at ``DECIMAL(30,2)``."""
     return (
         f"CAST(SUM(CASE WHEN ({expr}) IS NULL THEN NULL ELSE "
-        f"COALESCE(CAST(({expr}) AS {dec}), "
+        f"COALESCE(CAST(({expr}) AS DECIMAL(30,2)), "
         f"CAST(raise_error('exact: value not representable as "
-        f"decimal({precision},{scale}) (NaN/Inf/overflow): ' "
-        f"|| CAST(({expr}) AS STRING)) AS {dec})) END) AS DOUBLE)"
+        f"decimal(30,2) (NaN/Inf/overflow): ' "
+        f"|| CAST(({expr}) AS STRING)) AS DECIMAL(30,2))) END) AS DOUBLE)"
     )
 
 

@@ -59,10 +59,10 @@ def session_flags(
     )
 
 
-def session_spans(ev: DataFrame, gap: str = DEFAULT_GAP) -> DataFrame:
-    """One row per session: (user_id, session_no, s_start, s_end),
-    timestamps inclusive on both ends."""
-    numbered = session_flags(ev, gap).withColumn(
+def session_spans(ev: DataFrame) -> DataFrame:
+    """One row per session at the ``DEFAULT_GAP``: (user_id,
+    session_no, s_start, s_end), timestamps inclusive on both ends."""
+    numbered = session_flags(ev).withColumn(
         "session_no",
         F.sum("is_new").over(
             _w().rowsBetween(Window.unboundedPreceding, Window.currentRow)

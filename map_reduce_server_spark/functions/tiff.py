@@ -37,23 +37,24 @@ _T_STRIP_COUNTS = 279
 
 _TYPE_SIZE = {1: 1, 3: 2, 4: 4}  # BYTE, SHORT, LONG
 
+_ROWS_PER_STRIP = 2  # the encoder's strip height
+
 
 def encode_gray8(
     width: int,
     height: int,
     pixels: bytes,
-    rows_per_strip: int = 2,
     big_endian: bool = False,
 ) -> bytes:
-    """Encode row-major 8-bit grayscale as a multi-strip baseline
-    TIFF in either byte order."""
+    """Encode row-major 8-bit grayscale as a baseline TIFF of
+    ``_ROWS_PER_STRIP``-row strips in either byte order."""
     if len(pixels) != width * height:
         raise ValueError("pixel buffer does not match dimensions")
     e = ">" if big_endian else "<"
     order = b"MM" if big_endian else b"II"
     strips = [
-        pixels[y * width : min(y + rows_per_strip, height) * width]
-        for y in range(0, height, rows_per_strip)
+        pixels[y * width : min(y + _ROWS_PER_STRIP, height) * width]
+        for y in range(0, height, _ROWS_PER_STRIP)
     ]
     n = len(strips)
 
@@ -96,7 +97,7 @@ def encode_gray8(
         entry(_T_PHOTOMETRIC, 3, 1, 1),
         entry(_T_STRIP_OFFSETS, 4, n, off_offsets),
         entry(_T_SAMPLES, 3, 1, 1),
-        entry(_T_ROWS_PER_STRIP, 3, 1, rows_per_strip),
+        entry(_T_ROWS_PER_STRIP, 3, 1, _ROWS_PER_STRIP),
         entry(_T_STRIP_COUNTS, 4, n, off_counts),
     ]
     # spec: IFD entries must be sorted by tag — they are, by

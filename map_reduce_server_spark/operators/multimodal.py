@@ -33,16 +33,18 @@ files are built from:
 - AIFF (:mod:`..functions.aiff`): big-endian IFF chunks, 80-bit
   extended sample rate.
 
-Every codec leg is the same two-stage plan built from one row-wise
-Arrow stage (:func:`_rowwise`): its SQL hex recipe feeds a plain
-``hex -> bytes`` encoder that yields a BinaryType ``payload``, a plain
-``bytes -> tuple`` stats function decodes it, and a Spark projection
-does the rounding. Formats that need codec libraries this project
-does not ship — perceptual audio (mp3/ogg), inter-frame video
-(H.264) — have no query. ``multimodal_decode``/``_features``/``_meta``
-run the same plumbing over a synthetic 32-byte payload.
+Every codec leg is the same one-stage plan, a single row-wise Arrow
+stage (:func:`_rowwise`): its SQL hex recipe feeds one plain per-row
+function that encodes the file (``hex -> bytes``) and decodes it into
+a stats tuple (``bytes -> tuple``), so the encoded bytes never leave
+the Python worker; a Spark projection does the rounding. Formats that
+need codec libraries this project does not ship — perceptual audio
+(mp3/ogg), inter-frame video (H.264) — have no query.
+``multimodal_decode``/``_features`` run the same stage over a
+synthetic 32-byte payload, and ``multimodal_meta`` projects its
+metadata with no Python stage at all.
 
-NULL policy shared by every stage and oracle twin: a NULL text has
+NULL policy shared by every query and oracle twin: a NULL text has
 no payload (md5(NULL) is NULL in both engines), so every
 payload-derived field is NULL — :func:`_rowwise` emits NULL outputs
 for a NULL input instead of crashing, and the oracles derive their
@@ -62,7 +64,7 @@ import struct
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map_reduce_server_spark.functions import (
@@ -84,7 +86,8 @@ from map_reduce_server_spark.tables import load_table
 
 
 def _rowwise(df: DataFrame, cols: list[str], fn, schema: str) -> DataFrame:
-    """The one row-wise Arrow stage every codec leg runs through.
+    """The one row-wise Arrow stage every Python-staged query runs
+    through.
 
     ``cols`` are SQL expressions over ``df``; each row's values go to
     the plain function ``fn(*values) -> tuple``, whose fields fill the
@@ -107,12 +110,6 @@ def _rowwise(df: DataFrame, cols: list[str], fn, schema: str) -> DataFrame:
     return df.selectExpr("doc_id", *cols).mapInPandas(
         run, schema=f"doc_id bigint, {schema}"
     )
-
-
-def _payload(df: DataFrame, encode, *cols: str) -> DataFrame:
-    """Encode stage: ``encode(*values) -> bytes`` per row, as a
-    BinaryType ``payload`` column."""
-    return _rowwise(df, list(cols), lambda *v: (encode(*v),), "payload binary")
 
 
 _PX_SCHEMA = "width int, height int, mean_px double, max_px int"
@@ -144,11 +141,6 @@ def _sample_stats(rate: int, s: list) -> tuple:
 def _audio_stats(decode):
     """Stats function for any ``bytes -> (rate, samples)`` decoder."""
     return lambda b: _sample_stats(*decode(bytes(b)))
-
-
-def _decode(payloads: DataFrame, stats, schema: str) -> DataFrame:
-    """Decode stage: ``stats(payload) -> tuple`` filling ``schema``."""
-    return _rowwise(payloads, ["payload"], stats, schema)
 
 
 def _px_stats_select(stats: DataFrame) -> DataFrame:
@@ -190,15 +182,20 @@ def _audio_stats_select(stats: DataFrame) -> DataFrame:
     )
 
 
-DECODE_SCHEMA = (
-    "doc_id bigint, fmt string, byte_len int, width int, height int"
-)
-
 # ONE definition of the synthetic 32-byte payload's hex, shared by
 # with_synthetic_payload's oracle twins (features/meta/decode) —
 # editing the payload recipe in one place must not desynchronize
 # them. NULL text → NULL hex → NULL-derived fields in both engines.
 _SQL_PAYLOAD_HEX = "md5(text) || md5('x' || text)"
+
+
+def _fmt() -> Column:
+    """The synthetic payload's nominal format, from ``doc_id`` alone,
+    so a NULL payload still has one."""
+    return F.element_at(
+        F.array(F.lit("png"), F.lit("jpeg"), F.lit("wav")),
+        (F.col("doc_id") % 3 + 1).cast("int"),
+    )
 
 
 def with_synthetic_payload(docs: DataFrame) -> DataFrame:
@@ -208,10 +205,6 @@ def with_synthetic_payload(docs: DataFrame) -> DataFrame:
     deterministic bytes standing in for image bytes. Metadata mirrors
     what a real ingest would carry (format, nominal size).
     """
-    fmt = F.element_at(
-        F.array(F.lit("png"), F.lit("jpeg"), F.lit("wav")),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    )
     payload = F.concat(
         F.unhex(F.md5(F.col("text"))),
         F.unhex(F.md5(F.concat(F.lit("x"), F.col("text")))),
@@ -220,66 +213,11 @@ def with_synthetic_payload(docs: DataFrame) -> DataFrame:
         "doc_id",
         payload.alias("payload"),
         F.struct(
-            fmt.alias("fmt"),
+            _fmt().alias("fmt"),
             F.length(payload).alias("byte_len"),
             F.col("source").alias("origin"),
         ).alias("meta"),
     )
-
-
-def decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Decode one Arrow batch of synthetic payloads: byte length, and
-    width/height read from the first two payload bytes —
-    deterministic, so it can be oracle-checked end to end. ``fmt``
-    passes through even for a NULL payload (its oracle derives it
-    from doc_id), which is why this stage is not :func:`_rowwise`."""
-    payloads = pdf["payload"]
-    return pd.DataFrame(
-        {
-            "doc_id": pdf["doc_id"],
-            "fmt": pdf["fmt"],
-            "byte_len": payloads.map(len, na_action="ignore"),
-            "width": payloads.map(lambda b: b[0], na_action="ignore"),
-            "height": payloads.map(lambda b: b[1], na_action="ignore"),
-        }
-    )
-
-
-def decode_payloads(df: DataFrame) -> DataFrame:
-    """mapInPandas decode stage over (doc_id, payload, meta) rows."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield decode_batch(pdf)
-
-    flat = df.select("doc_id", "payload", F.col("meta.fmt").alias("fmt"))
-    return flat.mapInPandas(run, schema=DECODE_SCHEMA)
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """Feature extraction over (doc_id, payload): byte statistics (a
-    real build plugs an image/audio model in here)."""
-    return _decode(
-        df,
-        lambda b: (sum(b) / len(b), max(b), len(b) // 4),
-        "mean_byte double, max_byte int, n_blocks int",
-    )
-
-
-def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL resize stage for PNG payloads: decode (CRC-validated,
-    DEFLATE-inflated), nearest-neighbor resample, re-encode — all via
-    the pure-stdlib codec in :mod:`..functions.png`, Arrow-batched.
-    The stage contract is binary in → binary out on (doc_id, payload).
-    Non-PNG payloads raise inside the codec (this stage is
-    PNG-typed; the other modalities have their own decode stages)."""
-
-    def resize(b: bytes) -> bytes:
-        w, h, px = png.decode_rgb8(bytes(b))
-        return png.encode_rgb8(
-            width, height, png.resize_nearest_rgb8(px, w, h, width, height)
-        )
-
-    return _payload(df, resize, "payload")
 
 
 # --- real PNG codec path ----------------------------------------------------
@@ -290,15 +228,24 @@ _RS_W, _RS_H = 2, 2
 _SQL_PIX_HEX = "md5(text) || md5('x' || text) || md5('y' || text)"
 
 
-def with_png_payload(docs: DataFrame) -> DataFrame:
-    """Encode a REAL 4x3 RGB PNG per document (pure-stdlib encoder;
-    pixels = first 36 bytes of three chained md5 digests, so the
-    oracle can recompute every pixel from SQL)."""
-    return _payload(
-        docs,
-        lambda h: png.encode_rgb8(_PNG_W, _PNG_H, bytes.fromhex(h)),
-        f"substr({_SQL_PIX_HEX}, 1, {_PNG_W * _PNG_H * 3 * 2})",
+def _encode_png(h: str) -> bytes:
+    """A REAL 4x3 RGB PNG (pure-stdlib encoder) of the 36 pixel bytes
+    in ``h``, the first 36 bytes of three chained md5 digests, so the
+    oracle can recompute every pixel from SQL."""
+    return png.encode_rgb8(_PNG_W, _PNG_H, bytes.fromhex(h))
+
+
+def _resize_png(b: bytes) -> bytes:
+    """REAL resize step for a PNG file: decode (CRC-validated,
+    DEFLATE-inflated), nearest-neighbor resample to ``_RS_W`` x
+    ``_RS_H``, re-encode. Non-PNG bytes raise inside the codec."""
+    w, h, px = png.decode_rgb8(bytes(b))
+    return png.encode_rgb8(
+        _RS_W, _RS_H, png.resize_nearest_rgb8(px, w, h, _RS_W, _RS_H)
     )
+
+
+_SQL_PNG_HEX = f"substr({_SQL_PIX_HEX}, 1, {_PNG_W * _PNG_H * 3 * 2})"
 
 
 @register(
@@ -329,8 +276,11 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match. Every other wire format in the module docstring gets
     the same treatment in its own ``multimodal_decode_*`` query."""
     docs = load_table(spark, sf_dir, "documents")
+    stats = _px_stats(png.decode_rgb8)
     return _px_stats_select(
-        _decode(with_png_payload(docs), _px_stats(png.decode_rgb8), _PX_SCHEMA)
+        _rowwise(
+            docs, [_SQL_PNG_HEX], lambda h: stats(_encode_png(h)), _PX_SCHEMA
+        )
     )
 
 
@@ -353,15 +303,20 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full image pipeline: encode → REAL resize stage (decode,
+    """Full image pipeline in one stage: encode → REAL resize (decode,
     nearest-neighbor 4x3 → 2x2, re-encode) → decode + stats. The
     oracle selects exactly the 12 bytes nearest-neighbor sampling
     keeps (src = floor(dst·src/dst) ⇒ rows {{0,1}}, cols {{0,2}}), so
     the resampling arithmetic is value-checked too."""
     docs = load_table(spark, sf_dir, "documents")
-    resized = resize_images(with_png_payload(docs), _RS_W, _RS_H)
+    stats = _px_stats(png.decode_rgb8)
     return _px_stats_select(
-        _decode(resized, _px_stats(png.decode_rgb8), _PX_SCHEMA)
+        _rowwise(
+            docs,
+            [_SQL_PNG_HEX],
+            lambda h: stats(_resize_png(_encode_png(h))),
+            _PX_SCHEMA,
+        )
     )
 
 
@@ -386,11 +341,16 @@ def multimodal_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pandas-UDF feature extraction over binary payloads,
-    oracle-checked by recomputing the byte statistics from the md5
-    hex the payload was built from."""
+    """Feature extraction over binary payloads — byte statistics (a
+    real build plugs an image/audio model in here), oracle-checked by
+    recomputing them from the md5 hex the payload was built from."""
     docs = load_table(spark, sf_dir, "documents")
-    return extract_features(with_synthetic_payload(docs))
+    return _rowwise(
+        with_synthetic_payload(docs),
+        ["payload"],
+        lambda b: (sum(b) / len(b), max(b), len(b) // 4),
+        "mean_byte double, max_byte int, n_blocks int",
+    )
 
 
 @register(
@@ -429,19 +389,29 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched Pandas-UDF decode over binary payloads.
+    """Arrow-batched decode over binary payloads.
 
-    The decoder reads the first two payload bytes as width/height;
-    since the payload is unhex(md5(text)), the oracle recomputes the
-    identical values from the md5 hex — validating the whole binary
-    → mapInPandas → typed-features pipeline.
+    The decoder reads the byte length and the first two payload bytes
+    as width/height; since the payload is unhex(md5(text)), the
+    oracle recomputes the identical values from the md5 hex —
+    validating the whole binary → mapInPandas → typed-features
+    pipeline. ``fmt`` comes from ``doc_id`` in Spark, so a NULL
+    payload keeps it.
     """
     docs = load_table(spark, sf_dir, "documents")
-    return decode_payloads(with_synthetic_payload(docs))
+    decoded = _rowwise(
+        with_synthetic_payload(docs),
+        ["payload"],
+        lambda b: (len(b), b[0], b[1]),
+        "byte_len int, width int, height int",
+    )
+    return decoded.select(
+        "doc_id", _fmt().alias("fmt"), "byte_len", "width", "height"
+    )
 
 
-# The mapInPandas stage functions above close over module-level batch
-# helpers — ship them by value (see functions.register_by_value).
+# The per-row stage functions close over module-level helpers — ship
+# them by value (see functions.register_by_value).
 from map_reduce_server_spark.functions import (  # noqa: E402
     register_by_value as _rbv,
 )
@@ -451,10 +421,22 @@ del _rbv  # a lingering ref would pickle the functions pkg by reference
 
 
 def _int16s(h: str) -> list[int]:
-    """Hex -> little-endian signed int16 samples: ONE definition of
-    the byte layout the WAV/FLAC/AIFF ``_SQL_*_SAMPLES`` oracles
-    replay."""
+    """Hex -> little-endian signed int16 samples: the byte layout
+    :func:`_sql_int16s` replays for the WAV/FLAC/AIFF oracles."""
     return list(struct.unpack(f"<{len(h) // 4}h", bytes.fromhex(h)))
+
+
+def _sql_int16s(hex_sql: str, n: int) -> str:
+    """SQL twin of :func:`_int16s`: sample i (1-based) is the
+    little-endian signed int16 from hex byte pair (2i-1, 2i), i.e.
+    hex chars (4i-3..4i-2) low byte and (4i-1..4i) high byte."""
+    return f"""
+  list_transform(range(1, {n} + 1), i ->
+    CAST(('0x' || substr({hex_sql}, i*4-3, 2)) AS BIGINT)
+    + 256 * CAST(('0x' || substr({hex_sql}, i*4-1, 2)) AS BIGINT)
+    - CASE WHEN CAST(('0x' || substr({hex_sql}, i*4-1, 2)) AS BIGINT)
+                >= 128 THEN 65536 ELSE 0 END)
+"""
 
 
 # --- real WAV codec path ----------------------------------------------------
@@ -466,15 +448,7 @@ _WAV_RATE = 8000     # frame rate written into the RIFF header
 _SQL_WAV_HEX = (
     "md5(text) || md5('a' || text) || md5('b' || text) || md5('c' || text)"
 )
-# sample i (1-based): little-endian signed int16 from hex byte pair
-# (2i-1, 2i) -> hex chars (4i-3..4i-2) low byte, (4i-1..4i) high byte.
-_SQL_WAV_SAMPLES = f"""
-  list_transform(range(1, {_WAV_N} + 1), i ->
-    CAST(('0x' || substr({_SQL_WAV_HEX}, i*4-3, 2)) AS BIGINT)
-    + 256 * CAST(('0x' || substr({_SQL_WAV_HEX}, i*4-1, 2)) AS BIGINT)
-    - CASE WHEN CAST(('0x' || substr({_SQL_WAV_HEX}, i*4-1, 2)) AS BIGINT)
-                >= 128 THEN 65536 ELSE 0 END)
-"""
+_SQL_WAV_SAMPLES = _sql_int16s(_SQL_WAV_HEX, _WAV_N)
 
 
 def _wav_stats(b: bytes) -> tuple:
@@ -527,13 +501,13 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap audio-quality screen before any model-based scoring.
     """
     docs = load_table(spark, sf_dir, "documents")
-    payload = _payload(
-        docs,
-        lambda h: wavcodec.encode_pcm16(_int16s(h), _WAV_RATE),
-        _SQL_WAV_HEX,
-    )
     return _audio_stats_select(
-        _decode(payload, _wav_stats, f"{_AUDIO_SCHEMA}, zero_crossings int")
+        _rowwise(
+            docs,
+            [_SQL_WAV_HEX],
+            lambda h: _wav_stats(wavcodec.encode_pcm16(_int16s(h), _WAV_RATE)),
+            f"{_AUDIO_SCHEMA}, zero_crossings int",
+        )
     )
 
 
@@ -563,11 +537,14 @@ def _flat_block_gray(hex24: str) -> bytes:
 def _gray_jpeg_leg(docs: DataFrame, hex_sql: str, encoder) -> DataFrame:
     """One body for the gray-JPEG legs (baseline + progressive): they
     differ ONLY in hex recipe and ``encoder(width, height, pixels)``."""
-    payload = _payload(
-        docs, lambda h: encoder(_JPG_W, _JPG_H, _flat_block_gray(h)), hex_sql
-    )
+    stats = _px_stats(jpeg.decode_gray8)
     return _px_stats_select(
-        _decode(payload, _px_stats(jpeg.decode_gray8), _PX_SCHEMA)
+        _rowwise(
+            docs,
+            [hex_sql],
+            lambda h: stats(encoder(_JPG_W, _JPG_H, _flat_block_gray(h))),
+            _PX_SCHEMA,
+        )
     )
 
 
@@ -770,16 +747,12 @@ def multimodal_decode_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; payloads live only inside a task.
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    payload = _payload(
+    stats = _rowwise(
         docs,
-        lambda h: jpeg.encode_rgb8(
-            _JPGC_W, _JPGC_H, _flat_mcu_rgb(h), subsample=True
+        [_SQL_JPGC_HEX],
+        lambda h: _jpeg_color_stats(
+            jpeg.encode_rgb8(_JPGC_W, _JPGC_H, _flat_mcu_rgb(h), subsample=True)
         ),
-        _SQL_JPGC_HEX,
-    )
-    stats = _decode(
-        payload,
-        _jpeg_color_stats,
         "width int, height int, mean_r double, mean_g double, "
         "mean_b double, max_px int",
     )
@@ -820,11 +793,14 @@ def _g711_leg(docs: DataFrame, hex_sql: str, encode, decode) -> DataFrame:
     bytes as a REAL WAVE_FORMAT_MULAW/ALAW RIFF file, then container
     parse (format-tag validation, chunk walk) + logarithmic
     expansion and the per-clip sample statistics."""
-    payload = _payload(
-        docs, lambda h: encode(_MULAW_RATE, bytes.fromhex(h)), hex_sql
-    )
+    stats = _audio_stats(decode)
     return _audio_stats_select(
-        _decode(payload, _audio_stats(decode), _AUDIO_SCHEMA)
+        _rowwise(
+            docs,
+            [hex_sql],
+            lambda h: stats(encode(_MULAW_RATE, bytes.fromhex(h))),
+            _AUDIO_SCHEMA,
+        )
     )
 
 
@@ -1013,14 +989,10 @@ def multimodal_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     movement beyond the scan).
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    payload = _payload(
+    stats = _rowwise(
         docs,
-        _encode_video,
-        " || ".join(_sql_vid_hex(f) for f in range(_VID_FRAMES)),
-    )
-    stats = _decode(
-        payload,
-        _video_stats,
+        [" || ".join(_sql_vid_hex(f) for f in range(_VID_FRAMES))],
+        lambda h: _video_stats(_encode_video(h)),
         "width int, height int, fps int, n_frames int, n_sampled int, "
         "mean_px double, max_px int",
     )
@@ -1082,13 +1054,14 @@ def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: embarrassingly parallel Arrow-batched mapInPandas, no
     shuffle; payloads never leave the task."""
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    payload = _payload(
-        docs,
-        lambda h: gif.encode_gray8(_GIF_W, _GIF_H, bytes.fromhex(h)),
-        _SQL_GIF_HEX,
-    )
+    stats = _px_stats(gif.decode_gray8)
     return _px_stats_select(
-        _decode(payload, _px_stats(gif.decode_gray8), _PX_SCHEMA)
+        _rowwise(
+            docs,
+            [_SQL_GIF_HEX],
+            lambda h: stats(gif.encode_gray8(_GIF_W, _GIF_H, bytes.fromhex(h))),
+            _PX_SCHEMA,
+        )
     )
 
 
@@ -1103,15 +1076,7 @@ _SQL_FLAC_HEX = (
     "md5('p' || text) || md5('q' || text) "
     "|| md5('r' || text) || md5('s' || text)"
 )
-# sample i (1-based): little-endian signed int16, same byte layout
-# as the PCM-WAV oracle.
-_SQL_FLAC_SAMPLES = f"""
-  list_transform(range(1, {_FLAC_N} + 1), i ->
-    CAST(('0x' || substr({_SQL_FLAC_HEX}, i*4-3, 2)) AS BIGINT)
-    + 256 * CAST(('0x' || substr({_SQL_FLAC_HEX}, i*4-1, 2)) AS BIGINT)
-    - CASE WHEN CAST(('0x' || substr({_SQL_FLAC_HEX}, i*4-1, 2)) AS BIGINT)
-                >= 128 THEN 65536 ELSE 0 END)
-"""
+_SQL_FLAC_SAMPLES = _sql_int16s(_SQL_FLAC_HEX, _FLAC_N)
 
 
 @register(
@@ -1151,11 +1116,14 @@ def multimodal_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: embarrassingly parallel Arrow-batched mapInPandas, no
     shuffle; payloads live only inside a task."""
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    payload = _payload(
-        docs, lambda h: flac.encode_s16(_int16s(h), _FLAC_RATE), _SQL_FLAC_HEX
-    )
+    stats = _audio_stats(flac.decode_s16)
     return _audio_stats_select(
-        _decode(payload, _audio_stats(flac.decode_s16), _AUDIO_SCHEMA)
+        _rowwise(
+            docs,
+            [_SQL_FLAC_HEX],
+            lambda h: stats(flac.encode_s16(_int16s(h), _FLAC_RATE)),
+            _AUDIO_SCHEMA,
+        )
     )
 
 
@@ -1258,13 +1226,14 @@ def multimodal_decode_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: embarrassingly parallel Arrow-batched mapInPandas, no
     shuffle; payloads live only inside a task."""
     docs = load_table(spark, sf_dir, "documents")
-    payload = _payload(
-        docs,
-        lambda h: adpcm.frame_wav_ima(_ADPCM_RATE, *_ima_block(h)),
-        _SQL_ADPCM_HEX,
-    )
+    stats = _audio_stats(adpcm.decode_wav_ima)
     return _audio_stats_select(
-        _decode(payload, _audio_stats(adpcm.decode_wav_ima), _AUDIO_SCHEMA)
+        _rowwise(
+            docs,
+            [_SQL_ADPCM_HEX],
+            lambda h: stats(adpcm.frame_wav_ima(_ADPCM_RATE, *_ima_block(h))),
+            _AUDIO_SCHEMA,
+        )
     )
 
 
@@ -1346,36 +1315,35 @@ def multimodal_decode_adpcm_multiblock(
     (doc_id, blk) — then aggregates per document. Same zero-shuffle
     Arrow-batched mapInPandas scale shape as every audio leg."""
     docs = load_table(spark, sf_dir, "documents")
-    payload = _payload(
-        docs,
-        lambda h: adpcm.frame_wav_ima_multi(
-            _ADPCM_RATE, [_ima_block(h[0:38]), _ima_block(h[38:76])]
-        ),
-        _SQL_ADPCM_MB_HEX,
-    )
+    stats = _audio_stats(adpcm.decode_wav_ima)
     return _audio_stats_select(
-        _decode(payload, _audio_stats(adpcm.decode_wav_ima), _AUDIO_SCHEMA)
+        _rowwise(
+            docs,
+            [_SQL_ADPCM_MB_HEX],
+            lambda h: stats(
+                adpcm.frame_wav_ima_multi(
+                    _ADPCM_RATE, [_ima_block(h[0:38]), _ima_block(h[38:76])]
+                )
+            ),
+            _AUDIO_SCHEMA,
+        )
     )
 
 
-# ---------------------------------------------------------------
-# TIFF — the tag-directory container family (round-14 queue).
-
-_TIFF_W, _TIFF_H = 8, 6  # 48 gray bytes = all three md5 digests
-
-
-# Oracle for multimodal_decode_tiff below: identical pixel statistics recomputed from
-# the md5 hex — 48 bytes, so the divisor joins the tie-free-by-
-# enumeration set in test_mean_px_round_tie_free_domains.
-_TIFF_ORACLE = f"""
+def _gray48_oracle(width: int, height: int) -> str:
+    """Oracle for the TIFF, BMP and TGA legs: identical pixel
+    statistics recomputed from the md5 hex — all 48 bytes of
+    ``_SQL_PIX_HEX``, so the divisor joins the tie-free-by-enumeration
+    set in test_mean_px_round_tie_free_domains."""
+    return f"""
 WITH px AS (
   SELECT doc_id, list_transform(range(1, 49),
            i -> CAST(('0x' || substr({_SQL_PIX_HEX}, i*2-1, 2))
                 AS BIGINT)) AS bs
   FROM documents WHERE text IS NOT NULL),
 st AS (
-  SELECT doc_id, CAST({_TIFF_W} AS INTEGER) AS width,
-         CAST({_TIFF_H} AS INTEGER) AS height,
+  SELECT doc_id, CAST({width} AS INTEGER) AS width,
+         CAST({height} AS INTEGER) AS height,
          round(CAST(list_sum(bs) AS DOUBLE) / 48, 6) AS mean_px,
          CAST(list_max(bs) AS INTEGER) AS max_px
   FROM px)
@@ -1384,7 +1352,13 @@ FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
 """
 
 
-@register("multimodal_decode_tiff", oracle=_TIFF_ORACLE)
+# ---------------------------------------------------------------
+# TIFF — the tag-directory container family (round-14 queue).
+
+_TIFF_W, _TIFF_H = 8, 6  # 48 gray bytes = all three md5 digests
+
+
+@register("multimodal_decode_tiff", oracle=_gray48_oracle(_TIFF_W, _TIFF_H))
 def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec round-trip for the TAG-DIRECTORY container family:
     encode each document's md5-derived pixels (the full 48 bytes of
@@ -1392,7 +1366,7 @@ def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (byte-order header, sorted IFD, inline vs out-of-line values,
     StripOffsets/StripByteCounts indirection) and decode it back with
     the pure-stdlib parser. Byte order alternates by doc parity —
-    even docs II, odd docs MM — so the decode stage exercises BOTH
+    even docs II, odd docs MM — so the decoder exercises BOTH
     orders while the oracle stays endianness-invariant. PNG covers
     linear chunk framing + DEFLATE, GIF covers LZW sub-blocks, JPEG
     covers entropy coding; TIFF adds random-access offset
@@ -1400,16 +1374,18 @@ def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrive in. Same zero-shuffle Arrow-batched mapInPandas scale
     shape as every image leg."""
     docs = load_table(spark, sf_dir, "documents")
-    payload = _payload(
-        docs,
-        lambda h, be: tiff.encode_gray8(
-            _TIFF_W, _TIFF_H, bytes.fromhex(h), big_endian=be
-        ),
-        _SQL_PIX_HEX,
-        "doc_id % 2 = 1",
-    )
+    stats = _px_stats(tiff.decode_gray8)
     return _px_stats_select(
-        _decode(payload, _px_stats(tiff.decode_gray8), _PX_SCHEMA)
+        _rowwise(
+            docs,
+            [_SQL_PIX_HEX, "doc_id % 2 = 1"],
+            lambda h, be: stats(
+                tiff.encode_gray8(
+                    _TIFF_W, _TIFF_H, bytes.fromhex(h), big_endian=be
+                )
+            ),
+            _PX_SCHEMA,
+        )
     )
 
 
@@ -1419,27 +1395,7 @@ def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BMP_W, _BMP_H = 6, 8  # 48 gray bytes; stride 8 pads 2 per row
 
 
-# Oracle for multimodal_decode_bmp below: identical pixel statistics recomputed from
-# the md5 hex (same 48-byte pixel source as TIFF, so divisor 48 is
-# already in the tie-free-by-enumeration proof).
-_BMP_ORACLE = f"""
-WITH px AS (
-  SELECT doc_id, list_transform(range(1, 49),
-           i -> CAST(('0x' || substr({_SQL_PIX_HEX}, i*2-1, 2))
-                AS BIGINT)) AS bs
-  FROM documents WHERE text IS NOT NULL),
-st AS (
-  SELECT doc_id, CAST({_BMP_W} AS INTEGER) AS width,
-         CAST({_BMP_H} AS INTEGER) AS height,
-         round(CAST(list_sum(bs) AS DOUBLE) / 48, 6) AS mean_px,
-         CAST(list_max(bs) AS INTEGER) AS max_px
-  FROM px)
-SELECT d.doc_id, st.width, st.height, st.mean_px, st.max_px
-FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
-"""
-
-
-@register("multimodal_decode_bmp", oracle=_BMP_ORACLE)
+@register("multimodal_decode_bmp", oracle=_gray48_oracle(_BMP_W, _BMP_H))
 def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec round-trip for the Windows DIB layout family:
     encode each document's md5-derived pixels as an actual
@@ -1452,13 +1408,14 @@ def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the palette/stride walk. Same zero-shuffle Arrow-batched
     mapInPandas scale shape as every image leg."""
     docs = load_table(spark, sf_dir, "documents")
-    payload = _payload(
-        docs,
-        lambda h: bmp.encode_gray8(_BMP_W, _BMP_H, bytes.fromhex(h)),
-        _SQL_PIX_HEX,
-    )
+    stats = _px_stats(bmp.decode_gray8)
     return _px_stats_select(
-        _decode(payload, _px_stats(bmp.decode_gray8), _PX_SCHEMA)
+        _rowwise(
+            docs,
+            [_SQL_PIX_HEX],
+            lambda h: stats(bmp.encode_gray8(_BMP_W, _BMP_H, bytes.fromhex(h))),
+            _PX_SCHEMA,
+        )
     )
 
 
@@ -1468,27 +1425,7 @@ def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TGA_W, _TGA_H = 8, 6  # 48 gray bytes, same tie-free divisor domain
 
 
-# Oracle for multimodal_decode_tga: identical pixel statistics
-# recomputed from the md5 hex (48-byte pixel source, divisor already
-# in the tie-free-by-enumeration proof of _px_stats_select).
-_TGA_ORACLE = f"""
-WITH px AS (
-  SELECT doc_id, list_transform(range(1, 49),
-           i -> CAST(('0x' || substr({_SQL_PIX_HEX}, i*2-1, 2))
-                AS BIGINT)) AS bs
-  FROM documents WHERE text IS NOT NULL),
-st AS (
-  SELECT doc_id, CAST({_TGA_W} AS INTEGER) AS width,
-         CAST({_TGA_H} AS INTEGER) AS height,
-         round(CAST(list_sum(bs) AS DOUBLE) / 48, 6) AS mean_px,
-         CAST(list_max(bs) AS INTEGER) AS max_px
-  FROM px)
-SELECT d.doc_id, st.width, st.height, st.mean_px, st.max_px
-FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
-"""
-
-
-@register("multimodal_decode_tga", oracle=_TGA_ORACLE)
+@register("multimodal_decode_tga", oracle=_gray48_oracle(_TGA_W, _TGA_H))
 def multimodal_decode_tga(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec round-trip for the RUN-LENGTH compression family:
     encode each document's md5-derived pixels as an actual RLE TGA
@@ -1502,16 +1439,16 @@ def multimodal_decode_tga(spark: SparkSession, sf_dir: str) -> DataFrame:
     assumption. Same zero-shuffle Arrow-batched mapInPandas scale
     shape as every image leg."""
     docs = load_table(spark, sf_dir, "documents")
-    payload = _payload(
-        docs,
-        lambda h, td: tga.encode_gray8(
-            _TGA_W, _TGA_H, bytes.fromhex(h), top_down=td
-        ),
-        _SQL_PIX_HEX,
-        "doc_id % 2 = 1",
-    )
+    stats = _px_stats(tga.decode_gray8)
     return _px_stats_select(
-        _decode(payload, _px_stats(tga.decode_gray8), _PX_SCHEMA)
+        _rowwise(
+            docs,
+            [_SQL_PIX_HEX, "doc_id % 2 = 1"],
+            lambda h, td: stats(
+                tga.encode_gray8(_TGA_W, _TGA_H, bytes.fromhex(h), top_down=td)
+            ),
+            _PX_SCHEMA,
+        )
     )
 
 
@@ -1531,14 +1468,8 @@ _SQL_AIFF_HEX = (
 # sample i (1-based): little-endian signed int16 from hex byte pair
 # — the SAMPLE VALUES are derived LE from the hex exactly like the
 # WAV/FLAC legs (one shared recipe), while the FILE stores them
-# big-endian; the decode stage owns that byte swap.
-_SQL_AIFF_SAMPLES = f"""
-  list_transform(range(1, {_AIFF_N} + 1), i ->
-    CAST(('0x' || substr({_SQL_AIFF_HEX}, i*4-3, 2)) AS BIGINT)
-    + 256 * CAST(('0x' || substr({_SQL_AIFF_HEX}, i*4-1, 2)) AS BIGINT)
-    - CASE WHEN CAST(('0x' || substr({_SQL_AIFF_HEX}, i*4-1, 2)) AS BIGINT)
-                >= 128 THEN 65536 ELSE 0 END)
-"""
+# big-endian; the codec owns that byte swap.
+_SQL_AIFF_SAMPLES = _sql_int16s(_SQL_AIFF_HEX, _AIFF_N)
 
 
 # Oracle for multimodal_decode_aiff: identical int16 samples
@@ -1578,11 +1509,12 @@ def multimodal_decode_aiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     big-endian PCM swap breaks the hash match. Same zero-shuffle
     Arrow-batched mapInPandas scale shape as every audio leg."""
     docs = load_table(spark, sf_dir, "documents")
-    payload = _payload(
-        docs,
-        lambda h: aiff.encode_pcm16(_int16s(h), _AIFF_RATE),
-        _SQL_AIFF_HEX,
-    )
+    stats = _audio_stats(aiff.decode_pcm16)
     return _audio_stats_select(
-        _decode(payload, _audio_stats(aiff.decode_pcm16), _AUDIO_SCHEMA)
+        _rowwise(
+            docs,
+            [_SQL_AIFF_HEX],
+            lambda h: stats(aiff.encode_pcm16(_int16s(h), _AIFF_RATE)),
+            _AUDIO_SCHEMA,
+        )
     )

@@ -353,11 +353,10 @@ _SESSIONIZE_FLUSH_TS = "2035-01-01 00:00:00"
 def _events_stream_timeordered(
     spark: SparkSession,
     sf_dir: str,
-    n_files: int = 4,
     sentinel: bool = True,
 ) -> DataFrame:
     """Streaming DataFrame over the bounded events table staged as
-    ``n_files`` TIME-RANGE files replayed one per micro-batch, plus a
+    four TIME-RANGE files replayed one per micro-batch, plus a
     final one-row watermark-flush sentinel file — the multi-batch
     sibling of :func:`_events_stream` for operators whose cross-batch
     state transitions (session growth, append-mode finalization,
@@ -388,7 +387,7 @@ def _events_stream_timeordered(
     cleanup_at_exit(stage)
     data_dir = os.path.join(stage, "in")
     (
-        ev.repartitionByRange(n_files, "ts", "event_id")
+        ev.repartitionByRange(4, "ts", "event_id")
         .write.mode("overwrite")
         .parquet(data_dir)
     )

@@ -5,10 +5,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from map_reduce_server_spark.operators.multimodal import (
-    decode_payloads,
-    with_synthetic_payload,
-)
+from map_reduce_server_spark.operators.multimodal import with_synthetic_payload
 from map_reduce_server_spark.tables import load_table
 
 
@@ -24,26 +21,25 @@ def test_payload_is_binary_with_metadata(spark, sf_small):
 
 
 def test_resize_rejects_non_png_payload(spark, sf_small):
-    """resize_images is now a real PNG stage; the synthetic md5-byte
-    payloads are not PNGs, so the codec must reject them."""
+    """The resize step multimodal_resize_png runs is a real PNG codec
+    step; the synthetic md5-byte payloads are not PNGs, so the codec
+    must reject them inside the Arrow stage."""
     from pyspark.errors import PythonException
 
-    from map_reduce_server_spark.operators.multimodal import resize_images
+    from map_reduce_server_spark.operators.multimodal import (
+        _resize_png,
+        _rowwise,
+    )
 
     docs = load_table(spark, sf_small, "documents").limit(1)
+    resized = _rowwise(
+        with_synthetic_payload(docs),
+        ["payload"],
+        lambda b: (_resize_png(b),),
+        "payload binary",
+    )
     with pytest.raises(PythonException, match="bad signature"):
-        resize_images(with_synthetic_payload(docs), 64, 64).collect()
-
-
-def test_decode_fake_path_runs_distributed(spark, sf_small):
-    docs = load_table(spark, sf_small, "documents").limit(10)
-    decoded = decode_payloads(with_synthetic_payload(docs))
-    rows = decoded.collect()
-    assert len(rows) == 10
-    for r in rows:
-        assert r.byte_len == 32
-        assert 0 <= r.width <= 255
-        assert 0 <= r.height <= 255
+        resized.collect()
 
 
 # --- pure-stdlib PNG codec --------------------------------------------------
@@ -191,16 +187,6 @@ def test_png_resize_nearest():
     assert out[36:39] == bytes([3, 3, 3])  # bottom-left
     assert out[45:48] == bytes([4, 4, 4])  # bottom-right
     assert len(out) == 4 * 4 * 3
-
-
-def test_real_png_pipeline_matches_fake_free_oracle(spark, sf_small):
-    """The registered PNG queries run the real codec worker-side."""
-    from map_reduce_server_spark import registry
-
-    df = registry.QUERIES["multimodal_decode_png"](spark, sf_small)
-    row = df.orderBy("doc_id").first()
-    assert row["width"] == 4 and row["height"] == 3
-    assert 0.0 <= row["mean_px"] <= 255.0
 
 
 def test_wavcodec_roundtrip():
@@ -1124,14 +1110,14 @@ def test_adpcm_multiblock_spark_path(spark, sf_small):
     encode_wav_ima files (samples_per_block=9 -> 4 full blocks + a
     header-only padded final block at n=37, exercising cross-block
     index carry and the fact-trimmed tail) inside mapInPandas, run
-    the shared audio decode stage the ADPCM queries use, and check
+    the audio stats function the ADPCM queries use, and check
     every row against a driver-side replay of the closed-loop
     reconstruction."""
     from map_reduce_server_spark.functions import adpcm
     from map_reduce_server_spark.operators.multimodal import (
         _AUDIO_SCHEMA,
         _audio_stats,
-        _decode,
+        _rowwise,
     )
 
     docs = load_table(spark, sf_small, "documents").select("doc_id").limit(40)
@@ -1155,8 +1141,11 @@ def test_adpcm_multiblock_spark_path(spark, sf_small):
             r["mean_abs"],
             r["max_abs"],
         )
-        for r in _decode(
-            framed, _audio_stats(adpcm.decode_wav_ima), _AUDIO_SCHEMA
+        for r in _rowwise(
+            framed,
+            ["payload"],
+            _audio_stats(adpcm.decode_wav_ima),
+            _AUDIO_SCHEMA,
         ).collect()
     }
     assert len(got) == 40
@@ -1180,10 +1169,9 @@ def test_adpcm_multiblock_spark_path(spark, sf_small):
 
 
 def test_adpcm_multiblock_query_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered multi-block ADPCM query
-    (now registered): the
-    Spark result must match the per-(doc, block) recursive-CTE oracle
-    exactly as the driver's compare would check it."""
+    """Gate-grade parity for the registered multi-block ADPCM query:
+    the Spark result must match the per-(doc, block) recursive-CTE
+    oracle exactly as the driver's compare would check it."""
     from tests.oracle_utils import compare_to_oracle
 
     from map_reduce_server_spark.operators.multimodal import (
@@ -1197,17 +1185,17 @@ def test_adpcm_multiblock_query_matches_oracle(spark, sf_small):
 
 
 def test_tiff_decode_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered multimodal_decode_tiff
-    (now registered): both byte orders decode to the
-    identical md5-derived pixel statistics."""
+    """Gate-grade parity for the registered multimodal_decode_tiff:
+    both byte orders decode to the identical md5-derived pixel
+    statistics."""
     from map_reduce_server_spark.operators.multimodal import (
-        _TIFF_ORACLE,
         multimodal_decode_tiff,
     )
+    from map_reduce_server_spark.registry import ORACLE
     from tests.oracle_utils import compare_to_oracle
 
     df = multimodal_decode_tiff(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _TIFF_ORACLE, sf_small)
+    ok, msg = compare_to_oracle(df, ORACLE["multimodal_decode_tiff"], sf_small)
     assert ok, msg
 
 
@@ -1257,17 +1245,17 @@ def test_tiff_codec_roundtrip_both_orders():
 
 
 def test_bmp_decode_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered multimodal_decode_bmp
-    (now registered): palette mapping + stride-padded
-    bottom-up assembly decode to the md5-derived pixel statistics."""
+    """Gate-grade parity for the registered multimodal_decode_bmp:
+    palette mapping + stride-padded bottom-up assembly decode to the
+    md5-derived pixel statistics."""
     from map_reduce_server_spark.operators.multimodal import (
-        _BMP_ORACLE,
         multimodal_decode_bmp,
     )
+    from map_reduce_server_spark.registry import ORACLE
     from tests.oracle_utils import compare_to_oracle
 
     df = multimodal_decode_bmp(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _BMP_ORACLE, sf_small)
+    ok, msg = compare_to_oracle(df, ORACLE["multimodal_decode_bmp"], sf_small)
     assert ok, msg
 
 
@@ -1355,22 +1343,6 @@ def test_tga_codec_roundtrip_and_strictness():
         tga.decode_gray8(bad)
 
 
-def test_tga_decode_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered multimodal_decode_tga
-    (now registered): RLE packet expansion + origin-bit
-    assembly decode to the md5-derived pixel statistics."""
-    from map_reduce_server_spark.operators.multimodal import (
-        _TGA_ORACLE,
-        multimodal_decode_tga,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = multimodal_decode_tga(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _TGA_ORACLE, sf_small)
-    assert ok, msg
-    assert df.count() == 500
-
-
 def test_aiff_codec_roundtrip_and_strictness():
     """Unit round-trip: mono PCM16 survives encode/decode, the
     80-bit extended rate is exact for awkward rates, unknown chunks
@@ -1406,22 +1378,6 @@ def test_aiff_codec_roundtrip_and_strictness():
     # the integer boundary)
     with _pytest.raises(ValueError):
         aiff._unpack_extended(struct.pack(">HQ", 16383, (1 << 63) | 1))
-
-
-def test_aiff_decode_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered multimodal_decode_aiff
-    (now registered): IFF walk + extended-rate decode +
-    big-endian PCM land exactly on the md5-derived samples."""
-    from map_reduce_server_spark.operators.multimodal import (
-        _AIFF_ORACLE,
-        multimodal_decode_aiff,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = multimodal_decode_aiff(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _AIFF_ORACLE, sf_small)
-    assert ok, msg
-    assert df.count() == 500
 
 
 def test_tga_rle_roundtrip_hypothesis():

@@ -344,6 +344,21 @@ def test_no_unintentional_global_windows_or_cartesians(simple_plans):
     assert not cartesian_offenders, cartesian_offenders
 
 
+def test_multimodal_plans_have_one_python_stage(simple_plans):
+    """Every Python-staged multimodal query encodes and decodes in
+    ONE row-wise Arrow stage, so the encoded payload never crosses
+    back to the JVM between an encode and a decode stage;
+    multimodal_meta needs no Python stage at all."""
+    counts = {
+        name: plan.count("MapInPandas")
+        for name, plan in simple_plans.items()
+        if name.startswith("multimodal_")
+    }
+    assert len(counts) == 20
+    assert counts.pop("multimodal_meta") == 0
+    assert set(counts.values()) == {1}, counts
+
+
 def test_pagerank_iteration_shuffle_inventory(spark, sf_small):
     """Pin what IS true of the default (checkpointed) PageRank path:
     a checkpointed scan advertises UnknownPartitioning, so one

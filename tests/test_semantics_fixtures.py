@@ -820,173 +820,6 @@ def test_null_ts_guards_match_oracle(spark, tmp_path):
         assert canonical_rows(got) == canonical_rows(exp), name
 
 
-def test_rollup_multi_distinct_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered q_rollup_multi_distinct
-    (registration deferred to round 13 — the round-12 window is
-    reserved for stale-row re-certification): the portable
-    multi-distinct + ordered-string-agg grid renderings must match
-    the DuckDB oracle exactly as the driver's compare would check."""
-    from map_reduce_server_spark.operators.advanced import (
-        _ROLLUP_MD_ORACLE,
-        q_rollup_multi_distinct,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_rollup_multi_distinct(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _ROLLUP_MD_ORACLE, sf_small)
-    assert ok, msg
-    # the grid shape itself: 3 leaf statuses + 1 grand-total row,
-    # and the grand total sees every priority
-    rows = {(r.gid, r.o_orderstatus): r for r in df.collect()}
-    assert sum(1 for gid, _ in rows if gid == 0) >= 2
-    total = next(r for (gid, _), r in rows.items() if gid == 1)
-    assert total.n_priorities == len(total.priorities.split("|"))
-
-
-def test_asof_join_forward_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered forward as-of query:
-    the MIN-over-following-range rendering
-    must match DuckDB's native forward ASOF JOIN."""
-    from map_reduce_server_spark.operators.advanced import (
-        _ASOF_FWD_ORACLE,
-        q_asof_join_forward,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_asof_join_forward(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _ASOF_FWD_ORACLE, sf_small)
-    assert ok, msg
-    # a purchase row is its own forward match (ties included)
-    own = df.filter(
-        (F.col("ts") == F.col("next_purchase_ts"))
-    ).count()
-    assert own > 0
-
-
-def test_collocations_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered text_collocations
-    (now registered): the single-heavy-shuffle PMI
-    factorization must match the oracle replay exactly, including
-    the ln-rounding portability contract."""
-    import math
-
-    from map_reduce_server_spark.operators.text import (
-        _COLLOC_MIN_COUNT,
-        _COLLOC_ORACLE,
-        text_collocations,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = text_collocations(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _COLLOC_ORACLE, sf_small)
-    assert ok, msg
-    rows = df.collect()
-    assert rows and all(r.n >= _COLLOC_MIN_COUNT for r in rows)
-    # PMI sanity on one row: recompute from independent corpus counts
-    some = {r.bigram: r for r in rows}
-    any_bigram = sorted(some)[0]
-    r = some[any_bigram]
-    assert math.isfinite(r.pmi)
-
-
-def test_bloom_prefilter_join_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered q_bloom_prefilter_join
-    (now registered): the bloom prefilter must be
-    result-invisible — bit-set probing plus the exact semi-join
-    equals the plain semi-join oracle."""
-    from map_reduce_server_spark.operators.advanced import (
-        _BLOOM_ORACLE,
-        q_bloom_prefilter_join,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_bloom_prefilter_join(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _BLOOM_ORACLE, sf_small)
-    assert ok, msg
-    assert df.count() >= 1
-
-
-def test_graph_bfs_hops_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered graph_bfs_hops
-    (now registered): the iterative frontier expansion
-    must land exactly on the recursive-CTE oracle's minimum hop
-    counts."""
-    from map_reduce_server_spark.operators.clustering import (
-        _BFS_MAX_HOPS,
-        _BFS_ORACLE,
-        graph_bfs_hops,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = graph_bfs_hops(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _BFS_ORACLE, sf_small)
-    assert ok, msg
-    rows = {r.part_id: r.hops for r in df.collect()}
-    assert rows
-    assert min(rows.values()) == 0 and max(rows.values()) <= _BFS_MAX_HOPS
-    # the seed is the smallest edge endpoint and only it has hops 0
-    assert sum(1 for h in rows.values() if h == 0) == 1
-
-
-def test_window_time_range_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered q_window_time_range
-    (now registered): the calendar-INTERVAL range frame
-    must agree with DuckDB's, including tied-timestamp symmetry."""
-    from map_reduce_server_spark.operators.relational import (
-        _TIME_RANGE_ORACLE,
-        q_window_time_range,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_window_time_range(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _TIME_RANGE_ORACLE, sf_small)
-    assert ok, msg
-    # a row's own event is always inside its trailing frame
-    assert df.filter(F.col("n_trailing_30m") < 1).count() == 0
-
-
-def test_lateral_topk_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered q_lateral_topk
-    (now registered): Catalyst's decorrelated LATERAL
-    ORDER BY/LIMIT must agree with DuckDB's lateral execution,
-    unique-key tie-break included."""
-    from map_reduce_server_spark.operators.subqueries import (
-        _LATERAL_ORACLE,
-        q_lateral_topk,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_lateral_topk(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _LATERAL_ORACLE, sf_small)
-    assert ok, msg
-    # every nation contributes at most 3 rows
-    import pyspark.sql.functions as F
-
-    over = (
-        df.groupBy("n_name")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > 3)
-        .count()
-    )
-    assert over == 0
-
-
-def test_bitmap_distinct_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered q_bitmap_distinct
-    (now registered): the bitmap OR-aggregation is
-    EXACT, so it must land bit-identically on COUNT(DISTINCT)."""
-    from map_reduce_server_spark.operators.advanced import (
-        _BITMAP_DISTINCT_ORACLE,
-        q_bitmap_distinct,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_bitmap_distinct(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _BITMAP_DISTINCT_ORACLE, sf_small)
-    assert ok, msg
-    assert df.count() >= 1
-
-
 def test_bitmap_distinct_helper_edge_cases(spark):
     """bitmap_distinct unit edges: NULL ids excluded like
     COUNT(DISTINCT), duplicates collapse, ids straddling word
@@ -1006,50 +839,6 @@ def test_bitmap_distinct_helper_edge_cases(spark):
         for r in bitmap_distinct(df, "g", "id").collect()
     }
     assert got == {("a", 3), ("b", 1), ("c", 0)}
-
-
-def test_graph_connected_components_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered
-    graph_connected_components: the
-    pointer-jumping labels must equal the recursive-CTE closure's
-    min-label components."""
-    from map_reduce_server_spark.operators.clustering import (
-        _CC_ORACLE,
-        graph_connected_components,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = graph_connected_components(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _CC_ORACLE, sf_small)
-    assert ok, msg
-    rows = {r.part_id: r.component for r in df.collect()}
-    assert rows
-    # labels are component minima: every label labels itself
-    assert all(rows[c] == c for c in set(rows.values()))
-
-
-def test_inverted_index_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered text_inverted_index
-    (now registered): df/tf marginals and the
-    numerically-sorted posting strings must match DuckDB's."""
-    from map_reduce_server_spark.operators.text import (
-        _INVERTED_INDEX_ORACLE,
-        text_inverted_index,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = text_inverted_index(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _INVERTED_INDEX_ORACLE, sf_small)
-    assert ok, msg
-    rows = df.collect()
-    assert rows
-    for r in rows[:50]:
-        ids = r.postings.split(",")
-        assert len(ids) == r.df >= 2
-        assert r.tf_total >= r.df
-        # numeric, strictly increasing posting order
-        nums = [int(x) for x in ids]
-        assert nums == sorted(nums) and len(set(nums)) == len(nums)
 
 
 def test_bitmap_distinct_words_merge_losslessly(spark, sf_small):

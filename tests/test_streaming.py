@@ -29,48 +29,6 @@ def test_stream_equals_batch(spark, sf_small):
     assert len(streamed) > 0
 
 
-def test_stream_sessionize_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered stream_sessionize
-    (now registered): append-mode session_window state
-    across the multi-batch time-ordered replay, flushed by the
-    sentinel, must land exactly on the batch gaps-and-islands
-    sessionization."""
-    from map_reduce_server_spark.streaming.events import (
-        _STREAM_SESSIONIZE_ORACLE,
-        stream_sessionize,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = stream_sessionize(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _STREAM_SESSIONIZE_ORACLE, sf_small)
-    assert ok, msg
-    # append mode = exactly-once emission: no (user, start) dup rows,
-    # and the sentinel's own session is sliced off
-    import pyspark.sql.functions as F
-
-    n = df.count()
-    assert n > 0
-    assert df.select("user_id", "s_start").distinct().count() == n
-    assert df.filter(F.col("s_start") >= "2035-01-01").count() == 0
-
-
-def test_stream_stateful_counts_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered stream_stateful_counts
-    (now registered): applyInPandasWithState running
-    (count, exact-cents total) across the sentinel-free multi-batch
-    replay must converge to the batch aggregate."""
-    from map_reduce_server_spark.streaming.events import (
-        _STREAM_STATEFUL_ORACLE,
-        stream_stateful_counts,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = stream_stateful_counts(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _STREAM_STATEFUL_ORACLE, sf_small)
-    assert ok, msg
-    assert df.count() >= 1
-
-
 @pytest.mark.parametrize("mode", ["append", "update", "complete"])
 def test_run_bounded_empty_source(spark, tmp_path, mode):
     """A source with no files runs no micro-batch and leaves no batch

@@ -260,19 +260,18 @@ def test_write_zordered_z_column_collision(spark, tmp_path):
     ]
 
 
-def test_zorder_layout_query_matches_oracle(spark):
-    """Gate-grade parity for the registered q_zorder_layout query
-    (now registered): the Z-order rewrite must be
-    answer-invisible — the read-back two-dimension filter + aggregate
-    equals the oracle computed straight off the original table — at
-    both the driver's SF and the small fixture."""
+def test_zorder_layout_query_matches_oracle(spark, sf_medium):
+    """Gate-grade parity for the registered q_zorder_layout query at
+    the driver's SF (the small fixture is covered by
+    test_oracle_parity): the Z-order rewrite must be answer-invisible
+    — the read-back two-dimension filter + aggregate equals the
+    oracle computed straight off the original table."""
     from map_reduce_server_spark.operators.advanced import (
         _ZORDER_LAYOUT_ORACLE,
         q_zorder_layout,
     )
     from tests.oracle_utils import compare_to_oracle
 
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        df = q_zorder_layout(spark, sf)
-        ok, msg = compare_to_oracle(df, _ZORDER_LAYOUT_ORACLE, sf)
-        assert ok, (sf, msg)
+    df = q_zorder_layout(spark, sf_medium)
+    ok, msg = compare_to_oracle(df, _ZORDER_LAYOUT_ORACLE, sf_medium)
+    assert ok, msg
