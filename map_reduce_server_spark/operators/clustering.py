@@ -5,10 +5,12 @@ The canonical last stage of corpus dedup: LSH yields candidate
 *pairs*; keeping one representative per duplicate *group* needs the
 transitive closure. Implemented as iterative min-label propagation —
 each iteration is one shuffle-join (label ← min(label of self and
-neighbors)), repeated until a fixpoint. The driver loop only checks
-a converged-count per iteration (a scalar), never data; at 100 TB
-each iteration is a plain distributed join, and the iteration count
-is O(graph diameter), which for near-dup graphs is tiny.
+neighbors)), repeated until a fixpoint. The driver loop reads one
+scalar per iteration, the count of changed labels, never data, and
+that count rides the iteration's own stage-cut job (an
+``Observation``), so steering costs no job of its own. Each iteration
+is a plain distributed join, and the iteration count is O(graph
+diameter), which for near-dup graphs is tiny.
 
 Although the fixpoint is iterative, it IS value-checked, not just
 rows-counted: ``dedup_cluster`` registers a recursive-CTE DuckDB
@@ -23,7 +25,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_server_spark.functions.exact import qsum40, sql_qsum40
 from map_reduce_server_spark.registry import register
-from map_reduce_server_spark.stagecut import stage_cut
+from map_reduce_server_spark.stagecut import stage_cut, stage_cut_metric
 from map_reduce_server_spark.tables import load_table
 
 
@@ -38,8 +40,8 @@ from map_reduce_server_spark.tables import load_table
 # broadcast cap and the sort of size §3.1 calls "usually fine", while
 # a 100 TB graph (billions of nodes) stays on the shuffle path. Same
 # size-gating pattern as _BFS_BROADCAST_MAX_FRONTIER; the scalar
-# node count is read from an already-materialized stage-cut, so the
-# gate costs no extra computation.
+# node count is observed by the stage-cut job that materializes the
+# node-sized frame, so the gate costs no extra job.
 _ITER_BROADCAST_MAX_NODES = 2_000_000
 
 # CC-specific gate (round 16, ADVICE r15): connected_components
@@ -98,14 +100,17 @@ def connected_components(
     # (self-loop included) IS iteration 1's pre-jump candidate, and
     # this aggregate costs the same single shuffle the identity init
     # would — one fewer loop round on every graph.
-    labels = adj.groupBy(F.col("src").alias("node")).agg(
-        F.min("dst").alias("component")
-    ).transform(stage_cut)
-    # Scalar count over the eagerly-cut labels (local blocks, no
-    # recomputation) decides the loop's join strategy once: under the
-    # gate every node-sized side is broadcast-hinted so the edge-sized
-    # adjacency never re-shuffles per iteration.
-    small = labels.count() <= _CC_BROADCAST_MAX_NODES
+    # The node count, observed by the labels' own cut job, decides the
+    # loop's join strategy once: under the gate every node-sized side
+    # is broadcast-hinted so the edge-sized adjacency never
+    # re-shuffles per iteration.
+    labels, n_nodes = stage_cut_metric(
+        adj.groupBy(F.col("src").alias("node")).agg(
+            F.min("dst").alias("component")
+        ),
+        F.count(F.lit(1)),
+    )
+    small = n_nodes <= _CC_BROADCAST_MAX_NODES
 
     def _hint(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
@@ -125,7 +130,8 @@ def connected_components(
         jump = labels.select(
             F.col("node").alias("cand"), F.col("component").alias("cand_comp")
         )
-        updated = (
+        # the changed-label count rides the cut's own job
+        updated, changed = stage_cut_metric(
             labels.join(_hint(propagated), "node")
             .join(_hint(jump), "cand")
             .select(
@@ -134,10 +140,9 @@ def connected_components(
                 (
                     F.least("cand", "cand_comp") < F.col("component")
                 ).alias("changed"),
-            )
-            .transform(stage_cut)
+            ),
+            F.count_if("changed"),
         )
-        changed = updated.filter("changed").limit(1).count()
         labels = updated.select("node", "component")
         if changed == 0:
             return labels
@@ -310,15 +315,17 @@ def pagerank(
     # adjacency build below all derive from it, and without this the
     # (possibly join-produced) edge subtree re-evaluates three times.
     edges = edges.transform(stage_cut)
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").alias("deg")
-    ).transform(stage_cut)
-    # Node count read ONCE as a driver scalar off the materialized
-    # deg (one job): the rank init, the teleport base and the loop's
-    # join strategy all derive from it. 1.0 / n and (1.0 - d) / n in
-    # Python doubles are the oracle's own double expressions, so the
-    # output stays bit-identical to it.
-    n = deg.count()
+    # Node count observed by deg's own cut job (no job of its own):
+    # the rank init, the teleport base and the loop's join strategy
+    # all derive from it. 1.0 / n and (1.0 - d) / n in Python doubles
+    # are the oracle's own double expressions, so the output stays
+    # bit-identical to it.
+    deg, n = stage_cut_metric(
+        edges.groupBy(F.col("src").alias("node")).agg(
+            F.count("*").alias("deg")
+        ),
+        F.count(F.lit(1)),
+    )
     if n == 0:
         return deg.select("node", F.lit(0.0).alias("rank"))
     # Under the gate the node-sized sides (ranks, per-iteration
@@ -794,10 +801,11 @@ def bfs_hops(edges: DataFrame, max_hops: int) -> DataFrame:
     |V| within 2-3 hops, and a forced broadcast of an O(|V|) frontier
     kills executors at scale — past the gate the hint is dropped and
     AQE chooses from the frontier's actual runtime size. The count
-    used for the gate is free of recompute: every frontier is a
-    stage-cut (materialized) intermediate, so ``count()`` scans
-    already-stored blocks. An empty frontier short-circuits the
-    remaining hops (the reachable set is closed)."""
+    used for the gate costs no job: the seed frontier is one row (a
+    global aggregate), and every later frontier's row count is
+    observed by the stage-cut job that materializes it. An empty
+    frontier short-circuits the remaining hops (the reachable set is
+    closed)."""
     ed = (
         edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(
@@ -808,22 +816,22 @@ def bfs_hops(edges: DataFrame, max_hops: int) -> DataFrame:
     seed = ed.agg(F.min("src").alias("node"))
     dist = stage_cut(seed.withColumn("hops", F.lit(0)))
     frontier = dist.select("node")
+    n_frontier = 1  # the seed: a global aggregate is always one row
     for k in range(1, max_hops + 1):
-        n_frontier = frontier.count()
         if n_frontier == 0:
             break
         if n_frontier <= _BFS_BROADCAST_MAX_FRONTIER:
             fr = F.broadcast(frontier)
         else:
             fr = frontier
-        nxt = (
+        nxt, n_frontier = stage_cut_metric(
             fr.join(ed, fr["node"] == ed["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
-            .withColumn("hops", F.lit(k))
+            .withColumn("hops", F.lit(k)),
+            F.count(F.lit(1)),
         )
-        nxt = stage_cut(nxt)
         dist = stage_cut(dist.unionAll(nxt))
         frontier = nxt.select("node")
     return dist.select("node", F.col("hops").cast("int").alias("hops"))

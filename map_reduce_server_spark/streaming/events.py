@@ -30,7 +30,7 @@ from pyspark.sql import types as T
 from map_reduce_server_spark.io.tempdirs import cleanup_at_exit
 from map_reduce_server_spark.registry import register
 from map_reduce_server_spark.session import pin_semantics
-from map_reduce_server_spark.tables import normalize_events_ts
+from map_reduce_server_spark.tables import normalize_events_ts, read_parquet
 
 _WINDOW = "5 minutes"
 
@@ -108,7 +108,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DataFrame over the bounded events table. The staged
     landing-zone dir is removed at interpreter exit."""
     pin_semantics(spark)
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # The file-stream source wants a directory; stage a symlink dir so
     # the (read-only) single-file table looks like a stream landing zone.
     stage = tempfile.mkdtemp(prefix="mrss_stream_")

@@ -10,10 +10,12 @@ the MapReduce façade lives in :mod:`map_reduce_server_spark.mapreduce`.
 from __future__ import annotations
 
 import os
+import stat
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from map_reduce_server_spark.session import pin_semantics
 
@@ -84,6 +86,40 @@ def _path_scan_estimate(spark: SparkSession, path: str) -> int | None:
     return max(1, -(-total // mpb))
 
 
+# Inferred schemas of single-file parquet tables, keyed by what the
+# inference reads: the file (absolute path, size, mtime) and the conf
+# that decides how TIMESTAMP(NANOS) maps. A rewrite changes the key.
+_SCHEMAS: dict[tuple[str, int, int, str], StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a regular file's schema
+    only on its first read. Inference starts a footer-reading Spark
+    job per read (0.16 s warm for sf0.001 lineitem on 4 cores); a
+    later read of the same unchanged file passes the kept schema and
+    starts none.
+    Directories and paths that cannot be stat-ed keep plain inference:
+    their contents can change without the path's own stat changing."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, widen: bool = False
 ) -> DataFrame:
@@ -127,12 +163,15 @@ def load_table(
       file naively), so the cast below must interpret it as UTC —
       the session timezone is pinned defensively because the grading
       driver's vanilla session inherits the JVM default.
+
+    The read goes through :func:`read_parquet`, so a table's schema is
+    inferred once per file, not once per call.
     """
     if name == "events":
         # nanosAsLong must be set BEFORE the read; the driver's own
         # session may have none of the engine's confs.
         pin_semantics(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_events_ts(df)
     if widen:

@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+import threading
+import time
 
 import pytest
 
@@ -29,3 +32,64 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_medium():
     return SF_MEDIUM
+
+
+@pytest.fixture(scope="session")
+def spark_job_ids(spark):
+    """``spark_job_ids(fn)`` runs ``fn()`` under a job group of its own
+    and returns ``(fn's result, ids of the Spark jobs it started)``.
+    The status tracker learns of jobs from the listener bus, in order
+    but late, so a fence job in a second group runs after ``fn``: once
+    the fence shows, every job ``fn`` started shows too."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def in_group(fn):
+        group = f"spark-job-ids-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            return group, fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+
+    def run(fn):
+        group, result = in_group(fn)
+        fence, _ = in_group(lambda: sc.parallelize([0], 1).collect())
+        deadline = time.time() + 60
+        while not sc.statusTracker().getJobIdsForGroup(fence):
+            assert time.time() < deadline, "fence job never reached the status tracker"
+            time.sleep(0.05)
+        return result, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture(scope="session")
+def call_with_timeout():
+    """``call_with_timeout(fn, seconds)`` returns ``fn()``, run on a
+    daemon thread, and fails the test if the call has not returned
+    within ``seconds``. For calls that can wait with no timeout of
+    their own (``Observation.get``): a hang fails one test instead of
+    stalling the suite."""
+
+    def call(fn, seconds):
+        out = {}
+
+        def target():
+            try:
+                out["value"] = fn()
+            except BaseException as exc:  # re-raised on the test's thread
+                out["error"] = exc
+
+        thread = threading.Thread(target=target, daemon=True)
+        thread.start()
+        thread.join(seconds)
+        if thread.is_alive():
+            pytest.fail(f"call still blocked after {seconds} s")
+        if "error" in out:
+            raise out["error"]
+        return out["value"]
+
+    return call

@@ -79,6 +79,43 @@ def test_pagerank_empty_graph(spark):
     assert pagerank(edges).count() == 0
 
 
+def test_graph_loops_run_no_driver_count(spark, monkeypatch):
+    """The loops steer on scalars their stage cuts observe (the node
+    count, changed labels, the frontier size): with ``DataFrame.count``
+    raising, connected components, PageRank and BFS still return
+    their exact results."""
+    from map_reduce_server_spark.operators.clustering import bfs_hops, pagerank
+
+    edges = [(1, 2), (2, 3), (5, 6)]
+    cc_edges = spark.createDataFrame(edges, ["src", "dst"])
+    pr_edges = spark.createDataFrame(
+        edges + [(b, a) for a, b in edges], ["src", "dst"]
+    )
+    bfs_edges = spark.createDataFrame(edges, ["u", "v"])
+
+    def no_count(self):
+        raise AssertionError("a graph loop ran a driver-side count()")
+
+    monkeypatch.setattr(type(cc_edges), "count", no_count)
+    got = {(r.node, r.component) for r in connected_components(cc_edges).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)}
+    ranks = {r.node: r.rank for r in pagerank(pr_edges).collect()}
+    assert set(ranks) == {1, 2, 3, 5, 6}
+    assert abs(sum(ranks.values()) - 1.0) < 1e-9
+    got = {(r.node, r.hops) for r in bfs_hops(bfs_edges, 3).collect()}
+    assert got == {(1, 0), (2, 1), (3, 2)}
+
+
+def test_cc_empty_edge_list_on_bounded_thread(spark, call_with_timeout):
+    """An empty edge list observes zero nodes and zero changed labels
+    and returns no rows. ``Observation.get`` waits with no timeout, so
+    the run goes on a thread joined with a bound: metrics that never
+    arrive fail this test instead of stalling the suite."""
+    edges = spark.createDataFrame([], "src bigint, dst bigint")
+    rows = call_with_timeout(lambda: connected_components(edges).collect(), 300)
+    assert rows == []
+
+
 def test_pagerank_hand_computed_star(spark):
     """3-node path graph a-b-c (symmetrized): after any number of
     iterations the center holds more mass than the leaves, ranks sum

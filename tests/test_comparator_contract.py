@@ -20,8 +20,7 @@ from map_reduce_server_spark.verify import (
     _canonical_rows,
     compare,
 )
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF_SMALL
 
 
 def test_canon_value_scalar_contract():
@@ -69,15 +68,15 @@ def test_canonical_rows_sorts_columns_and_rows():
 
 def test_compare_rejects_duplicate_columns(spark):
     df = spark.createDataFrame([(1, 2)], ["x", "x"])
-    ok, msg = compare(df, "SELECT 1 AS x", SF)
+    ok, msg = compare(df, "SELECT 1 AS x", SF_SMALL)
     assert not ok and "duplicate column name" in msg and "spark" in msg
 
 
 def test_compare_schema_and_count_messages(spark):
     df = spark.createDataFrame([(1,)], ["x"])
-    ok, msg = compare(df, "SELECT 1 AS y", SF)
+    ok, msg = compare(df, "SELECT 1 AS y", SF_SMALL)
     assert not ok and "schema mismatch" in msg
-    ok, msg = compare(df, "SELECT 1 AS x UNION ALL SELECT 2", SF)
+    ok, msg = compare(df, "SELECT 1 AS x UNION ALL SELECT 2", SF_SMALL)
     assert not ok and "row count mismatch" in msg
 
 
@@ -86,7 +85,7 @@ def test_compare_value_mismatch_is_multiset_not_zip(spark):
     the two sorted lists would cascade spurious pairings."""
     df = spark.createDataFrame([(1,), (2,), (9,)], ["x"])
     ok, msg = compare(
-        df, "SELECT * FROM (VALUES (1), (2), (3)) t(x)", SF
+        df, "SELECT * FROM (VALUES (1), (2), (3)) t(x)", SF_SMALL
     )
     assert not ok
     assert "only-in-spark=[('9',)]" in msg
@@ -95,7 +94,7 @@ def test_compare_value_mismatch_is_multiset_not_zip(spark):
 
 def test_compare_date_hint_fires_on_midnight_pairing(spark):
     df = spark.createDataFrame([(dt.datetime(2024, 1, 2),)], ["d"])
-    ok, msg = compare(df, "SELECT DATE '2024-01-03' AS d", SF)
+    ok, msg = compare(df, "SELECT DATE '2024-01-03' AS d", SF_SMALL)
     assert not ok and "never output DATE columns" in msg
 
 
@@ -105,7 +104,7 @@ def test_compare_accepts_matching_result(spark):
         df,
         "SELECT * FROM (VALUES ('a', 1.5), "
         "('b', CAST('NaN' AS DOUBLE))) t(k, v)",
-        SF,
+        SF_SMALL,
     )
     assert ok, msg
 

@@ -32,9 +32,9 @@ from pyspark.sql import functions as F
 
 from map_reduce_server_spark.functions import exact
 from map_reduce_server_spark.tables import load_table
+from tests.conftest import SF_SMALL
 from tests.oracle_utils import compare_to_oracle, duck_connection
 
-SF = "/root/testdata/sf0.001"
 
 # nightly-style deep run: SPARK_GRAFT_FUZZ_EXAMPLES=250 multiplies
 # the example budget on the aggregate-shaped families (the listagg
@@ -89,7 +89,7 @@ CUSTOMER_SPEC = {
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duck_connection(SF)
+    con = duck_connection(SF_SMALL)
     yield con
     con.close()
 
@@ -306,7 +306,7 @@ def agg_pair(spec) -> tuple[Column, str]:
 
 
 def _run_agg_plan(spark, duck, pred, keys, aggs):
-    df = load_table(spark, SF, "lineitem").filter(pred_col(pred))
+    df = load_table(spark, SF_SMALL, "lineitem").filter(pred_col(pred))
     pairs = [agg_pair(s) for s in aggs]
     cols = [c.alias(f"a{i}") for i, (c, _) in enumerate(pairs)]
     out = df.groupBy(*keys).agg(*cols) if keys else df.agg(*cols)
@@ -316,7 +316,7 @@ def _run_agg_plan(spark, duck, pred, keys, aggs):
     sql = f"SELECT {select} FROM lineitem WHERE {pred_sql(pred)}"
     if keys:
         sql += f" GROUP BY {', '.join(keys)}"
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: pred={pred} keys={keys} aggs={aggs}\nsql: {sql}"
 
 
@@ -386,7 +386,7 @@ def test_fuzz_filter_rowset(spark, duck, pred):
     match DuckDB's — catches comparison-semantics divergence that an
     aggregate could mask (two wrong rows cancelling in a SUM)."""
     df = (
-        load_table(spark, SF, "lineitem")
+        load_table(spark, SF_SMALL, "lineitem")
         .filter(pred_col(pred))
         .select("l_orderkey", "l_linenumber", "l_returnflag")
     )
@@ -394,7 +394,7 @@ def test_fuzz_filter_rowset(spark, duck, pred):
         "SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem "
         f"WHERE {pred_sql(pred)}"
     )
-    ok, msg = compare_to_oracle(df, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(df, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: pred={pred}\nsql: {sql}"
 
 
@@ -478,7 +478,7 @@ def _win_pair(fn: str, over_col: str, over_sql: str) -> tuple[Column, str]:
 def test_fuzz_window_running(spark, duck, part, funcs, pred):
     """Windowed running aggregates over a unique ORDER BY must be
     row-identical across engines (frames pinned to ROWS BETWEEN)."""
-    df = load_table(spark, SF, "orders").filter(pred_col(pred))
+    df = load_table(spark, SF_SMALL, "orders").filter(pred_col(pred))
     pairs = [_win_pair(fn, part, part) for fn in funcs]
     out = df.select(
         "o_orderkey",
@@ -488,7 +488,7 @@ def test_fuzz_window_running(spark, duck, part, funcs, pred):
         ["o_orderkey"] + [f"{s} AS w{i}" for i, (_, s) in enumerate(pairs)]
     )
     sql = f"SELECT {select} FROM orders WHERE {pred_sql(pred)}"
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: part={part} funcs={funcs} pred={pred}\nsql: {sql}"
 
 
@@ -560,8 +560,8 @@ def test_fuzz_join_aggregate(spark, duck, how, opred, cpred, aggs, key):
             key = "o_orderstatus"
         aggs = [a for a in aggs if not _JOIN_AGGS[a][2]] or ["n"]
 
-    o = load_table(spark, SF, "orders").filter(pred_col(opred))
-    c = load_table(spark, SF, "customer").filter(pred_col(cpred))
+    o = load_table(spark, SF_SMALL, "orders").filter(pred_col(opred))
+    c = load_table(spark, SF_SMALL, "customer").filter(pred_col(cpred))
     joined = o.join(
         c,
         o["o_custkey"] == c["c_custkey"],
@@ -590,7 +590,7 @@ def test_fuzz_join_aggregate(spark, duck, how, opred, cpred, aggs, key):
     sql = f"SELECT {select} FROM {join_sql}"
     if key:
         sql += f" GROUP BY {key}"
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, (
         f"{msg}\nplan: how={how} key={key} aggs={aggs} "
         f"opred={opred} cpred={cpred}\nsql: {sql}"
@@ -714,7 +714,7 @@ def _str_out_pair(out, alias) -> tuple[Column, str]:
     ]
 )
 def test_fuzz_string_exprs(spark, duck, outs):
-    df = load_table(spark, SF, "part")
+    df = load_table(spark, SF_SMALL, "part")
     pairs = [_str_out_pair(o, f"s{i}") for i, o in enumerate(outs)]
     out = df.select(
         "p_partkey", *[c.alias(f"s{i}") for i, (c, _) in enumerate(pairs)]
@@ -723,7 +723,7 @@ def test_fuzz_string_exprs(spark, duck, outs):
         ["p_partkey"] + [f"{s} AS s{i}" for i, (_, s) in enumerate(pairs)]
     )
     sql = f"SELECT {select} FROM part"
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: outs={outs}\nsql: {sql}"
 
 
@@ -851,7 +851,7 @@ def _no_normalized_equal_intervals(outs) -> bool:
     ]
 )
 def test_fuzz_date_exprs(spark, duck, outs):
-    df = load_table(spark, SF, "orders")
+    df = load_table(spark, SF_SMALL, "orders")
     pairs = [_date_out_pair(o) for o in outs]
     for o, (_, s) in zip(outs, pairs):
         # a new interval kind must join _INTERVAL_DAYS, or the CSE
@@ -864,7 +864,7 @@ def test_fuzz_date_exprs(spark, duck, outs):
         ["o_orderkey"] + [f"{s} AS d{i}" for i, (_, s) in enumerate(pairs)]
     )
     sql = f"SELECT {select} FROM orders"
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: outs={outs}\nsql: {sql}"
 
 
@@ -1061,7 +1061,7 @@ def _ts_out_pair(out) -> tuple[Column, str]:
 )
 @example(outs=[("diffsec", None), ("trunc", "minute")])
 def test_fuzz_timestamp_exprs(spark, duck, outs):
-    df = load_table(spark, SF, "events")
+    df = load_table(spark, SF_SMALL, "events")
     pairs = [_ts_out_pair(o) for o in outs]
     out = df.select(
         "event_id", *[c.alias(f"t{i}") for i, (c, _) in enumerate(pairs)]
@@ -1070,7 +1070,7 @@ def test_fuzz_timestamp_exprs(spark, duck, outs):
         ["event_id"] + [f"{s} AS t{i}" for i, (_, s) in enumerate(pairs)]
     )
     sql = f"SELECT {select} FROM events"
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: outs={outs}\nsql: {sql}"
 
 
@@ -1346,7 +1346,7 @@ _RC_KEYS = ["o_orderstatus", "o_orderpriority"]
 def test_fuzz_rollup_cube(spark, duck, mode, keys, pred):
     from hypothesis import assume
 
-    df = load_table(spark, SF, "orders").filter(pred_col(pred))
+    df = load_table(spark, SF_SMALL, "orders").filter(pred_col(pred))
     # empty input is a PINNED divergence, not a fuzz target: SQL's
     # () grouping set yields one n=0 row (DuckDB) while Spark's
     # rollup/cube emit nothing (test_engine_portability_pins.py)
@@ -1368,7 +1368,7 @@ def test_fuzz_rollup_cube(spark, duck, mode, keys, pred):
         f"FROM orders WHERE {pred_sql(pred)} "
         f"GROUP BY {mode.upper()}({', '.join(keys)})"
     )
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: mode={mode} keys={keys} pred={pred}\nsql: {sql}"
 
 
@@ -1431,7 +1431,7 @@ def _arr_pair(out) -> tuple[Column, str]:
 @given(outs=st.lists(_ARR_OUT, min_size=1, max_size=4, unique=True))
 @example(outs=[("dim",), ("get", 70), ("kth_sorted", 0), ("sum_q40",)])
 def test_fuzz_array_ops(spark, duck, outs):
-    df = load_table(spark, SF, "embeddings")
+    df = load_table(spark, SF_SMALL, "embeddings")
     pairs = [_arr_pair(o) for o in outs]
     out = df.select(
         "vec_id", *[c.alias(f"e{i}") for i, (c, _) in enumerate(pairs)]
@@ -1440,7 +1440,7 @@ def test_fuzz_array_ops(spark, duck, outs):
         ["vec_id"] + [f"{s} AS e{i}" for i, (_, s) in enumerate(pairs)]
     )
     sql = f"SELECT {select} FROM embeddings"
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: outs={outs}\nsql: {sql}"
 
 
@@ -1537,7 +1537,7 @@ _SORT_COLS = ["o_totalprice", "o_custkey", "o_orderdate", "o_orderstatus"]
     pred=("str", "o_orderstatus", "=", "O"),
 )
 def test_fuzz_topk(spark, duck, sort_col, desc, k, pred):
-    df = load_table(spark, SF, "orders").filter(pred_col(pred))
+    df = load_table(spark, SF_SMALL, "orders").filter(pred_col(pred))
     order = [
         F.col(sort_col).desc() if desc else F.col(sort_col).asc(),
         F.col("o_orderkey").asc(),
@@ -1550,7 +1550,7 @@ def test_fuzz_topk(spark, duck, sort_col, desc, k, pred):
         f"WHERE {pred_sql(pred)} "
         f"ORDER BY {sort_col} {direction}, o_orderkey LIMIT {k}"
     )
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, (
         f"{msg}\nplan: sort={sort_col} desc={desc} k={k} pred={pred}\nsql: {sql}"
     )
@@ -1595,7 +1595,7 @@ _SETOP = {
 )
 def test_fuzz_set_ops(spark, duck, op, preda, predb):
     cols = ["o_orderstatus", "o_custkey"]
-    base = load_table(spark, SF, "orders")
+    base = load_table(spark, SF_SMALL, "orders")
     a = base.filter(pred_col(preda)).select(*cols)
     b = base.filter(pred_col(predb)).select(*cols)
     out = _SETOP[op][0](a, b)
@@ -1605,7 +1605,7 @@ def test_fuzz_set_ops(spark, duck, op, preda, predb):
         f"{_SETOP[op][1]} "
         f"SELECT {sel} FROM orders WHERE {pred_sql(predb)}"
     )
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: op={op} preda={preda} predb={predb}\nsql: {sql}"
 
 
@@ -1664,7 +1664,7 @@ _FAGG = st.sampled_from(
 def test_fuzz_filtered_aggregates(spark, duck, keys, aggs):
     from map_reduce_server_spark.tables import register_views
 
-    register_views(spark, SF)
+    register_views(spark, SF_SMALL)
     cols = []
     for i, ((name, expr), fpred) in enumerate(aggs):
         filt = f"FILTER (WHERE {pred_sql(fpred)})"
@@ -1678,7 +1678,7 @@ def test_fuzz_filtered_aggregates(spark, duck, keys, aggs):
     if keys:
         sql += f" GROUP BY {', '.join(keys)}"
     out = spark.sql(sql)
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: keys={keys} aggs={aggs}\nsql: {sql}"
 
 
@@ -1737,7 +1737,7 @@ _TR_AGG = st.sampled_from(
 def test_fuzz_time_range_frames(spark, duck, frame, agg, n, unit):
     from map_reduce_server_spark.tables import register_views
 
-    register_views(spark, SF)
+    register_views(spark, SF_SMALL)
     bounds = frame[1].format(n=n, u=unit)
     over = (
         "OVER (PARTITION BY user_id ORDER BY ts "
@@ -1752,7 +1752,7 @@ def test_fuzz_time_range_frames(spark, duck, frame, agg, n, unit):
         "FROM events WHERE ts IS NOT NULL"
     )
     out = spark.sql(sql)
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: frame={frame[0]} agg={name} n={n} {unit}\nsql: {sql}"
 
 
@@ -1805,7 +1805,7 @@ def test_fuzz_bitmap_distinct(spark, duck, rows):
         "SELECT g, COUNT(DISTINCT id) AS n FROM (VALUES "
         f"{vals}) t(g, id) GROUP BY g"
     )
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: rows={rows}\nsql: {sql}"
 
 
@@ -1866,10 +1866,10 @@ def _lateral_sql(how, cpred, opred, desc, k, on_true):
 def test_fuzz_lateral_topk(spark, duck, how, cpred, opred, desc, k):
     from map_reduce_server_spark.tables import register_views
 
-    register_views(spark, SF)
+    register_views(spark, SF_SMALL)
     out = spark.sql(_lateral_sql(how, cpred, opred, desc, k, False))
     sql = _lateral_sql(how, cpred, opred, desc, k, True)
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, (
         f"{msg}\nplan: how={how or 'INNER'} cpred={cpred} opred={opred} "
         f"desc={desc} k={k}\nsql: {sql}"
@@ -1978,7 +1978,7 @@ def test_fuzz_set_ops_null_duplicates(
         f"({_inline_sql(rows_b)})) {_SETOP[op2][1]} "
         f"({_inline_sql(rows_c)})"
     )
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, (
         f"{msg}\nplan: op1={op1} op2={op2} a={rows_a} b={rows_b} "
         f"c={rows_c}\nsql: {sql}"
@@ -2022,7 +2022,7 @@ def _math_out_pair(out) -> tuple[Column, str]:
 )
 @given(outs=st.lists(_MATH_OUT, min_size=1, max_size=4, unique=True))
 def test_fuzz_math_exprs(spark, duck, outs):
-    df = load_table(spark, SF, "part")
+    df = load_table(spark, SF_SMALL, "part")
     pairs = [_math_out_pair(o) for o in outs]
     out = df.select(
         "p_partkey", *[c.alias(f"m{i}") for i, (c, _) in enumerate(pairs)]
@@ -2031,7 +2031,7 @@ def test_fuzz_math_exprs(spark, duck, outs):
         ["p_partkey"] + [f"{s} AS m{i}" for i, (_, s) in enumerate(pairs)]
     )
     sql = f"SELECT {select} FROM part"
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: outs={outs}\nsql: {sql}"
 
 
@@ -2132,7 +2132,7 @@ def _run_grid_plan(spark, duck, plan, pred, aggs):
     from hypothesis import assume
 
     keys, mode, sets = plan
-    df = load_table(spark, SF, "lineitem").filter(pred_col(pred))
+    df = load_table(spark, SF_SMALL, "lineitem").filter(pred_col(pred))
     # empty input under a grid containing the () grouping set is a
     # PINNED divergence (DuckDB emits one n=0 row, Spark emits
     # nothing — test_engine_portability_pins.py), not a fuzz target
@@ -2161,7 +2161,7 @@ def _run_grid_plan(spark, duck, plan, pred, aggs):
         f"SELECT {select} FROM lineitem WHERE {pred_sql(pred)} "
         f"GROUP BY {group_sql}"
     )
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: {plan} aggs={aggs} pred={pred}\nsql: {sql}"
 
 
@@ -2226,7 +2226,7 @@ _ATW_WINS = ["rank_a0", "running_a0", "lag_a0"]
 def _run_agg_window_plan(spark, duck, pred, keys, aggs, wins):
     from pyspark.sql import Window
 
-    df = load_table(spark, SF, "lineitem").filter(pred_col(pred))
+    df = load_table(spark, SF_SMALL, "lineitem").filter(pred_col(pred))
     pairs = [md_agg_pair(s) for s in aggs]
     agged = df.groupBy(*keys).agg(
         *[c.alias(f"a{i}") for i, (c, _) in enumerate(pairs)]
@@ -2261,7 +2261,7 @@ def _run_agg_window_plan(spark, duck, pred, keys, aggs, wins):
         f"(SELECT {inner} FROM lineitem WHERE {pred_sql(pred)} "
         f"GROUP BY {okeys}) t"
     )
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, (
         f"{msg}\nplan: keys={keys} aggs={aggs} wins={wins} pred={pred}"
         f"\nsql: {sql}"
@@ -2349,7 +2349,7 @@ def test_fuzz_asof_join(spark, duck, direction, rtype, rthr, lpred):
     from pyspark.sql import Window
 
     thr = rthr / 100.0
-    ev = load_table(spark, SF, "events").filter(F.col("ts").isNotNull())
+    ev = load_table(spark, SF_SMALL, "events").filter(F.col("ts").isNotNull())
     mark = (F.col("event_type") == rtype) & (F.col("value") >= thr)
     base = Window.partitionBy("user_id").orderBy("ts")
     if direction == "backward":
@@ -2381,7 +2381,7 @@ def test_fuzz_asof_join(spark, duck, direction, rtype, rthr, lpred):
         f"AND event_type = '{rtype}' AND value >= {thr!r}) x "
         f"ON e.user_id = x.user_id AND {ineq}"
     )
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, (
         f"{msg}\nplan: dir={direction} rtype={rtype} thr={thr} "
         f"lpred={lpred}\nsql: {sql}"
@@ -2440,7 +2440,7 @@ def _pivot_plan(draw):
 )
 def test_fuzz_pivot(spark, duck, plan, pred):
     key, pcol, vals, agg, tcol = plan
-    df = load_table(spark, SF, "lineitem").filter(pred_col(pred))
+    df = load_table(spark, SF_SMALL, "lineitem").filter(pred_col(pred))
     grouped = df.groupBy(key).pivot(pcol, vals)
     if agg == "count":
         out = grouped.count().na.fill(0, subset=vals)
@@ -2465,7 +2465,7 @@ def test_fuzz_pivot(spark, duck, plan, pred):
         f"SELECT {key}, {cells} FROM lineitem "
         f"WHERE {pred_sql(pred)} GROUP BY {key}"
     )
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: {plan} pred={pred}\nsql: {sql}"
 
 
@@ -2503,7 +2503,7 @@ def test_fuzz_pivot(spark, duck, plan, pred):
 )
 def test_fuzz_agg_having(spark, duck, pred, keys, extra_aggs, hop, hlit):
     aggs = list(dict.fromkeys([("count_star",)] + extra_aggs))
-    df = load_table(spark, SF, "lineitem").filter(pred_col(pred))
+    df = load_table(spark, SF_SMALL, "lineitem").filter(pred_col(pred))
     pairs = [md_agg_pair(s) for s in aggs]
     out = (
         df.groupBy(*keys)
@@ -2517,7 +2517,7 @@ def test_fuzz_agg_having(spark, duck, pred, keys, extra_aggs, hop, hlit):
         f"SELECT {select} FROM lineitem WHERE {pred_sql(pred)} "
         f"GROUP BY {', '.join(keys)} HAVING COUNT(*) {hop} {hlit}"
     )
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, (
         f"{msg}\nplan: keys={keys} aggs={aggs} having=a0 {hop} {hlit} "
         f"pred={pred}\nsql: {sql}"
@@ -2600,7 +2600,7 @@ def _bucketed_range_count(ev, refpred, probepred, w: int):
     probepred=("int", "user_id", ">=", 0),
 )
 def test_fuzz_bucketed_range_join(spark, duck, w, refpred, probepred):
-    ev = load_table(spark, SF, "events")
+    ev = load_table(spark, SF_SMALL, "events")
     out = _bucketed_range_count(ev, refpred, probepred, w)
     sql = (
         "SELECT e.event_id AS ref_id, COUNT(v.event_id) AS n_nearby "
@@ -2611,7 +2611,7 @@ def test_fuzz_bucketed_range_join(spark, duck, w, refpred, probepred):
         f"AND v.ts <= e.ts + INTERVAL {w} SECOND "
         "GROUP BY e.event_id"
     )
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: w={w} ref={refpred} probe={probepred}\nsql: {sql}"
 
 
@@ -2673,8 +2673,8 @@ _OJ_KEYS = [(), ("o_orderstatus",), ("c_mktsegment",),
 
 
 def _outer_joined(spark, how, opred, cpred):
-    o = load_table(spark, SF, "orders").filter(pred_col(opred))
-    c = load_table(spark, SF, "customer").filter(pred_col(cpred))
+    o = load_table(spark, SF_SMALL, "orders").filter(pred_col(opred))
+    c = load_table(spark, SF_SMALL, "customer").filter(pred_col(cpred))
     return o.join(c, o["o_custkey"] == c["c_custkey"], how)
 
 
@@ -2741,7 +2741,7 @@ def test_fuzz_outer_join_null_agg(spark, duck, how, opred, cpred, keys, aggs):
     sql = f"SELECT {select} FROM {_outer_join_sql(how, opred, cpred)}"
     if keys:
         sql += f" GROUP BY {', '.join(keys)}"
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, (
         f"{msg}\nplan: how={how} keys={keys} aggs={aggs} "
         f"opred={opred} cpred={cpred}\nsql: {sql}"
@@ -2856,7 +2856,7 @@ def test_fuzz_outer_join_null_window(
         "o_orderstatus, c_mktsegment, o_totalprice, c_acctbal, c_custkey "
         f"FROM {_outer_join_sql(how, opred, cpred)})"
     )
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, (
         f"{msg}\nplan: how={how} part={part} funcs={funcs} "
         f"opred={opred} cpred={cpred}\nsql: {sql}"
@@ -2897,11 +2897,11 @@ def test_fuzz_bloom_prefilter_invisible(spark, opred, bits):
     )
 
     orders = (
-        load_table(spark, SF, "orders")
+        load_table(spark, SF_SMALL, "orders")
         .filter(pred_col(opred))
         .select("o_orderkey")
     )
-    li = load_table(spark, SF, "lineitem").select(
+    li = load_table(spark, SF_SMALL, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
     words = bloom_words(orders, "o_orderkey", bits)
@@ -2966,8 +2966,8 @@ def test_fuzz_bfs_vs_recursive_cte(spark, duck, minsup, hops):
         bfs_hops,
     )
 
-    out = bfs_hops(_copurchase_edges(spark, SF, minsup=minsup), hops)
-    ok, msg = compare_to_oracle(out, _bfs_oracle_sql(minsup, hops), SF, con=duck)
+    out = bfs_hops(_copurchase_edges(spark, SF_SMALL, minsup=minsup), hops)
+    ok, msg = compare_to_oracle(out, _bfs_oracle_sql(minsup, hops), SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: minsup={minsup} hops={hops}"
 
 
@@ -3056,9 +3056,9 @@ def _corr_sql(form: str, opred, ipred) -> str:
 def test_fuzz_correlated_subqueries(spark, duck, form, opred, ipred):
     from map_reduce_server_spark.tables import register_views
 
-    register_views(spark, SF)
+    register_views(spark, SF_SMALL)
     sql = _corr_sql(form, opred, ipred)
-    ok, msg = compare_to_oracle(spark.sql(sql), sql, SF, con=duck)
+    ok, msg = compare_to_oracle(spark.sql(sql), sql, SF_SMALL, con=duck)
     assert ok, f"{msg}\nplan: form={form} opred={opred} ipred={ipred}\nsql: {sql}"
 
 
@@ -3150,12 +3150,12 @@ def test_fuzz_lateral_nested_scalar(
 ):
     from map_reduce_server_spark.tables import register_views
 
-    register_views(spark, SF)
+    register_views(spark, SF_SMALL)
     out = spark.sql(
         _nested_lateral_sql(how, cpred, opred, lpred, inner, by_m, desc, k, False)
     )
     sql = _nested_lateral_sql(how, cpred, opred, lpred, inner, by_m, desc, k, True)
-    ok, msg = compare_to_oracle(out, sql, SF, con=duck)
+    ok, msg = compare_to_oracle(out, sql, SF_SMALL, con=duck)
     assert ok, (
         f"{msg}\nplan: how={how or 'INNER'} cpred={cpred} opred={opred} "
         f"lpred={lpred} inner={inner} by_m={by_m} desc={desc} k={k}\nsql: {sql}"
@@ -3213,9 +3213,9 @@ def _exists_filter_sql(key, cpred, opred, neg, with_sum) -> str:
 def test_fuzz_exists_filter_agg(spark, duck, key, cpred, opred, neg, with_sum):
     from map_reduce_server_spark.tables import register_views
 
-    register_views(spark, SF)
+    register_views(spark, SF_SMALL)
     sql = _exists_filter_sql(key, cpred, opred, neg, with_sum)
-    ok, msg = compare_to_oracle(spark.sql(sql), sql, SF, con=duck)
+    ok, msg = compare_to_oracle(spark.sql(sql), sql, SF_SMALL, con=duck)
     assert ok, (
         f"{msg}\nplan: key={key} cpred={cpred} opred={opred} neg={neg} "
         f"with_sum={with_sum}\nsql: {sql}"
@@ -3303,9 +3303,9 @@ def test_fuzz_window_then_correlated(
 ):
     from map_reduce_server_spark.tables import register_views
 
-    register_views(spark, SF)
+    register_views(spark, SF_SMALL)
     sql = _win_corr_sql(wfn, factor, cmp, inner, opred, lpred)
-    ok, msg = compare_to_oracle(spark.sql(sql), sql, SF, con=duck)
+    ok, msg = compare_to_oracle(spark.sql(sql), sql, SF_SMALL, con=duck)
     assert ok, (
         f"{msg}\nplan: wfn={wfn} factor={factor} cmp={cmp} inner={inner} "
         f"opred={opred} lpred={lpred}\nsql: {sql}"

@@ -73,14 +73,13 @@ from __future__ import annotations
 
 import pytest
 
+from tests.conftest import SF_SMALL
 from tests.oracle_utils import duck_connection
-
-SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duck_connection(SF)
+    con = duck_connection(SF_SMALL)
     yield con
     con.close()
 
@@ -814,7 +813,7 @@ def test_duckdb_ordered_stringagg_rollup_subtotal_unordered(spark, duck):
     got = spark.sql(
         "SELECT grouping_id(l_returnflag, l_linestatus) AS gid, "
         "concat_ws('|', array_sort(collect_list(l_linestatus))) AS s "
-        f"FROM parquet.`{SF}/lineitem.parquet` "
+        f"FROM parquet.`{SF_SMALL}/lineitem.parquet` "
         "GROUP BY ROLLUP(l_returnflag, l_linestatus)"
     ).collect()
     assert len(got) == len(rows)

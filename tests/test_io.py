@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import os
+import shutil
+from collections import Counter
 
 import pytest
 
@@ -129,6 +131,74 @@ def test_events_tz_pin_warns_on_non_utc_session(spark, tmp_path, sf_small):
             load_table(spark, sf_dir, "events")
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def test_load_table_infers_each_file_schema_once(
+    spark, sf_small, tmp_path, spark_job_ids
+):
+    """Schema inference starts a footer-reading job; a second load of
+    the same unchanged file reuses the inferred schema and starts
+    none."""
+    from map_reduce_server_spark.tables import load_table
+
+    shutil.copy(os.path.join(sf_small, "lineitem.parquet"), tmp_path)
+    first, first_jobs = spark_job_ids(
+        lambda: load_table(spark, str(tmp_path), "lineitem")
+    )
+    second, second_jobs = spark_job_ids(
+        lambda: load_table(spark, str(tmp_path), "lineitem")
+    )
+    assert first_jobs  # the inference job
+    assert second_jobs == []
+    assert second.schema == first.schema
+
+
+def test_load_table_rereads_a_file_rewritten_in_place(spark, tmp_path):
+    """A file rewritten with a different schema is inferred afresh: the
+    next load returns the new columns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from map_reduce_server_spark.tables import load_table
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["a", "b"]}), path)
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(df.collect()) == [(0, "a"), (1, "b")]
+
+
+@pytest.mark.parametrize("encoding", ["fixture_ntz", "nanos"])
+def test_events_load_identically_from_a_kept_schema(
+    spark, sf_small, tmp_path, spark_job_ids, encoding
+):
+    """Both ``events.ts`` encodings (the fixture's NTZ micros and
+    TIMESTAMP(NANOS)) normalize the same on the first read and on a
+    read that reuses the kept schema."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from map_reduce_server_spark.tables import load_table
+
+    if encoding == "fixture_ntz":
+        shutil.copy(os.path.join(sf_small, "events.parquet"), tmp_path)
+    else:
+        ts = [datetime.datetime(2024, 3, 10, 6, 30), datetime.datetime(2024, 1, 1)]
+        tbl = pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("ns", tz="UTC")),
+        })
+        pq.write_table(tbl, tmp_path / "events.parquet", version="2.6")
+    first = load_table(spark, str(tmp_path), "events")
+    kept, jobs = spark_job_ids(lambda: load_table(spark, str(tmp_path), "events"))
+    assert jobs == []
+    assert dict(kept.dtypes)["ts"] == "timestamp"
+    assert kept.schema == first.schema
+    assert Counter(kept.collect()) == Counter(first.collect())
 
 
 def test_register_views_is_per_session(spark, sf_small):
