@@ -25,8 +25,11 @@ worker does (and with the same shared-filesystem assumption the
 reference's master/worker split makes). (3)+(4) are one
 ``repartitionAndSortWithinPartitions`` with a partitioner keyed by
 the dense rank of the line — computed distributedly via
-``sortBy().zipWithIndex()`` over the distinct lines (two narrow
-passes; no driver-side data). (5) is one task per reducer partition
+``sortByKey().zipWithIndex()`` over the distinct lines, which starts
+three Spark jobs before the write job (``sortByKey``'s count and
+range sample, ``zipWithIndex``'s per-partition count; perfbench's
+``mapreduce.group_jobs`` reads 3 per façade job) and moves no line
+data through the driver. (5) is one task per reducer partition
 that points the reducer's stdout at its own ``outputfile{NN}``
 (``io.sinks.write_numbered_text``). Spark's scheduler/shuffle/retries
 subsume the reference's entire control plane (SURVEY.md §2.C).

@@ -86,10 +86,19 @@ def _path_scan_estimate(spark: SparkSession, path: str) -> int | None:
     return max(1, -(-total // mpb))
 
 
+# The session confs that decide how parquet types map to Spark types
+# (TIMESTAMP(NANOS), plain BINARY, INT96, timestamps without a zone).
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
 # Inferred schemas of single-file parquet tables, keyed by what the
-# inference reads: the file (absolute path, size, mtime) and the conf
-# that decides how TIMESTAMP(NANOS) maps. A rewrite changes the key.
-_SCHEMAS: dict[tuple[str, int, int, str], StructType] = {}
+# inference reads: the file (absolute path, size, mtime) and the
+# values of _SCHEMA_CONFS. A rewrite or a flipped conf changes the key.
+_SCHEMAS: dict[tuple, StructType] = {}
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -110,7 +119,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         os.path.abspath(path),
         st.st_size,
         st.st_mtime_ns,
-        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+        *(spark.conf.get(conf) for conf in _SCHEMA_CONFS),
     )
     schema = _SCHEMAS.get(key)
     if schema is not None:

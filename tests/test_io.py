@@ -170,6 +170,29 @@ def test_load_table_rereads_a_file_rewritten_in_place(spark, tmp_path):
     assert sorted(df.collect()) == [(0, "a"), (1, "b")]
 
 
+def test_read_parquet_reinfers_after_a_type_conf_flips(spark, tmp_path):
+    """A kept schema is kept per parquet type conf: flipping
+    ``binaryAsString`` between two reads of an unchanged file turns
+    its plain-BINARY column into a string column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from map_reduce_server_spark.tables import read_parquet
+
+    path = str(tmp_path / "blobs.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x", b"yz"], pa.binary())}), path)
+    assert dict(read_parquet(spark, path).dtypes)["b"] == "binary"
+    key = "spark.sql.parquet.binaryAsString"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        df = read_parquet(spark, path)
+        assert dict(df.dtypes)["b"] == "string"
+        assert sorted(df.collect()) == [("x",), ("yz",)]
+    finally:
+        spark.conf.set(key, old)
+
+
 @pytest.mark.parametrize("encoding", ["fixture_ntz", "nanos"])
 def test_events_load_identically_from_a_kept_schema(
     spark, sf_small, tmp_path, spark_job_ids, encoding
