@@ -1,41 +1,2 @@
 """Reusable column-level function library (all JVM-side built-ins,
 plus the pure-stdlib codecs that run inside Arrow-batched workers)."""
-
-from __future__ import annotations
-
-import sys
-
-
-def register_by_value(module_name: str) -> None:
-    """Register a module for cloudpickle by-value pickling.
-
-    Modules whose functions run inside Arrow-batched Python workers
-    (mapInPandas / applyInPandasWithState closures) call this at
-    import time: cloudpickle serializes module functions BY
-    REFERENCE, so a worker whose interpreter lacks this repo on
-    sys.path (e.g. a grading harness launching a vanilla session
-    from another cwd) would fail the import; by-value registration
-    ships the function code inside the task closure instead — the
-    worker needs only pandas/stdlib. Idempotent; a no-op on an old
-    pickler without the hook (reference semantics, which only works
-    when the repo IS importable).
-
-    CALLERS MUST NOT leave this function bound in their module dict:
-    a by-value-registered module serializes its globals, and a
-    reference to this helper drags in the (unregistered) functions
-    package by reference, breaking the vanilla worker. Import it
-    locally and ``del`` after the call::
-
-        from map_reduce_server_spark.functions import (  # noqa: E402
-            register_by_value as _rbv,
-        )
-
-        _rbv(__name__)
-        del _rbv
-    """
-    try:  # pyspark vendors cloudpickle >= 2.0 which has this hook
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[module_name])
-    except Exception:  # pragma: no cover - older pickler
-        pass

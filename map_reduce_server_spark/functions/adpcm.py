@@ -329,13 +329,3 @@ def decode_wav_ima(data: bytes) -> tuple[int, list[int]]:
             f"({len(body) - bpos} surplus byte(s))"
         )
     return framerate, out
-
-
-# Functions above run inside Arrow-batched Python workers — ship
-# them by value (see functions.register_by_value).
-from map_reduce_server_spark.functions import (  # noqa: E402
-    register_by_value as _rbv,
-)
-
-_rbv(__name__)
-del _rbv  # a lingering ref would pickle the functions pkg by reference

@@ -105,13 +105,3 @@ def decode_pcm16(data: bytes) -> tuple[int, list[int]]:
     if len(raw) != 2 * n_frames:
         raise ValueError("sample data does not cover numSampleFrames")
     return rate, list(struct.unpack(f">{n_frames}h", raw))
-
-
-# Functions above run inside Arrow-batched Python workers — ship
-# them by value (see functions.register_by_value).
-from map_reduce_server_spark.functions import (  # noqa: E402
-    register_by_value as _rbv,
-)
-
-_rbv(__name__)
-del _rbv  # a lingering ref would pickle the functions pkg by reference

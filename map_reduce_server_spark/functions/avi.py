@@ -163,13 +163,3 @@ def sample_frames(
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
     return frames[::every_n]
-
-
-# Functions above run inside Arrow-batched Python workers — ship
-# them by value (see functions.register_by_value).
-from map_reduce_server_spark.functions import (  # noqa: E402
-    register_by_value as _rbv,
-)
-
-_rbv(__name__)
-del _rbv  # a lingering ref would pickle the functions pkg by reference

@@ -100,13 +100,3 @@ def decode_gray8(data: bytes) -> tuple[int, int, bytes]:
     if len(raster) != width * height:
         raise ValueError("truncated pixel data")
     return width, height, bytes(lum[i] for i in raster)
-
-
-# Functions above run inside Arrow-batched Python workers — ship
-# them by value (see functions.register_by_value).
-from map_reduce_server_spark.functions import (  # noqa: E402
-    register_by_value as _rbv,
-)
-
-_rbv(__name__)
-del _rbv  # a lingering ref would pickle the functions pkg by reference

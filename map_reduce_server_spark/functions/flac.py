@@ -327,13 +327,3 @@ def decode_s16(data: bytes) -> tuple[int, list[int]]:
     if hashlib.md5(raw).digest() != md5_expected:
         raise ValueError("flac: decoded audio MD5 mismatch")
     return rate, samples
-
-
-# Functions above run inside Arrow-batched Python workers — ship
-# them by value (see functions.register_by_value).
-from map_reduce_server_spark.functions import (  # noqa: E402
-    register_by_value as _rbv,
-)
-
-_rbv(__name__)
-del _rbv  # a lingering ref would pickle the functions pkg by reference

@@ -219,13 +219,3 @@ def _decode_wav_g711(data: bytes, want_tag: int) -> tuple[int, list[int]]:
         raise ValueError("missing fmt /data chunk")
     expand = _LAW[want_tag][1]
     return framerate, [expand[c] for c in codes]
-
-
-# Functions above run inside Arrow-batched Python workers — ship
-# them by value (see functions.register_by_value).
-from map_reduce_server_spark.functions import (  # noqa: E402
-    register_by_value as _rbv,
-)
-
-_rbv(__name__)
-del _rbv  # a lingering ref would pickle the functions pkg by reference

@@ -1271,13 +1271,3 @@ def decode_rgb8(data: bytes) -> tuple[int, int, bytes]:
     return width, height, (
         np.clip(np.rint(rgb), 0, 255).astype(np.uint8).tobytes()
     )
-
-
-# Functions above run inside Arrow-batched Python workers — ship
-# them by value (see functions.register_by_value).
-from map_reduce_server_spark.functions import (  # noqa: E402
-    register_by_value as _rbv,
-)
-
-_rbv(__name__)
-del _rbv  # a lingering ref would pickle the functions pkg by reference

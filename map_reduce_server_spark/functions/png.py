@@ -157,13 +157,3 @@ def resize_nearest_rgb8(
             o = (sy * src_w + sx) * 3
             out += pixels[o : o + 3]
     return bytes(out)
-
-
-# Functions above run inside Arrow-batched Python workers — ship
-# them by value (see functions.register_by_value).
-from map_reduce_server_spark.functions import (  # noqa: E402
-    register_by_value as _rbv,
-)
-
-_rbv(__name__)
-del _rbv  # a lingering ref would pickle the functions pkg by reference

@@ -155,13 +155,3 @@ def decode_gray8(data: bytes) -> tuple[int, int, bytes]:
     if not desc & _DESC_TOP_DOWN:
         rows.reverse()
     return width, height, b"".join(rows)
-
-
-# Functions above run inside Arrow-batched Python workers — ship
-# them by value (see functions.register_by_value).
-from map_reduce_server_spark.functions import (  # noqa: E402
-    register_by_value as _rbv,
-)
-
-_rbv(__name__)
-del _rbv  # a lingering ref would pickle the functions pkg by reference

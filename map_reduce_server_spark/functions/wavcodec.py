@@ -45,13 +45,3 @@ def decode_pcm16(payload: bytes) -> tuple[int, list[int]]:
         return framerate, list(struct.unpack(f"<{n}h", frames))
     except (wave.Error, EOFError, struct.error) as exc:
         raise ValueError(f"corrupt or truncated WAV: {exc}") from exc
-
-
-# Functions above run inside Arrow-batched Python workers — ship
-# them by value (see functions.register_by_value).
-from map_reduce_server_spark.functions import (  # noqa: E402
-    register_by_value as _rbv,
-)
-
-_rbv(__name__)
-del _rbv  # a lingering ref would pickle the functions pkg by reference

@@ -55,6 +55,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 
 from map_reduce_server_spark.io.sinks import write_numbered_text
+from map_reduce_server_spark.session import ship_package
 
 
 @dataclass(frozen=True)
@@ -111,10 +112,12 @@ def round_robin_file_assignment(
 
 
 def _check_exit(cmd: list[str], returncode: int) -> None:
-    """Non-zero mapper/reducer exit fails the task (and Spark's retry
-    takes over) instead of silently truncating output — the analog of
-    the reference's task reassignment (``master/__main__.py:128-146``)
-    with correctness on top. Message format mirrors ``RDD.pipe``'s
+    """Non-zero mapper/reducer exit fails the task instead of silently
+    truncating output, and Spark re-runs the task — the analog of the
+    reference's task reassignment (``master/__main__.py:128-146``)
+    with correctness on top. The number of attempts is the session's:
+    4 in an engine session (:func:`session.get_spark`), 1 under a
+    plain ``local[N]`` master. Message format mirrors ``RDD.pipe``'s
     ``checkCode`` so callers can match either."""
     if returncode != 0:
         raise RuntimeError(
@@ -286,6 +289,9 @@ def run_job(spark: SparkSession, job: MapReduceJob) -> list[str]:
     if not files:
         raise ValueError(f"no input files in {job.input_directory}")
 
+    # the task closures below reach this module by reference, also in
+    # a session no registered query has run in
+    ship_package(spark.sparkContext)
     mapped = _mapped_lines(
         spark, files, job.mapper_executable, job.num_mappers
     )

@@ -410,16 +410,6 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The per-row stage functions close over module-level helpers — ship
-# them by value (see functions.register_by_value).
-from map_reduce_server_spark.functions import (  # noqa: E402
-    register_by_value as _rbv,
-)
-
-_rbv(__name__)
-del _rbv  # a lingering ref would pickle the functions pkg by reference
-
-
 def _int16s(h: str) -> list[int]:
     """Hex -> little-endian signed int16 samples: the byte layout
     :func:`_sql_int16s` replays for the WAV/FLAC/AIFF oracles."""

@@ -169,14 +169,3 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-
-
-# Worker-side functions in this module must not require the repo on
-# the Python worker's sys.path — ship them by value (see
-# functions.register_by_value).
-from map_reduce_server_spark.functions import (  # noqa: E402
-    register_by_value as _rbv,
-)
-
-_rbv(__name__)
-del _rbv  # a lingering ref would pickle the functions pkg by reference

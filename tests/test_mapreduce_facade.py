@@ -543,6 +543,46 @@ def test_failing_reducer_publishes_nothing(spark, tmp_path, input_dir):
     assert os.listdir(out) == []
 
 
+def test_mapper_and_reducer_that_fail_once_are_retried(spark, tmp_path, input_dir):
+    """Engine sessions give a task more than one attempt: a mapper and
+    a reducer that each fail on their first run (the wrapper exits 1
+    when it creates the marker directory named on its command line)
+    still give ``outputfileNN`` bytes identical to a clean run's."""
+    wrapper = tmp_path / "fail_once.sh"
+    wrapper.write_text('mkdir "$1" 2>/dev/null && exit 1\nshift\nexec "$@"\n')
+    wc_map = f"python3 {os.path.join(_EXAMPLES, 'wc_map.py')}"
+    wc_reduce = f"python3 {os.path.join(_EXAMPLES, 'wc_reduce.py')}"
+
+    def outputs(name, mapper, reducer):
+        paths = run_job(
+            spark,
+            MapReduceJob(
+                input_directory=input_dir,
+                output_directory=str(tmp_path / name),
+                mapper_executable=mapper,
+                reducer_executable=reducer,
+                num_mappers=2,
+                num_reducers=2,
+            ),
+        )
+        out = {}
+        for p in paths:
+            with open(p, "rb") as fh:
+                out[os.path.basename(p)] = fh.read()
+        return out
+
+    clean = outputs("clean", wc_map, wc_reduce)
+    retried = outputs(
+        "retried",
+        f"sh {wrapper} {tmp_path / 'map_failed'} {wc_map}",
+        f"sh {wrapper} {tmp_path / 'reduce_failed'} {wc_reduce}",
+    )
+    assert (tmp_path / "map_failed").is_dir()
+    assert (tmp_path / "reduce_failed").is_dir()
+    assert sorted(clean) == ["outputfile01", "outputfile02"]
+    assert retried == clean
+
+
 def test_rerun_with_fewer_reducers_leaves_only_new_files(
     spark, tmp_path, input_dir
 ):
