@@ -24,12 +24,11 @@ bytes through one mapper subprocess per file, exactly as a reference
 worker does (and with the same shared-filesystem assumption the
 reference's master/worker split makes). (3)+(4) are one
 ``repartitionAndSortWithinPartitions`` with a partitioner keyed by
-the dense rank of the line — computed distributedly via
-``sortByKey().zipWithIndex()`` over the distinct lines, which starts
-three Spark jobs before the write job (``sortByKey``'s count and
-range sample, ``zipWithIndex``'s per-partition count; perfbench's
-``mapreduce.group_jobs`` reads 3 per façade job) and moves no line
-data through the driver. (5) is one task per reducer partition
+the dense rank of the line, and the rank comes from the reference's
+own single ordered walk: the distinct lines are sorted in ONE
+partition and numbered in that order (``group_partition``). A
+façade job is therefore one Spark job — the write job — with no
+line data through the driver. (5) is one task per reducer partition
 that points the reducer's stdout at its own ``outputfile{NN}``
 (``io.sinks.write_numbered_text``). Spark's scheduler/shuffle/retries
 subsume the reference's entire control plane (SURVEY.md §2.C).
@@ -223,24 +222,31 @@ def _pipe_partition(cmd: list[str]):
 
 
 def group_partition(mapped, num_reducers: int):
-    """The reference's group stage (``master/__main__.py:249-256``) as
-    a distributed plan: dense-rank the distinct lines in global
-    sorted order, send every line to partition ``rank % R``, sorted
-    within partitions.
+    """The reference's group stage (``master/__main__.py:249-256``):
+    dense-rank the distinct lines in global sorted order, send every
+    line to partition ``rank % R``, sorted within partitions.
 
-    Shuffle economics: the line multiset is first collapsed to
-    (line, count) with ``reduceByKey`` — a map-side combine, so the
-    shuffle carries each distinct line once, not every duplicate
-    (the reference ships every line twice over TCP). Ranking then
-    runs on the collapsed set (sortByKey + zipWithIndex, both
-    cluster-side), and duplicates are re-expanded only AFTER the
-    final partition-local sort. No driver data path anywhere, unlike
-    the reference's master-side merge+partition walk.
+    The line multiset is first collapsed to (line, count) with
+    ``reduceByKey`` — a map-side combine, so the shuffle carries each
+    distinct line once, not every duplicate. The ranking is the
+    reference master's walk: ``sortByKey(numPartitions=1)`` merges the
+    collapsed lines into ONE sorted partition, and ``zipWithIndex``
+    numbers them in that order. With one partition neither call starts
+    a job of its own (no range-bound sample, no per-partition count),
+    so the whole group stage runs inside the write job.
+
+    Trade-off: one task sorts every distinct line. Its memory stays
+    bounded because PySpark's ``ExternalSorter`` spills to disk, but
+    its time grows with the number of distinct lines — the reference's
+    own design, whose master merges and walks the sorted runs alone.
+    Duplicates are re-expanded only AFTER the final partition-local
+    sort.
     """
     counts = mapped.map(lambda line: (line, 1)).reduceByKey(
         lambda a, b: a + b
     )
-    ranked = counts.sortByKey().zipWithIndex()  # ((line, count), rank)
+    # ((line, count), rank)
+    ranked = counts.sortByKey(numPartitions=1).zipWithIndex()
     by_rank = ranked.map(
         lambda it: ((it[1] % num_reducers, it[0][0]), it[0][1])
     )

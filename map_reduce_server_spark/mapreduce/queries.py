@@ -73,9 +73,9 @@ def _run_facade(
     input_dir = stage_documents_text(spark, sf_dir)
     output_dir = tempfile.mkdtemp(prefix="mrss_job_out_")
     # deferred cleanup (not an immediate rmtree), registered BEFORE
-    # the fallible job run: if cached blocks are evicted before the
-    # grader consumes the DataFrame, a re-read of a deleted dir would
-    # fail; and a job that dies mid-write must not leak the dir
+    # the fallible job run: the returned DataFrame reads the dir
+    # whenever it is consumed, and a job that dies mid-write must not
+    # leak the dir
     cleanup_at_exit(output_dir)
     job = MapReduceJob(
         input_directory=input_dir,
@@ -86,9 +86,7 @@ def _run_facade(
         num_reducers=2,
     )
     run_job(spark, job)
-    out = spark.read.text(output_dir).cache()
-    out.count()  # warm the cache so consumers rarely re-read
-    return out
+    return spark.read.text(output_dir)
 
 
 @register(

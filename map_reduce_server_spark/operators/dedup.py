@@ -48,9 +48,7 @@ _SQL_SHINGLES = f"""
 """
 
 
-def doc_shingle_arrays(
-    spark: SparkSession, sf_dir: str, distinct: bool = True
-) -> DataFrame:
+def doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, arr): the per-document shingle ARRAY, computed
     entirely row-locally (zero shuffles — the round-15 pivot of the
     whole dedup family, guide §2.3/§2.4).
@@ -66,10 +64,6 @@ def doc_shingle_arrays(
     stage expanded every candidate pair by its document's full
     shingle set (|pairs| x avg-doc-size rows through two exchanges).
 
-    ``distinct=False`` keeps raw multiplicity for consumers whose
-    aggregation absorbs duplicates anyway (MIN over a repeated
-    shingle is the MIN — ``minhash_wide``).
-
     The documents scan is widened first: tokenize + shingling is the
     dedup family's dominant narrow work, and a one-row-group parquet
     file would otherwise run it on a single core (see
@@ -77,10 +71,9 @@ def doc_shingle_arrays(
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
     with_toks = docs.select("doc_id", word_tokens_col().alias("ts"))
-    shingle_arr = _shingle_arr_col()
-    if distinct:
-        shingle_arr = F.array_distinct(shingle_arr)
-    return with_toks.select("doc_id", shingle_arr.alias("arr"))
+    return with_toks.select(
+        "doc_id", F.array_distinct(_shingle_arr_col()).alias("arr")
+    )
 
 
 def _shingle_arr_col() -> Column:

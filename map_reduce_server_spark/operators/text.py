@@ -33,29 +33,14 @@ from map_reduce_server_spark.registry import register
 from map_reduce_server_spark.stagecut import stage_cut
 from map_reduce_server_spark.tables import load_table
 
-# Tokenization contract (shared with every oracle): lowercase, split
-# on single spaces, keep empty tokens (the reference's empty-string
-# key is legal and aggregated — golden file `word_count_correct.txt`
-# line 1 is the empty key; SURVEY.md §1.2).
 _STOPWORDS = ("the", "a", "and", "of", "to")
 
-
-def tokens_col(col: Column, keep_empty: bool = True) -> Column:
-    """``keep_empty=False`` DELEGATES to the shared tokenizer
-    (``functions.tokens.word_tokens_col``) so text.py's scorers can
-    never drift from the dedup/retrieval/curation family; the
-    keep-empty variant is text.py-specific reference parity (the
-    reference's empty-string key is legal and aggregated)."""
-    if keep_empty:
-        return F.split(F.lower(col), " ")
-    return word_tokens_col(col)
-
-
+# wordcount's tokenization contract: lowercase, split on single
+# spaces, keep empty tokens (the reference's empty-string key is legal
+# and aggregated — golden file `word_count_correct.txt` line 1 is the
+# empty key; SURVEY.md §1.2). Every other query here uses the shared
+# non-empty tokenizer (functions/tokens.py).
 _SQL_TOKENS = "string_split(lower(text), ' ')"
-# Single-sourced from functions/tokens.py — every non-empty-token
-# oracle in this module must tokenize exactly like the shared Spark
-# twin used across the dedup/retrieval/curation modules.
-_SQL_NE_TOKENS = SQL_TOKS
 
 
 @register(
@@ -75,8 +60,9 @@ def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     full sort + pipe (SURVEY.md §2.B#9-11). Empty tokens kept.
     """
     docs = load_table(spark, sf_dir, "documents")
+    words = F.explode(F.split(F.lower(F.col("text")), " "))
     return (
-        docs.select(F.explode(tokens_col(F.col("text"))).alias("word"))
+        docs.select(words.alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
@@ -102,18 +88,18 @@ def grep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_token_stats",
     oracle=f"""
     SELECT doc_id,
-           CAST(len({_SQL_NE_TOKENS}) AS INTEGER) AS n_tokens,
-           CAST(len(list_distinct({_SQL_NE_TOKENS})) AS INTEGER) AS n_distinct,
+           CAST(len({SQL_TOKS}) AS INTEGER) AS n_tokens,
+           CAST(len(list_distinct({SQL_TOKS})) AS INTEGER) AS n_distinct,
            CAST(length(text) AS INTEGER) AS text_len,
            round(CAST(length(replace(text, ' ', '')) AS DOUBLE)
-                 / greatest(len({_SQL_NE_TOKENS}), 1), 6) AS avg_token_len
+                 / greatest(len({SQL_TOKS}), 1), 6) AS avg_token_len
     FROM documents
     """,
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting (whitespace tokenizer) + basic length stats."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens_col(F.col("text"), keep_empty=False)
+    toks = word_tokens_col()
     n_toks = F.size(toks)
     return docs.select(
         "doc_id",
@@ -136,7 +122,7 @@ _SQL_STOPLIST = ", ".join(f"'{w}'" for w in _STOPWORDS)
     bench=True,
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_NE_TOKENS} AS toks, text FROM documents
+      SELECT doc_id, {SQL_TOKS} AS toks, text FROM documents
     )
     SELECT doc_id,
            round(CAST(len(list_filter(toks, x -> x IN ({_SQL_STOPLIST})))
@@ -155,7 +141,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-alpha ratios + a pass/fail gate) — the C4-style cheap filter
     stage of a training-data pipeline."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens_col(F.col("text"), keep_empty=False)
+    toks = word_tokens_col()
     n = F.greatest(F.size(toks), F.lit(1))
     stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
@@ -197,7 +183,7 @@ _LANG_MARKERS = {
 
 def _sql_marker_count(lang: str) -> str:
     lst = ", ".join(f"'{w}'" for w in _LANG_MARKERS[lang])
-    return f"len(list_filter({_SQL_NE_TOKENS}, x -> x IN ({lst})))"
+    return f"len(list_filter({SQL_TOKS}, x -> x IN ({lst})))"
 
 
 @register(
@@ -225,7 +211,7 @@ def _sql_marker_count(lang: str) -> str:
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language-ID heuristic with a deterministic argmax."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens_col(F.col("text"), keep_empty=False)
+    toks = word_tokens_col()
 
     def marker_count(lang: str) -> Column:
         arr = F.array(*[F.lit(w) for w in _LANG_MARKERS[lang]])
@@ -270,7 +256,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # future tfidf change silently desynchronizes the keywords twin.
 _SQL_TFIDF_CTES = f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_NE_TOKENS}) AS token FROM documents
+      SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents
     ),
     tf AS (
       SELECT doc_id, token, COUNT(*) AS n_in_doc FROM tok
@@ -315,7 +301,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(tokens_col(F.col("text"), keep_empty=False)).alias("token"),
+        F.explode(word_tokens_col()).alias("token"),
     )
     tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("n_in_doc"))
     doclen = tf.groupBy("doc_id").agg(F.sum("n_in_doc").alias("doc_len"))
@@ -419,7 +405,7 @@ _SQL_PII_AUG = (
     "text_unigram_logprob",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_NE_TOKENS}) AS token FROM documents
+      SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents
     ),
     freq AS (SELECT token, COUNT(*) AS n FROM tok GROUP BY token),
     tot AS (SELECT COUNT(*) AS total FROM tok),
@@ -448,7 +434,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(tokens_col(F.col("text"), keep_empty=False)).alias("token"),
+        F.explode(word_tokens_col()).alias("token"),
     )
     freq = tok.groupBy("token").agg(F.count("*").alias("n"))
     # Total token count = sum over the tiny vocabulary table, folded in
@@ -513,11 +499,11 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_ngrams(n: int) -> str:
     parts = " || ' ' || ".join(
-        f"{_SQL_NE_TOKENS}[i + {j}]" if j else f"{_SQL_NE_TOKENS}[i]"
+        f"{SQL_TOKS}[i + {j}]" if j else f"{SQL_TOKS}[i]"
         for j in range(n)
     )
     return (
-        f"list_transform(range(1, greatest(len({_SQL_NE_TOKENS}) "
+        f"list_transform(range(1, greatest(len({SQL_TOKS}) "
         f"- {n - 2}, 1)), i -> {parts})"
     )
 
@@ -555,9 +541,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     is non-cheap and multiply referenced. The scan is widened so the
     remaining narrow work parallelizes (tables.load_table)."""
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    toked = docs.select(
-        "doc_id", tokens_col(F.col("text"), keep_empty=False).alias("ts")
-    )
+    toked = docs.select("doc_id", word_tokens_col().alias("ts"))
     cnt = F.size(F.col("ts"))
     gram_arr = F.when(
         cnt >= 3,
@@ -643,9 +627,7 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle.
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    toked = docs.select(
-        "doc_id", tokens_col(F.col("text"), keep_empty=False).alias("ts")
-    )
+    toked = docs.select("doc_id", word_tokens_col().alias("ts"))
     cnt = F.size(F.col("ts"))
     gram_arr = F.when(
         cnt >= 4,
@@ -833,7 +815,7 @@ _OOV_VOCAB_K = 1000
     "text_oov_rate",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_NE_TOKENS}) AS token FROM documents
+      SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents
     ),
     vocab AS (
       SELECT token FROM tok GROUP BY token
@@ -865,7 +847,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(tokens_col(F.col("text"), keep_empty=False)).alias("token"),
+        F.explode(word_tokens_col()).alias("token"),
     )
     vocab = (
         tok.groupBy("token")
@@ -897,7 +879,7 @@ _ZIPF_TOPK = 100
     "text_zipf_fit",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_NE_TOKENS}) AS token FROM documents),
+      SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents),
     freq AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS n
              FROM tok GROUP BY token),
     top AS (SELECT token, n FROM freq
@@ -942,7 +924,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(tokens_col(F.col("text"), keep_empty=False)).alias("token"),
+        F.explode(word_tokens_col()).alias("token"),
     )
     freq = tok.groupBy("token").agg(F.count("*").alias("n"))
     top = freq.orderBy(F.desc("n"), "token").limit(_ZIPF_TOPK)
@@ -999,7 +981,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_bigram_logprob",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_SQL_NE_TOKENS} AS ts FROM documents),
+      SELECT doc_id, {SQL_TOKS} AS ts FROM documents),
     bg AS (
       SELECT doc_id,
              unnest(list_transform(range(1, greatest(len(ts), 1)),
@@ -1012,7 +994,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cu AS (SELECT tok1 AS token, CAST(COUNT(*) AS BIGINT) AS ca
            FROM bg GROUP BY tok1),
     v AS (SELECT CAST(COUNT(DISTINCT tk) AS DOUBLE) AS vocab
-          FROM (SELECT unnest({_SQL_NE_TOKENS}) AS tk FROM documents) t),
+          FROM (SELECT unnest({SQL_TOKS}) AS tk FROM documents) t),
     s AS (
       SELECT bg.doc_id,
              round(-ln((cab + 1.0) / (ca + vocab)), 9) AS surp
@@ -1038,9 +1020,9 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     same libm-portability contract as the unigram scorer.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", tokens_col(F.col("text"), keep_empty=False).alias("ts")
-    ).filter(F.size("ts") >= 2)
+    toks = docs.select("doc_id", word_tokens_col().alias("ts")).filter(
+        F.size("ts") >= 2
+    )
     bg = toks.select(
         "doc_id",
         F.explode(
@@ -1065,9 +1047,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     bg = bg.transform(stage_cut)
     cb = bg.groupBy("bigram").agg(F.count("*").alias("cab"))
     cu = bg.groupBy("tok1").agg(F.count("*").alias("ca"))
-    tok = docs.select(
-        F.explode(tokens_col(F.col("text"), keep_empty=False)).alias("t")
-    )
+    tok = docs.select(F.explode(word_tokens_col()).alias("t"))
     v = tok.agg(F.count_distinct("t").cast("double").alias("vocab"))
     s = (
         bg.join(cb, "bigram")
@@ -1147,7 +1127,7 @@ def text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_entropy",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_NE_TOKENS}) AS token FROM documents),
+      SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents),
     tc AS (
       SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS c
       FROM tok GROUP BY 1, 2)
@@ -1177,9 +1157,7 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     tc = (
         docs.select(
             "doc_id",
-            F.explode(tokens_col(F.col("text"), keep_empty=False)).alias(
-                "token"
-            ),
+            F.explode(word_tokens_col()).alias("token"),
         )
         .groupBy("doc_id", "token")
         .agg(F.count("*").cast("bigint").alias("c"))
@@ -1214,7 +1192,7 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             greatest(len({_SQL_NE_TOKENS}), 1) AS words,
+             greatest(len({SQL_TOKS}), 1) AS words,
              greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
                AS sentences,
              greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')), 1)
@@ -1240,9 +1218,7 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle at all.
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = F.greatest(
-        F.size(tokens_col(F.col("text"), keep_empty=False)), F.lit(1)
-    )
+    words = F.greatest(F.size(word_tokens_col()), F.lit(1))
     sentences = F.greatest(
         F.regexp_count(F.col("text"), F.lit(r"[.!?]+")), F.lit(1)
     )
@@ -1270,7 +1246,7 @@ _BPE_TOPK = 20
     "text_bpe_train",
     oracle=f"""
     WITH tok AS (
-      SELECT unnest({_SQL_NE_TOKENS}) AS tok FROM documents),
+      SELECT unnest({SQL_TOKS}) AS tok FROM documents),
     pairs AS (
       SELECT unnest(list_transform(range(1, length(tok)),
                                    i -> substr(tok, CAST(i AS INT), 2)))
@@ -1300,9 +1276,9 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer, tests/testdata/exec/wc_map.sh:12).
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(tokens_col(F.col("text"), keep_empty=False)).alias("tok")
-    ).filter(F.length("tok") >= 2)
+    toks = docs.select(F.explode(word_tokens_col()).alias("tok")).filter(
+        F.length("tok") >= 2
+    )
     pairs = toks.select(
         F.explode(
             F.transform(
@@ -1368,9 +1344,7 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines and rounded to 9 (libm ln 1-ulp portability contract).
     """
     docs = load_table(spark, sf_dir, "documents")
-    ts = docs.select(
-        tokens_col(F.col("text"), keep_empty=False).alias("ts")
-    ).filter(F.size("ts") >= 2)
+    ts = docs.select(word_tokens_col().alias("ts")).filter(F.size("ts") >= 2)
     bg = ts.select(
         F.explode(
             F.transform(
@@ -1419,7 +1393,7 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doc 10 before doc 9 on whichever engine stringified first.
 _INVERTED_INDEX_ORACLE = f"""
 WITH pairs AS (
-  SELECT doc_id, unnest({_SQL_NE_TOKENS}) AS token FROM documents),
+  SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents),
 perdoc AS (
   SELECT token, doc_id, COUNT(*) AS tf FROM pairs GROUP BY 1, 2)
 SELECT token,
@@ -1454,9 +1428,7 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     perdoc = (
         docs.select(
             "doc_id",
-            F.explode(tokens_col(F.col("text"), keep_empty=False)).alias(
-                "token"
-            ),
+            F.explode(word_tokens_col()).alias("token"),
         )
         .groupBy("token", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"))

@@ -1,15 +1,5 @@
 """Plan inspection utilities (the engine's optimizer feedback loop)."""
 
-from map_reduce_server_spark.plans.inspect import (
-    explain_str,
-    join_strategies,
-    pushed_filters,
-    read_schema,
-)
+from map_reduce_server_spark.plans.inspect import explain_str
 
-__all__ = [
-    "explain_str",
-    "join_strategies",
-    "pushed_filters",
-    "read_schema",
-]
+__all__ = ["explain_str"]

@@ -1,11 +1,11 @@
-"""Physical-plan inspection helpers.
+"""Physical-plan inspection.
 
 There is no custom optimizer here — Catalyst is the optimizer
 (SURVEY.md §4.1: the reference has none at all). What the engine owns
 is *verifying* that the plans it declares come out the way a 100 TB
 deployment needs: filters pushed to the scan, columns pruned,
-dimensions broadcast, codegen unbroken. These helpers make those
-properties assertable in tests and inspectable in notebooks.
+dimensions broadcast, codegen unbroken. ``explain_str`` captures the
+plan text so tests can assert those properties on it.
 """
 
 from __future__ import annotations
@@ -23,39 +23,3 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
         df.explain(mode=mode)
     return buf.getvalue()
 
-
-def _plan_fields(df: DataFrame, label: str, plan: str | None) -> list[str]:
-    """Every ``label`` entry in the formatted plan (one per scan).
-    Pass a pre-captured ``plan`` string to avoid re-formatting the
-    same plan for each inspected property."""
-    plan = explain_str(df) if plan is None else plan
-    return [
-        chunk.split("\n")[0].strip()
-        for chunk in plan.split(f"{label}: ")[1:]
-    ]
-
-
-def pushed_filters(df: DataFrame, plan: str | None = None) -> list[str]:
-    """PushedFilters entries from every scan in the plan."""
-    return _plan_fields(df, "PushedFilters", plan)
-
-
-def read_schema(df: DataFrame, plan: str | None = None) -> list[str]:
-    """ReadSchema strings (one per scan) — the pruning evidence."""
-    return _plan_fields(df, "ReadSchema", plan)
-
-
-def join_strategies(df: DataFrame, plan: str | None = None) -> list[str]:
-    """Join operator names appearing in the physical plan."""
-    plan = explain_str(df) if plan is None else plan
-    found = []
-    for name in (
-        "BroadcastHashJoin",
-        "SortMergeJoin",
-        "ShuffledHashJoin",
-        "BroadcastNestedLoopJoin",
-        "CartesianProduct",
-    ):
-        if name in plan:
-            found.append(name)
-    return found

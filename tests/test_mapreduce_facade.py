@@ -139,6 +139,26 @@ def test_round_robin_distinct_line_partitioning(spark, tmp_path):
     assert p1 == ["b", "b", "d"]
 
 
+def test_run_job_is_one_spark_job(spark, spark_job_ids, tmp_path):
+    """The group stage ranks inside the write job, as the reference's
+    master walks its merged runs once: no range-sort sample or count
+    job, no per-partition index job — one Spark job per façade job."""
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "f1").write_text("d\nb\n")
+    (d / "f2").write_text("a\nb\nc\n")
+    job = MapReduceJob(
+        input_directory=str(d),
+        output_directory=str(tmp_path / "out"),
+        mapper_executable="cat",
+        reducer_executable="cat",
+        num_mappers=2,
+        num_reducers=2,
+    )
+    _, job_ids = spark_job_ids(lambda: run_job(spark, job))
+    assert len(job_ids) == 1
+
+
 def test_posix_tools_as_executables(spark, tmp_path):
     """The reference's UDF contract is 'any executable' (its wordcount
     mapper is tr/awk — ``wc_map.sh``); prove arbitrary POSIX tools

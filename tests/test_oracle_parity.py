@@ -152,6 +152,7 @@ def test_every_query_has_oracle():
 # Public (spark, sf_dir) functions that are shared stages, not
 # queries: several registered dedup queries build on each.
 _QUERY_SHAPED_HELPERS = {
+    "map_reduce_server_spark.operators.dedup.doc_shingle_arrays",
     "map_reduce_server_spark.operators.dedup.minhash_wide",
     "map_reduce_server_spark.operators.dedup.simhash_halves",
 }
