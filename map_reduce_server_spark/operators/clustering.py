@@ -71,11 +71,7 @@ def connected_components(
     chain converges in ~20 rounds). Non-convergence within
     ``max_iter`` RAISES instead of silently returning wrong labels.
     """
-    # Materialize the edge list ONCE before fanning out: nodes, adj,
-    # and labels all derive from it, and without this checkpoint each
-    # derivation re-evaluates the (potentially expensive) upstream
-    # candidate-pair pipeline — measured as ~2× the whole LSH stage
-    # inside dedup_cluster at sf0.1.
+    # kept: uncut, nodes and adj each re-run the upstream pair pipeline
     edges = edges.select("src", "dst").transform(stage_cut)
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -266,10 +262,8 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
         # materialize BEFORE symmetrizing: both union branches read
-        # pairs, and while ReuseExchange dedups the shuffle below the
-        # distinct, the post-shuffle aggregate + projection would
-        # still run twice over the full pair set (same rationale as
-        # pagerank's own edge checkpoint)
+        # pairs, and pagerank reads the union twice (deg and adj), so
+        # uncut the join and distinct would run four times
         .transform(stage_cut)
     )
     return pairs.union(
@@ -311,10 +305,6 @@ def pagerank(
     The last iteration is returned un-checkpointed: callers aggregate
     or collect it anyway, and the final plan stays inspectable.
     """
-    # Materialize the edge list once: deg, the rank init, and the
-    # adjacency build below all derive from it, and without this the
-    # (possibly join-produced) edge subtree re-evaluates three times.
-    edges = edges.transform(stage_cut)
     # Node count observed by deg's own cut job (no job of its own):
     # the rank init, the teleport base and the loop's join strategy
     # all derive from it. 1.0 / n and (1.0 - d) / n in Python doubles
@@ -832,7 +822,8 @@ def bfs_hops(edges: DataFrame, max_hops: int) -> DataFrame:
             .withColumn("hops", F.lit(k)),
             F.count(F.lit(1)),
         )
-        dist = stage_cut(dist.unionAll(nxt))
+        # every nxt is a cut, so dist stays a flat union of cut leaves
+        dist = dist.unionAll(nxt)
         frontier = nxt.select("node")
     return dist.select("node", F.col("hops").cast("int").alias("hops"))
 

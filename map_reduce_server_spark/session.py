@@ -4,11 +4,11 @@ The reference engine hand-rolls its runtime (master/worker TCP/UDP,
 reference ``mapreduce/master/__main__.py:56-68``); on Spark the
 runtime already exists, so the only thing to configure is the SQL
 engine: AQE on (runtime re-planning, skew-join handling), shuffle
-partitions pinned to a fixed 32-partition upper bound that AQE
-coalesces down locally (they'd be sized to the cluster at 100 TB),
-Arrow for any Python-side exchange, and the pinned session
-semantics (:data:`SEMANTICS`) so results compare exactly against
-external oracles.
+partitions set to the session's ``defaultParallelism`` (its cores;
+AQE coalesces batch shuffles down, and a new stateful stream records
+the count as its state-partition count), Arrow for any Python-side
+exchange, and the pinned session semantics (:data:`SEMANTICS`) so
+results compare exactly against external oracles.
 
 Engine sessions also start their Python workers through
 :mod:`map_reduce_server_spark.daemon` (``spark.python.daemon.module``).
@@ -125,6 +125,11 @@ def get_spark(
     cluster the ``master`` setting comes from spark-submit and these
     SQL configs carry over unchanged.
 
+    ``spark.sql.shuffle.partitions`` is ``defaultParallelism``
+    (``cpus`` locally, the executors' cores on a cluster) unless
+    ``extra_conf`` sets it; a stateful stream keeps the count it first
+    started with in its checkpoint.
+
     Python workers fork from :mod:`map_reduce_server_spark.daemon`,
     which saves each Python task the 200-300 ms (4 cores, CPython
     3.11) of re-reading ``pyspark.zip`` and the Spark core jar; a
@@ -150,10 +155,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # fixed upper bound (NOT derived from the cpus argument):
-        # AQE coalesces down when data is small, so oversizing is
-        # harmless while matching the 32-thread bench box.
-        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "map_reduce_server_spark.daemon")
@@ -163,5 +164,10 @@ def get_spark(
     for key, val in {**SEMANTICS, **(extra_conf or {})}.items():
         builder = builder.config(key, val)
     spark = builder.getOrCreate()
+    # one partition count per session, from the cores it has
+    if "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism
+        )
     spark.sparkContext.setLogLevel("WARN")
     return spark

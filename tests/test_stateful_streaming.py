@@ -79,7 +79,7 @@ def test_stateful_counts_batch_split_invariant(spark, tmp_path):
     ]
     schema = "event_type string, value double, ts timestamp"
 
-    def run(split: list[list], tag: str) -> dict:
+    def stream_of(split: list[list], tag: str):
         src = tmp_path / f"src_{tag}"
         src.mkdir()
         for i, chunk in enumerate(split):
@@ -91,17 +91,35 @@ def test_stateful_counts_batch_split_invariant(spark, tmp_path):
                 )
             )
             os.utime(p, (1_600_000_000 + 10 * i,) * 2)
-        stream = (
+        return (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .json(str(src))
         )
-        return _final_counts(stream)
 
-    whole = run([rows], "one")
-    split = run([rows[:2], rows[2:4], rows[4:]], "three")
+    whole = _final_counts(stream_of([rows], "one"))
+    split = _final_counts(stream_of([rows[:2], rows[2:4], rows[4:]], "three"))
     assert whole == split
     # shortest-repr HALF_UP: 1.005 -> 1.01, 0.145 -> 0.15 (its double
     # sits a ulp BELOW .0145e1, but the repr is what quantizes),
     # -2.675 -> -2.68 (ties away from zero for negatives too)
     assert whole["a"] == (3, 4.16) and whole["b"] == (3, -2.68)
+
+    # One partition count per session: the engine session shuffles
+    # into defaultParallelism partitions, and a new stateful stream
+    # records that count as its state-partition count.
+    n = spark.sparkContext.defaultParallelism
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
+    query = (
+        running_counts_stream(stream_of([rows], "state"))
+        .writeStream.outputMode("update")
+        .format("noop")
+        .option("checkpointLocation", str(tmp_path / "checkpoint"))
+        .start()
+    )
+    try:
+        query.processAllAvailable()
+        progress = query.lastProgress
+    finally:
+        query.stop()
+    assert progress["stateOperators"][0]["numShufflePartitions"] == n
