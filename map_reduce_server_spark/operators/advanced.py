@@ -895,11 +895,8 @@ def q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # oracle's cast, not silently vanish from the cascade sums
         checked_decimal(F.col("value"), 2).alias("v"),
     )
-    # Materialize the hourly grain ONCE: the three output branches
-    # (hour/day/month) all derive from it, and without this
-    # checkpoint each union branch re-evaluates the subtree — the
-    # plan showed THREE raw scans instead of one (pinned in
-    # tests/test_plans.py::test_time_rollup_single_scan).
+    # kept: the hour, day and month branches all read hourly; uncut the
+    # plan scans events three times (test_plans.py pins one scan)
     hourly = ev.groupBy("bucket").agg(
         F.count("*").alias("n_events"), F.sum("v").alias("sv")
     ).transform(stage_cut)
@@ -1453,10 +1450,8 @@ def q_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     local = deltas.withColumn("local_run", F.sum("delta").over(wlocal))
     # One row per hour: the hour's net delta and its local running max.
-    # Materialized ONCE (domain-bounded: ≤ #hours in the corpus span)
-    # — both the output rows and the year-totals carry derive from it,
-    # and without the lineage cut the whole sessionize pipeline
-    # (events scan + two user-window shuffles) would evaluate twice.
+    # kept: the output rows and the year carry both read hours; uncut
+    # the sessionize pipeline (scan + two user windows) runs twice
     hours = local.groupBy("hour").agg(
         F.sum("delta").alias("hour_sum"),
         F.max("local_run").alias("local_max"),
@@ -1722,13 +1717,9 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     no events anchor no window (joined back to observed days only).
     """
     ev = load_table(spark, sf_dir, "events")
-    # Materialize the distinct (day, user) pairs ONCE: both join
-    # branches (contrib, observed days) derive from this subtree, and
-    # without the lineage cut the events scan + distinct shuffle run
-    # twice per execution (same convention as q_time_rollup).
     daily = ev.select(
         F.date_trunc("day", "ts").alias("day"), "user_id"
-    ).distinct().transform(stage_cut)
+    ).distinct()
     contrib = daily.select(
         F.explode(
             F.sequence(

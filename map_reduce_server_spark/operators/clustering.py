@@ -88,9 +88,7 @@ def connected_components(
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .union(nodes.select(F.col("node").alias("src"), F.col("node").alias("dst")))
     )
-    # stage_cut each iteration: truncates the lineage so the
-    # logical plan stays O(1) deep instead of O(iterations) — without
-    # it Catalyst re-analyzes an exponentially growing tree.
+    # kept: every iteration joins adj; uncut each re-runs the unions
     adj = adj.transform(stage_cut)
     # Seed labels with one propagation for free: min over neighbors
     # (self-loop included) IS iteration 1's pre-jump candidate, and
@@ -100,6 +98,7 @@ def connected_components(
     # loop's join strategy once: under the gate every node-sized side
     # is broadcast-hinted so the edge-sized adjacency never
     # re-shuffles per iteration.
+    # kept: loop state; cut labels keep each iteration's plan O(1) deep
     labels, n_nodes = stage_cut_metric(
         adj.groupBy(F.col("src").alias("node")).agg(
             F.min("dst").alias("component")
@@ -126,7 +125,8 @@ def connected_components(
         jump = labels.select(
             F.col("node").alias("cand"), F.col("component").alias("cand_comp")
         )
-        # the changed-label count rides the cut's own job
+        # kept: loop state, cut per iteration; the changed-label count
+        # rides the cut's own job
         updated, changed = stage_cut_metric(
             labels.join(_hint(propagated), "node")
             .join(_hint(jump), "cand")
@@ -261,9 +261,8 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("dst"),
         )
         .distinct()
-        # materialize BEFORE symmetrizing: both union branches read
-        # pairs, and pagerank reads the union twice (deg and adj), so
-        # uncut the join and distinct would run four times
+        # kept: both union branches read pairs and pagerank reads the
+        # union twice (deg and adj); uncut the join and distinct run 4x
         .transform(stage_cut)
     )
     return pairs.union(
@@ -305,11 +304,11 @@ def pagerank(
     The last iteration is returned un-checkpointed: callers aggregate
     or collect it anyway, and the final plan stays inspectable.
     """
-    # Node count observed by deg's own cut job (no job of its own):
-    # the rank init, the teleport base and the loop's join strategy
-    # all derive from it. 1.0 / n and (1.0 - d) / n in Python doubles
-    # are the oracle's own double expressions, so the output stays
-    # bit-identical to it.
+    # kept: the init ranks and adj both read deg. Node count observed
+    # by deg's own cut job (no job of its own): the rank init, the
+    # teleport base and the loop's join strategy all derive from it.
+    # 1.0 / n and (1.0 - d) / n in Python doubles are the oracle's own
+    # double expressions, so the output stays bit-identical to it.
     deg, n = stage_cut_metric(
         edges.groupBy(F.col("src").alias("node")).agg(
             F.count("*").alias("deg")
@@ -331,6 +330,7 @@ def pagerank(
     # (iteration 0's broadcast build side) — the former cut spent a
     # whole materialization job to save recomputing a projection.
     ranks = deg.select("node", F.lit(1.0 / n).alias("rank"))
+    # kept: every iteration joins adj; uncut each re-runs the degree join
     adj = edges.join(
         _hint(deg.withColumnRenamed("node", "src")), "src"
     ).transform(stage_cut)
@@ -370,8 +370,8 @@ def pagerank(
                 + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
             ).alias("rank"),
         )
-        # Cut lineage between iterations (self-join safety + O(1)
-        # plan depth) — but return the last one lazy: callers
+        # kept: loop state; the cut between iterations gives self-join
+        # safety and O(1) plan depth. The last one stays lazy: callers
         # consume it exactly once and its plan stays inspectable.
         ranks = nxt.transform(stage_cut) if i < iters - 1 else nxt
     return ranks
@@ -541,6 +541,8 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering coefficient (that denominator is Σ_v C(deg_v, 2),
     available from ``graph_degree_stats``).
     """
+    # kept: both wedge sides and the closing join read e; uncut the
+    # pair pipeline runs three times
     e = _copurchase_edges(spark, sf_dir).transform(stage_cut)
     e1 = e.alias("e1")
     e2 = e.alias("e2")
@@ -624,7 +626,6 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .transform(stage_cut)
     )
     n = li.agg(
         F.count_distinct("l_orderkey").cast("double").alias("n_orders")
@@ -692,8 +693,8 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hundred values). No row of lineitem survives past the first
     aggregation.
     """
-    # two consumers (u- and v-branch of the union): materialize once,
-    # same rationale as the triangles call site
+    # kept: the u- and v-branch of the union both read e; uncut the
+    # pair pipeline runs twice
     e = _copurchase_edges(spark, sf_dir).transform(stage_cut)
     deg = (
         e.select(F.col("u").alias("node"))
@@ -796,6 +797,7 @@ def bfs_hops(edges: DataFrame, max_hops: int) -> DataFrame:
     observed by the stage-cut job that materializes it. An empty
     frontier short-circuits the remaining hops (the reachable set is
     closed)."""
+    # kept: the seed and every hop join ed; uncut each re-runs the union
     ed = (
         edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(
@@ -804,6 +806,8 @@ def bfs_hops(edges: DataFrame, max_hops: int) -> DataFrame:
         .transform(stage_cut)
     )
     seed = ed.agg(F.min("src").alias("node"))
+    # kept: the first frontier and every hop's anti-join read dist;
+    # uncut the seed aggregate over ed re-runs per hop
     dist = stage_cut(seed.withColumn("hops", F.lit(0)))
     frontier = dist.select("node")
     n_frontier = 1  # the seed: a global aggregate is always one row
@@ -814,6 +818,8 @@ def bfs_hops(edges: DataFrame, max_hops: int) -> DataFrame:
             fr = F.broadcast(frontier)
         else:
             fr = frontier
+        # kept: loop state; the next hop's frontier and dist read nxt,
+        # and its job observes the frontier size
         nxt, n_frontier = stage_cut_metric(
             fr.join(ed, fr["node"] == ed["src"])
             .select(F.col("dst").alias("node"))

@@ -201,9 +201,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shingle join gets prefix filtering / LSH (see
     ``dedup_minhash_lsh``) — this exact variant is the ground truth.
     """
-    # three consumers (both self-join sides + sz): materialize the
-    # per-doc arrays once; the exploded view is a row-local cheap op
-    # per consumer and sz is size(arr) — no groupBy shuffle
+    # kept: both self-join sides and sz read darr; uncut the shingling
+    # runs three times. The explode and size(arr) are row-local.
     darr = doc_shingle_arrays(spark, sf_dir).transform(stage_cut)
     sh = darr.select("doc_id", F.explode("arr").alias("shingle"))
     sz = darr.select("doc_id", F.size("arr").cast("long").alias("n"))
@@ -521,9 +520,9 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch-side similarity used to rank/filter candidates without
     touching the documents again (at 100 TB the signatures are 12×32
     bytes per doc; the texts never reshuffle)."""
-    wide = minhash_wide(spark, sf_dir).transform(
-        stage_cut  # reused by candidates AND agreement
-    )
+    # kept: candidates and agreement both read wide; uncut the
+    # signatures are computed twice
+    wide = minhash_wide(spark, sf_dir).transform(stage_cut)
     cand = minhash_candidate_pairs(wide)
     agree_expr = sum(
         (F.col(f"a.m{i}") == F.col(f"b.m{i}")).cast("int")
@@ -865,6 +864,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate; the round-14 code checkpointed the EXPLODED
     shingle table instead and re-shuffled it per consumer).
     """
+    # kept: ranking and both verification sides read darr
     darr = doc_shingle_arrays(spark, sf_dir).transform(stage_cut)
     prefix = ranked_prefix(darr)
     a = prefix.alias("a")
@@ -981,6 +981,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — compact keys, hash-distributed, AQE-splittable — then
     exact intersection counts verify only the candidates.
     """
+    # kept: the prefixes, the probe side and verification read darr
     darr = doc_shingle_arrays(spark, sf_dir).transform(stage_cut)
     prefix = ranked_prefix(darr, freq_cap=_CT_FREQ_CAP)
     p = prefix.alias("p")

@@ -9,8 +9,8 @@ signal (Lee et al.'s dedup criterion) per document.
 
 Scale shape shared by all four: corpora never shuffle their payloads
 — token streams reduce to compact (doc_id, stat) rows before any
-join; candidate sets are top-k-sized and broadcast; rank arithmetic
-is join-counting over those broadcast sets (no global window); float
+join; candidate sets are top-k-sized, and ranks are row_number
+windows over those sets, never over the corpus; float
 work is rounded at engine-portable points (ln is 1-ulp across libm
 implementations).
 
@@ -21,9 +21,6 @@ extension mandate.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -208,27 +205,6 @@ _RRF_QVEC = 0  # vec_id of the query embedding; doc_id aligns with vec_id
 _SQL_COS = SQL_COSINE  # shared oracle twin of functions.vector.cosine
 
 
-def _join_rank(cands: DataFrame, score: str, key: str) -> DataFrame:
-    """rank = 1 + |{better candidate}| via a broadcast self-join over
-    the top-k-sized candidate set — no global window, deterministic
-    through the (score DESC, key) total order. Candidates' scores
-    must be non-NULL: every comparison against a NULL score fails,
-    so a NULL candidate would count zero better rows and claim
-    rank 1 (callers filter NULLs before ranking)."""
-    a = cands.alias("a")
-    b = cands.alias("b")
-    better = (F.col(f"b.{score}") > F.col(f"a.{score}")) | (
-        (F.col(f"b.{score}") == F.col(f"a.{score}"))
-        & (F.col(f"b.{key}") < F.col(f"a.{key}"))
-    )
-    return (
-        a.join(F.broadcast(b), better, "left")
-        .groupBy(F.col(f"a.{key}").alias(key), F.col(f"a.{score}").alias(score))
-        .agg(F.count(F.col(f"b.{key}")).alias("n_better"))
-        .select(key, (F.col("n_better") + 1).cast("int").alias("rnk"))
-    )
-
-
 @register(
     "q_hybrid_retrieval_rrf",
     bench=True,
@@ -279,78 +255,55 @@ def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector), so it is excluded as a candidate from BOTH legs — not
     just the cosine leg where it would trivially win at cos=1.
     NULL cosines (zero-norm embeddings) are likewise barred from the
-    candidate set; `_join_rank`'s counting join would otherwise hand
-    a NULL score rank 1.
+    candidate set, as the oracle bars them.
 
     Scale shape: each leg reduces the corpus to a top-50 candidate
-    set (TakeOrdered — no global sort), materialized once via
-    `stage_cut` — `_join_rank` consumes its input as both probe
-    and broadcast build side, which would otherwise re-execute each
-    leg's full corpus pipeline twice; ranks come from a broadcast
-    self-join count over those 50 rows; the fusion is a full outer
-    join of two 50-row sets. The expensive parts — token stream and
-    one corpus scan for cosine — are single-pass, shuffle only
-    compact stats, and the vector side broadcasts one query row.
+    set (TakeOrdered — no global sort) and numbers it with one
+    row_number window over those 50 rows, so each leg's corpus
+    pipeline runs once; the fusion is a full outer join of two
+    50-row sets. The expensive parts — token stream and one corpus
+    scan for cosine — are single-pass, shuffle only compact stats,
+    and the vector side broadcasts one query row.
     """
+
+    def top_ranked(scored: DataFrame, score: str, rnk: str) -> DataFrame:
+        # the rank is the position in the total order (score DESC,
+        # doc_id), which is the oracle's 1 + |{better candidate}|
+        order = (F.desc(score), "doc_id")
+        w = Window.orderBy(*order)
+        return (
+            scored.orderBy(*order)
+            .limit(_RRF_CAND)
+            .select("doc_id", F.row_number().over(w).alias(rnk))
+        )
+
     docs = load_table(spark, sf_dir, "documents")
-
-    def _build_bm_top() -> DataFrame:
-        return (
-            _bm25_scored(docs)
-            .filter(F.col("doc_id") != _RRF_QVEC)
-            .orderBy(F.desc("score"), "doc_id")
-            .limit(_RRF_CAND)
-            .transform(stage_cut)
+    bm = top_ranked(
+        _bm25_scored(docs).filter(F.col("doc_id") != _RRF_QVEC),
+        "score",
+        "bm_rnk",
+    )
+    # widened like the ann family's _emb: the per-vector cosine fold
+    # is pure narrow work that a one-row-group parquet file would
+    # otherwise run on a single core
+    emb = load_table(spark, sf_dir, "embeddings", widen=True).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    qv = emb.filter(F.col("vec_id") == _RRF_QVEC).select(
+        F.col("vec").alias("qvec")
+    )
+    cos = top_ranked(
+        emb.filter(F.col("vec_id") != _RRF_QVEC)
+        .crossJoin(F.broadcast(qv))
+        .select(
+            F.col("vec_id").alias("doc_id"),
+            F.round(cosine(F.col("qvec"), F.col("vec")), 9).alias("cos"),
         )
-
-    def _build_cos_top() -> DataFrame:
-        # widened like the ann family's _emb (round 15): the
-        # per-vector cosine fold is pure narrow work that a
-        # one-row-group parquet file would otherwise run on a single
-        # core; no-op at scale
-        emb = load_table(spark, sf_dir, "embeddings", widen=True).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-        )
-        qv = emb.filter(F.col("vec_id") == _RRF_QVEC).select(
-            F.col("vec").alias("qvec")
-        )
-        return (
-            emb.filter(F.col("vec_id") != _RRF_QVEC)
-            .crossJoin(F.broadcast(qv))
-            .select(
-                F.col("vec_id").alias("doc_id"),
-                F.round(cosine(F.col("qvec"), F.col("vec")), 9).alias("cos"),
-            )
-            .filter(F.col("cos").isNotNull())
-            .orderBy(F.desc("cos"), "doc_id")
-            .limit(_RRF_CAND)
-            .transform(stage_cut)
-        )
-
-    # The two legs are INDEPENDENT jobs (guide §2.6 "overlap
-    # independent jobs"): their eager stage-cut materializations are
-    # submitted from two driver threads so the cosine leg's tasks
-    # back-fill executors the BM25 leg's tail leaves idle — on a
-    # cluster this is the standard independent-subquery overlap; at
-    # sf0.1/local[32] it measured 1.43 -> 1.03 s (round 16,
-    # interleaved A/B, identical output). inheritable_thread_target
-    # keeps job-group/description/tag thread-locals correct per the
-    # PySpark threading contract; .result() re-raises any leg failure.
-    # With pinned-thread mode off, PySpark hands the session back
-    # instead of a wrapper; the legs then run in sequence.
-    _inherit = inheritable_thread_target(spark)
-    if callable(_inherit):
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            bm_f = pool.submit(_inherit(_build_bm_top))
-            cos_f = pool.submit(_inherit(_build_cos_top))
-            bm_top, cos_top = bm_f.result(), cos_f.result()
-    else:
-        bm_top, cos_top = _build_bm_top(), _build_cos_top()
-    bm_rank = _join_rank(bm_top, "score", "doc_id")
-    cos_rank = _join_rank(cos_top, "cos", "doc_id")
-    bm = bm_rank.select("doc_id", F.col("rnk").alias("bm_rnk"))
-    cs = cos_rank.select("doc_id", F.col("rnk").alias("cos_rnk"))
-    fused = bm.join(cs, "doc_id", "full_outer").select(
+        .filter(F.col("cos").isNotNull()),
+        "cos",
+        "cos_rnk",
+    )
+    fused = bm.join(cos, "doc_id", "full_outer").select(
         "doc_id",
         F.round(
             F.coalesce(1.0 / (_RRF_K + F.col("bm_rnk")), F.lit(0.0))
@@ -491,9 +444,8 @@ def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.select("doc_id", F.explode(win_arr).alias("win"))
         .select("doc_id", md5_long(F.col("win")).alias("h"))
         .distinct()
-        # three consumers previously recomputed this explode+distinct;
-        # one materialization + one join-aggregate pass replaces the
-        # shared/per_doc/totals triple-plan
+        # kept: shared and marked both read wins; uncut the window
+        # explode and distinct run twice
         .transform(stage_cut)
     )
     shared = wins.groupBy("h").agg(F.count("*").alias("n")).filter(

@@ -39,11 +39,9 @@ _SQL_COS = SQL_COSINE  # shared oracle twin of functions.vector.cosine
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widened (round 15): every consumer's dominant cost is the
-    # per-vector cosine/dot fold, pure narrow work that a
-    # one-row-group parquet file would otherwise run on one core;
-    # at scale the scan arrives wide and this is a no-op (see
-    # tables.load_table)
+    # widened: every consumer's dominant cost is the per-vector
+    # cosine/dot fold, pure narrow work that a one-row-group parquet
+    # file would otherwise run on one core (see tables.load_table)
     return load_table(spark, sf_dir, "embeddings", widen=True).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )

@@ -642,6 +642,8 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
+    # kept: the eval and train sides both read darr; uncut the 4-gram
+    # arrays are built twice
     darr = toked.select("doc_id", gram_arr.alias("g")).transform(stage_cut)
     is_eval = F.col("doc_id") % 97 == 0
     eval_g = darr.filter(is_eval).select(
@@ -1039,11 +1041,8 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p"),
     ).select("doc_id", F.col("p.bigram").alias("bigram"), F.col("p.tok1").alias("tok1"))
-    # Materialize the exploded bigram stream ONCE: three consumers
-    # (cb, cu, and the scoring join) would otherwise each rebuild it
-    # from a full corpus scan + tokenize + explode — the same
-    # measured lineage-cut convention as dedup's shingle stream and
-    # q_time_rollup's hourly grain.
+    # kept: cb, cu and the scoring join read bg; uncut each rebuilds it
+    # from a corpus scan, tokenize and explode
     bg = bg.transform(stage_cut)
     cb = bg.groupBy("bigram").agg(F.count("*").alias("cab"))
     cu = bg.groupBy("tok1").agg(F.count("*").alias("ca"))
@@ -1357,6 +1356,8 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bigram")
     )
+    # kept: sp (rules and both marginals) and tot read cab; uncut the
+    # bigram count runs four times
     cab = bg.groupBy("bigram").agg(
         F.count("*").cast("bigint").alias("n")
     ).transform(stage_cut)

@@ -3,9 +3,12 @@ operators sever lineage and materialize an intermediate.
 
 Why lineage cuts exist here at all: iterative plans (pagerank,
 pointer-jumping connected components) and multi-consumer plans
-(PPJoin's shingle set, RRF's two retrieval legs) either grow an
+(PPJoin's shingle set, the co-purchase edge list) either grow an
 exponentially deep lineage or re-execute an expensive subtree per
-consumer. A cut bounds both.
+consumer. A cut bounds both. Everything else stays one lazy plan: a
+cut is kept only where a loop needs it or where the uncut plan
+measured slower for re-running a subtree, and each call site says
+which in a ``# kept:`` line.
 
 A cut is ``localCheckpoint``: executor-local blocks, no replication,
 no DFS round-trip. The returned DataFrame's logical plan is a fresh

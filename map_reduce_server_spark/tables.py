@@ -41,51 +41,6 @@ TABLES = (
 # actually fit.
 
 
-def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
-    """Parse a byte-size session conf ("134217728b", "128m", plain
-    int). Unknown formats fall back to ``default`` rather than
-    raising — the value only gates a repartition heuristic."""
-    raw = str(spark.conf.get(key, str(default))).strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3),
-        ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("b", 1),
-    ):
-        if raw.endswith(suffix):
-            raw = raw[: -len(suffix)]
-            mult = m
-            break
-    try:
-        return int(raw) * mult
-    except ValueError:
-        return default
-
-
-def _path_scan_estimate(spark: SparkSession, path: str) -> int | None:
-    """Split-count estimate for a known parquet path from the
-    filesystem alone — zero Spark calls, so the widen decision in
-    :func:`load_table` costs microseconds instead of an analysis
-    pass. None when the path is not local/stat-able."""
-    if os.path.isfile(path):
-        sizes = [os.path.getsize(path)]
-    elif os.path.isdir(path):
-        sizes = []
-        for root, _dirs, files in os.walk(path):
-            sizes.extend(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith(("_", "."))
-            )
-        if not sizes:
-            return None
-    else:
-        return None
-    mpb = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
-    open_cost = _bytes_conf(spark, "spark.sql.files.openCostInBytes", 4 * 1024**2)
-    total = sum(sizes) + open_cost * len(sizes)
-    return max(1, -(-total // mpb))
-
-
 # The session confs that decide how parquet types map to Spark types
 # (TIMESTAMP(NANOS), plain BINARY, INT96, timestamps without a zone).
 _SCHEMA_CONFS = (
@@ -134,29 +89,20 @@ def load_table(
 ) -> DataFrame:
     """Load one star-schema table from ``{sf_dir}/{name}.parquet``.
 
-    ``widen=True`` round-robin repartitions the scan UP to the
-    session's default parallelism when it arrives with fewer
-    partitions — and only then. A small parquet table is one file
-    with one row group, so Spark scans it as ONE task however many
-    cores exist, and every expensive narrow operation downstream
-    (shingle explodes, md5 banks, cosine folds, Python codec decodes)
-    runs single-threaded before the first exchange (minhash_wide
-    2.57 -> 1.39 s at sf0.1 on local[32]). A large table scans as
-    many splits, so the gate never fires there. Callers opt in per
-    operator: a scan that feeds straight into a groupBy/window
-    exchange measured 2x SLOWER widened, so this is never blanket.
-    Predicate pushdown and column pruning survive: Catalyst pushes
-    both through the round-robin Repartition to the parquet scan.
-
-    The partition count comes from ``os.path.getsize`` and Spark's
-    split-packing arithmetic (:func:`_path_scan_estimate`), not from
-    a ``df.rdd.getNumPartitions()`` probe, which forces a full
-    physical-planning pass (~25-40 ms of driver latency per call).
-    Non-local storage, where files cannot be stat-ed, falls back to
-    that probe; the frame is a bare read at that point, so the probe
-    sees the scan's own partitioning. Under dynamic allocation
-    ``defaultParallelism`` at build time may lag the executor count
-    at run time; a miss costs one undersized round-robin exchange.
+    ``widen=True`` round-robin repartitions the scan to the session's
+    default parallelism. A small parquet table is one file with one
+    row group, and only the split that holds the row group reads rows,
+    however many splits Spark cuts the file into; every expensive
+    narrow operation downstream (shingle explodes, md5 banks, cosine
+    folds, Python codec decodes) would then run in one task before the
+    first exchange (minhash_wide 2.57 -> 1.39 s at sf0.1 on local[32]).
+    Callers opt in per operator: a scan that feeds straight into a
+    groupBy/window exchange measured 2x SLOWER widened, so this is
+    never blanket. Predicate pushdown and column pruning survive:
+    Catalyst pushes both through the round-robin Repartition to the
+    parquet scan. Under dynamic allocation ``defaultParallelism`` at
+    build time may lag the executor count at run time; a miss costs
+    one undersized round-robin exchange.
 
     ``events.ts`` has shipped in two physical encodings across
     driver-generated datasets, both normalized here to a zoned
@@ -184,12 +130,7 @@ def load_table(
     if name == "events":
         df = normalize_events_ts(df)
     if widen:
-        est = _path_scan_estimate(spark, f"{sf_dir}/{name}.parquet")
-        if est is None:
-            est = df.rdd.getNumPartitions()
-        target = spark.sparkContext.defaultParallelism
-        if est < target:
-            df = df.repartition(target)
+        df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
 
 

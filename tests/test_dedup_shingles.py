@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from map_reduce_server_spark.functions.tokens import word_tokens_col
 from map_reduce_server_spark.operators.dedup import shingles_df
-from map_reduce_server_spark.plans.inspect import explain_str
 from map_reduce_server_spark.tables import load_table
 
 
@@ -75,55 +74,25 @@ def test_load_table_widen_widens_and_preserves_rows(spark, sf_small):
     docs = load_table(spark, sf_small, "documents")
     widened = load_table(spark, sf_small, "documents", widen=True)
     target = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < target:
-        assert widened.rdd.getNumPartitions() == target
-    # row-identical either way
+    assert widened.rdd.getNumPartitions() == target
     assert widened.exceptAll(docs).isEmpty()
     assert docs.exceptAll(widened).isEmpty()
 
 
-def test_load_table_widen_noop_when_scan_fills_parallelism(
-    spark, sf_small, monkeypatch
-):
-    # a scan at/above the session parallelism must NOT pay a new
-    # exchange — the 100 TB case where inputs arrive as many splits;
-    # 256-byte splits make the one-file fixture scan that way. Checked
-    # on the file-size estimate and on the RDD-probe fallback.
-    from map_reduce_server_spark import tables
-
+def test_load_table_widen_noop_when_scan_fills_parallelism(spark, sf_small):
+    """A scan cut into many splits is no reason to skip widening: the
+    one-file fixture has one row group, so at 256-byte splits it scans
+    as hundreds of partitions of which only one holds rows. Widened,
+    the rows spread over exactly ``defaultParallelism`` partitions."""
     session = spark.newSession()
     session.conf.set("spark.sql.files.maxPartitionBytes", "256")
     target = session.sparkContext.defaultParallelism
-
-    def assert_not_widened():
-        wide = load_table(session, sf_small, "documents", widen=True)
-        assert wide.rdd.getNumPartitions() >= target
-        assert "Exchange" not in explain_str(wide)
-
-    assert_not_widened()
-    monkeypatch.setattr(tables, "_path_scan_estimate", lambda *_a: None)
-    assert_not_widened()
-
-
-def test_widen_small_scan_rdd_fallback_on_non_scan_plans(
-    spark, sf_small, monkeypatch
-):
-    """When the file listing cannot see the scan (non-local storage,
-    forced here), load_table(widen=True) decides from the RDD probe
-    of the bare read alone: a scan narrower than the session
-    parallelism still widens to exactly that parallelism through one
-    round-robin exchange, rows unchanged."""
-    from map_reduce_server_spark import tables
-
-    docs = load_table(spark, sf_small, "documents")
-    target = spark.sparkContext.defaultParallelism
-    assert docs.rdd.getNumPartitions() < target
-    monkeypatch.setattr(tables, "_path_scan_estimate", lambda *_a: None)
-    wide = load_table(spark, sf_small, "documents", widen=True)
-    assert wide.rdd.getNumPartitions() == target
-    assert "Exchange" in explain_str(wide)
-    assert wide.exceptAll(docs).isEmpty()
-    assert docs.exceptAll(wide).isEmpty()
+    docs = load_table(session, sf_small, "documents")
+    assert docs.rdd.getNumPartitions() > target
+    wide = load_table(session, sf_small, "documents", widen=True)
+    sizes = wide.rdd.glom().map(len).collect()
+    assert len(sizes) == target
+    assert all(sizes)
 
 
 def test_array_verified_common_counts_exact_intersection(spark):
@@ -206,24 +175,3 @@ def test_positional_filter_is_lossless(spark, sf_medium):
     filtered = QUERIES["dedup_jaccard_prefix"](spark, sf_medium)
     assert filtered.exceptAll(unfiltered).isEmpty()
     assert unfiltered.exceptAll(filtered).isEmpty()
-
-
-def test_load_table_widen_matches_plan_probe(spark, sf_small, monkeypatch):
-    """round 16: load_table(widen=True)'s file-size split estimate
-    must equal the RDD probe, and the probe fallback (taken on
-    non-local storage, forced here) must reach the same widen
-    decision — same partition count, row-identical result."""
-    from map_reduce_server_spark import tables
-
-    names = ("documents", "embeddings")
-    plain = {n: load_table(spark, sf_small, n) for n in names}
-    fast = {n: load_table(spark, sf_small, n, widen=True) for n in names}
-    for n in names:
-        est = tables._path_scan_estimate(spark, f"{sf_small}/{n}.parquet")
-        assert est == plain[n].rdd.getNumPartitions()
-    monkeypatch.setattr(tables, "_path_scan_estimate", lambda *_a: None)
-    for n in names:
-        slow = load_table(spark, sf_small, n, widen=True)
-        assert fast[n].rdd.getNumPartitions() == slow.rdd.getNumPartitions()
-        assert fast[n].exceptAll(plain[n]).isEmpty()
-        assert plain[n].exceptAll(fast[n]).isEmpty()

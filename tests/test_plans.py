@@ -300,6 +300,9 @@ _GLOBAL_WINDOW_ALLOWLIST = {
     # row_number over the character-pair vocabulary, bounded by
     # |alphabet|^2 regardless of corpus size
     "text_bpe_train",
+    # row_number over each retrieval leg's top-_RRF_CAND candidates,
+    # after the limit: 50 rows at any corpus size
+    "q_hybrid_retrieval_rrf",
 }
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from map_reduce_server_spark import registry
 from map_reduce_server_spark.stagecut import stage_cut, stage_cut_metric
 
 
@@ -57,3 +58,18 @@ def test_stage_cut_metric_counts_zero_rows(spark, call_with_timeout, case):
     )
     assert n == 0
     assert cut.collect() == []
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["q_hybrid_retrieval_rrf", "q_market_basket", "q_rolling_active_users"],
+)
+def test_query_build_starts_no_job(spark, sf_small, spark_job_ids, name):
+    """These queries carry no cut, so building one is lazy. The first
+    build may infer parquet schemas (a job per file); the second finds
+    them cached and must start no Spark job."""
+    registry.load_all()
+    query = registry.QUERIES[name]
+    query(spark, sf_small)
+    _, jobs = spark_job_ids(lambda: query(spark, sf_small))
+    assert jobs == []
