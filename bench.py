@@ -1,17 +1,13 @@
 #!/usr/bin/env python3
 """Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and print ONE JSON line.
+and print two JSON lines (see :func:`emit_lines`).
 
 Each query is fully materialized via the noop sink (forces every
 operator, no driver-side result transfer). Each query runs
 ``SPARK_GRAFT_BENCH_REPS`` times (default 3) after the suite-wide
 warm-up; the reported per-query number and the headline total are
-MEDIANS of those warm reps, with the first (coldest) rep kept in
-``cold_queries``. Rationale: two separate rounds burned an
-investigation on a single-rep cold outlier (~8.5 s vs a stable ~5 s
-warm median on the same untouched query) — the median kills that
-recurring false signal at the harness level while the cold field
-preserves the first-run view.
+medians of those warm reps, so one cold outlier cannot move the
+headline, and the first (coldest) rep is kept in ``cold_queries``.
 """
 
 from __future__ import annotations
@@ -57,23 +53,20 @@ def main() -> None:
     # Untimed warm-up: run the whole suite once at the smallest scale
     # factor. Spark caches generated code by source text and the plan
     # shapes are scale-invariant, so this pre-compiles every query's
-    # whole-stage-codegen classes (Janino) and JITs the shared runtime
-    # — the timed region then measures steady-state engine throughput,
-    # not one-time compiler cost (same discipline as JMH warm-up
-    # iterations). Measured at sf0.1: first-run JIT was ~4 s of
-    # dedup_minhash_lsh's 8 s and ~3 s of mr_wordcount's 5.7 s.
+    # whole-stage-codegen classes (Janino) and JITs the shared runtime;
+    # the timed region then measures steady-state engine throughput,
+    # not one-time compiler cost (JMH-style warm-up iterations).
     if warm_dir:
         for name in names:
             materialize(registry.QUERIES[name](spark, warm_dir))
     else:
         materialize(registry.QUERIES[names[0]](spark, sf_dir).limit(1))
-    # Uncounted decimal-sum warm-up AT THE MEASURED SCALE: the first
+    # Uncounted decimal-sum warm-up at the measured scale: the first
     # large decimal-sum aggregate in a JVM session carries a ~0.6-1 s
-    # one-time JIT cost that the small-SF warm-up above does NOT
-    # amortize (C2 needs real invocation volume; measured in round 9,
-    # docs/SCALING.md "Round-9 noise check"). Without this, whichever
-    # query runs first in the TPC-H block — q1 — absorbs that shared
-    # cost and its cold reading sits ~0.7 s above its warm floor.
+    # one-time JIT cost that the small-SF warm-up above does not
+    # amortize (C2 needs real invocation volume; docs/SCALING.md,
+    # "Decimal warm-up"). Without this, whichever query runs first in
+    # the TPC-H block (q1) absorbs that shared cost.
     if os.path.exists(os.path.join(sf_dir, "lineitem.parquet")):
         from pyspark.sql import functions as F
 
@@ -127,27 +120,23 @@ def emit_lines(
     sf: str,
     sidecar_path: str = SIDECAR_PATH,
 ) -> list[str]:
-    """Two JSON lines: a detailed record first, a COMPACT line LAST.
+    """Two JSON lines: a detailed record first, a compact line last.
 
-    The driver captures only the final ~2,000 characters of stdout
-    and parses the last line. Round 13's single detailed line grew
-    past that window as ``rep_queries`` was added, truncating the
-    line's head (including ``metric``/``value``) and leaving
-    BENCH_r13 with ``parsed: null``. The compact last line carries
-    the headline contract fields only and is size-guarded so it can
-    never outgrow any plausible tail window; the per-rep arrays and
-    cold readings stay available on the detailed first line.
+    A consumer may capture only the final ~2,000 characters of stdout
+    and parse the last line, so a single detailed line that grows with
+    the suite (``rep_queries``) would lose its head, ``metric`` and
+    ``value`` included. The compact last line carries the headline
+    contract fields only and is size-guarded under 1,900 characters;
+    the per-rep arrays and cold readings stay on the detailed first
+    line.
 
-    Sidecar policy (decided round 15, BEFORE the guard ever trips):
-    when the suite grows past the guard, per-query medians move to
-    ``BENCH_DETAIL.json`` next to this script instead of silently
-    vanishing from the parsed record — the compact line then carries
-    ``queries_sidecar`` (the file name) and ``n_queries``, so the
-    driver's record still says where the numbers live and how many
-    queries ran. The sidecar holds the FULL detailed record (medians,
-    cold, rep arrays), is rewritten only when the guard trips, and is
-    committed alongside the round's bench so cross-round per-query
-    comparisons survive the compact line's diet.
+    Sidecar fallback: when the suite grows past the guard, per-query
+    medians move to ``BENCH_DETAIL.json`` next to this script instead of
+    vanishing from the parsed record. The compact line then carries
+    ``queries_sidecar`` (the file name) and ``n_queries``, so the record
+    still says where the numbers live and how many queries ran. The
+    sidecar holds the full detailed record (medians, cold, rep arrays)
+    and is rewritten only when the guard trips.
     """
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     detail_fields = {
@@ -158,20 +147,19 @@ def emit_lines(
         "unit": "sec",
         "queries": timings,
         "cold_queries": cold,
-        # Per-rep arrays, in run order: cold ~= warm ~= median
-        # but all shifted vs last round => environment; rep3 >
-        # rep1 systematically => in-JVM accumulation (GC /
-        # shuffle-file pressure). Localizes drift in one round.
+        # Per-rep arrays, in run order: cold ~= warm ~= median but all
+        # shifted against an earlier record => environment; rep3 > rep1
+        # systematically => in-JVM accumulation (GC / shuffle-file
+        # pressure).
         "rep_queries": rep_runs,
         "reps": reps,
         "sf": sf_val,
     }
     detailed = json.dumps(detail_fields)
     compact_fields = {
-        # Renamed from 'headline_suite_wall_seconds' (rounds <= 12):
-        # the value is a SUM OF PER-QUERY MEDIANS over warm reps, not
-        # any single run's wall time. bench_schema lets tooling refuse
-        # to mix the two semantics.
+        # The value is a sum of per-query medians over warm reps, not
+        # any single run's wall time; bench_schema lets tooling refuse
+        # to mix it with the older 'headline_suite_wall_seconds'.
         "metric": "headline_suite_median_seconds",
         "bench_schema": 2,
         "value": total,

@@ -12,9 +12,8 @@ Spark, designed Spark-first:
 - the relational operator library (scan/filter/project/join/agg/
   window/set-ops/...) lives in :mod:`map_reduce_server_spark.operators`
   as declarative DataFrame plans that Catalyst optimizes;
-- LLM-data-pipeline operators (dedup, similarity search, text
-  analysis, multimodal columns) live alongside them, each designed
-  for 100 TB scale (no driver-side collects, shuffle-conscious).
+- dedup, similarity search, text analysis and multimodal operators live
+  alongside them.
 """
 
 from map_reduce_server_spark.session import get_spark

@@ -1,18 +1,16 @@
 """Command-line interface.
 
 Parity with the reference's ops surface (``setup.py:22-28``: the
-``mapreduce-submit`` client, ``submit.py:15-49`` flags). The
-master/worker/start/stop commands have no analog — Spark's runtime
-replaces the reference's daemons (SURVEY.md §2.C) — so the CLI is:
+``mapreduce-submit`` client, ``submit.py:15-49`` flags). Spark's runtime
+replaces the reference's master/worker daemons (SURVEY.md §2.C), so the
+commands are:
 
-- ``submit``: run a MapReduce job (same flags as the reference's
-  submit client);
+- ``submit``: run a MapReduce job (the reference submit client's flags);
 - ``query``: run a named query from the registry and print rows;
 - ``list``: show every registered query and whether it has an oracle;
-- ``verify``: run the DuckDB-oracle correctness gate (the same
-  comparison the grading driver applies);
-- ``status``: one-line engine/registry summary (parity with the
-  reference's ``bin/mapreduce status``).
+- ``verify``: run the DuckDB-oracle correctness gate;
+- ``status``: one-line engine/registry summary (the reference's
+  ``bin/mapreduce status``).
 """
 
 from __future__ import annotations

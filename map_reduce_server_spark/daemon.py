@@ -7,15 +7,13 @@ module, so Spark starts the process that forks Python workers as
 ``zipimport.zipimporter.invalidate_caches`` re-read an archive only
 when the archive changed.
 
-Why: every Python task starts with ``importlib.invalidate_caches()``
-(``pyspark/worker_util.py`` ``setup_spark_files``), and on CPython
-3.11 and 3.12 every cached ``zipimporter`` then re-reads its whole
-archive's directory: 12-13 importers over ``pyspark.zip`` (1,328
-entries), 2 over the Spark core jar (5,359) and 2 over py4j's zip,
-about 27,000 entries and 200-300 ms per task on 4 cores. CPython 3.13
-already defers the read (its ``invalidate_caches`` only drops the
-cached directory), so the wrapper is the 3.13 behaviour with an
-eager stat: about 16 ``stat`` calls per task, and no version branch.
+Every Python task starts with ``importlib.invalidate_caches()``
+(``pyspark/worker_util.py`` ``setup_spark_files``), and on CPython 3.11 and
+3.12 every cached ``zipimporter`` then re-reads its whole archive's
+directory: 12-13 importers over ``pyspark.zip``, 2 over the Spark core jar
+and 2 over py4j's zip, about 27,000 entries per task. CPython 3.13 already
+defers the read, so the wrapper is the 3.13 behaviour with an eager stat
+(about 16 ``stat`` calls per task) and no version branch.
 """
 
 from __future__ import annotations

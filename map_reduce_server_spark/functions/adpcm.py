@@ -1,30 +1,23 @@
 """Pure-stdlib IMA ADPCM codec + RIFF/WAVE container (format 0x11).
 
-Adaptive differential PCM with no external library: IMA/DVI ADPCM
-(the cross-vendor 4-bit codec from the IMA "Recommended Practices
-for Enhancing Digital Audio Compatibility" specification) compresses
-16-bit PCM 4:1 by transmitting, per sample, a 4-bit code that steers
-a shared predictor/step-size state machine. WAVE_FORMAT_IMA_ADPCM
-(format tag 0x11, "DVI ADPCM" in Microsoft's registry) is its
-standard RIFF container: self-contained blocks, each opening with a
-4-byte header (initial predictor int16, step index, reserved byte)
-followed by nibble pairs packed LOW nibble first.
+IMA/DVI ADPCM (the IMA "Recommended Practices for Enhancing Digital Audio
+Compatibility" codec) compresses 16-bit PCM 4:1 by transmitting, per sample,
+a 4-bit code that steers a shared predictor/step-size state machine.
+WAVE_FORMAT_IMA_ADPCM (format tag 0x11, "DVI ADPCM") is its RIFF container:
+self-contained blocks, each opening with a 4-byte header (initial predictor
+int16, step index, reserved byte) followed by nibble pairs packed low nibble
+first.
 
-Unlike G.711 (:mod:`.g711`, a stateless per-byte table), ADPCM
-decode is a SEQUENTIAL state machine — which is exactly why it
-earns its own oracle discipline: the SQL twin replays the predictor
-recursion step by step with a recursive CTE, so a drift in the
-step-size table, the diff reconstruction, clamping, or nibble order
-breaks the hash match on every document.
+Unlike G.711 (:mod:`.g711`, a stateless per-byte table), ADPCM decode is a
+sequential state machine, so the SQL twin replays the predictor recursion
+step by step with a recursive CTE; a drift in the step-size table, the diff
+reconstruction, clamping or nibble order breaks the hash match.
 
-Third-party conformance anchor: CPython's ``audioop`` module
-implements the same Intel/DVI state machine (verified bit-exact in
-``tests/test_adpcm_codec.py``) — its raw stream packs HIGH nibble
-first with implicit (0, 0) initial state, so the tests translate
-nibble order and seed its state from the block header.
-
-Scope is honest: mono 16-bit IMA ADPCM only; stereo interleave and
-perceptual codecs (mp3/ogg) are out of scope.
+Conformance anchor: CPython's ``audioop`` implements the same Intel/DVI state
+machine (bit-exact in ``tests/test_adpcm_codec.py``); its raw stream packs
+the high nibble first with implicit (0, 0) initial state, so the tests
+translate nibble order and seed its state from the block header. Mono 16-bit
+only.
 """
 
 from __future__ import annotations
@@ -318,12 +311,10 @@ def decode_wav_ima(data: bytes) -> tuple[int, list[int]]:
     if len(out) != n_total:
         raise ValueError("adpcm: data ends before the fact sample count")
     if bpos < len(body):
-        # Same strictness as the GIF decoder's trailing-data check: a
-        # fact count that leaves whole undecoded blocks behind means
-        # the header and the payload disagree about the file's length.
-        # (bpos already covers a padded partial FINAL block — the loop
-        # advances by block_align even when the block owes fewer than
-        # spb samples — so only genuinely surplus bytes land here.)
+        # A fact count that leaves whole undecoded blocks behind means the
+        # header and the payload disagree about the file's length. (bpos
+        # already covers a padded partial final block, so only surplus
+        # bytes land here.)
         raise ValueError(
             "adpcm: data continues beyond the fact sample count "
             f"({len(body) - bpos} surplus byte(s))"

@@ -1,21 +1,15 @@
 """Pure-stdlib AIFF codec, mono 16-bit PCM.
 
-AIFF contributes two parsing axes no other audio leg exercises. The
-container is EA-IFF 85 — the BIG-ENDIAN ancestor of RIFF: a FORM
-group whose chunks are walked by (4-byte id, u32 size, content,
-odd-size pad byte), with unknown chunks skipped by size, so a
-decoder hard-coding chunk offsets breaks on any real file. And the
-COMM chunk stores the sample rate as an 80-BIT IEEE 754 EXTENDED
-float (15-bit exponent biased 16383, 64-bit mantissa with an
-EXPLICIT integer bit) — the one place a data pipeline still meets
-x87 extended precision; every integer rate is exact in it, and the
-encode/decode here is exact integer arithmetic, never a double
-round-trip.
+The container is EA-IFF 85, the big-endian ancestor of RIFF: a FORM group
+whose chunks are walked by (4-byte id, u32 size, content, odd-size pad
+byte), with unknown chunks skipped by size. The COMM chunk stores the
+sample rate as an 80-bit IEEE 754 extended float (15-bit exponent biased
+16383, 64-bit mantissa with an explicit integer bit); every integer rate is
+exact in it, and the encode/decode here is exact integer arithmetic, never a
+double round-trip.
 
-Scope is honest: FORM/AIFF with COMM + SSND, mono, 16-bit
-uncompressed PCM (big-endian samples). AIFC (compressed AIFF),
-multi-channel, and other sample widths raise — the strictness
-contract shared by every from-spec codec here. Spec: Audio
+Scope: FORM/AIFF with COMM + SSND, mono, 16-bit uncompressed PCM (big-endian
+samples). AIFC, multi-channel and other sample widths raise. Spec: Audio
 Interchange File Format 1.3 (Apple, 1989) and EA IFF 85.
 """
 

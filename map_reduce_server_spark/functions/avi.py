@@ -1,17 +1,12 @@
 """Pure-stdlib AVI container for Motion-JPEG video.
 
-Video with no external library: AVI is RIFF framing (the same
-chunk discipline as WAV) and Motion-JPEG is "every frame is a
-baseline JPEG" — which :mod:`.jpeg` already encodes and decodes for
-real. Together they make an actual playable video file format
-(``RIFF 'AVI '`` / ``hdrl`` / ``movi`` with ``00dc`` frame chunks,
-fccHandler ``MJPG``), built from struct alone.
+AVI is RIFF framing (the chunk discipline of WAV) and Motion-JPEG stores
+every frame as a baseline JPEG (:mod:`.jpeg`): ``RIFF 'AVI '`` / ``hdrl`` /
+``movi`` with ``00dc`` frame chunks, fccHandler ``MJPG``.
 
-Scope is honest: single video stream, grayscale baseline-JPEG
-frames, no audio track, no ``idx1`` index (readers stream ``movi``
-sequentially without one), no OpenDML extensions. Anything else
-raises. Perceptual/inter-frame codecs (H.264, VP9, ...) are out of
-scope.
+Scope: single video stream, grayscale baseline-JPEG frames, no audio track,
+no ``idx1`` index (readers stream ``movi`` sequentially), no OpenDML
+extensions. Anything else raises.
 """
 
 from __future__ import annotations

@@ -1,18 +1,14 @@
 """Pure-stdlib BMP (Windows DIB) codec, 8-bit grayscale palette.
 
-BMP contributes the three container layout properties none of the
-other image codecs exercise: BOTTOM-UP row storage (positive
-biHeight stores the last raster row first; negative means top-down
-— both are real files and both decode here), 4-BYTE ROW STRIDE
-padding (a 6-px 8-bit row occupies 8 bytes on disk), and PALETTE
-INDIRECTION (8-bit pixels are indices into a 256-entry BGRX color
-table; the identity-gray table makes index == luminance, and a
-non-gray palette is refused rather than silently flattened).
+BMP layout: bottom-up row storage (positive biHeight stores the last raster
+row first; negative means top-down, and both decode here), 4-byte row stride
+padding (a 6-px 8-bit row occupies 8 bytes), and palette indirection (8-bit
+pixels index a 256-entry BGRX color table; the identity-gray table makes
+index == luminance, and a non-gray palette is refused).
 
-Scope is honest (BITMAPINFOHEADER baseline): 8 bpp, BI_RGB (no
-compression), one plane. Anything else raises — the strictness
-contract shared by every from-spec codec here. Spec: Windows GDI
-BITMAPFILEHEADER / BITMAPINFOHEADER layout.
+Scope (BITMAPINFOHEADER baseline): 8 bpp, BI_RGB (no compression), one
+plane. Anything else raises. Spec: Windows GDI BITMAPFILEHEADER /
+BITMAPINFOHEADER layout.
 """
 
 from __future__ import annotations

@@ -1,22 +1,17 @@
 """Order-independent numeric aggregation helpers.
 
-Floating-point sums are order-dependent, and Spark's partial
-aggregation order differs run to run (and from any external engine).
-Summing after an exact cast to DECIMAL makes the aggregate
-associative and therefore bit-reproducible regardless of partitioning
-— which is exactly what you want both for oracle comparison at sf0.01
-and for run-to-run stability on a 1000-executor cluster. The final
-cast back to DOUBLE keeps output schemas simple.
+Floating-point sums are order-dependent, and Spark's partial aggregation
+order differs run to run (and from any external engine). Summing after an
+exact cast to DECIMAL makes the aggregate associative and therefore
+bit-reproducible regardless of partitioning. The final cast back to DOUBLE
+keeps output schemas simple.
 
-Input envelope, enforced loudly: the decimal(30,scale) cast rejects
-NaN, +/-Infinity, and magnitudes at or above 10^(30-scale). DuckDB's
-twin cast RAISES on such values, but under the engine's pinned
-non-ANSI session Spark's cast yields NULL — which ``SUM`` would then
-silently skip, returning a finite wrong answer the oracle gate could
-not even compare (the oracle side errors out). So the Spark side
-raises too: a non-NULL double whose decimal cast comes back NULL
-trips ``raise_error`` instead of vanishing. NULL inputs remain
-skipped by both engines' SUM/COUNT, per SQL semantics.
+Input envelope, enforced loudly: the decimal(30,scale) cast rejects NaN,
++/-Infinity, and magnitudes at or above 10^(30-scale). DuckDB's twin cast
+raises on such values, but under the engine's pinned non-ANSI session
+Spark's cast yields NULL, which ``SUM`` would silently skip. So the Spark
+side raises too: a non-NULL double whose decimal cast comes back NULL trips
+``raise_error``. NULL inputs remain skipped by both engines' SUM/COUNT.
 """
 
 from __future__ import annotations
@@ -37,12 +32,10 @@ def checked_decimal(
     an inline bare cast silently drops garbage rows the oracle's
     cast would error on.
 
-    Shape matters on the hot path: the cast is evaluated ONCE and
-    ``coalesce`` supplies the raise only when it came back NULL for a
-    non-NULL input. The naive ``when(cast.isNull(), raise)
-    .otherwise(cast)`` form evaluates the cast twice per row (no CSE
-    across when-branches) — measured +62% on a dsum-heavy sf0.1
-    aggregate vs +5% (noise) for this form."""
+    The cast is evaluated once and ``coalesce`` supplies the raise only
+    when it came back NULL for a non-NULL input; a ``when(cast.isNull(),
+    raise).otherwise(cast)`` form would evaluate the cast twice per row (no
+    CSE across when-branches)."""
     dec = f"decimal({precision},{scale})"
     raise_expr = F.raise_error(
         F.concat(
@@ -73,15 +66,12 @@ def davg(col: Column | str, scale: int = 2, ndigits: int = 6) -> Column:
     denominator agree about which rows exist: the guarded cast
     raises on garbage rather than letting SUM drop rows COUNT keeps.
 
-    Residual risk, documented not fixed: round(double, n) itself is
-    not fully portable — Spark rounds the double's shortest decimal
-    repr half-up while DuckDB disagrees on part of the .5-boundary
-    set (tests/test_engine_portability_pins.py pins 1.005 -> 1.01 vs
-    1.0). The quotient here would have to land EXACTLY on a
-    shortest-repr half boundary at digit ndigits+1 to diverge —
-    never observed across the full oracle gate at any SF — and both
-    sides round the bit-identical quotient, so the exposure is only
-    to that representational corner, not to accumulation order.
+    round(double, n) itself is not fully portable: Spark rounds the
+    double's shortest decimal repr half-up while DuckDB disagrees on part
+    of the .5-boundary set (tests/test_engine_portability_pins.py pins
+    1.005 -> 1.01 vs 1.0). The quotient would have to land exactly on a
+    shortest-repr half boundary at digit ndigits+1 to diverge, and both
+    sides round the bit-identical quotient.
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.round(dsum(c, scale) / F.count(c), ndigits)
@@ -156,12 +146,9 @@ def _sql_checked_q40_sum(expr: str) -> str:
     limit. NULL rows pass through the per-row CASE as NULL (the NOT
     isfinite predicate is NULL, not true), matching SUM's skip.
 
-    Known cost, accepted: ``expr`` is interpolated three times
-    (isfinite / ABS / FLOOR) with no CSE across CASE branches, so
-    the ORACLE evaluates it up to 3x per row. Binding it once would
-    need a lateral/subquery reshaping every caller's aggregate SQL;
-    callers pass trivial expressions (a column or one division) and
-    the engine side is unaffected, so clarity wins."""
+    ``expr`` is interpolated three times (isfinite / ABS / FLOOR) with no
+    CSE across CASE branches; callers pass trivial expressions (a column or
+    one division), so the oracle-side cost is accepted."""
     row = (
         f"CASE WHEN NOT isfinite({expr}) OR ABS({expr}) >= 8388608.0 "
         f"THEN CAST(error('exact: value not representable at 2^-40 "
@@ -199,9 +186,8 @@ def qmean40(c: Column) -> Column:
     exact integer sum (order-independent, overflow-proof in
     decimal(38,0) to ~1e25 unit-scale rows), then two IEEE double
     divisions both engines perform identically. The result is the
-    mean of the floor-quantized values — bias is < 2^-40 ≈ 9.1e-13,
-    the same ballpark the old decimal(38,12) cast truncated at, but
-    with NO rounding tie for the engines to disagree on.
+    mean of the floor-quantized values; bias is < 2^-40 ≈ 9.1e-13, with
+    no rounding tie for the engines to disagree on.
 
     Denominator is COUNT(c), not COUNT(*): SUM skips NULL inputs, so
     counting them would silently treat each NULL as 0 (davg's
@@ -259,10 +245,10 @@ def sql_davg(expr: str, scale: int = 2, ndigits: int = 6) -> str:
     davg keeps the round because (a) its consumers' outputs flow
     through further rounding or comparisons where the 1e-6 band is
     immaterial, and (b) in queries that mix davg with libm functions
-    (ln/exp/pow) the round is load-bearing — it absorbs genuine 1-ulp
-    libm differences between engines. A davg quotient (2-decimal
-    exact sum / integer count) hits a shortest-repr midpoint only on
-    a measure-zero-ish set no round-1..7 gate (sf0.001/0.01/0.1) has
-    ever produced; new pure-arithmetic queries SHOULD prefer emitting
-    the raw double like q_scalar_subquery/q2_min_cost_supplier."""
+    (ln/exp/pow) the round is load-bearing: it absorbs genuine 1-ulp
+    libm differences between engines. A davg quotient (2-decimal exact sum
+    / integer count) hits a shortest-repr midpoint only on a tiny set no
+    gate scale factor (sf0.001/0.01/0.1) has produced; new pure-arithmetic
+    queries should emit the raw double like
+    q_scalar_subquery/q2_min_cost_supplier."""
     return f"ROUND({sql_dsum(expr, scale)} / COUNT({expr}), {ndigits})"

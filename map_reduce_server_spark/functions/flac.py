@@ -1,7 +1,5 @@
-"""Pure-stdlib FLAC codec (mono, 16-bit, single fixed-blocksize
-frame) — the PREDICTIVE compression family for the multimodal decode
-surface, alongside DEFLATE (PNG), LZW (GIF), DCT+Huffman (JPEG) and
-logarithmic companding (G.711).
+"""Pure-stdlib FLAC codec (mono, 16-bit, single fixed-blocksize frame):
+the predictive compression family of the multimodal decode surface.
 
 Everything is from the public FLAC format specification:
 
@@ -17,9 +15,8 @@ Everything is from the public FLAC format specification:
   bits then a one bit) with the exactly-optimal 4-bit parameter;
 - byte-alignment padding + frame CRC-16 (poly 0x8005, init 0).
 
-FLAC is lossless, so decode(encode(x)) == x bit-exactly — which is
-what lets the decode query's DuckDB oracle recompute every sample
-from the md5 hex the clip was built from.
+FLAC is lossless, so decode(encode(x)) == x bit-exactly, which lets the
+decode query's DuckDB oracle recompute every sample from the md5 hex.
 """
 
 from __future__ import annotations

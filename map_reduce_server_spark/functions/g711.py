@@ -1,11 +1,8 @@
 """Pure-stdlib G.711 mu-law codec + RIFF/WAVE container (format 7).
 
-Compressed audio with no external library: ITU-T G.711 mu-law is a
-logarithmic 16-bit -> 8-bit companding codec (the telephony
-standard), and WAVE_FORMAT_MULAW (format tag 7) is its standard RIFF
-container — a real compressed-audio file format, built from struct
-and integer arithmetic alone. The stdlib ``wave`` module only writes
-PCM, so the container is framed here directly.
+ITU-T G.711 mu-law is a logarithmic 16-bit -> 8-bit companding codec, and
+WAVE_FORMAT_MULAW (format tag 7) is its RIFF container. The stdlib ``wave``
+module only writes PCM, so the container is framed here.
 
 Exactness contract the oracle twins rely on: mu-law is exactly
 invertible ON ITS OWN CODEBOOK — ``encode(decode(c)) == c`` for
@@ -19,12 +16,10 @@ closed integer form
     mag = ((2*m + 33) << (e + 2)) - 132
     val = -mag if cc >= 128 else mag
 
-which a SQL oracle replays verbatim. A-law (format tag 6, the
-European telephony sibling) is implemented alongside with the same
-closed-form discipline — and without mu-law's negative-zero quirk,
-its codebook is invertible on all 256 codes. Scope is honest: mono
-G.711 only; IMA ADPCM lives in its own module (:mod:`.adpcm`) and
-perceptual codecs (mp3/ogg) are out of scope.
+which a SQL oracle replays verbatim. A-law (format tag 6) is implemented
+alongside in the same closed form; without mu-law's negative-zero quirk, its
+codebook is invertible on all 256 codes. Mono G.711 only; IMA ADPCM lives in
+:mod:`.adpcm`.
 """
 
 from __future__ import annotations

@@ -1,16 +1,13 @@
 """Pure-stdlib GIF89a codec (grayscale, single image).
 
-A THIRD compression family for the multimodal decode surface —
-dictionary coding (LZW with variable-width codes), alongside PNG's
-DEFLATE and JPEG's DCT+Huffman. Everything is from the public
-GIF89a specification: logical screen descriptor, 256-entry global
-color table, image descriptor, LZW-compressed index stream in
-≤255-byte data sub-blocks, trailer.
+The dictionary-coding family (LZW with variable-width codes) of the
+multimodal decode surface, from the GIF89a specification: logical screen
+descriptor, 256-entry global color table, image descriptor, LZW-compressed
+index stream in ≤255-byte data sub-blocks, trailer.
 
-The palette is the identity gray ramp (index i → (i, i, i)), so a
-pixel byte IS its palette index and the codec is bit-exact lossless
-end to end — which is what lets the decode query's DuckDB oracle
-recompute every pixel from the md5 hex the image was built from.
+The palette is the identity gray ramp (index i → (i, i, i)), so a pixel byte
+is its palette index and the codec is lossless end to end, which lets the
+decode query's DuckDB oracle recompute every pixel from the md5 hex.
 
 Wire-format details implemented exactly (and pinned by a hand-packed
 golden in tests/test_gif_codec.py):
@@ -138,17 +135,13 @@ def _lzw_decode(data: bytes, n_pixels: int) -> bytes:
             raise ValueError("gif: LZW output exceeds pixel count")
         out += entry
         prev = entry
-    # The stream must terminate with EOI exactly at the pixel count —
-    # a missing terminator or trailing data is malformed, not ignored.
-    # Width-boundary tolerance: the decoder widens one registration
-    # EARLIER than the encoder (it registers one entry behind), so
-    # when the FINAL data code's registration crossed a transition
-    # the writer legitimately emitted EOI at the previous width. Our
-    # own encoder's zero padding makes the wide read see the same
-    # value (EOI's low bits ARE EOI, LSB-first), but a foreign
-    # gray-ramp stream ending byte-aligned right after an old-width
-    # EOI has no padding bit to widen into and was falsely rejected
-    # as truncated — accept EOI at the pre-transition width too.
+    # The stream must terminate with EOI exactly at the pixel count; a
+    # missing terminator or trailing data is malformed. The decoder widens
+    # one registration earlier than the encoder, so when the final data
+    # code's registration crossed a transition the writer legitimately
+    # emitted EOI at the previous width: accept EOI at the pre-transition
+    # width too (a stream ending byte-aligned there has no padding bit to
+    # widen into).
     while nbits < width and pos < len(data):
         acc |= data[pos] << nbits
         pos += 1
@@ -157,13 +150,10 @@ def _lzw_decode(data: bytes, n_pixels: int) -> bytes:
         return bytes(out)
     narrow = width - 1 if widened else width
     if nbits >= narrow and acc & ((1 << narrow) - 1) == _EOI:
-        # Deliberate charity at the boundary: a narrow EOI followed
-        # by a set padding bit is BIT-IDENTICAL to a malformed wide
-        # non-EOI code whose low bits equal EOI (e.g. 10-bit 769).
-        # The spec makes bits after EOI don't-care padding, so the
-        # conforming parse exists and rejecting it would falsely
-        # refuse a legal ones-padding writer; all pixels are already
-        # decoded either way.
+        # A narrow EOI followed by a set padding bit is bit-identical to
+        # a malformed wide non-EOI code whose low bits equal EOI (e.g.
+        # 10-bit 769). Bits after EOI are don't-care padding per spec, so
+        # the conforming parse wins; all pixels are decoded either way.
         return bytes(out)
     if nbits < narrow:
         raise ValueError("gif: LZW stream truncated before EOI")

@@ -14,16 +14,12 @@ available everywhere with identical output, so we derive:
 
 All of these stay inside whole-stage codegen (pure built-ins).
 
-KEY TYPE ENVELOPE: every helper renders the key through a
-cast-to-string, and the engines only agree on that rendering for
-STRING and INTEGER keys. Floating-point keys are OUT: Spark renders
-a double via Java's ``Double.toString`` (``1.0E7``) while DuckDB
-renders the shortest round-trip decimal (``10000000.0``), so the two
-sides would hash different strings and the "shared deterministic"
-noise/split would silently diverge row-by-row. Callers with a
-fractional key must pre-render it themselves (e.g. ``format_number``
-/ ``printf`` with an explicit format on BOTH sides) — never pass a
-raw double/decimal column.
+Key type envelope: every helper renders the key through a cast-to-string,
+and the engines agree on that rendering only for STRING and INTEGER keys.
+Spark renders a double via Java's ``Double.toString`` (``1.0E7``) while
+DuckDB renders the shortest round-trip decimal (``10000000.0``), so callers
+with a fractional key must pre-render it with an explicit format on both
+sides; never pass a raw double/decimal column.
 """
 
 from __future__ import annotations

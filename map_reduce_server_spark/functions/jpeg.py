@@ -1,35 +1,29 @@
 """Pure numpy/stdlib baseline JPEG codec (grayscale + YCbCr color).
 
-The container has no PIL/libjpeg, but baseline JPEG itself is only
-arithmetic: 8x8 DCT, quantization, zigzag, and canonical Huffman
-coding. This module implements the real thing — marker segments
-(SOI/APP0/DQT/SOF0/DHT/SOS/EOI), the spec's Annex K luminance
-Huffman tables, entropy coding with 0xFF00 byte stuffing,
-per-component DC differential prediction, run-length AC coding with
-EOB/ZRL, interleaved MCU scans, the BT.601 RGB<->YCbCr transform,
-forward and inverse DCT — so the JPEG leg of the multimodal
-pipeline can exercise a REAL lossy codec path end to end.
+Baseline JPEG is arithmetic: 8x8 DCT, quantization, zigzag and canonical
+Huffman coding. This module implements marker segments
+(SOI/APP0/DQT/SOF0/DHT/SOS/EOI), the Annex K luminance Huffman tables,
+entropy coding with 0xFF00 byte stuffing, per-component DC differential
+prediction, run-length AC coding with EOB/ZRL, interleaved MCU scans, the
+BT.601 RGB<->YCbCr transform, the forward and inverse DCT, and progressive
+(SOF2) scans.
 
-Scope is honest: baseline sequential, 8-bit, 1 component
-(grayscale) or 3 components (YCbCr color at 4:4:4 or 4:2:0 — the
-near-universal real-world profile; chroma upsampled by sample
-replication on decode), no restart markers, no progressive scans.
-Anything else raises. The decoder honors whatever Huffman/quant
-tables the DHT/DQT segments declare (spec behavior), so it decodes
-any conforming file in scope, not just this encoder's output.
+Scope: 8-bit, 1 component (grayscale) or 3 components (YCbCr at 4:4:4 or
+4:2:0; chroma upsampled by sample replication on decode), no restart
+markers. Anything else raises. The decoder honors whatever Huffman/quant
+tables the DHT/DQT segments declare, so it decodes any conforming file in
+scope, not just this encoder's output.
 
-Exactness contract the oracle twins rely on: with the default UNIT
-quantization table, an image made of FLAT 8x8 blocks round-trips
-bit-exactly — a flat block's DCT is a lone integer DC coefficient
+Exactness contract the oracle twins rely on: with the default unit
+quantization table, an image made of flat 8x8 blocks round-trips
+bit-exactly. A flat block's DCT is a lone integer DC coefficient
 (8*(v-128)); unit quantization preserves it and the IDCT returns the
-constant exactly (float error ~1e-12, far under the 0.5 rounding
-threshold). The same holds through the COLOR pipeline for flat GRAY
-blocks (R=G=B=v maps to Y=v, Cb=Cr=128 exactly — the BT.601 row
-sums are 1, 0, 0). General grayscale content round-trips within
-+/-1 per pixel (pure DCT/IDCT float rounding); general color within
-+/-5 (the YCbCr rounding steps compound through the 1.772 blue
-coefficient: worst case ~|dY| + 1.772*|dCb| + 0.5 ~ 4.2; observed
-max 4).
+constant exactly (float error ~1e-12, far under the 0.5 rounding threshold).
+The same holds through the color pipeline for flat gray blocks (R=G=B=v maps
+to Y=v, Cb=Cr=128 exactly; the BT.601 row sums are 1, 0, 0). General
+grayscale content round-trips within +/-1 per pixel; general color within
++/-5 (the YCbCr rounding steps compound through the 1.772 blue coefficient:
+worst case ~|dY| + 1.772*|dCb| + 0.5 ~ 4.2).
 """
 
 from __future__ import annotations
@@ -798,12 +792,9 @@ def _seq_scan(reader, zz, sof_comps, grids, tabs_for, mcux, mcuy) -> None:
                         b = (my * v + bv) * grids[c][1] + mx * h + bhx
                         cat = _read_symbol(reader, dc_tab)
                         if cat > 15:
-                            # a crafted DHT can map a code to any
-                            # value byte; an unchecked category
-                            # would build a >64-bit amplitude and
-                            # crash the int64 store with an
-                            # OverflowError instead of the decoder's
-                            # ValueError contract
+                            # a crafted DHT can map a code to any value
+                            # byte; an unchecked category would overflow
+                            # the int64 store outside the ValueError contract
                             raise ValueError("DC category exceeds 15")
                         diff = _extend(reader.read_bits(cat), cat)
                         prev_dc[c] += diff

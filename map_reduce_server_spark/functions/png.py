@@ -1,15 +1,9 @@
 """Pure-stdlib PNG codec (encode / decode / nearest-neighbor resize).
 
-The container has no PIL/libvips, but PNG itself needs only zlib and
-struct — so the image half of the multimodal pipeline can exercise a
-REAL codec path: real signature, chunk layout, CRC-32 validation,
-DEFLATE decompression and scanline unfiltering, not a byte-derived
-fake. Scope is honest: 8-bit truecolor RGB (color type 2), ALL five
-scanline filter types 0–4 on decode (the encoder emits 0, but
-externally produced PNGs routinely use Average/Paeth), no
-interlacing. Anything else raises. Every other format the
-multimodal queries decode has its own real codec module alongside
-this one.
+PNG needs only zlib and struct: signature, chunk layout, CRC-32 validation,
+DEFLATE decompression and scanline unfiltering. Scope: 8-bit truecolor RGB
+(color type 2), all five scanline filter types 0–4 on decode (the encoder
+emits 0), no interlacing. Anything else raises.
 """
 
 from __future__ import annotations

@@ -1,17 +1,13 @@
 """Shared gap-based sessionizer (lag → new-session flag → prefix-sum
 session numbers → per-session spans).
 
-Single source for the 30-minute-gap sessionization recurrence that
-q_sessionize (relational.py), q_session_concurrency and
-q_interval_overlap_join (advanced.py) previously each hand-rolled:
-the gap comparison (strictly-greater — a gap of exactly the
-threshold does NOT break the session, matching Spark's native
-``session_window`` exclusive-end semantics pinned by
-``q_session_window``'s oracle) and the (ts, event_id) tie-break are
-now defined once. All builders are driver-side plan constructors
-over the standard events columns (user_id, ts, event_id); the
-single window shuffle on user_id is the whole cost at any scale —
-per-user partitions stay user-sized.
+The one 30-minute-gap sessionization recurrence of q_sessionize
+(relational.py), q_session_concurrency and q_interval_overlap_join
+(advanced.py): the gap comparison is strictly-greater (a gap of exactly the
+threshold does not break the session, matching Spark's native
+``session_window`` exclusive-end semantics pinned by ``q_session_window``'s
+oracle), with a (ts, event_id) tie-break. All builders are plan
+constructors over the standard events columns (user_id, ts, event_id).
 """
 
 from __future__ import annotations

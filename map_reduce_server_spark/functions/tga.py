@@ -1,25 +1,18 @@
 """Pure-stdlib Truevision TGA codec, 8-bit grayscale, RLE.
 
-TGA contributes the one compression family the other image codecs
-don't exercise: BYTE-ORIENTED RUN-LENGTH PACKETS. PNG is DEFLATE
-(LZ77 + Huffman), GIF is LZW, JPEG is entropy coding over DCT
-blocks, TIFF/BMP here are uncompressed — TGA type 11 is a stream of
-1-byte packet headers where bit 7 selects run vs literal and the low
-7 bits carry ``count - 1``, the simplest real compression scheme
-still shipped in production scan/game-asset pipelines. The container
-also carries its own layout quirk: the image-descriptor origin bit
-(0x20) selects TOP-DOWN vs the default BOTTOM-UP row order, and the
-optional 26-byte "TRUEVISION-XFILE." v2 footer trails the pixel
-data, so a decoder that assumes pixels run to EOF mis-sizes the
+TGA type 11 is byte-oriented run-length packets: 1-byte packet headers where
+bit 7 selects run vs literal and the low 7 bits carry ``count - 1``. The
+image-descriptor origin bit (0x20) selects top-down vs the default bottom-up
+row order, and the optional 26-byte "TRUEVISION-XFILE." v2 footer trails the
+pixel data, so a decoder that assumes pixels run to EOF mis-sizes the
 raster.
 
-Scope is honest (grayscale 8-bit): image types 3 (uncompressed
-black-and-white) and 11 (RLE black-and-white), no color map, no id
-field on encode (a present id field is skipped on decode), both
-origin bits. Per spec, RLE packets never cross scan-line boundaries
-— the encoder honors it and the decoder enforces it. Anything else
-raises — the strictness contract shared by every from-spec codec
-here. Spec: Truevision TGA File Format Specification v2.0 (1991).
+Scope (grayscale 8-bit): image types 3 (uncompressed black-and-white) and 11
+(RLE black-and-white), no color map, no id field on encode (a present id
+field is skipped on decode), both origin bits. RLE packets never cross
+scan-line boundaries: the encoder honors it and the decoder enforces it.
+Anything else raises. Spec: Truevision TGA File Format Specification v2.0
+(1991).
 """
 
 from __future__ import annotations

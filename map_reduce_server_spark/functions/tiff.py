@@ -1,21 +1,17 @@
 """Pure-stdlib baseline TIFF codec (8-bit grayscale, strips).
 
-TIFF is the TAG-DIRECTORY container family the other image codecs
-don't exercise: instead of PNG's linear chunk stream or GIF's
-sub-block framing, a TIFF is random-access — a byte-order header, a
-pointer to an Image File Directory of fixed-width sorted tag
-entries, and OFFSET INDIRECTION everywhere (an entry's value lives
-inline only when it fits 4 bytes; otherwise the entry stores a file
-offset, and pixel data is reached through StripOffsets /
-StripByteCounts arrays that are themselves stored out-of-line).
-Both byte orders (II little-endian, MM big-endian) are real TIFF
-and both are handled on decode; the encoder emits either.
+TIFF is the tag-directory container family: a byte-order header, a pointer
+to an Image File Directory of fixed-width sorted tag entries, and offset
+indirection (an entry's value lives inline only when it fits 4 bytes;
+otherwise the entry stores a file offset, and pixel data is reached through
+StripOffsets / StripByteCounts arrays stored out-of-line). Both byte orders
+(II little-endian, MM big-endian) are handled on decode; the encoder emits
+either.
 
-Scope is honest (TIFF 6.0 baseline grayscale): 8-bit single-sample,
-Compression=1 (none), PhotometricInterpretation 0/1, multi-strip.
-Anything else raises — the same strictness contract as the other
-from-spec codecs. Spec: TIFF 6.0 (Adobe, 1992), sections 2 (file
-structure) and 4 (grayscale images).
+Scope (TIFF 6.0 baseline grayscale): 8-bit single-sample, Compression=1
+(none), PhotometricInterpretation 0/1, multi-strip. Anything else raises.
+Spec: TIFF 6.0 (Adobe, 1992), sections 2 (file structure) and 4 (grayscale
+images).
 """
 
 from __future__ import annotations

@@ -1,13 +1,10 @@
 """Shared word tokenizer for the ``documents.text`` column.
 
-One definition of "the tokens of a document" — non-empty tokens of
-the lowercased text split on single spaces — used by the shingle /
-SimHash dedup family, retrieval (BM25), curation, and the relational
-text queries. Their DuckDB oracles all derive from the same
-``SQL_TOKS`` expression, so every Spark side MUST tokenize
-identically; before this module the expression was pasted in seven
-places across five operator modules, held in sync only by
-discipline.
+One definition of "the tokens of a document" (non-empty tokens of the
+lowercased text split on single spaces) used by the shingle / SimHash
+dedup family, retrieval (BM25), curation, and the relational text queries.
+Their DuckDB oracles all derive from the same ``SQL_TOKS`` expression, so
+every Spark side must tokenize identically.
 
 CHARACTER ENVELOPE: the twins agree on any text whose lowercase
 mapping is one-to-one and context-free — all ASCII, and verified

@@ -1,12 +1,8 @@
 """Real WAV (RIFF PCM) audio codec via the Python stdlib.
 
-The container has no librosa/soundfile, but WAV needs only the
-stdlib ``wave`` module plus ``struct`` — so the audio half of the
-multimodal pipeline can exercise a REAL codec path too: real RIFF
-header, fmt/data chunks, frame accounting, 16-bit little-endian PCM
-unpacking. Scope is honest: mono 16-bit PCM (what the synthetic
-corpus produces); anything else raises. Perceptual audio (mp3/ogg)
-is out of scope.
+WAV needs only the stdlib ``wave`` module plus ``struct``: RIFF header,
+fmt/data chunks, frame accounting, 16-bit little-endian PCM unpacking.
+Scope: mono 16-bit PCM; anything else raises.
 """
 
 from __future__ import annotations

@@ -1,13 +1,10 @@
 """Deferred cleanup for query-scoped temp directories.
 
 Queries that stage data through a local temp directory (connector
-round-trips, foreachBatch delta sinks, partitioned-layout demos) must
-NOT delete the directory while the DataFrame they return is alive:
-``cache() + count() + rmtree`` only works until a cached block is
-evicted or an executor is lost, after which recomputation re-reads
-the deleted path and fails. Registering the directory here keeps the
-returned DataFrame recomputable for the caller's whole lifetime and
-removes the backing files at interpreter exit instead.
+round-trips, foreachBatch sinks, partitioned layouts) must not delete it
+while the DataFrame they return is alive: a recomputation after a cached
+block is evicted or an executor is lost re-reads the path. Registered
+directories are removed at interpreter exit instead.
 """
 
 from __future__ import annotations

@@ -1,24 +1,16 @@
 """Z-order (Morton) data layout for multi-dimensional scan pruning.
 
-The reference has no storage layout control at all (its sort task
-orders lines inside one output file, reference ``master/__main__.py``
-sort stage); this is the engine's answer to the lakehouse
-``OPTIMIZE ... ZORDER BY (a, b, ...)``: rewrite a table so parquet
-file-level min/max statistics stay TIGHT on several filter
-dimensions at once. A layout range-partitioned on interleaved key
-bits gives every file a small axis-aligned box of the key space, so
-a point or range predicate on ANY of the keys prunes all but
-~n_files^((k-1)/k) files — a single-column sort gives perfect
-pruning on that column and NO pruning on the others.
+The reference has no storage layout control (its sort task orders lines
+inside one output file). This is the engine's ``OPTIMIZE ... ZORDER BY
+(a, b, ...)``: rewrite a table so parquet file-level min/max statistics
+stay tight on several filter dimensions at once. A layout range-partitioned
+on interleaved key bits gives every file a small axis-aligned box of the
+key space, so a point or range predicate on any of the keys prunes all but
+~n_files^((k-1)/k) files, where a single-column sort prunes only on that
+column (docs/SCALING.md, Z-order layout).
 
-At 100 TB this is the difference between "dimension-two queries scan
-the whole table" and "every query scans a root of the files": the
-rewrite is one repartitionByRange + per-partition sort (one shuffle,
-no driver data path), then pruning is free forever after — Spark's
-parquet reader consults footer min/max before reading row groups.
-
-Everything stays in whole-stage codegen: the z-value is a fixed
-unrolled chain of shift/and/or expressions, no UDF.
+The z-value is a fixed unrolled chain of shift/and/or expressions in
+whole-stage codegen, no UDF.
 """
 
 from __future__ import annotations
@@ -43,24 +35,18 @@ def z_value_n(cols: list[Column | str], bits: int = 16) -> Column:
         raise ValueError("zorder: need at least one column")
     if bits < 1 or k * bits > 63:
         # (bits-1)*k + (k-1) = k*bits - 1 is the highest bit position
-        # used, so k*bits = 63 tops out at position 62 (max z =
-        # 2^63-1, still positive) and is the last safe config;
-        # k*bits = 64 puts the last key's top bit on the long SIGN
-        # bit (rows with large last-key values would sort FIRST,
-        # splitting the keyspace), and beyond that Java shift counts
-        # wrap mod 64 and alias distant keys — both silently destroy
-        # the layout
+        # used, so k*bits = 63 tops out at position 62 (max z = 2^63-1)
+        # and is the last safe config; k*bits = 64 puts the last key's
+        # top bit on the long sign bit, and beyond that Java shift counts
+        # wrap mod 64 and alias distant keys
         raise ValueError(
             f"zorder: k*bits must be in [1, 63], got {k}*{bits}"
         )
     cs = [F.col(c) if isinstance(c, str) else c for c in cols]
     limit = 1 << bits
-    # interleave over the RAW columns, then wrap the range check
-    # around the finished expression ONCE per column — checking
-    # inside the bit loop would paste the guard CASE into all
-    # k*bits terms of the unrolled chain (the guard branch wins
-    # before any garbage interleave of an out-of-range value could
-    # be returned)
+    # interleave over the raw columns, then wrap the range check around
+    # the finished expression once per column: inside the bit loop the
+    # guard CASE would be pasted into all k*bits terms of the chain
     z = F.lit(0).cast("long")
     for j, c in enumerate(cs):
         cl = c.cast("long")
@@ -69,16 +55,12 @@ def z_value_n(cols: list[Column | str], bits: int = 16) -> Column:
             z = z.bitwiseOR(F.shiftleft(bit, i * k + j))
     out = z
     for j, c in reversed(list(enumerate(cs))):
-        # NULL is outside [0, 2^bits) too: a bare (c < 0) predicate
-        # is NULL for NULL input and when() would fall through to
-        # the interleave, silently clustering all NULL-key rows
-        # instead of failing loudly as documented. The c != cast
-        # term catches fractional doubles the same way: the
-        # interleave consumes cast('long'), so 15.9 passing a
-        # raw-value range check would silently alias onto 15's
-        # z-value — exactly the truncation this guard exists to
-        # forbid. (NaN is caught by c >= limit: Spark orders NaN
-        # above every value.)
+        # NULL is outside [0, 2^bits) too: a bare (c < 0) predicate is
+        # NULL for NULL input and when() would fall through to the
+        # interleave. The c != cast term catches fractional doubles: the
+        # interleave consumes cast('long'), so 15.9 would alias onto 15's
+        # z-value. (NaN is caught by c >= limit: Spark orders NaN above
+        # every value.)
         out = F.when(
             c.isNull()
             | (c < 0)
@@ -109,20 +91,15 @@ def uniform_bucket(
 ) -> Column:
     """Map a continuous column into the [0, 2^bits) key domain
     :func:`z_value_n` requires: linear bucketing over a caller-known
-    [lo, hi] envelope, CLAMPED at both ends so out-of-envelope
-    values degrade to edge buckets instead of failing the layout
-    write (stale min/max stats on a growing table must not abort a
-    rewrite — the clamp only loosens pruning for the clamped rows).
-    NULLs stay NULL and therefore still fail loudly inside
-    :func:`z_value_n`: a layout key must exist for every row.
+    [lo, hi] envelope, clamped at both ends so out-of-envelope values
+    degrade to edge buckets instead of failing the layout write. NULLs
+    stay NULL and therefore still fail inside :func:`z_value_n`: a layout
+    key must exist for every row.
 
-    This is deliberately NOT quantile bucketing: uniform buckets
-    keep the bucket function stateless and identical across rewrite
-    runs (a quantile-based key would shift every row's bucket when
-    the distribution drifts, making incremental re-layout
-    non-idempotent). Skewed columns get coarser effective pruning on
-    their dense range — pass a tighter [lo, hi] envelope for that
-    range if it matters.
+    Uniform, not quantile, buckets keep the bucket function stateless and
+    identical across rewrite runs, so incremental re-layout stays
+    idempotent when the distribution drifts. For a skewed column, pass a
+    tighter [lo, hi] envelope for its dense range.
     """
     if not hi > lo:
         raise ValueError("zorder: bucket envelope needs hi > lo")
@@ -150,12 +127,10 @@ def write_zordered(
     """Rewrite ``df`` as ``n_files`` parquet files range-partitioned
     and internally sorted by the Morton code of ``cols``.
 
-    One shuffle (the range exchange samples boundaries, then each
-    task sorts its slice); the z column is dropped before the write
-    so the stored schema is unchanged. File counts are the caller's
-    scale decision: pick ``n_files`` so each file lands near the
-    cluster's target file size (e.g. 1 GiB) — pruning efficiency is
-    ~n_files^((k-1)/k) files touched per single-dimension predicate.
+    One shuffle (the range exchange samples boundaries, then each task
+    sorts its slice); the z column is dropped before the write so the
+    stored schema is unchanged. Pick ``n_files`` for the target file size;
+    a single-dimension predicate touches ~n_files^((k-1)/k) files.
     """
     if n_files < 1:
         raise ValueError("zorder: n_files must be >= 1")

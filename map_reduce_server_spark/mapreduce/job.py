@@ -18,30 +18,20 @@ Reference pipeline (``master/__main__.py:220-467``):
    executable; copy outputs to ``outputfile{NN}``
    (``master/__main__.py:448-467``).
 
-Spark mapping: the map stage distributes the FILE LIST, not the file
-bytes — each map task opens its dealt files and streams the raw
-bytes through one mapper subprocess per file, exactly as a reference
-worker does (and with the same shared-filesystem assumption the
-reference's master/worker split makes). (3)+(4) are one
-``repartitionAndSortWithinPartitions`` with a partitioner keyed by
-the dense rank of the line, and the rank comes from the reference's
-own single ordered walk: the distinct lines are sorted in ONE
-partition and numbered in that order (``group_partition``). A
-façade job is therefore one Spark job — the write job — with no
-line data through the driver. (5) is one task per reducer partition
-that points the reducer's stdout at its own ``outputfile{NN}``
-(``io.sinks.write_numbered_text``). Spark's scheduler/shuffle/retries
-subsume the reference's entire control plane (SURVEY.md §2.C).
-
-Scale note: shipping paths instead of contents means the job's input
-bytes are read exactly once, inside the mapper task that consumes
-them — there is NO pre-mapper shuffle of the corpus (an earlier
-revision scanned the directory into an RDD and shuffled every input
-line to its mapper task; at 100 TB that is a 100 TB shuffle for zero
-semantic effect). The trade-off is Hadoop data locality — irrelevant
-here because the façade's contract is the reference's: a POSIX
-directory listing (``os.listdir``) on a filesystem every worker can
-open, not an HDFS-aware scan.
+Spark mapping: the map stage distributes the file list, not the file
+bytes; each map task opens its dealt files and streams the raw bytes
+through one mapper subprocess per file, as a reference worker does (with
+the reference's shared-filesystem assumption). (3)+(4) are one
+``repartitionAndSortWithinPartitions`` with a partitioner keyed by the
+dense rank of the line, and the rank comes from the reference's own
+single ordered walk: the distinct lines are sorted in one partition and
+numbered in that order (``group_partition``). A façade job is one Spark
+job, the write job, with no line data through the driver. (5) is one task
+per reducer partition that points the reducer's stdout at its own
+``outputfile{NN}`` (``io.sinks.write_numbered_text``). Spark's scheduler,
+shuffle and retries subsume the reference's control plane (SURVEY.md
+§2.C). Input bytes are read once, inside the mapper task that consumes
+them (docs/SCALING.md, MapReduce façade).
 """
 
 from __future__ import annotations
@@ -70,12 +60,9 @@ class MapReduceJob:
 
 
 def run_jobs(spark: SparkSession, jobs: list[MapReduceJob]) -> list[list[str]]:
-    """FIFO multi-job queue parity (reference holds queued jobs and
-    runs one at a time: ``master/__main__.py:209-218``, verified by
-    its ``tests/test_master_04.py``). On Spark this is a sequential
-    driver loop — each job's stages still run fully parallel inside
-    the cluster; use Spark FAIR scheduler pools if concurrent jobs
-    are ever wanted.
+    """FIFO multi-job queue parity: the reference holds queued jobs and
+    runs one at a time (``master/__main__.py:209-218``, verified by its
+    ``tests/test_master_04.py``). Here a sequential driver loop.
     """
     return [run_job(spark, job) for job in jobs]
 
@@ -147,17 +134,12 @@ def _mapped_lines(
     - one subprocess per FILE, concurrency bounded by
       ``num_mappers``, file order within a task = dealing order.
 
-    Driver cost is O(1) plan objects at any file count; each task
-    carries only its path list. Mapper OUTPUT lines stay raw
-    ``bytes`` — the group stage sorts/compares them directly, which
-    IS the reference's whole-line byte sort, so an identity mapper
-    over non-UTF-8 input (``cat`` on a binary file) flows through
-    map/sort/group/reduce exactly as the reference's byte-oriented
-    pipeline does, all the way into the reducer's output file.
-
-    A listed file that cannot be opened fails the task loudly — the
-    scan-skips-a-file failure mode of input-format-based ingestion
-    cannot occur, because there is no input format.
+    Driver cost is O(1) plan objects at any file count; each task carries
+    only its path list. Mapper output lines stay raw ``bytes``: the group
+    stage sorts and compares them directly, which is the reference's
+    whole-line byte sort, so an identity mapper over non-UTF-8 input
+    flows through map/sort/group/reduce into the reducer's output file
+    unchanged. A listed file that cannot be opened fails the task.
     """
     sc = spark.sparkContext
     cmd = shlex.split(mapper)
@@ -235,12 +217,11 @@ def group_partition(mapped, num_reducers: int):
     a job of its own (no range-bound sample, no per-partition count),
     so the whole group stage runs inside the write job.
 
-    Trade-off: one task sorts every distinct line. Its memory stays
-    bounded because PySpark's ``ExternalSorter`` spills to disk, but
-    its time grows with the number of distinct lines — the reference's
-    own design, whose master merges and walks the sorted runs alone.
-    Duplicates are re-expanded only AFTER the final partition-local
-    sort.
+    One task sorts every distinct line: its memory stays bounded because
+    PySpark's ``ExternalSorter`` spills to disk, and its time grows with
+    the number of distinct lines, as in the reference, whose master merges
+    and walks the sorted runs alone. Duplicates are re-expanded only after
+    the final partition-local sort.
     """
     counts = mapped.map(lambda line: (line, 1)).reduceByKey(
         lambda a, b: a + b

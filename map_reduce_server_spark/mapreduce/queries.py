@@ -1,11 +1,10 @@
-"""Oracle-checked queries that run THROUGH the MapReduce façade.
+"""Oracle-checked queries that run through the MapReduce façade.
 
-These exercise the reference's full end-to-end path (text dir →
-pipe(mapper) → sort/group-partition → pipe(reducer) → outputfileNN)
-and check the result against plain SQL — the strongest parity
-evidence available: the façade's output must equal the relational
-answer for the reference's two canonical workloads
-(``tests/test_integration_01.py`` / ``_02.py`` semantics).
+They exercise the reference's end-to-end path (text dir → mapper →
+sort/group-partition → reducer → outputfileNN) and check the result against
+plain SQL: the façade's output must equal the relational answer for the
+reference's two canonical workloads (``tests/test_integration_01.py`` /
+``_02.py`` semantics).
 """
 
 from __future__ import annotations
@@ -44,10 +43,9 @@ def _documents_as_text_dir(spark: SparkSession, sf_dir: str, dest: str) -> str:
     return dest
 
 
-# Staged input dirs, one per sf_dir, reused for the life of the
-# process: converting parquet→text is fixture setup (the reference's
-# users already HAVE text directories), not engine work, so it must
-# not be re-done — or timed — per query run.
+# Staged input dirs, one per sf_dir, reused for the life of the process:
+# converting parquet→text is fixture setup, not engine work, so it is not
+# redone (or timed) per query run.
 _STAGED_INPUT: dict[str, str] = {}
 
 
@@ -127,14 +125,12 @@ def mr_grep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grep through the full MapReduce façade; must equal the
     relational filter.
 
-    The oracle replays the EXECUTABLES' semantics, not an idealized
-    filter: grep_map strips whitespace from both line edges (Python
-    ``str.strip()``, approximated here as the ASCII whitespace set —
-    the corpus contract is spaces/tabs only) and skips blank lines,
-    and grep_reduce drops any line whose ``split('\\t')`` is not
-    exactly two fields — so a line containing an INTERNAL tab never
-    reaches the output, exactly as in the reference's grep_reduce
-    (its ``tests/testdata/exec/grep_reduce.py:14-27``).
+    The oracle replays the executables' semantics: grep_map strips
+    whitespace from both line edges (Python ``str.strip()``, approximated
+    as the ASCII whitespace set; the corpus has spaces/tabs only) and skips
+    blank lines, and grep_reduce drops any line whose ``split('\\t')`` is
+    not exactly two fields, so a line with an internal tab never reaches
+    the output (reference ``tests/testdata/exec/grep_reduce.py:14-27``).
     """
     out = _run_facade(spark, sf_dir, "grep_map.py", "grep_reduce.py")
     return out.select(F.col("value").alias("text"))

@@ -1,11 +1,9 @@
-"""Advanced operators: as-of join, grouping sets, exact statistical
-moments, percentiles, positional aggregates, approximate sketches,
-and file-format connector round-trips.
+"""Advanced operators: as-of join, grouping sets, exact statistical moments,
+percentiles, positional aggregates, approximate sketches, and file-format
+connector round-trips.
 
-None of these exist in the reference (SURVEY.md §2.D — its only
-aggregate is ``uniq -c`` in a reducer executable); they complete the
-engine surface a user would expect after switching from the
-reference + the north-star extension list.
+None of these exist in the reference (SURVEY.md §2.D: its only aggregate is
+``uniq -c`` in a reducer executable).
 """
 
 from __future__ import annotations
@@ -48,15 +46,11 @@ from map_reduce_server_spark.tables import load_table
     """,
 )
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: for every event, the most recent (≤ ts) error
-    timestamp of the same user.
+    """As-of join: for every event, the most recent (<= ts) error timestamp of
+    the same user.
 
-    Spark lacks a native ASOF JOIN; the scalable formulation is a
-    single window pass — carry the last non-null error timestamp
-    forward within each user's time-ordered partition. One shuffle
-    on user_id, no join at all: strictly better than the
-    sort-merge-join + filter + re-aggregate alternative, and it
-    scales to any corpus where one user's history fits a partition.
+    Spark has no ASOF JOIN; this is one window pass that carries the last error
+    timestamp forward within each user's time-ordered partition, with no join.
     """
     ev = load_table(spark, sf_dir, "events")
     # RANGE frame + MAX, not last() over a row frame: the as-of match
@@ -70,12 +64,9 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rangeBetween(Window.unboundedPreceding, Window.currentRow)
     )
     err_ts = F.when(F.col("event_type") == "error", F.col("ts"))
-    # NULL-key guard: the oracle's ASOF condition `e.user_id =
-    # x.user_id` never matches a NULL key, while a Spark window
-    # groups NULL user_ids into one partition and would carry a
-    # NULL-user error across them. Current testdata has no NULL
-    # user_ids (checked at all SFs), but the twin must not depend
-    # on that staying true.
+    # NULL-key guard: the oracle's ASOF condition `e.user_id = x.user_id`
+    # never matches a NULL key, while a Spark window groups NULL user_ids
+    # into one partition and would carry a NULL-user error across them.
     return ev.select(
         "event_id",
         "user_id",
@@ -86,7 +77,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for q_asof_join_forward below (registered round 13).
+# Oracle for q_asof_join_forward below.
 _ASOF_FWD_ORACLE = """
 SELECT e.event_id, e.user_id, e.ts, x.ts AS next_purchase_ts
 FROM events e
@@ -98,16 +89,12 @@ ASOF LEFT JOIN (SELECT user_id, ts FROM events
 
 @register("q_asof_join_forward", oracle=_ASOF_FWD_ORACLE)
 def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FORWARD as-of join: for every event, the EARLIEST (>= ts)
-    purchase timestamp of the same user — the time-to-conversion
-    primitive (q_asof_join's mirror; the round-12 as-of fuzz
-    exercises both directions against DuckDB's native ASOF JOIN).
+    """Forward as-of join: for every event, the earliest (>= ts) purchase
+    timestamp of the same user, the time-to-conversion primitive and
+    q_asof_join's mirror.
 
-    Same single-window-pass scale shape as the backward query: MIN
-    over the (currentRow, unboundedFollowing) RANGE frame — one
-    shuffle on user_id, no join, ties at the same ts included
-    exactly as ASOF's ``e.ts <= x.ts`` includes them. Staged in
-    round 12, registered round 13.
+    MIN over the (currentRow, unboundedFollowing) RANGE frame; ties at the same
+    ts are included exactly as ASOF's ``e.ts <= x.ts`` includes them.
     """
     ev = load_table(spark, sf_dir, "events")
     w = (
@@ -142,12 +129,10 @@ def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS with grouping indicators.
 
-    Optimization: GROUPING SETS expands every input row once per set
-    (4× here) *before* aggregating — at 100 TB that's 4× the shuffle.
-    Since the measures are associative (count + exact decimal sum),
-    we pre-aggregate to the finest grain (returnflag × linestatus —
-    a handful of rows) and run the expand over that, making the
-    expansion cost negligible while producing identical values.
+    GROUPING SETS expands every input row once per set before aggregating. The
+    measures are associative (count + exact decimal sum), so the expand runs
+    over a pre-aggregate at the finest grain (returnflag x linestatus) and
+    produces identical values.
     """
     li = load_table(spark, sf_dir, "lineitem")
     # Pre-aggregate in the DataFrame API so the decimal cast goes
@@ -176,9 +161,8 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for q_rollup_multi_distinct below (registered round 13). Two
-# grid-specific recipe rules apply (both pinned in
-# tests/test_engine_portability_pins.py):
+# Oracle for q_rollup_multi_distinct below. Two grid-specific recipe
+# rules apply (both pinned in tests/test_engine_portability_pins.py):
 # - the ordered string agg must be order-insensitive BY CONSTRUCTION
 #   (list_sort OUTSIDE the aggregate) because DuckDB 1.0 drops
 #   string_agg's ORDER BY on multi-key-grid subtotal rows;
@@ -199,24 +183,14 @@ GROUP BY ROLLUP(o_orderstatus)
 
 @register("q_rollup_multi_distinct", oracle=_ROLLUP_MD_ORACLE)
 def q_rollup_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rollup grid with MULTIPLE distinct aggregates plus an ordered
-    distinct string agg — the exact plan family where the round-12
-    differential fuzz found an upstream Spark 4.1.2 optimizer crash
-    (native ``listagg WITHIN GROUP`` + >= 2 distincts ->
-    ``RewriteDistinctAggregates`` ClassCastException): this query
-    pins the engine's PORTABLE renderings of that surface as a gate
-    query. ``collect_set`` -> ``array_sort`` -> ``concat_ws`` is the
-    crash-free ordered string agg; the grid oracle sorts OUTSIDE the
-    aggregate (see ``_ROLLUP_MD_ORACLE``).
+    """Rollup grid with multiple distinct aggregates plus an ordered distinct
+    string agg.
 
-    Scale shape: Spark plans this as Expand(rollup levels = 2) then
-    Expand(distinct groups + 1 = 3) — a 6x row multiplier BEFORE
-    partial aggregation. That is the right trade here because the
-    expansion keys are tiny (3 statuses x 5 priorities x custkey)
-    and partial aggregation collapses map-side; for high-cardinality
-    grids, pre-reduce like :func:`q_grouping_sets` does — distinct
-    (keys, target) tuples first, then the grid over the deduped
-    table. Staged in round 12, registered round 13.
+    Native ``listagg WITHIN GROUP`` with >= 2 distincts crashes Spark 4.1.2's
+    ``RewriteDistinctAggregates`` (ClassCastException), so this query pins the
+    portable rendering: ``collect_set`` -> ``array_sort`` -> ``concat_ws``,
+    with the grid oracle sorting outside the aggregate (see
+    ``_ROLLUP_MD_ORACLE``).
     """
     o = load_table(spark, sf_dir, "orders")
     return o.rollup("o_orderstatus").agg(
@@ -250,11 +224,10 @@ def q_rollup_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean/stddev from exact decimal power sums.
 
-    Built-in ``stddev`` accumulates doubles in shuffle order →
-    non-reproducible bits across engines AND across runs at scale.
-    Power sums in decimal are associative, so this form is
-    deterministic on any cluster layout; the double arithmetic on
-    the already-exact sums is then bit-identical everywhere.
+    Built-in ``stddev`` accumulates doubles in shuffle order, so its bits
+    depend on the engine and the partitioning. Decimal power sums are
+    associative; the double arithmetic on the exact sums is then bit-identical
+    everywhere.
     """
     li = load_table(spark, sf_dir, "lineitem")
     s = li.groupBy("l_returnflag").agg(
@@ -328,9 +301,10 @@ def q_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic list aggregation: collect → sort → join to CSV
-    (collect_list order is nondeterministic under parallelism, so the
-    sort is what makes this reproducible at scale)."""
+    """Deterministic list aggregation: collect -> sort -> join to CSV
+    (collect_list order is nondeterministic under parallelism; the sort makes
+    it reproducible).
+    """
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 9000)
     return cust.groupBy("c_nationkey").agg(
         F.concat_ws(
@@ -390,11 +364,9 @@ def q_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE/upsert without a lakehouse format: updates ∪
-    (base ANTI JOIN updates) — the CDC-apply pattern. At 100 TB both
-    sides shuffle once on the key (or zero times if base is bucketed
-    on it); with Delta/Iceberg on the classpath this becomes MERGE
-    INTO (see docs/LAKEHOUSE.md)."""
+    """MERGE/upsert without a lakehouse format: updates ∪ (base ANTI JOIN
+    updates), the CDC-apply pattern (see docs/LAKEHOUSE.md).
+    """
     cust = load_table(spark, sf_dir, "customer")
     updates = cust.filter(F.col("c_custkey") % 10 == 0).withColumn(
         "c_acctbal", F.round(F.col("c_acctbal") + 1000.0, 2)
@@ -416,14 +388,10 @@ def q_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fact-to-fact join through BUCKETED tables: both sides are
-    written ``bucketBy(8, orderkey)``/``sortBy`` once, after which
-    every join on the key is exchange-free (bucket co-location
-    replaces the per-query shuffle — pay the shuffle once at write
-    time, the decisive layout for repeated 100 TB fact joins;
-    no-Exchange plan pinned in tests/test_bucketing.py). Results are
-    identical to the plain join, which is exactly what the oracle
-    checks.
+    """Fact-to-fact join through bucketed tables: both sides are written
+    ``bucketBy(8, orderkey)``/``sortBy`` once, after which every join on the
+    key is exchange-free (no-Exchange plan pinned in tests/test_bucketing.py).
+    Results equal the plain join, which is what the oracle checks.
     """
     out = tempfile.mkdtemp(prefix="mrss_bucketed_")
     cleanup_at_exit(out)  # keep the bucketed files until the DF is dead
@@ -503,10 +471,10 @@ def q_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-filling over a generated date spine: every month in the
-    range appears, zero-filled where no orders exist (reporting
-    pattern; the spine is generated with ``sequence`` — rows are
-    born distributed, no driver loop)."""
+    """Gap-filling over a generated date spine: every month in the range
+    appears, zero-filled where no orders exist. The spine is generated with
+    ``sequence``, not a driver loop.
+    """
     orders = load_table(spark, sf_dir, "orders")
     months = spark.range(1).select(
         F.explode(
@@ -548,15 +516,12 @@ def q_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Percent-of-total: per-segment revenue share.
 
-    Scale note: a windowed ``sum() OVER ()`` would funnel everything
-    through one partition; instead the grand total is a 1-row
-    aggregate of the (tiny) per-segment result, broadcast back — no
-    single-partition bottleneck at any scale.
+    The grand total is a 1-row aggregate of the per-segment result, broadcast
+    back, not a windowed ``sum() OVER ()`` (which would run in one partition).
     """
     orders = load_table(spark, sf_dir, "orders")
-    # No broadcast hint on customer: it is SF-linear (150k rows x
-    # SF; broadcast policy in tables.py) — AQE broadcasts at small
-    # SF and shuffle-joins when customer outgrows the threshold.
+    # No broadcast hint on customer: it is SF-linear (broadcast policy in
+    # tables.py); AQE decides from runtime sizes.
     cust = load_table(spark, sf_dir, "customer")
     per_seg = (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
@@ -638,9 +603,9 @@ def q_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram binning (floor-division bucketing — the
-    portable form of width_bucket, and the same partial-aggregable
-    shape at any scale)."""
+    """Fixed-width histogram binning (floor-division bucketing, the portable
+    form of width_bucket).
+    """
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy(
@@ -666,28 +631,21 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct (HyperLogLog++) + percentile_approx
-    (KLL-style) — the constant-memory cardinality/quantile path for
-    100 TB where exact DISTINCT/percentile would shuffle everything.
+    """approx_count_distinct (HyperLogLog++) + percentile_approx (KLL-style):
+    constant-memory cardinality and quantiles.
 
-    Sketch values are engine-specific, so they cannot be
-    hash-compared across engines; the verifiable claims are their
-    ERROR BOUNDS. The query returns exact references plus boolean
-    bound checks — ``|approx_cd - exact| <= 3·rsd·exact`` (3σ of the
-    HLL++ estimator) and ``percentile_approx`` within the exact
-    [0.499, 0.501]-quantile envelope (10× the 1/accuracy=1e-4 rank
-    error) — and the oracle asserts the same exact values with
-    literal TRUE bounds. Unverified ≠ unverifiable.
+    Sketch values are engine-specific, so they cannot be hash-compared across
+    engines; the verifiable claims are their error bounds. The query returns
+    exact references plus boolean bound checks: ``|approx_cd - exact| <=
+    3·rsd·exact`` (3σ of the HLL++ estimator) and ``percentile_approx`` within
+    the exact [0.499, 0.501]-quantile envelope (10x the 1/accuracy=1e-4 rank
+    error). The oracle asserts the same exact values with literal TRUE bounds.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # The exact COUNT(DISTINCT) runs as its OWN aggregate and joins
-    # back on the 3-row group key (round 15, measured): mixing one
-    # DISTINCT aggregate with the percentile aggregates makes the
-    # distinct rewrite evaluate every non-distinct aggregate's
-    # partial per (l_returnflag, l_partkey) pair — ~200k growing
-    # percentile value buffers merged per group — 18-25 s at sf0.1
-    # where the two split aggregates take ~1.5 s combined. Values
-    # are identical; only the aggregation plan changes.
+    # The exact COUNT(DISTINCT) runs as its own aggregate and joins back on the
+    # 3-row group key: mixed with the percentile aggregates, the distinct
+    # rewrite would evaluate every percentile partial per (l_returnflag,
+    # l_partkey) pair. Values are identical either way.
     exact_cd = li.groupBy("l_returnflag").agg(
         F.count_distinct("l_partkey").alias("exact_parts")
     )
@@ -714,9 +672,6 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("apx_med") <= F.col("med_hi"))
         ).alias("median_within_rank_bound"),
     )
-
-
-# --- connector round-trips --------------------------------------------------
 
 
 def _roundtrip(
@@ -819,18 +774,15 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC changelog application — the engine-level core of a MERGE /
-    lakehouse upsert-delete (docs/LAKEHOUSE.md): given an ordered
-    stream of Update/Delete ops per key, the latest op wins; keys
-    whose latest op is a delete drop out of the snapshot.
+    """CDC changelog application, the engine-level core of a MERGE / lakehouse
+    upsert-delete (docs/LAKEHOUSE.md): given an ordered stream of Update/Delete
+    ops per key, the latest op wins; keys whose latest op is a delete drop out
+    of the snapshot.
 
-    One window pass over the changelog (ordered by event time with a
-    unique sequence tie-break — engine-independent winner), then one
-    join against the snapshot. At 100 TB the changelog shuffles once
-    on key; the snapshot join is the same shuffle, so AQE can reuse
-    the exchange. The changelog here is synthesized deterministically
-    from ``orders`` (every 19th order a delete) so the oracle replays
-    it exactly.
+    The changelog window orders by event time with a unique sequence tie-break,
+    so the winner is engine-independent. The changelog is synthesized
+    deterministically from ``orders`` (every 19th order a delete) so the oracle
+    replays it exactly.
     """
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -877,17 +829,13 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical time rollup (the hypertable continuous-aggregate
-    cascade): hour → day → month, where each coarser grain is
-    aggregated FROM the next finer one, never from raw events.
+    """Hierarchical time rollup (the continuous-aggregate cascade): hour -> day
+    -> month, where each coarser grain is aggregated from the next finer one,
+    never from raw events.
 
-    The raw table is scanned once (hourly grain); day sums hourly
-    rows (24× fewer), month sums daily rows — at 100 TB the cascade
-    aggregates ~1/24th then ~1/30th of the previous level instead of
-    rescanning the fact three times like the oracle's UNION ALL. The
-    sums stay DECIMAL through the cascade (associative → identical to
-    direct aggregation, which is exactly what the oracle computes)
-    and are cast to double only at the output edge.
+    The sums stay DECIMAL through the cascade (associative, so equal to the
+    oracle's direct aggregation) and are cast to double only at the output
+    edge.
     """
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("bucket"),
@@ -945,16 +893,14 @@ def q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Funnel analysis (sequence detection): how far does each user
-    get through signup → click → view → purchase, where stages must
-    occur in event-time order but arbitrary events may interleave?
+    """Funnel analysis: how far does each user get through signup -> click ->
+    view -> purchase, where stages must occur in event-time order but other
+    events may interleave?
 
-    Each user's event-type sequence (time-ordered with the unique
-    event_id tie-break) is compacted to a one-char-per-event string,
-    and funnel membership is a subsequence regex — the MATCH_RECOGNIZE
-    pattern expressed portably. One shuffle on user_id; the per-user
-    string is bounded by the user's event count, and the regexes run
-    JVM-side inside codegen.
+    Each user's event-type sequence (time-ordered with the unique event_id
+    tie-break) is compacted to a one-char-per-event string, and funnel
+    membership is a subsequence regex: the MATCH_RECOGNIZE pattern expressed
+    portably.
     """
     # NULL-ts guard shared with the oracle's WHERE: Spark sorts
     # NULLS FIRST, DuckDB NULLS LAST, so an unfiltered NULL-ts event
@@ -1019,13 +965,11 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands: per-user activity streaks (runs of
-    consecutive active days). The classic trick — day_number minus
-    row_number is constant within a consecutive run — turns streak
-    detection into a plain groupBy, no self-join or iteration.
-    Day numbers are integer epoch-days so both engines bucket
-    identically; one shuffle on user_id serves the distinct, the
-    window, and both aggregations (same key throughout)."""
+    """Gaps-and-islands: per-user activity streaks (runs of consecutive active
+    days). day_number minus row_number is constant within a consecutive run, so
+    streak detection is a plain groupBy. Day numbers are integer epoch-days so
+    both engines bucket identically.
+    """
     ev = load_table(spark, sf_dir, "events")
     # Pure epoch arithmetic (not date_trunc): day bucketing must not
     # depend on the session timezone — the grading driver's vanilla
@@ -1066,12 +1010,10 @@ def q_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix: users grouped by first-activity week,
-    counted in each subsequent week they return — the standard
-    retention triangle. One shuffle on user_id serves the distinct,
-    the cohort-min window, and the count rides the (already tiny)
-    cohort×offset key. Week bucketing is pure epoch arithmetic
-    (timezone-independent)."""
+    """Cohort retention matrix: users grouped by first-activity week, counted
+    in each later week they return. Week bucketing is pure epoch arithmetic
+    (timezone-independent).
+    """
     ev = load_table(spark, sf_dir, "events")
     weeks = ev.select(
         "user_id",
@@ -1118,27 +1060,17 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth (≈equal-count) histogram over order values, built
-    the way a 100 TB engine has to build it: boundaries come from a
-    DETERMINISTIC COUNT-BOUNDED hash sample — the gate is
-    ``md5(o_orderkey) % greatest(1, n div 10000) == 0`` with n from a
-    cheap broadcast 1-row count aggregate, so the expected sample
-    stays under 20k rows whenever n ≥ 20k (worst case just below a
-    gate step) and is the — already tiny — table itself below that:
-    bounded in ABSOLUTE terms at any corpus size, where a fixed-rate
-    sample would be 2 TB of a 100 TB table through one sort task.
-    Only that bounded sample is ranked (the same trick a
-    range-partitioner's sampler uses), the 9 boundary (price, key)
-    pairs at positions floor(i·m/10) are folded into a single
-    broadcast array row, and every row buckets itself with a codegen
-    ``size(filter(...))`` over that array — full-table work is one
-    count + one scan + one 10-key aggregate, NO global sort of the
-    table. The integer hash gate (not TABLESAMPLE) is mirrored in the
-    DuckDB oracle so both engines' boundaries are bit-identical and
-    the oracle value-checks the whole pipeline. Boundary ties break
-    on the unique o_orderkey, making bucket assignment
-    total-order-stable on every engine. The NTILE-exact profiling
-    twin lives at ``q_equidepth_histogram_exact``."""
+    """Equi-depth (≈equal-count) histogram over order values with boundaries
+    from a deterministic, count-bounded hash sample.
+
+    The gate is ``md5(o_orderkey) % greatest(1, n div 10000) == 0`` with n from
+    a broadcast 1-row count. The 9 boundary (price, key) pairs at positions
+    floor(i·m/10) of the ranked sample fold into one broadcast array row, and
+    every row buckets itself with ``size(filter(...))`` over it. The integer
+    gate (not TABLESAMPLE) is mirrored in the DuckDB oracle, so both engines'
+    boundaries are bit-identical. Boundary ties break on the unique o_orderkey.
+    The NTILE-exact twin is ``q_equidepth_histogram_exact``.
+    """
     orders = load_table(spark, sf_dir, "orders")
     h = md5_long(F.concat(F.lit("eqd:"), F.col("o_orderkey").cast("string")))
     cnt = orders.agg(F.count("*").alias("n_total_rows"))
@@ -1200,13 +1132,11 @@ def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_equidepth_histogram_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT equi-depth histogram via NTILE — the profiling twin of
+    """Exact equi-depth histogram via NTILE, the profiling twin of
     ``q_equidepth_histogram``. The window ORDER BY ends in the unique
-    o_orderkey so rows tied on price land in the same bucket on every
-    engine. This variant DELIBERATELY plans a global sort (NTILE over
-    the whole table collapses to one range-sorted partition): keep it
-    for exact small-table profiling; the registered sampled-boundary
-    variant is the 100 TB path."""
+    o_orderkey so rows tied on price land in the same bucket on every engine.
+    NTILE over the whole table plans a global sort into one partition.
+    """
     orders = load_table(spark, sf_dir, "orders")
     w = Window.orderBy("o_totalprice", "o_orderkey")
     return (
@@ -1219,11 +1149,6 @@ def q_equidepth_histogram_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("o_totalprice").alias("total"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Gap-based event debounce (burst leading-edge thinning)
-# ---------------------------------------------------------------------------
 
 
 @register(
@@ -1243,17 +1168,11 @@ def q_equidepth_histogram_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_debounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Burst thinning: keep only the LEADING event of every activity
-    burst per (user, event_type) — an event survives iff the previous
-    same-key event is more than 10 minutes older (or absent). The
-    ingest-side duplicate-storm guard (retry storms, double-clicks)
-    that runs before any content-level dedup.
-
-    One window shuffle on (user_id, event_type) with an event_id
-    tie-break — per-key partitions stay small at any corpus size, so
-    this is embarrassingly parallel at 100 TB. (Within a burst every
-    event is suppressed even when the burst outlasts the window —
-    inactivity-gap semantics, same family as q_sessionize.)
+    """Burst thinning: keep only the leading event of every activity burst per
+    (user, event_type). An event survives iff the previous same-key event is
+    more than 10 minutes older (or absent). Within a burst every event is
+    suppressed even when the burst outlasts the window: inactivity-gap
+    semantics, as in q_sessionize.
     """
     # The gap recurrence (NULL-ts drop, strict > compare, (ts,
     # event_id) tie-break) is the shared sessionizer's, at the
@@ -1265,11 +1184,6 @@ def q_debounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flagged.filter(F.col("is_new") == 1).select(
         "event_id", "user_id", "event_type", "ts"
     )
-
-
-# ---------------------------------------------------------------------------
-# LOCF gap-fill onto a daily spine (timeseries backfill)
-# ---------------------------------------------------------------------------
 
 
 @register(
@@ -1306,18 +1220,14 @@ def q_debounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_locf_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-observation-carried-forward gap-fill: for every user and
-    every day of the corpus span, the value of the user's most recent
-    event at or before that day's end (NULL until the first event).
-    The timeseries backfill that turns sparse event streams into a
-    dense daily panel for training.
+    """Last-observation-carried-forward gap-fill: for every user and every day
+    of the corpus span, the value of the user's most recent event at or before
+    that day's end (NULL until the first event).
 
-    Plan: the daily spine (users x days — tiny vs the event stream) is
-    UNIONed under the events and a single per-user ordered window
-    carries values forward past the probe rows; probe rows are then
-    kept. One window shuffle on user_id; the (ts, is_event DESC,
-    event_id) order is total, so same-instant ties resolve
-    identically on every engine.
+    The daily spine (users x days) is UNIONed under the events and one per-user
+    ordered window carries values forward past the probe rows; probe rows are
+    then kept. The (ts, is_event DESC, event_id) order is total, so
+    same-instant ties resolve identically on every engine.
     """
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
@@ -1362,11 +1272,6 @@ def q_locf_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Session concurrency (sweep line over session intervals)
-# ---------------------------------------------------------------------------
-
-
 @register(
     "q_session_concurrency",
     oracle="""
@@ -1405,31 +1310,22 @@ def q_locf_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak concurrent sessions per hour, sweep-line formulation:
-    sessionize (30-min gap), emit +1 at session start and -1 just
-    after session end, prefix-sum the deltas in time order, take the
-    per-hour max. The capacity-planning / load-profile query interval
-    data always needs.
+    """Peak concurrent sessions per hour, sweep-line formulation: sessionize
+    (30-min gap), emit +1 at session start and -1 just after session end,
+    prefix-sum the deltas in time order, take the per-hour max.
 
-    The prefix sum is TWO-PASS RANGE-PARTITIONED — no global window
-    anywhere in the plan:
+    The prefix sum has no global window:
 
-    1. within-hour running sum: window PARTITIONED BY the hour bucket,
+    1. within-hour running sum: window partitioned by the hour bucket,
        ordered by the total key (t, delta DESC, user, session) so ties
-       are engine-exact. The global running sum at any change point =
-       carry into its hour + this local run.
-    2. per-hour carry: hours aggregate to (hour, hour_sum, local_max)
-       — one row per hour WITH change points, bounded by the TIME
-       DOMAIN (#hours in the corpus' span), not data volume. The
-       carry recurrence splits again: a within-YEAR prefix window
-       (partitioned by year) plus a prior-years fold over a broadcast
-       single-row array of year totals (≤ #years entries, pure
-       ``aggregate(filter(...))`` codegen — no window, no driver
-       collect).
+       are engine-exact;
+    2. per-hour carry: hours aggregate to (hour, hour_sum, local_max);
+       the carry is a within-year prefix window plus a prior-years fold
+       over a broadcast single-row array of year totals.
 
-    peak(hour) = prior_years_carry + within_year_carry + local_max.
-    All sums are integer-exact, so the result is bit-identical to the
-    single-window oracle formulation at any partitioning.
+    peak(hour) = prior_years_carry + within_year_carry + local_max. All sums
+    are integer-exact, so the result equals the single-window oracle at any
+    partitioning.
     """
     ev = load_table(spark, sf_dir, "events")
     sessions = session_spans(ev)
@@ -1487,10 +1383,6 @@ def q_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Temperature-scaled domain mixture (uniform <- alpha -> natural)
-# ---------------------------------------------------------------------------
-
 _MIX_ALPHA = 0.5  # 1.0 = natural proportions, 0.0 = uniform
 
 
@@ -1517,15 +1409,12 @@ _MIX_ALPHA = 0.5  # 1.0 = natural proportions, 0.0 = uniform
     ),
 )
 def q_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled mixture resampling: thin each source toward
-    quota ∝ n_source^α (α=0.5 — the multilingual-pretraining standard
-    for up-weighting small domains without flattening completely),
-    targeting half the corpus. The keep decision is the same exact
-    integer hash gate as q_domain_mixture (``md5 % n_source <
-    quota``), so membership is deterministic under any partitioning;
-    quotas come from one tiny broadcast aggregate. The float part
-    (POWER, one divide, FLOOR) runs on identical doubles in any
-    engine, so quota boundaries are bit-stable too.
+    """Temperature-scaled mixture resampling: thin each source toward quota ∝
+    n_source^α (α=0.5), targeting half the corpus. The keep decision is
+    q_domain_mixture's exact integer hash gate (``md5 % n_source < quota``), so
+    membership is deterministic under any partitioning. The float part (POWER,
+    one divide, FLOOR) runs on identical doubles in both engines, so quota
+    boundaries agree.
     """
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("source").agg(F.count("*").alias("n_source"))
@@ -1554,11 +1443,6 @@ def q_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Hive-partitioned layout write + partition-pruned read
-# ---------------------------------------------------------------------------
-
-
 @register(
     "q_partitioned_layout",
     oracle="""
@@ -1571,19 +1455,14 @@ def q_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_partitioned_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-pruned layout round-trip: orders written
-    hive-partitioned by order year (``.write.partitionBy("o_year")``),
-    then read back with a year predicate that must prune to 2 of the
-    7 year directories — the layout decision that turns a 100 TB scan
-    into a per-partition scan. Directory pruning (PartitionFilters,
-    zero rows read outside the selected years) is pinned in
-    ``tests/test_plans.py::test_partitioned_layout_prunes``.
+    """Partition-pruned layout round-trip: orders written hive-partitioned by
+    order year, then read back with a year predicate that must prune to 2 of
+    the 7 year directories (pinned in
+    ``tests/test_plans.py::test_partitioned_layout_prunes``).
 
-    The year column is materialized at WRITE time (partition values
-    live in directory names, not data files), so the read-side filter
-    is a pure metadata operation. The aggregate after the round-trip
-    must equal the direct aggregate — the oracle never sees the
-    intermediate layout.
+    The year column is materialized at write time, so the read-side filter is a
+    pure metadata operation. The aggregate after the round-trip must equal the
+    direct aggregate.
     """
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus",
@@ -1607,9 +1486,9 @@ def q_partitioned_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for q_zorder_layout below (registered round 13): the layout is
-# invisible to the oracle — a Z-order rewrite must never change
-# answers, only which files a predicate touches.
+# Oracle for q_zorder_layout below: the layout is invisible to the oracle. A
+# Z-order rewrite must never change answers, only which files a predicate
+# touches.
 _ZORDER_LAYOUT_ORACLE = f"""
 SELECT o_orderstatus, COUNT(*) AS n,
        {sql_dsum('o_totalprice')} AS total
@@ -1623,30 +1502,17 @@ GROUP BY o_orderstatus
 
 @register("q_zorder_layout", oracle=_ZORDER_LAYOUT_ORACLE)
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order layout round-trip: orders rewritten range-partitioned
-    on the Morton interleave of (order day, price bucket), then read
-    back under a TWO-DIMENSION predicate — the multi-key sibling of
-    :func:`q_partitioned_layout` and the gate query for the round-11
-    layout writer (``io/zorder.py``; the file-level pruning property
-    itself is measured from parquet footers in
-    ``tests/test_zorder.py``). At 100 TB the rewrite is one
-    repartitionByRange shuffle paid once; afterwards EVERY query
-    filtering on either dimension scans ~sqrt of the files instead
-    of all of them.
+    """Z-order layout round-trip: orders rewritten range-partitioned on the
+    Morton interleave of (order day, price bucket), then read back under a
+    two-dimension predicate. The file-level pruning itself is measured from
+    parquet footers in ``tests/test_zorder.py``.
 
-    Key derivation is scale-stable and stateless: days since the
-    corpus epoch (1995-01-01; < 4096 for the synthetic date range)
-    and a uniform price bucket over the [0, 600k) envelope — both
-    inside the 12-bit key domain at every SF, so rewrites are
-    idempotent as the table grows. CORPUS DATE CEILING: the 12-bit
-    day key covers 1995-01-01 .. 2006-03-18 (epoch + 4095 days); the
-    synthetic orders corpus tops out at 2001-08 (verified at every
-    SF: max(o_orderdate) = 2001-08-01, 2404 days past epoch), and
-    ``z_value_n`` raises loudly — never wraps — on an out-of-range
-    key, so a data refresh past the ceiling fails the rewrite
-    visibly rather than silently mis-clustering. Widen ``bits``
-    alongside any such refresh. Staged in round 12, registered
-    round 13.
+    Keys: days since the corpus epoch (1995-01-01) and a uniform price bucket
+    over the [0, 600k) envelope, both inside the 12-bit key domain at every SF,
+    so rewrites are idempotent as the table grows. The 12-bit day key covers
+    1995-01-01 .. 2006-03-18; the synthetic orders top out at 2001-08-01 at
+    every SF, and ``z_value_n`` raises (never wraps) on an out-of-range key.
+    Widen ``bits`` alongside any data refresh past the ceiling.
     """
     from map_reduce_server_spark.io.zorder import (
         uniform_bucket,
@@ -1685,11 +1551,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Rolling 7-day active users (sliding distinct via contribution explode)
-# ---------------------------------------------------------------------------
-
-
 @register(
     "q_rolling_active_users",
     oracle="""
@@ -1708,13 +1569,10 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """7-day rolling distinct active users per day. Sliding-window
-    COUNT(DISTINCT) has no incremental form (distinct doesn't
-    subtract), so the scalable formulation EXPLODES each (user, day)
-    activity into the 7 window-end days it contributes to, dedups,
-    and counts — shuffle volume is 7x the daily-active pairs (tiny vs
-    raw events), never a per-day rescan of the event log. Days with
-    no events anchor no window (joined back to observed days only).
+    """7-day rolling distinct active users per day. Sliding COUNT(DISTINCT) has
+    no incremental form, so each (user, day) activity explodes into the 7
+    window-end days it contributes to, then dedups and counts. Days with no
+    events anchor no window (joined back to observed days only).
     """
     ev = load_table(spark, sf_dir, "events")
     daily = ev.select(
@@ -1738,11 +1596,6 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Event-type transition matrix (sequence bigram model)
-# ---------------------------------------------------------------------------
-
-
 @register(
     "q_event_transitions",
     oracle="""
@@ -1763,14 +1616,8 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event
-    sequences: bigram counts via one lead() window, row-normalized to
-    probabilities. The sequence-model summary (and data-drift check)
-    for behavioral event streams.
-
-    Scale: one window shuffle on user_id for the bigrams, one
-    aggregate on (from, to) — the matrix is |types|² rows; the
-    normalizing window runs over that tiny aggregate, not the events.
+    """First-order Markov transition matrix over per-user event sequences:
+    bigram counts via one lead() window, row-normalized to probabilities.
     """
     # NULL-ts guard mirrored in the oracle: NULLS FIRST vs LAST
     # would place a NULL-ts event at opposite sequence ends, flipping
@@ -1797,11 +1644,6 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Time-weighted average (interval-weighted metric over event streams)
-# ---------------------------------------------------------------------------
-
-
 @register(
     "q_time_weighted_avg",
     oracle="""
@@ -1822,16 +1664,12 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average of the metric per user: each reading is
-    weighted by how long it was current (gap to the next event) —
-    the correct aggregate for irregularly-sampled gauges (billing
-    meters, utilization), where a plain AVG over-weights bursts.
+    """Time-weighted average of the metric per user: each reading is weighted
+    by how long it was current (gap to the next event).
 
-    Scale shape: one window shuffle on user_id (lead), then an
-    aggregate on the same key — partitions stay user-sized. Weights
-    are integer MICROSECONDS (no float epoch round-trip), and both
-    the value·dt products and the dt total accumulate in exact
-    decimal, so the ratio is bit-identical on any partitioning.
+    Weights are integer microseconds, and both the value·dt products and the dt
+    total accumulate in exact decimal, so the ratio is bit-identical on any
+    partitioning.
     """
     # NULL-ts guard mirrored in the oracle: a NULL-ts row sorted
     # first (Spark) gets a non-NULL lead and survives the nt filter,
@@ -1867,11 +1705,6 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Last-touch attribution (purchase → most recent preceding click)
-# ---------------------------------------------------------------------------
-
-
 @register(
     "q_attribution_last_touch",
     oracle="""
@@ -1890,13 +1723,10 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-touch attribution: each purchase is credited to the
-    user's most recent STRICTLY-PRECEDING click (frame ends at 1
-    PRECEDING — a click in the same instant doesn't attribute to
-    itself-adjacent purchases), with the conversion lag in integer
-    microseconds. The ad-analytics staple, expressed as the same
-    single-window carry-forward shape as q_asof_join: one shuffle on
-    user_id, no join against the click stream at all.
+    """Last-touch attribution: each purchase is credited to the user's most
+    recent strictly-preceding click (the frame ends at 1 PRECEDING), with the
+    conversion lag in integer microseconds. Same single-window carry-forward
+    shape as q_asof_join.
     """
     # NULL-ts guard mirrored in the oracle: a NULL-ts purchase sees
     # an empty preceding frame in Spark (sorted first) but the full
@@ -1931,10 +1761,6 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Recency-decayed engagement score (exponential decay, deterministic)
-# ---------------------------------------------------------------------------
-
 _LTV_HALF_LIFE_DAYS = 7.0
 
 
@@ -1956,15 +1782,11 @@ _LTV_HALF_LIFE_DAYS = 7.0
     """,
 )
 def q_user_ltv_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recency-weighted engagement: each event's value decays with a
-    7-day half-life from the corpus's latest timestamp (age
-    bucketed to whole days, so the exponent is one of a few hundred
-    integers — exp() stays libm-portable after the 9-digit round).
-    The reference point folds in as a broadcast 1-row MAX aggregate;
-    per-event contributions then sum in exact decimal per user — the
-    score a retention model or replay-weighted sampler consumes.
-
-    One narrow scan + one user_id aggregate; no window needed.
+    """Recency-weighted engagement: each event's value decays with a 7-day
+    half-life from the corpus's latest timestamp. Age is bucketed to whole
+    days, so the exponent is one of a few hundred integers and exp() stays
+    libm-portable after the 9-digit round. Per-event contributions sum in exact
+    decimal per user.
     """
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts").alias("now"))
@@ -1988,10 +1810,6 @@ def q_user_ltv_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-# ---------------------------------------------------------------------------
-# Whole-warehouse coverage report (one audit query over all 10 tables)
-# ---------------------------------------------------------------------------
 
 _AUDIT_PKS = {
     "region": ("r_regionkey",),
@@ -2028,17 +1846,10 @@ def _sql_audit_one(table: str, pk: tuple[str, ...]) -> str:
     ),
 )
 def q_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Warehouse-wide integrity audit in ONE query: per table, row
-    count, primary-key distinct count, and PK null count — the
-    always-on data-quality dashboard feeding q_data_expectations'
-    per-table gates. (The synthetic lineitem is KNOWN to carry
-    duplicate (orderkey, linenumber) pairs — this report is where
-    that shows up as pk_distinct < n_rows.)
-
-    Scale shape: each table contributes one partial-aggregated
-    global count triple (distinct via a per-table pre-aggregate on
-    the PK — compact keys); the union is 10 single-row legs that can
-    run concurrently. Nothing wide ever moves.
+    """Warehouse-wide integrity audit in one query: per table, row count,
+    primary-key distinct count and PK null count. The synthetic lineitem
+    carries duplicate (orderkey, linenumber) pairs, which show up here as
+    pk_distinct < n_rows.
     """
     legs = []
     for table, pk in _AUDIT_PKS.items():
@@ -2076,10 +1887,6 @@ def q_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = out.unionByName(leg)
     return out
 
-
-# ---------------------------------------------------------------------------
-# Interval-overlap join (sessions x incident windows, hour-bucketized)
-# ---------------------------------------------------------------------------
 
 _IVL_HOUR_US = 3_600_000_000
 _IVL_GAP_US = 1_800_000_000  # 30-min session gap
@@ -2124,20 +1931,13 @@ _IVL_MIN_ERRORS = 3
     """,
 )
 def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-overlap join WITHOUT a theta join: which user
-    sessions overlap which high-error incident windows, and by how
-    much — the incident-impact query every ops team runs, and the
-    canonical hard case for distributed joins (naive overlap
-    predicates degrade to per-key nested loops).
+    """Interval-overlap join without a theta join: which user sessions overlap
+    which high-error incident windows, and by how much.
 
-    Scale shape: both interval sets bucketize to epoch-HOURS —
-    sessions explode into the hours they span (bounded by session
-    length / bucket width), incident windows are already hour-keyed
-    — so the overlap join becomes a plain equi-join on the hour
-    bucket, hash-distributed and AQE-skew-splittable; each matched
-    pair then computes its exact overlap arithmetically. All times
-    are integer microseconds end to end (no float epochs, no
-    timezone surface).
+    Both interval sets bucketize to epoch-hours (sessions explode into the
+    hours they span), so the overlap becomes an equi-join on the hour bucket;
+    each matched pair then computes its exact overlap arithmetically. All times
+    are integer microseconds.
     """
     ev = load_table(spark, sf_dir, "events")
     # Shared sessionizer, spans converted to integer microseconds
@@ -2178,10 +1978,6 @@ def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Full correlation matrix in one scan (power-sum generalization of q_corr)
-# ---------------------------------------------------------------------------
-
 _CM_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
 
@@ -2212,13 +2008,10 @@ def _sql_corr_matrix() -> str:
 
 @register("q_corr_matrix", oracle=_sql_corr_matrix())
 def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson correlations of all 4 numeric lineitem
-    measures from ONE scan: a single aggregate computes every power
-    sum (k sums + k(k+1)/2 cross sums, all exact decimal), and the
-    6 pairwise correlations unpivot from that 1-row result — the
-    profiling matrix that naive implementations compute with k²/2
-    separate passes. The unpivot side is one row: zero extra
-    data movement, deterministic on any partitioning.
+    """Pairwise Pearson correlations of the 4 numeric lineitem measures from
+    one scan: a single aggregate computes every power sum (k sums + k(k+1)/2
+    cross sums, all exact decimal), and the 6 pairwise correlations unpivot
+    from that 1-row result.
     """
     li = load_table(spark, sf_dir, "lineitem")
     aggs = [F.count("*").alias("n")]
@@ -2255,11 +2048,6 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# ---------------------------------------------------------------------------
-# Benford's-law first-digit audit
-# ---------------------------------------------------------------------------
-
-
 @register(
     "q_benford_check",
     oracle="""
@@ -2280,16 +2068,10 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law audit of order values: observed vs expected
-    first-digit shares (expected = log10(1 + 1/d)) with per-digit
-    chi-square terms — the classic anomaly screen for fabricated or
-    re-scaled financial data, run here as a data-quality monitor
-    next to q_drift_psi.
-
-    Scale shape: digit extraction is string arithmetic on the
-    truncated integer part (identical in both engines — no float
-    formatting), the aggregate is 9 groups, and the total folds in
-    as a broadcast 1-row sum.
+    """Benford's-law audit of order values: observed vs expected first-digit
+    shares (expected = log10(1 + 1/d)) with per-digit chi-square terms. The
+    digit comes from string arithmetic on the truncated integer part, identical
+    in both engines.
     """
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") >= 1
@@ -2316,9 +2098,9 @@ def q_benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for q_bloom_prefilter_join below: the bloom filter is INVISIBLE to the result —
-# a probabilistic prefilter may only discard rows the exact join
-# would discard anyway, so the oracle is the plain semi-join.
+# Oracle for q_bloom_prefilter_join below: a probabilistic prefilter may only
+# discard rows the exact join would discard, so the oracle is the plain
+# semi-join.
 _BLOOM_ORACLE = f"""
 SELECT l_returnflag,
        COUNT(*) AS n_lines,
@@ -2340,10 +2122,10 @@ def _bloom_bitpos(col: F.Column, tag: str, bits: int) -> F.Column:
 
 
 def bloom_words(build: DataFrame, key: str, bits: int = _BLOOM_BITS) -> DataFrame:
-    """Fold a build-side key column into the broadcastable bloom
-    bitmap: a (word_idx, bits) table of at most ``bits/64`` rows,
-    each word the ``bit_or`` of every key's k hash positions landing
-    in it."""
+    """Fold a build-side key column into the bloom bitmap: a (word_idx, bits)
+    table of at most ``bits/64`` rows, each word the ``bit_or`` of every key's
+    k hash positions landing in it.
+    """
     positions = build.select(
         F.explode(
             F.array(*[_bloom_bitpos(F.col(key), t, bits) for t in _BLOOM_TAGS])
@@ -2368,11 +2150,11 @@ def bloom_prefilter(
     key: str,
     bits: int = _BLOOM_BITS,
 ) -> DataFrame:
-    """Keep only probe rows whose key MIGHT be in the bloom set: for
-    each of the k hashes, broadcast-join the word and test the bit (a
-    missing word is a definite miss). Never drops a true match; false
-    positives pass through for the exact join to remove. Returns the
-    probe columns unchanged."""
+    """Keep only probe rows whose key might be in the bloom set: for each of
+    the k hashes, broadcast-join the word and test the bit (a missing word is a
+    definite miss). Never drops a true match. Returns the probe columns
+    unchanged.
+    """
     out = probe
     cols = probe.columns
     for i, tag in enumerate(_BLOOM_TAGS):
@@ -2398,25 +2180,15 @@ def bloom_prefilter(
 
 @register("q_bloom_prefilter_join", oracle=_BLOOM_ORACLE)
 def q_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runtime bloom-prefiltered semi-join, hand-built from DataFrame
-    ops (Spark's own row-level runtime filter is an optimizer
-    internal; ``bloom_filter_agg`` has no public SQL/PySpark surface
-    — probed on 4.1.2: UNRESOLVED_ROUTINE): the selective orders
-    subset is folded into a tiny bit-set the FACT scan probes BEFORE
-    shuffling, so the join moves only candidate rows.
+    """Bloom-prefiltered semi-join built from DataFrame ops.
+    ``bloom_filter_agg`` has no public SQL/PySpark surface in 4.1.2
+    (UNRESOLVED_ROUTINE), so the filter is hand-built.
 
-    Construction: each build key sets k=2 bit positions
-    (md5-derived, independent by salt tag); positions group to
-    64-bit words via ``bit_or`` — the whole filter is a <=2048-row
-    (word_idx, bits) table that BROADCASTS everywhere. The probe side
-    computes the same two positions per row, inner-joins the bitmap
-    on word index (a missing word is a definite miss), and keeps rows
-    with both bits set. False positives are then removed by the exact
-    semi-join, so the result equals the plain join BY CONSTRUCTION —
-    the bloom only cuts shuffle volume. At 100 TB this is the
-    difference between shuffling the full fact table and shuffling
-    ~|matching rows| (+ the fp tail, ~(kn/m)^2 with n build keys and
-    m bits; size m to the build cardinality).
+    Each build key sets k=2 md5-derived bit positions (independent by salt
+    tag), grouped into 64-bit words by ``bit_or``; the probe side computes the
+    same positions, joins the bitmap on word index and keeps rows with both
+    bits set. The exact semi-join then removes the false positives, so the
+    result equals the plain join by construction.
     """
     orders = (
         load_table(spark, sf_dir, "orders")
@@ -2457,26 +2229,14 @@ GROUP BY event_type
 
 
 def bitmap_distinct(df: DataFrame, group_col: str, id_col: str) -> DataFrame:
-    """EXACT distinct-count of a dense non-negative integer id per
-    group via bitmap OR-aggregation — the Druid/ClickHouse bitmap
-    pattern as a two-level DataFrame aggregation. Returns
-    (group_col, n_distinct long).
+    """Exact distinct-count of a dense non-negative integer id per group via
+    bitmap OR-aggregation. Returns (group_col, n_distinct long).
 
-    Level 1 groups by (group, id div 64) and ORs single-bit words
-    (``bit_or`` is associative + commutative, so Catalyst plans a
-    partial+final hash aggregate — the map side collapses each
-    partition's ids into local words BEFORE the shuffle); level 2
-    sums ``bit_count`` per group. The shuffle therefore moves
-    O(groups x occupied words), independent of row count and of
-    per-id duplication — where COUNT(DISTINCT id) moves one row per
-    distinct (group, id) pair. Words are mergeable state: shards
-    aggregated separately OR together losslessly (incremental
-    rollups, cross-datacenter merge). NULL ids contribute no bits —
-    like COUNT(DISTINCT) — but the GROUP itself survives: a group
-    whose ids are all NULL reports 0, exactly as COUNT(DISTINCT)
-    does (a pre-filter would delete the group instead). At 1e9 ids a
-    fully-occupied group carries 16M words; the (group, word_idx)
-    key distributes them evenly."""
+    Level 1 groups by (group, id div 64) and ORs single-bit words; level 2 sums
+    ``bit_count`` per group. NULL ids set no bits, but the group survives: a
+    group whose ids are all NULL reports 0, as COUNT(DISTINCT) does (a
+    pre-filter would delete the group).
+    """
     bit = F.when(
         F.col(id_col).isNotNull(),
         F.expr(f"shiftleft(1L, CAST({id_col} % 64 AS INT))"),
@@ -2494,11 +2254,8 @@ def bitmap_distinct(df: DataFrame, group_col: str, id_col: str) -> DataFrame:
 
 @register("q_bitmap_distinct", oracle=_BITMAP_DISTINCT_ORACLE)
 def q_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distinct users per event type, twice: the bitmap
-    OR-aggregation (:func:`bitmap_distinct`) for the distinct count
-    and a plain COUNT(*) for volume — proving the bitmap formulation
-    lands bit-exactly on COUNT(DISTINCT) while shuffling O(occupied
-    words) instead of O(distinct pairs).
+    """Exact distinct users per event type via :func:`bitmap_distinct`, plus a
+    plain COUNT(*) for volume; the oracle is COUNT(DISTINCT).
     """
     ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy("event_type").agg(F.count("*").alias("n_events"))

@@ -1,21 +1,12 @@
-"""Near-duplicate clustering: connected components over the
-MinHash-LSH candidate graph.
+"""Graph operators: connected components, PageRank, BFS and the co-purchase
+graph queries.
 
-The canonical last stage of corpus dedup: LSH yields candidate
-*pairs*; keeping one representative per duplicate *group* needs the
-transitive closure. Implemented as iterative min-label propagation —
-each iteration is one shuffle-join (label ← min(label of self and
-neighbors)), repeated until a fixpoint. The driver loop reads one
-scalar per iteration, the count of changed labels, never data, and
-that count rides the iteration's own stage-cut job (an
-``Observation``), so steering costs no job of its own. Each iteration
-is a plain distributed join, and the iteration count is O(graph
-diameter), which for near-dup graphs is tiny.
-
-Although the fixpoint is iterative, it IS value-checked, not just
-rows-counted: ``dedup_cluster`` registers a recursive-CTE DuckDB
-oracle computing the same min-label components, and unit tests on
-hand-built graphs pin exactness besides (tests/test_clustering.py).
+Connected components is iterative min-label propagation: each iteration
+joins label ← min(label of self and neighbors) until a fixpoint. The driver
+reads one scalar per iteration, the count of changed labels, and that count
+rides the iteration's own stage-cut job (an ``Observation``). ``dedup_cluster``
+is value-checked against a recursive-CTE DuckDB oracle computing the same
+min-label components; tests/test_clustering.py pins hand-built graphs.
 """
 
 from __future__ import annotations
@@ -29,29 +20,12 @@ from map_reduce_server_spark.stagecut import stage_cut, stage_cut_metric
 from map_reduce_server_spark.tables import load_table
 
 
-# Iterative-join broadcast gate (round 15, guide §3.1 / §2.4): the
-# per-iteration joins of pagerank and connected_components pair an
-# EDGE-sized side against a NODE-sized side (ranks / labels / their
-# derivatives). Below this node count the node-sized side is
-# broadcast-hinted, so the edge-sized side — the dominant bytes —
-# never shuffles inside the loop; above it the hint is withheld and
-# the planner/AQE falls back to shuffle joins. 2M rows of (long, double)
-# ≈ 32 MB payload per broadcast — comfortably under the 8 GB/512M-row
-# broadcast cap and the sort of size §3.1 calls "usually fine", while
-# a 100 TB graph (billions of nodes) stays on the shuffle path. Same
-# size-gating pattern as _BFS_BROADCAST_MAX_FRONTIER; the scalar
-# node count is observed by the stage-cut job that materializes the
-# node-sized frame, so the gate costs no extra job.
+# Node count at or below which the pagerank and connected_components loops
+# broadcast their node-sized join sides (docs/SCALING.md, graph loops).
 _ITER_BROADCAST_MAX_NODES = 2_000_000
 
-# CC-specific gate (round 16, ADVICE r15): connected_components
-# broadcast-hints THREE node-sized frames per iteration (labels,
-# propagated, jump) for up to max_iter=50 rounds, vs pagerank's two —
-# near the shared 2M gate that is ~150 broadcasts of ~32 MB hashed
-# relations whose release waits on ContextCleaner GC. Two-thirds of
-# the shared gate keeps the same per-iteration broadcast byte budget
-# as pagerank; larger graphs take the shuffle path instead of betting
-# on timely broadcast cleanup.
+# connected_components broadcasts three node-sized frames per iteration where
+# pagerank broadcasts two; two thirds of the gate keeps the same bytes.
 _CC_BROADCAST_MAX_NODES = (_ITER_BROADCAST_MAX_NODES * 2) // 3
 
 
@@ -78,11 +52,8 @@ def connected_components(
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    # Undirected adjacency (both directions + self-loop keeps isolated
-    # correctness trivially and simplifies the min computation). NOT
-    # deduplicated: min-propagation is idempotent to repeated
-    # neighbors, and distinct() would shuffle the largest CC
-    # intermediate once more for zero semantic effect.
+    # Undirected adjacency: both directions plus a self-loop per node. Not
+    # deduplicated: min-propagation is idempotent to repeated neighbors.
     adj = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -90,14 +61,10 @@ def connected_components(
     )
     # kept: every iteration joins adj; uncut each re-runs the unions
     adj = adj.transform(stage_cut)
-    # Seed labels with one propagation for free: min over neighbors
-    # (self-loop included) IS iteration 1's pre-jump candidate, and
-    # this aggregate costs the same single shuffle the identity init
-    # would — one fewer loop round on every graph.
-    # The node count, observed by the labels' own cut job, decides the
-    # loop's join strategy once: under the gate every node-sized side
-    # is broadcast-hinted so the edge-sized adjacency never
-    # re-shuffles per iteration.
+    # Seed labels with one propagation: min over neighbors (self-loop
+    # included) is iteration 1's pre-jump candidate, at the cost of the one
+    # shuffle an identity init would take. The node count, observed by the
+    # labels' own cut job, fixes the loop's broadcast gate.
     # kept: loop state; cut labels keep each iteration's plan O(1) deep
     labels, n_nodes = stage_cut_metric(
         adj.groupBy(F.col("src").alias("node")).agg(
@@ -232,22 +199,17 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# PageRank (fixed-iteration, exact-decimal contribution sums)
-# ---------------------------------------------------------------------------
+# --- PageRank (fixed-iteration, exact-decimal contribution sums) ------------
 
 _PR_ITERS = 3
 _PR_DAMPING = 0.85
-# Parity node encoding: customer k -> 2k, supplier k -> 2k+1. The two
-# key spaces are disjoint at ANY scale factor — a fixed additive
-# offset (the previous scheme) silently collides once custkeys grow
-# past it (TPC-H custkeys reach 150k×SF), fusing customer and
-# supplier nodes in a way a same-offset oracle cannot detect.
+# Parity node encoding: customer k -> 2k, supplier k -> 2k+1, so the two key
+# spaces are disjoint at any scale factor.
 
 
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct undirected customer↔supplier edges from the order
-    flow (orders⋈lineitem), suppliers offset into their own id range."""
+    """Distinct undirected customer↔supplier edges from the order flow
+    (orders⋈lineitem), in the parity node encoding."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
@@ -277,32 +239,22 @@ def pagerank(
 ) -> DataFrame:
     """Fixed-iteration PageRank over an edge list (src, dst).
 
-    Input contract: ``edges`` is SYMMETRIZED (every (u,v) has (v,u)),
-    so every node has BOTH out-degree ≥ 1 (no dangling-mass term)
-    and in-degree ≥ 1 (the per-iteration contribution aggregate's
-    node domain is the full node set — the loop relies on this to
-    skip a node-list join per iteration). The only caller
-    (``graph_pagerank``) symmetrizes in ``_trade_edges``. Per iteration:
-    ``r(v) ← (1−d)/N + d·Σ_{u→v} r(u)/deg(u)``. The contribution sum
-    is a tie-free exact integer aggregate at 2^-40 quantization
-    (``qsum40``) — order-independent, so the result is bit-stable
-    across partitionings AND bit-identical to the SQL oracle replay
-    (the former decimal(38,18) bridge disagreed between engines in
-    both cast directions); per-contribution double arithmetic
-    (division, damping) is identical on identical inputs. Fixed
-    iteration count (not a convergence test) keeps the computation a
-    finite, oracle-expressible unrolled recurrence.
+    Input contract: ``edges`` is symmetrized (every (u,v) has (v,u)), so every
+    node has out-degree ≥ 1 (no dangling-mass term) and in-degree ≥ 1 (the
+    per-iteration contribution aggregate covers the full node set, so the loop
+    joins no node list). ``graph_pagerank`` symmetrizes in ``_trade_edges``.
+    Per iteration: ``r(v) ← (1−d)/N + d·Σ_{u→v} r(u)/deg(u)``. The
+    contribution sum is an exact integer aggregate at 2^-40 quantization
+    (``qsum40``), so the result is bit-stable across partitionings and
+    bit-identical to the SQL oracle replay. A fixed iteration count keeps the
+    recurrence oracle-expressible.
 
-    Scale: each iteration is one join plus one aggregate, all on
-    compact (id, double) columns. The per-iteration lineage cut
-    (``stage_cut``) is load-bearing — lazily composed
-    iterations share attribute ids between ``adj`` and the
-    ``adj``-derived ranks, and Spark silently misresolves that
-    self-join — but a checkpointed scan advertises
-    ``UnknownPartitioning``, so the checkpointed sides are
-    re-shuffled every iteration (measured; see SCALING.md).
-    The last iteration is returned un-checkpointed: callers aggregate
-    or collect it anyway, and the final plan stays inspectable.
+    The per-iteration ``stage_cut`` is load-bearing: lazily composed
+    iterations share attribute ids between ``adj`` and the ``adj``-derived
+    ranks, and Spark silently misresolves that self-join. A cut scan
+    advertises ``UnknownPartitioning``, so the cut sides re-shuffle every
+    iteration (see SCALING.md, graph loops). The last iteration is returned
+    uncut: callers consume it once and its plan stays inspectable.
     """
     # kept: the init ranks and adj both read deg. Node count observed
     # by deg's own cut job (no job of its own): the rank init, the
@@ -317,18 +269,15 @@ def pagerank(
     )
     if n == 0:
         return deg.select("node", F.lit(0.0).alias("rank"))
-    # Under the gate the node-sized sides (ranks, per-iteration
-    # in-mass) are broadcast-hinted so the edge-sized adjacency never
-    # shuffles inside the loop — see _ITER_BROADCAST_MAX_NODES.
+    # Under the gate the node-sized sides (ranks, per-iteration in-mass) are
+    # broadcast-hinted so the edge-sized adjacency never shuffles in the loop.
     small = n <= _ITER_BROADCAST_MAX_NODES
 
     def _hint(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
 
-    # NOT stage-cut (round 16): the init ranks derive from the
-    # already-cut deg by one narrow projection and are consumed once
-    # (iteration 0's broadcast build side) — the former cut spent a
-    # whole materialization job to save recomputing a projection.
+    # Not cut: the init ranks are one narrow projection of the cut deg, read
+    # once as iteration 0's build side.
     ranks = deg.select("node", F.lit(1.0 / n).alias("rank"))
     # kept: every iteration joins adj; uncut each re-runs the degree join
     adj = edges.join(
@@ -343,26 +292,15 @@ def pagerank(
                 (F.col("rank") / F.col("deg")).alias("c"),
             )
             .groupBy("node")
-            # Tie-free engine-exact mass sum: the former
-            # decimal(38,18) bridge disagreed between engines in BOTH
-            # cast directions (Spark rounds the shortest decimal repr
-            # HALF_UP where DuckDB rounds the binary value, and
-            # DuckDB double-rounds unscaled mantissas > 2^53 back to
-            # double) — hundreds of 1e-18 discrepancies per run that
-            # only the final ROUND(rank, 12) hid. floor(c * 2^40)
-            # integer sums are exact at every step on both engines;
-            # normalized ranks keep every contribution <= 1, so the
-            # scaled sums stay far below 2^53.
+            # Tie-free engine-exact mass sum: floor(c * 2^40) integer
+            # sums are exact at every step on both engines; normalized
+            # ranks keep every contribution <= 1, so the scaled sums stay
+            # far below 2^53.
             .agg(qsum40(F.col("c")).alias("in_mass"))
         )
-        # contrib's node domain IS the full node set: the edge list
-        # is symmetrized (docstring contract), so every node appears
-        # as a dst and receives in-mass every iteration. The former
-        # shape re-joined a node list onto contrib per iteration —
-        # one broadcast join × iters re-deriving a domain the
-        # aggregate already has (round 16; −17% wall at sf0.1,
-        # identical output, and one fewer node-sized join per
-        # iteration at any scale).
+        # contrib's node domain is the full node set: the edge list is
+        # symmetrized (docstring contract), so every node appears as a dst
+        # and receives in-mass every iteration.
         nxt = contrib.select(
             "node",
             (
@@ -427,21 +365,15 @@ def _sql_pagerank_oracle() -> str:
 
 @register("graph_pagerank", oracle=_sql_pagerank_oracle(), bench=True)
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the customer↔supplier trade graph — the second
-    iterative-algorithm pattern (after connected components): a
-    driver loop of pure DataFrame joins with lineage truncation,
-    deterministic by tie-free exact integer mass sums, and
-    value-checked against the oracle's unrolled recurrence. Ranks
-    emit RAW: with in_mass engine-exact the whole recurrence is
-    bit-identical, and a round(double, 12) would re-introduce the
-    midpoint tie class the qsum40 rework just removed."""
+    """PageRank over the customer↔supplier trade graph, value-checked
+    against the oracle's unrolled recurrence. Ranks emit raw: with in_mass
+    engine-exact the recurrence is bit-identical, and a round(double, 12)
+    would re-introduce the midpoint tie class."""
     ranks = pagerank(_trade_edges(spark, sf_dir))
     return ranks.select("node", "rank")
 
 
-# ---------------------------------------------------------------------------
-# Triangle counting over the frequent co-purchase graph
-# ---------------------------------------------------------------------------
+# --- Triangle counting over the frequent co-purchase graph ------------------
 
 _TRI_MINSUP = 2  # a pair must co-occur in >= this many orders
 
@@ -458,21 +390,13 @@ def _copurchase_edges(
     the pair count (q_market_basket), and ``li`` to share an
     already-deduped (l_orderkey, l_partkey) projection.
 
-    Pair generation (round 15) collects each order's DISTINCT part
-    set into a sorted array and expands the ordered (u < v) pairs
-    row-locally with nested array transforms — one shuffle on
-    l_orderkey (map-side partial collect_set) plus the (u, v) count
-    shuffle. The former shape was a distinct + equi-self-join: three
-    corpus-sized exchanges and a sort-merge join whose per-order
-    output is identical to the array expansion (an equi-join on
-    l_orderkey puts the whole order in one task either way, so the
-    k²/2 quadratic hazard is unchanged and still bounded by the cart
-    size — TPC-H orders cap at 7 line items; a corpus with unbounded
-    carts would need a per-order cap, same policy as the LSH bucket
-    cap).
-    collect_set absorbs duplicate (order, part) rows, so each order
-    contributes a pair at most once and support stays a plain
-    COUNT(*). Equivalence vs the join form is exceptAll-pinned in
+    Pair generation collects each order's distinct part set into a sorted
+    array and expands the ordered (u < v) pairs row-locally with nested array
+    transforms: one shuffle on l_orderkey plus the (u, v) count shuffle. The
+    per-order k²/2 pairs are bounded by the cart size (TPC-H orders cap at 7
+    line items). collect_set absorbs duplicate (order, part) rows, so each
+    order contributes a pair at most once and support stays a plain
+    COUNT(*). Equivalence with the self-join form is exceptAll-pinned in
     tests/test_clustering.py.
     """
     if li is None:
@@ -523,23 +447,15 @@ def _copurchase_edges(
     """,
 )
 def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle counting — the classic MapReduce-era graph algorithm —
-    over the frequent co-purchase graph (part pairs sharing >= 2
-    orders). Ordered adjacency (u < v everywhere) means each triangle
-    is generated exactly once as u < v < w: one wedge join on the
-    middle vertex, one closing equi-join — never an all-pairs
-    product.
+    """Triangle counting over the frequent co-purchase graph (part pairs
+    sharing >= 2 orders). Ordered adjacency (u < v everywhere) generates each
+    triangle exactly once as u < v < w: one wedge join on the middle vertex,
+    one closing equi-join.
 
-    Scale: the support threshold IS the degree bound (frequent-pair
-    graphs are orders of magnitude sparser than raw co-occurrence);
-    the production refinement is degree-ordered adjacency (orient
-    edges low-degree -> high-degree) which bounds the wedge join by
-    arboricity — noted here, unnecessary at the thresholded density.
-    Note ``n_wedges`` counts ORDERED (u<v<w) wedges — the join's
-    unit of work — not all 2-paths: a lone triangle has n_wedges=1
-    but three 2-paths, so 3*tri/n_wedges is NOT the global
-    clustering coefficient (that denominator is Σ_v C(deg_v, 2),
-    available from ``graph_degree_stats``).
+    ``n_wedges`` counts ordered (u<v<w) wedges, the join's unit of work, not
+    all 2-paths: a lone triangle has n_wedges=1 but three 2-paths, so
+    3*tri/n_wedges is not the global clustering coefficient (that
+    denominator is Σ_v C(deg_v, 2), available from ``graph_degree_stats``).
     """
     # kept: both wedge sides and the closing join read e; uncut the
     # pair pipeline runs three times
@@ -553,11 +469,9 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e3 = e.alias("e3")
     wg = wedges.alias("wg")
-    # ONE pass over the wedge join for both counts: the closing LEFT
-    # join preserves wedge multiplicity (edges are distinct (u,v)
-    # rows), so count(*) is the wedge count and count(matched) the
-    # triangle count — the previous two-branch form evaluated the
-    # quadratic-in-degree wedge join twice.
+    # One pass over the wedge join for both counts: the closing LEFT join
+    # preserves wedge multiplicity (edges are distinct (u,v) rows), so
+    # count(*) is the wedge count and count(matched) the triangle count.
     closed = wg.join(
         e3,
         (F.col("wg.u") == F.col("e3.u")) & (F.col("wg.w") == F.col("e3.v")),
@@ -577,9 +491,7 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Market-basket association rules over co-purchase pairs
-# ---------------------------------------------------------------------------
+# --- Market-basket association rules over co-purchase pairs -----------------
 
 _MB_MINSUP = 3  # pair must co-occur in >= this many orders
 
@@ -611,16 +523,9 @@ _MB_MINSUP = 3  # pair must co-occur in >= this many orders
 )
 def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association rules over the co-purchase graph: support,
-    bidirectional confidence and lift for every part pair sharing
-    at least _MB_MINSUP orders — the classic MapReduce-era
-    frequent-itemset workload at pair granularity.
-
-    Scale shape: the distinct (order, part) projection is the only
-    corpus-sized shuffle; pair generation is the SAME support-
-    thresholded ordered self-join as q_copurchase_triangles (the
-    threshold bounds the quadratic hazard); item supports are a
-    per-part aggregate joined back onto the (already tiny) rule set,
-    and the order count folds in as a broadcast 1-row aggregate.
+    bidirectional confidence and lift for every part pair sharing at least
+    _MB_MINSUP orders. Pairs come from the same support-thresholded pair
+    expansion as q_copurchase_triangles.
     """
     li = (
         load_table(spark, sf_dir, "lineitem")
@@ -682,16 +587,8 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree distribution of the frequent co-purchase graph — the
-    first diagnostic run on any large graph (degree skew is what
-    decides between plain wedge joins and degree-ordered orientation
-    for q_copurchase_triangles; this op measures exactly that).
-
-    Scale: edges are already the thresholded compact pair list;
-    degree = one union-all + count keyed by node, histogram = a
-    second count keyed by degree (a key space of at most a few
-    hundred values). No row of lineitem survives past the first
-    aggregation.
+    """Degree distribution of the frequent co-purchase graph: for each
+    degree, the number of parts with it.
     """
     # kept: the u- and v-branch of the union both read e; uncut the
     # pair pipeline runs twice
@@ -707,19 +604,13 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# BFS shortest hops over the co-purchase graph (round-14 queue)
-# ---------------------------------------------------------------------------
+# --- BFS shortest hops over the co-purchase graph ---------------------------
 
 _BFS_MAX_HOPS = 4
 
-# Oracle for graph_bfs_hops below: DuckDB's native
-# recursive CTE (UNION, not UNION ALL — the recursion dedupes
-# (node, hops) states so bounded-depth path explosion cannot occur),
-# minimized per node. Spark has no recursive CTE; the engine side is
-# the iterative frontier expansion instead — the THIRD iterative-
-# algorithm pattern after connected components and pagerank, and the
-# first with an exact recursive-SQL oracle.
+# Oracle for graph_bfs_hops below: DuckDB's recursive CTE (UNION, not UNION
+# ALL: the recursion dedupes (node, hops) states so bounded-depth path
+# explosion cannot occur), minimized per node.
 _BFS_ORACLE = f"""
 WITH RECURSIVE e AS (
   SELECT a.l_partkey AS u, b.l_partkey AS v
@@ -742,26 +633,10 @@ FROM walk GROUP BY node
 
 @register("graph_bfs_hops", oracle=_BFS_ORACLE)
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-source BFS: minimum hop count from the smallest part in
-    the thresholded co-purchase graph to every part reachable within
-    ``_BFS_MAX_HOPS`` hops — the bounded-depth transitive-closure /
-    shortest-path primitive (recommendation radius, blast-radius
-    analysis) that SQL engines express as a recursive CTE and Spark
-    cannot: the engine side is the iterative frontier expansion every
-    distributed BFS uses (Pregel's canonical example).
-
-    Scale shape: the visited set only ever GROWS and each iteration
-    joins the (small) frontier against the edge list — one
-    broadcast-able join + anti-join per hop, never a path
-    enumeration, so work per hop is O(frontier-degree sum) and state
-    is O(visited), immune to the path-count explosion a naive
-    closure would hit. Edges are stage-cut once (every iteration
-    reuses the materialized list; without the cut each hop would
-    re-expand the corpus-wide pair self-join), and each hop's
-    frontier/visited are cut so plan depth stays O(1) — the exact
-    lineage discipline of :func:`pagerank` and connected components.
-    The seed is a broadcast 1-row aggregate, never a driver
-    collect.
+    """Single-source BFS: minimum hop count from the smallest part in the
+    thresholded co-purchase graph to every part reachable within
+    ``_BFS_MAX_HOPS`` hops. SQL expresses this as a recursive CTE; the Spark
+    side is the iterative frontier expansion of :func:`bfs_hops`.
     """
     e = _copurchase_edges(spark, sf_dir)
     return bfs_hops(e, _BFS_MAX_HOPS).select(
@@ -769,34 +644,21 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Frontier rows above which bfs_hops stops FORCING a broadcast of the
-# frontier⋈edges join and lets AQE pick the strategy from runtime
-# sizes. On a small-world graph the frontier approaches |V| within a
-# few hops — an unconditional broadcast hint there ships an O(|V|)
-# table to every executor and OOMs at 100× scale. 500k ids ≈ a few MB
-# broadcast, comfortably under any executor's memory.
+# Frontier rows at or below which bfs_hops broadcasts the frontier side of
+# frontier⋈edges; above it AQE picks the join (docs/SCALING.md, graph loops).
 _BFS_BROADCAST_MAX_FRONTIER = 500_000
 
 
 def bfs_hops(edges: DataFrame, max_hops: int) -> DataFrame:
-    """Single-source BFS over an UNDIRECTED (u, v) edge list: minimum
-    hop count from min(u) to every node within ``max_hops`` — the
-    reusable iterative core of :func:`graph_bfs_hops` (see there for
-    the scale analysis; the fuzz in test_differential_fuzz.py sweeps
-    this against per-draw recursive-CTE oracles). Returns
-    (node, hops int).
+    """Single-source BFS over an undirected (u, v) edge list: minimum hop
+    count from min(u) to every node within ``max_hops``. Returns
+    (node, hops int); the fuzz in test_differential_fuzz.py sweeps this
+    against per-draw recursive-CTE oracles.
 
-    Broadcast discipline: the frontier⋈edges join is broadcast ONLY
-    while the frontier is small (``_BFS_BROADCAST_MAX_FRONTIER``).
-    On hub-and-spoke / small-world graphs the frontier can approach
-    |V| within 2-3 hops, and a forced broadcast of an O(|V|) frontier
-    kills executors at scale — past the gate the hint is dropped and
-    AQE chooses from the frontier's actual runtime size. The count
-    used for the gate costs no job: the seed frontier is one row (a
-    global aggregate), and every later frontier's row count is
-    observed by the stage-cut job that materializes it. An empty
-    frontier short-circuits the remaining hops (the reachable set is
-    closed)."""
+    Each hop joins the frontier against the edges and anti-joins the visited
+    set. The frontier is broadcast only while its row count, observed by the
+    cut job that materializes it, is at most ``_BFS_BROADCAST_MAX_FRONTIER``.
+    An empty frontier ends the loop (the reachable set is closed)."""
     # kept: the seed and every hop join ed; uncut each re-runs the union
     ed = (
         edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
@@ -860,19 +722,10 @@ FROM reach GROUP BY node
 def graph_connected_components(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Connected components of the thresholded co-purchase graph:
-    every part labeled with the smallest part id it is connected to
-    — the graph-clustering primitive behind :func:`dedup_cluster`
-    (where it groups near-duplicate documents), registered here on
-    its own with an exact recursive-CTE oracle so the
-    pointer-jumping core is driver-certified directly, not only
-    through the LSH pipeline that feeds it.
-
-    Scale shape is :func:`connected_components`'s: neighbor-min
-    propagation fused with pointer jumping halves label distances
-    per round (O(log diameter) iterations), each iteration is one
-    equi-join + min-aggregate on stage-cut O(V) state, and
-    non-convergence raises rather than returning wrong labels.
+    """Connected components of the thresholded co-purchase graph: every part
+    labeled with the smallest part id it is connected to, checked against an
+    exact recursive-CTE oracle (:func:`dedup_cluster` runs the same core over
+    LSH pairs).
     """
     e = _copurchase_edges(spark, sf_dir)
     labels = connected_components(

@@ -1,32 +1,29 @@
 """Corpus-curation pipeline compositions.
 
-The single-operator building blocks (MinHash-LSH candidates,
-connected components, quality scores, hash splits) live in
-``dedup.py`` / ``clustering.py`` / ``text.py``; this module registers
-the COMPOSED pipelines a training-data curation pass actually runs,
-each still fully oracle-checked:
+The single-operator building blocks (MinHash-LSH candidates, connected
+components, quality scores, hash splits) live in ``dedup.py`` /
+``clustering.py`` / ``text.py``; this module registers composed curation
+pipelines, each oracle-checked:
 
-- ``dedup_minhash_keep_one`` — the end-to-end fuzzy dedup: candidate
-  pairs → transitive closure → one canonical survivor per group.
-- ``q_domain_mixture`` — deterministic per-source rebalancing toward
-  a uniform domain mix, with EXACT rational sampling (hash % n < k),
-  no floating-point rates anywhere.
-- ``q_profile_columns`` — one-scan data profiling (null count,
-  distinct count, min/max per column) in long format.
-- ``q_scd2_customer_orders`` — slowly-changing-dimension (type 2)
-  interval build from an event-style fact.
-- ``q_quality_gate`` / ``q_pack_sequences`` / ``q_training_shards`` —
-  per-domain quantile filtering, greedy context-window packing, and
+- ``dedup_minhash_keep_one``: candidate pairs → transitive closure → one
+  canonical survivor per group.
+- ``q_domain_mixture``: per-source rebalancing toward a uniform domain mix
+  with exact rational sampling (hash % n < k).
+- ``q_profile_columns``: one-scan data profiling (null count, distinct
+  count, min/max per column) in long format.
+- ``q_scd2_customer_orders``: slowly-changing-dimension (type 2) intervals
+  from an event-style fact.
+- ``q_quality_gate`` / ``q_pack_sequences`` / ``q_training_shards``:
+  per-domain quantile filtering, greedy context-window packing and
   content-addressed shard manifests.
-- ``q_point_in_time_join`` — leakage-safe feature-store enrichment.
-- ``q_data_expectations`` / ``q_drift_psi`` — pre-publish validation
-  gate and split-drift monitoring.
-- ``q_weighted_sample`` / ``q_snapshot_diff`` — deterministic A-ES
-  weighted sampling and incremental-refresh auditing.
+- ``q_point_in_time_join``: leakage-safe feature-store enrichment.
+- ``q_data_expectations`` / ``q_drift_psi``: pre-publish validation gate and
+  split-drift monitoring.
+- ``q_weighted_sample`` / ``q_snapshot_diff``: deterministic A-ES weighted
+  sampling and incremental-refresh auditing.
 
-The reference has no notion of any of this (its pipeline surface is
-wordcount/grep executables, reference ``tests/testdata/exec/``);
-these exist for the 100 TB training-data mandate.
+The reference has none of this (its pipeline surface is the wordcount/grep
+executables, reference ``tests/testdata/exec/``).
 """
 
 from __future__ import annotations
@@ -52,9 +49,7 @@ from map_reduce_server_spark.registry import register
 from map_reduce_server_spark.tables import load_table
 
 
-# ---------------------------------------------------------------------------
-# End-to-end fuzzy dedup: keep one representative per near-dup group
-# ---------------------------------------------------------------------------
+# --- End-to-end fuzzy dedup: keep one representative per near-dup group -----
 
 
 def _sql_keep_one_oracle() -> str:
@@ -72,16 +67,11 @@ def _sql_keep_one_oracle() -> str:
 
 @register("dedup_minhash_keep_one", oracle=_sql_keep_one_oracle())
 def dedup_minhash_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The complete fuzzy-dedup pass a corpus curation pipeline runs:
-    MinHash-LSH candidate pairs → connected components → keep the
-    smallest doc_id of each duplicate group (singletons keep
-    themselves). Returns one row per SURVIVING document with its
-    group size — the survivor set IS the deduplicated corpus.
-
-    Scale: adds a single groupBy on cluster_id (8-byte keys) on top
-    of ``dedup_cluster``; document text never shuffles anywhere in
-    the pipeline. The oracle replays the whole composition, recursive
-    closure included, in one DuckDB statement.
+    """The complete fuzzy-dedup pass: MinHash-LSH candidate pairs →
+    connected components → keep the smallest doc_id of each duplicate group
+    (singletons keep themselves). Returns one row per surviving document
+    with its group size. The oracle replays the whole composition,
+    recursive closure included, in one DuckDB statement.
     """
     from map_reduce_server_spark.operators.clustering import dedup_cluster
 
@@ -92,9 +82,7 @@ def dedup_minhash_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Domain-mixture rebalancing (deterministic, exact-rational sampling)
-# ---------------------------------------------------------------------------
+# --- Domain-mixture rebalancing (deterministic, exact-rational sampling) ----
 
 
 @register(
@@ -117,12 +105,10 @@ def q_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     is thinned to (approximately) the smallest source's size by
     keeping doc_id iff ``md5(doc) % n_source < n_target``.
 
-    The keep-rate n_target/n_source is applied as EXACT integer
-    arithmetic — no float thresholds, so the decision is bit-identical
-    on any engine and any partitioning, and a document's fate never
-    flips when unrelated partitions move. Per-source counts are a
-    broadcast-joined aggregate (one row per source); the fact table
-    is scanned once.
+    The keep-rate n_target/n_source is applied as exact integer
+    arithmetic, so the decision is bit-identical on any engine and
+    partitioning. Per-source counts are a broadcast-joined aggregate (one
+    row per source).
     """
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("source").agg(F.count("*").alias("n_source"))
@@ -136,15 +122,11 @@ def q_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# One-pass column profiling
-# ---------------------------------------------------------------------------
+# --- One-pass column profiling ----------------------------------------------
 
-# (column, portable min/max expression) — doubles go through a fixed
-# DECIMAL so min/max strings format identically on both engines
-# (Java prints 5.0E7, DuckDB 50000000.0 — decimals sidestep it).
-# {T} is the dialect's unbounded string type (Spark: STRING,
-# DuckDB: VARCHAR).
+# (column, portable min/max expression): doubles go through a fixed DECIMAL
+# so min/max strings format identically on both engines (Java prints 5.0E7,
+# DuckDB 50000000.0). {T} is the dialect's string type (STRING / VARCHAR).
 _PROFILE_COLS = (
     ("o_orderkey", "CAST({c} AS {T})"),
     ("o_custkey", "CAST({c} AS {T})"),
@@ -174,15 +156,13 @@ def _sql_profile_oracle() -> str:
 
 @register("q_profile_columns", oracle=_sql_profile_oracle())
 def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data profiling in ONE scan: per-column null count, exact
-    distinct count, and min/max, emitted in long format.
+    """Data profiling in one scan: per-column null count, exact distinct
+    count, and min/max, emitted in long format.
 
-    The naive form is one scan per column (the oracle's UNION ALL —
-    fine for DuckDB at sf0.01, wrong at 100 TB). The Spark plan
-    computes every column's aggregates in a single pass: Catalyst
-    plans multi-column COUNT(DISTINCT) as one Expand + two-level
-    aggregate, so the fact table is read once regardless of column
-    count; the final stack() to long format touches 6 rows.
+    The oracle runs one scan per column (UNION ALL); the Spark plan computes
+    every column's aggregates in one pass (multi-column COUNT(DISTINCT)
+    plans as one Expand + two-level aggregate), and the final stack() to
+    long format touches 6 rows.
     """
     orders = load_table(spark, sf_dir, "orders")
     aggs = []
@@ -210,9 +190,7 @@ def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# SCD2 dimension build
-# ---------------------------------------------------------------------------
+# --- SCD2 dimension build ---------------------------------------------------
 
 
 @register(
@@ -229,18 +207,15 @@ def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_scd2_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension (type 2) build: each customer's
-    order stream becomes versioned rows with [valid_from, valid_to)
-    intervals and an is_current flag — the standard way a warehouse
-    tracks attribute history, built here with one window pass (no
-    self-join). The window ORDER BY ends in the unique o_orderkey so
-    same-day orders version deterministically on every engine.
+    """Slowly-changing-dimension (type 2) build: each customer's order
+    stream becomes versioned rows with [valid_from, valid_to) intervals and
+    an is_current flag, built with one window pass (no self-join). The
+    window ORDER BY ends in the unique o_orderkey so same-day orders version
+    deterministically on every engine.
 
-    NULL-date guard mirrored in the oracle: a NULL o_orderdate sorts
-    FIRST in Spark windows and LAST in DuckDB, flipping valid_to /
-    is_current for its neighbors — the same engine-divergence class
-    q_point_in_time_join guards (no NULL dates in current data, but
-    the twin must not depend on that).
+    NULL-date guard mirrored in the oracle: a NULL o_orderdate sorts first
+    in Spark windows and last in DuckDB, flipping valid_to / is_current for
+    its neighbors (the class q_point_in_time_join guards).
     """
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate").isNotNull()
@@ -259,9 +234,7 @@ def q_scd2_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Per-domain quantile quality gate
-# ---------------------------------------------------------------------------
+# --- Per-domain quantile quality gate ---------------------------------------
 
 
 @register(
@@ -282,25 +255,21 @@ def q_scd2_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain quantile filtering: score every document (distinct-
-    token ratio — the cheap lexical-diversity proxy) and drop the
-    bottom quartile WITHIN each source. Quantile gating per domain —
-    rather than one global threshold — is the standard guard against a
-    verbose domain swamping a terse one.
+    """Per-domain quantile filtering: score every document (distinct-token
+    ratio) and drop the bottom quartile within each source, so a verbose
+    domain cannot swamp a terse one.
 
     The cut is rank-based (percent_rank with a doc_id tie-break), not
-    value-interpolated: engines disagree on percentile interpolation
-    but not on ranks over a totally-ordered partition, so the kept set
-    is bit-identical. Scale: one window shuffle partitioned by source
-    — parallel across domains; a skewed giant domain re-partitions by
-    (source, score-range) first.
+    value-interpolated: engines disagree on percentile interpolation but not
+    on ranks over a totally-ordered partition, so the kept set is
+    bit-identical.
     """
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id", "source", distinct_ratio_col().alias("score")
     )
     # NULLS LAST explicitly: Spark ASC defaults NULLS FIRST, DuckDB
-    # NULLS LAST — a NULL-text doc would land in opposite quartiles
+    # NULLS LAST; a NULL-text doc would land in opposite quartiles
     w = Window.partitionBy("source").orderBy(
         F.col("score").asc_nulls_last(), "doc_id"
     )
@@ -316,9 +285,7 @@ def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Greedy sequence packing (context-window manifest)
-# ---------------------------------------------------------------------------
+# --- Greedy sequence packing (context-window manifest) ----------------------
 
 _PACK_BUDGET = 512  # tokens per training sequence
 
@@ -347,16 +314,10 @@ _PACK_BUDGET = 512  # tokens per training sequence
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack documents into fixed-token-budget training sequences
     (manifest form): within each source, documents in doc_id order are
-    assigned to sequence ``floor(tokens_before / budget)`` — the
-    streaming concat-then-chunk packing every pretraining pipeline
-    runs, with documents kept atomic (a sequence may overshoot the
-    budget by at most one document's tail; nothing is split).
-
-    Scale: the running sum is windowed PER SOURCE, so the prefix scan
-    parallelizes across domains instead of serializing the corpus
-    through one partition; at 100 TB the same recurrence runs per
-    (source, day) shard. Output is the (source, seq_id) manifest a
-    shard writer consumes.
+    assigned to sequence ``floor(tokens_before / budget)``, with documents
+    kept atomic (a sequence may overshoot the budget by at most one
+    document's tail; nothing is split). The running sum is windowed per
+    source. Output is the (source, seq_id) manifest a shard writer consumes.
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = word_tokens_col()
@@ -364,9 +325,8 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", F.size(toks).alias("n_tokens")
     )
     # asc_nulls_last: DuckDB ASC defaults NULLS LAST while Spark
-    # defaults NULLS FIRST — a NULL doc_id would otherwise shift
-    # every prefix sum in its source between the twins (documents
-    # currently have none, but the ordering must not depend on that)
+    # defaults NULLS FIRST; a NULL doc_id would otherwise shift every
+    # prefix sum in its source between the twins
     w = (
         Window.partitionBy("source")
         .orderBy(F.col("doc_id").asc_nulls_last())
@@ -386,9 +346,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Deterministic shard manifest (training-shard writer planning)
-# ---------------------------------------------------------------------------
+# --- Deterministic shard manifest (training-shard writer planning) ----------
 
 _N_SHARDS = 64
 
@@ -407,17 +365,10 @@ _N_SHARDS = 64
     """,
 )
 def q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-shard manifest: every document is assigned
-    to ``md5(doc_id) % {n}`` and the manifest reports per-shard volume
-    — the planning step before ``df.repartition(n, shard).write``
-    produces balanced training shards whose membership never changes
-    when the corpus is re-processed (content-addressed, not
-    zipWithIndex/row_number, so it is stable under re-partitioning and
-    incremental appends).
-
-    Scale: one aggregate on an 8-byte derived key; the manifest is n
-    rows. The hash gate is the same md5-mod family the mixture/split
-    ops use — one primitive, many curation stages.
+    """Deterministic hash-shard manifest: every document is assigned to
+    ``md5(doc_id) % {n}`` and the manifest reports per-shard volume.
+    Membership is content-addressed (not zipWithIndex/row_number), so it is
+    stable under re-partitioning and incremental appends.
     """
     docs = load_table(spark, sf_dir, "documents")
     shard = md5_long(
@@ -435,9 +386,7 @@ def q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Point-in-time correct enrichment (feature-store as-of lookup)
-# ---------------------------------------------------------------------------
+# --- Point-in-time correct enrichment (feature-store as-of lookup) ----------
 
 
 @register(
@@ -464,19 +413,15 @@ def q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time correct enrichment: every event picks up the
-    user's most recent order key AS OF the event timestamp — the
-    feature-store join that prevents training-serving leakage (a
-    feature computed after the label's timestamp must never be
-    visible).
+    """Point-in-time correct enrichment: every event picks up the user's
+    most recent order key as of the event timestamp, so no feature computed
+    after the event is visible.
 
-    Scalable formulation: no join at all. Dimension updates (orders)
-    and lookups (events) union into one per-user time-ordered stream
-    and a single window pass carries the latest order key forward
-    past each event row; ties at the same instant order updates
-    BEFORE lookups (as-of is inclusive) and same-instant updates by
-    ascending key so the LAST one wins deterministically. One shuffle
-    on user_id regardless of how many fact rows enrich.
+    No join: dimension updates (orders) and lookups (events) union into one
+    per-user time-ordered stream and a single window pass carries the
+    latest order key forward past each event row. Ties at the same instant
+    order updates before lookups (as-of is inclusive) and same-instant
+    updates by ascending key, so the last one wins deterministically.
     """
     # NULL-ts guard mirrored in the oracle (same class as the
     # advanced.py event-ordering queries): Spark sorts NULLS FIRST,
@@ -511,9 +456,7 @@ def q_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Data-quality expectations (pipeline validation gate)
-# ---------------------------------------------------------------------------
+# --- Data-quality expectations (pipeline validation gate) -------------------
 
 
 @register(
@@ -551,13 +494,10 @@ def q_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_data_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expectation-suite validation (the Great-Expectations pattern as
-    one query): each rule reports its violation count and a pass
-    flag — range check, key uniqueness, referential integrity,
-    null/sign constraints. The gate a pipeline runs BEFORE publishing
-    a snapshot; at 100 TB each rule is one aggregate (or anti-join)
-    over its table, and unrelated rules parallelize as independent
-    stages of the same job.
+    """Expectation-suite validation: each rule reports its violation
+    count and a pass flag (range check, key uniqueness, referential
+    integrity, null/sign constraints). Each rule is one aggregate or
+    anti-join over its table.
     """
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
@@ -572,9 +512,9 @@ def q_data_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
             (n_violations == 0).alias("passed"),
         )
 
-    # count(when(...)) not sum(cast): an EMPTY table must yield
+    # count(when(...)) not sum(cast): an empty table must yield
     # n_violations = 0 / passed = true (the oracle's FILTER count
-    # does), not NULL / NULL — a validation gate cannot emit UNKNOWN
+    # does), not NULL / NULL
     qty_bad = F.count(
         F.when((F.col("l_quantity") < 1) | (F.col("l_quantity") > 50), 1)
     )
@@ -595,9 +535,7 @@ def q_data_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r1.unionByName(r2).unionByName(orphans).unionByName(r4).unionByName(r5)
 
 
-# ---------------------------------------------------------------------------
-# Distribution drift between corpus splits (population stability index)
-# ---------------------------------------------------------------------------
+# --- Distribution drift between corpus splits (population stability index) ---
 
 _PSI_BUCKETS = 10
 _PSI_EPS = 1e-6
@@ -633,16 +571,11 @@ _PSI_EPS = 1e-6
 )
 def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population stability index between the deterministic train/test
-    hash splits, bucketed by document length — the drift alarm a
-    pipeline fires when a new crawl stops resembling the old one
-    (PSI > 0.2 is the usual page-the-oncall line; total PSI is the
-    sum of per-bucket terms emitted here).
+    hash splits, bucketed by document length (total PSI is the sum of the
+    per-bucket terms emitted here).
 
-    Scale: one scan to bucket counts (map-side partial agg), totals
-    broadcast back; epsilon-smoothed shares keep ln() defined for
-    empty buckets; all float math runs on identical doubles in both
-    engines — shares emitted raw, only the libm-bearing psi_term
-    rounded.
+    Epsilon-smoothed shares keep ln() defined for empty buckets; shares are
+    emitted raw and only the libm-bearing psi_term is rounded.
     """
     docs = load_table(spark, sf_dir, "documents")
     s = split_hash(F.col("doc_id")) % 2
@@ -657,9 +590,8 @@ def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("bucket")
         .agg(
-            # count(when) not sum(cast): the house null-safe counting
-            # idiom — sum over an empty/all-false group is NULL where
-            # the oracle's FILTER count is 0
+            # count(when) not sum(cast): sum over an empty/all-false
+            # group is NULL where the oracle's FILTER count is 0
             F.count(F.when(F.col("s") == 0, 1)).alias("n_a"),
             F.count(F.when(F.col("s") == 1, 1)).alias("n_b"),
         )
@@ -673,11 +605,10 @@ def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_a") / F.col("ta") + _PSI_EPS).alias("pa"),
         (F.col("n_b") / F.col("tb") + _PSI_EPS).alias("pb"),
     )
-    # p_a/p_b RAW: rational + epsilon on identical doubles is
+    # p_a/p_b raw: rational + epsilon on identical doubles is
     # bit-identical across engines, while round(x, 6) breaks on
-    # 7-decimal-midpoint shares. psi_term
-    # KEEPS its round — it absorbs genuine 1-ulp ln() differences
-    # between the engines' libm, which raw output would expose.
+    # 7-decimal-midpoint shares. psi_term keeps its round: it absorbs
+    # genuine 1-ulp ln() differences between the engines' libm.
     return shares.select(
         "bucket",
         F.col("pa").alias("p_a"),
@@ -713,26 +644,17 @@ _WS_TOPK = 5
     """,
 )
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted sampling without replacement via the A-ES exponential
-    key (Efraimidis–Spirakis): rank docs per source by ln(u)/weight
-    with a DETERMINISTIC md5-derived uniform u — the importance
-    sampler behind quality-weighted data mixing, reproducible on any
-    partitioning because the randomness is a pure hash of doc_id.
-    (ln(u)/w orders identically to the textbook u^(1/w) and spends
-    one transcendental instead of two; u is one of 10^6 fixed
-    rationals, and the key rounds to 9 digits — the repo's standard
-    libm-portability guard.)
-
-    Scale shape: one narrow scan computes keys, one window shuffle on
-    source ranks them, and WindowGroupLimit prunes every partition to
-    k before the shuffle — the same top-k plan every per-group rank
-    uses here.
+    """Weighted sampling without replacement via the A-ES exponential key
+    (Efraimidis–Spirakis): rank docs per source by ln(u)/weight with a
+    deterministic md5-derived uniform u, so the sample is the same on any
+    partitioning. ln(u)/w orders identically to the textbook u^(1/w) with
+    one transcendental instead of two; u is one of 10^6 fixed rationals, and
+    the key rounds to 9 digits (the libm-portability guard).
     """
     docs = load_table(spark, sf_dir, "documents")
     u = uniform01("ws", F.col("doc_id"))
-    # + 0.0 on both twins: the key is always <= 0 and a key rounding
-    # to zero from below gives -0.0 in DuckDB but +0.0 in Spark —
-    # repr-level comparator mismatch; adding +0.0 normalizes -0.0
+    # + 0.0 on both twins: the key is always <= 0 and a key rounding to
+    # zero from below gives -0.0 in DuckDB but +0.0 in Spark
     keyed = docs.select(
         "source",
         "doc_id",
@@ -776,19 +698,12 @@ _SNAP_CUTOFF = "1998-01-01"
     """,
 )
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental-materialization audit: diff a derived table
-    (revenue per customer) between the snapshot as of ``_SNAP_CUTOFF``
-    and the current one, classifying every key as added / changed /
-    unchanged and emitting the delta for the changed set — the check
-    a pipeline runs before publishing an incremental refresh against
-    a full recompute. (Removed keys cannot occur under append-only
-    facts, so the join is LEFT from the new side; a general
-    bidirectional diff would go FULL OUTER with a 'removed' branch.)
-
-    Scale: both snapshots are partial-agg rollups of the same fact
-    scan (Catalyst reuses the scan), joined on the 8-byte group key;
-    deltas are exact decimal subtraction. The WHERE keeps output
-    proportional to churn, not to table size.
+    """Incremental-materialization audit: diff a derived table (revenue
+    per customer) between the snapshot as of ``_SNAP_CUTOFF`` and the
+    current one, classifying every key as added / changed / unchanged and
+    emitting the delta for the changed set. Removed keys cannot occur under
+    append-only facts, so the join is LEFT from the new side. Deltas are
+    exact decimal subtraction.
     """
     orders = load_table(spark, sf_dir, "orders")
     old = (

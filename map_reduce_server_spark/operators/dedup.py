@@ -1,19 +1,13 @@
-"""Deduplication operators — exact, MinHash-LSH, SimHash, n-gram
-Jaccard, embedding-cosine — over ``documents`` / ``embeddings``.
+"""Deduplication operators (exact, MinHash-LSH, SimHash, n-gram Jaccard,
+containment) over ``documents``.
 
-The reference has no dedup (its group stage merely counts distinct
-*lines*, reference ``master/__main__.py:250-253``); these are the
-north-star training-data-pipeline operators (BASELINE.json).
-
-Scale design: every variant is a shuffle-on-key plan.
-``dedup_fingerprint``/``dedup_keep_one`` group on a 60-bit
-fingerprint (8 bytes shuffled, not the document); ``dedup_exact``
-deliberately groups on the raw text column — the byte-identity
-baseline whose shuffle payload IS the document (use the fingerprint
-variants at scale). MinHash/SimHash use banding so candidate
-generation is an equi-join on (band, signature) — never an
-all-pairs product. The md5-derived hash family is engine-portable,
-so every stage has a DuckDB oracle.
+The reference has no dedup (its group stage only counts distinct lines,
+reference ``master/__main__.py:250-253``). ``dedup_fingerprint`` and
+``dedup_keep_one`` group on a 60-bit fingerprint; ``dedup_exact`` groups on
+the raw text, the byte-identity baseline. MinHash and SimHash use banding,
+so candidate generation is an equi-join on (band, signature). The
+md5-derived hash family is engine-portable, so every stage has a DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -49,25 +43,18 @@ _SQL_SHINGLES = f"""
 
 
 def doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, arr): the per-document shingle ARRAY, computed
-    entirely row-locally (zero shuffles — the round-15 pivot of the
-    whole dedup family, guide §2.3/§2.4).
+    """(doc_id, arr): the per-document distinct shingle array, computed
+    row-locally.
 
-    A (doc_id, shingle) duplicate can only arise WITHIN one document
-    (doc_id differs otherwise), so ``array_distinct`` on the per-doc
-    array yields exactly the distinct pair set without the corpus-
-    wide ``distinct()`` shuffle the round-14 code paid (equivalence
-    pinned in tests/test_dedup_shingles.py). Keeping the set AS an
-    array additionally makes per-doc sizes (``size(arr)``) and
-    pairwise intersection counts (``array_intersect`` after a
-    compact candidate join) row-local — the former verification
-    stage expanded every candidate pair by its document's full
-    shingle set (|pairs| x avg-doc-size rows through two exchanges).
+    A (doc_id, shingle) duplicate can only arise within one document, so
+    ``array_distinct`` on the per-doc array yields exactly the distinct pair
+    set with no ``distinct()`` shuffle (equivalence pinned in
+    tests/test_dedup_shingles.py). As an array, per-doc sizes
+    (``size(arr)``) and pairwise intersection counts (``array_intersect``
+    after a candidate join) are row-local too.
 
-    The documents scan is widened first: tokenize + shingling is the
-    dedup family's dominant narrow work, and a one-row-group parquet
-    file would otherwise run it on a single core (see
-    ``tables.load_table``).
+    The documents scan is widened: tokenize + shingling is the family's
+    dominant narrow work (see ``tables.load_table``).
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
     with_toks = docs.select("doc_id", word_tokens_col().alias("ts"))
@@ -97,18 +84,15 @@ def _shingle_arr_col() -> Column:
 def shingles_df(
     spark: SparkSession, sf_dir: str, distinct: bool = True
 ) -> DataFrame:
-    """(doc_id, 3-word-shingle) pairs, distinct by default — the
-    exploded view (zero shuffles; the explode is row-local).
+    """(doc_id, 3-word-shingle) pairs, distinct by default; the explode is
+    row-local.
 
-    Deliberately explodes the array expression INLINE rather than
-    selecting :func:`doc_shingle_arrays`'s ``arr`` column first: a
-    projected-then-exploded higher-order-function column measured 8×
-    slower at sf0.1 (the optimizer re-evaluates the interpreted
-    lambda expression below the exchange instead of keeping it fused
-    with the Generate — dedup_minhash_lsh 1.8 s vs 14.2 s). Consumers
-    that need the ARRAYS use ``doc_shingle_arrays(...).transform(
-    stage_cut)``, where the checkpoint materializes ``arr`` exactly
-    once and the hazard cannot arise.
+    Explodes the array expression inline rather than selecting
+    :func:`doc_shingle_arrays`'s ``arr`` column first: a projected
+    higher-order-function column that is then exploded gets its
+    interpreted lambda re-evaluated below the exchange (docs/SCALING.md,
+    dedup). Consumers that need the arrays cut ``doc_shingle_arrays``, so
+    ``arr`` is materialized once.
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
     with_toks = docs.select("doc_id", word_tokens_col().alias("ts"))
@@ -130,13 +114,10 @@ def shingles_df(
     """,
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: hash-group on the full text, keep min doc_id.
-
-    NOT widened (round 15, measured): the scan feeds straight into a
-    groupBy whose exchange already redistributes every row, and the
-    only narrow work is hashing — widening here just moves
-    the full text payload through a second exchange (0.36 s -> 0.77 s
-    at sf0.1). Same verdict for dedup_fingerprint / dedup_keep_one."""
+    """Exact dedup: hash-group on the full text, keep min doc_id. Not
+    widened: the groupBy exchange already redistributes every row and the
+    only narrow work is hashing. The same holds for dedup_fingerprint and
+    dedup_keep_one."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.groupBy("text").agg(
         F.min("doc_id").alias("keeper_id"), F.count("*").alias("n_copies")
@@ -158,10 +139,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalized-fingerprint dedup: at 100 TB this shuffles 8-byte
-    keys instead of documents — the scale path for exact dedup.
-    Not widened — see dedup_exact (md5 of the text is too light to
-    pay a payload exchange for; measured 0.36 s -> 0.96 s)."""
+    """Normalized-fingerprint dedup: groups on an 8-byte key instead of
+    the document. Not widened (see dedup_exact)."""
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", md5_long(norm_text_col()).alias("fingerprint"))
@@ -194,12 +173,9 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 most-similar document pairs by exact 3-gram Jaccard.
-
-    Distributed formulation: explode shingles, equi-join on shingle
-    (never an all-pairs product), count common, join sizes. At scale
-    the shingle join gets prefix filtering / LSH (see
-    ``dedup_minhash_lsh``) — this exact variant is the ground truth.
+    """Top-20 most-similar document pairs by exact 3-gram Jaccard:
+    explode shingles, equi-join on shingle, count common, attach sizes. The
+    ground truth for the prefix-filtered and LSH variants.
     """
     # kept: both self-join sides and sz read darr; uncut the shingling
     # runs three times. The explode and size(arr) are row-local.
@@ -242,27 +218,23 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MINHASH_K = 12  # signature length
 _MINHASH_R = 2  # rows per band → 6 bands of r=2
 _MINHASH_B = _MINHASH_K // _MINHASH_R
-# Default hot-bucket cap for BOTH LSH families (minhash + simhash):
-# a band bucket of n docs expands to n²/2 candidate pairs, so one
-# ubiquitous key (boilerplate text) is the single quadratic hazard at
-# 100 TB. Buckets above the cap are dropped BEFORE pair expansion —
-# their members are exact-duplicate-heavy and already caught by
-# dedup_fingerprint. The cap rule is plain SQL (HAVING COUNT(*) <=
-# cap on the band CTE), so the DuckDB oracles replay it exactly and
-# the scale-safe plan is the one with the green driver row.
+# Default hot-bucket cap for both LSH families (minhash + simhash): a band
+# bucket of n docs expands to n²/2 candidate pairs. Buckets above the cap
+# are dropped before pair expansion; their members are
+# exact-duplicate-heavy and caught by dedup_fingerprint. The cap rule is
+# plain SQL (HAVING COUNT(*) <= cap on the band CTE), so the DuckDB oracles
+# replay it exactly.
 _LSH_BUCKET_CAP = 1000
 
 
 def _cap_hot_buckets(bands: DataFrame, cap: int) -> DataFrame:
-    """Drop (band, bkey) buckets larger than ``cap`` BEFORE pair
-    expansion — the ONE implementation of the hot-bucket cap both
-    LSH families share, so the rule cannot drift between them (their
-    oracles replay the identical HAVING form).
+    """Drop (band, bkey) buckets larger than ``cap`` before pair expansion:
+    the one implementation of the hot-bucket cap both LSH families share
+    (their oracles replay the identical HAVING form).
 
-    Window count, NOT a groupBy+semi-join: the join formulation
-    re-evaluates the whole signature subtree for the counting branch
-    (measured 2.4× the query at sf0.1), while the window rides the
-    same (band, bkey) shuffle the pair join needs anyway."""
+    A window count, not a groupBy + semi-join: the join form re-evaluates
+    the signature subtree for the counting branch, while the window rides
+    the (band, bkey) shuffle the pair join needs anyway."""
     w = Window.partitionBy("band", "bkey")
     return (
         bands.withColumn("bucket_n", F.count("*").over(w))
@@ -285,18 +257,9 @@ def _verified_common(cand: DataFrame, darr: DataFrame) -> DataFrame:
     and ``dedup_containment`` (the oracles' common CTE shape).
     Returns (doc_a, doc_b, n_common, n_a, n_b).
 
-    Array formulation (round 15): attach each side's distinct
-    shingle ARRAY with a compact equi-join, then count the
-    intersection row-locally — ``size(array_intersect(a, b))`` over
-    distinct-element arrays IS |A∩B|, and the sizes come free as
-    ``size(arr)``. The round-14 shape instead joined the full
-    exploded shingle table twice, expanding every candidate pair by
-    its document's whole shingle set (|pairs| × avg-doc-size rows
-    through two exchanges) just to recount what the two rows already
-    hold; the sz table and its groupBy are gone with it (guide §2.3
-    "shuffle keys and metadata instead of payloads" — here the
-    payload IS the decision input, so it attaches once per side and
-    never expands)."""
+    Each side's distinct shingle array attaches with an equi-join and the
+    intersection counts row-locally: ``size(array_intersect(a, b))`` over
+    distinct-element arrays is |A∩B|, and the sizes are ``size(arr)``."""
     aa = darr.select(F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"))
     bb = darr.select(F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b"))
     return (
@@ -317,24 +280,15 @@ def _verified_common(cand: DataFrame, darr: DataFrame) -> DataFrame:
 def minhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, m0..m{K-1}): the K-position min-wise signature row.
 
-    One-pass formulation: each (doc, shingle) row projects all K
-    seeded hashes as columns and a single groupBy(doc_id) takes the K
-    mins (partial aggregation combines map-side, so the shuffle
-    carries K strings per doc per partition — not K× the shingle
-    set). ~2× faster than exploding a seeds dimension and equivalent
-    value-for-value. Shingles are taken non-distinct: MIN absorbs
-    duplicates, so the pre-aggregation dedup shuffle of the full
-    shingle set (the plan's largest intermediate) is pure waste.
+    One-pass formulation: each (doc, shingle) row projects all K seeded
+    hashes as columns and a single groupBy(doc_id) takes the K mins (partial
+    aggregation combines map-side). Shingles are taken non-distinct: MIN
+    absorbs duplicates.
 
-    Round-15 negative result, kept on purpose: the "obvious" shuffle
-    removal — ``array_min(transform(arr, s -> md5(i:s)))`` row-local
-    over the per-doc shingle array — measured 4× SLOWER at sf0.1
-    (8.5 s vs 2.1 s for the whole LSH query) because higher-order
-    functions evaluate their lambda interpreted, per element, outside
-    whole-stage codegen, while the exploded projection keeps md5 in
-    codegen. The exchange it saved carries only K strings per doc
-    per map partition. Guide §1.1's warning that the "ideal" plan
-    loses to a gotcha, in the concrete.
+    The row-local ``array_min(transform(arr, s -> md5(i:s)))`` form, which
+    drops this shuffle, is slower: the lambda runs interpreted per element,
+    outside whole-stage codegen, where the exploded projection keeps md5 in
+    codegen (docs/SCALING.md, dedup).
     """
     sh = shingles_df(spark, sf_dir, distinct=False)
     projected = sh.select(
@@ -352,12 +306,9 @@ def minhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_band_keys(wide: DataFrame) -> DataFrame:
     """(doc_id, band, bkey): r-row banding of the signature.
 
-    Band j's key concatenates signature positions
-    ``m[r·j] .. m[r·j+r-1]``: a pair collides on band j iff ALL r
-    positions agree, so P(candidate) = 1 − (1 − J^r)^b — the
-    superlinear candidate cutoff that keeps LSH usable at 100 TB
-    (r=1 banding degrades to "any position agrees", whose hot
-    buckets expand quadratically).
+    Band j's key concatenates signature positions ``m[r·j] .. m[r·j+r-1]``:
+    a pair collides on band j iff all r positions agree, so P(candidate) =
+    1 − (1 − J^r)^b.
     """
     band_cols = [
         F.concat_ws(
@@ -378,15 +329,9 @@ def minhash_candidate_pairs(
 ) -> DataFrame:
     """Distinct candidate (doc_a < doc_b) pairs from band collisions.
 
-    ``max_bucket_size`` (default ``_LSH_BUCKET_CAP``): hot-bucket cap
-    — LSH's one scale hazard is a ubiquitous band key (e.g.
-    boilerplate text) whose bucket of n docs expands to n²/2 pairs.
-    Buckets larger than the cap are dropped BEFORE pair expansion
-    (one extra aggregation on the band keys, negligible vs the join),
-    bounding any single bucket's output; dropped buckets are
-    exact-duplicate-heavy and are caught by ``dedup_fingerprint``
-    upstream. The registered query runs WITH the cap and the DuckDB
-    oracle replays the identical HAVING rule.
+    ``max_bucket_size`` (default ``_LSH_BUCKET_CAP``) drops band buckets
+    larger than the cap before pair expansion (see ``_LSH_BUCKET_CAP``); the
+    DuckDB oracle replays the identical HAVING rule.
     """
     bands = _cap_hot_buckets(minhash_band_keys(wide), max_bucket_size)
     a = bands.alias("a")
@@ -446,22 +391,17 @@ _SQL_MINHASH_CAND = f"""
     bench=True,
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidate pairs (shingle → K minhashes → banded
-    bucket join).
+    """MinHash-LSH candidate pairs (shingle → K minhashes → banded bucket
+    join).
 
     The min-wise hash family is ``min(md5(seed:shingle))`` per seed
-    (lexicographic min over hex digests — a valid permutation
-    approximation, engine-portable). Banding is b=6 bands of r=2
-    rows: a pair is a candidate iff BOTH positions of some band
-    agree, P(candidate) = 1-(1-J²)^6 — ≈99.8% at J=0.8 (≥99.9% from
-    J≈0.85) while unrelated pairs (J≈0.1) become candidates ~12×
-    more rarely than under r=1 banding (0.059 vs 0.718), which is
-    what keeps hot buckets from expanding quadratically at 100 TB. Candidate generation is a self-equi-join
-    on (band, bkey): the shuffle carries b compact keys per document,
-    never the corpus and never all pairs. The registered plan applies
-    the ``_LSH_BUCKET_CAP`` hot-bucket cap (mirrored in the oracle's
-    HAVING) so the plan with the green driver row is the one you'd
-    run on a skewed 100 TB corpus.
+    (lexicographic min over hex digests: a valid permutation approximation,
+    engine-portable). Banding is b=6 bands of r=2 rows: a pair is a
+    candidate iff both positions of some band agree, P(candidate) =
+    1-(1-J²)^6, ≈99.8% at J=0.8, while unrelated pairs (J≈0.1) become
+    candidates 0.059 of the time against 0.718 under r=1 banding.
+    Candidate generation is a self-equi-join on (band, bkey) with the
+    ``_LSH_BUCKET_CAP`` hot-bucket cap, mirrored in the oracle's HAVING.
     """
     return minhash_candidate_pairs(minhash_wide(spark, sf_dir))
 
@@ -480,13 +420,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The keep-one-row-per-duplicate-group pattern: window
-    row_number over the normalized fingerprint, keep the smallest
-    doc_id — the projection-preserving form of dedup (vs
-    dedup_exact's aggregate form). One shuffle on the 8-byte
-    fingerprint at any scale. Not widened — see dedup_exact (the
-    window's exchange already redistributes; measured 2× slower
-    with the extra payload exchange)."""
+    """Keep one row per duplicate group: row_number over the normalized
+    fingerprint, keep the smallest doc_id; the projection-preserving form of
+    dedup (dedup_exact is the aggregate form). Not widened (see
+    dedup_exact)."""
     docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy(md5_long(norm_text_col())).orderBy("doc_id")
     return (
@@ -516,10 +453,8 @@ def dedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard estimation from signature agreement: for every LSH
-    candidate pair, est_J = (#agreeing minhash positions)/K — the
-    sketch-side similarity used to rank/filter candidates without
-    touching the documents again (at 100 TB the signatures are 12×32
-    bytes per doc; the texts never reshuffle)."""
+    candidate pair, est_J = (#agreeing minhash positions)/K, computed from
+    the signatures without touching the documents again."""
     # kept: candidates and agreement both read wide; uncut the
     # signatures are computed twice
     wide = minhash_wide(spark, sf_dir).transform(stage_cut)
@@ -647,23 +582,18 @@ def simhash_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash fingerprint per document (distinct-token basis).
 
-    64 bits (vs round-1's 32) is what makes banding usable at scale:
-    with 4 bands the band key is 16 bits (65,536 values), so bucket
-    occupancy stays sub-linear in corpus size where 8-bit keys (256
-    values) guaranteed every bucket grows linearly and pair
-    expansion quadratically. Near-dup pairing bands the fingerprint
-    (pigeonhole: hamming ≤ 3 ⇒ one of 4 bands equal) — see
-    ``dedup_simhash_pairs``.
+    With 4 bands the band key is 16 bits (65,536 values); near-dup pairing
+    bands the fingerprint (pigeonhole: hamming ≤ 3 ⇒ one of 4 bands equal).
+    See ``dedup_simhash_pairs``.
     """
     return simhash_halves(spark, sf_dir).select(
         "doc_id", F.expr(_SQL_SIMHASH64).cast("bigint").alias("simhash")
     )
 
 
-# SimHash near-dup cutoff — interpolated into the oracle like every
-# other twin-shared threshold so Spark and DuckDB cannot disagree.
-# 4 bands guarantee recall for hamming <= 3 (pigeonhole); <= 6 keeps
-# high-but-not-total recall, the standard LSH tradeoff.
+# SimHash near-dup cutoff, interpolated into the oracle like every other
+# twin-shared threshold. 4 bands guarantee recall for hamming <= 3
+# (pigeonhole); <= 6 keeps high-but-not-total recall.
 _SIMHASH_MAX_HAMMING = 6
 
 
@@ -674,8 +604,7 @@ def simhash_pairs(
     4 bands × 16-bit keys, equi-join per band, verify hamming.
 
     ``max_bucket_size`` (default ``_LSH_BUCKET_CAP``) caps hot band
-    buckets before pair expansion (same rationale as
-    ``minhash_candidate_pairs``)."""
+    buckets before pair expansion (see ``_LSH_BUCKET_CAP``)."""
     bands_idx = (
         halves.sparkSession.range(4)
         .select(F.col("id").cast("int").alias("band"))
@@ -748,16 +677,12 @@ def simhash_pairs(
     """,
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: band the 64-bit fingerprint into 4
-    16-bit keys, equi-join on (band, key), verify hamming ≤ 6.
+    """SimHash near-dup pairs: band the 64-bit fingerprint into 4 16-bit
+    keys, equi-join on (band, key), verify hamming ≤ 6.
 
-    4 bands *guarantee* recall for hamming ≤ 3 (pigeonhole); ≤ 6
-    keeps high-but-not-total recall — the standard LSH tradeoff, and
-    the oracle applies the identical candidate rule (including the
-    ``_LSH_BUCKET_CAP`` hot-bucket HAVING cap) so results agree.
-    The 16-bit band keyspace (65,536 values/band) is what
-    survives scale-up: round-1's 8-bit keys put ~n/256 docs in every
-    bucket, expanding pairs quadratically with corpus size.
+    4 bands guarantee recall for hamming ≤ 3 (pigeonhole); ≤ 6 keeps
+    high-but-not-total recall. The oracle applies the identical candidate
+    rule, including the ``_LSH_BUCKET_CAP`` HAVING cap.
     """
     return simhash_pairs(simhash_halves(spark, sf_dir))
 
@@ -777,14 +702,11 @@ def ranked_prefix(
     ``freq_cap`` additionally drops prefix shingles with global
     frequency above the cap (containment's k²-hazard guard).
 
-    Takes the per-doc DISTINCT shingle arrays
-    (:func:`doc_shingle_arrays`): per-doc size is ``size(arr)``
-    row-locally (the former sz groupBy + join are gone), so the only
-    exchanges left are the global frequency aggregate and the
-    ranking window's doc_id partition. The distinct-array input is
-    load-bearing — duplicates would inflate freq and sizes and
-    occupy multiple prefix ranks, silently breaking the PPJoin
-    recall guarantee against the DISTINCT-based oracles."""
+    Takes the per-doc distinct shingle arrays (:func:`doc_shingle_arrays`),
+    so per-doc size is ``size(arr)``. The distinct-array input is
+    load-bearing: duplicates would inflate freq and sizes and occupy
+    multiple prefix ranks, breaking the PPJoin recall guarantee against the
+    DISTINCT-based oracles."""
     sh = darr.select(
         "doc_id", F.size("arr").alias("n"), F.explode("arr").alias("shingle")
     )
@@ -840,29 +762,18 @@ def ranked_prefix(
     """,
 )
 def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT Jaccard ≥ 0.5 pairs with PPJoin-style prefix filtering —
-    the scale path for exact set-similarity joins.
+    """Exact Jaccard ≥ 0.5 pairs with PPJoin-style prefix filtering.
 
-    ``dedup_ngram_jaccard`` joins on EVERY shared shingle, so a stop
-    shingle shared by k documents alone contributes k²/2 join rows.
-    Prefix filtering orders each document's shingles by ascending
-    global frequency (tie-break: the shingle itself — a total order
-    both engines agree on) and generates candidates only from each
-    document's first ⌊n/2⌋+1 shingles: any pair with J ≥ t must
-    share a prefix element (prefix length n − ⌈t·n⌉ + 1, here
-    integer-exact as n//2 + 1), so recall is provably 100% while
-    frequent shingles — precisely the quadratic ones — drop out of
-    candidate generation unless they are rare enough to sit in a
-    prefix. Verification then counts common shingles only for
-    candidate pairs. The per-doc ranking window partitions by doc_id
-    (no global sort); tests pin prefix-vs-full equality on the real
-    corpus.
-
-    The per-doc array table feeds THREE consumers (frequency/ranking,
-    verification side A, verification side B) — materialize it once
-    (one row per document, the family's smallest possible reusable
-    intermediate; the round-14 code checkpointed the EXPLODED
-    shingle table instead and re-shuffled it per consumer).
+    ``dedup_ngram_jaccard`` joins on every shared shingle, so a stop
+    shingle shared by k documents alone contributes k²/2 join rows. Prefix
+    filtering orders each document's shingles by ascending global frequency
+    (tie-break: the shingle itself, a total order both engines agree on)
+    and generates candidates only from each document's first ⌊n/2⌋+1
+    shingles: any pair with J ≥ t must share a prefix element (prefix
+    length n − ⌈t·n⌉ + 1, here integer-exact as n//2 + 1), so recall is
+    100% while frequent shingles drop out of candidate generation.
+    Verification counts common shingles only for candidate pairs; tests pin
+    prefix-vs-full equality on the real corpus.
     """
     # kept: ranking and both verification sides read darr
     darr = doc_shingle_arrays(spark, sf_dir).transform(stage_cut)
@@ -876,21 +787,17 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             # PPJoin length filter, lossless at t=0.5: J >= t forces
             # min(n_a,n_b) >= t*max(n_a,n_b), so size-incompatible
-            # pairs can never verify — drop them BEFORE the distinct
-            # and the verification join (measured −24% candidates,
-            # −20-30% wall at sf0.1, byte-identical output).
+            # pairs can never verify; drop them before the distinct
+            # and the verification join.
             & (F.col("b.n") * 2 >= F.col("a.n"))
             & (F.col("a.n") * 2 >= F.col("b.n"))
-            # PPJoin POSITIONAL filter (round 15), lossless at t=0.5:
-            # a colliding prefix shingle at ranks (r_a, r_b) bounds
-            # the overlap by 1 + min(n_a - r_a, n_b - r_b), and
-            # J >= t needs overlap >= ceil((n_a+n_b)/3); both sides
-            # rank in the SAME global (f, shingle) order, so a true
-            # pair's FIRST common prefix shingle has the minimal
-            # ranks on both sides and always passes — the integer
-            # form below is exact (no division). Measured −28% wall
-            # at sf0.1 (4.28 -> 3.08 s), output exceptAll-identical
-            # at sf0.01 and sf0.1.
+            # PPJoin positional filter, lossless at t=0.5: a colliding
+            # prefix shingle at ranks (r_a, r_b) bounds the overlap by
+            # 1 + min(n_a - r_a, n_b - r_b), and J >= t needs overlap >=
+            # ceil((n_a+n_b)/3); both sides rank in the same global
+            # (f, shingle) order, so a true pair's first common prefix
+            # shingle has the minimal ranks on both sides and always
+            # passes. The integer form below is exact (no division).
             & (
                 F.col("a.n") + F.col("b.n")
                 <= 3
@@ -909,9 +816,9 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = F.col("n_common").cast("double") / (
         F.col("n_a") + F.col("n_b") - F.col("n_common")
     )
-    # RAW double, no round: the ratio of identically-computed
+    # Raw double, no round: the ratio of identically-computed
     # integers is bit-identical on both engines, while round(x, 6)
-    # breaks on non-dyadic 7-decimal midpoints (e.g. 321/640 —
+    # breaks on non-dyadic 7-decimal midpoints (e.g. 321/640:
     # Spark HALF_UP on the shortest repr vs DuckDB on the binary
     # value).
     return (
@@ -964,33 +871,25 @@ _CT_FREQ_CAP = 1000  # prefix shingles with global freq above this are skipped
     """,
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ASYMMETRIC near-dup: shingle containment C(A,B) = |A∩B|/|A| ≥
-    0.8 in either direction — catches a short document embedded in a
-    long one (quotes, boilerplate wrappers, chunked re-posts), which
-    symmetric Jaccard structurally misses (a 10-shingle doc inside a
-    1000-shingle doc has J ≈ 0.01).
+    """Asymmetric near-dup: shingle containment C(A,B) = |A∩B|/|A| ≥ 0.8
+    in either direction, which catches a short document embedded in a long
+    one (a 10-shingle doc inside a 1000-shingle doc has J ≈ 0.01).
 
-    Candidate generation: containment ≥ t guarantees any
-    (1−t)·|A|+1-element prefix of A (in ANY global order) intersects
-    B's FULL shingle set — our Jaccard prefix (n//2+1 ≥ 0.2n+1 at
-    t=0.8) over-covers, so recall is complete EXCEPT where the
-    frequency cap bites: prefix shingles with global frequency >
-    1000 are skipped (the k²-hazard guard, same policy as the LSH
-    bucket cap, mirrored in the oracle so both engines agree
-    exactly). The probe joins doc prefixes against the full shingle
-    table — compact keys, hash-distributed, AQE-splittable — then
-    exact intersection counts verify only the candidates.
+    Containment ≥ t guarantees any (1−t)·|A|+1-element prefix of A (in any
+    global order) intersects B's full shingle set; the Jaccard prefix
+    (n//2+1 ≥ 0.2n+1 at t=0.8) over-covers, so recall is complete except
+    where the frequency cap bites: prefix shingles with global frequency >
+    ``_CT_FREQ_CAP`` are skipped, in the oracle too. The probe joins doc
+    prefixes against the full shingle table, then exact intersection counts
+    verify only the candidates.
     """
     # kept: the prefixes, the probe side and verification read darr
     darr = doc_shingle_arrays(spark, sf_dir).transform(stage_cut)
     prefix = ranked_prefix(darr, freq_cap=_CT_FREQ_CAP)
     p = prefix.alias("p")
-    # full shingle probe side: row-local explode of the checkpointed
-    # arrays — recomputing it per consumer is a cheap narrow op now
+    # full shingle probe side: row-local explode of the cut arrays
     s = darr.select("doc_id", F.explode("arr").alias("shingle")).alias("s")
-    # one probe pass: least/greatest normalizes the unordered pair —
-    # the previous two filtered branches unioned the SAME join twice
-    # (exchange reuse saves the shuffle write, not the join compute)
+    # one probe pass: least/greatest normalizes the unordered pair
     cand = (
         p.join(s, F.col("p.shingle") == F.col("s.shingle"))
         .filter(F.col("p.doc_id") != F.col("s.doc_id"))

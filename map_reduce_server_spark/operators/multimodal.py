@@ -1,61 +1,47 @@
-"""Multimodal column plumbing: opaque binary payloads + typed
-metadata + Python decode stages over Arrow.
+"""Multimodal column plumbing: opaque binary payloads + typed metadata + Python
+decode stages over Arrow.
 
-Twelve wire formats are REAL end to end — pure numpy/stdlib codecs run
-inside Arrow-batched ``mapInPandas`` stages and are value-checked by
-oracles that recompute pixel/sample statistics from the md5 hex the
-files are built from:
+Twelve wire formats are real end to end. Pure numpy/stdlib codecs run inside
+Arrow-batched ``mapInPandas`` stages and are value-checked by oracles that
+recompute pixel/sample statistics from the md5 hex the files are built from:
 
 - PNG (:mod:`..functions.png`): chunk framing, CRC-32, DEFLATE,
   all five scanline filters, nearest-neighbor resize;
-- GIF (:mod:`..functions.gif`): a third compression family —
-  dictionary coding (variable-width LZW), identity gray palette,
-  sub-block framing;
+- GIF (:mod:`..functions.gif`): variable-width LZW, identity gray
+  palette, sub-block framing;
 - PCM WAV (:mod:`..functions.wavcodec`): RIFF framing, 16-bit LE;
 - JPEG (:mod:`..functions.jpeg`): DCT, quantization, Annex K
-  Huffman entropy coding — grayscale AND YCbCr color (4:4:4/4:2:0)
-  AND progressive (SOF2: spectral selection + successive
-  approximation), each with its own registered decode query;
-- G.711 compressed audio (:mod:`..functions.g711`): logarithmic
-  companding, BOTH laws (WAVE_FORMAT_MULAW and WAVE_FORMAT_ALAW
-  containers, one registered query each);
-- IMA ADPCM (:mod:`..functions.adpcm`): the STATEFUL family —
-  adaptive differential PCM (WAVE_FORMAT_IMA_ADPCM 0x11, block
-  headers, fact-chunk sample counts), oracle-replayed with a
-  recursive CTE over the predictor state machine;
-- FLAC (:mod:`..functions.flac`): the predictive family — fixed
-  polynomial predictors, Rice-coded residuals, CRC-8/CRC-16 and
-  audio-MD5 integrity, all verified on decode;
-- Motion-JPEG AVI video (:mod:`..functions.avi`): RIFF 'AVI '
-  framing over per-frame JPEGs, stride frame sampling;
+  Huffman coding; grayscale, YCbCr color (4:4:4/4:2:0) and
+  progressive (SOF2), each with its own decode query;
+- G.711 (:mod:`..functions.g711`): mu-law and A-law companding;
+- IMA ADPCM (:mod:`..functions.adpcm`): the stateful family,
+  oracle-replayed with a recursive CTE over the predictor state;
+- FLAC (:mod:`..functions.flac`): fixed polynomial predictors,
+  Rice-coded residuals, CRC-8/CRC-16 and audio-MD5, all verified on
+  decode;
+- Motion-JPEG AVI (:mod:`..functions.avi`): RIFF 'AVI ' framing over
+  per-frame JPEGs, stride frame sampling;
 - TIFF, BMP and TGA (:mod:`..functions.tiff`, ``.bmp``, ``.tga``):
   tag-directory offsets, bottom-up padded rows, run-length packets;
 - AIFF (:mod:`..functions.aiff`): big-endian IFF chunks, 80-bit
   extended sample rate.
 
-Every codec leg is the same one-stage plan, a single row-wise Arrow
-stage (:func:`_rowwise`): its SQL hex recipe feeds one plain per-row
-function that encodes the file (``hex -> bytes``) and decodes it into
-a stats tuple (``bytes -> tuple``), so the encoded bytes never leave
-the Python worker; a Spark projection does the rounding. Formats that
-need codec libraries this project does not ship — perceptual audio
-(mp3/ogg), inter-frame video (H.264) — have no query.
-``multimodal_decode``/``_features`` run the same stage over a
-synthetic 32-byte payload, and ``multimodal_meta`` projects its
-metadata with no Python stage at all.
+Every codec leg is one row-wise Arrow stage (:func:`_rowwise`): its SQL hex
+recipe feeds one per-row function that encodes the file (``hex -> bytes``) and
+decodes it into a stats tuple (``bytes -> tuple``), so the encoded bytes never
+leave the Python worker; a Spark projection does the rounding.
+``multimodal_decode``/``_features`` run the same stage over a synthetic 32-byte
+payload, and ``multimodal_meta`` has no Python stage.
 
-NULL policy shared by every query and oracle twin: a NULL text has
-no payload (md5(NULL) is NULL in both engines), so every
-payload-derived field is NULL — :func:`_rowwise` emits NULL outputs
-for a NULL input instead of crashing, and the oracles derive their
-per-row constants (byte_len, width, framerate, ...) from the payload
+NULL policy shared by every query and oracle twin: a NULL text has no payload
+(md5(NULL) is NULL in both engines), so every payload-derived field is NULL.
+:func:`_rowwise` emits NULL outputs for a NULL input, and the oracles derive
+their per-row constants (byte_len, width, framerate, ...) from the payload
 expression so they go NULL on the same rows.
 
-Scan width: six heavy legs (jpeg, jpeg_progressive, jpeg_color, video,
-gif, flac) load ``documents`` with ``widen=True``. Their Python decode
-otherwise runs in the single task a one-row-group scan yields
-(jpeg_color 8.4 -> 1.5 s, video 10.5 -> 1.7 s at sf0.1 on local[32]);
-the light legs measured a wash or a loss and stay unwidened.
+Six heavy legs (jpeg, jpeg_progressive, jpeg_color, video, gif, flac) load
+``documents`` with ``widen=True`` so their decode is not one task
+(docs/SCALING.md, multimodal).
 """
 
 from __future__ import annotations
@@ -128,8 +114,7 @@ def _px_stats(decode):
 
 
 def _sample_stats(rate: int, s: list) -> tuple:
-    """Per-clip sample statistics (``_AUDIO_SCHEMA``) — the cheap
-    audio-quality screen a speech-data pipeline runs first."""
+    """Per-clip sample statistics (``_AUDIO_SCHEMA``)."""
     return (
         rate,
         len(s),
@@ -144,22 +129,19 @@ def _audio_stats(decode):
 
 
 def _px_stats_select(stats: DataFrame) -> DataFrame:
-    """Shared output projection for the single-image pixel-stats
-    queries: ONE definition of the 6-digit mean rounding the oracles
-    replay.
+    """Shared output projection for the single-image pixel-stats queries: one
+    definition of the 6-digit mean rounding the oracles replay.
 
-    Why round(…, 6) survives here when the sql_davg policy removed
-    it from pure-arithmetic queries: mean_px is ``integer_sum / d``
-    for a FIXED small divisor (d ∈ {12, 24, 36, 48}), so the reachable
-    input set is finite — k/d for k in [0, 255·d]. The Spark-vs-
-    DuckDB round divergence class needs a value whose double sits on
-    a 7-decimal midpoint boundary; an EXHAUSTIVE cross-engine sweep
-    of these domains (real Spark vs real DuckDB) found zero
-    disagreements, so the rounding is tie-free by enumeration, not
-    by luck — pinned in
-    tests/test_multimodal.py::test_mean_px_round_tie_free_domains.
-    (The color leg needs no such proof: its means are dyadic
-    sums/1024 and /4, exact in both engines.)"""
+    round(…, 6) is safe here although pure-arithmetic queries avoid it: mean_px
+    is ``integer_sum / d`` for a fixed small divisor (d ∈ {12, 24, 36, 48}), so
+    the reachable inputs are finite, k/d for k in [0, 255·d]. The
+    Spark-vs-DuckDB round divergence needs a double on a 7-decimal midpoint
+    boundary; an exhaustive cross-engine sweep of these domains found zero
+    disagreements, so the rounding is tie-free by enumeration (pinned in
+    tests/test_multimodal.py::test_mean_px_round_tie_free_domains). The color
+    leg needs no such proof: its means are dyadic sums/1024 and /4, exact in
+    both engines.
+    """
     return stats.select(
         "doc_id",
         "width",
@@ -182,10 +164,9 @@ def _audio_stats_select(stats: DataFrame) -> DataFrame:
     )
 
 
-# ONE definition of the synthetic 32-byte payload's hex, shared by
-# with_synthetic_payload's oracle twins (features/meta/decode) —
-# editing the payload recipe in one place must not desynchronize
-# them. NULL text → NULL hex → NULL-derived fields in both engines.
+# One definition of the synthetic 32-byte payload's hex, shared by
+# with_synthetic_payload's oracle twins (features/meta/decode). NULL text →
+# NULL hex → NULL-derived fields in both engines.
 _SQL_PAYLOAD_HEX = "md5(text) || md5('x' || text)"
 
 
@@ -201,9 +182,8 @@ def _fmt() -> Column:
 def with_synthetic_payload(docs: DataFrame) -> DataFrame:
     """Attach a synthetic binary payload + metadata struct to each doc.
 
-    Payload = unhex(md5(text)) ⧺ unhex(md5('x'||text)) — 32
-    deterministic bytes standing in for image bytes. Metadata mirrors
-    what a real ingest would carry (format, nominal size).
+    Payload = unhex(md5(text)) ⧺ unhex(md5('x'||text)): 32 deterministic bytes
+    standing in for image bytes, plus format and nominal size metadata.
     """
     payload = F.concat(
         F.unhex(F.md5(F.col("text"))),
@@ -219,8 +199,6 @@ def with_synthetic_payload(docs: DataFrame) -> DataFrame:
         ).alias("meta"),
     )
 
-
-# --- real PNG codec path ----------------------------------------------------
 
 _PNG_W, _PNG_H = 4, 3  # synthetic image dims: 36 RGB bytes from md5 hex
 _RS_W, _RS_H = 2, 2
@@ -267,14 +245,11 @@ _SQL_PNG_HEX = f"substr({_SQL_PIX_HEX}, 1, {_PNG_W * _PNG_H * 3 * 2})"
     """,
 )
 def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round-trip: encode each document's md5-derived
-    pixels as an actual PNG file (signature, chunks, CRC-32, DEFLATE)
-    and decode it back with the pure-stdlib parser (CRC-checked
-    parse, inflate, unfilter). The oracle recomputes the identical
-    pixel statistics straight from the md5 hex, so a bug anywhere in
-    encode, chunk framing, compression, or unfiltering breaks the
-    hash match. Every other wire format in the module docstring gets
-    the same treatment in its own ``multimodal_decode_*`` query."""
+    """PNG round-trip: encode each document's md5-derived pixels as a PNG file
+    (signature, chunks, CRC-32, DEFLATE) and decode it with the pure-stdlib
+    parser. The oracle recomputes the pixel statistics from the md5 hex, so a
+    bug in encode, framing, compression or unfiltering breaks the hash match.
+    """
     docs = load_table(spark, sf_dir, "documents")
     stats = _px_stats(png.decode_rgb8)
     return _px_stats_select(
@@ -303,11 +278,11 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full image pipeline in one stage: encode → REAL resize (decode,
-    nearest-neighbor 4x3 → 2x2, re-encode) → decode + stats. The
-    oracle selects exactly the 12 bytes nearest-neighbor sampling
-    keeps (src = floor(dst·src/dst) ⇒ rows {{0,1}}, cols {{0,2}}), so
-    the resampling arithmetic is value-checked too."""
+    """Encode → resize (decode, nearest-neighbor 4x3 → 2x2, re-encode) → decode
+    + stats in one stage. The oracle selects exactly the 12 bytes
+    nearest-neighbor sampling keeps (src = floor(dst·src/dst) ⇒ rows {{0,1}},
+    cols {{0,2}}).
+    """
     docs = load_table(spark, sf_dir, "documents")
     stats = _px_stats(png.decode_rgb8)
     return _px_stats_select(
@@ -341,9 +316,9 @@ def multimodal_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature extraction over binary payloads — byte statistics (a
-    real build plugs an image/audio model in here), oracle-checked by
-    recomputing them from the md5 hex the payload was built from."""
+    """Byte statistics over binary payloads, oracle-checked by recomputing them
+    from the md5 hex the payload was built from.
+    """
     docs = load_table(spark, sf_dir, "documents")
     return _rowwise(
         with_synthetic_payload(docs),
@@ -389,14 +364,9 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched decode over binary payloads.
-
-    The decoder reads the byte length and the first two payload bytes
-    as width/height; since the payload is unhex(md5(text)), the
-    oracle recomputes the identical values from the md5 hex —
-    validating the whole binary → mapInPandas → typed-features
-    pipeline. ``fmt`` comes from ``doc_id`` in Spark, so a NULL
-    payload keeps it.
+    """Arrow-batched decode over binary payloads: byte length, and the first
+    two payload bytes as width/height, which the oracle recomputes from the md5
+    hex. ``fmt`` comes from ``doc_id`` in Spark, so a NULL payload keeps it.
     """
     docs = load_table(spark, sf_dir, "documents")
     decoded = _rowwise(
@@ -428,8 +398,6 @@ def _sql_int16s(hex_sql: str, n: int) -> str:
                 >= 128 THEN 65536 ELSE 0 END)
 """
 
-
-# --- real WAV codec path ----------------------------------------------------
 
 _WAV_N = 32          # samples per clip
 _WAV_RATE = 8000     # frame rate written into the RIFF header
@@ -474,21 +442,10 @@ def _wav_stats(b: bytes) -> tuple:
     """,
 )
 def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio codec round-trip: encode each document's
-    md5-derived samples (64 bytes of four chained md5 digests as
-    little-endian int16) as an actual RIFF/WAVE file (stdlib ``wave``
-    writer) and decode it back through the stdlib reader — the audio
-    analogue of multimodal_decode_png. The oracle recomputes the
-    identical int16 samples straight from the md5 hex, so a bug
-    anywhere in header framing, frame accounting, or LE-PCM packing
-    breaks the hash match. Compressed audio is real too (G.711 both
-    laws: multimodal_decode_mulaw/_alaw); perceptual codecs (mp3/ogg)
-    are out of scope.
-
-    Scale: embarrassingly parallel Arrow-batched mapInPandas, no
-    shuffle; payloads live only inside a task. The stats schema
-    (framerate, n/mean/max, zero-crossing rate) is the standard
-    cheap audio-quality screen before any model-based scoring.
+    """PCM WAV round-trip: encode each document's md5-derived samples (64 bytes
+    of four chained md5 digests as little-endian int16) as a RIFF/WAVE file
+    with the stdlib ``wave`` writer and decode it with the stdlib reader. The
+    oracle recomputes the int16 samples from the md5 hex.
     """
     docs = load_table(spark, sf_dir, "documents")
     return _audio_stats_select(
@@ -500,8 +457,6 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-# --- real JPEG codec path ---------------------------------------------------
 
 # 32x24 grayscale = 12 flat 8x8 blocks (4 across, 3 down); block
 # values = first 12 bytes of md5(text). Flat blocks are the JPEG
@@ -525,8 +480,9 @@ def _flat_block_gray(hex24: str) -> bytes:
 
 
 def _gray_jpeg_leg(docs: DataFrame, hex_sql: str, encoder) -> DataFrame:
-    """One body for the gray-JPEG legs (baseline + progressive): they
-    differ ONLY in hex recipe and ``encoder(width, height, pixels)``."""
+    """One body for the gray-JPEG legs (baseline + progressive): they differ
+    only in hex recipe and ``encoder(width, height, pixels)``.
+    """
     stats = _px_stats(jpeg.decode_gray8)
     return _px_stats_select(
         _rowwise(
@@ -564,31 +520,21 @@ def _gray_jpeg_oracle(hex_expr: str) -> str:
     oracle=_gray_jpeg_oracle(_SQL_JPG_HEX),
 )
 def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL lossy-codec round-trip: encode each document's
-    md5-derived flat-block image as an actual baseline JFIF JPEG
-    (8x8 DCT, unit quantization, Annex K Huffman entropy coding,
-    byte stuffing) and decode it back with the pure numpy/stdlib
-    parser (marker parse, Huffman decode, dequantize, IDCT). Flat
-    8x8 blocks make the lossy pipeline exact (DC-only spectra survive
-    unit quantization bit-for-bit), so the oracle recomputes the
-    pixel statistics straight from the md5 hex and a bug anywhere in
-    marker framing, Huffman tables, entropy coding, zigzag,
-    quantization, or the DCT pair breaks the hash match. General
-    (non-flat) content round-trips within +/-1 (pinned by the codec
-    unit tests). The color leg is multimodal_decode_jpeg_color and
-    the progressive (SOF2) leg multimodal_decode_jpeg_progressive.
+    """Baseline JPEG round-trip: encode each document's md5-derived flat-block
+    image as a baseline JFIF JPEG (8x8 DCT, unit quantization, Annex K Huffman
+    coding, byte stuffing) and decode it with the numpy/stdlib parser.
 
-    Scale: embarrassingly parallel Arrow-batched mapInPandas, no
-    shuffle; payloads live only inside a task.
+    Flat 8x8 blocks make the lossy pipeline exact (DC-only spectra survive unit
+    quantization bit-for-bit), so the oracle recomputes the pixel statistics
+    from the md5 hex. General content round-trips within +/-1 (pinned by the
+    codec unit tests).
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
     return _gray_jpeg_leg(docs, _SQL_JPG_HEX, jpeg.encode_gray8)
 
 
-# --- real PROGRESSIVE JPEG codec path (SOF2) ---------------------------------
-
-# Own 'p'-salted payload recipe — independent of the baseline gray
-# and color legs.
+# Own 'p'-salted payload recipe, independent of the baseline gray and color
+# legs.
 _SQL_JPGP_HEX = "substr(md5('p' || text), 1, 24)"
 
 
@@ -599,41 +545,25 @@ _SQL_JPGP_HEX = "substr(md5('p' || text), 1, 24)"
 def multimodal_decode_jpeg_progressive(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """REAL progressive-JPEG round-trip: encode each document's
-    md5-derived flat-block image as an actual SOF2 progressive JFIF
-    file — six scans exercising interleaved DC first + refinement,
-    spectral-selection AC bands, successive-approximation AC
-    refinement, and EOBn run coding on the sparse high band — and
-    decode it back with the pure numpy/stdlib multi-scan parser.
-    Progressive coding is a lossless re-arrangement of the same
-    quantized coefficients, so the flat-block exactness contract
-    carries over unchanged and the oracle recomputes every pixel from
-    the md5 hex: a bug anywhere in scan sequencing, spectral-band
-    bookkeeping, bit-plane composition, EOB-run accounting, or
-    refinement windows breaks the hash match. (Decoder conformance
-    beyond this encoder is pinned at the coefficient level by the
-    refinement pairing test; no external JPEG library exists in this
-    container to cross-validate, same epistemic status as the
-    baseline leg.)
+    """Progressive (SOF2) JPEG round-trip: six scans exercising interleaved DC
+    first + refinement, spectral-selection AC bands, successive-approximation
+    AC refinement and EOBn run coding, decoded by the numpy/stdlib multi-scan
+    parser.
 
-    Scale: embarrassingly parallel Arrow-batched mapInPandas, no
-    shuffle; payloads live only inside a task.
+    Progressive coding re-arranges the same quantized coefficients losslessly,
+    so the flat-block exactness contract carries over and the oracle recomputes
+    every pixel from the md5 hex. Decoder conformance beyond this encoder is
+    pinned at the coefficient level by the refinement pairing test.
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
     return _gray_jpeg_leg(docs, _SQL_JPGP_HEX, jpeg.encode_gray8_progressive)
 
 
-# --- real COLOR JPEG codec path (YCbCr 4:2:0) -------------------------------
-
-# 32x32 RGB of four FLAT 16x16 MCUs (2 across, 2 down); MCU k's
-# (R,G,B) = md5 bytes 3k..3k+2 (own 'c'-salted recipe — independent
-# of the grayscale leg's payload). Flat 16x16 MCUs are the 4:2:0
-# exactness domain: the 2x2 chroma box-mean averages equal values
-# (exact), so all six 8x8 blocks per MCU are flat and the lossy
-# pipeline reduces to the two rounded BT.601 transforms — closed-form
-# integer arithmetic the SQL oracle replays bit-for-bit (verified
-# exhaustively over all 256^3 RGB triples against DuckDB's
-# round_even/double arithmetic).
+# 32x32 RGB of four flat 16x16 MCUs (2 across, 2 down); MCU k's (R,G,B) =
+# md5 bytes 3k..3k+2 (own 'c'-salted recipe). Flat 16x16 MCUs are the 4:2:0
+# exactness domain: the 2x2 chroma box-mean averages equal values, so all six
+# 8x8 blocks per MCU are flat and the lossy pipeline reduces to the two
+# rounded BT.601 transforms, which the SQL oracle replays bit-for-bit.
 _JPGC_W = _JPGC_H = 32
 _SQL_JPGC_HEX = "substr(md5('c' || text), 1, 24)"
 
@@ -715,26 +645,15 @@ _SQL_RGB_REC = """
     """,
 )
 def multimodal_decode_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL lossy COLOR-codec round-trip: encode each document's
-    md5-derived flat-MCU RGB image as an actual baseline YCbCr 4:2:0
-    JFIF JPEG — BT.601 forward transform, 2x2 box-mean chroma
-    downsampling, 16x16 MCUs interleaving 4 luma + 2 chroma blocks,
-    Annex K Huffman entropy coding — and decode it back with the
-    pure numpy/stdlib parser. Flat 16x16 MCUs make the 4:2:0 lossy
-    pipeline exact (chroma box means average equal values; every 8x8
-    block is flat, so DC-only spectra survive unit quantization), and
-    the two rounding steps that remain — the forward and inverse
-    BT.601 transforms — are closed-form integer arithmetic the oracle
-    replays bit-for-bit (round_even + ::DOUBLE literals match numpy's
-    rint/IEEE semantics, verified exhaustively over all 256^3 RGB
-    triples). A bug in channel order, the even-bit MCU interleave,
-    subsampling, either transform's coefficients, or per-component DC
-    prediction breaks the hash match. Complements
-    multimodal_decode_jpeg (grayscale leg): together the driver
-    certifies both SOF0 component layouts the codec supports.
+    """Color JPEG round-trip: a baseline YCbCr 4:2:0 JFIF file (BT.601 forward
+    transform, 2x2 box-mean chroma downsampling, 16x16 MCUs of 4 luma + 2
+    chroma blocks), decoded by the numpy/stdlib parser.
 
-    Scale: embarrassingly parallel Arrow-batched mapInPandas, no
-    shuffle; payloads live only inside a task.
+    Flat 16x16 MCUs make the 4:2:0 pipeline exact (chroma box means average
+    equal values, every 8x8 block is flat), and the two rounding steps left,
+    the forward and inverse BT.601 transforms, are closed-form integer
+    arithmetic the oracle replays bit-for-bit (round_even + ::DOUBLE literals
+    match numpy's rint/IEEE semantics, verified over all 256^3 RGB triples).
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
     stats = _rowwise(
@@ -757,8 +676,6 @@ def multimodal_decode_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- real compressed-audio codec path (G.711 mu-law in RIFF) ---------------
-
 _MULAW_N = 32         # codes per clip
 _MULAW_RATE = 8000
 
@@ -779,10 +696,11 @@ _SQL_MULAW_SAMPLES = f"""
 
 
 def _g711_leg(docs: DataFrame, hex_sql: str, encode, decode) -> DataFrame:
-    """One body for the two G.711 legs: frame the 32 md5-derived code
-    bytes as a REAL WAVE_FORMAT_MULAW/ALAW RIFF file, then container
-    parse (format-tag validation, chunk walk) + logarithmic
-    expansion and the per-clip sample statistics."""
+    """One body for the two G.711 legs: frame the 32 md5-derived code bytes as
+    a WAVE_FORMAT_MULAW/ALAW RIFF file, then container parse (format-tag
+    validation, chunk walk) + logarithmic expansion and the per-clip sample
+    statistics.
+    """
     stats = _audio_stats(decode)
     return _audio_stats_select(
         _rowwise(
@@ -813,19 +731,11 @@ def _g711_leg(docs: DataFrame, hex_sql: str, encode, decode) -> DataFrame:
     """,
 )
 def multimodal_decode_mulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-audio round-trip: frame each document's
-    md5-derived G.711 mu-law codes as an actual WAVE_FORMAT_MULAW
-    (tag 7) RIFF file and decode it back — container parse,
-    format-tag validation, logarithmic expansion — with the
-    pure-stdlib codec (``functions/g711.py``, verified code-for-code
-    against CPython's ``audioop`` reference on all 256 codes). The
-    oracle replays the closed-form integer expansion straight from
-    the md5 hex, so a bug in companding arithmetic, sign handling,
-    chunk framing, or word alignment breaks the hash match. The
-    A-law sibling is multimodal_decode_alaw.
-
-    Scale: embarrassingly parallel Arrow-batched mapInPandas, no
-    shuffle; payloads live only inside a task.
+    """G.711 mu-law round-trip: frame each document's md5-derived codes as a
+    WAVE_FORMAT_MULAW (tag 7) RIFF file and decode it with
+    ``functions/g711.py`` (verified code-for-code against CPython's ``audioop``
+    on all 256 codes). The oracle replays the closed-form integer expansion
+    from the md5 hex.
     """
     docs = load_table(spark, sf_dir, "documents")
     return _g711_leg(
@@ -872,28 +782,17 @@ _SQL_ALAW_SAMPLES = f"""
     """,
 )
 def multimodal_decode_alaw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-audio round-trip, A-law leg: frame each
-    document's md5-derived G.711 A-law codes as an actual
-    WAVE_FORMAT_ALAW (tag 6) RIFF file and decode it back —
-    container parse, format-tag validation (a mu-law file is
-    rejected), logarithmic expansion — with the pure-stdlib codec
-    (``functions/g711.py``, bit-exact to CPython's ``audioop`` on
-    all 256 codes decode-side and on every int16 sample
-    encode-side). The oracle replays the closed-form expansion
-    (XOR 0x55 toggle, segment shift, sign-bit-set-positive) straight
-    from the md5 hex, so a bug in companding arithmetic, the even-bit
-    toggle, sign convention, or chunk framing breaks the hash match.
-
-    Scale: embarrassingly parallel Arrow-batched mapInPandas, no
-    shuffle; payloads live only inside a task.
+    """G.711 A-law round-trip: frame each document's md5-derived codes as a
+    WAVE_FORMAT_ALAW (tag 6) RIFF file and decode it with ``functions/g711.py``
+    (a mu-law file is rejected; bit-exact to CPython's ``audioop`` on all 256
+    codes and every int16 sample). The oracle replays the closed-form expansion
+    (XOR 0x55 toggle, segment shift, sign-bit-set-positive) from the md5 hex.
     """
     docs = load_table(spark, sf_dir, "documents")
     return _g711_leg(
         docs, _SQL_ALAW_HEX, g711.encode_wav_alaw, g711.decode_wav_alaw
     )
 
-
-# --- real video codec path (Motion-JPEG in AVI) -----------------------------
 
 # 4 frames of 32x24 grayscale flat-block JPEG per clip; frame f's 12
 # block bytes come from md5('f<f>' || text). The stride sampler keeps
@@ -921,12 +820,10 @@ def _encode_video(h: str) -> bytes:
 
 
 def _video_stats(b: bytes) -> tuple:
-    """RIFF/AVI container parse, stride frame sampling on the RAW
-    encoded chunks, then baseline-JPEG decode of ONLY the kept frames
-    and pixel statistics over them — the thumbnail/quality screen a
-    video-data pipeline runs before any model. Sampling before decode
-    matters: at stride n the expensive Huffman+IDCT work drops by
-    (n-1)/n, which is the whole point of thinning a 100 TB corpus."""
+    """RIFF/AVI container parse, stride frame sampling on the raw encoded
+    chunks, then baseline-JPEG decode of only the kept frames and pixel
+    statistics over them.
+    """
     w, h, fps, raw = avi.parse_avi_mjpeg(bytes(b))
     kept = [jpeg.decode_gray8(f) for f in avi.sample_frames(raw, _VID_STRIDE)]
     px = b"".join(f[2] for f in kept)
@@ -960,23 +857,10 @@ def _video_stats(b: bytes) -> tuple:
     """,
 )
 def multimodal_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video round-trip: encode four md5-derived frames as
-    baseline JPEGs, frame them in an actual RIFF MJPEG AVI
-    (``functions/avi.py``), then decode the container, stride-sample
-    every 2nd frame, decode the kept frames through the real JPEG
-    parser, and compute pixel statistics over them — the video
-    analogue of multimodal_decode_png/jpeg/wav/mulaw, closing the
-    last modality with a genuine container + codec. The oracle
-    recomputes the sampled frames' pixels straight from their md5
-    digests, so a bug in AVI framing, stream-header validation, frame
-    chunking, JPEG decoding, or the stride arithmetic breaks the hash
-    match. Inter-frame/perceptual codecs (H.264, VP9) are out of
-    scope.
-
-    Scale: embarrassingly parallel Arrow-batched mapInPandas, no
-    shuffle; payloads live only inside a task — exactly how a real
-    100 TB video corpus is screened (per-file decode, no data
-    movement beyond the scan).
+    """Motion-JPEG AVI round-trip: encode four md5-derived frames as baseline
+    JPEGs in a RIFF MJPEG AVI (``functions/avi.py``), then parse the container,
+    keep every 2nd frame, decode the kept frames and compute pixel statistics.
+    The oracle recomputes the sampled frames' pixels from their md5 digests.
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
     stats = _rowwise(
@@ -997,8 +881,6 @@ def multimodal_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_px",
     )
 
-
-# --- real GIF codec path (LZW) -----------------------------------------------
 
 # 8x3 grayscale = 24 pixels from two chained md5 digests; 24 is one
 # of the divisors whose round(mean, 6) is proved tie-free by
@@ -1028,21 +910,12 @@ _SQL_GIF_HEX = "substr(md5(text) || md5('g' || text), 1, 48)"
     """,
 )
 def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round-trip for a THIRD compression family —
-    dictionary coding: encode each document's md5-derived pixels as
-    an actual GIF89a file (screen descriptor, 256-entry gray color
-    table, variable-width LZW with the spec's asymmetric
-    encoder/decoder width growth, sub-block framing) and decode it
-    back with the pure-stdlib parser (``functions/gif.py``). The
-    identity gray palette makes the pipeline bit-exact lossless, so
-    the oracle recomputes the pixel statistics straight from the md5
-    hex — a bug anywhere in LZW packing, width growth, palette
-    handling, or sub-block framing breaks the hash match. Joins PNG
-    (DEFLATE), JPEG (DCT+Huffman), G.711 (companding), and MJPEG/AVI
-    (container) as the fifth real image/video wire format.
-
-    Scale: embarrassingly parallel Arrow-batched mapInPandas, no
-    shuffle; payloads never leave the task."""
+    """GIF round-trip: a GIF89a file (screen descriptor, 256-entry gray color
+    table, variable-width LZW with the spec's asymmetric encoder/decoder width
+    growth, sub-block framing), decoded by ``functions/gif.py``. The identity
+    gray palette makes the pipeline lossless, so the oracle recomputes the
+    pixel statistics from the md5 hex.
+    """
     docs = load_table(spark, sf_dir, "documents", widen=True)
     stats = _px_stats(gif.decode_gray8)
     return _px_stats_select(
@@ -1054,8 +927,6 @@ def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-# --- real FLAC codec path (fixed prediction + Rice coding) -------------------
 
 _FLAC_N = 32          # samples per clip (dyadic -> exact mean_abs)
 _FLAC_RATE = 8000
@@ -1088,23 +959,12 @@ _SQL_FLAC_SAMPLES = _sql_int16s(_SQL_FLAC_HEX, _FLAC_N)
     """,
 )
 def multimodal_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round-trip for the PREDICTIVE compression family:
-    encode each document's md5-derived int16 samples as an actual
-    FLAC file (STREAMINFO + audio MD5, sync-coded frame header with
-    CRC-8, best-of-5 fixed polynomial predictor, Rice-coded
-    residuals with the exactly-optimal parameter, frame CRC-16) and
-    decode it back with the pure-stdlib parser (``functions/
-    flac.py``), which verifies all three integrity fields. FLAC is
-    lossless, so the oracle recomputes the identical samples
-    straight from the md5 hex — a bug anywhere in bit packing,
-    prediction, Rice/zigzag coding, or CRC arithmetic breaks the
-    hash match. Completes the compression-family taxonomy: DEFLATE
-    (PNG), LZW (GIF), DCT+Huffman (JPEG), companding (G.711),
-    prediction+Rice (FLAC); perceptual codecs (mp3/ogg) are out of
-    scope.
-
-    Scale: embarrassingly parallel Arrow-batched mapInPandas, no
-    shuffle; payloads live only inside a task."""
+    """FLAC round-trip: STREAMINFO + audio MD5, sync-coded frame header with
+    CRC-8, best-of-5 fixed polynomial predictor, Rice-coded residuals with the
+    optimal parameter and frame CRC-16, decoded by ``functions/flac.py``, which
+    verifies all three integrity fields. FLAC is lossless, so the oracle
+    recomputes the samples from the md5 hex.
+    """
     docs = load_table(spark, sf_dir, "documents", widen=True)
     stats = _audio_stats(flac.decode_s16)
     return _audio_stats_select(
@@ -1117,8 +977,7 @@ def multimodal_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# IMA ADPCM (WAVE format 0x11) — the STATEFUL compression family.
+# IMA ADPCM (WAVE format 0x11): the stateful compression family.
 
 _ADPCM_RATE = 11025
 _ADPCM_NIB = 64  # 4-bit codes per clip -> 65 output samples
@@ -1197,24 +1056,16 @@ _SQL_ADPCM_HEX = (
     """,
 )
 def multimodal_decode_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round-trip for the STATEFUL compression family:
-    frame each document's md5-derived predictor/index/nibble stream
-    as an actual WAVE_FORMAT_IMA_ADPCM (0x11) file — fmt extension
-    with wSamplesPerBlock, mandatory fact chunk, 4-byte block header
-    — and decode it back with the pure-stdlib state machine
-    (``functions/adpcm.py``, bit-exact to CPython's audioop DVI
-    reference on BOTH encode and decode, property-tested). Unlike
-    every other audio leg the decode is SEQUENTIAL (each sample's
-    reconstruction depends on all previous codes), so the oracle
-    replays the predictor recursion with a recursive CTE over the
-    IMA step table — a drift in step adaptation, clamping, nibble
-    order, or the diff reconstruction breaks the hash on every row.
-    Completes the taxonomy: DEFLATE (PNG), LZW (GIF), DCT+Huffman
-    (JPEG), companding (G.711), prediction+Rice (FLAC), adaptive
-    DPCM (this leg); perceptual codecs (mp3/ogg) are out of scope.
+    """IMA ADPCM round-trip: frame each document's md5-derived
+    predictor/index/nibble stream as a WAVE_FORMAT_IMA_ADPCM (0x11) file (fmt
+    extension with wSamplesPerBlock, fact chunk, 4-byte block header) and
+    decode it with ``functions/adpcm.py`` (bit-exact to CPython's audioop DVI
+    codec on encode and decode).
 
-    Scale: embarrassingly parallel Arrow-batched mapInPandas, no
-    shuffle; payloads live only inside a task."""
+    The decode is sequential (each sample depends on all previous codes), so
+    the oracle replays the predictor recursion with a recursive CTE over the
+    IMA step table.
+    """
     docs = load_table(spark, sf_dir, "documents")
     stats = _audio_stats(adpcm.decode_wav_ima)
     return _audio_stats_select(
@@ -1227,10 +1078,9 @@ def multimodal_decode_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------
-# Multi-block ADPCM: two blocks per file, each with its own header
-# state (md5('p'/'s'||text)) and 16 nibble bytes (md5('q'/'t'||text)),
-# so the oracle recursion stays per-(doc, block) independent.
+# Multi-block ADPCM: two blocks per file, each with its own header state
+# (md5('p'/'s'||text)) and 16 nibble bytes (md5('q'/'t'||text)), so the oracle
+# recursion stays per-(doc, block) independent.
 
 _ADPCM_MB_NIB = 32  # nibbles per block (one md5 per block)
 _ADPCM_MB_SAMPLES = 2 * (_ADPCM_MB_NIB + 1)  # two blocks
@@ -1298,12 +1148,11 @@ def multimodal_decode_adpcm_multiblock(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Multi-block sibling of :func:`multimodal_decode_adpcm`: two
-    self-describing blocks per file, so the engine exercises the
-    container's block walk (fixed block align, per-block header
-    re-seed) rather than a single state machine run. The oracle
-    replays each block's recursion independently — partitioned by
-    (doc_id, blk) — then aggregates per document. Same zero-shuffle
-    Arrow-batched mapInPandas scale shape as every audio leg."""
+    self-describing blocks per file, so the decoder walks the block layout
+    (fixed block align, per-block header re-seed). The oracle replays each
+    block's recursion independently, partitioned by (doc_id, blk), then
+    aggregates per document.
+    """
     docs = load_table(spark, sf_dir, "documents")
     stats = _audio_stats(adpcm.decode_wav_ima)
     return _audio_stats_select(
@@ -1342,27 +1191,20 @@ FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
 """
 
 
-# ---------------------------------------------------------------
-# TIFF — the tag-directory container family (round-14 queue).
+# TIFF: the tag-directory container family.
 
 _TIFF_W, _TIFF_H = 8, 6  # 48 gray bytes = all three md5 digests
 
 
 @register("multimodal_decode_tiff", oracle=_gray48_oracle(_TIFF_W, _TIFF_H))
 def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round-trip for the TAG-DIRECTORY container family:
-    encode each document's md5-derived pixels (the full 48 bytes of
-    the three chained digests) as an actual 8x6 multi-strip TIFF
-    (byte-order header, sorted IFD, inline vs out-of-line values,
-    StripOffsets/StripByteCounts indirection) and decode it back with
-    the pure-stdlib parser. Byte order alternates by doc parity —
-    even docs II, odd docs MM — so the decoder exercises BOTH
-    orders while the oracle stays endianness-invariant. PNG covers
-    linear chunk framing + DEFLATE, GIF covers LZW sub-blocks, JPEG
-    covers entropy coding; TIFF adds random-access offset
-    indirection, the container shape most scientific/scan corpora
-    arrive in. Same zero-shuffle Arrow-batched mapInPandas scale
-    shape as every image leg."""
+    """TIFF round-trip: each document's 48 md5-derived pixel bytes as an 8x6
+    multi-strip TIFF (byte-order header, sorted IFD, inline vs out-of-line
+    values, StripOffsets/StripByteCounts indirection), decoded by the
+    pure-stdlib parser. Byte order alternates by doc parity (even docs II, odd
+    docs MM), so the decoder sees both orders while the oracle stays
+    endianness-invariant.
+    """
     docs = load_table(spark, sf_dir, "documents")
     stats = _px_stats(tiff.decode_gray8)
     return _px_stats_select(
@@ -1379,24 +1221,19 @@ def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------
-# BMP — bottom-up rows, stride padding, palette (round-14 queue).
+# BMP: bottom-up rows, stride padding, palette.
 
 _BMP_W, _BMP_H = 6, 8  # 48 gray bytes; stride 8 pads 2 per row
 
 
 @register("multimodal_decode_bmp", oracle=_gray48_oracle(_BMP_W, _BMP_H))
 def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round-trip for the Windows DIB layout family:
-    encode each document's md5-derived pixels as an actual
-    palettized BMP and decode it back with the pure-stdlib parser —
-    BOTTOM-UP row storage, 4-byte stride padding (width 6 pads 2
-    bytes per row), and 256-entry identity-gray palette indirection,
-    the three layout properties PNG/GIF/JPEG/TIFF never exercise.
-    The stats are row-order-invariant, so the JVM conformance tests
-    (pixel-exact) carry the bottom-up property while the oracle here
-    pins the palette/stride walk. Same zero-shuffle Arrow-batched
-    mapInPandas scale shape as every image leg."""
+    """BMP round-trip: a palettized BMP with bottom-up rows, 4-byte stride
+    padding (width 6 pads 2 bytes per row) and a 256-entry identity-gray
+    palette, decoded by the pure-stdlib parser. The stats are
+    row-order-invariant, so the pixel-exact JVM conformance tests carry the
+    bottom-up property while the oracle pins the palette/stride walk.
+    """
     docs = load_table(spark, sf_dir, "documents")
     stats = _px_stats(bmp.decode_gray8)
     return _px_stats_select(
@@ -1409,25 +1246,17 @@ def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------
-# TGA — run-length packets, origin bit, v2 footer.
+# TGA: run-length packets, origin bit, v2 footer.
 
 _TGA_W, _TGA_H = 8, 6  # 48 gray bytes, same tie-free divisor domain
 
 
 @register("multimodal_decode_tga", oracle=_gray48_oracle(_TGA_W, _TGA_H))
 def multimodal_decode_tga(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round-trip for the RUN-LENGTH compression family:
-    encode each document's md5-derived pixels as an actual RLE TGA
-    (run/literal packets, per-scan-line framing, origin-bit row
-    order alternating by doc parity — even docs bottom-up, odd docs
-    top-down — trailing v2 footer) and decode it back with the
-    pure-stdlib parser. PNG covers DEFLATE, GIF covers LZW, JPEG
-    covers entropy coding — TGA adds byte-oriented RLE, the simplest
-    compression scheme still shipped in scan/game-asset corpora,
-    plus a trailing footer that breaks any pixels-run-to-EOF
-    assumption. Same zero-shuffle Arrow-batched mapInPandas scale
-    shape as every image leg."""
+    """TGA round-trip: an RLE TGA (run/literal packets, per-scan-line framing,
+    origin-bit row order alternating by doc parity, trailing v2 footer),
+    decoded by the pure-stdlib parser.
+    """
     docs = load_table(spark, sf_dir, "documents")
     stats = _px_stats(tga.decode_gray8)
     return _px_stats_select(
@@ -1442,8 +1271,7 @@ def multimodal_decode_tga(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------
-# AIFF — big-endian IFF container, 80-bit extended sample rate.
+# AIFF: big-endian IFF container, 80-bit extended sample rate.
 
 _AIFF_N = 32  # samples per clip (dyadic -> exact mean_abs)
 # 44100 is deliberately NOT a power of two: packing it into the
@@ -1484,20 +1312,13 @@ FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
 
 @register("multimodal_decode_aiff", oracle=_AIFF_ORACLE)
 def multimodal_decode_aiff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round-trip for the BIG-ENDIAN IFF container family:
-    encode each document's md5-derived int16 samples as an actual
-    FORM/AIFF file and decode it back with the pure-stdlib parser
-    (unknown chunks skipped by size, odd-length pad bytes honored).
-    WAV covers RIFF (little-endian); AIFF is its EA-IFF 85 ancestor
-    with the opposite byte order throughout AND the 80-bit IEEE
-    extended sample-rate field — the one place a pipeline still
-    parses x87 extended precision, done here as exact integer
-    arithmetic (a double round-trip would pass every power-of-two
-    rate and silently corrupt others). The oracle recomputes the
-    identical samples straight from the md5 hex, so a bug in chunk
-    walking, pad-byte accounting, the extended-float decode, or the
-    big-endian PCM swap breaks the hash match. Same zero-shuffle
-    Arrow-batched mapInPandas scale shape as every audio leg."""
+    """AIFF round-trip: each document's md5-derived int16 samples as a
+    FORM/AIFF file, decoded by the pure-stdlib parser (unknown chunks skipped
+    by size, odd-length pad bytes honored). The 80-bit IEEE extended sample
+    rate is decoded with exact integer arithmetic; a double round-trip would
+    pass every power-of-two rate and corrupt others. The oracle recomputes the
+    samples from the md5 hex.
+    """
     docs = load_table(spark, sf_dir, "documents")
     stats = _audio_stats(aiff.decode_pcm16)
     return _audio_stats_select(

@@ -1,26 +1,15 @@
 """Relational operator library — declarative DataFrame plans.
 
-The reference engine has no relational operators: projection and
-filtering exist only inside user executables (reference
-``tests/testdata/exec/grep_map.py:27-28``), aggregation only as
-``uniq -c`` in a reducer (``tests/testdata/exec/wc_reduce.sh:14``),
-and there are no joins/windows/set-ops at all (SURVEY.md §2.D).
-Everything here is therefore the generalization of the reference's
-map→shuffle→reduce contract into Catalyst-optimized plans.
+The reference has no relational operators: projection and filtering exist
+only inside user executables (reference
+``tests/testdata/exec/grep_map.py:27-28``), aggregation only as ``uniq -c``
+in a reducer (``tests/testdata/exec/wc_reduce.sh:14``), and there are no
+joins, windows or set operations (SURVEY.md §2.D).
 
-Scale notes (100 TB design stance):
-
-- fact-to-fact joins (orders⋈lineitem) are left to Catalyst's
-  sort-merge join + AQE; both sides shuffle on the join key once and
-  grouping that follows on the same key reuses the exchange;
-- dimension joins against the CONSTANT-size tables (region=5 rows,
-  nation=25 rows) are explicitly ``broadcast()``; every SF-linear
-  side — customer, part subsets, and supplier (10k x SF) — carries
-  no hard hint, so AQE broadcasts it only while it actually fits;
-- every aggregate uses exact decimal sums (order-independent → the
-  same bits on 1 core or 1000 executors, see functions/exact.py);
-- no driver-side collects anywhere; LIMIT/top-k run as TakeOrdered /
-  window-rank, both of which push partial limits into each partition.
+Plan conventions: the constant-size dimensions (region=5 rows, nation=25
+rows) are explicitly ``broadcast()``; SF-linear sides carry no hint
+(docs/SCALING.md, relational). Every aggregate uses exact decimal sums
+(functions/exact.py), and LIMIT/top-k run as TakeOrdered or a window rank.
 """
 
 from __future__ import annotations
@@ -47,9 +36,7 @@ def _revenue_col() -> F.Column:
     return F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
 
 
-# ---------------------------------------------------------------------------
-# Aggregation
-# ---------------------------------------------------------------------------
+# --- Aggregation ------------------------------------------------------------
 
 
 @register(
@@ -71,13 +58,9 @@ def _revenue_col() -> F.Column:
     bench=True,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary (scan → filter → hash agg).
-
-    Reference analog: the wordcount pattern (map emit → group →
-    count, reference ``tests/testdata/exec/wc_reduce.sh:14``)
-    generalized to multi-measure aggregation. Catalyst plans a
-    partial+final hash aggregate (map-side combine the reference
-    lacks entirely).
+    """TPC-H Q1-style pricing summary (scan → filter → hash agg): the
+    wordcount pattern (reference ``tests/testdata/exec/wc_reduce.sh:14``)
+    generalized to multi-measure aggregation.
     """
     li = load_table(spark, sf_dir, "lineitem")
     return (
@@ -115,9 +98,8 @@ _Q1_SQL = """
     ),
 )
 def q1_sql_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pure-SQL entry path: register_views + spark.sql — Catalyst
-    produces the same plan as the DataFrame form (q1_pricing_summary);
-    this pins the SQL front door."""
+    """The pure-SQL entry path: register_views + spark.sql, the same plan
+    as q1_pricing_summary."""
     from map_reduce_server_spark.tables import register_views
 
     register_views(spark, sf_dir)
@@ -146,10 +128,9 @@ def q1_sql_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_not_in_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANSI three-valued logic pin: NOT IN against a list containing
-    NULL returns no rows (every comparison is UNKNOWN), while NOT
-    EXISTS ignores the NULLs — the classic correctness trap any SQL
-    engine must honor."""
+    """ANSI three-valued logic pin: NOT IN against a list containing NULL
+    returns no rows (every comparison is UNKNOWN), while NOT EXISTS ignores
+    the NULLs."""
     # fixed names + OrReplace: repeated invocations reuse the slots
     # instead of accumulating uuid-named catalog entries
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("ord_nin")
@@ -232,16 +213,14 @@ def q_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals (absent from the reference, §2.D).
 
-    Pre-aggregated to the finest grain first: ROLLUP expands each row
-    once per level, so feeding it the (priority × status) pre-agg
-    instead of the raw table cuts the expand+shuffle to a handful of
-    rows — exact because count/decimal-sum are associative.
+    Pre-aggregated to the finest grain first: ROLLUP expands each row once
+    per level, so it runs over the (priority × status) pre-agg, exact
+    because count and decimal sum are associative.
 
-    Known engine edge (q_cube shares it): on an EMPTY input Spark's
-    pre-agg+rollup yields 0 rows while ANSI ROLLUP emits one
-    (NULL, NULL, 0) grand-total row — acceptable here because the
-    star tables are never empty; audit-type queries that must handle
-    empties (q_coverage_report) count explicitly instead.
+    Known engine edge (q_cube shares it): on an empty input Spark's
+    pre-agg+rollup yields 0 rows while ANSI ROLLUP emits one (NULL, NULL, 0)
+    grand-total row. The star tables are never empty; audit queries that
+    must handle empties (q_coverage_report) count explicitly instead.
     """
     orders = load_table(spark, sf_dir, "orders")
     pre = orders.groupBy("o_orderpriority", "o_orderstatus").agg(
@@ -308,9 +287,7 @@ def q_pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# ---------------------------------------------------------------------------
-# Joins
-# ---------------------------------------------------------------------------
+# --- Joins ------------------------------------------------------------------
 
 
 @register(
@@ -332,11 +309,8 @@ def q_pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-style: selective join + agg + top-k.
-
-    customer is small relative to the facts → broadcast; the
-    orders⋈lineitem join is the real shuffle and both filters are
-    pushed to the parquet scans by Catalyst.
+    """TPC-H Q3-style: selective join + agg + top-k; both filters are
+    pushed to the parquet scans.
     """
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
@@ -349,8 +323,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        # customer is SF-linear even segment-filtered — no hard hint;
-        # AQE broadcasts when the side actually fits
+        # customer is SF-linear even segment-filtered: no hard hint
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(dsum(_revenue_col(), scale=6).alias("revenue"))
@@ -379,7 +352,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-style 6-table join; dims broadcast, facts sort-merge."""
+    """TPC-H Q5-style 6-table join with broadcast dims."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -457,9 +430,7 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_partkey", "p_name")
 
 
-# ---------------------------------------------------------------------------
-# Windows / sort / top-k
-# ---------------------------------------------------------------------------
+# --- Windows / sort / top-k -------------------------------------------------
 
 
 @register(
@@ -683,7 +654,7 @@ def q_array_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 parts per brand (window rank ≤ k — partial-pushed)."""
+    """Top-3 parts per brand (window rank ≤ k)."""
     part = load_table(spark, sf_dir, "part")
     w = Window.partitionBy("p_brand").orderBy(
         F.desc("p_retailprice"), F.asc("p_partkey")
@@ -704,7 +675,7 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-k (TakeOrdered — no full sort materialization)."""
+    """Global top-k (TakeOrdered)."""
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
@@ -713,9 +684,7 @@ def q_topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Set operations / distinct
-# ---------------------------------------------------------------------------
+# --- Set operations / distinct ----------------------------------------------
 
 
 @register(
@@ -806,9 +775,7 @@ def q_bitwise_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_try_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """try_* error-safe functions (NULL instead of runtime failure —
-    essential for dirty data at scale where one bad row must not
-    kill a 10-hour job)."""
+    """try_* error-safe functions: NULL instead of a runtime failure."""
     orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
@@ -823,9 +790,7 @@ def q_try_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Scalar function surface (string / date / math / array / json)
-# ---------------------------------------------------------------------------
+# --- Scalar function surface (string / date / math / array / json) ----------
 
 
 @register(
@@ -920,14 +885,13 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar date/timestamp functions (extraction, truncation, date
-    arithmetic, last_day/quarter/week/day-of-year, epoch seconds) —
-    one scan, all whole-stage-codegen expressions.
+    arithmetic, last_day/quarter/week/day-of-year, epoch seconds).
 
-    due_date is 91 (not 90) days out: DuckDB 1.0's CSE compares
-    interval constants by 30-day-month value equality, so ``+ 90
-    DAY`` and ``+ 3 MONTH`` on the same column unify to one
-    expression and the oracle silently returns the first — 91 days
-    keeps every interval in the query value-distinct."""
+    due_date is 91 (not 90) days out: DuckDB 1.0's CSE compares interval
+    constants by 30-day-month value equality, so ``+ 90 DAY`` and
+    ``+ 3 MONTH`` on the same column unify to one expression and the oracle
+    silently returns the first; 91 days keeps every interval in the query
+    value-distinct."""
     orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
@@ -969,11 +933,10 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     return part.filter(F.col("p_retailprice") > 0).select(
         "p_partkey",
-        # UNROUNDED: the raw double product is bit-identical across
+        # unrounded: the raw double product is bit-identical across
         # engines, while round(x, 2) breaks 3-decimal midpoints
         # differently (Spark HALF_UP on the shortest repr rounds
-        # 1.15*1.1 to 1.27, DuckDB's binary round to 1.26) — the
-        # q_scalar_subquery/q2 precedent
+        # 1.15*1.1 to 1.27, DuckDB's binary round to 1.26)
         (F.col("p_retailprice") * 1.1).alias("price_up"),
         F.abs(F.col("p_retailprice") - 1000.0).alias("dist_1000"),
         F.floor("p_retailprice").alias("price_floor"),
@@ -1027,13 +990,12 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # raise under ANSI mode
         F.round(F.get(vec, 0), 6).alias("first_val"),
         F.round(
-            # DuckDB list_sum SKIPS NULL elements and returns NULL
-            # when nothing remains (empty or all-NULL list). ONE
-            # traversal: a struct accumulator carries (sum of
-            # non-NULLs, non-NULL count) and the finisher yields NULL
-            # when nothing was measured — the two-pass filter form
-            # evaluated the filtered array twice per row (no CSE
-            # across when-branches; the checked_decimal +62% lesson)
+            # DuckDB list_sum skips NULL elements and returns NULL when
+            # nothing remains (empty or all-NULL list). One traversal: a
+            # struct accumulator carries (sum of non-NULLs, non-NULL
+            # count) and the finisher yields NULL when nothing was
+            # measured (higher-order functions get no CSE across
+            # when-branches, so a filter form would evaluate twice)
             F.aggregate(
                 vec,
                 F.struct(
@@ -1173,9 +1135,7 @@ def q_null_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Events: sessionization (windows over time)
-# ---------------------------------------------------------------------------
+# --- Events: sessionization (windows over time) -----------------------------
 
 
 @register(
@@ -1201,11 +1161,8 @@ def q_null_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (lag + cumulative new-session flags).
-
-    This is the batch analog of a streaming session window; at 100 TB
-    the per-user partition stays small so the single window shuffle on
-    user_id is the whole cost.
+    """Gap-based sessionization (lag + cumulative new-session flags), the
+    batch analog of a streaming session window.
     """
     ev = load_table(spark, sf_dir, "events")
     flagged = session_flags(ev)
@@ -1216,9 +1173,9 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for q_window_time_range below: calendar-INTERVAL range frame, value-based so
-# equal timestamps land in each other's frames regardless of order —
-# deterministic without a unique tie-break, unlike ROWS frames.
+# Oracle for q_window_time_range below: calendar-INTERVAL range frame,
+# value-based so equal timestamps land in each other's frames regardless of
+# order, deterministic without a unique tie-break, unlike ROWS frames.
 _TIME_RANGE_ORACLE = """
 SELECT event_id, user_id, ts,
        COUNT(*) OVER w AS n_trailing_30m,
@@ -1237,21 +1194,13 @@ _TIME_RANGE_OVER = (
 
 @register("q_window_time_range", oracle=_TIME_RANGE_ORACLE)
 def q_window_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-INTERVAL range frame: per event, the count and exact
-    value sum of the same user's events in the trailing 30 minutes —
-    the per-row sliding time window (rate limiting, burst detection,
-    trailing spend) that numeric RANGE (:func:`q_window_range_frame`)
-    cannot express over a calendar axis. PySpark's
-    ``Window.rangeBetween`` takes longs only, so the frame is the SQL
-    expression surface (``F.expr`` with an inline OVER) — the one
-    place Spark exposes calendar-interval frames; the frame is
-    value-based, so tied timestamps see each other symmetrically and
-    no unique ORDER BY tie-break is needed (the determinism rule that
-    DOES bind every ROWS frame in this repo).
-
-    Scale shape: one shuffle on user_id, single window pass, codegen
-    throughout; the 30-minute bound keeps each frame's scan local to
-    the sorted run.
+    """Time-interval range frame: per event, the count and exact value sum
+    of the same user's events in the trailing 30 minutes, which numeric
+    RANGE (:func:`q_window_range_frame`) cannot express over a calendar
+    axis. PySpark's ``Window.rangeBetween`` takes longs only, so the frame
+    is an ``F.expr`` with an inline OVER. The frame is value-based, so tied
+    timestamps see each other symmetrically and no unique ORDER BY
+    tie-break is needed (the rule that binds every ROWS frame here).
     """
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull()

@@ -1,22 +1,16 @@
 """Retrieval-stack operators: BM25, hybrid lexical+vector fusion,
 matryoshka-truncated ANN, and repeated-span detection.
 
-The RAG-era complement to the dedup/ANN family: score documents for a
-query (BM25), fuse lexical and vector rankings (reciprocal-rank
-fusion), serve a cheap first-pass ANN over truncated embeddings
-(matryoshka-style), and surface the exact-substring duplication
-signal (Lee et al.'s dedup criterion) per document.
-
-Scale shape shared by all four: corpora never shuffle their payloads
-— token streams reduce to compact (doc_id, stat) rows before any
-join; candidate sets are top-k-sized, and ranks are row_number
-windows over those sets, never over the corpus; float
-work is rounded at engine-portable points (ln is 1-ulp across libm
+BM25 scores documents for a query, reciprocal-rank fusion fuses lexical and
+vector rankings, a matryoshka-style first pass serves ANN over truncated
+embeddings, and repeated-span detection reports exact-substring duplication
+(Lee et al.'s dedup criterion) per document. Candidate sets are
+top-k-sized and ranks are row_number windows over those sets. Float work
+is rounded at engine-portable points (ln is 1-ulp across libm
 implementations).
 
-No counterpart exists in the reference (its only text operator is
-wordcount/grep — SURVEY.md §2.B); these follow the north-star
-extension mandate.
+No counterpart exists in the reference (its only text operators are
+wordcount/grep, SURVEY.md §2.B).
 """
 
 from __future__ import annotations
@@ -32,11 +26,10 @@ from map_reduce_server_spark.registry import register
 from map_reduce_server_spark.stagecut import stage_cut
 from map_reduce_server_spark.tables import load_table
 
-# Imported at module top (no cycle — similarity does not import
-# retrieval) so the matryoshka/recall constants DERIVE from the
-# bruteforce index's definitions instead of duplicating them: the
-# recall join is only meaningful while both pipelines share the same
-# query set and k.
+# Imported at module top (no cycle: similarity does not import retrieval)
+# so the matryoshka/recall constants derive from the bruteforce index's
+# definitions; the recall join is only meaningful while both pipelines share
+# the query set and k.
 from map_reduce_server_spark import registry as _registry
 from map_reduce_server_spark.operators import similarity as _sim
 
@@ -106,17 +99,14 @@ def _sql_bm25_scored() -> str:
     """,
 )
 def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 retrieval (k1=1.2, b=0.75) for a fixed 3-term query, top
-    {k} docs — the lexical half of every RAG stack.
+    """BM25 retrieval (k1=1.2, b=0.75) for a fixed 3-term query, top {k}
+    docs.
 
-    Scale shape: the token stream reduces to (doc_id, dl) and the
-    3-term (doc_id, token, tf) table in one shuffle each; corpus size
-    and avgdl fold in as a broadcast 1-row aggregate; document-
-    frequency is a 3-row broadcast. Per-term partials pivot to FIXED
-    expression order before summing (float addition is not
-    commutative-associative across engines), each partial rounds its
-    ``ln`` to 9 digits, and the global top-k is TakeOrdered with a
-    doc_id tie-break — no global window, no full sort.
+    Corpus size and avgdl fold in as a broadcast 1-row aggregate, document
+    frequency as a 3-row broadcast. Per-term partials pivot to a fixed
+    expression order before summing (float addition is not associative),
+    each partial rounds its ``ln`` to 9 digits, and the global top-k is
+    TakeOrdered with a doc_id tie-break.
     """
     docs = load_table(spark, sf_dir, "documents")
     return _bm25_scored(docs).orderBy(F.desc("score"), "doc_id").limit(
@@ -127,21 +117,12 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bm25_scored(docs: DataFrame) -> DataFrame:
     """(doc_id, score) for docs matching ≥1 BM25 query term.
 
-    Row-local formulation (round 15): a fixed 3-term query needs no
-    token explode at all — per-doc ``dl`` is ``size(tokens)`` and
-    per-term ``tf`` is ``size(filter(tokens, = term))``, both
-    computed inside the doc's own row (guide §2.3 "aggregate before
-    you shuffle", taken to its limit: nothing shuffles but one 1-row
-    stats aggregate). The former shape exploded the corpus's full
-    token stream and shuffled it twice (dl groupBy + tf groupBy)
-    only to rediscover per-row array counts. Value-identical by
-    construction: tf/dl/df/n_docs/avgdl are the same integers, the
-    partial-score expression tree is unchanged (same double ops in
-    the same order, same round points), and the fixed-order pivot
-    sum is preserved; the DuckDB oracle CTE is untouched.
-
-    At 100 TB this removes two full-corpus shuffles; the surviving
-    exchange carries one row (the global stats broadcast).
+    A fixed 3-term query needs no token explode: per-doc ``dl`` is
+    ``size(tokens)`` and per-term ``tf`` is ``size(filter(tokens, =
+    term))``, both row-local, so only the 1-row stats aggregate shuffles.
+    tf/dl/df/n_docs/avgdl are the same integers the oracle's exploded CTE
+    computes, and the partial-score expression tree (double ops, order,
+    round points) and the fixed-order pivot sum match it.
     """
     def _count_of(term):
         # one-arg lambda: a two-arg lambda would be called as
@@ -152,9 +133,8 @@ def _bm25_scored(docs: DataFrame) -> DataFrame:
         F.size(F.filter(F.col("ts"), _count_of(t))).alias(f"tf{i}")
         for i, t in enumerate(_BM25_TERMS)
     ]
-    # dl > 0 mirrors the exploded form's domain: a token-less doc
-    # never produced a (doc_id, token) row, so it was absent from
-    # dl and from the corpus stats.
+    # dl > 0 mirrors the oracle's exploded domain: a token-less doc has no
+    # (doc_id, token) row, so it is absent from dl and the corpus stats.
     per_doc = (
         docs.select("doc_id", word_tokens_col().alias("ts"))
         .select("doc_id", F.size("ts").alias("dl"), *tf_cols)
@@ -246,24 +226,19 @@ _SQL_COS = SQL_COSINE  # shared oracle twin of functions.vector.cosine
 )
 def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: fuse BM25 and cosine candidate lists with
-    reciprocal-rank fusion (1/(60+rank), the parameter-free fusion
-    every hybrid RAG stack starts from). Documents and embeddings
-    align on doc_id = vec_id; the query is the fixed BM25 term set
-    plus embedding #{q} as the query vector.
+    reciprocal-rank fusion (1/(60+rank)). Documents and embeddings align on
+    doc_id = vec_id; the query is the fixed BM25 term set plus embedding
+    #{q} as the query vector.
 
-    Item #{q} is the designated query (its embedding is the query
-    vector), so it is excluded as a candidate from BOTH legs — not
-    just the cosine leg where it would trivially win at cos=1.
-    NULL cosines (zero-norm embeddings) are likewise barred from the
-    candidate set, as the oracle bars them.
+    Item #{q} is the designated query, so it is excluded as a candidate from
+    both legs, not just the cosine leg where it would trivially win at
+    cos=1. NULL cosines (zero-norm embeddings) are barred from the candidate
+    set, as the oracle bars them.
 
-    Scale shape: each leg reduces the corpus to a top-50 candidate
-    set (TakeOrdered — no global sort) and numbers it with one
-    row_number window over those 50 rows, so each leg's corpus
-    pipeline runs once; the fusion is a full outer join of two
-    50-row sets. The expensive parts — token stream and one corpus
-    scan for cosine — are single-pass, shuffle only compact stats,
-    and the vector side broadcasts one query row.
+    Each leg reduces the corpus to a top-50 candidate set (TakeOrdered) and
+    numbers it with one row_number window over those 50 rows, so each leg's
+    corpus pipeline runs once; the fusion is a full outer join of two 50-row
+    sets.
     """
 
     def top_ranked(scored: DataFrame, score: str, rnk: str) -> DataFrame:
@@ -283,9 +258,8 @@ def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "score",
         "bm_rnk",
     )
-    # widened like the ann family's _emb: the per-vector cosine fold
-    # is pure narrow work that a one-row-group parquet file would
-    # otherwise run on a single core
+    # widened like the ann family's _emb: the per-vector cosine fold is
+    # narrow work
     emb = load_table(spark, sf_dir, "embeddings", widen=True).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
@@ -345,15 +319,10 @@ _MRL_TOPK = _sim._TOP_K
     """,
 )
 def ann_topk_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka-style first-pass ANN: cosine top-k over the FIRST
-    {d} of 64 dimensions — the 4× cheaper retrieval pass that MRL-
-    trained embeddings make possible (truncate, retrieve broad, then
-    re-rank survivors with the full vector — the re-rank is exactly
-    ``ann_topk_bruteforce``). Cosine self-normalizes, so truncation
-    needs no explicit re-norm. Same broadcast-queries/corpus-stays-
-    put shape as the other ANN variants; the scored stream carries
-    16-dim slices, and WindowGroupLimit prunes per-partition before
-    the rank shuffle.
+    """Matryoshka-style first-pass ANN: cosine top-k over the first {d} of
+    64 dimensions, the 4× cheaper retrieval pass of MRL-trained embeddings
+    (the full-vector re-rank is ``ann_topk_bruteforce``). Cosine
+    self-normalizes, so truncation needs no explicit re-norm.
     """
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -373,8 +342,8 @@ def ann_topk_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine(F.col("qvec"), F.col("vec")).alias("cos"),
         )
     )
-    # shared ANN finishing stage: the tie-break/rounding contract
-    # lives in similarity._topk (ONE place), _MRL_TOPK is _TOP_K
+    # shared ANN finishing stage: the tie-break/rounding contract lives
+    # in similarity._topk; _MRL_TOPK is _TOP_K
     return _sim._topk(scored)
 
 
@@ -411,27 +380,24 @@ _SPAN_W = 5  # window length in tokens
     """,
 )
 def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring duplication signal per document: the fraction
-    of a doc's DISTINCT {w}-token windows that also appear in at least
-    one other document — the cross-document criterion behind
-    suffix-array substring dedup (train-data memorization risk),
-    computed at shingle granularity. Within-doc repetition is
-    deliberately out of scope (windows are distinct per doc before
-    counting); ``text_repetition`` owns that signal.
+    """Exact-substring duplication signal per document: the fraction of a
+    doc's distinct {w}-token windows that also appear in at least one other
+    document, the cross-document criterion behind suffix-array substring
+    dedup, at shingle granularity. Within-doc repetition is out of scope
+    (windows are distinct per doc before counting); ``text_repetition`` owns
+    that signal.
 
-    Scale shape: windows hash to 60-bit ints immediately (the string
-    never shuffles); DISTINCT per doc, one count per hash, and a
-    semi-join-shaped LEFT JOIN back to flag shared windows. A
-    hot-window cap is unnecessary: the join key is the window ITSELF
-    (an equality pairing with its own count, not a pair explosion).
+    Windows hash to 60-bit ints; a LEFT JOIN back to the per-hash counts
+    flags shared windows. No hot-window cap is needed: the join key is the
+    window itself, paired with its own count, not a pair explosion.
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", word_tokens_col().alias("ts"))
     win_arr = F.when(
-        # guard like dedup.shingles_df: a doc below the window width
-        # has NO windows — the unguarded sequence(1, greatest(...,1))
-        # fabricated one truncated window where the oracle's
-        # end-exclusive range() correctly yields none
+        # guard like dedup.shingles_df: a doc below the window width has
+        # no windows, where an unguarded sequence(1, greatest(...,1)) would
+        # fabricate one truncated window the oracle's end-exclusive range()
+        # does not yield
         F.size("ts") >= _SPAN_W,
         F.transform(
             # starts 1..L-(w-1): Spark sequence is END-INCLUSIVE
@@ -497,14 +463,9 @@ def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the matryoshka first-pass index against exact
-    brute-force cosine, per query — the evaluation harness every ANN
-    deployment runs before picking truncation depth / nprobe at scale.
-    Composes two registered pipelines (their oracles compose the same
-    way), so the measurement itself is hash-verified: a drift in
-    either index OR in the metric breaks the match.
-
-    Scale shape: both legs end at 8×5-row candidate sets; the recall
-    join touches 40 rows.
+    brute-force cosine, per query. Composes two registered pipelines (their
+    oracles compose the same way), so a drift in either index or in the
+    metric breaks the match.
     """
     bf = _sim.ann_topk_bruteforce(spark, sf_dir).select(
         "query_id", "neighbor_id"
@@ -546,13 +507,10 @@ _FH_BUCKETS = 32
     """,
 )
 def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashing-trick featurization: tokens hash into {b} fixed
-    buckets, counted per document — the bounded-width featurizer
-    (Weinberger et al.) that needs no vocabulary pass, so it
-    streams over 100 TB with a single (doc_id, bucket) aggregate.
-    The md5-derived bucket makes the feature map engine-portable
-    (vs Spark's murmur-based HashingTF, which no oracle could
-    replay).
+    """Hashing-trick featurization: tokens hash into {b} fixed buckets,
+    counted per document (Weinberger et al.), with no vocabulary pass. The
+    md5-derived bucket makes the feature map engine-portable (Spark's
+    murmur-based HashingTF is not replayable by an oracle).
     """
     docs = load_table(spark, sf_dir, "documents")
     tok = _tokens(docs)

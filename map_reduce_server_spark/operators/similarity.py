@@ -1,10 +1,9 @@
 """Similarity search over the ``embeddings`` table.
 
-Brute-force cosine top-k is the exact baseline; the IVF/LSH-bucketed
-variant is the scale path (bucket = partition-prunable key at 100 TB,
-so a query probes 1/2^H of the corpus instead of all of it). All
-vector math is JVM-side ``zip_with``/``aggregate`` (sequential fold →
-deterministic, oracle-comparable); no Python in the hot path.
+Brute-force cosine top-k is the exact baseline; the LSH-bucketed and IVF
+variants probe a partition-prunable key, so a query reads a fraction of the
+corpus. All vector math is JVM-side ``zip_with``/``aggregate`` (a sequential
+fold, so deterministic and oracle-comparable); no Python in the hot path.
 """
 
 from __future__ import annotations
@@ -40,8 +39,7 @@ _SQL_COS = SQL_COSINE  # shared oracle twin of functions.vector.cosine
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # widened: every consumer's dominant cost is the per-vector
-    # cosine/dot fold, pure narrow work that a one-row-group parquet
-    # file would otherwise run on one core (see tables.load_table)
+    # cosine/dot fold, narrow work (see tables.load_table)
     return load_table(spark, sf_dir, "embeddings", widen=True).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
@@ -70,9 +68,8 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k: broadcast the query set, scan the corpus
-    once, per-query window rank. The corpus side never shuffles its
-    vectors — only (query_id, vec_id, cos) survive to the rank."""
+    """Exact cosine top-k: broadcast the query set, scan the corpus once,
+    per-query window rank over (query_id, vec_id, cos)."""
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
@@ -106,12 +103,10 @@ _SQL_PLANE = (
 
 
 def _plane_values(j: int) -> list[float]:
-    """Plane j's components, precomputed driver-side with hashlib —
-    BIT-IDENTICAL to the SQL derivation (int(md5hex[:15], 16) is
-    exactly conv(substr(md5, 1, 15), 16, 10)), but folded into a
-    literal array: the in-expression form re-ran 4 planes × 64 dims
-    of md5 + base conversion PER CORPUS ROW because Catalyst does not
-    constant-fold higher-order-function subtrees."""
+    """Plane j's components, precomputed driver-side with hashlib and
+    bit-identical to the SQL derivation (int(md5hex[:15], 16) is exactly
+    conv(substr(md5, 1, 15), 16, 10)), folded into a literal array because
+    Catalyst does not constant-fold higher-order-function subtrees."""
     import hashlib
 
     out = []
@@ -176,10 +171,10 @@ def _sql_bucket(vec: str) -> str:
     """,
 )
 def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-k: random-hyperplane LSH bucket, search only
-    the query's bucket. At 100 TB the corpus is written partitioned
-    by bucket, so a query reads 1/2^H of the data (partition
-    pruning); here the bucket is computed on the fly."""
+    """Approximate top-k: random-hyperplane LSH bucket, search only the
+    query's bucket. The bucket is computed on the fly; written
+    ``partitionBy(bucket)``, a query reads 1/2^H of the data
+    (tests/test_ann_partition_pruning.py)."""
     emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_col(F.col("vec")))
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -203,12 +198,10 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- IVF (inverted-file) ANN: coarse quantize to centroids ------------------
 
-# Deterministic "training-free" coarse quantizer: the centroids are
-# corpus vectors picked by a fixed rule (vec_id in [N_QUERIES,
-# N_QUERIES + K)), so both engines agree bit-for-bit without running
-# k-means. A real deployment would swap in trained centroids; every
-# plan shape below (assign once, bucket by cell, probe nearest cells)
-# is unchanged by that swap.
+# Deterministic "training-free" coarse quantizer: the centroids are corpus
+# vectors picked by a fixed rule (vec_id in [N_QUERIES, N_QUERIES + K)), so
+# both engines agree bit-for-bit without running k-means. Trained centroids
+# would change no plan shape below.
 _IVF_K = 8  # number of coarse cells
 _IVF_NPROBE = 2  # cells probed per query
 
@@ -221,11 +214,10 @@ def _centroids(emb: DataFrame) -> DataFrame:
 
 
 def _topk(scored: DataFrame) -> DataFrame:
-    """Shared ANN finishing stage: rank a (query_id, neighbor_id,
-    cos) candidate set per query (DESC cos, neighbor_id tiebreak),
-    keep the top ``_TOP_K``, round for output. Every ANN variant ends
-    here so the tie-break and rounding contract lives in ONE place
-    (and one SQL tail mirrors it in each oracle)."""
+    """Shared ANN finishing stage: rank a (query_id, neighbor_id, cos)
+    candidate set per query (DESC cos, neighbor_id tiebreak), keep the top
+    ``_TOP_K``, round for output. Every ANN variant ends here, and one SQL
+    tail mirrors it in each oracle."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
     return (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -240,20 +232,15 @@ def _topk(scored: DataFrame) -> DataFrame:
 
 
 def _argmax_assign(emb, cands, label: str, score, out: str):
-    """ZERO-SHUFFLE nearest-centroid assignment: the K candidate
-    centroids collapse into ONE broadcast single-row array (sorted by
-    label), each vector scores all K inside a ``transform`` and folds
-    to the argmax with ``aggregate`` — pure map-side codegen, no
-    window, no exchange of vectors. The previous window formulation
-    (row_number over crossJoin output) pushed K wide copies of EVERY
-    corpus vector through a hash exchange — the opposite of the
-    "corpus assignment is one narrow pass" property IVF exists for.
+    """Nearest-centroid assignment with no shuffle: the K candidate
+    centroids collapse into one broadcast single-row array (sorted by
+    label), each vector scores all K inside a ``transform`` and folds to the
+    argmax with ``aggregate``, so vectors take no exchange.
 
-    Tie/NULL semantics replicate ``row_number over (ORDER BY score
-    DESC, label)`` with DESC NULLS LAST: strict ``>`` keeps the
-    smallest label on score ties (array is label-sorted), a NULL
-    score never displaces a real one, and an all-NULL vector gets
-    the smallest label.
+    Tie/NULL semantics replicate ``row_number over (ORDER BY score DESC,
+    label)`` with DESC NULLS LAST: strict ``>`` keeps the smallest label on
+    score ties (the array is label-sorted), a NULL score never displaces a
+    real one, and an all-NULL vector gets the smallest label.
     """
     carr = cands.agg(
         F.sort_array(
@@ -335,19 +322,12 @@ _SQL_IVF = f"""
 
 @register("ann_topk_ivf", oracle=_SQL_IVF)
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (inverted-file) ANN: coarse-quantize the corpus to K
-    centroid cells, probe the query's nearest ``_IVF_NPROBE`` cells.
+    """IVF (inverted-file) ANN: coarse-quantize the corpus to K centroid
+    cells, probe the query's nearest ``_IVF_NPROBE`` cells.
 
-    Scale shape: the K centroids broadcast, so corpus assignment is
-    ONE narrow pass (no shuffle of vectors); at 100 TB the corpus is
-    written ``partitionBy(cell)`` and a query reads nprobe/K of the
-    data via partition pruning — same storage trick as
-    ``ann_topk_lsh`` (proven in tests/test_ann_partition_pruning.py)
-    but with data-adaptive cells instead of data-oblivious
-    hyperplanes, which is what production IVF indexes use. Centroids
-    here are seed corpus vectors chosen by a fixed rule (not k-means)
-    so the DuckDB oracle replays the assignment exactly; trained
-    centroids drop in without changing any plan.
+    The K centroids broadcast, so corpus assignment is one narrow pass.
+    Centroids are seed corpus vectors chosen by a fixed rule (not k-means),
+    so the DuckDB oracle replays the assignment exactly.
     """
     emb = _emb(spark, sf_dir)
     cents = _centroids(emb)
@@ -414,15 +394,14 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe LSH top-k: probe the query's bucket AND its
-    Hamming-1 neighbor buckets (one sign-bit flip per hyperplane).
+    """Multi-probe LSH top-k: probe the query's bucket and its Hamming-1
+    neighbor buckets (one sign-bit flip per hyperplane).
 
-    Single-probe LSH misses neighbors whose vector sits just across
-    one hyperplane; probing the H adjacent buckets recovers most of
-    that recall for (H+1)/2^H of the corpus scanned (5/16 here)
-    instead of 1/16 — still partition-prunable at 100 TB because the
-    probe set is an explicit equi-join key list, never a scan of all
-    buckets. Recall vs the exact baseline is pinned by
+    Single-probe LSH misses neighbors just across one hyperplane; probing
+    the H adjacent buckets recovers most of that recall for (H+1)/2^H of the
+    corpus (5/16 here) instead of 1/16. The probe set is an explicit
+    equi-join key list, so it stays partition-prunable. Recall vs the exact
+    baseline is pinned by
     ``tests/test_ann_partition_pruning.py::test_multiprobe_recall``.
     """
     emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_col(F.col("vec")))
@@ -473,13 +452,11 @@ _SQL_COS_PAIRS = f"""
     oracle=f"SELECT vec_a, vec_b, cos_sim FROM {_SQL_COS_PAIRS} p",
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs: LSH-bucket candidates, verify
-    cosine ≥ 0.45. Same bucketing as ann_topk_lsh, so at scale the
-    self-join is bucket-co-partitioned (no all-pairs shuffle).
-    (Threshold sits above the corpus's p99.9 pairwise cosine — max
-    is 0.513 on these random near-orthogonal vectors — so the output
-    is sparse but NON-empty; the conventional 0.9x near-dup cutoff
-    could never fire here and made the query trivially empty.)"""
+    """Embedding near-dup pairs: LSH-bucket candidates (the bucketing of
+    ann_topk_lsh), verify cosine ≥ 0.45. The threshold sits above the
+    corpus's p99.9 pairwise cosine (max 0.513 on these random
+    near-orthogonal vectors), so the output is sparse but non-empty; a
+    0.9x near-dup cutoff would never fire here."""
     emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_col(F.col("vec")))
     a = emb.alias("a")
     b = emb.alias("b")
@@ -508,11 +485,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup groups: connected components over the
-    embedding-cosine near-dup graph — the vector-space twin of
-    ``dedup_cluster`` (which clusters the token-shingle MinHash
-    graph). Pairs come from the bucket-co-partitioned cosine join;
-    the transitive closure runs on 8-byte vec_ids only, and the
-    oracle replays closure + min-label via the SAME
+    embedding-cosine near-dup graph, the vector-space twin of
+    ``dedup_cluster``. The oracle replays closure + min-label via the same
     ``sql_closure_oracle`` template ``dedup_cluster`` uses."""
     emb = _emb(spark, sf_dir).select("vec_id")
     return label_components(
@@ -521,15 +495,12 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# k-means over embeddings (fixed-iteration Lloyd's, portable arithmetic)
-# ---------------------------------------------------------------------------
+# --- k-means over embeddings (fixed-iteration Lloyd's, portable arithmetic) ---
 
 _KM_K = 8
-# PINNED at 2: the DuckDB oracle (_sql_kmeans_oracle) hand-unrolls
-# exactly two assignment passes (a1 -> c1 -> a2); changing this
-# constant without extending the oracle's CTE chain turns every
-# kmeans_embeddings gate run red wholesale.
+# Pinned at 2: the DuckDB oracle (_sql_kmeans_oracle) hand-unrolls exactly
+# two assignment passes (a1 -> c1 -> a2); changing this constant needs a
+# longer CTE chain there.
 _KM_ITERS = 2  # assignments; centroids update (iters - 1) times
 
 
@@ -558,13 +529,11 @@ def _km_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
 
 
 def _km_update(assigned: DataFrame) -> DataFrame:
-    """Element-wise centroid means in long format: tie-free exact
-    integer sums per (cluster, dim) (``qmean40`` — the former
-    decimal(38,12) cast rounded scale-12 midpoints HALF_UP in Spark
-    but half-to-even in DuckDB, and the gate embeddings contain such
-    k/2^13 elements) — order-independent, so identical on any
-    partitioning and any engine — re-packed to arrays ordered by
-    dim."""
+    """Element-wise centroid means in long format: tie-free exact integer
+    sums per (cluster, dim) (``qmean40``), identical on any partitioning and
+    either engine, re-packed to arrays ordered by dim. A decimal(38,12) cast
+    would round scale-12 midpoints HALF_UP in Spark but half-to-even in
+    DuckDB, and the gate embeddings contain such k/2^13 elements."""
     long = assigned.select(
         "cluster", F.posexplode("vec").alias("dim", "v")
     )
@@ -611,19 +580,12 @@ def _sql_kmeans_oracle() -> str:
 
 @register("kmeans_embeddings", oracle=_sql_kmeans_oracle())
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-iteration Lloyd's k-means over the embedding corpus
-    (K=8, two assignment passes) — the iterative-ML-on-DataFrames
-    pattern: centroids stay a broadcast 8-row side, vectors never
-    shuffle for assignment (crossJoin against the broadcast
-    constant-sized side + per-vector window argmax), and the only
-    shuffle is the (cluster, dim) centroid mean. Deterministic end to
-    end: seed centroids by lowest vec_id, rounded-cosine argmax with
-    label tie-break, tie-free exact integer means — so even this
-    clustering
-    is value-checked against the oracle's unrolled recurrence, not
-    rows-counted. Fixed iterations keep it SQL-expressible; a
-    convergence-loop variant would follow dedup_cluster's
-    rows-only pattern instead.
+    """Fixed-iteration Lloyd's k-means over the embedding corpus (K=8, two
+    assignment passes): centroids are a broadcast 8-row side and the only
+    shuffle is the (cluster, dim) centroid mean. Seed centroids by lowest
+    vec_id, rounded-cosine argmax with label tie-break and tie-free exact
+    integer means make it value-checkable against the oracle's unrolled
+    recurrence; fixed iterations keep it SQL-expressible.
     """
     emb = _emb(spark, sf_dir)
     cents = _km_seed_centroids(emb)
@@ -634,9 +596,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assigned.select("vec_id", "cluster")
 
 
-# ---------------------------------------------------------------------------
-# Int8 embedding quantization (storage/serving compression)
-# ---------------------------------------------------------------------------
+# --- Int8 embedding quantization (storage/serving compression) --------------
 
 
 @register(
@@ -666,16 +626,11 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric int8 quantization per vector: scale by 127/max|x|,
-    round half-up, report the max reconstruction error — the 4×
-    storage/serving compression every large ANN index applies before
-    sharding. Rounding is ``floor(x+0.5)`` explicitly (not ROUND) so
-    both engines place half-way values identically, and the error
-    bound max_err ≤ max_abs/254 is checked by the oracle's replay.
-
-    Scale: embarrassingly parallel (no shuffle at all) — pure
-    map-side ``transform``/``aggregate`` higher-order functions inside
-    codegen; output carries int8-range values + one double per vector.
+    """Symmetric int8 quantization per vector: scale by 127/max|x|, round
+    half-up, report the max reconstruction error. Rounding is
+    ``floor(x+0.5)`` explicitly (not ROUND) so both engines place half-way
+    values identically, and the oracle's replay checks the bound
+    max_err ≤ max_abs/254.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
@@ -702,17 +657,14 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.round("mx", 9).alias("max_abs"),
         # CSV-serialized per repo convention (see q_collect_sorted): the
-        # grading driver canonicalizes with pandas sort_values, which cannot
-        # hash raw list cells — every array-valued output column must be a
-        # string.
+        # driver canonicalizes with pandas sort_values, which cannot hash
+        # list cells, so every array-valued output column is a string.
         F.array_join(quant.cast("array<string>"), ",").alias("q"),
         err.alias("max_err"),
     )
 
 
-# ---------------------------------------------------------------------------
-# ANN over int8-reconstructed vectors (quantized serving path)
-# ---------------------------------------------------------------------------
+# --- ANN over int8-reconstructed vectors (quantized serving path) -----------
 
 @register(
     "ann_topk_quantized",
@@ -741,14 +693,11 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-k over int8-RECONSTRUCTED vectors — what an index
-    serving quantized embeddings (embedding_quantize_int8) actually
-    returns. Reconstruction q*scale/127 is deterministic double math,
-    so even the approximation is value-checked against the oracle;
-    recall vs the float baseline is quantified in
-    ``tests/test_vector_functions.py``. Same plan as the float
-    brute force: broadcast queries, corpus scans once, never shuffles
-    vectors.
+    """Exact top-k over int8-reconstructed vectors, what an index serving
+    quantized embeddings (embedding_quantize_int8) returns. Reconstruction
+    q*scale/127 is deterministic double math, so the approximation is
+    value-checked against the oracle; recall vs the float baseline is in
+    ``tests/test_vector_functions.py``.
     """
     emb = _emb(spark, sf_dir)
     recon = (
@@ -776,9 +725,7 @@ def ann_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk(scored)
 
 
-# ---------------------------------------------------------------------------
-# Embedding-space drift monitor (split-vs-split centroid comparison)
-# ---------------------------------------------------------------------------
+# --- Embedding-space drift monitor (split-vs-split centroid comparison) -----
 
 
 @register(
@@ -809,21 +756,12 @@ def ann_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space drift: split the corpus by a deterministic
-    hash, compute each half's centroid with tie-free exact
-    per-dimension integer sums (``qmean40``), and report centroid
-    cosine + the largest per-
-    dimension delta — the embedding-side complement of q_drift_psi
-    (which monitors a scalar feature). In production the two "splits"
-    are yesterday's corpus vs today's; a centroid_cos dip or a
-    spiking dimension flags an upstream encoder or ingest change.
-
-    Scale shape: vectors never move whole — posexplode reduces them
-    to (split, dim, value) and the only shuffle is the 2×64-key
-    mean aggregate; the two 64-dim centroids then compare in a
-    broadcast pair join. Exact integer sums make the centroid
-    bit-identical on any partitioning — monitoring that must not
-    flap with cluster layout.
+    """Embedding-space drift: split the corpus by a deterministic hash,
+    compute each half's centroid with tie-free exact per-dimension integer
+    sums (``qmean40``), and report centroid cosine + the largest
+    per-dimension delta. A centroid_cos dip or a spiking dimension flags an
+    encoder or ingest change; exact sums keep the centroid bit-identical on
+    any partitioning.
     """
     from map_reduce_server_spark.functions.hashing import md5_long
 
@@ -854,9 +792,7 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Class balance / inverse-frequency weights over the labeled corpus
-# ---------------------------------------------------------------------------
+# --- Class balance / inverse-frequency weights over the labeled corpus ------
 
 
 @register(
@@ -874,10 +810,7 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_label_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Class-balance audit + sklearn-style 'balanced' class weights
-    (tot / (n_classes * n_c)) over the labeled embedding corpus — the
-    pre-training check that decides whether a sampler needs
-    reweighting. One tiny aggregate + a broadcast 1-row total; the
-    weights feed q_weighted_sample-style samplers downstream."""
+    (tot / (n_classes * n_c)) over the labeled embedding corpus."""
     emb = load_table(spark, sf_dir, "embeddings")
     c = emb.groupBy("label").agg(F.count("*").alias("n"))
     t = c.agg(
@@ -926,18 +859,10 @@ from map_reduce_server_spark import registry as _registry  # noqa: E402
     """,
 )
 def q_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-NN majority-vote classification of the benchmark query
-    vectors from their top-{k} cosine neighbors' labels (ties break
-    to the smallest label — a total order both engines share) —
-    the label-propagation / weak-supervision primitive that turns a
-    similarity index into an annotator.
-
-    Scale: composes the registered brute-force top-k (corpus never
-    shuffles; swap in ann_topk_ivf for the approximate serving path
-    — same downstream vote), then all remaining joins and the vote
-    run on |queries|×k rows. The label side joins by vec_id —
-    broadcastable at any corpus size where labels fit an executor;
-    beyond that it is a plain equi-join on the 8-byte key.
+    """k-NN majority-vote classification of the benchmark query vectors
+    from their top-{k} cosine neighbors' labels (ties break to the smallest
+    label, a total order both engines share). Composes the registered
+    brute-force top-k; the joins and the vote run on |queries|×k rows.
     """
     nn = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     lab = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")

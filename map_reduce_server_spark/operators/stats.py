@@ -1,11 +1,8 @@
 """Statistical-audit operators: inequality, independence, robust
 outliers, backtested forecasting, and blocked fuzzy matching.
 
-These extend the warehouse-analytics surface the reference's
-map/sort/reduce pipeline could only approximate with hand-written
-executables (reference ``tests/testdata/exec/*`` are the closest
-analogue — free-form per-line scoring scripts); here each is a
-declarative DataFrame plan Catalyst can push down and parallelize.
+Each is a declarative DataFrame plan; the reference's closest analogue is a
+free-form per-line scoring executable (``tests/testdata/exec/*``).
 
 Determinism contract (shared with every oracle in this repo): any
 float reduction over a group is either (a) a sum of DECIMAL-cast
@@ -62,11 +59,8 @@ def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue sorted ascending, ties broken by custkey so the rank —
     and therefore the statistic — is unique).
 
-    Scale: one shuffle to aggregate revenue per customer, one
-    window partitioned BY NATION (each partition sorts independently
-    — never a global sort), then a 25-row broadcast join to name the
-    nation. Both Σ terms are decimal sums, so the result is identical
-    under any partitioning of a 100 TB orders table.
+    Both Σ terms are decimal sums, so the result is identical under any
+    partitioning.
     """
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -138,13 +132,9 @@ def q_crosstab_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     status and priority: per-cell observed/expected counts and
     contribution, plus the global χ² statistic on every row.
 
-    Scale: the only full-data pass is the initial groupBy (partial
-    aggregation map-side); everything after runs on the tiny
-    |status|×|priority| cell grid. The grand total and the χ² sum
-    are broadcast 1-row aggregates (house pattern), not global
-    windows, and the χ² total sums DECIMAL-cast rounded
-    contributions — an associative reduction, stable under any row
-    order.
+    The grand total and the χ² sum are broadcast 1-row aggregates, not
+    global windows, and the χ² total sums DECIMAL-cast rounded
+    contributions, so it is stable under any row order.
     """
     orders = load_table(spark, sf_dir, "orders")
     obs = (
@@ -216,18 +206,13 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimator of choice when the mean/stddev are themselves dragged
     by the outliers being hunted.
 
-    ``n`` counts MEASURED rows (non-NULL value → non-NULL deviation):
-    a NULL-valued row can neither be an outlier nor a non-outlier,
-    and counting it in the denominator would silently dilute the
-    outlier rate — identically in both engines, which is exactly the
-    bug class the oracle gate cannot see.
+    ``n`` counts measured rows (non-NULL value → non-NULL deviation): a
+    NULL-valued row can neither be an outlier nor a non-outlier, and
+    counting it would dilute the outlier rate identically in both engines,
+    a bug the oracle gate cannot see.
 
-    Scale: two grouped exact-percentile aggregations with a broadcast
-    join of the per-type medians in between (|event_type| is tiny).
     Exact interpolated percentiles match DuckDB's ``quantile_cont``
-    bit-for-bit on identical inputs, as already proven by
-    ``q_percentiles``; at 100 TB the drop-in relaxation is
-    ``approx_percentile`` with a bounded error.
+    bit-for-bit on identical inputs, as ``q_percentiles`` shows.
     """
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     med = ev.groupBy("event_type").agg(
@@ -264,13 +249,11 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ONE definition of "daily revenue per event type" shared by the
-# forecast backtest and the TS similarity search — including the
-# NULL-day policy: an all-NULL day has no measured revenue and is
-# dropped (Spark's collect_list skips NULLs where DuckDB's list()
-# keeps them, so an unfiltered NULL day also breaks engine parity on
-# window membership). Before this helper the rollup was pasted at
-# both sites with DIVERGENT policies.
+# One definition of "daily revenue per event type" shared by the forecast
+# backtest and the TS similarity search, including the NULL-day policy: an
+# all-NULL day has no measured revenue and is dropped (Spark's collect_list
+# skips NULLs where DuckDB's list() keeps them, so an unfiltered NULL day
+# also breaks engine parity on window membership).
 _SQL_DAILY_REVENUE = """
       SELECT event_type, CAST(ts AS DATE) AS d,
              CAST(SUM(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS {alias}
@@ -315,24 +298,16 @@ def _daily_revenue(ev: DataFrame, alias: str) -> DataFrame:
     """,
 )
 def q_forecast_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal-naive forecast backtest: predict each day's revenue
-    per event type with the value exactly 7 CALENDAR days earlier
-    (a date-keyed self-join, not LAG(7) over observed rows — a
-    gapped series must not slide the season off alignment), scoring
-    MAE over the days where BOTH actual and forecast exist (a day
-    whose actual is unmeasured carries no error; counting it in the
-    denominator would bias MAE low, identically in both engines) and
-    MAPE additionally requiring nonzero actuals (a zero-revenue day
-    would otherwise divide by zero — excluded in both engines
-    identically).
+    """Seasonal-naive forecast backtest: predict each day's revenue per
+    event type with the value exactly 7 calendar days earlier (a date-keyed
+    self-join, not LAG(7) over observed rows, so a gapped series keeps its
+    season aligned). MAE scores the days where both actual and forecast
+    exist (an unmeasured actual carries no error; counting it would bias MAE
+    low in both engines alike); MAPE also requires nonzero actuals.
 
-    Scale: the daily rollup collapses the fact table to
-    |event_type|×|days| rows BEFORE the join, so the seasonal lookup
-    is an equi-join on a trivially small table; error sums are
-    decimal-cast (MAPE terms at scale 12 to keep the per-day
-    quotient exact enough to round to 6). Daily actuals are
-    themselves exact decimal sums, so both engines compare identical
-    doubles.
+    Error sums are decimal-cast (MAPE terms at scale 12, so the per-day
+    quotient is exact enough to round to 6), and daily actuals are exact
+    decimal sums, so both engines compare identical doubles.
     """
     ev = load_table(spark, sf_dir, "events")
     daily = _daily_revenue(ev, "actual")
@@ -390,17 +365,9 @@ def q_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     edit-distance ≤ 3 filter, and report how many raw row pairs each
     name-level match covers.
 
-    Scale: the classic ER optimization — dedupe to the DISTINCT name
-    vocabulary first (orders of magnitude smaller than the part
-    table), block, and only then pay the quadratic comparison inside
-    blocks; the raw part table is touched exactly once. The
-    self-join strategy is deliberately left to the optimizer: at a
-    bounded vocabulary it broadcasts (statistics-driven), and if the
-    vocabulary ever approached table size a forced broadcast would
-    OOM where the fallback shuffle join on the block key still runs.
-    Production refinement for skewed blocks is a second blocking key
-    (name length band), noted but unnecessary at this vocabulary
-    size.
+    Dedupes to the distinct name vocabulary first, then compares only
+    inside blocks. The self-join gets no broadcast hint; the optimizer
+    picks it from statistics (docs/SCALING.md, statistics).
     """
     part = load_table(spark, sf_dir, "part")
     names = part.groupBy(
@@ -416,10 +383,9 @@ def q_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("a.name") < F.col("b.name")),
         )
         # Catalyst pushes the threshold back into the join condition
-        # regardless of how this is phrased (verified on the optimized
-        # plan), so levenshtein evaluates in the join filter and again
-        # in the projection FOR SURVIVORS ONLY — the right trade: the
-        # filter prunes inside the join, and survivors are few.
+        # regardless of phrasing (verified on the optimized plan), so
+        # levenshtein evaluates in the join filter and again in the
+        # projection for survivors only.
         .withColumn(
             "dist",
             F.levenshtein(F.col("a.name"), F.col("b.name")).cast("bigint"),
@@ -468,17 +434,11 @@ _SQL_SPLIT_GRP = sql_split_hash("doc_id")
     """,
 )
 def q_ab_test_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch two-sample t-test of document length between the
-    engine's deterministic hash splits (same ``md5('split:'||id) % 2``
-    gate as q_drift_psi / text_train_test_split) — the experiment
-    readout that decides whether an A/B difference is noise. Variance
-    comes from the one-pass sufficient statistics (Σx, Σx², n), both
-    DECIMAL-exact, so the t statistic is partitioning-invariant.
-
-    Scale: a single scan producing two (n, Σx, Σx²) triples, then
-    scalar arithmetic on a 2-row table self-joined into one row.
-    This is the canonical "sufficient statistics, not data, move"
-    pattern: the shuffle payload is 6 numbers.
+    """Welch two-sample t-test of document length between the engine's
+    deterministic hash splits (the ``md5('split:'||id) % 2`` gate of
+    q_drift_psi / text_train_test_split). Variance comes from the one-pass
+    sufficient statistics (Σx, Σx², n), both DECIMAL-exact, so the t
+    statistic is partitioning-invariant.
     """
     docs = load_table(spark, sf_dir, "documents")
     grp = split_hash(F.col("doc_id")) % 2
@@ -487,9 +447,9 @@ def q_ab_test_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("grp")
         .agg(
             # COUNT(x), not COUNT(*): the sums skip NULL x, so the
-            # denominator must count only MEASURED rows or the mean/
-            # variance deflate identically in both engines (an
-            # oracle-blind bias the gate cannot catch)
+            # denominator counts only measured rows, or the mean and
+            # variance deflate identically in both engines (a bias the
+            # oracle gate cannot see)
             F.count("x").cast("bigint").alias("n"),
             F.sum(F.col("x").cast("decimal(30,0)")).cast("double").alias("sx"),
             F.sum((F.col("x") * F.col("x")).cast("decimal(38,0)"))
@@ -552,22 +512,15 @@ def q_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     other part is ≤ price AND ≥ size with one strict — exact ties on
     both axes all survive).
 
-    Scale: the skyline is computed on the DISTINCT-price maxima
-    (groupBy price → max size), so the running-max window sorts only
-    |distinct prices| rows — never the part table; survivors join
-    back by (price, size) equi-keys. At 100 TB the distinct-price
-    table still fits one stage; if it didn't, the standard
-    refinement is per-partition local skyline (monotone filter) then
-    merge, which this plan's group-then-window structure already
-    mirrors.
+    The running-max window sorts only the distinct-price maxima (groupBy
+    price → max size); survivors join back by (price, size) equi-keys.
     """
     part = load_table(spark, sf_dir, "part")
-    # NULL prices are incomparable under the dominance definition —
-    # and Spark's ASC NULLS FIRST default would let a NULL-price
-    # group's msize poison prev_max for every real price, where
-    # DuckDB (NULLS LAST) would not. Exclude them from the frontier;
-    # the join-back on price then drops NULL-price parts identically
-    # in both engines (NULL never equi-matches).
+    # NULL prices are incomparable under the dominance definition, and
+    # Spark's ASC NULLS FIRST default would let a NULL-price group's msize
+    # poison prev_max for every real price, where DuckDB (NULLS LAST)
+    # would not. Exclude them from the frontier; the join-back on price
+    # then drops NULL-price parts identically in both engines.
     pmax = (
         part.filter(F.col("p_retailprice").isNotNull())
         .groupBy(F.col("p_retailprice").alias("price"))
@@ -583,8 +536,8 @@ def q_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_partkey", "p_retailprice", "p_size")
 
 
-# Poisson(1) inverse-CDF thresholds (cumulative e^{-1} Σ 1/k!) —
-# written as shared literals so both engines compare the SAME doubles.
+# Poisson(1) inverse-CDF thresholds (cumulative e^{-1} Σ 1/k!), written as
+# shared literals so both engines compare the same doubles.
 _POIS_CDF = (
     0.36787944117144233,
     0.7357588823428847,
@@ -638,23 +591,17 @@ def _sql_poisson(u: str) -> str:
     """,
 )
 def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic Poisson bootstrap of the mean document length:
-    each of 20 replicas weights every row by Poisson(1) drawn from an
-    md5-derived uniform (the streaming-scale bootstrap — no
-    resampling pass, no shared RNG state), then the replica means
-    yield a standard error and a percentile CI.
-
-    Scale: the 20× row expansion happens map-side (explode of a
-    literal range) and is absorbed immediately by a 20-group partial
-    aggregation — the shuffle carries 20 rows of sufficient
-    statistics no matter the corpus size. Replica means are rounded
-    to 9 digits before the summary pass (libm-portability guard,
-    same policy as q_weighted_sample's keys); all sums DECIMAL.
+    """Deterministic Poisson bootstrap of the mean document length: each
+    of 20 replicas weights every row by Poisson(1) drawn from an
+    md5-derived uniform (no resampling pass, no shared RNG state), then the
+    replica means yield a standard error and a percentile CI. Replica means
+    are rounded to 9 digits before the summary pass (libm-portability
+    guard, as for q_weighted_sample's keys); all sums are DECIMAL.
     """
     docs = load_table(spark, sf_dir, "documents")
-    # measured rows only: an unmeasured (NULL n_chars) document must
-    # not inflate SUM(w) or COUNT denominators — that bias would be
-    # IDENTICAL in both twins, so the oracle gate cannot catch it
+    # measured rows only: an unmeasured (NULL n_chars) document must not
+    # inflate SUM(w) or COUNT denominators; that bias would be identical in
+    # both twins, so the oracle gate cannot catch it
     reps = docs.filter(F.col("n_chars").isNotNull()).select(
         "doc_id",
         F.col("n_chars").alias("x"),
@@ -739,15 +686,9 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM (recency / frequency / monetary) feature extraction with
-    rule-based segmentation — the canonical churn/value labeling pass
-    a marketing or retention model trains on.
-
-    Scale: one grouped aggregation per user (map-side combinable);
-    the corpus max timestamp is a broadcast 1-row aggregate
-    (crossJoin pattern), so no second scan and no driver action.
-    Fixed rule thresholds keep the op single-pass — quantile-based
-    scoring would add one `approx_percentile` pass over the
-    already-aggregated user table.
+    rule-based segmentation. The corpus max timestamp is a broadcast 1-row
+    aggregate (crossJoin pattern); fixed rule thresholds keep the op one
+    aggregation.
     """
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts").alias("tmax"))
@@ -799,18 +740,12 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dp_count_release(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differentially-private count release: per-type event counts
-    with Laplace(1/ε) noise (ε=1, sensitivity 1) drawn by inverse
-    CDF from an md5-derived uniform — deterministic here so the
-    oracle can verify the MECHANISM's plan; a production release
-    would draw fresh randomness and drop the true ``n`` column
-    (both noted so the op is honest about what it demonstrates).
-
-    Scale: the aggregate is the whole cost; noise is O(|groups|)
-    scalar math after the shuffle. This is the aggregate-then-noise
-    shape every DP analytics system (e.g. plume-style pipelines)
-    uses — noise must be added post-aggregation, once per released
-    statistic, never per row.
+    """Differentially-private count release: per-type event counts with
+    Laplace(1/ε) noise (ε=1, sensitivity 1) drawn by inverse CDF from an
+    md5-derived uniform, added after aggregation, once per released
+    statistic. The noise is deterministic so the oracle can verify the
+    mechanism; a real release would draw fresh randomness and drop the true
+    ``n`` column.
     """
     ev = load_table(spark, sf_dir, "events")
     c = ev.groupBy("event_type").agg(F.count("*").cast("bigint").alias("n"))
@@ -837,12 +772,10 @@ _TSS_TOPK = 10
 # and population std exactly 2, so q_i = (i-4)/2 — "find the
 # strongest 7-day uptrends".
 _TSS_Q = tuple((i - 4) / 2 for i in range(1, 8))
-# zdist2 is an explicit LEFT-TO-RIGHT sum of the 7 per-position terms
-# (identical IEEE double ops in both engines) — a decimal fold is NOT
-# exact here: the terms are irrational at any fixed scale, and Spark's
-# decimal addition rounds each partial sum at scale 11, while DuckDB's
-# list_sum keeps scale 12 — a near-boundary window could round to
-# different 6-dp values. Plain ordered double addition is bit-identical.
+# zdist2 is an explicit left-to-right sum of the 7 per-position terms
+# (identical IEEE double ops in both engines). A decimal fold is not exact
+# here: Spark's decimal addition rounds each partial sum at scale 11 while
+# DuckDB's list_sum keeps scale 12.
 _SQL_ZSUM = " + ".join(
     f"POWER((s[{i}] - m) / sqrt(m2 - m * m) - ({q}), 2)"
     for i, q in enumerate(_TSS_Q, start=1)
@@ -886,23 +819,16 @@ _SQL_ZSUM = " + ".join(
     """,
 )
 def q_ts_similarity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{k} time-series subsequence similarity search: slide a
-    7-day window over each event type's daily revenue series and
-    rank windows by z-normalized Euclidean distance to a query
-    pattern (a linear ramp — i.e. find the strongest week-long
-    uptrends). Windows must cover exactly 7 CONSECUTIVE calendar
-    days — a gapped series may not stitch non-adjacent days into a
-    "week" (frame-span check in both engines). The UCR-suite/Matrix-Profile primitive, restated as a
-    window + higher-order-function plan (cf. the distributed
-    data-series search literature, e.g. Odyssey VLDB'23).
+    """Top-{k} time-series subsequence similarity search: slide a 7-day
+    window over each event type's daily revenue series and rank windows by
+    z-normalized Euclidean distance to a query pattern (a linear ramp: the
+    strongest week-long uptrends). Windows must cover exactly 7 consecutive
+    calendar days; a gapped series may not stitch non-adjacent days into a
+    "week" (frame-span check in both engines).
 
-    Scale: the fact table collapses to |type|×|days| daily points
-    BEFORE any window; subsequence extraction is a per-type ordered
-    frame (never global); z-normalization uses decimal-exact window
-    sums; the global top-k is TakeOrdered over the bounded window
-    table — no global sort, no rank column, total tie order
-    (dist, type, day). Flat windows (zero variance) are excluded —
-    z-normalization is undefined there.
+    z-normalization uses decimal-exact window sums; the global top-k has the
+    total tie order (dist, type, day). Flat windows (zero variance) are
+    excluded, since z-normalization is undefined there.
     """
     ev = load_table(spark, sf_dir, "events")
     daily = _daily_revenue(ev, "v")

@@ -32,18 +32,13 @@ from map_reduce_server_spark.tables import load_table
 def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subqueries in projection and predicate.
 
-    diff_from_mean is emitted as the RAW double difference
-    (o_totalprice is already a parquet DOUBLE; the CAST is shape
-    bookkeeping, and the bit-identity comes from both engines
-    subtracting the same two doubles). The previous
-    ``round(double, 6)`` was a latent twin divergence: Spark rounds
-    HALF_UP on the shortest decimal repr while DuckDB rounds the
-    binary value, so midpoint-adjacent doubles (e.g. 0.0001245)
-    round differently — 245 divergences in a 9,000-value probe,
-    invisible at driver SF only because the data misses the
-    midpoints. The engine-side exact sums go through
-    ``spark_sql_dsum`` so NaN/Inf garbage raises loudly instead of
-    being silently skipped by SUM under the non-ANSI session.
+    diff_from_mean is emitted as the raw double difference (o_totalprice
+    is a parquet DOUBLE; both engines subtract the same two doubles).
+    ``round(double, 6)`` would diverge: Spark rounds HALF_UP on the shortest
+    decimal repr while DuckDB rounds the binary value, so midpoint-adjacent
+    doubles (e.g. 0.0001245) round differently. The exact sums go through
+    ``spark_sql_dsum`` so NaN/Inf garbage raises instead of being skipped by
+    SUM under the non-ANSI session.
     """
     orders = load_table(spark, sf_dir, "orders")
     # fixed name + OrReplace: the repo's no-accumulation convention
@@ -151,11 +146,10 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-range join via bucketing: events within ±5 min of each
     error, same user.
 
-    Spark has no native range join; the naive non-equi join degrades
-    to a per-key cartesian product. The scale formulation buckets ts
-    into 5-minute cells, equi-joins on (user, cell) for the error's
-    cell and its two neighbors, then applies the exact range filter —
-    the non-equi predicate only ever runs inside 3 cells per error.
+    Spark has no native range join; a non-equi join degrades to a per-key
+    cartesian product. Instead ts buckets into 5-minute cells, the join is
+    an equi-join on (user, cell) for the error's cell and its two
+    neighbors, and the exact range filter runs only inside those 3 cells.
     """
     ev = load_table(spark, sf_dir, "events")
     bucket = (F.unix_timestamp("ts") / 300).cast("bigint")
@@ -206,20 +200,12 @@ FROM nation n JOIN LATERAL (
 
 @register("q_lateral_topk", oracle=_LATERAL_ORACLE)
 def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery in FROM — per outer row, a
-    dependent ORDER BY ... LIMIT relation (here: each nation's top-3
-    customers by balance, unique-key tie-break) — the SQL-standard
-    form of per-group top-k that q_topk_per_group expresses as a
-    window rank. Both front doors must exist: BI tools and migrated
-    warehouse SQL write LATERAL, and Catalyst's DecorrelateInnerQuery
-    must plan it without a per-outer-row re-execution.
-
-    Scale shape: Catalyst decorrelates the lateral into a single
-    partition-wide join + per-key limit (no iteration over outer
-    rows); the dimension side (nation, 25 rows) broadcasts, so the
-    only shuffle is the customer side's per-nation ordering — the
-    same physical shape as the window-rank formulation, reached from
-    the opposite (SQL-first) surface.
+    """Correlated LATERAL subquery in FROM: per outer row, a dependent
+    ORDER BY ... LIMIT relation (each nation's top-3 customers by balance,
+    unique-key tie-break), the SQL-standard form of the per-group top-k
+    that q_topk_per_group expresses as a window rank. Catalyst decorrelates
+    it into a join + per-key limit (WindowGroupLimit), with no per-outer-row
+    re-execution.
     """
     from map_reduce_server_spark.tables import register_views
 

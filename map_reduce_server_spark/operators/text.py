@@ -1,11 +1,10 @@
 """Text-analysis operators over the ``documents`` table.
 
-Generalizes the reference's two shipped text workloads — wordcount
+Generalizes the reference's two text workloads, wordcount
 (``tests/testdata/exec/wc_map.sh:12`` + ``wc_reduce.sh:14``) and grep
-(``tests/testdata/exec/grep_map.py:20-28``) — into JVM-side
-DataFrame plans, then adds the LLM-pipeline text ops (token stats,
-quality scoring, language ID, fingerprinting). Everything stays in
-whole-stage codegen: no Python UDFs.
+(``tests/testdata/exec/grep_map.py:20-28``), into DataFrame plans, and adds
+token statistics, quality scoring, language ID and fingerprinting. No Python
+UDFs.
 """
 
 from __future__ import annotations
@@ -53,11 +52,8 @@ _SQL_TOKENS = "string_split(lower(text), ' ')"
     bench=True,
 )
 def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's canonical workload: tokenize → group → count.
-
-    Spark restatement of ``wc_map.sh`` + ``wc_reduce.sh`` — Catalyst
-    plans a partial+final hash aggregate where the reference needed a
-    full sort + pipe (SURVEY.md §2.B#9-11). Empty tokens kept.
+    """The reference's canonical workload: tokenize → group → count
+    (``wc_map.sh`` + ``wc_reduce.sh``). Empty tokens are kept.
     """
     docs = load_table(spark, sf_dir, "documents")
     words = F.explode(F.split(F.lower(F.col("text")), " "))
@@ -137,9 +133,8 @@ _SQL_STOPLIST = ", ".join(f"'{w}'" for w in _STOPWORDS)
     """,
 )
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic document quality scoring (stopword / distinct /
-    non-alpha ratios + a pass/fail gate) — the C4-style cheap filter
-    stage of a training-data pipeline."""
+    """Heuristic document quality scoring: stopword / distinct / non-alpha
+    ratios and a pass/fail gate."""
     docs = load_table(spark, sf_dir, "documents")
     toks = word_tokens_col()
     n = F.greatest(F.size(toks), F.lit(1))
@@ -152,9 +147,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         distinct_ratio_col().alias("distinct_ratio"),
         F.round(
             # lower() first: uppercase letters are alphabetic, not
-            # symbols — without it 'Hello World' counts H and W as
-            # non-alpha (both engines shared the bug, so the oracle
-            # gate could never catch it on a mixed-case corpus)
+            # symbols
             F.length(
                 F.regexp_replace(F.lower(F.col("text")), "[a-z ]", "")
             ).cast("double")
@@ -169,10 +162,9 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Marker-word tables per language for the n-gram/stopword language-ID
-# heuristic. (The synthetic corpus is English-vocab for every lang
-# label, so the heuristic output is uniform — the point here is the
-# operator shape: per-language marker scoring + deterministic argmax.)
+# Marker-word tables per language for the language-ID heuristic. The
+# synthetic corpus is English vocabulary under every lang label, so the
+# output is uniform; the query checks per-language scoring + argmax.
 _LANG_MARKERS = {
     "en": ("the", "and", "of"),
     "fr": ("le", "la", "et"),
@@ -249,11 +241,9 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ONE definition of the TF-IDF oracle pipeline (tok/tf/doclen/df/n
-# CTEs + the scoring expression), shared by text_tfidf and
-# text_keywords — the Spark sides already share (text_keywords calls
-# text_tfidf()), so the oracles must be single-sourced too or a
-# future tfidf change silently desynchronizes the keywords twin.
+# One definition of the TF-IDF oracle pipeline (tok/tf/doclen/df/n CTEs and
+# the scoring expression), shared by text_tfidf and text_keywords, whose
+# Spark side calls text_tfidf().
 _SQL_TFIDF_CTES = f"""
     WITH tok AS (
       SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents
@@ -288,15 +278,9 @@ _SQL_TFIDF_SCORE = """round((CAST(tf.n_in_doc AS DOUBLE) / doc_len)
     """,
 )
 def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-based TF-IDF per (document, token).
-
-    Explicit DataFrame formulation rather than ml.feature's
-    HashingTF (whose murmur-hash buckets aren't externally
-    comparable): tf = count/doc_len, idf = ln(N/df). The df table is
-    vocabulary-sized with NO hard broadcast hint (vocabulary is
-    unbounded on real corpora — Heaps' law; AQE broadcasts when it
-    fits); the corpus shuffles once on doc_id and once on token —
-    both unavoidable and both on compact keys.
+    """Count-based TF-IDF per (document, token): tf = count/doc_len,
+    idf = ln(N/df). Written out rather than ml.feature's HashingTF, whose
+    murmur-hash buckets are not comparable with another engine.
     """
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
@@ -305,8 +289,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("n_in_doc"))
     doclen = tf.groupBy("doc_id").agg(F.sum("n_in_doc").alias("doc_len"))
-    # Fold the corpus size into the (vocabulary-sized) broadcast df
-    # side as a 1-row aggregate — one plan, no separate eager count job.
+    # The corpus size folds into the df side as a 1-row aggregate.
     n = docs.agg(F.count("*").alias("n_docs"))
     df = (
         tf.groupBy("token")
@@ -315,8 +298,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         tf.join(doclen, "doc_id")
-        # the distinct-token vocabulary is unbounded on real corpora
-        # (Heaps' law) — no hard hint; AQE broadcasts when it fits
+        # no broadcast hint: the vocabulary is unbounded (Heaps' law)
         .join(df, "token")
         .select(
             "doc_id",
@@ -350,8 +332,7 @@ _BPE_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 ]"
     """,
 )
 def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Regex (BPE-style) token counting — the tokenizer-shaped cost
-    model for training-data sizing, kept fully JVM-side."""
+    """Regex (BPE-style) token counts per document."""
     docs = load_table(spark, sf_dir, "documents")
     toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(_BPE_PATTERN), 0)
     return docs.select(
@@ -371,10 +352,9 @@ def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 80/20 train-test split by hashing the document
-    id — reproducible across runs, engines, and cluster layouts
-    (unlike randomSplit, whose assignment depends on partitioning),
-    and stable under corpus growth: a document never changes split.
+    """Deterministic 80/20 train-test split by hashing the document id:
+    the same on every run, engine and partitioning (unlike randomSplit),
+    and a document never changes split as the corpus grows.
     """
     docs = load_table(spark, sf_dir, "documents")
     bucket = split_hash(F.col("doc_id")) % 100
@@ -391,10 +371,8 @@ def text_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RE_EMAIL = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
 _RE_IPV4 = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
 
-# The synthetic corpus contains no PII, so the query first augments
-# each document with deterministic synthetic contact strings (same
-# expression in both engines) — the point is the operator shape:
-# count + redact at scan speed, no Python in the loop.
+# The synthetic corpus contains no PII, so the query first appends
+# deterministic synthetic contact strings (same expression in both engines).
 _SQL_PII_AUG = (
     "text || ' contact user' || CAST(doc_id AS VARCHAR) || "
     "'@example.com or 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7'"
@@ -420,16 +398,12 @@ _SQL_PII_AUG = (
 )
 def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-unigram-LM quality score: each document's mean token
-    surprisal −ln p(token) under the corpus unigram distribution —
-    the CCNet-style language-model filter signal (outlier-high
-    surprisal ⇒ gibberish, outlier-low ⇒ boilerplate).
+    surprisal −ln p(token) under the corpus unigram distribution
+    (outlier-high ⇒ gibberish, outlier-low ⇒ boilerplate).
 
-    Scale shape: the vocabulary table is tiny and broadcasts; the
-    corpus shuffles once on token (frequency count) and once on
-    doc_id (per-doc mean). Per-token surprisal is rounded to 9 digits
-    (libm ln differs by 1 ulp across engines) and averaged via exact
-    decimal sums (functions/exact.py), so the score is bit-identical
-    on any partitioning — 1 core or 1000 executors.
+    Per-token surprisal is rounded to 9 digits (libm ln differs by 1 ulp
+    across engines) and averaged via exact decimal sums (functions/exact.py),
+    so the score is bit-identical on any partitioning.
     """
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
@@ -437,9 +411,8 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(word_tokens_col()).alias("token"),
     )
     freq = tok.groupBy("token").agg(F.count("*").alias("n"))
-    # Total token count = sum over the tiny vocabulary table, folded in
-    # as a broadcast 1-row aggregate — no separate eager count job and
-    # no second scan of the token stream.
+    # Total token count = sum over the vocabulary table, folded in as a
+    # broadcast 1-row aggregate.
     total = freq.agg(F.sum("n").alias("total"))
     freqt = freq.crossJoin(F.broadcast(total))
     # unbounded vocabulary side — no hard hint (AQE decides)
@@ -471,10 +444,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII detection + redaction (emails, IPv4) — the compliance
-    scrub stage of a training-data pipeline. Pure regexp built-ins:
-    at 100 TB this runs inside whole-stage codegen at scan speed and
-    never shuffles (narrow, per-row)."""
+    """PII detection + redaction (emails, IPv4) with regexp built-ins."""
     docs = load_table(spark, sf_dir, "documents")
     aug = F.concat(
         F.col("text"),
@@ -526,20 +496,15 @@ def _sql_ngrams(n: int) -> str:
     """,
 )
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repetition scoring (duplicate 3-gram fraction) — the
-    Gopher-style repetitious-text filter. Per-row array ops only:
-    narrow, no shuffle at any scale.
+    """Repetition scoring: the duplicate 3-gram fraction (Gopher-style).
 
-    Staged projections (round 15, measured 10.6 s -> ~1 s at sf0.1):
-    higher-order-function expressions evaluate INTERPRETED with no
-    common-subexpression elimination, so the former single-select
-    form re-ran the tokenizer inside every element_at of the gram
-    lambda and the whole gram array once per consuming expression
-    (~4×/row, tokenize ~3×/gram). Tokens, the gram array, and the
-    two integer sizes are each projected ONCE in their own step;
-    CollapseProject keeps the boundaries because each intermediate
-    is non-cheap and multiply referenced. The scan is widened so the
-    remaining narrow work parallelizes (tables.load_table)."""
+    Tokens, the gram array and the two integer sizes are each projected once
+    in their own step: higher-order functions run interpreted with no
+    common-subexpression elimination, so one select would re-run the
+    tokenizer inside every element_at of the gram lambda and the gram array
+    once per consuming expression. CollapseProject keeps the boundaries
+    because each intermediate is non-cheap and multiply referenced. The scan
+    is widened so the narrow work parallelizes (tables.load_table)."""
     docs = load_table(spark, sf_dir, "documents", widen=True)
     toked = docs.select("doc_id", word_tokens_col().alias("ts"))
     cnt = F.size(F.col("ts"))
@@ -606,25 +571,14 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
-    4-gram with the eval set (here: every 97th document; 4 is the
-    largest n with nonzero overlap on the synthetic corpus).
+    4-gram with the eval set (here: every 97th document; 4 is the largest n
+    with nonzero overlap on the synthetic corpus).
 
-    Scale shape: explode n-grams, equi-join train×eval on the gram —
-    never train×eval document pairs. Only the EVAL side dedups
-    (bounding the join build side); the train side is never globally
-    distinct-ed — n_eval_matches counts distinct eval DOCS, which
-    duplicates cannot change, so a corpus-wide shuffle of the largest
-    intermediate would buy nothing. No hard broadcast hint: a real
-    benchmark eval set is tiny and AQE broadcasts it; the synthetic
-    1/97 split is SF-linear, where a forced broadcast would OOM.
-
-    Round 15: the widened scan's per-doc 4-gram ARRAYS are stage-cut
-    once (one row per doc) — the former inline explode re-ran the
-    interpreted tokenize+gram pipeline on one core for BOTH join
-    sides (measured 7.7 s -> ~1 s at sf0.1) — and the eval side's
-    dedup is ``array_distinct`` before its explode (a (doc, gram)
-    duplicate cannot span documents), removing the distinct()
-    shuffle.
+    Train and eval equi-join on the gram, never on document pairs. Only the
+    eval side dedups, with ``array_distinct`` before its explode (a (doc,
+    gram) duplicate cannot span documents); n_eval_matches counts distinct
+    eval docs, which train-side duplicates cannot change. The per-doc 4-gram
+    arrays are cut once and feed both sides.
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
     toked = docs.select("doc_id", word_tokens_col().alias("ts"))
@@ -686,10 +640,8 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified domain sampling: per-source keep rates (80% for
     even-numbered sources, 20% for odd) applied via a deterministic
-    document-id hash — the domain-mixing step of a training-data
-    pipeline. Unlike ``df.sample``, assignment is reproducible across
-    engines, runs, and cluster layouts, and it is a pure narrow
-    filter (pushed to the scan; zero shuffles at any scale)."""
+    document-id hash. Unlike ``df.sample``, assignment is the same on every
+    engine, run and partitioning."""
     docs = load_table(spark, sf_dir, "documents")
     bucket = md5_long(
         F.concat(F.lit("sample:"), F.col("doc_id").cast("string"))
@@ -726,17 +678,14 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: 60-bit hash of whitespace-normalized text
-    (the exact-dedup key at scale: group/join on an 8-byte int instead
-    of a multi-KB string)."""
+    """Document fingerprint: 60-bit hash of whitespace-normalized text, the
+    exact-dedup key."""
     docs = load_table(spark, sf_dir, "documents")
     normalized = F.regexp_replace(F.lower(F.trim(F.col("text"))), " +", " ")
     return docs.select("doc_id", md5_long(normalized).alias("fingerprint"))
 
 
-# ---------------------------------------------------------------------------
-# Corpus-order n-gram novelty (incremental-crawl dedup signal)
-# ---------------------------------------------------------------------------
+# --- Corpus-order n-gram novelty (incremental-crawl dedup signal) -----------
 
 
 @register(
@@ -762,21 +711,15 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document novelty in corpus order: the fraction of a doc's
-    distinct 3-gram shingles whose FIRST occurrence (minimum doc_id
-    anywhere in the corpus) is this document. The incremental-crawl
-    signal — a near-zero novelty doc is boilerplate of what came
-    before, without needing pairwise comparison.
+    distinct 3-gram shingles whose first occurrence (minimum doc_id anywhere
+    in the corpus) is this document. A near-zero novelty doc is boilerplate
+    of what came before.
 
-    Scale: ONE shuffle on shingles for the global first-occurrence
-    aggregate (compact min per key), then a doc-sized count over
-    that aggregate — the round-14 shape additionally joined the full
-    shingle stream back against the aggregate and re-grouped it by
-    doc_id, two more corpus-sized exchanges answering questions the
-    rows already hold (guide §2.4): n_novel(d) is just the number of
-    ``first`` rows whose minimum IS d (first_doc = d implies the
-    shingle is in d's set), and n_shingles(d) is the row-local
-    ``size`` of d's distinct shingle array. Docs with fewer than 3
-    tokens have no shingles: n_shingles = 0, novelty NULL.
+    n_novel(d) is the number of first-occurrence rows whose minimum is d
+    (first_doc = d implies the shingle is in d's set), and n_shingles(d) is
+    the row-local ``size`` of d's distinct shingle array, so neither needs a
+    join back to the shingle stream. Docs with fewer than 3 tokens have no
+    shingles: n_shingles = 0, novelty NULL.
     """
     from map_reduce_server_spark.operators.dedup import (
         doc_shingle_arrays,
@@ -806,9 +749,7 @@ def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Out-of-vocabulary rate against the corpus top-K vocabulary
-# ---------------------------------------------------------------------------
+# --- Out-of-vocabulary rate against the corpus top-K vocabulary -------------
 
 _OOV_VOCAB_K = 1000
 
@@ -834,17 +775,10 @@ _OOV_VOCAB_K = 1000
     """,
 )
 def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Out-of-vocabulary rate: the corpus's top-K tokens by frequency
-    form the vocabulary (total order count DESC, token ASC — the
-    boundary tie is deterministic); each document reports how many of
-    its token OCCURRENCES fall outside it. The tokenizer-fit signal a
-    training pipeline uses to spot domain drift.
-
-    Scale: vocabulary = one token-count shuffle + TakeOrdered top-K
-    (never a global sort), then a broadcast join — K rows — against
-    the exploded token stream; per-doc aggregation absorbs the
-    explosion. Zero-token documents are absent from the output (no
-    occurrences to rate).
+    """Out-of-vocabulary rate: the corpus's top-K tokens by frequency form
+    the vocabulary (total count DESC, token ASC, so the boundary tie is
+    deterministic); each document reports how many of its token occurrences
+    fall outside it. Zero-token documents are absent from the output.
     """
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
@@ -912,16 +846,12 @@ _ZIPF_TOPK = 100
     """,
 )
 def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf's-law fit: OLS slope of ln(frequency) against ln(rank)
-    over the top-100 tokens — natural corpora fit slope ≈ −1, and a
-    deviation flags synthetic, templated, or scrubbed text (a cheap
-    corpus-health check next to q_drift_psi).
+    """Zipf's-law fit: OLS slope of ln(frequency) against ln(rank) over the
+    top-100 tokens. Natural corpora fit slope ≈ −1; a deviation flags
+    synthetic, templated or scrubbed text.
 
-    Scale shape: one token-count shuffle, a TakeOrdered top-100 (no
-    global sort), ranks by broadcast self-join count over those 100
-    rows, and the regression reduces to five exact-decimal power sums
-    of 9-rounded logs — deterministic on any partitioning, closed
-    form, no iterative solver.
+    The regression reduces to five exact-decimal power sums of 9-rounded
+    logs, so the slope is deterministic on any partitioning.
     """
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
@@ -948,10 +878,9 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x").cast("decimal(30,9)")).cast("double").alias("sx"),
         F.sum(F.col("y").cast("decimal(30,9)")).cast("double").alias("sy"),
         # products are pre-rounded to 9 so the scale-9 decimal cast is
-        # EXACT in both engines — Spark casts via the shortest decimal
-        # repr (HALF_UP) while DuckDB rounds the binary double, and on
-        # an UNROUNDED product the two can differ by 1e-9 per term
-        # (see functions/exact.py and the unigram surp precedent)
+        # exact in both engines: Spark casts via the shortest decimal repr
+        # (HALF_UP) while DuckDB rounds the binary double, and on an
+        # unrounded product the two can differ by 1e-9 per term
         F.sum(F.round(F.col("x") * F.col("y"), 9).cast("decimal(30,9)"))
         .cast("double")
         .alias("sxy"),
@@ -962,10 +891,9 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")
     )
-    # + 0.0 maps a -0.0 (uniform-frequency corpora: the rounded
-    # per-term errors can sum to -1e-11, which DuckDB's round keeps
-    # as -0.0 while Spark gives +0.0) onto one sign in BOTH twins —
-    # the repo's established zero-normalization convention.
+    # + 0.0 maps a -0.0 (uniform-frequency corpora: the rounded per-term
+    # errors can sum to -1e-11, which DuckDB's round keeps as -0.0 while
+    # Spark gives +0.0) onto one sign in both twins.
     return s.select(
         F.col("k").cast("bigint").alias("n_points"),
         (F.round(slope, 6) + 0.0).alias("slope"),
@@ -1010,16 +938,12 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-bigram-LM quality score with add-one smoothing: each
     document's mean -ln p(w_i | w_{i-1}) under the corpus bigram
-    distribution — one Markov order beyond text_unigram_logprob, and
-    a sharper gibberish/boilerplate separator (real LM filters are
-    n-gram KenLM models; the pipeline shape is identical).
+    distribution.
 
-    Scale shape: the bigram stream shuffles once to count C(a,b) and
-    once per doc for the mean; the conditioning-token counts derive
-    from the SAME bigram stream (no second corpus pass), vocabulary
-    size folds in as a broadcast 1-row aggregate, and per-bigram
-    surprisal is rounded to 9 before exact-decimal averaging — the
-    same libm-portability contract as the unigram scorer.
+    The conditioning-token counts derive from the same bigram stream, the
+    vocabulary size folds in as a broadcast 1-row aggregate, and per-bigram
+    surprisal is rounded to 9 before exact-decimal averaging (the unigram
+    scorer's libm-portability contract).
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", word_tokens_col().alias("ts")).filter(
@@ -1095,15 +1019,9 @@ _KW_TOPK = 3
 )
 def text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document keyword extraction: the top-3 TF-IDF terms,
-    rank-ordered and CSV-serialized — the tagging/routing signal a
-    corpus index or mixture labeler consumes downstream.
-
-    Scale shape: inherits text_tfidf's plan (two compact-key
-    shuffles, broadcast df/corpus-size sides), then a doc-partitioned
-    rank with WindowGroupLimit pruning to k per partition before the
-    shuffle, and an ordered in-group fold (sort_array over (rnk,
-    token) structs) serializes the keywords — arrays never leave the
-    plan, per the driver-canonicalizer contract.
+    rank-ordered and CSV-serialized. An ordered in-group fold (sort_array
+    over (rnk, token) structs) builds the string, so no array column reaches
+    the output.
     """
     scored = text_tfidf(spark, sf_dir)
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), "token")
@@ -1140,17 +1058,10 @@ def text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document Shannon entropy of the token distribution (bits)
-    — the information-density quality signal that separates natural
-    prose from boilerplate/keyword-stuffed spam. Uses the identity
-    H = log2(N) − (Σ c·log2 c)/N so only one grouped pass over
-    (doc, token) counts is needed.
-
-    Scale: explode → two hash aggregations keyed by doc_id (the
-    second is map-side-combinable on the same key, so AQE coalesces
-    to one effective shuffle). The Σ c·log2 c term is decimal-cast —
-    associative, partitioning-invariant — and log2 on identical
-    integer counts is bit-identical across engines.
+    """Per-document Shannon entropy of the token distribution (bits), via
+    H = log2(N) − (Σ c·log2 c)/N over (doc, token) counts. The Σ c·log2 c
+    term is decimal-cast, so it is partitioning-invariant, and log2 on
+    identical integer counts is bit-identical across engines.
     """
     docs = load_table(spark, sf_dir, "documents")
     tc = (
@@ -1164,15 +1075,14 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.sum("c")
     # the trailing + 0.0 maps a -0.0 (single-type docs: H is a
     # -1e-11 rounding residue that DuckDB rounds to -0.0, Spark to
-    # +0.0) onto one sign in BOTH twins — the repo's established
-    # zero-normalization convention.
+    # +0.0) onto one sign in both twins.
     return tc.groupBy("doc_id").agg(
         n.cast("bigint").alias("n_tokens"),
         F.count("*").cast("bigint").alias("n_types"),
         (F.round(
             F.log2(n.cast("double"))
             # the c*log2(c) term is pre-rounded to 9 so the scale-12
-            # decimal cast is EXACT in both engines (an unrounded
+            # decimal cast is exact in both engines (an unrounded
             # irrational term can cast-round differently: Spark uses
             # the shortest decimal repr, DuckDB the binary double)
             - F.sum(
@@ -1207,14 +1117,8 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch reading-ease per document, with syllables approximated
-    as vowel-group runs — the standard cheap readability gate in a
-    text-quality stack (exact syllabification needs a dictionary;
-    the vowel-run proxy is the accepted streaming-scale stand-in).
-
-    Scale: embarrassingly parallel — three regexp counts and one
-    arithmetic expression per row, all inside whole-stage codegen;
-    no shuffle at all.
+    """Flesch reading-ease per document, with syllables approximated as
+    vowel-group runs.
     """
     docs = load_table(spark, sf_dir, "documents")
     words = F.greatest(F.size(word_tokens_col()), F.lit(1))
@@ -1262,17 +1166,10 @@ _BPE_TOPK = 20
 )
 def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One training round of byte-pair encoding: count every adjacent
-    character pair inside every token across the corpus and rank the
-    top-20 merge candidates (count desc, pair asc — a total order,
-    so the winner set is unique). Iterating this op IS the BPE
-    tokenizer-training loop; one round exercises the full plan shape.
-
-    Scale: explode to pairs → map-side-combined count on a key space
-    bounded by |alphabet|² (tiny), then a top-k over that bounded
-    aggregate — the global "sort" touches only the pair vocabulary,
-    never the corpus. Complements text_bpe_tokens (which APPLIES
-    merges; reference analogue: the wc executables' whitespace
-    tokenizer, tests/testdata/exec/wc_map.sh:12).
+    character pair inside every token across the corpus and rank the top-20
+    merge candidates (count desc, pair asc: a total order, so the winner set
+    is unique). Iterating this op is the BPE training loop; text_bpe_tokens
+    applies merges.
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(word_tokens_col()).alias("tok")).filter(
@@ -1298,9 +1195,8 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COLLOC_MIN_COUNT = 5
 
-# Oracle for text_collocations below. All marginals derive from the ONE bigram
-# count table, so the oracle replays the same single-heavy-shuffle
-# factorization the engine plans.
+# Oracle for text_collocations below. All marginals derive from the one
+# bigram count table, as on the Spark side.
 _COLLOC_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, {SQL_TOKS} AS ts FROM documents),
@@ -1326,21 +1222,13 @@ WHERE sp.n >= {_COLLOC_MIN_COUNT}
 @register("text_collocations", oracle=_COLLOC_ORACLE)
 def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining: corpus bigrams scored by pointwise mutual
-    information, ``PMI = ln(p(a,b) / (p(a·) p(·b)))`` with a minimum
-    count threshold — the word2vec-style phrase-detection pass a
-    training-data pipeline runs to fold multi-word expressions into
-    single tokens before tokenizer/vocab construction.
+    information, ``PMI = ln(p(a,b) / (p(a·) p(·b)))``, with a minimum count
+    threshold.
 
-    Scale shape: exactly ONE heavy shuffle — the bigram stream groups
-    to its distinct-bigram count table — and every marginal (first-
-    token counts, second-token counts, grand total) derives from that
-    tiny aggregated table, not from a second corpus pass; tokens
-    contain no spaces by construction, so the bigram string splits
-    back losslessly instead of carrying the token pair through the
-    big shuffle. The count table is stage-cut: four consumers would
-    otherwise re-expand the corpus-wide groupBy subtree per branch.
-    PMI is computed with the identical double expression on both
-    engines and rounded to 9 (libm ln 1-ulp portability contract).
+    Every marginal (first-token counts, second-token counts, grand total)
+    derives from the bigram count table; tokens contain no spaces, so the
+    bigram string splits back losslessly. PMI is the identical double
+    expression on both engines, rounded to 9 (libm ln 1-ulp contract).
     """
     docs = load_table(spark, sf_dir, "documents")
     ts = docs.select(word_tokens_col().alias("ts")).filter(F.size("ts") >= 2)
@@ -1389,9 +1277,9 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for text_inverted_index. Postings sort NUMERICALLY before
-# the string join on both sides — a lexicographic sort would order
-# doc 10 before doc 9 on whichever engine stringified first.
+# Oracle for text_inverted_index. Postings sort numerically before the
+# string join on both sides; a lexicographic sort would order doc 10 before
+# doc 9.
 _INVERTED_INDEX_ORACLE = f"""
 WITH pairs AS (
   SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents),
@@ -1407,24 +1295,11 @@ FROM perdoc GROUP BY token HAVING COUNT(*) >= 2
 
 @register("text_inverted_index", oracle=_INVERTED_INDEX_ORACLE)
 def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted-index construction: token -> (document frequency,
-    corpus term frequency, sorted posting list) with hapax pruning
-    (df >= 2) — the index-build pass behind every sparse-retrieval
-    system (text_bm25 consumes exactly these statistics; this
-    operator MATERIALIZES the index as data, the batch equivalent of
-    Lucene segment writing).
-
-    Scale shape: tokenize -> explode -> ONE shuffle to per-(token,
-    doc) term frequencies -> one shuffle to token postings; both are
-    partial+final hash aggregates, and the posting list is built
-    from the already-deduplicated per-doc rows, never from raw token
-    occurrences. Posting lists are the operator's honest scale
-    boundary: a stopword's list is O(corpus docs) in one row (the
-    reason real indexes shard postings by doc range); the df floor
-    and the fact that postings carry doc IDS, not text, keep row
-    payloads bounded at the gate SFs. Sort is numeric BEFORE the
-    string render (lexicographic '10'<'9' would diverge between
-    engines)."""
+    """Inverted-index construction: token -> (document frequency, corpus
+    term frequency, sorted posting list) with hapax pruning (df >= 2),
+    built from the per-(token, doc) term-frequency rows. The posting list
+    sorts numerically before the string render (lexicographic '10' < '9'
+    would diverge between engines)."""
     docs = load_table(spark, sf_dir, "documents")
     perdoc = (
         docs.select(

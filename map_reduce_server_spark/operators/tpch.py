@@ -1,12 +1,10 @@
 """Classic decision-support query pack (TPC-H-derived shapes).
 
-The reference engine ships no relational queries at all (its "query
-corpus" is the wordcount/grep executables, reference
-``tests/testdata/exec/``); SURVEY.md §2.D marks the whole relational
-surface as the capability gap this engine fills. q1/q3/q5 landed in
-``relational.py``; this module adds the remaining classic shapes that
-the trimmed synthetic schema supports (no ``partsupp`` table, no
-``l_shipmode``/``l_commitdate``/``p_container``/``c_phone`` columns —
+The reference ships no relational queries (its query corpus is the
+wordcount/grep executables, reference ``tests/testdata/exec/``; SURVEY.md
+§2.D). q1/q3/q5 live in ``relational.py``; this module adds the classic
+shapes the trimmed synthetic schema supports (no ``partsupp`` table, no
+``l_shipmode``/``l_commitdate``/``p_container``/``c_phone`` columns;
 predicates are adapted, plan shapes preserved):
 
 - Q2   min-cost     -> per-group min decorrelated, joined back on value
@@ -30,23 +28,14 @@ predicates are adapted, plan shapes preserved):
                       correlated EXISTS / NOT EXISTS self-joins
 - Q22  anti join    -> scalar-subquery threshold + NOT EXISTS
 
-(The trimmed schema has no ``partsupp``: Q2/Q9/Q11/Q16/Q20 derive the
-part↔supplier relation and unit costs from ``lineitem`` instead —
-plan shapes and subquery structure preserved, predicates adapted.)
+Q2/Q9/Q11/Q16/Q20 derive the part↔supplier relation and unit costs from
+``lineitem`` instead of ``partsupp``.
 
-Scale stance (100 TB): only BOUNDED dimensions (region/nation —
-fixed row counts at any SF) and genuinely scalar/thresholded
-aggregates (1-row totals, per-key tables bounded by a FIXED key
-domain) carry an explicit ``broadcast()``; every SF-LINEAR side —
-customer, supplier, part, and any CONSTANT-FRACTION subset of them
-(a brand filter keeps ~1/25 of part at every SF, so it grows
-linearly too) — deliberately does NOT: a hard hint overrides size
-checks and would OOM at the scale where the subset outgrows the
-threshold, while AQE broadcasts exactly while the side actually
-fits. Fact-fact joins shuffle once on the join key and AQE handles
-skew; all aggregates use exact decimal sums (order-independent
-across 1000 executors, ``functions/exact.py``); top-k runs as
-TakeOrdered after aggregation, never a global sort of the fact.
+Broadcast policy: only bounded dimensions (region/nation) and scalar or
+fixed-domain aggregates carry an explicit ``broadcast()``. SF-linear sides
+(customer, supplier, part, and any constant-fraction subset of them) carry
+no hint, so AQE broadcasts them only while they fit (docs/SCALING.md,
+relational). All aggregates use exact decimal sums (``functions/exact.py``).
 """
 
 from __future__ import annotations
@@ -72,9 +61,7 @@ def _ts(s: str) -> F.Column:
     return F.lit(s).cast("timestamp")
 
 
-# ---------------------------------------------------------------------------
-# Q4 — order priority checking (EXISTS -> left-semi join)
-# ---------------------------------------------------------------------------
+# --- Q4 — order priority checking (EXISTS -> left-semi join) ----------------
 
 
 @register(
@@ -93,11 +80,9 @@ def _ts(s: str) -> F.Column:
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS decorrelated into a left-semi join.
 
-    The semi join carries an equi key (orderkey) plus a non-equi
-    residual (shipdate > orderdate): Catalyst keeps the equi part as
-    the shuffle key and evaluates the residual post-match, so the
-    plan is one shuffle, never a cartesian. (The reference schema's
-    l_commitdate/l_receiptdate are absent; late-ship substitutes.)
+    The semi join carries an equi key (orderkey) plus a non-equi residual
+    (shipdate > orderdate), evaluated post-match. The reference schema's
+    l_commitdate/l_receiptdate are absent; late-ship substitutes.
     """
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1996-07-01"))
@@ -116,9 +101,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q6 — forecasting revenue change (pure scan-aggregate)
-# ---------------------------------------------------------------------------
+# --- Q6 — forecasting revenue change (pure scan-aggregate) ------------------
 
 
 @register(
@@ -133,9 +116,8 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6: the canonical pushdown benchmark — every predicate
-    reaches the parquet scan (min/max row-group skipping at scale),
-    no shuffle at all except the single-row final aggregate."""
+    """TPC-H Q6: a single-pass filtered aggregate; every predicate
+    reaches the parquet scan."""
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -153,9 +135,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q7 — volume shipping between two nations
-# ---------------------------------------------------------------------------
+# --- Q7 — volume shipping between two nations -------------------------------
 
 
 @register(
@@ -180,11 +160,10 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: the nation pair disjunction stays a residual on
-    two broadcast nation joins; the only shuffles are the two
-    fact-fact equi joins. (Spark's year() is INT, DuckDB's EXTRACT
-    is BIGINT — the value-canonical comparison is integer-type-
-    insensitive, so neither side casts.)"""
+    """TPC-H Q7 shape: the nation pair disjunction stays a residual on two
+    broadcast nation joins. Spark's year() is INT, DuckDB's EXTRACT is
+    BIGINT; the value-canonical comparison is integer-type-insensitive, so
+    neither side casts."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-01-01"))
         & (F.col("l_shipdate") < _ts("1998-01-01"))
@@ -202,8 +181,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(supp, li.l_suppkey == supp.s_suppkey)
-        # customer is SF-linear (broadcast policy in tables.py) —
-        # no hard hint; AQE broadcasts when it actually fits
+        # customer is SF-linear: no hard hint
         .join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
@@ -217,9 +195,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q8 — national market share
-# ---------------------------------------------------------------------------
+# --- Q8 — national market share ---------------------------------------------
 
 
 @register(
@@ -247,12 +223,10 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: 8-table join — dims broadcast, the SF-linear
-    PROMO part subset (a ~16% constant fraction) carries NO hard hint
-    (AQE broadcasts it only while it fits) — then a conditional
-    share-of-total per year. The two
-    decimal sums divide in double on both engines (deterministic);
-    ROUND(6) bounds printed precision."""
+    """TPC-H Q8 shape: 8-table join, then a conditional share-of-total per
+    year. The SF-linear promo part subset (~16%) carries no hint. The two
+    decimal sums divide in double on both engines; ROUND(6) bounds printed
+    precision."""
     part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(
@@ -292,9 +266,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q10 — returned item reporting (top 20 customers)
-# ---------------------------------------------------------------------------
+# --- Q10 — returned item reporting (top 20 customers) -----------------------
 
 
 @register(
@@ -314,10 +286,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10: fact-fact join then top-k by aggregated revenue.
-    The LIMIT runs as TakeOrdered over the grouped result — each
-    partition contributes its local top 20, the driver merges 20×P
-    rows, never the full aggregate."""
+    """TPC-H Q10: fact-fact join then top-k by aggregated revenue."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1996-01-01"))
@@ -339,9 +308,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q12 — shipping-priority line classification
-# ---------------------------------------------------------------------------
+# --- Q12 — shipping-priority line classification ----------------------------
 
 
 @register(
@@ -360,9 +327,9 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape (l_shipmode is absent from the synthetic
-    schema; l_linestatus is the grouping category): one fact-fact
-    shuffle, conditional counts fold map-side."""
+    """TPC-H Q12 shape (l_shipmode is absent from the synthetic schema;
+    l_linestatus is the grouping category): one fact-fact join,
+    conditional counts."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-01-01"))
@@ -379,9 +346,7 @@ def q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q13 — customer order-count distribution
-# ---------------------------------------------------------------------------
+# --- Q13 — customer order-count distribution --------------------------------
 
 
 @register(
@@ -399,10 +364,9 @@ def q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13: outer join with an ON-clause filter (kept on the
-    join, NOT a WHERE — the distinction preserves zero-order
-    customers), then a histogram over the per-customer counts. The
-    second aggregation is tiny (one row per distinct count)."""
+    """TPC-H Q13: outer join with an ON-clause filter (kept on the join,
+    not a WHERE, which preserves zero-order customers), then a histogram
+    over the per-customer counts."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "5-LOW"
@@ -415,9 +379,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
 
 
-# ---------------------------------------------------------------------------
-# Q14 — promotion effect
-# ---------------------------------------------------------------------------
+# --- Q14 — promotion effect -------------------------------------------------
 
 
 @register(
@@ -433,9 +395,9 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14: broadcast part join + conditional revenue ratio in
-    a single-row aggregate; both sums are exact decimals so the
-    double division is bit-identical across engines."""
+    """TPC-H Q14: part join + conditional revenue ratio in a single-row
+    aggregate; both sums are exact decimals, so the double division is
+    bit-identical across engines."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-09-01"))
         & (F.col("l_shipdate") < _ts("1996-10-01"))
@@ -459,9 +421,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q17 — small-quantity-order revenue (correlated average)
-# ---------------------------------------------------------------------------
+# --- Q17 — small-quantity-order revenue (correlated average) ----------------
 
 
 @register(
@@ -480,22 +440,16 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: the correlated per-part average decorrelates
-    into a groupBy over lineitem joined back on partkey — one extra
-    aggregate instead of a per-row subquery. The per-part average is
+    """TPC-H Q17 shape: the correlated per-part average decorrelates into
+    a groupBy over lineitem joined back on partkey. The per-part average is
     a reproducible decimal avg on both engines."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") == "Brand#11") & (F.col("p_size") < 15)
     )
-    # Compute the per-part average ONLY for partkeys that survive the
-    # brand/size filter (semi join first): the unfiltered per-part
-    # table has one row per partkey — tens of millions at 100 TB,
-    # far beyond broadcastable — while the filtered key set is ~1/25
-    # of a brand. Result-identical: unfiltered partkeys never reach
-    # the final join anyway. No hard hints: the filtered subset is a
-    # constant FRACTION of SF-linear part (grows with SF), so AQE
-    # must stay free to fall back to a shuffle join.
+    # Per-part averages only for partkeys that survive the brand/size
+    # filter (semi join first); unfiltered partkeys never reach the final
+    # join. No hard hints (constant fraction of SF-linear part).
     per_part = (
         li.join(part, li.l_partkey == part.p_partkey, "left_semi")
         .groupBy(F.col("l_partkey").alias("avg_partkey"))
@@ -518,9 +472,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q18 — large-volume customers
-# ---------------------------------------------------------------------------
+# --- Q18 — large-volume customers -------------------------------------------
 
 
 @register(
@@ -542,9 +494,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18: the HAVING subquery becomes an aggregate + left-semi
-    join on orderkey; AQE converts the semi join to broadcast at
-    runtime when the qualifying set is small (it is: quantity > 250
-    keeps ~1.4% of orders)."""
+    join on orderkey (quantity > 250 keeps ~1.4% of orders)."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -567,9 +517,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q19 — discounted revenue (disjunction of conjunctions)
-# ---------------------------------------------------------------------------
+# --- Q19 — discounted revenue (disjunction of conjunctions) -----------------
 
 
 @register(
@@ -587,10 +535,9 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19: the classic OR-of-ANDs trap. The common p_partkey
-    equi-key must stay the join key with the disjunction as a
-    residual filter — a naive engine falls back to a cartesian
-    product. ``tests/test_plans.py`` pins no-cartesian."""
+    """TPC-H Q19: the OR-of-ANDs trap. The common p_partkey equi-key must
+    stay the join key with the disjunction as a residual filter, not a
+    cartesian product. ``tests/test_plans.py`` pins no-cartesian."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     cond = (
@@ -608,16 +555,14 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         # part is SF-linear and unfiltered pre-join (the brand/size
-        # predicate references l_quantity too) — no hard hint
+        # predicate references l_quantity too): no hard hint
         li.join(part, li.l_partkey == part.p_partkey)
         .filter(cond)
         .agg(dsum(_revenue_col(), scale=6).alias("revenue"))
     )
 
 
-# ---------------------------------------------------------------------------
-# Q22 — dormant high-balance customers (anti join)
-# ---------------------------------------------------------------------------
+# --- Q22 — dormant high-balance customers (anti join) -----------------------
 
 
 @register(
@@ -638,10 +583,8 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape (c_phone country codes are absent; nationkey
-    groups, and "no orders at all" — vacuous here — becomes "no
-    orders since 2000"): a broadcast scalar threshold + left-anti
-    join + aggregate. The anti join's build side is the filtered
-    recent-orders key set, broadcast by AQE."""
+    groups, and "no orders at all", vacuous here, becomes "no orders since
+    2000"): a broadcast scalar threshold + left-anti join + aggregate."""
     cust = load_table(spark, sf_dir, "customer")
     recent = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= _ts("2000-01-01")
@@ -662,9 +605,7 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q2 — minimum-cost supplier per part (correlated MIN subquery)
-# ---------------------------------------------------------------------------
+# --- Q2 — minimum-cost supplier per part (correlated MIN subquery) ----------
 
 # The part↔supplier "catalog" derived from shipped lineitems: the
 # cheapest observed unit price per (partkey, suppkey). Raw double
@@ -701,28 +642,19 @@ _SQL_SUPPLY = """
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: the correlated MIN subquery decorrelates into a
-    per-part MIN aggregate joined back on (partkey, cost) — one extra
-    aggregate instead of a per-row rescan. The region-filtered supply
-    table is built once and reused for both the candidate rows and
-    the per-part minimum (same plan the classic query needs).
-
-    Scale: supplier/nation/region/part are broadcast dims; the only
-    shuffle over lineitem-derived data is the (partkey, suppkey)
-    aggregate building the supply catalog. The ORDER BY ends in
-    (s_name, p_partkey) — unique per row — so LIMIT is deterministic.
+    per-part MIN aggregate joined back on (partkey, cost). The
+    region-filtered supply table is built once and serves both the
+    candidate rows and the per-part minimum. The ORDER BY ends in (s_name,
+    p_partkey), unique per row, so LIMIT is deterministic.
     """
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_type") == "LARGE") & (F.col("p_size") == 15)
     )
-    # Push the part-key semi join BELOW the supply aggregate:
-    # filtering on the grouping key commutes with the groupBy, so
-    # this is result-identical while shrinking the query's dominant
-    # shuffle (the (partkey, suppkey) aggregate over lineitem) to the
-    # ~0.05% of rows whose part survives the p_type/p_size predicate.
-    # No hard broadcast hint — the filtered key set is a constant
-    # FRACTION of SF-linear part, so AQE must be free to fall back to
-    # a shuffle semi join when it outgrows the threshold.
+    # Push the part-key semi join below the supply aggregate: filtering on
+    # the grouping key commutes with the groupBy, and the (partkey, suppkey)
+    # aggregate shrinks to the ~0.05% of rows whose part survives the
+    # p_type/p_size predicate. No hard hint (constant fraction of part).
     li_f = li.join(
         part.select("p_partkey"),
         li.l_partkey == F.col("p_partkey"),
@@ -737,8 +669,8 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == "EUROPE"
     )
-    # supplier is SF-linear -> the EUROPE bundle carries no hard hint
-    # (tables.py policy); nation/region inside it are the bounded dims
+    # supplier is SF-linear: the EUROPE bundle carries no hard hint;
+    # nation/region inside it are the bounded dims
     eu = (
         supply.join(
             supp.join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
@@ -759,10 +691,9 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "s_acctbal", "s_name", "n_name", "p_partkey", "p_name",
-            # unrounded: the raw double quotient is bit-identical in
-            # both engines, while ROUND(x, 6) breaks exact .5 ties
-            # differently (Spark HALF_UP on shortest repr vs DuckDB
-            # scaled-double) on this small-integer-quotient domain
+            # unrounded: the raw double quotient is bit-identical in both
+            # engines, while ROUND(x, 6) breaks exact .5 ties differently
+            # (Spark HALF_UP on shortest repr vs DuckDB scaled-double)
             F.col("sp_cost").alias("unit_cost"),
         )
         .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
@@ -770,9 +701,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q9 — product-type profit by nation and year
-# ---------------------------------------------------------------------------
+# --- Q9 — product-type profit by nation and year ----------------------------
 
 
 @register(
@@ -790,16 +719,11 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape: profit per (supplier nation, order year) over
-    parts matching a name pattern. The classic uses partsupp's
-    ps_supplycost; the trimmed schema substitutes a retail-price cost
-    proxy (1% of p_retailprice per unit) — same 5-table join tree.
-
-    Scale: supplier/nation broadcast; the name-matched part subset
-    is an SF-linear constant fraction, so it carries no hard hint
-    (AQE broadcasts while it fits); the lineitem⋈orders fact-fact
-    join shuffles once on orderkey; exact decimal profit sum is
-    partition-order independent.
+    """TPC-H Q9 shape: profit per (supplier nation, order year) over parts
+    matching a name pattern. The classic uses partsupp's ps_supplycost; the
+    trimmed schema substitutes a retail-price cost proxy (1% of
+    p_retailprice per unit), with the same 5-table join tree. The
+    name-matched part subset is SF-linear and carries no hint.
     """
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(
@@ -824,9 +748,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q11 — important stock identification (grouped value vs global share)
-# ---------------------------------------------------------------------------
+# --- Q11 — important stock identification (grouped value vs global share) ---
 
 
 @register(
@@ -847,15 +769,11 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape: per-part inventory value within one nation,
-    kept only where the part's value exceeds a fixed fraction of the
-    nation's total (scalar subquery → broadcast threshold join).
-    The classic ps_supplycost*ps_availqty value becomes shipped
-    extendedprice*quantity from lineitem.
-
-    Scale: one shuffle to the per-part aggregate; the global total is
-    a second pass over the SAME filtered projection (Spark reuses the
-    scan), reduced to a single broadcast row — no driver collect.
+    """TPC-H Q11 shape: per-part inventory value within one nation, kept
+    only where the part's value exceeds a fixed fraction of the nation's
+    total (scalar subquery → broadcast 1-row threshold join). The classic
+    ps_supplycost*ps_availqty value becomes shipped extendedprice*quantity
+    from lineitem.
     """
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
@@ -879,9 +797,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q15 — top supplier (aggregate view + MAX scalar subquery)
-# ---------------------------------------------------------------------------
+# --- Q15 — top supplier (aggregate view + MAX scalar subquery) --------------
 
 _Q15_REV = f"""
     (SELECT l_suppkey AS supplier_no,
@@ -906,10 +822,10 @@ _Q15_REV = f"""
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15: the revenue view aggregates once; the MAX scalar
-    subquery becomes a single-row broadcast joined back on VALUE
-    equality. Exact decimal revenue sums make the double equality
-    safe — both sides derive from the identical associative sum, so
-    ties (multiple max suppliers) are found exactly, not by epsilon.
+    subquery becomes a single-row broadcast joined back on value equality.
+    Exact decimal revenue sums make the double equality safe: both sides
+    derive from the identical associative sum, so ties (multiple max
+    suppliers) are found exactly.
     """
     li = load_table(spark, sf_dir, "lineitem")
     revenue = (
@@ -931,9 +847,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q16 — parts/supplier relationship (NOT IN + COUNT DISTINCT)
-# ---------------------------------------------------------------------------
+# --- Q16 — parts/supplier relationship (NOT IN + COUNT DISTINCT) ------------
 
 
 @register(
@@ -951,18 +865,14 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q16_parts_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape: distinct supplier counts per part group,
-    excluding a blacklist subquery (NOT IN → left-anti join; the
-    classic blacklists complaint suppliers — the trimmed schema
-    substitutes negative account balance).
+    """TPC-H Q16 shape: distinct supplier counts per part group, excluding
+    a blacklist subquery (NOT IN → left-anti join; the classic blacklists
+    complaint suppliers, the trimmed schema negative account balance).
 
-    Scale: the blacklist is a constant fraction of SF-linear
-    supplier, so it carries NO hard hint (AQE broadcasts while it
-    fits); COUNT(DISTINCT) shuffles (brand, type, size, suppkey) —
-    Spark expands to a two-phase distinct-then-count automatically,
-    so hot groups don't bottleneck one reducer. The probe drops NULL
-    suppkeys to match the oracle's NOT IN three-valued logic (a NULL
-    never passes NOT IN, but an anti join would keep it).
+    The blacklist is a constant fraction of SF-linear supplier and carries
+    no hint. The probe drops NULL suppkeys to match the oracle's NOT IN
+    three-valued logic (a NULL never passes NOT IN, but an anti join would
+    keep it).
     """
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_suppkey").isNotNull()
@@ -982,9 +892,7 @@ def q16_parts_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q20 — potential part promotion (nested aggregate subqueries)
-# ---------------------------------------------------------------------------
+# --- Q20 — potential part promotion (nested aggregate subqueries) -----------
 
 
 @register(
@@ -1008,17 +916,11 @@ def q16_parts_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers (in one nation) who concentrated a
-    part's shipments into the target year — the classic's
-    "availqty > half a year's shipments" nested subquery becomes a
-    per-(suppkey, partkey) conditional-vs-total quantity comparison,
-    preserving the IN(part-name subquery) + IN(grouped HAVING
-    subquery) nesting.
-
-    Scale: the name-filtered part keys semi-join BEFORE the
-    (suppkey, partkey) aggregate, so the grouped state is ~1/8 of
-    lineitem; both the part subset and the qualifying supplier set
-    are constant fractions of SF-linear tables, so neither carries a
-    hard broadcast hint — AQE broadcasts them only while they fit.
+    part's shipments into the target year. The classic's "availqty > half a
+    year's shipments" nested subquery becomes a per-(suppkey, partkey)
+    conditional-vs-total quantity comparison, preserving the IN(part-name
+    subquery) + IN(grouped HAVING subquery) nesting. The name-filtered part
+    keys semi-join before the (suppkey, partkey) aggregate.
     """
     li = load_table(spark, sf_dir, "lineitem")
     small = load_table(spark, sf_dir, "part").filter(
@@ -1049,8 +951,7 @@ def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         supp.join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        # qualifying is bounded only by HAVING selectivity (up to ALL
-        # suppliers) — no hard hint, AQE decides
+        # qualifying is bounded only by HAVING selectivity: no hard hint
         .join(
             qualifying,
             supp.s_suppkey == F.col("l_suppkey"),
@@ -1061,9 +962,7 @@ def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Q21 — suppliers who kept orders waiting (double correlated EXISTS)
-# ---------------------------------------------------------------------------
+# --- Q21 — suppliers who kept orders waiting (double correlated EXISTS) -----
 
 
 @register(
@@ -1095,23 +994,19 @@ def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21: the hardest classic shape — a correlated EXISTS and
-    NOT EXISTS against the same fact table. Instead of two lineitem
-    self-joins (three fact shuffles + row explosion on big orders),
-    aggregate ONCE per (orderkey, suppkey) with late flags, then ONCE
-    per order counting suppliers and late suppliers; the EXISTS pair
-    collapses to ``n_suppliers > 1 AND n_late_suppliers = 1`` — the
-    waiting supplier is an order's SOLE late supplier among several.
-    Same semantics (the oracle keeps the classic double-EXISTS form;
-    the driver value-checks the two shapes against each other), two
-    shuffles total, and the per-order state is two small counts.
+    """TPC-H Q21: a correlated EXISTS and NOT EXISTS against the same fact
+    table. Instead of two lineitem self-joins, aggregate once per
+    (orderkey, suppkey) with late flags, then once per order counting
+    suppliers and late suppliers; the EXISTS pair collapses to
+    ``n_suppliers > 1 AND n_late_suppliers = 1`` (the waiting supplier is
+    an order's sole late supplier among several). The oracle keeps the
+    classic double-EXISTS form, so the two shapes are value-checked against
+    each other.
 
-    NUMWAIT counts DISTINCT waiting (order, supplier) PAIRS — the
-    per-order aggregate dedups multiple late lines from the same
-    supplier, and the oracle mirrors that with an explicit DISTINCT
-    over (s_name, l_orderkey, l_suppkey) before counting, so both
-    shapes agree even when one supplier ships several late lines in
-    the same order.
+    NUMWAIT counts distinct waiting (order, supplier) pairs: the per-order
+    aggregate dedups multiple late lines from the same supplier, and the
+    oracle mirrors that with an explicit DISTINCT over (s_name, l_orderkey,
+    l_suppkey) before counting.
     """
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(
@@ -1143,8 +1038,8 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_name") == "NATION_5"
     )
     return (
-        # one-nation supplier slice is 1/25 of an SF-linear table —
-        # no hard hint (nation itself is hinted inside the join)
+        # one-nation supplier slice is 1/25 of an SF-linear table: no
+        # hard hint (nation itself is hinted inside the join)
         waiting.join(
             supp.join(
                 F.broadcast(nation), supp.s_nationkey == nation.n_nationkey

@@ -2,10 +2,10 @@
 extension mechanism (arbitrary executables over stdin/stdout,
 reference ``worker/__main__.py:116-117``).
 
-Preference order at scale: JVM built-ins (everything else in this
-package) → Arrow-vectorized pandas UDFs (here) → ``RDD.pipe``
-(mapreduce/job.py, exact reference analog). Row-at-a-time Python
-UDFs exist for completeness but are deliberately not used anywhere.
+Preference order: JVM built-ins (everything else in this package) →
+Arrow-vectorized pandas UDFs (here) → mapper/reducer subprocess pipes
+(mapreduce/job.py, the reference analog). Row-at-a-time Python UDFs are not
+used anywhere.
 """
 
 from __future__ import annotations
@@ -51,13 +51,11 @@ def q_pandas_udf_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the plain SQL arithmetic, proving the Arrow exchange is
     value-exact."""
     part = load_table(spark, sf_dir, "part")
-    # Loud NaN/Inf envelope, enforced BEFORE the UDF: inside the
-    # pandas batch a NULL and a NaN price are the same float64 NaN
-    # (indistinguishable), and the Arrow return path would silently
-    # turn a NaN score into NULL where the DuckDB twin emits NaN — a
-    # baffling gate mismatch. NULL passes through (isnan(NULL) is
-    # NULL, so the when-condition falls to otherwise), matching the
-    # oracle's NULL propagation.
+    # NaN/Inf envelope, enforced before the UDF: inside the pandas batch a
+    # NULL and a NaN price are the same float64 NaN, and the Arrow return
+    # path would turn a NaN score into NULL where the DuckDB twin emits NaN.
+    # NULL passes through (isnan(NULL) is NULL, so the when-condition falls
+    # to otherwise), matching the oracle's NULL propagation.
     price = F.when(
         F.isnan("p_retailprice")
         | (F.abs("p_retailprice") == F.lit(float("inf"))),
@@ -87,11 +85,11 @@ def q_pandas_udf_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-mitigated (salted) join, oracle-checked against the plain
-    join: the big side carries a deterministic salt, the small side
-    is exploded across all salt values, and the equi-join runs on
-    (key, salt) — splitting any hot key across SALT partitions. AQE's
-    skew-join handles moderate skew automatically; explicit salting
-    is the portable fallback for extreme single-key skew at 100 TB.
+    join: the big side carries a deterministic salt, the small side is
+    exploded across all salt values, and the equi-join runs on (key, salt),
+    splitting any hot key across SALT partitions. AQE's skew join handles
+    moderate skew; explicit salting is the fallback for extreme single-key
+    skew.
     """
     salt_n = 8
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -145,15 +143,13 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native ``session_window`` (30-minute gap) — oracle-checked
-    against the first-principles lag/cumsum sessionization, pinning
-    down Spark's session-merge semantics: a gap of EXACTLY 30:00
-    still merges (an event landing on the previous session's
-    exclusive end extends it — verified by execution), so the oracle
-    splits only on strictly-greater gaps; and events with NULL ts
-    are dropped by SessionWindowing, mirrored by the oracle's
-    ``ts IS NOT NULL`` guard (DuckDB would otherwise sort them last
-    and glue them onto the final session)."""
+    """Native ``session_window`` (30-minute gap), oracle-checked against
+    the lag/cumsum sessionization, pinning Spark's session-merge semantics:
+    a gap of exactly 30:00 still merges (an event on the previous session's
+    exclusive end extends it), so the oracle splits only on strictly-greater
+    gaps; and events with NULL ts are dropped by SessionWindowing, mirrored
+    by the oracle's ``ts IS NOT NULL`` guard (DuckDB would otherwise sort
+    them last and glue them onto the final session)."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes"), "user_id")

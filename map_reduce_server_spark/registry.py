@@ -52,21 +52,14 @@ def register(
             return fn(spark, sf_dir)
 
         if oracle is not None:
-            # The storage form collapses ALL whitespace — including
-            # inside quoted SQL literals. Single internal spaces
-            # survive the collapse; any OTHER whitespace char (tab,
-            # newline, \r, \v, \f, NBSP — anything str.split treats
-            # as whitespace) or a 2+ run would be silently rewritten
-            # into a different literal (a baffling oracle mismatch
-            # with no pointer to the cause), so refuse it loudly at
-            # registration. Odd-indexed split segments are the
-            # inside-quote spans.
-            # A doubled quote ('') is SQL's escaped apostrophe: it
-            # flips the odd/even parity of a naive split and every
-            # span after it would be misclassified. Collapse each
-            # pair to a sentinel BEFORE splitting — the sentinel is
-            # data inside whichever span it lands in, keeping the
-            # remaining quotes as genuine string delimiters.
+            # The storage form collapses all whitespace, including inside
+            # quoted SQL literals, so a literal holding any whitespace but
+            # single spaces (tab, newline, NBSP, a 2+ run) would silently
+            # become a different literal: refuse it at registration.
+            # Odd-indexed split segments are the inside-quote spans. A
+            # doubled quote ('') is SQL's escaped apostrophe and would flip
+            # the split's parity, so each pair collapses to a sentinel
+            # first; the sentinel is data inside whichever span it lands in.
             parsed = oracle.replace("''", "\x00")
             for lit in parsed.split("'")[1::2]:
                 if "  " in lit or any(
@@ -144,14 +137,11 @@ def load_all() -> None:
 
 
 # The driver verifies a ~50-query window from the head of
-# ``all_queries()`` each round and commits the rows as
-# CORRECTNESS_rNN.json next to this package. ``all_queries`` and
-# ``all_oracles`` order the registry stalest-first from those files:
-# names with no green row first, then by the round of their freshest
-# green row, registration order breaking ties. Committing a
-# CORRECTNESS file advances the rotation; without the files the
-# order is registration order. Local oracle-parity tests cover every
-# query regardless of this order.
+# ``all_queries()`` and commits the rows as CORRECTNESS_rNN.json next to
+# this package. ``all_queries`` and ``all_oracles`` order the registry
+# stalest-first from those files: names with no green row first, then by
+# the round of their freshest green row, registration order breaking ties.
+# Without the files the order is registration order.
 _CORRECTNESS_DIR = Path(__file__).resolve().parent.parent
 
 # Round -> names whose code changed in that round's build. A green

@@ -1,4 +1,4 @@
-"""SparkSession factory with scale-conscious defaults.
+"""SparkSession factory and the pinned session semantics.
 
 The reference engine hand-rolls its runtime (master/worker TCP/UDP,
 reference ``mapreduce/master/__main__.py:56-68``); on Spark the
@@ -10,13 +10,9 @@ the count as its state-partition count), Arrow for any Python-side
 exchange, and the pinned session semantics (:data:`SEMANTICS`) so
 results compare exactly against external oracles.
 
-Engine sessions also start their Python workers through
-:mod:`map_reduce_server_spark.daemon` (``spark.python.daemon.module``).
-Every Python task calls ``importlib.invalidate_caches()``, and on
-CPython 3.11 and 3.12 that makes each cached zip importer re-read its
-whole archive (``pyspark.zip``, the Spark core jar): 200-300 ms per
-task on 4 cores. The daemon's importers re-read an archive only when
-it changed.
+Engine sessions start their Python workers through
+:mod:`map_reduce_server_spark.daemon` (``spark.python.daemon.module``),
+whose zip importers re-read an archive only when it changed.
 
 Python workers import this package one way in every session, from
 any working directory: :func:`pin_semantics` ships it as a zip to the
@@ -130,16 +126,13 @@ def get_spark(
     ``extra_conf`` sets it; a stateful stream keeps the count it first
     started with in its checkpoint.
 
-    Python workers fork from :mod:`map_reduce_server_spark.daemon`,
-    which saves each Python task the 200-300 ms (4 cores, CPython
-    3.11) of re-reading ``pyspark.zip`` and the Spark core jar; a
-    4-task Python RDD job falls from about 0.40 s to 0.13 s. The
-    daemon imports this package before any shipped zip reaches it,
-    so ``spark.executorEnv.PYTHONPATH`` names the package's parent
-    directory, which Spark adds to the daemon's ``PYTHONPATH``. A
-    session built elsewhere (a vanilla ``SparkSession.builder``)
-    keeps ``pyspark.daemon``, and its workers find the package in the
-    shipped zip.
+    Python workers fork from :mod:`map_reduce_server_spark.daemon`
+    (see the module docstring). The daemon imports this package before any
+    shipped zip reaches it, so ``spark.executorEnv.PYTHONPATH`` names the
+    package's parent directory, which Spark adds to the daemon's
+    ``PYTHONPATH``. A session built elsewhere (a vanilla
+    ``SparkSession.builder``) keeps ``pyspark.daemon``, and its workers find
+    the package in the shipped zip.
 
     The master is ``local[cpus,4]``: a failed task gets 4 attempts,
     the cluster default of ``spark.task.maxFailures``, where plain
@@ -150,8 +143,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus},4]")
         .appName(app_name)
         # AQE: coalesce post-shuffle partitions, convert to broadcast
-        # joins at runtime, split skewed partitions — all essential at
-        # 100 TB and harmless locally.
+        # joins at runtime, split skewed partitions.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

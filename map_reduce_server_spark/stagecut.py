@@ -1,25 +1,22 @@
-"""Stage-cut policy: ONE place where iterative and multi-consumer
+"""Stage-cut policy: the one place where iterative and multi-consumer
 operators sever lineage and materialize an intermediate.
 
-Why lineage cuts exist here at all: iterative plans (pagerank,
-pointer-jumping connected components) and multi-consumer plans
-(PPJoin's shingle set, the co-purchase edge list) either grow an
-exponentially deep lineage or re-execute an expensive subtree per
-consumer. A cut bounds both. Everything else stays one lazy plan: a
-cut is kept only where a loop needs it or where the uncut plan
-measured slower for re-running a subtree, and each call site says
-which in a ``# kept:`` line.
+Iterative plans (pagerank, pointer-jumping connected components) grow a
+deep lineage, and multi-consumer plans (PPJoin's shingle set, the
+co-purchase edge list) re-execute an expensive subtree per consumer; a
+cut bounds both. Everything else stays one lazy plan: a cut is kept only
+where a loop needs it or where the uncut plan re-runs a subtree, and each
+call site says which in a ``# kept:`` line.
 
-A cut is ``localCheckpoint``: executor-local blocks, no replication,
-no DFS round-trip. The returned DataFrame's logical plan is a fresh
-leaf (a ``LogicalRDD``), so Catalyst cannot re-expand the upstream
-subtree, per-iteration plans stay O(1) deep, and every cut is eager:
-it runs exactly one job at construction time.
+A cut is ``localCheckpoint``: executor-local blocks, no replication, no
+DFS round-trip. The returned DataFrame's logical plan is a fresh leaf (a
+``LogicalRDD``), so Catalyst cannot re-expand the upstream subtree and
+per-iteration plans stay O(1) deep. Every cut is eager: it runs exactly
+one job at construction time.
 
-A loop that steers on a scalar of what it cuts (a row count, a
-convergence count) reads it with :func:`stage_cut_metric`: the
-aggregate rides the cut's own job as an ``Observation``, so the scalar
-costs no second job and no second driver round trip.
+A loop that steers on a scalar of what it cuts (a row count, a convergence
+count) reads it with :func:`stage_cut_metric`: the aggregate rides the
+cut's own job as an ``Observation``, so it costs no second job.
 """
 
 from __future__ import annotations

@@ -1,19 +1,13 @@
 """Structured Streaming over the events table.
 
-The reference's only temporal behavior is a FIFO job queue
-(reference ``master/__main__.py:209-218``); real stream processing
-is a north-star addition. The tumbling-window aggregation below runs
-as a genuine streaming query (parquet file source → event-time
-window → sink); in tests/oracle runs it's driven to completion with
-``processAllAvailable`` on the bounded input.
+The reference's only temporal behavior is a FIFO job queue (reference
+``master/__main__.py:209-218``). The streaming queries here run as real
+streaming queries (parquet file source → event-time operator → sink),
+driven to completion on the bounded input.
 
 Every ``stream_*`` query returns through :func:`run_bounded`, the one
 sink: each micro-batch goes through ``foreachBatch`` to per-batch
 parquet, and the runner reads the batches back as the result.
-
-Scale note: at 100 TB/day the same plans run against a Kafka source
-with watermark-bounded state; the window key (window x event_type)
-is low-cardinality so state stays tiny.
 """
 
 from __future__ import annotations
@@ -36,10 +30,8 @@ _WINDOW = "5 minutes"
 
 
 def windowed_event_counts(events: DataFrame) -> DataFrame:
-    """Tumbling 5-minute window x event_type counts + exact value sum.
-
-    Works for both batch and streaming DataFrames (same plan — that's
-    the point of Structured Streaming).
+    """Tumbling 5-minute window x event_type counts + exact value sum, for
+    batch and streaming DataFrames alike.
     """
     return (
         events.withWatermark("ts", "10 minutes")
@@ -80,7 +72,7 @@ def windowed_event_counts(events: DataFrame) -> DataFrame:
     """,
 )
 def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding (hopping) window: 10-minute windows every 5 minutes —
+    """Sliding (hopping) window: 10-minute windows every 5 minutes, so
     each event lands in two windows. Batch form of the streaming
     window(ts, size, slide); the oracle expands each event into its
     candidate window starts explicitly."""
@@ -113,10 +105,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (read-only) single-file table looks like a stream landing zone.
     stage = tempfile.mkdtemp(prefix="mrss_stream_")
     cleanup_at_exit(stage)
-    # abspath: the symlink target resolves relative to the SYMLINK's
-    # directory (in /tmp), so a relative sf_dir would stage a
-    # dangling link — batch reads work (Spark resolves against cwd)
-    # while every streaming query fails on the source.
+    # abspath: the symlink target resolves relative to the symlink's
+    # directory (in /tmp), so a relative sf_dir would stage a dangling
+    # link that batch reads survive and every streaming query fails on.
     os.symlink(
         os.path.abspath(f"{sf_dir}/events.parquet"),
         os.path.join(stage, "events.parquet"),
@@ -130,17 +121,16 @@ def run_bounded(
     stream: DataFrame, mode: str, keys: list[str] | None = None
 ) -> DataFrame:
     """Drive a streaming query over bounded input to completion and
-    return its result — the one sink every ``stream_*`` query uses.
+    return its result; the one sink every ``stream_*`` query uses.
 
     Each micro-batch goes through ``foreachBatch`` to ``b{batch_id}``
-    parquet; files keyed by batch id make a re-run of a batch
-    overwrite idempotently (exactly-once output on at-least-once
-    delivery), and nothing collects to the driver. With ``keys``
-    (update and complete mode) the result is the latest-batch row per
-    key; without (append mode) it is every emitted row. The output
-    dir registers for cleanup BEFORE the query starts, so a failed
-    micro-batch cannot leak it. batch_id is written as an explicit
-    bigint — a bare ``lit(int)`` is INT32 in parquet.
+    parquet; files keyed by batch id make a re-run of a batch overwrite
+    idempotently (exactly-once output on at-least-once delivery). With
+    ``keys`` (update and complete mode) the result is the latest-batch row
+    per key; without (append mode) it is every emitted row. The output dir
+    registers for cleanup before the query starts, so a failed micro-batch
+    cannot leak it. batch_id is written as an explicit bigint; a bare
+    ``lit(int)`` is INT32 in parquet.
     """
     out = tempfile.mkdtemp(prefix="mrss_sink_")
     cleanup_at_exit(out)
@@ -197,19 +187,14 @@ _STREAM_DEDUP_ORACLE = """
 
 @register("stream_dedup_events", oracle=_STREAM_DEDUP_ORACLE)
 def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming dedup with a deterministic keeper rule: key events by
-    a content fingerprint (event_type, bucketed value), keep the
-    smallest event_id and count copies — the streaming face of
-    ``dedup_exact``/``dedup_fingerprint``.
+    """Streaming dedup with a deterministic keeper rule: key events by a
+    content fingerprint (event_type, bucketed value), keep the smallest
+    event_id and count copies.
 
-    ``dropDuplicates`` keeps whichever row a partition happens to
-    deliver first (arrival-order-dependent, so no value oracle can
-    pin it); the MIN-aggregate formulation is order-independent and
-    therefore exactly replayable by the batch oracle, while still
-    running as true keyed streaming state in update mode through
-    :func:`run_bounded`. At scale, state is one row per distinct key
-    (the dedup table itself), and the sink writes only updated keys
-    per batch.
+    ``dropDuplicates`` keeps whichever row a partition delivers first, so
+    no value oracle can pin it; the MIN-aggregate formulation is
+    order-independent and exactly replayable by the batch oracle, while
+    still running as keyed streaming state in update mode.
     """
     deduped = (
         _events_stream(spark, sf_dir)
@@ -228,14 +213,12 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("stream_window_counts", oracle=_STREAM_ORACLE)
 def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the windowed aggregation as a real streaming query over the
-    bounded parquet input and return the final result.
+    """Run the windowed aggregation as a streaming query over the bounded
+    parquet input and return the final result.
 
-    Complete mode: every micro-batch re-emits the whole result, so
-    the latest batch per (window, event_type) is the answer. It is
-    kept as the output-mode variant of
-    ``stream_window_counts_incremental`` (the update-mode scale
-    pattern); sink I/O per batch is O(all windows ever).
+    Complete mode: every micro-batch re-emits the whole result, so the
+    latest batch per (window, event_type) is the answer. The output-mode
+    variant of ``stream_window_counts_incremental``.
     """
     agg = windowed_event_counts(_events_stream(spark, sf_dir))
     return run_bounded(agg, "complete", ["w_start", "event_type"])
@@ -245,14 +228,9 @@ def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_window_counts_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The scale-correct streaming aggregation: UPDATE-mode windowed
-    counts through :func:`run_bounded`.
-
-    Each micro-batch emits only the windows it updated — O(updated
-    windows) per batch, not O(all windows ever) as in complete mode.
-    The final table is the latest-batch row per (window, event_type).
-    This is the pattern that survives unbounded input: state size is
-    bounded by the watermark, sink I/O by the update rate.
+    """Update-mode windowed counts through :func:`run_bounded`: each
+    micro-batch emits only the windows it updated. The final table is the
+    latest-batch row per (window, event_type).
     """
     agg = windowed_event_counts(_events_stream(spark, sf_dir))
     return run_bounded(agg, "update", ["w_start", "event_type"])
@@ -276,23 +254,18 @@ _STREAM_TRENDING_ORACLE = """
 
 @register("stream_trending_topk", oracle=_STREAM_TRENDING_ORACLE)
 def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trending dashboard: top-3 event types per 10-minute window,
-    maintained streaming-side. Ranking is not incrementally
-    maintainable (one count update can reorder a whole window), so the
-    scale pattern splits: the STREAM maintains per-(window, type)
-    counts in update mode through :func:`run_bounded` — tiny keyed
-    state, only touched keys written per batch —
-    and the rank is the cheap serving-side query over the maintained
-    table (windows × types rows, not events). The tie rule
+    """Trending dashboard: top-3 event types per 10-minute window. Ranking
+    is not incrementally maintainable (one count update can reorder a whole
+    window), so the stream maintains per-(window, type) counts in update
+    mode and the rank is a query over the maintained table. The tie rule
     (count DESC, event_type) is total, so top-3 is engine-exact.
     """
     # watermark bounds the update-mode window state on an unbounded
-    # source (without it every window's count row lives forever);
-    # no-op for the bounded gate input, same setting as
-    # windowed_event_counts. MUST group by the window STRUCT —
-    # grouping by .getField("start") drops the event-time metadata
-    # and the watermark silently never binds (verified: append mode
-    # rejects that shape as "aggregation without watermark").
+    # source; no-op for the bounded input, same setting as
+    # windowed_event_counts. Group by the window struct: grouping by
+    # .getField("start") drops the event-time metadata and the watermark
+    # silently never binds (append mode rejects that shape as
+    # "aggregation without watermark").
     counts = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "10 minutes")
@@ -313,10 +286,9 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- streaming sessionization ------------------------------------------------
 
-# Oracle for stream_sessionize below: the identical
-# first-principles lag/cumsum sessionization that certifies the
-# batch q_session_window (operators/udf.py) — a streaming replay of
-# the bounded input must land on exactly the batch answer.
+# Oracle for stream_sessionize below: the lag/cumsum sessionization that
+# certifies the batch q_session_window (operators/udf.py); a streaming
+# replay of the bounded input must land on exactly the batch answer.
 _STREAM_SESSIONIZE_ORACLE = """
     WITH flagged AS (
       SELECT user_id, ts, value, event_id,
@@ -341,12 +313,10 @@ _STREAM_SESSIONIZE_ORACLE = """
 """
 
 
-# One sentinel row with this ts is staged as the FINAL replay file:
-# it advances the global watermark past every real session's end so
-# append mode can finalize them on the bounded input (a real
-# deployment's stream simply keeps flowing; a bounded replay needs
-# the explicit nudge). Sessions at or past this instant are the
-# sentinel's own and are filtered from the result.
+# One sentinel row with this ts is staged as the final replay file: it
+# advances the global watermark past every real session's end so append
+# mode can finalize them on the bounded input. Sessions at or past this
+# instant are the sentinel's own and are filtered from the result.
 _SESSIONIZE_FLUSH_TS = "2035-01-01 00:00:00"
 
 
@@ -355,29 +325,24 @@ def _events_stream_timeordered(
     sf_dir: str,
     sentinel: bool = True,
 ) -> DataFrame:
-    """Streaming DataFrame over the bounded events table staged as
-    four TIME-RANGE files replayed one per micro-batch, plus a
-    final one-row watermark-flush sentinel file — the multi-batch
-    sibling of :func:`_events_stream` for operators whose cross-batch
-    state transitions (session growth, append-mode finalization,
-    watermark eviction) a single-batch replay would never exercise.
-    The staged dir is removed at interpreter exit.
+    """Streaming DataFrame over the bounded events table staged as four
+    time-range files replayed one per micro-batch, plus a final one-row
+    watermark-flush sentinel file, for operators whose cross-batch state
+    transitions (session growth, append-mode finalization, watermark
+    eviction) a single-batch replay would never exercise. The staged dir is
+    removed at interpreter exit.
 
-    Time-ordered arrival is the contract a watermarked source
-    provides at scale (Kafka with bounded disorder): each batch's
-    events are later than every prior batch's, so (a) nothing is ever
-    late-dropped, and (b) a session evicted by the watermark can
-    never receive a mergeable event afterwards — eviction is safe by
-    construction, not by luck. ``repartitionByRange`` makes file k
-    the k-th time range (NULL ts sorts into file 0 and is dropped by
-    SessionWindowing whenever it arrives), file names follow
-    partition order, and explicit mtimes pin the file-source replay
-    order deterministically; the sentinel gets the LAST mtime.
+    Each batch's events are later than every prior batch's, so (a) nothing
+    is late-dropped, and (b) a session evicted by the watermark can never
+    receive a mergeable event afterwards. ``repartitionByRange`` makes file
+    k the k-th time range (NULL ts sorts into file 0 and is dropped by
+    SessionWindowing whenever it arrives), file names follow partition
+    order, and explicit mtimes pin the replay order; the sentinel gets the
+    last mtime.
 
-    ``sentinel=False`` skips the flush row: NoTimeout stateful
-    operators carry no watermark, so nothing needs flushing and the
-    all-NULL sentinel row would instead surface as a spurious NULL
-    group key in the operator's own output.
+    ``sentinel=False`` skips the flush row: NoTimeout stateful operators
+    carry no watermark, so nothing needs flushing and the all-NULL sentinel
+    row would surface as a spurious NULL group key in their output.
     """
     from map_reduce_server_spark.tables import load_table
 
@@ -400,10 +365,9 @@ def _events_stream_timeordered(
     for i, f in enumerate(parts):
         os.utime(os.path.join(data_dir, f), (base + 10 * i, base + 10 * i))
     if sentinel:
-        # the flush sentinel: a far-future row, schema-identical
-        # (built FROM the normalized frame so ts carries the same
-        # type), written as its own file so it forms the final
-        # micro-batch.
+        # the flush sentinel: a far-future row, schema-identical (built
+        # from the normalized frame so ts carries the same type), written
+        # as its own file so it forms the final micro-batch.
         sent_dir = os.path.join(stage, "sentinel")
         (
             ev.limit(1)
@@ -440,26 +404,18 @@ def _events_stream_timeordered(
 
 @register("stream_sessionize", oracle=_STREAM_SESSIONIZE_ORACLE)
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRUE streaming sessionization: native ``session_window``
-    (30-minute gap) maintained as keyed streaming state across a
-    multi-batch time-ordered replay — the streaming face of
-    ``q_session_window`` and the stateful sibling of
-    ``stream_window_counts_incremental`` (whose tumbling windows
-    never change identity; sessions GROW and MERGE, which is why
-    Spark restricts streaming session aggregation to APPEND mode —
-    there is no key-stable row to update).
+    """Streaming sessionization: native ``session_window`` (30-minute
+    gap) maintained as keyed streaming state across a multi-batch
+    time-ordered replay, the streaming face of ``q_session_window``.
+    Sessions grow and merge, so Spark restricts streaming session
+    aggregation to append mode (there is no key-stable row to update).
 
-    Append mode emits each session EXACTLY ONCE, when the watermark
-    passes its end and no mergeable event can still arrive — the
-    streaming-native finalization a training-ingest pipeline wants
-    (downstream consumers never see a session twice). On the bounded
-    replay the last sessions would otherwise wait forever for a
-    watermark that no longer moves, so the staging appends a one-row
-    far-future sentinel file as the final micro-batch; its own
-    session is sliced off by the ``s_start`` ceiling filter. The
-    append-mode stream runs through :func:`run_bounded`. State is
-    bounded by the watermark and sink I/O is O(finalized sessions per
-    batch).
+    Append mode emits each session exactly once, when the watermark passes
+    its end and no mergeable event can still arrive. On the bounded replay
+    the last sessions would wait forever for a watermark that no longer
+    moves, so the staging appends a one-row far-future sentinel file as the
+    final micro-batch; its own session is sliced off by the ``s_start``
+    ceiling filter.
     """
     agg = (
         _events_stream_timeordered(spark, sf_dir)
@@ -500,25 +456,17 @@ GROUP BY event_type
 
 @register("stream_stateful_counts", oracle=_STREAM_STATEFUL_ORACLE)
 def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSTOM stateful streaming operator through the driver gate:
-    per-event-type running (count, exact-cents total) maintained by
-    ``applyInPandasWithState`` (streaming/stateful.py) across a
-    multi-batch time-ordered replay — the one streaming family
-    (arbitrary user state, beyond what window/session aggregation
-    can express) no registered query exercised yet.
+    """Custom stateful streaming operator: per-event-type running (count,
+    exact-cents total) maintained by ``applyInPandasWithState``
+    (streaming/stateful.py) across a multi-batch time-ordered replay.
 
-    The state is a (count, integer-cents) pair: each value rounds to
-    cents independently (HALF_UP on the shortest decimal repr,
-    exactly Spark's double->decimal(30,2) cast), so the fold is
-    associative and the final snapshot is independent of batch
-    boundaries — the streaming analog of the engine's exact-decimal
-    aggregation rule, which is precisely what makes a batch SQL twin
-    possible for a stateful operator. Replay is 4 time-range files,
-    one per micro-batch with NO flush sentinel (NoTimeout state
-    never needs a watermark), through :func:`run_bounded` in update
-    mode; the result is the latest snapshot per key. At scale: state
-    is one integer pair per key and each batch emits only updated
-    keys."""
+    Each value rounds to cents independently (HALF_UP on the shortest
+    decimal repr, exactly Spark's double->decimal(30,2) cast), so the fold
+    is associative and the final snapshot is independent of batch
+    boundaries, which is what makes a batch SQL twin possible. Replay is 4
+    time-range files, one per micro-batch with no flush sentinel (NoTimeout
+    state needs no watermark), in update mode; the result is the latest
+    snapshot per key."""
     from map_reduce_server_spark.streaming.stateful import (
         running_counts_stream,
     )

@@ -1,17 +1,14 @@
 """Streaming joins: stream-static enrichment and watermarked
 stream-stream interval joins.
 
-The two join capabilities every production streaming pipeline needs
-beyond windowed aggregation (reference has neither — its streams are
-a FIFO job queue, reference ``master/__main__.py:209-218``):
+Beyond windowed aggregation (the reference has neither; its streams are a
+FIFO job queue, reference ``master/__main__.py:209-218``):
 
-- enrich: an unbounded fact stream joined to a bounded dimension.
-  The dimension is broadcast, so the stream never shuffles and the
-  join adds zero streaming state.
-- correlate: two unbounded streams joined on a key within an
-  event-time bound. Both sides carry watermarks and the join
-  condition bounds time in BOTH directions, so Spark can expire
-  state — the difference between bounded memory forever and OOM.
+- enrich: a fact stream joined to a bounded dimension, with no streaming
+  state.
+- correlate: two streams joined on a key within an event-time bound. Both
+  sides carry watermarks and the join condition bounds time in both
+  directions, so Spark can expire state.
 
 Both run as genuine streaming queries (file source → append mode
 through ``events.run_bounded``) driven to completion on the bounded
@@ -40,14 +37,11 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment: the purchase stream joined to the
     customer dimension.
 
-    No streaming state accrues: each micro-batch joins the bounded
-    dim and flows on. The static side carries NO hard broadcast hint
-    — customer is SF-linear, and the engine's broadcast policy (see
-    the policy comment in ``tables.py``) reserves forced broadcasts
-    for the constant-size region/nation dims; Spark still broadcasts here
-    whenever the side actually fits (statistics-driven), which is
-    the 100 TB/day pattern — dims broadcast while they fit, facts
-    flow through.
+    No streaming state accrues: each micro-batch joins the bounded dim and
+    flows on. The static side carries no hard broadcast hint: customer is
+    SF-linear, and the broadcast policy (``tables.py``) reserves forced
+    broadcasts for the constant-size region/nation dims; Spark still
+    broadcasts it whenever it fits.
     """
     from map_reduce_server_spark.tables import load_table
 
@@ -82,13 +76,11 @@ def stream_stream_interval_join(
     """Watermarked stream-stream join: clicks correlated to purchases
     by the same user within 30 minutes (click-to-conversion).
 
-    Both sides carry a watermark and the join bounds event time in
-    BOTH directions (purchase in [click, click + 30 min]), which is
-    what lets Spark expire join state: a click older than watermark −
-    30 min can never match again and is dropped. Without the bound
-    the state grows without limit — the canonical unbounded-join
-    mistake. On bounded input the final append output equals the
-    batch join, which is exactly what the oracle replays.
+    Both sides carry a watermark and the join bounds event time in both
+    directions (purchase in [click, click + 30 min]), so Spark can expire
+    join state: a click older than watermark − 30 min can never match
+    again and is dropped. On bounded input the final append output equals
+    the batch join, which the oracle replays.
     """
     stream = _events_stream(spark, sf_dir)
     clicks = (

@@ -1,14 +1,9 @@
 """Custom stateful streaming operator via applyInPandasWithState.
 
-The reference has no streaming at all (SURVEY.md §2.D); this is the
-north-star "custom stateful operator" path: user-defined per-key
-state evolved batch by batch — the building block for running
-aggregates with custom merge logic (state is partitioned by key
-across executors; only the key's state, never the stream, lives in
-memory).
-
-State lives forever: correct for LOW-cardinality keys (event types
-here) where the running total is the product.
+The reference has no streaming (SURVEY.md §2.D). User-defined per-key state
+evolves batch by batch; state is partitioned by key across executors, and
+only each key's state lives in memory. State lives forever, which is
+correct for low-cardinality keys (event types here).
 """
 
 from __future__ import annotations
@@ -42,18 +37,15 @@ def _fold_cents(
 ) -> tuple[int, int]:
     """Fold micro-batches into (count, exact-cents total).
 
-    Cents (int64) instead of float accumulation: each value rounds
-    to cents independently (HALF_UP, matching decimal(30,2)), so the
-    integer total is associative and exact — independent of batch
-    boundaries, the streaming analog of the engine's decimal-sum
-    rule. Rounding detail: shortest decimal repr of the double (JVM
-    BigDecimal.valueOf == Python repr), then HALF_UP (ties away from
-    zero, for negatives too) — the former floor(|v|*100 + 0.5) trick
-    mis-rounds values like 0.145 whose *100 falls a ulp below the
-    half boundary. NULL/NaN AND +/-inf values carry no measurable
-    amount: the decimal(30,2) cast yields NULL for all of them and
-    SUM skips the value (n still counts the row — COUNT(*));
-    Decimal('Infinity').quantize would raise instead.
+    Cents (int64) instead of float accumulation: each value rounds to
+    cents independently (HALF_UP, matching decimal(30,2)), so the integer
+    total is associative and exact, independent of batch boundaries.
+    Rounding: shortest decimal repr of the double (JVM BigDecimal.valueOf
+    == Python repr), then HALF_UP (ties away from zero, for negatives too);
+    floor(|v|*100 + 0.5) would mis-round values like 0.145 whose *100 falls
+    a ulp below the half boundary. NULL/NaN and +/-inf values carry no
+    amount: the decimal(30,2) cast yields NULL for all of them and SUM skips
+    the value (n still counts the row, as COUNT(*)).
     """
     from decimal import ROUND_HALF_UP, Decimal
 

@@ -1,10 +1,10 @@
 """Parquet table access for the synthetic star schema.
 
-The reference's only source is a directory of line-oriented text
-files (reference ``mapreduce/master/__main__.py:288-289``); the new
-engine's primary source is columnar parquet so Catalyst gets
-predicate pushdown + column pruning for free. Text-dir reading for
-the MapReduce façade lives in :mod:`map_reduce_server_spark.mapreduce`.
+The reference's only source is a directory of line-oriented text files
+(reference ``mapreduce/master/__main__.py:288-289``); the engine's primary
+source is columnar parquet, so Catalyst gets predicate pushdown and column
+pruning. Text-dir reading for the MapReduce façade lives in
+:mod:`map_reduce_server_spark.mapreduce`.
 """
 
 from __future__ import annotations
@@ -32,13 +32,10 @@ TABLES = (
     "embeddings",
 )
 
-# Broadcast policy (enforced at each join site, not via a constant —
-# a registry nothing consults would silently diverge from the actual
-# F.broadcast() hints): region (5 rows) and nation (25 rows) are
-# CONSTANT-size and safe to hint at any scale factor. Everything
-# else — including supplier (10k x SF) — is SF-linear and carries NO
-# hard broadcast hint; AQE broadcasts those sides only while they
-# actually fit.
+# Broadcast policy (enforced at each join site): region (5 rows) and nation
+# (25 rows) are constant-size and safe to hint at any scale factor.
+# Everything else, including supplier (10k x SF), is SF-linear and carries
+# no hard broadcast hint; AQE broadcasts those sides only while they fit.
 
 
 # The session confs that decide how parquet types map to Spark types
@@ -58,12 +55,11 @@ _SCHEMAS: dict[tuple, StructType] = {}
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that infers a regular file's schema
-    only on its first read. Inference starts a footer-reading Spark
-    job per read (0.16 s warm for sf0.001 lineitem on 4 cores); a
-    later read of the same unchanged file passes the kept schema and
-    starts none.
-    Directories and paths that cannot be stat-ed keep plain inference:
-    their contents can change without the path's own stat changing."""
+    only on its first read. Inference starts a footer-reading Spark job per
+    read; a later read of the same unchanged file passes the kept schema and
+    starts none. Directories and paths that cannot be stat-ed keep plain
+    inference: their contents can change without the path's own stat
+    changing."""
     try:
         st = os.stat(path)
     except OSError:
@@ -90,37 +86,30 @@ def load_table(
     """Load one star-schema table from ``{sf_dir}/{name}.parquet``.
 
     ``widen=True`` round-robin repartitions the scan to the session's
-    default parallelism. A small parquet table is one file with one
-    row group, and only the split that holds the row group reads rows,
-    however many splits Spark cuts the file into; every expensive
-    narrow operation downstream (shingle explodes, md5 banks, cosine
-    folds, Python codec decodes) would then run in one task before the
-    first exchange (minhash_wide 2.57 -> 1.39 s at sf0.1 on local[32]).
-    Callers opt in per operator: a scan that feeds straight into a
-    groupBy/window exchange measured 2x SLOWER widened, so this is
-    never blanket. Predicate pushdown and column pruning survive:
-    Catalyst pushes both through the round-robin Repartition to the
-    parquet scan. Under dynamic allocation ``defaultParallelism`` at
-    build time may lag the executor count at run time; a miss costs
-    one undersized round-robin exchange.
+    default parallelism. A small parquet table is one file with one row
+    group, and only the split that holds the row group reads rows, however
+    many splits Spark cuts the file into; every expensive narrow operation
+    downstream (shingle explodes, md5 banks, cosine folds, Python codec
+    decodes) would then run in one task before the first exchange. Callers
+    opt in per operator: a scan that feeds straight into a groupBy/window
+    exchange is slower widened (docs/SCALING.md, scan width). Predicate
+    pushdown and column pruning survive: Catalyst pushes both through the
+    round-robin Repartition to the parquet scan. Under dynamic allocation
+    ``defaultParallelism`` at build time may lag the executor count at run
+    time; a miss costs one undersized round-robin exchange.
 
-    ``events.ts`` has shipped in two physical encodings across
-    driver-generated datasets, both normalized here to a zoned
-    TIMESTAMP (instant semantics, UTC):
+    ``events.ts`` ships in two physical encodings, both normalized here to
+    a zoned TIMESTAMP (instant semantics, UTC):
 
     - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; with
-      ``spark.sql.legacy.parquet.nanosAsLong`` it arrives as a nanos
-      long and is converted by integer division (exact; the synthetic
-      data has zero sub-microsecond residue).
+      ``spark.sql.legacy.parquet.nanosAsLong`` it arrives as a nanos long
+      and is converted by integer division (exact; the synthetic data has
+      zero sub-microsecond residue).
     - timestamp[us] without UTC adjustment: arrives as TIMESTAMP_NTZ,
-      which half the time functions (``unix_micros``, watermarks)
-      reject. The wall time IS the UTC instant (DuckDB reads the same
-      file naively), so the cast below must interpret it as UTC —
-      the session timezone is pinned defensively because the grading
-      driver's vanilla session inherits the JVM default.
-
-    The read goes through :func:`read_parquet`, so a table's schema is
-    inferred once per file, not once per call.
+      which ``unix_micros`` and watermarks reject. The wall time is the UTC
+      instant (DuckDB reads the same file naively), so the cast interprets
+      it as UTC, with the session timezone pinned because a vanilla session
+      inherits the JVM default.
     """
     if name == "events":
         # nanosAsLong must be set BEFORE the read; the driver's own
@@ -135,19 +124,15 @@ def load_table(
 
 
 def normalize_events_ts(df):
-    """Normalize the events ``ts`` column to a zoned TIMESTAMP —
-    ONE definition shared by the batch loader and the streaming
-    source (``streaming/events.py``), so a ts-encoding change cannot
-    silently diverge the streams' event-time semantics from the
-    batch oracles' input. ``nanosAsLong`` must be set by the caller
-    BEFORE the read (:func:`session.pin_semantics`); the UTC session
-    TZ the NTZ cast depends on is pinned again HERE (not trusted to
-    callers — a third call site from a local-TZ session would
-    otherwise shift every instant by the JVM offset with no error).
-    withColumn replaces ts IN PLACE, so no re-select: a hardcoded
-    column list would make the normalized schema differ from the
-    native-timestamp branch for any events variant with extra/missing
-    columns."""
+    """Normalize the events ``ts`` column to a zoned TIMESTAMP: one
+    definition shared by the batch loader and the streaming source
+    (``streaming/events.py``), so the streams' event-time semantics cannot
+    diverge from the batch oracles' input. ``nanosAsLong`` must be set by
+    the caller before the read (:func:`session.pin_semantics`); the UTC
+    session TZ the NTZ cast depends on is pinned again here, so a call from
+    a local-TZ session cannot shift every instant by the JVM offset.
+    withColumn replaces ts in place, so the normalized schema keeps any
+    extra or missing columns of an events variant."""
     # The cast in the NTZ branch resolves the zone at analysis time;
     # sticky-pinning UTC is deliberate (restoring the previous TZ
     # after this call would re-shift the cast when the lazy plan
@@ -165,13 +150,10 @@ def normalize_events_ts(df):
     return df
 
 
-# Last sf_dir whose views were registered, per SparkSession —
-# register_views is called per SQL-entry query invocation, and
-# re-reading 10 parquet footers each time is wasted driver latency.
-# Keyed by the session (weakly — a dropped session must not leak its
-# cache slot), NOT by applicationId: temp views are per-session, so
-# an app-wide key would make spark.newSession() silently skip
-# registration and see absent views.
+# Last sf_dir whose views were registered, per SparkSession, so a repeat
+# register_views call re-reads no parquet footers. Keyed weakly by the
+# session, not by applicationId: temp views are per-session, so an app-wide
+# key would make spark.newSession() skip registration and see absent views.
 _REGISTERED: "weakref.WeakKeyDictionary[SparkSession, str]" = (
     weakref.WeakKeyDictionary()
 )

@@ -1,21 +1,15 @@
 """Self-check: run every registered query against its DuckDB oracle.
 
-The ONE comparator implementation — the test suite's
-``tests/oracle_utils.py`` re-exports from here (two hand-synced
-copies had already drifted, and the comparator IS the correctness
-gate) — so a user of the standalone repo can run the gate without
-pytest:
+The one comparator implementation (``tests/oracle_utils.py`` re-exports
+from here), runnable without pytest:
 
     python -m map_reduce_server_spark verify --sf-dir /data/sf0.01
 
-Comparison contract (same as the grading driver): row count, sorted
-column names, and order-insensitive canonical values (floats via
-repr of float64 — bit-identical values required, which the engine
-guarantees via exact decimal aggregation and portable hashing).
-Deliberately STRICT about DATE vs midnight-TIMESTAMP: the grading
-driver's comparator fails that pairing (duckdb fetchdf renders DATE
-as datetime64), so relaxing it here would hide a driver failure; the
-mismatch message points at the encoding instead.
+Comparison contract: row count, sorted column names, and order-insensitive
+canonical values (floats via repr of float64, so bit-identical values are
+required). Strict about DATE vs midnight-TIMESTAMP: duckdb fetchdf renders
+DATE as datetime64, so the pairing fails in any fetchdf-based comparator;
+the mismatch message points at the encoding.
 """
 
 from __future__ import annotations
@@ -198,16 +192,12 @@ def snapshot_block_ids(spark) -> set[int]:
 def release_session_blocks(spark, baseline: set[int] | None = None) -> None:
     """Drop blocks a consumed query left pinned in the session.
 
-    Iterative/multi-consumer operators ``stage_cut`` compact
-    intermediates (edge lists, shingle tables, rank vectors); the
-    blocks can only be released AFTER the result is consumed, which
-    the operator itself never sees. A long-lived session sweeping
-    many queries (this gate; any REPL doing the same) otherwise
-    accumulates dead blocks until the executor heap tips over —
-    observed as GCLocker allocation failures ~60 queries into an
-    sf0.1 sweep on a default-heap session. Call between queries once
-    the previous result has been fully read.
-
+    Iterative and multi-consumer operators ``stage_cut`` compact
+    intermediates (edge lists, shingle tables, rank vectors); the blocks
+    can only be released after the result is consumed, which the operator
+    never sees. A long-lived session sweeping many queries otherwise
+    accumulates dead blocks until the executor heap runs out. Call between
+    queries once the previous result has been fully read.
     With ``baseline`` (from :func:`snapshot_block_ids`): release only
     RDDs pinned SINCE the snapshot — blocks the caller held before
     (their own localCheckpoints, cached tables) survive. Without it:

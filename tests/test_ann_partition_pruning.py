@@ -1,7 +1,7 @@
 """The ANN scale path made literal: write the corpus partitioned by
 LSH bucket, and verify a bucket-filtered query prunes partitions at
-the scan (reads 1/2^H of the data) — what ann_topk_lsh computes on
-the fly becomes a storage layout at 100 TB."""
+the scan (reads 1/2^H of the data): the bucket ann_topk_lsh computes
+on the fly, as a storage layout."""
 
 from __future__ import annotations
 

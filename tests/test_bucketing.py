@@ -1,6 +1,6 @@
 """Bucketing: joins on the bucket key must not re-shuffle either side
-— the co-located join strategy for repeated fact-to-fact joins at
-100 TB (pay the shuffle once at write time)."""
+— the co-located join strategy for repeated fact-to-fact joins (pay
+the shuffle once at write time)."""
 
 from __future__ import annotations
 

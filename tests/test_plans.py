@@ -1,4 +1,4 @@
-"""Plan-quality gates: the optimizations we rely on at 100 TB must be
+"""Plan-quality gates: the optimizations the engine relies on must be
 visible in the physical plan — pushdown, pruning, broadcast joins,
 whole-stage codegen. A regression here is a performance bug even if
 results stay correct.
@@ -81,8 +81,8 @@ def test_wordcount_prunes_to_text_column(spark, sf_small):
 def test_topk_gets_window_group_limit(spark, sf_small):
     """rank ≤ k filters must trigger WindowGroupLimit — Spark's
     partial top-k that prunes each partition to k rows BEFORE the
-    window shuffle (the thing that keeps per-group top-k viable at
-    100 TB)."""
+    window shuffle, so the shuffle carries k rows per group and
+    partition."""
     for name in ("q_topk_per_group", "ann_topk_bruteforce", "ann_topk_lsh"):
         plan = explain_str(registry.QUERIES[name](spark, sf_small))
         assert "WindowGroupLimit" in plan, name
@@ -116,8 +116,8 @@ def test_ann_bruteforce_broadcasts_queries(spark, sf_small):
 
 
 def test_decontaminate_broadcasts_eval_side(spark, sf_small):
-    """The eval-set gram table is benchmark-sized; the 100 TB train
-    side must never shuffle for the contamination join."""
+    """The eval-set gram table is benchmark-sized, so the contamination
+    join broadcasts it and the train side takes no shuffle."""
     df = registry.QUERIES["text_decontaminate"](spark, sf_small)
     plan = explain_str(df)
     assert "BroadcastHashJoin" in plan
