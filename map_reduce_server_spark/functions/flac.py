@@ -15,6 +15,13 @@ Everything is from the public FLAC format specification:
   bits then a one bit) with the exactly-optimal 4-bit parameter;
 - byte-alignment padding + frame CRC-16 (poly 0x8005, init 0).
 
+Kernels: both CRCs are 256-entry table CRCs; the bit reader takes the
+bytes that cover each field in one slice and finds a unary run's end a
+byte at a time; the writer drains whole bytes and writes each Rice code
+in one call. ``tests/test_codec_kernels.py`` checks the CRCs and the
+reader against bit-by-bit definitions, and pins encoder and decoder
+output by SHA-256 digest.
+
 FLAC is lossless, so decode(encode(x)) == x bit-exactly, which lets the
 decode query's DuckDB oracle recompute every sample from the md5 hex.
 """
@@ -34,14 +41,29 @@ _FIXED_COEFFS = {
 }
 
 
+def _crc_table(poly: int, width: int) -> tuple[int, ...]:
+    """256-entry table for an MSB-first CRC: entry b is the register
+    after shifting byte b through it from a zero state."""
+    top, mask = 1 << (width - 1), (1 << width) - 1
+    table = []
+    for b in range(256):
+        crc = b << (width - 8)
+        for _ in range(8):
+            crc = ((crc << 1) ^ poly if crc & top else crc << 1) & mask
+        table.append(crc)
+    return tuple(table)
+
+
+_CRC8 = _crc_table(0x07, 8)
+_CRC16 = _crc_table(0x8005, 16)
+
+
 def _crc8(data: bytes) -> int:
     """CRC-8, polynomial x^8+x^2+x+1 (0x07), init 0 — the FLAC frame
     header CRC. Known vector: crc8(b'123456789') == 0xF4."""
     crc = 0
     for b in data:
-        crc ^= b
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x07 if crc & 0x80 else crc << 1) & 0xFF
+        crc = _CRC8[crc ^ b]
     return crc
 
 
@@ -50,16 +72,13 @@ def _crc16(data: bytes) -> int:
     whole-frame CRC. Known vector: crc16(b'123456789') == 0xFEE8."""
     crc = 0
     for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = (
-                (crc << 1) ^ 0x8005 if crc & 0x8000 else crc << 1
-            ) & 0xFFFF
+        crc = ((crc << 8) & 0xFFFF) ^ _CRC16[(crc >> 8) ^ b]
     return crc
 
 
 class _BitWriter:
-    """MSB-first bit packer (FLAC bit order)."""
+    """MSB-first bit packer (FLAC bit order): bits gather in an
+    integer window that drains to whole bytes."""
 
     def __init__(self) -> None:
         self.buf = bytearray()
@@ -69,17 +88,17 @@ class _BitWriter:
     def write(self, value: int, bits: int) -> None:
         self.acc = (self.acc << bits) | (value & ((1 << bits) - 1))
         self.nbits += bits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
+        if self.nbits >= 8:
+            k = self.nbits >> 3
+            self.nbits &= 7
+            self.buf += (self.acc >> self.nbits).to_bytes(k, "big")
+            self.acc &= (1 << self.nbits) - 1
 
-    def write_unary(self, q: int) -> None:
-        # FLAC unary: q zero bits then a one bit
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
+    def write_rice(self, u: int, r: int) -> None:
+        """Rice code of ``u``: unary quotient (q zero bits, then a one
+        bit) followed by the low ``r`` bits."""
+        q = u >> r
+        self.write((1 << r) | (u & ((1 << r) - 1)), q + 1 + r)
 
     def align(self) -> None:
         if self.nbits:
@@ -91,58 +110,71 @@ class _BitWriter:
 
 
 class _BitReader:
-    """MSB-first bit reader."""
+    """MSB-first bit reader. Each read takes the bytes that cover the
+    requested bits in one slice instead of walking bit by bit;
+    ``pos`` counts bits from the start of ``data``."""
 
     def __init__(self, data: bytes, pos: int = 0) -> None:
         self.data = data
-        self.byte = pos
-        self.bit = 0
+        self.pos = pos * 8
+
+    @property
+    def byte(self) -> int:
+        return self.pos >> 3
 
     def read(self, bits: int) -> int:
-        v = 0
-        for _ in range(bits):
-            if self.byte >= len(self.data):
-                raise ValueError("flac: bitstream truncated")
-            v = (v << 1) | (
-                (self.data[self.byte] >> (7 - self.bit)) & 1
-            )
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.byte += 1
-        return v
+        start = self.pos
+        end = start + bits
+        if end > len(self.data) << 3:
+            raise ValueError("flac: bitstream truncated")
+        self.pos = end
+        window = int.from_bytes(self.data[start >> 3 : (end + 7) >> 3], "big")
+        return (window >> (-end & 7)) & ((1 << bits) - 1)
 
     def read_signed(self, bits: int) -> int:
         v = self.read(bits)
         return v - (1 << bits) if v >= (1 << (bits - 1)) else v
 
     def read_unary(self) -> int:
+        data = self.data
+        pos = self.pos
         q = 0
-        while self.read(1) == 0:
-            q += 1
-        return q
+        while True:
+            i = pos >> 3
+            if i >= len(data):
+                raise ValueError("flac: bitstream truncated")
+            off = pos & 7
+            rest = data[i] & (0xFF >> off)  # this byte's unread bits
+            if rest:
+                zeros = 8 - off - rest.bit_length()
+                self.pos = pos + zeros + 1
+                return q + zeros
+            q += 8 - off
+            pos += 8 - off
 
     def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.byte += 1
+        self.pos = (self.pos + 7) & ~7
 
 
 def _residuals(samples: list[int], order: int) -> list[int]:
-    coeffs = _FIXED_COEFFS[order]
-    return [
-        samples[i]
-        - sum(c * samples[i - 1 - j] for j, c in enumerate(coeffs))
-        for i in range(order, len(samples))
-    ]
+    """Sample i minus the FIXED predictor's estimate, i = order .. n-1:
+    each coefficient times its lagged copy of the signal is subtracted
+    in turn."""
+    n = len(samples)
+    res = samples[order:]
+    for j, c in enumerate(_FIXED_COEFFS[order]):
+        lagged = samples[order - 1 - j : n - 1 - j]
+        res = [r - c * x for r, x in zip(res, lagged)]
+    return res
 
 
 def _zigzag(e: int) -> int:
     return (e << 1) if e >= 0 else (-(e << 1) - 1)
 
 
-def _rice_cost(res: list[int], r: int) -> int:
-    return sum((_zigzag(e) >> r) + 1 + r for e in res)
+def _rice_cost(us: list[int], r: int) -> int:
+    """Bits to Rice-code the zigzagged residuals ``us`` at parameter r."""
+    return sum(u >> r for u in us) + (1 + r) * len(us)
 
 
 def encode_s16(samples: list[int], rate: int) -> bytes:
@@ -195,8 +227,8 @@ def encode_s16(samples: list[int], rate: int) -> bytes:
     best_order = min(
         range(5), key=lambda o: sum(map(abs, res_by_order[o]))
     )
-    res = res_by_order[best_order]
-    best_r = min(range(15), key=lambda r: _rice_cost(res, r))
+    us = [_zigzag(e) for e in res_by_order[best_order]]
+    best_r = min(range(15), key=lambda r: _rice_cost(us, r))
 
     body = _BitWriter()
     for b in hdr_bytes:
@@ -210,11 +242,8 @@ def encode_s16(samples: list[int], rate: int) -> bytes:
     body.write(0b00, 2)  # residual method: 4-bit Rice
     body.write(0, 4)  # partition order 0
     body.write(best_r, 4)
-    for e in res:
-        u = _zigzag(e)
-        body.write_unary(u >> best_r)
-        if best_r:
-            body.write(u & ((1 << best_r) - 1), best_r)
+    for u in us:
+        body.write_rice(u, best_r)
     body.align()
     frame = body.bytes()
     out += frame + struct.pack(">H", _crc16(frame))

@@ -14,20 +14,30 @@ markers. Anything else raises. The decoder honors whatever Huffman/quant
 tables the DHT/DQT segments declare, so it decodes any conforming file in
 scope, not just this encoder's output.
 
+Kernels: the DCT and IDCT of all blocks of a plane are the batched matmuls
+``_M @ b @ _M.T`` and ``_M.T @ c @ _M`` (:func:`_dct_rint`, which rounds an
+exact .5 tie as the three-operand einsum form does). The encoder's bit
+writer drains whole bytes and byte-stuffs each finished segment once; the
+decoder reads a byte window and decodes Huffman symbols through a 16-bit
+lookup table built once per distinct (bits, vals). SHA-256 digests in
+``tests/test_codec_kernels.py`` pin the encoded bytes and decoded pixels.
+
 Exactness contract the oracle twins rely on: with the default unit
 quantization table, an image made of flat 8x8 blocks round-trips
 bit-exactly. A flat block's DCT is a lone integer DC coefficient
 (8*(v-128)); unit quantization preserves it and the IDCT returns the
-constant exactly (float error ~1e-12, far under the 0.5 rounding threshold).
-The same holds through the color pipeline for flat gray blocks (R=G=B=v maps
-to Y=v, Cb=Cr=128 exactly; the BT.601 row sums are 1, 0, 0). General
-grayscale content round-trips within +/-1 per pixel; general color within
-+/-5 (the YCbCr rounding steps compound through the 1.772 blue coefficient:
-worst case ~|dY| + 1.772*|dCb| + 0.5 ~ 4.2).
+constant exactly (``tests/test_codec_kernels.py`` checks every v in 0..255,
+gray and 4:2:0 color). The same holds through the color pipeline for flat
+gray blocks (R=G=B=v maps to Y=v, Cb=Cr=128 exactly; the BT.601 row sums
+are 1, 0, 0). General grayscale content round-trips within +/-1 per pixel;
+general color within +/-5 (the YCbCr rounding steps compound through the
+1.772 blue coefficient: worst case ~|dY| + 1.772*|dCb| + 0.5 ~ 4.2).
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import struct
 
 import numpy as np
@@ -43,6 +53,7 @@ _ZIGZAG = np.array(
     ],
     dtype=np.int64,
 )
+_UNZIGZAG = np.argsort(_ZIGZAG)  # zigzag order -> raster order
 
 # JPEG Annex K luminance Huffman tables (the interchange-standard
 # ones every encoder ships). bits[i] = number of codes of length i+1.
@@ -87,6 +98,37 @@ def _dct_matrix() -> np.ndarray:
 _M = _dct_matrix()
 
 
+def _dct_rint(blocks: np.ndarray, quant: int = 1,
+              inverse: bool = False) -> np.ndarray:
+    """rint of each 8x8 block's forward DCT over ``quant``, or of its
+    inverse DCT: the batched matmuls ``_M @ b @ _M.T`` and
+    ``_M.T @ b @ _M``.
+
+    Where a value lies within float error of a .5 tie (a DC sum that
+    is 4 mod 8, say), the summation order picks the rounding. Then the
+    call is redone in the three-operand einsum form over the same
+    array, whose order has always decided these ties here, and the
+    blocks holding a tie take its values; so encoded bytes and decoded
+    pixels do not depend on which form ran. The tolerance is far above
+    the error of either form (under 1e-12 of the largest input).
+    Flat blocks at unit quantization hold no tie."""
+    if inverse:
+        out = _M.T @ blocks @ _M
+    else:
+        out = _M @ blocks @ _M.T / quant
+    rounded = np.rint(out)
+    tol = 1e-9 * (1.0 + np.abs(blocks).max(initial=0.0))
+    near_tie = np.abs(out - rounded) > 0.5 - tol
+    if near_tie.any():
+        redo = near_tie.any(axis=(1, 2))
+        if inverse:
+            ref = np.einsum("xu,nuv,yv->nxy", _M.T, blocks, _M.T)
+        else:
+            ref = np.einsum("ux,nxy,vy->nuv", _M, blocks, _M) / quant
+        rounded[redo] = np.rint(ref[redo])
+    return rounded
+
+
 def _canonical_codes(bits, vals):
     """(symbol -> (code, length)) for a canonical Huffman table."""
     out = {}
@@ -115,6 +157,10 @@ def _magnitude(v: int) -> tuple[int, int]:
 
 
 class _BitWriter:
+    """MSB-first bit packer for one entropy-coded segment. Bits gather
+    in an integer window that drains to whole bytes; the 0xFF00 byte
+    stuffing is applied once, on the finished segment."""
+
     def __init__(self):
         self.out = bytearray()
         self.acc = 0
@@ -123,19 +169,21 @@ class _BitWriter:
     def write(self, code: int, length: int) -> None:
         self.acc = (self.acc << length) | (code & ((1 << length) - 1))
         self.n += length
-        while self.n >= 8:
-            b = (self.acc >> (self.n - 8)) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:  # byte stuffing inside the entropy stream
-                self.out.append(0x00)
-            self.n -= 8
+        if self.n >= 32:
+            self._drain()
+
+    def _drain(self) -> None:
+        k = self.n >> 3
+        self.n &= 7
+        self.out += (self.acc >> self.n).to_bytes(k, "big")
         self.acc &= (1 << self.n) - 1
 
     def flush(self) -> bytes:
-        if self.n:
-            pad = 8 - self.n
+        if self.n & 7:
+            pad = 8 - (self.n & 7)
             self.write((1 << pad) - 1, pad)  # pad with 1s per spec
-        return bytes(self.out)
+        self._drain()
+        return bytes(self.out).replace(b"\xff", b"\xff\x00")
 
 
 def _dht(table_class: int, table_id: int, bits, vals) -> bytes:
@@ -143,50 +191,45 @@ def _dht(table_class: int, table_id: int, bits, vals) -> bytes:
     return b"\xff\xc4" + struct.pack(">H", len(body) + 2) + body
 
 
-def _plane_to_zz(plane: np.ndarray, quant: int) -> np.ndarray:
+def _plane_to_zz(plane: np.ndarray, quant: int) -> list[list[int]]:
     """One 8-bit plane -> per-block quantized zigzag coefficients
-    (n_blocks x 64, raster block order). Pads to full 8x8 MCUs by
-    edge replication (the standard padding choice)."""
+    (n_blocks lists of 64 ints, raster block order). Pads to full 8x8
+    MCUs by edge replication (the standard padding choice)."""
     ph, pw = -plane.shape[0] % 8, -plane.shape[1] % 8
-    plane = np.pad(plane, ((0, ph), (0, pw)), mode="edge")
+    if ph or pw:
+        plane = np.pad(plane, ((0, ph), (0, pw)), mode="edge")
     gh, gw = plane.shape[0] // 8, plane.shape[1] // 8
     blocks = (
         plane.reshape(gh, 8, gw, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
     )
     shifted = blocks.astype(np.float64) - 128.0
-    coeffs = np.einsum("ux,nxy,vy->nuv", _M, shifted, _M)
-    q = np.rint(coeffs / quant).astype(np.int64)
-    return q.reshape(-1, 64)[:, _ZIGZAG]
+    q = _dct_rint(shifted, quant).astype(np.int64)
+    return q.reshape(-1, 64)[:, _ZIGZAG].tolist()
 
 
-def _write_block(w: _BitWriter, blk: np.ndarray, prev_dc: int) -> int:
-    """Entropy-code one zigzag block; returns its DC for prediction."""
-    dc = int(blk[0])
+def _write_block(w: _BitWriter, blk: list[int], prev_dc: int) -> int:
+    """Entropy-code one zigzag block, gathered into one write; returns
+    its DC for prediction."""
+    dc = blk[0]
     cat, amp = _magnitude(dc - prev_dc)
     code, length = _DC_ENC[cat]
-    w.write(code, length)
-    if cat:
-        w.write(amp, cat)
-    run = 0
-    nz = np.nonzero(blk[1:])[0]
-    last = nz[-1] + 1 if len(nz) else 0
-    for i in range(1, last + 1):
-        v = int(blk[i])
-        if v == 0:
-            run += 1
-            continue
+    bits, n = (code << cat) | amp, length + cat
+    last = 0  # index of the last nonzero coefficient coded
+    for i in itertools.compress(range(1, 64), blk[1:]):
+        run = i - last - 1
         while run >= 16:
             code, length = _AC_ENC[0xF0]  # ZRL
-            w.write(code, length)
+            bits, n = (bits << length) | code, n + length
             run -= 16
-        cat, amp = _magnitude(v)
+        cat, amp = _magnitude(blk[i])
         code, length = _AC_ENC[(run << 4) | cat]
-        w.write(code, length)
-        w.write(amp, cat)
-        run = 0
+        bits = (((bits << length) | code) << cat) | amp
+        n += length + cat
+        last = i
     if last < 63:
         code, length = _AC_ENC[0x00]  # EOB
-        w.write(code, length)
+        bits, n = (bits << length) | code, n + length
+    w.write(bits, n)
     return dc
 
 
@@ -307,7 +350,10 @@ def _subsample_420(
     not drift between frame types (same rationale as
     ``_bt601_planes``). Returns (padded Y, [Cb, Cr] half-res)."""
     ph, pw = -height % 16, -width % 16
-    padded = [np.pad(p, ((0, ph), (0, pw)), mode="edge") for p in planes]
+    padded = [
+        np.pad(p, ((0, ph), (0, pw)), mode="edge") if ph or pw else p
+        for p in planes
+    ]
     chroma = [
         np.clip(
             np.rint(
@@ -458,8 +504,8 @@ def _ac_first_bits(bands, ss: int, se: int, al: int) -> bytes:
             eobrun = 0
 
     for band in bands:
-        vs = [int(band[k]) for k in range(ss, se + 1)]
-        ts = [abs(v) >> al for v in vs]
+        vs = [int(v) for v in band[ss : se + 1]]
+        ts = [abs(v) >> al for v in vs] if any(vs) else []
         nz = [i for i, t in enumerate(ts) if t]
         if not nz:
             eobrun += 1
@@ -517,9 +563,9 @@ def _ac_refine_bits(bands, ss: int, se: int, al: int) -> bytes:
 
     n = 0
     for band in bands:
-        vs = [int(band[k]) for k in range(ss, se + 1)]
-        ts = [abs(v) >> al for v in vs]
-        n = len(ts)
+        vs = [int(v) for v in band[ss : se + 1]]
+        ts = [abs(v) >> al for v in vs] if any(vs) else []
+        n = len(vs)
         targets = [i for i, t in enumerate(ts) if t == 1]
         if not targets:
             eobrun += 1
@@ -563,7 +609,7 @@ def _prog_frame(
     width: int,
     height: int,
     quant: int,
-    zzs: list[np.ndarray],
+    zzs: list[list[list[int]]],
     comp_geo: list[tuple[int, int, int, int]],
     mcu_grid: tuple[int, int],
 ) -> bytes:
@@ -691,61 +737,93 @@ def encode_rgb8_progressive(
 
 
 class _BitReader:
+    """MSB-first reader over one scan's entropy-coded segment.
+
+    The segment is unstuffed once (0xFF00 -> 0xFF) up to its first
+    marker, and bits are served from an integer window that loads
+    several bytes at a time. Asking for a bit past the usable bytes
+    raises the error the segment ends on: a marker inside the scan,
+    or the end of the data."""
+
     def __init__(self, data: bytes):
-        self.data = data
+        end = data.find(b"\xff")
+        while end >= 0 and data[end + 1 : end + 2] == b"\x00":
+            end = data.find(b"\xff", end + 2)
+        if end < 0:
+            end = len(data)
+            self.err = "truncated JPEG: entropy stream ran out"
+        else:
+            self.err = "unexpected marker inside entropy-coded scan"
+        self.data = data[:end].replace(b"\xff\x00", b"\xff")
         self.pos = 0
-        self.acc = 0
+        self.acc = 0  # the window: its low self.n bits are unread
         self.n = 0
 
-    def read_bit(self) -> int:
-        if self.n == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated JPEG: entropy stream ran out")
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                if (
-                    self.pos >= len(self.data)
-                    or self.data[self.pos] != 0x00
-                ):
-                    raise ValueError(
-                        "unexpected marker inside entropy-coded scan"
-                    )
-                self.pos += 1  # skip the stuffed 0x00
-            self.acc = b
-            self.n = 8
-        self.n -= 1
-        return (self.acc >> self.n) & 1
+    def _load(self) -> None:
+        chunk = self.data[self.pos : self.pos + 6]
+        self.pos += len(chunk)
+        self.acc = (self.acc << (len(chunk) << 3)) | int.from_bytes(
+            chunk, "big"
+        )
+        self.n += len(chunk) << 3
 
     def read_bits(self, count: int) -> int:
-        v = 0
-        for _ in range(count):
-            v = (v << 1) | self.read_bit()
+        while self.n < count:
+            if self.pos >= len(self.data):
+                raise ValueError(self.err)
+            self._load()
+        self.n -= count
+        v = self.acc >> self.n
+        self.acc &= (1 << self.n) - 1
         return v
 
+    def read_bit(self) -> int:
+        return self.read_bits(1)
 
-def _decode_table(bits, vals):
-    """((length, code) -> symbol) map for canonical Huffman decode."""
-    out = {}
+    def read_symbol(self, table: tuple[int, ...]) -> int:
+        """Decode one Huffman symbol through a :func:`_decode_table`
+        lookup on the next 16 bits (1-padded past the usable bytes; a
+        code that needs padding bits raises as the stream ran out)."""
+        if self.n < 16 and self.pos < len(self.data):
+            self._load()
+        n = self.n
+        if n >= 16:
+            peek = self.acc >> (n - 16)
+        else:
+            pad = 16 - n
+            peek = (self.acc << pad) | ((1 << pad) - 1)
+        entry = table[peek]
+        length = entry >> 8
+        if length == 0 or length > n:
+            if n < 16:
+                raise ValueError(self.err)
+            raise ValueError("invalid Huffman code in scan")
+        self.n = n - length
+        self.acc &= (1 << self.n) - 1
+        return entry & 0xFF
+
+
+@functools.lru_cache(maxsize=8)
+def _decode_table(bits: tuple, vals: tuple) -> tuple[int, ...]:
+    """Canonical Huffman decode table as a 65536-entry lookup on the
+    next 16 bits: (code length << 8) | symbol, or 0 where no code is a
+    prefix. Canonical codes are prefix-free, so each entry has at most
+    one code. Built once per distinct (bits, vals)."""
+    codes = []
     code = 0
     k = 0
     for length, n in enumerate(bits, start=1):
         for _ in range(n):
-            out[(length, code)] = vals[k]
+            if code < 1 << length:  # an overflowed code is never read
+                codes.append((length, code, vals[k]))
             code += 1
             k += 1
         code <<= 1
-    return out
-
-
-def _read_symbol(reader: _BitReader, table) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | reader.read_bit()
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code in scan")
+    table = [0] * 65536
+    for length, code, sym in codes:
+        span = 1 << (16 - length)
+        table[code * span : (code + 1) * span] = [(length << 8) | sym] * span
+    return tuple(table)
 
 
 def _extend(amp: int, cat: int) -> int:
@@ -790,18 +868,18 @@ def _seq_scan(reader, zz, sof_comps, grids, tabs_for, mcux, mcuy) -> None:
                 for bv in range(v):
                     for bhx in range(h):
                         b = (my * v + bv) * grids[c][1] + mx * h + bhx
-                        cat = _read_symbol(reader, dc_tab)
+                        cat = reader.read_symbol(dc_tab)
                         if cat > 15:
                             # a crafted DHT can map a code to any value
-                            # byte; an unchecked category would overflow
-                            # the int64 store outside the ValueError contract
+                            # byte; DC difference categories stop at 15
                             raise ValueError("DC category exceeds 15")
                         diff = _extend(reader.read_bits(cat), cat)
                         prev_dc[c] += diff
-                        zz[c][b, 0] = prev_dc[c]
+                        blk = zz[c][b]
+                        blk[0] = prev_dc[c]
                         i = 1
                         while i < 64:
-                            sym = _read_symbol(reader, ac_tab)
+                            sym = reader.read_symbol(ac_tab)
                             if sym == 0x00:  # EOB
                                 break
                             if sym == 0xF0:  # ZRL
@@ -815,9 +893,7 @@ def _seq_scan(reader, zz, sof_comps, grids, tabs_for, mcux, mcuy) -> None:
                             i += run
                             if i > 63:
                                 raise ValueError("AC run overflows block")
-                            zz[c][b, i] = _extend(
-                                reader.read_bits(cat), cat
-                            )
+                            blk[i] = _extend(reader.read_bits(cat), cat)
                             i += 1
 
 
@@ -833,16 +909,16 @@ def _prog_dc_scan(reader, zz, pairs, ah, al) -> None:
     if ah == 0:
         pred = {}
         for c, b, dc_tab in pairs:
-            cat = _read_symbol(reader, dc_tab)
+            cat = reader.read_symbol(dc_tab)
             if cat > 15:
                 raise ValueError("DC category exceeds 15")
             diff = _extend(reader.read_bits(cat), cat)
             pred[c] = pred.get(c, 0) + diff
-            zz[c][b, 0] = pred[c] << al
+            zz[c][b][0] = pred[c] << al
     else:
         for c, b, _ in pairs:
             if reader.read_bit():
-                zz[c][b, 0] |= 1 << al
+                zz[c][b][0] |= 1 << al
 
 
 def _prog_ac_first(reader, band, ac_tab, ss, se, al, eobrun) -> int:
@@ -853,7 +929,7 @@ def _prog_ac_first(reader, band, ac_tab, ss, se, al, eobrun) -> int:
         return eobrun - 1
     k = ss
     while k <= se:
-        sym = _read_symbol(reader, ac_tab)
+        sym = reader.read_symbol(ac_tab)
         r, s = sym >> 4, sym & 0x0F
         if s:
             k += r
@@ -886,7 +962,7 @@ def _prog_ac_refine(reader, band, ac_tab, ss, se, al, eobrun) -> int:
     k = ss
     if eobrun == 0:
         while k <= se:
-            sym = _read_symbol(reader, ac_tab)
+            sym = reader.read_symbol(ac_tab)
             r, s = sym >> 4, sym & 0x0F
             val = 0
             if s:
@@ -1079,7 +1155,7 @@ def _decode_planes(data: bytes) -> tuple[int, int, list[np.ndarray]]:
                 # first scan: validate size, build geometry, allocate
                 # coefficient accumulators. Size guard BEFORE
                 # allocation: a ~200-byte crafted file can declare
-                # 65535x65535x3 (~100 GB of int64 coefficients).
+                # 65535x65535x3 (~100 GB of coefficients).
                 if width * height > 1 << 26:
                     raise ValueError(
                         "declared image size exceeds this decoder's "
@@ -1102,8 +1178,7 @@ def _decode_planes(data: bytes) -> tuple[int, int, list[np.ndarray]]:
                         ((chh + 7) // 8, (cw + 7) // 8)
                     )
                 zz = [
-                    np.zeros((bh * bw, 64), dtype=np.int64)
-                    for bh, bw in grids
+                    [[0] * 64 for _ in range(bh * bw)] for bh, bw in grids
                 ]
             # resolve this scan's Huffman tables (DC unused by AC
             # scans and vice versa in progressive — only require what
@@ -1214,15 +1289,14 @@ def _decode_planes(data: bytes) -> tuple[int, int, list[np.ndarray]]:
     planes = []
     for c, (_, h, v, _) in enumerate(sof_comps):
         bh, bw = grids[c]
-        deq = np.zeros((bh * bw, 64), dtype=np.float64)
-        deq[:, _ZIGZAG] = zz[c]
+        deq = np.array(zz[c], dtype=np.float64).reshape(-1, 64)[:, _UNZIGZAG]
         coeffs = deq.reshape(-1, 8, 8) * comp_tabs[c][0]
-        spatial = np.einsum("xu,nuv,yv->nxy", _M.T, coeffs, _M.T)
+        spatial = _dct_rint(coeffs, inverse=True)
         # clamp each component to [0,255] BEFORE any downstream use —
         # T.81 sample clamping; a ringing overshoot (e.g. Cb=256)
         # must not enter the color transform un-clamped
         img = (
-            np.clip(np.rint(spatial) + 128.0, 0, 255)
+            np.clip(spatial + 128.0, 0, 255)
             .reshape(bh, bw, 8, 8)
             .transpose(0, 2, 1, 3)
             .reshape(bh * 8, bw * 8)
